@@ -23,7 +23,9 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
+import sys
 import time
+import zipimport
 from typing import Iterator
 
 import pandas as pd
@@ -111,6 +113,17 @@ def parse_document(html: str, include_dom: bool = True, include_links: bool = Fa
     )
 
 
+def _drop_zip_finders() -> None:
+    """Remove every cached ``zipimporter`` from ``sys.path_importer_cache``.
+
+    The next import that walks a dropped path builds a fresh finder from
+    ``zipimport._zip_directory_cache``, so the archive is not read again."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
 def make_parse_batch(
     include_dom: bool = True,
     max_batch_bytes: int = 1 << 26,
@@ -118,9 +131,21 @@ def make_parse_batch(
 ):
     """Build the mapInPandas function.  The inner generator re-chunks incoming
     Arrow batches so a run of oversized documents cannot balloon the pandas
-    frame we materialize results into."""
+    frame we materialize results into.
+
+    Each call also drops the worker's cached zip import finders.  PySpark's
+    worker calls ``importlib.invalidate_caches()`` at the start of every
+    task, and on CPython 3.11 that makes every cached ``zipimporter`` re-read
+    its archive's whole central directory: pyspark.zip, the py4j zip and the
+    Spark jar, about 27k entries per task (~0.2 s on a 4-core Xeon) before
+    the first row is parsed.  Dropping the finders is safe because a later import rebuilds
+    them from zipimport's own directory cache without touching the archive,
+    and Spark adds each file only once per application, so no archive
+    changes under a live worker.  It runs on every call, not once per
+    worker, because imports made after a task starts create new finders."""
 
     def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _drop_zip_finders()
         # The parse builds pure trees (children arrays only, no parent or
         # sibling pointers -> no reference cycles), so refcounting reclaims
         # everything and the cyclic GC only burns memory bandwidth walking

@@ -519,7 +519,7 @@ def media_features(spark, sf_dir: str) -> DataFrame:
     return extract_features(media_df(spark, sf_dir))
 
 
-# --- image resize (container-header rewrite; pixel resample stubbed) ---------
+# --- image resize (container-header rewrite; pixel resample in resample_pixels)
 
 RESIZE_MAX_W = 512
 RESIZE_MAX_H = 512
@@ -695,11 +695,11 @@ def resize_images(media: DataFrame, max_batch_bytes: int = 1 << 26) -> DataFrame
     emitted payload_md5 proves payload bytes survived byte-identical (the
     oracle knows the expected value independently).  Pixel resampling
     itself is ``resample_pixels`` -- real for PNG / JPEG (grey + colour,
-    baseline + progressive) / GIF (gated separately by the pixel_resize
-    queries over real-payload images; the synthetic blobs here carry
-    text payloads, so this pass stays header-level), a documented stub
-    for TIFF.  Same Arrow-batched byte-capped shape as
-    extract_features."""
+    baseline + progressive) / GIF / BMP / TIFF (gated separately by the
+    pixel_resize queries over real-payload images; the synthetic blobs
+    here carry text payloads, so this pass stays header-level).  Video
+    frame decode is the remaining stub (``decode_frame``).  Same
+    Arrow-batched byte-capped shape as extract_features."""
     from functools import partial
 
     return media.where(F.col("media_type") == "image").select(

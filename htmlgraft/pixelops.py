@@ -109,6 +109,25 @@ def _chunk(typ: bytes, data: bytes) -> bytes:
             + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
 
 
+def _png_chunks(blob: bytes):
+    """Walk the chunks after the signature, yielding (type, payload, end)
+    with ``end`` the offset of the next chunk.  A chunk cut short (payload
+    or trailing CRC) or with a bad CRC raises ValueError."""
+    i, n = 8, len(blob)
+    while i + 8 <= n:
+        clen = struct.unpack(">I", blob[i:i + 4])[0]
+        typ = blob[i + 4:i + 8]
+        end = i + 12 + clen
+        if end > n:
+            raise ValueError(f"PNG chunk {typ!r} truncated")
+        data = blob[i + 8:end - 4]
+        if zlib.crc32(typ + data) & 0xFFFFFFFF != struct.unpack(
+                ">I", blob[end - 4:end])[0]:
+            raise ValueError(f"PNG chunk {typ!r} CRC mismatch")
+        yield typ, data, end
+        i = end
+
+
 def _paeth(a: int, b: int, c: int) -> int:
     p = a + b - c
     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
@@ -265,29 +284,21 @@ def decode_png_pixels(blob: bytes):
     silently wrong output)."""
     if blob[:8] != _SIG:
         raise ValueError("not a PNG")
-    i, n = 8, len(blob)
     w = h = depth = ctype = interlace = None
     idat = bytearray()
     plte = None
-    while i + 8 <= n:
-        clen = struct.unpack(">I", blob[i:i + 4])[0]
-        typ = blob[i + 4:i + 8]
-        data = blob[i + 8:i + 8 + clen]
-        crc = struct.unpack(">I", blob[i + 8 + clen:i + 12 + clen])[0]
-        if zlib.crc32(typ + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk {typ!r} CRC mismatch")
+    for typ, data, _end in _png_chunks(blob):
         if typ == b"IHDR":
             w, h, depth, ctype, _comp, _filt, interlace = struct.unpack(
                 ">IIBBBBB", data)
         elif typ == b"PLTE":
-            if clen % 3 or clen == 0:
+            if len(data) % 3 or not data:
                 raise ValueError("bad PLTE length")
             plte = data
         elif typ == b"IDAT":
             idat += data
         elif typ == b"IEND":
             break
-        i += 12 + clen
     if w is None:
         raise ValueError("PNG missing IHDR")
     if ctype not in _CHANNELS and ctype != 3:
@@ -2293,14 +2304,19 @@ def encode_apng(w: int, h: int, frames, delays, plays: int = 0) -> bytes:
     return bytes(out)
 
 
+# fixed payload lengths of the APNG control chunks (fdAT is >= 4: its
+# sequence number, then frame data)
+_APNG_CHUNK_LEN = {b"IHDR": 13, b"acTL": 8, b"fcTL": 26}
+
+
 def decode_apng(blob: bytes):
     """(width, height, plays, [((delay_num, delay_den), plane), ...]) —
     every frame's deflate stream inflates and unfilters for real; CRCs
-    verified; sequence-number gaps, sub-canvas frames, and frame-count
-    mismatches are loud."""
+    verified; sequence-number gaps, sub-canvas frames, frame-count
+    mismatches, truncated chunks and control chunks of the wrong length
+    are loud (ValueError, never struct.error)."""
     if blob[:8] != _SIG:
         raise ValueError("not a PNG")
-    i, n = 8, len(blob)
     w = h = None
     n_frames = plays = None
     pending_fctl = None
@@ -2320,13 +2336,11 @@ def decode_apng(blob: bytes):
             raise ValueError("APNG frame data length mismatch")
         frames.append(((fctl[5], fctl[6]), plane))
 
-    while i + 8 <= n:
-        clen = struct.unpack(">I", blob[i:i + 4])[0]
-        typ = blob[i + 4:i + 8]
-        data = blob[i + 8:i + 8 + clen]
-        crc = struct.unpack(">I", blob[i + 8 + clen:i + 12 + clen])[0]
-        if zlib.crc32(typ + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk {typ!r} CRC mismatch")
+    for typ, data, end in _png_chunks(blob):
+        size = len(data)
+        if (size != _APNG_CHUNK_LEN.get(typ, size)
+                or typ == b"fdAT" and size < 4):
+            raise ValueError(f"PNG chunk {typ!r} has bad length {size}")
         if typ == b"IHDR":
             w, h, depth, ctype, _c, _f, inter = struct.unpack(
                 ">IIBBBBB", data)
@@ -2355,10 +2369,9 @@ def decode_apng(blob: bytes):
             fdat += data[4:]
         elif typ == b"IEND":
             break
-        i += 12 + clen
         # frame boundary: the NEXT chunk being fcTL or IEND closes the
         # current frame's accumulated data (IDAT for frame 0, fdAT after)
-        nxt = blob[i + 4:i + 8]
+        nxt = blob[end + 4:end + 8]
         if pending_fctl is not None and nxt in (b"fcTL", b"IEND"):
             if not frames and idat:
                 _flush(idat, pending_fctl)

@@ -367,6 +367,41 @@ def test_apng_subcanvas_frame_is_loud_scope():
         P.decode_apng(bytes(blob))
 
 
+def _with_chunk(blob: bytes, typ: bytes, data: bytes) -> bytes:
+    """``blob`` with its first ``typ`` chunk's payload replaced by
+    ``data`` (length and CRC recomputed, so only the length is wrong)."""
+    at = blob.index(typ)
+    clen = struct.unpack_from(">I", blob, at - 4)[0]
+    return blob[:at - 4] + P._chunk(typ, data) + blob[at + 8 + clen:]
+
+
+@pytest.mark.parametrize("typ,size", [
+    (b"IHDR", 12), (b"IHDR", 14), (b"acTL", 7), (b"fcTL", 25),
+    (b"fcTL", 27), (b"fdAT", 3), (b"fdAT", 0),
+])
+def test_apng_bad_chunk_length_is_value_error(typ, size):
+    w, h = 4, 3
+    frames = [bytes((x + y + 7 * k) % 251 for y in range(h)
+                    for x in range(w)) for k in range(2)]
+    blob = P.encode_apng(w, h, frames, [(1, 10), (1, 10)])
+    with pytest.raises(ValueError, match=f"{typ.decode()}.*bad length {size}"):
+        P.decode_apng(_with_chunk(blob, typ, bytes(size)))
+
+
+def test_apng_truncated_chunk_is_value_error():
+    w, h = 4, 3
+    frames = [bytes((x * 2 + y + 5 * k) % 251 for y in range(h)
+                    for x in range(w)) for k in range(2)]
+    blob = P.encode_apng(w, h, frames, [(1, 10), (1, 10)])
+    # cut inside the fcTL payload, inside fdAT's trailing CRC, and inside
+    # IEND's trailing CRC
+    fctl, fdat = blob.index(b"fcTL"), blob.index(b"fdAT")
+    fdat_end = fdat + 8 + struct.unpack_from(">I", blob, fdat - 4)[0]
+    for cut in (fctl + 10, fdat_end - 1, len(blob) - 2):
+        with pytest.raises(ValueError, match="truncated"):
+            P.decode_apng(blob[:cut])
+
+
 def test_apng_synth_axes_live():
     nfs, plays = set(), set()
     for d in range(24):

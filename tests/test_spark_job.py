@@ -298,3 +298,88 @@ def test_one_pass_links_match_standalone_ops(spark, pages):
     )
     for r in full.select("url", "text").collect():
         assert r["text"] == base[r["url"]]
+
+
+def _zip_finders():
+    import sys
+    import zipimport
+
+    return [f for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)]
+
+
+def test_parse_batch_drops_zip_finders(tmp_path, monkeypatch):
+    """PySpark's worker calls importlib.invalidate_caches() before every
+    task, which makes each cached zipimporter re-read its archive; the
+    parse stage drops those finders, and imports from the zip still work
+    afterwards without the archive being read again."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import pandas as pd
+
+    from htmlgraft.job import make_parse_batch
+
+    archive = tmp_path / "zpkg.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zpkg/__init__.py", "")
+        zf.writestr("zpkg/a.py", "X = 1\n")
+        zf.writestr("zpkg/sub/__init__.py", "")
+        zf.writestr("zpkg/sub/b.py", "Y = 2\n")
+    saved_path, saved_modules = list(sys.path), set(sys.modules)
+    sys.path.insert(0, str(archive))
+    try:
+        assert importlib.import_module("zpkg.a").X == 1
+        assert _zip_finders()
+
+        frame = pd.DataFrame({"url": ["u"], "html": [b"<p>hi"]})
+        out = list(make_parse_batch()(iter([frame])))
+        assert out[0]["status"].tolist() == ["ok"]
+        assert not _zip_finders()
+
+        def no_reread(path):
+            raise AssertionError(f"re-read {path}")
+
+        monkeypatch.setattr(zipimport, "_read_directory", no_reread)
+        importlib.invalidate_caches()
+        assert importlib.import_module("zpkg.sub.b").Y == 2
+    finally:
+        sys.path[:] = saved_path
+        for name in set(sys.modules) - saved_modules:
+            del sys.modules[name]
+        for key in [k for k in sys.path_importer_cache
+                    if k.startswith(str(archive))]:
+            del sys.path_importer_cache[key]
+        zipimport._zip_directory_cache.pop(str(archive), None)
+
+
+@pytest.mark.parametrize("was_enabled", [True, False])
+@pytest.mark.parametrize("close_early", [False, True])
+def test_parse_batch_restores_gc_state(was_enabled, close_early):
+    """The parse stage runs with the cyclic GC off and hands the reused
+    worker back with GC as it found it, whether the generator is
+    exhausted or closed after its first batch."""
+    import gc
+
+    import pandas as pd
+
+    from htmlgraft.job import make_parse_batch
+
+    frames = [pd.DataFrame({"url": [f"u{k}"], "html": [b"<p>hi"]})
+              for k in range(2)]
+    prior = gc.isenabled()
+    (gc.enable if was_enabled else gc.disable)()
+    try:
+        gen = make_parse_batch()(iter(frames))
+        first = next(gen)
+        assert first["url"].tolist() == ["u0"]
+        assert not gc.isenabled()
+        if close_early:
+            gen.close()
+        else:
+            assert [f["url"].tolist() for f in gen] == [["u1"]]
+        assert gc.isenabled() is was_enabled
+    finally:
+        (gc.enable if prior else gc.disable)()
