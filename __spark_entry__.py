@@ -582,6 +582,7 @@ _GATE_FIRST = [
     "pixel_orient",
     "pixel_gif_anim",
     "pixel_ico",
+    "pixel_apng",
     "pixel_phash_tiff",
     "pixel_phash_bmp",
     "script_mix",

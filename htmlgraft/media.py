@@ -1388,7 +1388,8 @@ MIME_LANES = 12
 def _mime_synth(doc_id: int) -> bytes:
     """Deterministic per-doc resource bytes: 12 lane families; the HTML
     lane varies leading whitespace (doc_id // 12 % 4) and tag choice /
-    case by doc_id, the heuristic lane flips binary on doc_id % 3 == 0."""
+    case by doc_id, the heuristic lane flips binary on (doc_id // 12) % 2
+    (a flip on doc_id % 3 could never fire: lane 10 forces doc_id % 3 == 1)."""
     m = doc_id % MIME_LANES
     if m == 0:
         return b"\x89PNG\r\n\x1a\n" + b"x" * (doc_id % 7)
@@ -1414,7 +1415,7 @@ def _mime_synth(doc_id: int) -> bytes:
         return b"ID3\x04tag"
     if m == 10:
         body = b"plain words " + str(doc_id).encode()
-        return body + (b"\x07" if doc_id % 3 == 0 else b".")
+        return body + (b"\x07" if (doc_id // MIME_LANES) % 2 else b".")
     return b"RIFF\x24\x00\x00\x00WAVEfmt "
 
 
@@ -1452,7 +1453,7 @@ def mime_sniff(spark, sf_dir: str):
 def mime_sniff_oracle_sql(docs: str = "documents") -> str:
     """Every lane's computed type restated, including the data-dependent
     sub-cases (HTML regardless of case/whitespace, binary flip on
-    doc_id % 3)."""
+    (doc_id // 12) % 2)."""
     return f"""
       select doc_id,
              case doc_id % {MIME_LANES}
@@ -1466,7 +1467,7 @@ def mime_sniff_oracle_sql(docs: str = "documents") -> str:
                when 7 then 'application/x-gzip'
                when 8 then 'application/zip'
                when 9 then 'audio/mpeg'
-               when 10 then case when doc_id % 3 = 0
+               when 10 then case when (doc_id // {MIME_LANES}) % 2 = 1
                  then 'application/octet-stream' else 'text/plain' end
                else 'audio/wave'
              end as mime,
@@ -1474,7 +1475,7 @@ def mime_sniff_oracle_sql(docs: str = "documents") -> str:
                when 3 then 'riff'
                when 4 then 'html'
                when 5 then 'xml'
-               when 10 then case when doc_id % 3 = 0
+               when 10 then case when (doc_id // {MIME_LANES}) % 2 = 1
                  then 'binary' else 'text' end
                when 11 then 'riff'
                else 'signature'

@@ -1,104 +1,164 @@
-"""Real pixel tier: decode, resample, and perceptual-hash dedup over the
-three dominant crawl-image formats (PNG here; baseline JPEG via
-jpegops.py; GIF via gifops.py — each a real pure-Python codec gated by a
-closed-form value oracle).
+"""Real pixel tier: decode, resample and perceptual-hash dedup over real
+image codecs, driven by one tier table.
 
-PNG's pixel decode needs nothing beyond the standard library — the
-container is zlib (RFC 1950/1951) over five per-row predictive filters
-(PNG spec §6: None/Sub/Up/Average/Paeth) — so the "needs an image codec"
-stub closes honestly here:
+The six perceptual-hash tiers are rows of ``_TIERS``: PNG (codec here),
+baseline and progressive JPEG (jpegops.py), GIF (gifops.py), BMP
+(bmpops.py) and TIFF (tiffops.py).  A row holds the tier's name and binary
+column, its dims as ``(offset, mul, mod)`` data over ``b = doc_id % 7``
+(every 7th document is an exact pixel duplicate), its pixel formula as
+data (linear ``(mul_b, mul_x, mul_y, mod, offset)`` or a JPEG
+coefficient-term table), its synthetic encoder ``doc_id -> bytes`` and its
+real decoder ``bytes -> (w, h, bpp, px)``.  A formula is evaluated two
+ways: on ints it gives the plane the codec must decode, on ``_Sql`` column
+names it gives the oracle's SQL, so the Python twin and the SQL cannot
+drift apart (the committed oracle digests in the tests pin both).
 
-- ``encode_png`` — real writer: signature, IHDR, zlib-deflated IDAT with
-  the row filter CYCLING through all five types (so a decoder that gets
-  any unfilter wrong cannot round-trip), IEND, correct CRC32s throughout.
-- ``decode_png_pixels`` — real reader: chunk walk with CRC verification,
-  multi-IDAT concatenation, inflate, and the five unfilters, for 8- and
-  16-bit greyscale / RGB / grey+alpha / RGBA plus 8-bit indexed (PLTE
-  expansion), both sequential and Adam7-interlaced (seven independent
-  pass sub-images, each with its own filter chain, scattered back onto
-  the grid).  16-bit samples reduce to their high byte (exact for the
-  v*257 planes 8-bit sources upscale to); packed 1/2/4-bit depths raise
-  ``NotImplementedError`` (documented scope, not a fake).
-- ``resample_png`` — nearest-neighbour resample (src = dst * src_dim div
-  dst_dim, pure integer index math so the oracle can restate it) through
-  a real decode -> sample -> re-encode chain.
-- ``dhash_gray`` — the standard 64-bit difference hash (9x8 grid of
-  nearest-neighbour samples, bit set where a pixel outshines its right
-  neighbour), the workhorse perceptual near-dup key for image corpora.
+One of each builder sits on the table:
 
-Gated queries (full-value DuckDB oracles):
+- ``_corpus`` — one synth batch (``_rows_batch``): a tier's real bytes
+  per doc; the same per-doc batch serves every map-only query;
+- ``_hash_batch`` — decode the ACTUAL bytes, grey-collapse, pixel sum,
+  dHash; ``_keep_min`` — the min-doc_id keeper over the dHash group;
+- ``_phash_pair`` / ``_resize_pair`` — a gated query and its DuckDB
+  oracle; ``_dhash_ctes`` restates the dHash relationally and is reused
+  by ``pixel_orient`` and ``pixel_neardup``;
+- ``_jpeg_pixel`` — the fixed-point IDCT pixel of baseline, progressive
+  and the near-dup perturbation;
+- ``_frames_oracle_sql`` — frame sums of animated GIF and APNG;
+- ``pixel_decode_audit`` — magic-byte dispatch over the table, with its
+  oracle CTEs generated from the audit lane list.
 
-``pixel_phash`` — synthesize a deterministic greyscale image per document
-(pixel(x, y) = (base*37 + x*7 + y*13) % 251 with base = doc_id % 7, so
-every 7th document is an exact pixel dup), ENCODE it to a real PNG,
-DECODE the actual bytes back, dHash the decoded pixels, and group by hash
-for keeper selection.  The oracle never sees a PNG: it recomputes the
-pixel sum and the dHash straight from the closed-form formula, so any bug
-in deflate framing, CRC, filtering, unfiltering, or the hash bit order
-shows up as a value mismatch.  Encoder and decoder cannot conspire: the
-gate pins the decoded VALUES against an independent recompute, and the
-filter cycling means a symmetric encode/decode slip still has to be exact
-inverse arithmetic per filter type (plus pytest pins fixed byte vectors).
+The oracles never see image bytes: they recompute sums and the dHash
+from the formulas, so any slip in deflate framing, CRC, filtering, LZW,
+Huffman/IDCT, padding, strips, orientation or the hash bit order is a
+value mismatch.  Encoder and decoder cannot conspire: the gate pins
+decoded VALUES against an independent recompute, and pytest pins fixed
+byte vectors.
 
-``pixel_resize`` — the same synthesized PNGs pushed through
-decode -> nearest-neighbour resample to (2w div 3, 2h div 3) -> re-encode
--> DECODE AGAIN, gating the pixel sum of the final decode against the
-oracle's formula-at-sampled-coordinates recompute.
+PNG needs nothing beyond the standard library: zlib (RFC 1950/1951) over
+five per-row predictive filters (PNG spec §6).  ``encode_png`` cycles the
+row filter through all five types, so a decoder with any unfilter wrong
+cannot round-trip; ``decode_png_pixels`` verifies CRCs, concatenates
+IDATs, inflates, unfilters, de-interlaces Adam7 and expands PLTE, for 8-
+and 16-bit grey / RGB / grey+alpha / RGBA plus 8-bit indexed (packed
+1/2/4-bit depths raise ``NotImplementedError``).  ``resample_png`` is
+nearest-neighbour (src = dst * src_dim div dst_dim, pure integer index
+math the oracle can restate).  ``dhash_gray`` is the standard 64-bit
+difference hash (9x8 nearest-neighbour grid, bit set where a pixel
+outshines its right neighbour).
 
-Scale shape: both queries are two Arrow-batched ``mapInPandas`` maps (no
-shuffle anywhere in the pixel path; binary columns ride Arrow buffers)
-followed by one hash-keyed aggregation for keeper selection — the same
-partition-parallel shape the WARC/media stages use.  Per the
-fingerprint-placement rule, nothing JVM-computable hides inside the UDF:
-the UDF stages are exactly the pixel codec work.
-
-Hash strategy: the 64-bit dHash travels as a 16-hex-char STRING built
-from eight row bytes — 32-bit-safe for DuckDB (which range-checks
-``1::bigint << 63``, see CLAUDE.md) and byte-order-explicit on both
-engines.
+Scale shape: every query is Arrow-batched ``mapInPandas`` maps (binary
+columns ride Arrow buffers) plus at most one hash-keyed shuffle; nothing
+JVM-computable hides inside a UDF.  The 64-bit dHash travels as a
+16-hex-char string built from eight row bytes — 32-bit-safe for DuckDB
+(which range-checks ``1::bigint << 63``) and byte-order-explicit on
+both engines.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
+from functools import partial
+from typing import Callable, Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import (
-    BinaryType, LongType, StringType, StructField, StructType,
-)
 
-# --- deterministic synthetic pixel corpus (mirrored by the oracles) ----------
-#
-# base = doc_id % 7 -> exact-duplicate groups; dims are functions of base so
-# duplicates share geometry; the modulus 251 (prime < 256) keeps the pixel
-# plane non-degenerate under the linear x/y ramp.
+from htmlgraft import bmpops, gifops, icoops, jpegops, tiffops
 
 PHASH_BASES = 7
-_BASE = f"(doc_id % {PHASH_BASES})"
-_PW = f"(12 + ({_BASE} * 7) % 17)"    # 12..28
-_PH = f"(9 + ({_BASE} * 5) % 13)"     # 9..21
-_PIX = "(({b} * 37 + {x} * 7 + {y} * 13) % 251)"
 
 
-def _pix(base: int, x: int, y: int) -> int:
-    return (base * 37 + x * 7 + y * 13) % 251
+# --- formulas over ints or SQL -----------------------------------------------
+
+class _Sql:
+    """SQL text that composes under ``+ - * // %`` like the int it stands
+    for.  Each formula here is written once: evaluated on ints it yields
+    the pixel a codec must decode, on ``_Sql`` column names the oracle's
+    SQL for it.  Every operation is parenthesized, so SQL precedence never
+    matters; operands stay non-negative wherever ``//`` or ``%`` apply, so
+    DuckDB's truncating and Python's flooring semantics agree."""
+
+    def __init__(self, text: str):
+        self.text = text
+
+    def __str__(self) -> str:
+        return self.text
+
+    def _op(sym, swap=False):
+        def op(a, c):
+            return _Sql(f"({c} {sym} {a})" if swap else f"({a} {sym} {c})")
+        return op
+
+    __add__, __radd__ = _op("+"), _op("+", True)
+    __sub__, __rsub__ = _op("-"), _op("-", True)
+    __mul__, __rmul__ = _op("*"), _op("*", True)
+    __floordiv__, __mod__ = _op("//"), _op("%")
+    del _op
 
 
-def synth_dims(doc_id: int):
-    base = doc_id % PHASH_BASES
-    return base, 12 + (base * 7) % 17, 9 + (base * 5) % 13
+_BASE = _Sql(f"(doc_id % {PHASH_BASES})")
+_B, _W, _H = _Sql("b"), _Sql("w"), _Sql("h")
 
 
-def synth_pixels(doc_id: int):
-    """(width, height, greyscale bytes) for the synthetic image of doc_id."""
-    base, w, h = synth_dims(doc_id)
-    return w, h, bytes(_pix(base, x, y) for y in range(h) for x in range(w))
+def _dim(spec, b):
+    """One image dimension of base ``b`` from ``(offset, mul, mod)``."""
+    off, mul, mod = spec
+    return off + b * mul % mod
 
 
-# --- real PNG codec (public spec, stdlib zlib only) ---------------------------
+def _lin(spec, b, x, y, k=0):
+    """Linear pixel ``offset + (b*mul_b + x*mul_x + y*mul_y) % mod`` from
+    ``(mul_b, mul_x, mul_y, mod, offset)``; an optional sixth entry
+    ``mul_k`` adds the frame term ``k*mul_k`` inside the modulus."""
+    mb, mx, my, mod, off, *mk = spec
+    s = b * mb + x * mx + y * my
+    if mk:
+        s = s + k * mk[0]
+    return off + s % mod
+
+
+def _coef(term, b, nb):
+    """Quantized coefficient ``(b*mul_b + nb*mul_nb) % mod - shift`` of
+    block ``nb`` for one JPEG term."""
+    _zz, mb, mn, mod, shift = term[:5]
+    return (b * mb + nb * mn) % mod - shift
+
+
+def _idct(u: int, r):
+    """The jpegops fixed-point IDCT basis entry T[u][r]."""
+    if isinstance(r, _Sql):
+        return _Sql(f"({list(jpegops.IDCT_T[u])}[{r} + 1])")
+    return jpegops.IDCT_T[u][r]
+
+
+def _jpeg_pixel(terms, b, w, x, y, bump=None):
+    """Decoded pixel at (x, y) of a JPEG coefficient-term table.  A term
+    ``(zz, mul_b, mul_nb, mod, shift, q, ux, uy)`` puts ``_coef`` at
+    zigzag ``zz`` of every block, dequantized by its Annex-K ``q``, with
+    IDCT basis rows ``ux`` along x and ``uy`` along y; the sum runs
+    through the jpegops fixed-point IDCT contract (descale by 2^22 with
+    rounding, level shift, clamp).  ``bump`` (a SQL column) is the
+    near-dup perturbation added to block 0's zigzag-9 coefficient."""
+    nb = y // 8 * ((w + 7) // 8) + x // 8
+    val = 0
+    for term in terms:
+        c = _coef(term, b, nb)
+        if bump is not None and term[0] == _NEARDUP_ZZ:
+            c = c + _Sql(f"(case when {nb} = 0 then {bump} else 0 end)")
+        q, ux, uy = term[5:]
+        val = val + c * q * _idct(ux, x % 8) * _idct(uy, y % 8)
+    if isinstance(val, _Sql):
+        # floor of a power-of-two float division is exact here
+        # (|val| < 2^31 << 2^52) and matches the decoder's arithmetic
+        # shift bit for bit
+        return _Sql(f"greatest(0, least(255, cast(floor(({val} + 2097152)"
+                    " / 4194304.0) as bigint) + 128))")
+    return max(0, min(255, ((val + (1 << 21)) >> 22) + 128))
+
+
+# --- real PNG codec (public spec, stdlib zlib only) --------------------------
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 _CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type -> samples per pixel
@@ -355,7 +415,12 @@ def resample_png(blob: bytes, new_w: int, new_h: int) -> bytes:
     """Nearest-neighbour resample of a real PNG through a real decode and
     re-encode.  src = dst * src_dim div dst_dim — pure integer index math,
     restatable relationally by the oracle."""
-    w, h, bpp, px = decode_png_pixels(blob)
+    return _resample_plane(*decode_png_pixels(blob), new_w, new_h)
+
+
+def _resample_plane(w: int, h: int, bpp: int, px: bytes,
+                    new_w: int, new_h: int) -> bytes:
+    """Nearest-neighbour resample of a decoded plane, re-encoded as PNG."""
     stride = w * bpp
     out = bytearray(new_w * new_h * bpp)
     for y2 in range(new_h):
@@ -388,30 +453,21 @@ def dhash_gray(w: int, h: int, px: bytes) -> str:
     return "".join(f"{b:02x}" for b in rows)
 
 
-# --- Spark stages -------------------------------------------------------------
+def grey_plane(bpp: int, px: bytes) -> bytes:
+    """Collapse a decoded plane to greyscale: bpp 1 passes through; RGB
+    maps through the shared integer luma transform (exact on the grey
+    triples the palette carriers decode to); grey+alpha drops alpha."""
+    if bpp == 1:
+        return px
+    if bpp == 2:
+        return px[0::2]
+    if bpp == 3:
+        return bytes(bmpops._luma(px[3 * j], px[3 * j + 1], px[3 * j + 2])
+                     for j in range(len(px) // 3))
+    raise NotImplementedError(f"grey collapse for {bpp} channels")
 
-_PNG_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("png", BinaryType()),
-])
 
-_PHASH_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("width", LongType()),
-    StructField("height", LongType()),
-    StructField("px_sum", LongType()),
-    StructField("phash", StringType()),
-])
-
-_RESIZE_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("width", LongType()),
-    StructField("height", LongType()),
-    StructField("new_width", LongType()),
-    StructField("new_height", LongType()),
-    StructField("px_sum", LongType()),
-])
-
+# --- tier encoders: real bytes of the formula plane --------------------------
 
 # The permuted-palette pair: stored index = v * 3 mod 256, palette entry
 # i = the grey triple (i*171 % 256, ...) — 171 * 3 = 513 ≡ 1 (mod 256),
@@ -419,6 +475,33 @@ _RESIZE_SCHEMA = StructType([
 # lookup LOAD-BEARING: an index-pass-through bug yields the permuted
 # plane, not the formula plane, and fails the value oracle.
 _PAL_PERM = [((i * 171) % 256,) * 3 for i in range(256)]
+
+
+def synth_dims(doc_id: int):
+    """(base, width, height) of the PNG/JPEG-tier image of doc_id."""
+    base = doc_id % PHASH_BASES
+    return (base, *_TIERS["png"].size(base))
+
+
+def synth_pixels(doc_id: int):
+    """(width, height, greyscale bytes) for the PNG-tier image of doc_id."""
+    return _TIERS["png"].plane(doc_id)
+
+
+def synth_gif_pixels(doc_id: int):
+    """(width, height, greyscale bytes) for the GIF-tier image of doc_id."""
+    return _TIERS["gif"].plane(doc_id)
+
+
+def synth_bmp_pixels(doc_id: int):
+    """(width, height, greyscale bytes) for the BMP-tier image of doc_id."""
+    return _TIERS["bmp"].plane(doc_id)
+
+
+def synth_tiff_pixels(doc_id: int):
+    """(width, height, greyscale bytes) for the TIFF-tier image of
+    doc_id."""
+    return _TIERS["tiff"].plane(doc_id)
 
 
 def synth_png(doc_id: int) -> bytes:
@@ -442,326 +525,289 @@ def synth_png(doc_id: int) -> bytes:
     return encode_png(w, h, px)
 
 
-def grey_plane(bpp: int, px: bytes) -> bytes:
-    """Collapse a decoded plane to greyscale: bpp 1 passes through; RGB
-    maps through the shared integer luma transform (exact on the grey
-    triples the palette carriers decode to); grey+alpha drops alpha."""
-    if bpp == 1:
-        return px
-    if bpp == 2:
-        return px[0::2]
-    if bpp == 3:
-        from htmlgraft.bmpops import _luma
-
-        return bytes(_luma(px[3 * j], px[3 * j + 1], px[3 * j + 2])
-                     for j in range(len(px) // 3))
-    raise NotImplementedError(f"grey collapse for {bpp} channels")
-
-
-def _synth_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = [int(d) for d in pdf["doc_id"]]
-        yield pd.DataFrame({
-            "doc_id": ids,
-            "png": [synth_png(d) for d in ids],
-        })
-
-
-def png_corpus(spark, sf_dir: str) -> DataFrame:
-    """Deterministic real-PNG corpus keyed by doc_id (pixels from the
-    closed-form formula, container from the real encoder across the
-    interlace/palette/plain carrier axes — see ``synth_png``)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_synth_batch, _PNG_SCHEMA)
-
-
-def _phash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "phash")}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["png"]):
-            w, h, bpp, raw = decode_png_pixels(bytes(blob))
-            px = grey_plane(bpp, raw)
-            out["doc_id"].append(int(doc_id))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["px_sum"].append(sum(px))
-            out["phash"].append(dhash_gray(w, h, px))
-        yield pd.DataFrame(out)
-
-
-def pixel_phash(spark, sf_dir: str) -> DataFrame:
-    """Gated query: encode -> decode -> dHash -> hash-group keeper.  The
-    corpus sweeps the carrier axes the oracle is blind to (plain grey /
-    Adam7 interlaced / permuted-palette indexed / 16-bit upscaled —
-    ``synth_png``), so the de-interlace scatter, the PLTE lookup, and
-    the 2-byte filter arithmetic are value-pinned.  The
-    only shuffle is the phash-keyed window (64-bit hash keys, balanced);
-    everything upstream is map-only."""
-    decoded = png_corpus(spark, sf_dir).mapInPandas(
-        _phash_batch, _PHASH_SCHEMA)
-    grp = Window.partitionBy("phash")
-    return (
-        decoded
-        .withColumn("keeper", F.min("doc_id").over(grp))
-        .withColumn(
-            "dup", (F.col("doc_id") != F.col("keeper")).cast("long"))
-        .orderBy("doc_id")
-    )
-
-
-def pixel_phash_oracle_sql(docs: str = "documents") -> str:
-    """The pixel plane, its sum, and the dHash restated straight from the
-    synthesis formula — no PNG anywhere, so the whole deflate/filter/CRC
-    round trip is pinned by value."""
-    g = "(b * 37 + {x} * 7 + {y} * 13) % 251"
-    samp = g.format(x="(gx * w) // 9", y="(gy * h) // 8")
-    samp1 = g.format(x="((gx + 1) * w) // 9", y="(gy * h) // 8")
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_PW} as w, {_PH} as h from {docs}
-      ),
-      sums as (
-        select im.doc_id, sum({g.format(x="x", y="y")}) as px_sum
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        group by im.doc_id
-      ),
-      bits as (
-        select im.doc_id, ti.gy as row,
-               sum(case when ({samp}) > ({samp1})
-                   then 1 << tj.gx else 0 end) as rowbyte
-        from imgs im, unnest(range(0, 8)) as ti(gy),
-             unnest(range(0, 8)) as tj(gx)
-        group by im.doc_id, ti.gy
-      ),
-      hashes as (
-        select doc_id,
-               string_agg(printf('%02x', cast(rowbyte as int)),
-                          '' order by row) as phash
-        from bits group by doc_id
-      )
-      select im.doc_id, cast(im.w as bigint) as width,
-             cast(im.h as bigint) as height,
-             cast(s.px_sum as bigint) as px_sum, hh.phash,
-             cast(min(im.doc_id) over (partition by hh.phash) as bigint)
-               as keeper,
-             cast(case when im.doc_id <> min(im.doc_id)
-                    over (partition by hh.phash) then 1 else 0 end as bigint)
-               as dup
-      from imgs im
-      join sums s on s.doc_id = im.doc_id
-      join hashes hh on hh.doc_id = im.doc_id
-      order by im.doc_id
-    """
-
-
-def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "new_width", "new_height", "px_sum",
-        )}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["png"]):
-            raw = bytes(blob)
-            w, h, _, _ = decode_png_pixels(raw)
-            new_w, new_h = max(1, w * 2 // 3), max(1, h * 2 // 3)
-            resized = resample_png(raw, new_w, new_h)
-            w2, h2, bpp2, px2 = decode_png_pixels(resized)
-            assert (w2, h2) == (new_w, new_h)
-            # palette carriers decode to grey RGB triples and resample as
-            # 3-channel; the grey collapse restores the formula plane
-            px2 = grey_plane(bpp2, px2)
-            out["doc_id"].append(int(doc_id))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["new_width"].append(new_w)
-            out["new_height"].append(new_h)
-            out["px_sum"].append(sum(px2))
-        yield pd.DataFrame(out)
-
-
-def pixel_resize(spark, sf_dir: str) -> DataFrame:
-    """Gated query: encode -> decode -> NN resample to (2w/3, 2h/3) ->
-    re-encode -> decode AGAIN -> pixel sum of the final decode.  Map-only
-    end to end."""
-    return png_corpus(spark, sf_dir).mapInPandas(
-        _resize_batch, _RESIZE_SCHEMA).orderBy("doc_id")
-
-
-def pixel_resize_oracle_sql(docs: str = "documents") -> str:
-    """Formula-at-sampled-coordinates recompute of the resized plane."""
-    g = "(b * 37 + ((x2 * w) // nw) * 7 + ((y2 * h) // nh) * 13) % 251"
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_PW} as w, {_PH} as h,
-               greatest(1, ({_PW} * 2) // 3) as nw,
-               greatest(1, ({_PH} * 2) // 3) as nh
-        from {docs}
-      )
-      select doc_id, cast(w as bigint) as width, cast(h as bigint) as height,
-             cast(nw as bigint) as new_width, cast(nh as bigint) as new_height,
-             cast(sum({g}) as bigint) as px_sum
-      from imgs, unnest(range(0, nw)) as tx(x2), unnest(range(0, nh)) as ty(y2)
-      group by doc_id, w, h, nw, nh
-      order by doc_id
-    """
-
-
-# --- JPEG tier (round 5): real baseline codec, exact coefficient-domain oracle
-
-# Per-block quantized coefficients as pure functions of (base, block index):
-# DC plus ACs at zigzag 1 (u=1,v=0), 2 (u=0,v=1... natural (1,0)) and 9
-# (natural (3,0)) — adjacent ACs, a 6-zero run, and cross-block DC deltas up
-# to +-48, so the DPCM chain, run/size coding, and multi-length Huffman
-# codes are all genuinely exercised.  Dims reuse the PNG tier's 12..28 x
-# 9..21 (NOT multiples of 8 — MCU padding and edge cropping are live).
-_J_DC = "((({b} * 5 + {nb} * 3) % 33) - 16)"
-_J_A1 = "((({b} + {nb}) % 7) - 3)"
-_J_A2 = "((({b} * 2 + {nb}) % 5) - 2)"
-_J_A9 = "((({b} * 3 + {nb}) % 5) - 2)"
-_T1_SQL = "([1004, 851, 569, 200, -200, -569, -851, -1004])"
-_T3_SQL = "([851, -200, -1004, -569, 569, 1004, 200, -851])"
-
-
-def synth_jpeg_coeffs(doc_id: int):
-    """(w, h, zigzag-ordered quantized blocks) for the synthetic JPEG."""
-    base, w, h = synth_dims(doc_id)
-    bw, bh = (w + 7) // 8, (h + 7) // 8
+def _coeff_blocks(name: str, doc_id: int):
+    """(w, h, zigzag-ordered quantized blocks) of a JPEG tier."""
+    t = _TIERS[name]
+    base = doc_id % PHASH_BASES
+    w, h = t.size(base)
     blocks = []
-    for nb in range(bw * bh):
+    for nb in range(((w + 7) // 8) * ((h + 7) // 8)):
         zz = [0] * 64
-        zz[0] = ((base * 5 + nb * 3) % 33) - 16
-        zz[1] = ((base + nb) % 7) - 3
-        zz[2] = ((base * 2 + nb) % 5) - 2
-        zz[9] = ((base * 3 + nb) % 5) - 2
+        for term in t.pix:
+            zz[term[0]] = _coef(term, base, nb)
         blocks.append(zz)
     return w, h, blocks
 
 
-def synth_jpeg(doc_id: int) -> bytes:
-    from htmlgraft import jpegops
+def synth_jpeg_coeffs(doc_id: int):
+    """(w, h, zigzag-ordered quantized blocks) for the synthetic JPEG."""
+    return _coeff_blocks("jpeg", doc_id)
 
-    w, h, blocks = synth_jpeg_coeffs(doc_id)
-    return jpegops.encode_jpeg_gray_coeffs(w, h, blocks)
+
+def synth_prog_coeffs(doc_id: int):
+    """(w, h, zigzag blocks) for the progressive-tier synthetic JPEG."""
+    return _coeff_blocks("prog", doc_id)
+
+
+def synth_jpeg(doc_id: int) -> bytes:
+    return jpegops.encode_jpeg_gray_coeffs(*synth_jpeg_coeffs(doc_id))
+
+
+def synth_prog_jpeg(doc_id: int) -> bytes:
+    return jpegops.encode_jpeg_gray_coeffs_progressive(
+        *synth_prog_coeffs(doc_id))
 
 
 def jpeg_pixel(doc_id: int, x: int, y: int) -> int:
-    """Closed-form decoded pixel (the Python twin of the SQL template):
-    dequantize the four nonzero coefficients with Annex-K Q values
-    (16/11/12/14 at their natural positions) and apply the jpegops
-    fixed-point IDCT contract."""
-    from htmlgraft.jpegops import IDCT_T
-
-    base, w, h = synth_dims(doc_id)
-    bw = (w + 7) // 8
-    nb = (y // 8) * bw + (x // 8)
-    xr, yr = x % 8, y % 8
-    dcq = ((base * 5 + nb * 3) % 33) - 16
-    a1 = ((base + nb) % 7) - 3
-    a2 = ((base * 2 + nb) % 5) - 2
-    a9 = ((base * 3 + nb) % 5) - 2
-    val = (dcq * 16 * 724 * 724
-           + a1 * 11 * IDCT_T[1][xr] * 724
-           + a2 * 12 * 724 * IDCT_T[1][yr]
-           + a9 * 14 * 724 * IDCT_T[3][yr])
-    return max(0, min(255, ((val + (1 << 21)) >> 22) + 128))
+    """Closed-form decoded pixel of the baseline-JPEG tier (the Python
+    twin of its oracle SQL)."""
+    base, w, _h = synth_dims(doc_id)
+    return _TIERS["jpeg"].px(base, w, x, y)
 
 
-def _jpix_sql(x: str, y: str) -> str:
-    """SQL expression for the decoded JPEG pixel at integer coords
-    (``x``, ``y``) — requires ``b`` and ``w`` in scope.  floor of a
-    power-of-two float division is exact here (|val| < 2^31 << 2^52), and
-    matches the decoder's arithmetic shift bit for bit."""
-    nb = f"((({y}) // 8) * ((w + 7) // 8) + (({x}) // 8))"
-    xr, yr = f"(({x}) % 8)", f"(({y}) % 8)"
-    val = (
-        f"({_J_DC.format(b='b', nb=nb)} * 8386816"
-        f" + {_J_A1.format(b='b', nb=nb)} * 11 * ({_T1_SQL}[{xr} + 1]) * 724"
-        f" + {_J_A2.format(b='b', nb=nb)} * 12 * 724 * ({_T1_SQL}[{yr} + 1])"
-        f" + {_J_A9.format(b='b', nb=nb)} * 14 * 724 * ({_T3_SQL}[{yr} + 1])"
-        ")"
-    )
-    return (f"greatest(0, least(255, cast(floor(({val} + 2097152)"
-            " / 4194304.0) as bigint) + 128))")
+def prog_pixel(doc_id: int, x: int, y: int) -> int:
+    """Closed-form decoded pixel of the progressive-JPEG tier."""
+    base, w, _h = synth_dims(doc_id)
+    return _TIERS["prog"].px(base, w, x, y)
 
 
-def _jpeg_synth_batch(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _synth_gif(doc_id: int) -> bytes:
+    return gifops.encode_gif(*synth_gif_pixels(doc_id),
+                             interlace=bool(doc_id & 1))
+
+
+def synth_bmp(doc_id: int) -> bytes:
+    """Real BMP bytes: odd doc_ids carry 24-bit BGR with the exact-luma
+    channel split, even doc_ids the 8-bit greyscale palette; every third
+    doc is stored top-down — all under one carrier-blind oracle."""
+    w, h, lum = synth_bmp_pixels(doc_id)
+    top_down = doc_id % 3 == 0
+    if doc_id % 2:
+        rgb = b"".join(bytes((v + 2, v, v - 4)) for v in lum)
+        return bmpops.encode_bmp(w, h, rgb, bits=24, top_down=top_down)
+    return bmpops.encode_bmp(w, h, lum, bits=8, top_down=top_down)
+
+
+def synth_tiff(doc_id: int) -> bytes:
+    """Real TIFF bytes sweeping the carrier axes: byte order by doc_id
+    parity, sample layout by doc_id % 3 (RGB with the exact-luma channel
+    split / grey BlackIsZero / grey WhiteIsZero inverted storage), and
+    strip granularity by doc_id % 4 (1-row strips / 5-row strips /
+    single strip) — all under one carrier-blind oracle."""
+    w, h, lum = synth_tiff_pixels(doc_id)
+    big_endian = doc_id % 2 == 1
+    rps = {0: 1, 1: 5}.get(doc_id % 4)
+    if doc_id % 3 == 0:
+        rgb = b"".join(bytes((v + 2, v, v - 4)) for v in lum)
+        return tiffops.encode_tiff(w, h, rgb, rgb=True, big_endian=big_endian,
+                                   rows_per_strip=rps)
+    return tiffops.encode_tiff(w, h, lum, big_endian=big_endian,
+                               rows_per_strip=rps,
+                               white_is_zero=doc_id % 3 == 2)
+
+
+# --- the tier table ----------------------------------------------------------
+
+class _Tier(NamedTuple):
+    """One formula family: see the module docstring and ``_TIERS``."""
+
+    name: str
+    col: str                # binary column, and the decode audit's format
+    magic: tuple            # leading bytes the decode audit sniffs
+    dims: tuple             # (offset, mul, mod) of width, then of height
+    pix: tuple              # linear spec, or a JPEG coefficient-term table
+    encode: Callable[[int], bytes]
+    decode: Callable[[bytes], tuple]
+
+    def size(self, b):
+        return _dim(self.dims[0], b), _dim(self.dims[1], b)
+
+    def px(self, b, w, x, y, bump=None):
+        if isinstance(self.pix[0], int):
+            return _lin(self.pix, b, x, y)
+        return _jpeg_pixel(self.pix, b, w, x, y, bump)
+
+    def plane(self, doc_id: int):
+        """(width, height, greyscale bytes) the decode must yield."""
+        b = doc_id % PHASH_BASES
+        w, h = self.size(b)
+        return w, h, bytes(self.px(b, w, x, y)
+                           for y in range(h) for x in range(w))
+
+    def imgs_sql(self, docs: str, extra: str = "") -> str:
+        w, h = self.size(_BASE)
+        return (f"select doc_id, {_BASE} as b, {w} as w, {h} as h{extra}"
+                f" from {docs}")
+
+
+_JPEG_MAGIC = (b"\xff\xd8",)
+
+# Formula constants differ per tier, so a copy-paste slip between tiers
+# fails the oracle.  The first tier whose magic matches decodes a blob in
+# the audit (progressive JPEG sniffs as jpeg).
+_TIERS = {t.name: t for t in (
+    # PNG: the carrier axes of ``synth_png`` (plain / Adam7 / permuted
+    # palette / 16-bit) put the de-interlace scatter, the PLTE lookup and
+    # the 2-byte filter arithmetic under the value gate; the modulus 251
+    # (prime < 256) keeps the plane non-degenerate under the x/y ramp.
+    _Tier("png", "png", (_SIG,), ((12, 7, 17), (9, 5, 13)),
+          (37, 7, 13, 251, 0), synth_png, decode_png_pixels),
+    # Baseline JPEG: DC plus ACs at zigzag 1, 2 and 9 — adjacent ACs, a
+    # 6-zero run and cross-block DC deltas up to +-48, so the DPCM chain,
+    # run/size coding and multi-length Huffman codes are all exercised.
+    # Dims are the PNG tier's (never multiples of 8: MCU padding and edge
+    # cropping are live); the luma fast path decodes (Huffman, DPCM,
+    # dequant, integer IDCT, crop), identical to the full decode for grey.
+    _Tier("jpeg", "jpeg", _JPEG_MAGIC, ((12, 7, 17), (9, 5, 13)), (
+        (0, 5, 3, 33, 16, 16, 0, 0),
+        (1, 1, 1, 7, 3, 11, 1, 0),
+        (2, 2, 1, 5, 2, 12, 0, 1),
+        (9, 3, 1, 5, 2, 14, 0, 3),
+    ), synth_jpeg, jpegops.decode_jpeg_luma),
+    # Progressive JPEG (SOF2), the dominant non-baseline variant in a
+    # crawl, decoded for real (spectral selection + successive
+    # approximation).  LARGER ACs than baseline so every scan kind of the
+    # libjpeg-style default script carries content: first-pass AC at
+    # Al=2, refinement correction bits, cross-block EOB runs, and ZRL
+    # (the 30-gap between zigzag 9 and 40 inside the 6..63 band).
+    _Tier("prog", "jpeg", _JPEG_MAGIC, ((12, 7, 17), (9, 5, 13)), (
+        (0, 7, 5, 45, 22, 16, 0, 0),
+        (1, 2, 3, 19, 9, 11, 1, 0),
+        (2, 3, 1, 17, 8, 12, 0, 1),
+        (9, 1, 2, 15, 7, 14, 0, 3),
+        (40, 5, 1, 9, 4, 87, 5, 3),
+    ), synth_prog_jpeg, jpegops.decode_jpeg_luma),
+    # GIF: odd doc_ids carry the 4-pass INTERLACED row order; planes up
+    # to 38x27 = 1026 px push the LZW dictionary past 512 entries, so
+    # 10-bit code widths, sub-block framing and palette mapping are live.
+    _Tier("gif", "gif", (b"GIF8",), ((16, 9, 23), (11, 7, 17)),
+          (41, 11, 5, 247, 0), _synth_gif, gifops.decode_gif_pixels),
+    # BMP: the container corners hostile crawls hit — 4-byte row padding
+    # (widths 13..33 cover all four mod-4 classes), bottom-up vs top-down
+    # rows, 8-bit palette vs 24-bit BGR.  The 24-bit channels (L+2, L,
+    # L-4) are exact under the integer luma transform, but a BGR/RGB
+    # channel-order slip shifts luma by 1, so byte order is value-pinned.
+    _Tier("bmp", "bmp", (b"BM",), ((13, 5, 21), (9, 3, 13)),
+          (43, 9, 3, 241, 4), synth_bmp, bmpops.decode_bmp_pixels),
+    # TIFF: two byte orders for every header/IFD/value field, pixel data
+    # split across strips whose offsets/counts live in external value
+    # arrays, WhiteIsZero polarity, and RGB-vs-grey samples with the same
+    # exact-luma channel split as BMP (an R/B slip shifts luma by 1).
+    _Tier("tiff", "tiff", (b"II*\x00", b"MM\x00*"), ((11, 9, 23), (8, 5, 15)),
+          (53, 11, 7, 233, 6), synth_tiff, tiffops.decode_tiff_pixels),
+)}
+
+
+# --- Spark stages ------------------------------------------------------------
+
+_PHASH_DDL = "doc_id long, width long, height long, px_sum long, phash string"
+_RESIZE_DDL = ("doc_id long, width long, height long, new_width long,"
+               " new_height long, px_sum long")
+
+
+def _names(ddl: str) -> list[str]:
+    return [c.split()[0] for c in ddl.split(",")]
+
+
+def _stage(name: str, fn, *args):
+    """``fn`` bound to ``args``, under the name Spark's plans show."""
+    f = partial(fn, *args)
+    f.__name__ = name
+    return f
+
+
+def _rows_batch(row, cols, batches: Iterator[pd.DataFrame]):
+    """Per-doc map: ``row(doc_id)`` -> one output tuple."""
     for pdf in batches:
-        ids = [int(d) for d in pdf["doc_id"]]
-        yield pd.DataFrame({
-            "doc_id": ids,
-            "jpeg": [synth_jpeg(d) for d in ids],
-        })
+        yield pd.DataFrame([row(int(d)) for d in pdf["doc_id"]], columns=cols)
 
 
-_JPEG_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("jpeg", BinaryType()),
-])
-
-
-def jpeg_corpus(spark, sf_dir: str) -> DataFrame:
-    """Deterministic real-JPEG corpus keyed by doc_id (coefficients from
-    the closed-form formulas, container from the real entropy encoder)."""
+def _map_docs(spark, sf_dir: str, row, ddl: str) -> DataFrame:
+    """Map-only per-doc stage over the documents' doc_ids."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_jpeg_synth_batch, _JPEG_SCHEMA)
+    return docs.mapInPandas(
+        _stage(row.__name__, _rows_batch, row, _names(ddl)), ddl)
 
 
-def _jphash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.jpegops import decode_jpeg_luma
+def _encoded(encode, doc_id: int):
+    return doc_id, encode(doc_id)
 
+
+def _corpus(spark, sf_dir: str, encode, col: str) -> DataFrame:
+    """Deterministic real-bytes corpus keyed by doc_id: pixels from the
+    tier formula, container from the real encoder."""
+    return _map_docs(spark, sf_dir, _stage(encode.__name__, _encoded, encode),
+                     f"doc_id long, {col} binary")
+
+
+def _hash_batch(decode, col: str, batches: Iterator[pd.DataFrame]):
+    """Decode the actual bytes -> grey plane -> dims, pixel sum, dHash."""
     for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "px_sum",
-                               "phash")}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["jpeg"]):
-            w, h, bpp, px = decode_jpeg_luma(bytes(blob))
-            assert bpp == 1
-            out["doc_id"].append(int(doc_id))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["px_sum"].append(sum(px))
-            out["phash"].append(dhash_gray(w, h, px))
-        yield pd.DataFrame(out)
+        rows = []
+        for doc_id, blob in zip(pdf["doc_id"], pdf[col]):
+            w, h, bpp, px = decode(bytes(blob))
+            px = grey_plane(bpp, px)
+            rows.append((int(doc_id), w, h, sum(px), dhash_gray(w, h, px)))
+        yield pd.DataFrame(rows, columns=_names(_PHASH_DDL))
 
 
-def pixel_phash_jpeg(spark, sf_dir: str) -> DataFrame:
-    """Gated query: real-JPEG encode -> FULL baseline decode (Huffman,
-    DPCM, dequant, integer IDCT, crop) -> dHash -> hash-group keeper.
-    Same map-only shape as pixel_phash; the decode runs the luma fast
-    path (identical to the full decode for greyscale)."""
-    decoded = jpeg_corpus(spark, sf_dir).mapInPandas(
-        _jphash_batch, _PHASH_SCHEMA)
-    grp = Window.partitionBy("phash")
+def _decode_dhash(corpus: DataFrame, decode, col: str) -> DataFrame:
+    return corpus.mapInPandas(
+        _stage(f"dhash_{decode.__name__}", _hash_batch, decode, col),
+        _PHASH_DDL)
+
+
+def _keep_min(decoded: DataFrame) -> DataFrame:
+    """Exact-dup keeper: min doc_id of each dHash group.  The only
+    shuffle is this phash-keyed window (64-bit keys, balanced)."""
     return (
         decoded
-        .withColumn("keeper", F.min("doc_id").over(grp))
-        .withColumn(
-            "dup", (F.col("doc_id") != F.col("keeper")).cast("long"))
+        .withColumn("keeper",
+                    F.min("doc_id").over(Window.partitionBy("phash")))
+        .withColumn("dup", (F.col("doc_id") != F.col("keeper")).cast("long"))
         .orderBy("doc_id")
     )
 
 
-def pixel_phash_jpeg_oracle_sql(docs: str = "documents") -> str:
-    """Decoded plane, sum, and dHash restated from the coefficient
-    synthesis formulas + the fixed-point IDCT contract — no JPEG bytes
-    anywhere, so the whole marker/Huffman/stuffing/dequant/IDCT/crop
-    chain is pinned by value."""
-    pix = _jpix_sql("x", "y")
-    samp = _jpix_sql("(gx * w) // 9", "(gy * h) // 8")
-    samp1 = _jpix_sql("((gx + 1) * w) // 9", "(gy * h) // 8")
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_PW} as w, {_PH} as h from {docs}
-      ),
-      sums as (
-        select im.doc_id, sum({pix}) as px_sum
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
+def _resize_batch(decode, col: str, batches: Iterator[pd.DataFrame]):
+    """Decode -> NN resample to (2w div 3, 2h div 3) -> lossless PNG
+    re-encode (a JPEG re-encode would re-quantize) -> decode AGAIN ->
+    grey pixel sum of the final decode."""
+    for pdf in batches:
+        rows = []
+        for doc_id, blob in zip(pdf["doc_id"], pdf[col]):
+            w, h, bpp, px = decode(bytes(blob))
+            nw, nh = max(1, w * 2 // 3), max(1, h * 2 // 3)
+            w2, h2, bpp2, px2 = decode_png_pixels(
+                _resample_plane(w, h, bpp, px, nw, nh))
+            assert (w2, h2) == (nw, nh)
+            rows.append((int(doc_id), w, h, nw, nh,
+                         sum(grey_plane(bpp2, px2))))
+        yield pd.DataFrame(rows, columns=_names(_RESIZE_DDL))
+
+
+# --- oracle builders ---------------------------------------------------------
+
+def _sum_cte(name: str, src: str, pix, w="w", h="h") -> str:
+    """CTE ``name(doc_id, s)``: ``pix(x, y)`` summed over the w x h grid
+    of each row of ``src``."""
+    return f"""{name} as (
+        select im.doc_id, sum({pix(_Sql("x"), _Sql("y"))}) as s
+        from {src} im, unnest(range(0, {w})) as tx(x),
+             unnest(range(0, {h})) as ty(y)
         group by im.doc_id
-      ),
-      bits as (
+      )"""
+
+
+def _dhash_ctes(pix) -> str:
+    """CTEs ``bits(doc_id, row, rowbyte)`` and ``hashes(doc_id, phash)``:
+    ``dhash_gray`` restated over ``imgs`` from the pixel formula."""
+    gx, gy = _Sql("gx"), _Sql("gy")
+    left = pix(gx * _W // 9, gy * _H // 8)
+    right = pix((gx + 1) * _W // 9, gy * _H // 8)
+    return f"""bits as (
         select im.doc_id, ti.gy as row,
-               sum(case when ({samp}) > ({samp1})
+               sum(case when {left} > {right}
                    then 1 << tj.gx else 0 end) as rowbyte
         from imgs im, unnest(range(0, 8)) as ti(gy),
              unnest(range(0, 8)) as tj(gx)
@@ -772,15 +818,23 @@ def pixel_phash_jpeg_oracle_sql(docs: str = "documents") -> str:
                string_agg(printf('%02x', cast(rowbyte as int)),
                           '' order by row) as phash
         from bits group by doc_id
-      )
-      select im.doc_id, cast(im.w as bigint) as width,
+      )"""
+
+
+def _phash_oracle_sql(imgs: str, pix, lead: str = "") -> str:
+    """Pixel sum and dHash from the formula over the ``imgs`` select, and
+    keeper = min doc_id of each dHash group."""
+    return f"""
+      with imgs as ({imgs}),
+      {_sum_cte("sums", "imgs", pix)},
+      {_dhash_ctes(pix)}
+      select im.doc_id,{lead} cast(im.w as bigint) as width,
              cast(im.h as bigint) as height,
-             cast(s.px_sum as bigint) as px_sum, hh.phash,
+             cast(s.s as bigint) as px_sum, hh.phash,
              cast(min(im.doc_id) over (partition by hh.phash) as bigint)
                as keeper,
-             cast(case when im.doc_id <> min(im.doc_id)
-                    over (partition by hh.phash) then 1 else 0 end as bigint)
-               as dup
+             cast(im.doc_id <> min(im.doc_id) over (partition by hh.phash)
+                  as bigint) as dup
       from imgs im
       join sums s on s.doc_id = im.doc_id
       join hashes hh on hh.doc_id = im.doc_id
@@ -788,203 +842,70 @@ def pixel_phash_jpeg_oracle_sql(docs: str = "documents") -> str:
     """
 
 
-def _jresize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.jpegops import decode_jpeg_gray
+# --- gated queries: one pair per tier ----------------------------------------
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "new_width", "new_height", "px_sum",
-        )}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["jpeg"]):
-            w, h, _, px = decode_jpeg_gray(bytes(blob))
-            new_w, new_h = max(1, w * 2 // 3), max(1, h * 2 // 3)
-            res = bytearray(new_w * new_h)
-            for y2 in range(new_h):
-                sy = y2 * h // new_h
-                for x2 in range(new_w):
-                    res[y2 * new_w + x2] = px[sy * w + (x2 * w // new_w)]
-            # lossless re-encode (PNG) so the second decode pins the
-            # resample bytes exactly — a JPEG re-encode would re-quantize
-            reenc = encode_png(new_w, new_h, bytes(res))
-            w2, h2, bpp2, px2 = decode_png_pixels(reenc)
-            assert (w2, h2, bpp2) == (new_w, new_h, 1)
-            out["doc_id"].append(int(doc_id))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["new_width"].append(new_w)
-            out["new_height"].append(new_h)
-            out["px_sum"].append(sum(px2))
-        yield pd.DataFrame(out)
+def _phash_pair(name: str):
+    """(query, oracle_sql) for one tier: encode real bytes -> decode the
+    actual bytes -> dHash -> hash-group keeper, against the formula."""
+    t = _TIERS[name]
+
+    def query(spark, sf_dir: str) -> DataFrame:
+        return _keep_min(_decode_dhash(
+            _corpus(spark, sf_dir, t.encode, t.col), t.decode, t.col))
+
+    def oracle_sql(docs: str = "documents") -> str:
+        return _phash_oracle_sql(t.imgs_sql(docs), partial(t.px, _B, _W))
+
+    return query, oracle_sql
 
 
-def pixel_resize_jpeg(spark, sf_dir: str) -> DataFrame:
-    """Gated query: real-JPEG decode -> NN resample to (2w/3, 2h/3) ->
-    lossless PNG re-encode -> decode AGAIN -> pixel sum of the final
-    decode.  Chains both codecs; map-only end to end."""
-    return jpeg_corpus(spark, sf_dir).mapInPandas(
-        _jresize_batch, _RESIZE_SCHEMA).orderBy("doc_id")
+def _resize_pair(name: str):
+    """(query, oracle_sql) for one tier: decode -> NN resample -> PNG
+    re-encode -> decode again, against the formula at the resample's
+    source coordinates.  Map-only end to end."""
+    t = _TIERS[name]
+
+    def query(spark, sf_dir: str) -> DataFrame:
+        return _corpus(spark, sf_dir, t.encode, t.col).mapInPandas(
+            _stage(f"resize_{t.decode.__name__}", _resize_batch, t.decode,
+                   t.col), _RESIZE_DDL
+        ).orderBy("doc_id")
+
+    def oracle_sql(docs: str = "documents") -> str:
+        w, h = t.size(_BASE)
+        imgs = t.imgs_sql(docs, f", greatest(1, ({w} * 2) // 3) as nw,"
+                                f" greatest(1, ({h} * 2) // 3) as nh")
+        nw, nh = _Sql("nw"), _Sql("nh")
+
+        def pix(x, y):
+            return t.px(_B, _W, x * _W // nw, y * _H // nh)
+
+        return f"""
+          with imgs as ({imgs}),
+          {_sum_cte("sums", "imgs", pix, "nw", "nh")}
+          select im.doc_id, cast(im.w as bigint) as width,
+                 cast(im.h as bigint) as height,
+                 cast(im.nw as bigint) as new_width,
+                 cast(im.nh as bigint) as new_height,
+                 cast(s.s as bigint) as px_sum
+          from imgs im join sums s on s.doc_id = im.doc_id
+          order by im.doc_id
+        """
+
+    return query, oracle_sql
 
 
-def pixel_resize_jpeg_oracle_sql(docs: str = "documents") -> str:
-    """JPEG-pixel formula at the resample's source coordinates."""
-    pix = _jpix_sql("(x2 * w) // nw", "(y2 * h) // nh")
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_PW} as w, {_PH} as h,
-               greatest(1, ({_PW} * 2) // 3) as nw,
-               greatest(1, ({_PH} * 2) // 3) as nh
-        from {docs}
-      )
-      select doc_id, cast(w as bigint) as width, cast(h as bigint) as height,
-             cast(nw as bigint) as new_width, cast(nh as bigint) as new_height,
-             cast(sum({pix}) as bigint) as px_sum
-      from imgs, unnest(range(0, nw)) as tx(x2), unnest(range(0, nh)) as ty(y2)
-      group by doc_id, w, h, nw, nh
-      order by doc_id
-    """
+pixel_phash, pixel_phash_oracle_sql = _phash_pair("png")
+pixel_phash_jpeg, pixel_phash_jpeg_oracle_sql = _phash_pair("jpeg")
+pixel_phash_prog, pixel_phash_prog_oracle_sql = _phash_pair("prog")
+pixel_phash_gif, pixel_phash_gif_oracle_sql = _phash_pair("gif")
+pixel_phash_bmp, pixel_phash_bmp_oracle_sql = _phash_pair("bmp")
+pixel_phash_tiff, pixel_phash_tiff_oracle_sql = _phash_pair("tiff")
+pixel_resize, pixel_resize_oracle_sql = _resize_pair("png")
+pixel_resize_jpeg, pixel_resize_jpeg_oracle_sql = _resize_pair("jpeg")
 
 
-# --- decode-audit: mixed-format dispatch + error lanes under one oracle -------
-
-_AUDIT_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("fmt", StringType()),
-    StructField("ok", LongType()),
-    StructField("px_sum", LongType()),
-])
-
-
-# --- GIF tier: real LZW codec (gifops.py), same gate pattern as PNG ----------
-#
-# A DISTINCT pixel formula and geometry from the PNG tier so a formula
-# copy-paste slip in either oracle cannot hide; the larger planes (up to
-# 38x27 = 1026 px) push the LZW dictionary past 512 entries, so 10-bit
-# code widths are live in the gated corpus (pinned in tests).
-
-_GW = f"(16 + ({_BASE} * 9) % 23)"    # 16..38
-_GH = f"(11 + ({_BASE} * 7) % 17)"    # 11..27
-_GPIX = "(({b} * 41 + {x} * 11 + {y} * 5) % 247)"
-
-
-def _gpix(base: int, x: int, y: int) -> int:
-    return (base * 41 + x * 11 + y * 5) % 247
-
-
-def synth_gif_pixels(doc_id: int):
-    """(width, height, greyscale bytes) for the GIF-tier image of doc_id."""
-    base = doc_id % PHASH_BASES
-    w, h = 16 + (base * 9) % 23, 11 + (base * 7) % 17
-    return w, h, bytes(_gpix(base, x, y) for y in range(h) for x in range(w))
-
-
-_GIF_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("gif", BinaryType()),
-])
-
-
-def _gif_synth_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.gifops import encode_gif
-
-    for pdf in batches:
-        ids = [int(d) for d in pdf["doc_id"]]
-        # odd doc_ids carry the 4-pass INTERLACED row order (round 5):
-        # the oracle restates pixels from the formula, carrier-blind, so
-        # both row layouts sit under the same value gate
-        yield pd.DataFrame({
-            "doc_id": ids,
-            "gif": [encode_gif(*synth_gif_pixels(d), interlace=bool(d & 1))
-                    for d in ids],
-        })
-
-
-def gif_corpus(spark, sf_dir: str) -> DataFrame:
-    """Deterministic real-GIF corpus keyed by doc_id (pixels from the
-    closed-form formula, container + LZW from the real encoder)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_gif_synth_batch, _GIF_SCHEMA)
-
-
-def _gphash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.gifops import decode_gif_pixels
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "phash")}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["gif"]):
-            w, h, bpp, px = decode_gif_pixels(bytes(blob))
-            assert bpp == 1
-            out["doc_id"].append(int(doc_id))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["px_sum"].append(sum(px))
-            out["phash"].append(dhash_gray(w, h, px))
-        yield pd.DataFrame(out)
-
-
-def pixel_phash_gif(spark, sf_dir: str) -> DataFrame:
-    """Gated query: encode real GIFs (LZW, extensions, greyscale GCT) ->
-    decode the actual bytes -> dHash -> hash-group keeper.  Same
-    map-only-then-one-bounded-window shape as the PNG/JPEG tiers; the
-    oracle recomputes pixels from the closed-form formula so any slip in
-    LZW width growth, sub-block framing, palette mapping, or extension
-    skipping shows up as a value mismatch."""
-    decoded = gif_corpus(spark, sf_dir).mapInPandas(
-        _gphash_batch, _PHASH_SCHEMA)
-    grp = Window.partitionBy("phash")
-    return (
-        decoded
-        .withColumn("keeper", F.min("doc_id").over(grp))
-        .withColumn(
-            "dup", (F.col("doc_id") != F.col("keeper")).cast("long"))
-        .orderBy("doc_id")
-    )
-
-
-def pixel_phash_gif_oracle_sql(docs: str = "documents") -> str:
-    """The GIF-tier pixel plane, sum, and dHash restated straight from
-    the synthesis formula — no GIF bytes anywhere, so the whole
-    LZW/framing/palette round trip is pinned by value."""
-    g = "(b * 41 + {x} * 11 + {y} * 5) % 247"
-    samp = g.format(x="(gx * w) // 9", y="(gy * h) // 8")
-    samp1 = g.format(x="((gx + 1) * w) // 9", y="(gy * h) // 8")
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_GW} as w, {_GH} as h from {docs}
-      ),
-      sums as (
-        select im.doc_id, sum({g.format(x="x", y="y")}) as px_sum
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        group by im.doc_id
-      ),
-      bits as (
-        select im.doc_id, ti.gy as row,
-               sum(case when ({samp}) > ({samp1})
-                   then 1 << tj.gx else 0 end) as rowbyte
-        from imgs im, unnest(range(0, 8)) as ti(gy),
-             unnest(range(0, 8)) as tj(gx)
-        group by im.doc_id, ti.gy
-      ),
-      hashes as (
-        select doc_id,
-               string_agg(printf('%02x', cast(rowbyte as int)),
-                          '' order by row) as phash
-        from bits group by doc_id
-      )
-      select im.doc_id, cast(im.w as bigint) as width,
-             cast(im.h as bigint) as height,
-             cast(s.px_sum as bigint) as px_sum, hh.phash,
-             cast(min(im.doc_id) over (partition by hh.phash) as bigint)
-               as keeper,
-             cast(case when im.doc_id <> min(im.doc_id)
-                    over (partition by hh.phash) then 1 else 0 end as bigint)
-               as dup
-      from imgs im
-      join sums s on s.doc_id = im.doc_id
-      join hashes hh on hh.doc_id = im.doc_id
-      order by im.doc_id
-    """
-
+# --- decode-audit: mixed-format dispatch + error lanes under one oracle ------
 
 def _truncated_jpeg(doc_id: int) -> bytes:
     """A real synthetic JPEG cut 6 bytes into its entropy segment —
@@ -1002,92 +923,43 @@ def _truncated_gif(doc_id: int) -> bytes:
     terminator + trailer, so the sub-block walker must raise — the
     original framing is intact up to the cut and the only 0x00 terminator
     was at the removed end."""
-    from htmlgraft.gifops import encode_gif
+    return gifops.encode_gif(*synth_gif_pixels(doc_id))[:-10]
 
-    return encode_gif(*synth_gif_pixels(doc_id))[:-10]
+
+# doc_id % 12 -> (tier, synth): ``None`` lanes carry the tier's healthy
+# bytes; the others are damaged and must decode to a loud error — a
+# progressive stream cut mid-scan (raise inside entropy data or at the
+# missing marker), a BMP cut inside its pixel array (the stride*height
+# bound check), a TIFF cut through its trailing IFD (the IFD/value-array
+# bound checks).  Lane 11 is junk bytes no magic matches.
+_AUDIT_LANES = (
+    ("png", None), ("jpeg", None), ("gif", None), ("prog", None),
+    ("jpeg", _truncated_jpeg), ("gif", _truncated_gif),
+    ("prog", lambda d: synth_prog_jpeg(d)[:-10]),
+    ("bmp", None), ("bmp", lambda d: synth_bmp(d)[:-10]),
+    ("tiff", None), ("tiff", lambda d: synth_tiff(d)[:-10]),
+)
+_AUDIT_MOD = len(_AUDIT_LANES) + 1
 
 
 def _audit_synth(doc_id: int) -> bytes:
-    m = doc_id % 12
-    if m == 0:
-        return encode_png(*synth_pixels(doc_id))
-    if m == 1:
-        return synth_jpeg(doc_id)
-    if m == 2:
-        from htmlgraft.gifops import encode_gif
-
-        return encode_gif(*synth_gif_pixels(doc_id))
-    if m == 3:
-        return synth_prog_jpeg(doc_id)
-    if m == 4:
-        return _truncated_jpeg(doc_id)
-    if m == 5:
-        return _truncated_gif(doc_id)
-    if m == 6:
-        # a progressive stream cut mid-scan: the multi-scan walker must
-        # raise (either inside entropy data or at the missing marker)
-        return synth_prog_jpeg(doc_id)[:-10]
-    if m == 7:
-        return synth_bmp(doc_id)
-    if m == 8:
-        # a BMP cut inside its pixel array: the stride*height bound check
-        # must raise, never read past the blob or pad silently
-        return synth_bmp(doc_id)[:-10]
-    if m == 9:
-        return synth_tiff(doc_id)
-    if m == 10:
-        # a TIFF cut at the tail removes (part of) the trailing IFD: the
-        # IFD/value-array bound checks must raise, never guess geometry
-        return synth_tiff(doc_id)[:-10]
-    return b"JUNK" + str(doc_id).encode()
+    m = doc_id % _AUDIT_MOD
+    if m == len(_AUDIT_LANES):
+        return b"JUNK" + str(doc_id).encode()
+    name, synth = _AUDIT_LANES[m]
+    return (synth or _TIERS[name].encode)(doc_id)
 
 
-def _audit_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.bmpops import decode_bmp_pixels
-    from htmlgraft.gifops import decode_gif_pixels
-    from htmlgraft.jpegops import decode_jpeg_luma
-    from htmlgraft.tiffops import decode_tiff_pixels
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "fmt", "ok", "px_sum")}
-        for doc_id in pdf["doc_id"]:
-            blob = _audit_synth(int(doc_id))
-            if blob[:8] == _SIG:
-                fmt = "png"
-            elif blob[:2] == b"\xff\xd8":
-                fmt = "jpeg"
-            elif blob[:4] == b"GIF8":
-                fmt = "gif"
-            elif blob[:2] == b"BM":
-                fmt = "bmp"
-            elif blob[:4] in (b"II*\x00", b"MM\x00*"):
-                fmt = "tiff"
-            else:
-                fmt = "unknown"
-            ok, px_sum = 0, -1
-            try:
-                if fmt == "png":
-                    w, h, _, px = decode_png_pixels(blob)
-                    ok, px_sum = 1, sum(px)
-                elif fmt == "jpeg":
-                    w, h, _, px = decode_jpeg_luma(blob)
-                    ok, px_sum = 1, sum(px)
-                elif fmt == "gif":
-                    w, h, _, px = decode_gif_pixels(blob)
-                    ok, px_sum = 1, sum(px)
-                elif fmt == "bmp":
-                    w, h, _, px = decode_bmp_pixels(blob)
-                    ok, px_sum = 1, sum(px)
-                elif fmt == "tiff":
-                    w, h, _, px = decode_tiff_pixels(blob)
-                    ok, px_sum = 1, sum(px)
-            except (ValueError, NotImplementedError):
-                ok, px_sum = 0, -1
-            out["doc_id"].append(int(doc_id))
-            out["fmt"].append(fmt)
-            out["ok"].append(ok)
-            out["px_sum"].append(px_sum)
-        yield pd.DataFrame(out)
+def _audit_row(doc_id: int):
+    blob = _audit_synth(doc_id)
+    t = next((u for u in _TIERS.values() if blob.startswith(u.magic)), None)
+    if t is None:
+        return doc_id, "unknown", 0, -1
+    try:
+        _w, _h, bpp, px = t.decode(blob)
+        return doc_id, t.col, 1, sum(grey_plane(bpp, px))
+    except (ValueError, NotImplementedError):
+        return doc_id, t.col, 0, -1
 
 
 def pixel_decode_audit(spark, sf_dir: str) -> DataFrame:
@@ -1099,94 +971,38 @@ def pixel_decode_audit(spark, sf_dir: str) -> DataFrame:
     corrupt member yields a loud per-row error status, never a silently
     wrong plane (the property that matters when 10^12 hostile documents
     flow through mapInPandas).  Map-only."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_audit_batch, _AUDIT_SCHEMA).orderBy("doc_id")
+    return _map_docs(spark, sf_dir, _audit_row,
+                     "doc_id long, fmt string, ok long, px_sum long"
+                     ).orderBy("doc_id")
 
 
 def pixel_decode_audit_oracle_sql(docs: str = "documents") -> str:
-    """Every lane restated: PNG sums from the pixel formula, baseline
-    JPEG sums from the coefficient/IDCT formula, GIF sums from the
-    GIF-tier formula, progressive sums from the progressive-tier
-    formulas, BMP sums from the BMP-tier formula, TIFF sums from the
-    TIFF-tier formula, error lanes pinned to (0, -1)."""
-    png_sum = "(b * 37 + x * 7 + y * 13) % 251"
-    gif_sum = "(b * 41 + x * 11 + y * 5) % 247"
-    bmp_sum = "(4 + (b * 43 + x * 9 + y * 3) % 241)"
-    tif_sum = "(6 + (b * 53 + x * 11 + y * 7) % 233)"
-    jpg_sum = _jpix_sql("x", "y")
-    prg_sum = _ppix_sql("x", "y")
+    """Every lane restated from ``_AUDIT_LANES``: healthy lanes sum their
+    tier's formula, damaged and junk lanes are pinned to (0, -1)."""
+    ok = [m for m, (_n, synth) in enumerate(_AUDIT_LANES) if synth is None]
+    sums = []
+    for m in ok:
+        t = _TIERS[_AUDIT_LANES[m][0]]
+        lane = f"({t.imgs_sql(docs)} where doc_id % {_AUDIT_MOD} = {m})"
+        sums.append(_sum_cte(f"s{m}", lane, partial(t.px, _B, _W)))
+    sums = ",\n      ".join(sums)
+    fmt = " ".join(f"when {m} then '{_TIERS[n].col}'"
+                   for m, (n, _s) in enumerate(_AUDIT_LANES))
     return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_PW} as w, {_PH} as h,
-               {_GW} as gw, {_GH} as gh, {_BMW} as bw, {_BMH} as bh,
-               {_TFW} as tw, {_TFH} as th
-        from {docs}
-      ),
-      psums as (
-        select im.doc_id, sum({png_sum}) as s
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        where im.doc_id % 12 = 0
-        group by im.doc_id
-      ),
-      jsums as (
-        select im.doc_id, sum({jpg_sum}) as s
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        where im.doc_id % 12 = 1
-        group by im.doc_id
-      ),
-      gsums as (
-        select im.doc_id, sum({gif_sum}) as s
-        from imgs im, unnest(range(0, gw)) as tx(x),
-             unnest(range(0, gh)) as ty(y)
-        where im.doc_id % 12 = 2
-        group by im.doc_id
-      ),
-      rsums as (
-        select im.doc_id, sum({prg_sum}) as s
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        where im.doc_id % 12 = 3
-        group by im.doc_id
-      ),
-      bsums as (
-        select im.doc_id, sum({bmp_sum}) as s
-        from imgs im, unnest(range(0, bw)) as tx(x),
-             unnest(range(0, bh)) as ty(y)
-        where im.doc_id % 12 = 7
-        group by im.doc_id
-      ),
-      tsums as (
-        select im.doc_id, sum({tif_sum}) as s
-        from imgs im, unnest(range(0, tw)) as tx(x),
-             unnest(range(0, th)) as ty(y)
-        where im.doc_id % 12 = 9
-        group by im.doc_id
-      )
-      select im.doc_id,
-             case when im.doc_id % 12 = 0 then 'png'
-                  when im.doc_id % 12 in (1, 3, 4, 6) then 'jpeg'
-                  when im.doc_id % 12 in (2, 5) then 'gif'
-                  when im.doc_id % 12 in (7, 8) then 'bmp'
-                  when im.doc_id % 12 in (9, 10) then 'tiff'
-                  else 'unknown' end as fmt,
-             cast(case when im.doc_id % 12 <= 3 or im.doc_id % 12 in (7, 9)
-                  then 1 else 0 end as bigint) as ok,
-             cast(coalesce(p.s, j.s, g.s, r.s, bm.s, tf.s, -1) as bigint)
+      with {sums}
+      select d.doc_id,
+             case d.doc_id % {_AUDIT_MOD} {fmt} else 'unknown' end as fmt,
+             cast(d.doc_id % {_AUDIT_MOD} in ({", ".join(map(str, ok))})
+                  as bigint) as ok,
+             cast(coalesce({", ".join(f"s{m}.s" for m in ok)}, -1) as bigint)
                as px_sum
-      from imgs im
-      left join psums p on p.doc_id = im.doc_id
-      left join jsums j on j.doc_id = im.doc_id
-      left join gsums g on g.doc_id = im.doc_id
-      left join rsums r on r.doc_id = im.doc_id
-      left join bsums bm on bm.doc_id = im.doc_id
-      left join tsums tf on tf.doc_id = im.doc_id
-      order by im.doc_id
+      from {docs} d
+      {" ".join(f"left join s{m} on s{m}.doc_id = d.doc_id" for m in ok)}
+      order by d.doc_id
     """
 
 
-# --- perceptual NEAR-dup: hamming-banded LSH over the 64-bit dHash ----------
+# --- perceptual NEAR-dup: hamming-banded LSH over the 64-bit dHash -----------
 #
 # pixel_phash groups EXACT hash equality; real perceptual dedup needs
 # hamming-radius matching.  Pigeonhole banding makes it join-shaped: split
@@ -1199,6 +1015,7 @@ def pixel_decode_audit_oracle_sql(docs: str = "documents") -> str:
 
 NEARDUP_VARIANTS = 5      # doc_id % 5 selects the perturbation strength
 NEARDUP_HAM_MAX = 3       # 4 bands of 16 bits guarantee recall at <= 3
+_NEARDUP_ZZ = 9           # the perturbed coefficient: block 0's zigzag 9
 
 
 def synth_jpeg_neardup_coeffs(doc_id: int):
@@ -1210,39 +1027,12 @@ def synth_jpeg_neardup_coeffs(doc_id: int):
     near-dups (<= 3), band-candidates that the exact filter rejects
     (> 3), and singletons — every branch of the operator is live."""
     w, h, blocks = synth_jpeg_coeffs(doc_id)
-    blocks[0][9] += doc_id % NEARDUP_VARIANTS
+    blocks[0][_NEARDUP_ZZ] += doc_id % NEARDUP_VARIANTS
     return w, h, blocks
 
 
-def _jneardup_synth_batch(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft import jpegops
-
-    for pdf in batches:
-        ids = [int(d) for d in pdf["doc_id"]]
-        yield pd.DataFrame({
-            "doc_id": ids,
-            "jpeg": [jpegops.encode_jpeg_gray_coeffs(
-                *synth_jpeg_neardup_coeffs(d)) for d in ids],
-        })
-
-
-_NHASH_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("phash", StringType()),
-])
-
-
-def _jnhash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.jpegops import decode_jpeg_luma
-
-    for pdf in batches:
-        out = {"doc_id": [], "phash": []}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["jpeg"]):
-            w, h, _, px = decode_jpeg_luma(bytes(blob))
-            out["doc_id"].append(int(doc_id))
-            out["phash"].append(dhash_gray(w, h, px))
-        yield pd.DataFrame(out)
+def _neardup_jpeg(doc_id: int) -> bytes:
+    return jpegops.encode_jpeg_gray_coeffs(*synth_jpeg_neardup_coeffs(doc_id))
 
 
 def _band_val(i: int, col: str = "phash"):
@@ -1271,9 +1061,9 @@ def pixel_neardup(spark, sf_dir: str) -> DataFrame:
     doc_id among self + near neighbors — the standard non-transitive LSH
     dedup decision; connected-component closure is dedup_clusters'
     separately-gated job), dup."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    hashes = (docs.mapInPandas(_jneardup_synth_batch, _JPEG_SCHEMA)
-              .mapInPandas(_jnhash_batch, _NHASH_SCHEMA)
+    hashes = (_decode_dhash(_corpus(spark, sf_dir, _neardup_jpeg, "jpeg"),
+                            jpegops.decode_jpeg_luma, "jpeg")
+              .select("doc_id", "phash")
               .localCheckpoint())
     bands = hashes.select(
         "doc_id",
@@ -1324,52 +1114,16 @@ def pixel_neardup(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def _jpix_neardup_sql(x: str, y: str) -> str:
-    """The decoded-pixel formula of ``_jpix_sql`` with the near-dup
-    perturbation: block 0's A9 coefficient gains ``v`` (requires ``b``,
-    ``w``, ``v`` in scope)."""
-    nb = f"((({y}) // 8) * ((w + 7) // 8) + (({x}) // 8))"
-    xr, yr = f"(({x}) % 8)", f"(({y}) % 8)"
-    a9 = (f"({_J_A9.format(b='b', nb=nb)}"
-          f" + (case when {nb} = 0 then v else 0 end))")
-    val = (
-        f"({_J_DC.format(b='b', nb=nb)} * 8386816"
-        f" + {_J_A1.format(b='b', nb=nb)} * 11 * ({_T1_SQL}[{xr} + 1]) * 724"
-        f" + {_J_A2.format(b='b', nb=nb)} * 12 * 724 * ({_T1_SQL}[{yr} + 1])"
-        f" + {a9} * 14 * 724 * ({_T3_SQL}[{yr} + 1])"
-        ")"
-    )
-    return (f"greatest(0, least(255, cast(floor(({val} + 2097152)"
-            " / 4194304.0) as bigint) + 128))")
-
-
 def pixel_neardup_oracle_sql(docs: str = "documents") -> str:
     """Everything restated relationally from the perturbed coefficient
     formulas: dHash row bytes from closed-form pixels, the same 4x16-bit
     banding, the same exact-hamming filter (xor + bit_count on row
     bytes), the same min-neighbor keeper — no JPEG bytes anywhere."""
-    samp = _jpix_neardup_sql("(gx * w) // 9", "(gy * h) // 8")
-    samp1 = _jpix_neardup_sql("((gx + 1) * w) // 9", "(gy * h) // 8")
+    jpeg = _TIERS["jpeg"]
+    imgs = jpeg.imgs_sql(docs, f", doc_id % {NEARDUP_VARIANTS} as v")
     return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_PW} as w, {_PH} as h,
-               doc_id % {NEARDUP_VARIANTS} as v
-        from {docs}
-      ),
-      bits as (
-        select im.doc_id, ti.gy as row,
-               sum(case when ({samp}) > ({samp1})
-                   then 1 << tj.gx else 0 end) as rowbyte
-        from imgs im, unnest(range(0, 8)) as ti(gy),
-             unnest(range(0, 8)) as tj(gx)
-        group by im.doc_id, ti.gy
-      ),
-      hashes as (
-        select doc_id,
-               string_agg(printf('%02x', cast(rowbyte as int)),
-                          '' order by row) as phash
-        from bits group by doc_id
-      ),
+      with imgs as ({imgs}),
+      {_dhash_ctes(partial(jpeg.px, _B, _W, bump=_Sql("v")))},
       bands as (
         select doc_id, row // 2 as band,
                sum(rowbyte * case when row % 2 = 0 then 256 else 1 end)
@@ -1410,467 +1164,7 @@ def pixel_neardup_oracle_sql(docs: str = "documents") -> str:
     """
 
 
-# --- progressive-JPEG tier (round 5): multi-scan SOF2 under the same gate -----
-#
-# Progressive is the dominant non-baseline JPEG variant in a real crawl;
-# jpegops decodes it for real (spectral selection + successive
-# approximation) as of round 5.  The gated corpus uses DISTINCT formula
-# constants from the baseline-JPEG tier (anti-copy-paste, same convention
-# as the PNG/GIF split) and LARGER AC magnitudes so every scan kind in
-# the libjpeg-style default script carries content: first-pass AC at
-# Al=2 (|a1| up to 9 -> nonzero), refinement correction bits, cross-block
-# EOB runs (blocks whose band is empty at coarse precision), and ZRL (the
-# 30-gap between zigzag 9 and 40 inside the 6..63 band).  The oracle
-# restates pixels from the coefficient formulas + the IDCT contract — the
-# same pixels regardless of carrier, so the whole multi-scan chain is
-# pinned by value.
-
-_P_DC = "((({b} * 7 + {nb} * 5) % 45) - 22)"
-_P_A1 = "((({b} * 2 + {nb} * 3) % 19) - 9)"
-_P_A2 = "((({b} * 3 + {nb}) % 17) - 8)"
-_P_A9 = "((({b} + {nb} * 2) % 15) - 7)"
-_P_A40 = "((({b} * 5 + {nb}) % 9) - 4)"
-_T5_SQL = "([569, -1004, 200, 851, -851, -200, 1004, -569])"
-
-
-def synth_prog_coeffs(doc_id: int):
-    """(w, h, zigzag blocks) for the progressive-tier synthetic JPEG.
-    Natural positions: zigzag 1 -> (0,1) Q=11, 2 -> (1,0) Q=12,
-    9 -> (3,0) Q=14, 40 -> (3,5) Q=87."""
-    base, w, h = synth_dims(doc_id)
-    bw, bh = (w + 7) // 8, (h + 7) // 8
-    blocks = []
-    for nb in range(bw * bh):
-        zz = [0] * 64
-        zz[0] = ((base * 7 + nb * 5) % 45) - 22
-        zz[1] = ((base * 2 + nb * 3) % 19) - 9
-        zz[2] = ((base * 3 + nb) % 17) - 8
-        zz[9] = ((base + nb * 2) % 15) - 7
-        zz[40] = ((base * 5 + nb) % 9) - 4
-        blocks.append(zz)
-    return w, h, blocks
-
-
-def synth_prog_jpeg(doc_id: int) -> bytes:
-    from htmlgraft import jpegops
-
-    w, h, blocks = synth_prog_coeffs(doc_id)
-    return jpegops.encode_jpeg_gray_coeffs_progressive(w, h, blocks)
-
-
-def prog_pixel(doc_id: int, x: int, y: int) -> int:
-    """Closed-form decoded pixel — the Python twin of ``_ppix_sql``."""
-    from htmlgraft.jpegops import IDCT_T
-
-    base, w, h = synth_dims(doc_id)
-    bw = (w + 7) // 8
-    nb = (y // 8) * bw + (x // 8)
-    xr, yr = x % 8, y % 8
-    dcq = ((base * 7 + nb * 5) % 45) - 22
-    a1 = ((base * 2 + nb * 3) % 19) - 9
-    a2 = ((base * 3 + nb) % 17) - 8
-    a9 = ((base + nb * 2) % 15) - 7
-    a40 = ((base * 5 + nb) % 9) - 4
-    val = (dcq * 16 * 724 * 724
-           + a1 * 11 * IDCT_T[1][xr] * 724
-           + a2 * 12 * 724 * IDCT_T[1][yr]
-           + a9 * 14 * 724 * IDCT_T[3][yr]
-           + a40 * 87 * IDCT_T[5][xr] * IDCT_T[3][yr])
-    return max(0, min(255, ((val + (1 << 21)) >> 22) + 128))
-
-
-def _ppix_sql(x: str, y: str) -> str:
-    """SQL for the progressive-tier decoded pixel (needs ``b``/``w``)."""
-    nb = f"((({y}) // 8) * ((w + 7) // 8) + (({x}) // 8))"
-    xr, yr = f"(({x}) % 8)", f"(({y}) % 8)"
-    val = (
-        f"({_P_DC.format(b='b', nb=nb)} * 8386816"
-        f" + {_P_A1.format(b='b', nb=nb)} * 11 * ({_T1_SQL}[{xr} + 1]) * 724"
-        f" + {_P_A2.format(b='b', nb=nb)} * 12 * 724 * ({_T1_SQL}[{yr} + 1])"
-        f" + {_P_A9.format(b='b', nb=nb)} * 14 * 724 * ({_T3_SQL}[{yr} + 1])"
-        f" + {_P_A40.format(b='b', nb=nb)} * 87 * ({_T5_SQL}[{xr} + 1])"
-        f" * ({_T3_SQL}[{yr} + 1])"
-        ")"
-    )
-    return (f"greatest(0, least(255, cast(floor(({val} + 2097152)"
-            " / 4194304.0) as bigint) + 128))")
-
-
-def _prog_synth_batch(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = [int(d) for d in pdf["doc_id"]]
-        yield pd.DataFrame({
-            "doc_id": ids,
-            "jpeg": [synth_prog_jpeg(d) for d in ids],
-        })
-
-
-def prog_corpus(spark, sf_dir: str) -> DataFrame:
-    """Deterministic real progressive-JPEG corpus keyed by doc_id."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_prog_synth_batch, _JPEG_SCHEMA)
-
-
-def pixel_phash_prog(spark, sf_dir: str) -> DataFrame:
-    """Gated query: progressive (SOF2) encode -> full multi-scan decode
-    (DC first/refine, AC spectral bands, successive-approximation
-    refinement, EOB runs, ZRL) -> dHash -> hash-group keeper.  Same
-    map-only + bounded-window shape as the baseline-JPEG tier."""
-    decoded = prog_corpus(spark, sf_dir).mapInPandas(
-        _jphash_batch, _PHASH_SCHEMA)
-    grp = Window.partitionBy("phash")
-    return (
-        decoded
-        .withColumn("keeper", F.min("doc_id").over(grp))
-        .withColumn(
-            "dup", (F.col("doc_id") != F.col("keeper")).cast("long"))
-        .orderBy("doc_id")
-    )
-
-
-def pixel_phash_prog_oracle_sql(docs: str = "documents") -> str:
-    """Pixels restated from the progressive-tier coefficient formulas +
-    the IDCT contract — no JPEG bytes in SQL; every scan of the
-    progressive chain must reconstruct the exact coefficients to hash
-    equal."""
-    pix = _ppix_sql("x", "y")
-    samp = _ppix_sql("(gx * w) // 9", "(gy * h) // 8")
-    samp1 = _ppix_sql("((gx + 1) * w) // 9", "(gy * h) // 8")
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_PW} as w, {_PH} as h from {docs}
-      ),
-      sums as (
-        select im.doc_id, sum({pix}) as px_sum
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        group by im.doc_id
-      ),
-      bits as (
-        select im.doc_id, ti.gy as row,
-               sum(case when ({samp}) > ({samp1})
-                   then 1 << tj.gx else 0 end) as rowbyte
-        from imgs im, unnest(range(0, 8)) as ti(gy),
-             unnest(range(0, 8)) as tj(gx)
-        group by im.doc_id, ti.gy
-      ),
-      hashes as (
-        select doc_id,
-               string_agg(printf('%02x', cast(rowbyte as int)),
-                          '' order by row) as phash
-        from bits group by doc_id
-      )
-      select im.doc_id, cast(im.w as bigint) as width,
-             cast(im.h as bigint) as height,
-             cast(s.px_sum as bigint) as px_sum, hh.phash,
-             cast(min(im.doc_id) over (partition by hh.phash) as bigint)
-               as keeper,
-             cast(case when im.doc_id <> min(im.doc_id)
-                    over (partition by hh.phash) then 1 else 0 end as bigint)
-               as dup
-      from imgs im
-      join sums s on s.doc_id = im.doc_id
-      join hashes hh on hh.doc_id = im.doc_id
-      order by im.doc_id
-    """
-
-
-# --- BMP tier: real uncompressed DIB codec (bmpops.py), round 5 --------------
-#
-# BMP needs no entropy coding, so this tier's value is in the CONTAINER
-# corners hostile crawls hit: 4-byte row padding (the width range covers
-# all four mod-4 classes), bottom-up vs top-down row order (negative
-# height), 8-bit palette vs 24-bit BGR carriers.  The 24-bit channels are
-# (L+2, L, L-4) — exact under the integer luma transform, but a BGR/RGB
-# channel-order slip shifts luma by 1, so byte order is value-pinned.
-# A DISTINCT pixel formula (43/9/3 mod 241, +4 offset) from the other
-# tiers so a formula copy-paste slip in any oracle mismatches.
-
-_BMW = f"(13 + ({_BASE} * 5) % 21)"    # 13..33 (all mod-4 padding classes)
-_BMH = f"(9 + ({_BASE} * 3) % 13)"     # 9..21
-_BMPIX = "(4 + ({b} * 43 + {x} * 9 + {y} * 3) % 241)"
-
-
-def _bpix(base: int, x: int, y: int) -> int:
-    return 4 + (base * 43 + x * 9 + y * 3) % 241
-
-
-def synth_bmp_pixels(doc_id: int):
-    """(width, height, greyscale bytes) for the BMP-tier image of doc_id."""
-    base = doc_id % PHASH_BASES
-    w, h = 13 + (base * 5) % 21, 9 + (base * 3) % 13
-    return w, h, bytes(_bpix(base, x, y) for y in range(h) for x in range(w))
-
-
-def synth_bmp(doc_id: int) -> bytes:
-    """Real BMP bytes: odd doc_ids carry 24-bit BGR with the exact-luma
-    channel split, even doc_ids the 8-bit greyscale palette; every third
-    doc is stored top-down — all under one carrier-blind oracle."""
-    from htmlgraft.bmpops import encode_bmp
-
-    w, h, lum = synth_bmp_pixels(doc_id)
-    top_down = doc_id % 3 == 0
-    if doc_id % 2:
-        rgb = b"".join(bytes((v + 2, v, v - 4)) for v in lum)
-        return encode_bmp(w, h, rgb, bits=24, top_down=top_down)
-    return encode_bmp(w, h, lum, bits=8, top_down=top_down)
-
-
-_BMP_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("bmp", BinaryType()),
-])
-
-
-def _bmp_synth_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = [int(d) for d in pdf["doc_id"]]
-        yield pd.DataFrame({
-            "doc_id": ids,
-            "bmp": [synth_bmp(d) for d in ids],
-        })
-
-
-def bmp_corpus(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_bmp_synth_batch, _BMP_SCHEMA)
-
-
-def _bphash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.bmpops import decode_bmp_pixels
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "phash")}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["bmp"]):
-            w, h, bpp, px = decode_bmp_pixels(bytes(blob))
-            assert bpp == 1
-            out["doc_id"].append(int(doc_id))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["px_sum"].append(sum(px))
-            out["phash"].append(dhash_gray(w, h, px))
-        yield pd.DataFrame(out)
-
-
-def pixel_phash_bmp(spark, sf_dir: str) -> DataFrame:
-    """Gated query: encode real BMPs (both bit depths, both row orders,
-    live row padding) -> decode the actual bytes -> dHash -> hash-group
-    keeper.  The oracle recomputes pixels from the closed-form formula,
-    carrier-blind, so a slip in padding arithmetic, row-order
-    normalization, palette lookup, or BGR channel order shows up as a
-    value mismatch."""
-    decoded = bmp_corpus(spark, sf_dir).mapInPandas(
-        _bphash_batch, _PHASH_SCHEMA)
-    grp = Window.partitionBy("phash")
-    return (
-        decoded
-        .withColumn("keeper", F.min("doc_id").over(grp))
-        .withColumn(
-            "dup", (F.col("doc_id") != F.col("keeper")).cast("long"))
-        .orderBy("doc_id")
-    )
-
-
-def pixel_phash_bmp_oracle_sql(docs: str = "documents") -> str:
-    """The BMP-tier pixel plane, sum, and dHash restated straight from
-    the synthesis formula — no BMP bytes anywhere, so padding / row
-    order / palette / channel order are pinned by value."""
-    g = "(4 + (b * 43 + {x} * 9 + {y} * 3) % 241)"
-    samp = g.format(x="(gx * w) // 9", y="(gy * h) // 8")
-    samp1 = g.format(x="((gx + 1) * w) // 9", y="(gy * h) // 8")
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_BMW} as w, {_BMH} as h from {docs}
-      ),
-      sums as (
-        select im.doc_id, sum({g.format(x="x", y="y")}) as px_sum
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        group by im.doc_id
-      ),
-      bits as (
-        select im.doc_id, ti.gy as row,
-               sum(case when ({samp}) > ({samp1})
-                   then 1 << tj.gx else 0 end) as rowbyte
-        from imgs im, unnest(range(0, 8)) as ti(gy),
-             unnest(range(0, 8)) as tj(gx)
-        group by im.doc_id, ti.gy
-      ),
-      hashes as (
-        select doc_id,
-               string_agg(printf('%02x', cast(rowbyte as int)),
-                          '' order by row) as phash
-        from bits group by doc_id
-      )
-      select im.doc_id, cast(im.w as bigint) as width,
-             cast(im.h as bigint) as height,
-             cast(s.px_sum as bigint) as px_sum, hh.phash,
-             cast(min(im.doc_id) over (partition by hh.phash) as bigint)
-               as keeper,
-             cast(case when im.doc_id <> min(im.doc_id)
-                    over (partition by hh.phash) then 1 else 0 end as bigint)
-               as dup
-      from imgs im
-      join sums s on s.doc_id = im.doc_id
-      join hashes hh on hh.doc_id = im.doc_id
-      order by im.doc_id
-    """
-
-
-# --- TIFF tier: real baseline TIFF 6.0 codec (tiffops.py), round 5 -----------
-#
-# TIFF's hostile-crawl corners differ from BMP's: TWO byte orders for
-# every header/IFD/value field ('II' vs 'MM'), pixel data split across
-# STRIPS whose offsets/counts live in external value arrays, and a
-# photometric POLARITY axis (WhiteIsZero stores the inverted plane).
-# The synthetic carriers sweep all three axes plus RGB-vs-grey sample
-# layout under one carrier-blind oracle; the RGB channels are
-# (L+2, L, L-4) — exact under the integer luma transform, but an
-# R/B channel-order slip shifts luma by 1, so sample order is
-# value-pinned.  A DISTINCT pixel formula (53/11/7 mod 233, +6 offset)
-# from every other tier so a formula copy-paste slip in any oracle
-# mismatches.
-
-_TFW = f"(11 + ({_BASE} * 9) % 23)"    # 11..33
-_TFH = f"(8 + ({_BASE} * 5) % 15)"     # 8..22
-_TFPIX = "(6 + ({b} * 53 + {x} * 11 + {y} * 7) % 233)"
-
-
-def _tpix(base: int, x: int, y: int) -> int:
-    return 6 + (base * 53 + x * 11 + y * 7) % 233
-
-
-def synth_tiff_pixels(doc_id: int):
-    """(width, height, greyscale bytes) for the TIFF-tier image of
-    doc_id."""
-    base = doc_id % PHASH_BASES
-    w, h = 11 + (base * 9) % 23, 8 + (base * 5) % 15
-    return w, h, bytes(_tpix(base, x, y) for y in range(h) for x in range(w))
-
-
-def synth_tiff(doc_id: int) -> bytes:
-    """Real TIFF bytes sweeping the carrier axes: byte order by doc_id
-    parity, sample layout by doc_id % 3 (RGB with the exact-luma channel
-    split / grey BlackIsZero / grey WhiteIsZero inverted storage), and
-    strip granularity by doc_id % 4 (1-row strips / 5-row strips /
-    single strip) — all under one carrier-blind oracle."""
-    from htmlgraft.tiffops import encode_tiff
-
-    w, h, lum = synth_tiff_pixels(doc_id)
-    big_endian = doc_id % 2 == 1
-    rps = {0: 1, 1: 5}.get(doc_id % 4)
-    if doc_id % 3 == 0:
-        rgb = b"".join(bytes((v + 2, v, v - 4)) for v in lum)
-        return encode_tiff(w, h, rgb, rgb=True, big_endian=big_endian,
-                           rows_per_strip=rps)
-    return encode_tiff(w, h, lum, big_endian=big_endian, rows_per_strip=rps,
-                       white_is_zero=doc_id % 3 == 2)
-
-
-_TIFF_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("tiff", BinaryType()),
-])
-
-
-def _tiff_synth_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = [int(d) for d in pdf["doc_id"]]
-        yield pd.DataFrame({
-            "doc_id": ids,
-            "tiff": [synth_tiff(d) for d in ids],
-        })
-
-
-def tiff_corpus(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_tiff_synth_batch, _TIFF_SCHEMA)
-
-
-def _tphash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.tiffops import decode_tiff_pixels
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "phash")}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["tiff"]):
-            w, h, bpp, px = decode_tiff_pixels(bytes(blob))
-            assert bpp == 1
-            out["doc_id"].append(int(doc_id))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["px_sum"].append(sum(px))
-            out["phash"].append(dhash_gray(w, h, px))
-        yield pd.DataFrame(out)
-
-
-def pixel_phash_tiff(spark, sf_dir: str) -> DataFrame:
-    """Gated query: encode real TIFFs (both byte orders, three strip
-    granularities, RGB + both greyscale polarities) -> decode the actual
-    bytes -> dHash -> hash-group keeper.  The oracle recomputes pixels
-    from the closed-form formula, carrier-blind, so a slip in the IFD
-    walk, external value arrays, strip reassembly, endianness handling,
-    WhiteIsZero inversion, or RGB sample order shows up as a value
-    mismatch."""
-    decoded = tiff_corpus(spark, sf_dir).mapInPandas(
-        _tphash_batch, _PHASH_SCHEMA)
-    grp = Window.partitionBy("phash")
-    return (
-        decoded
-        .withColumn("keeper", F.min("doc_id").over(grp))
-        .withColumn(
-            "dup", (F.col("doc_id") != F.col("keeper")).cast("long"))
-        .orderBy("doc_id")
-    )
-
-
-def pixel_phash_tiff_oracle_sql(docs: str = "documents") -> str:
-    """The TIFF-tier pixel plane, sum, and dHash restated straight from
-    the synthesis formula — no TIFF bytes anywhere, so endianness /
-    strips / polarity / sample order are pinned by value."""
-    g = "(6 + (b * 53 + {x} * 11 + {y} * 7) % 233)"
-    samp = g.format(x="(gx * w) // 9", y="(gy * h) // 8")
-    samp1 = g.format(x="((gx + 1) * w) // 9", y="(gy * h) // 8")
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_TFW} as w, {_TFH} as h from {docs}
-      ),
-      sums as (
-        select im.doc_id, sum({g.format(x="x", y="y")}) as px_sum
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        group by im.doc_id
-      ),
-      bits as (
-        select im.doc_id, ti.gy as row,
-               sum(case when ({samp}) > ({samp1})
-                   then 1 << tj.gx else 0 end) as rowbyte
-        from imgs im, unnest(range(0, 8)) as ti(gy),
-             unnest(range(0, 8)) as tj(gx)
-        group by im.doc_id, ti.gy
-      ),
-      hashes as (
-        select doc_id,
-               string_agg(printf('%02x', cast(rowbyte as int)),
-                          '' order by row) as phash
-        from bits group by doc_id
-      )
-      select im.doc_id, cast(im.w as bigint) as width,
-             cast(im.h as bigint) as height,
-             cast(s.px_sum as bigint) as px_sum, hh.phash,
-             cast(min(im.doc_id) over (partition by hh.phash) as bigint)
-               as keeper,
-             cast(case when im.doc_id <> min(im.doc_id)
-                    over (partition by hh.phash) then 1 else 0 end as bigint)
-               as dup
-      from imgs im
-      join sums s on s.doc_id = im.doc_id
-      join hashes hh on hh.doc_id = im.doc_id
-      order by im.doc_id
-    """
-
-
-# --- EXIF/TIFF orientation-normalized perceptual dedup (round 5) --------------
+# --- EXIF/TIFF orientation-normalized perceptual dedup -----------------------
 #
 # Real crawls carry rotated duplicates: cameras store sensor-native
 # planes and set Orientation (tag 274) instead of rotating pixels, so a
@@ -1887,20 +1181,15 @@ def pixel_phash_tiff_oracle_sql(docs: str = "documents") -> str:
 # the plane is non-monotone and dHash is discriminative (a monotone
 # gradient hashes to all-zero bits in every orientation).
 
-_ORW = f"(10 + ({_BASE} * 7) % 19)"    # 10..28
-_ORH = f"(9 + ({_BASE} * 4) % 11)"     # 9..19
-
-
-def _opix(base: int, x: int, y: int) -> int:
-    return 9 + (base * 59 + x * 89 + y * 41) % 227
+# a formula family outside the phash table: its decode also reads the tag
+_ORIENT = _Tier("orient", "tiff", (), ((10, 7, 19), (9, 4, 11)),
+                (59, 89, 41, 227, 9), None, None)
 
 
 def synth_orient_canonical(doc_id: int):
     """(width, height, canonical upright plane) for doc_id's scene —
     orientation-independent (the same for all 8 carriers of a base)."""
-    base = doc_id % PHASH_BASES
-    w, h = 10 + (base * 7) % 19, 9 + (base * 4) % 11
-    return w, h, bytes(_opix(base, x, y) for y in range(h) for x in range(w))
+    return _ORIENT.plane(doc_id)
 
 
 def synth_orient_tiff(doc_id: int) -> bytes:
@@ -1908,58 +1197,25 @@ def synth_orient_tiff(doc_id: int) -> bytes:
     pre-permuted for orientation 1 + doc_id % 8, carrying that code in
     tag 274 — normalizing by the tag recovers the canonical plane
     exactly."""
-    from htmlgraft.tiffops import encode_tiff, orient_map
-
     w, h, canon = synth_orient_canonical(doc_id)
     o = 1 + doc_id % 8
     sw, sh = (h, w) if o >= 5 else (w, h)
     stored = bytearray(sw * sh)
     for sy in range(sh):
         for sx in range(sw):
-            cx, cy, cw, _ch = orient_map(o, sw, sh, sx, sy)
+            cx, cy, cw, _ch = tiffops.orient_map(o, sw, sh, sx, sy)
             assert cw == w
             stored[sy * sw + sx] = canon[cy * w + cx]
-    return encode_tiff(sw, sh, bytes(stored), orientation=o,
-                       big_endian=doc_id % 2 == 1)
+    return tiffops.encode_tiff(sw, sh, bytes(stored), orientation=o,
+                               big_endian=doc_id % 2 == 1)
 
 
-_ORIENT_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("ori", LongType()),
-    StructField("stored_w", LongType()),
-    StructField("stored_h", LongType()),
-    StructField("width", LongType()),
-    StructField("height", LongType()),
-    StructField("px_sum", LongType()),
-    StructField("phash", StringType()),
-])
-
-
-def _orient_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.tiffops import (
-        apply_orientation,
-        decode_tiff_pixels,
-        read_orientation,
-    )
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "ori", "stored_w", "stored_h",
-                               "width", "height", "px_sum", "phash")}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            blob = synth_orient_tiff(d)
-            sw, sh, _, stored = decode_tiff_pixels(blob)
-            o = read_orientation(blob)
-            w, h, px = apply_orientation(sw, sh, stored, o)
-            out["doc_id"].append(d)
-            out["ori"].append(o)
-            out["stored_w"].append(sw)
-            out["stored_h"].append(sh)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["px_sum"].append(sum(px))
-            out["phash"].append(dhash_gray(w, h, px))
-        yield pd.DataFrame(out)
+def _orient_row(doc_id: int):
+    blob = synth_orient_tiff(doc_id)
+    sw, sh, _, stored = tiffops.decode_tiff_pixels(blob)
+    o = tiffops.read_orientation(blob)
+    w, h, px = tiffops.apply_orientation(sw, sh, stored, o)
+    return doc_id, o, sw, sh, w, h, sum(px), dhash_gray(w, h, px)
 
 
 def pixel_orient(spark, sf_dir: str) -> DataFrame:
@@ -1969,158 +1225,92 @@ def pixel_orient(spark, sf_dir: str) -> DataFrame:
     keeps keeper/dup orientation-blind), and the canonical dims/dHash
     are restated from the formula — a wrong transform, a swapped axis,
     or an ignored tag mismatches.  Map-only + the bounded hash window."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    decoded = docs.mapInPandas(_orient_batch, _ORIENT_SCHEMA)
-    grp = Window.partitionBy("phash")
-    return (
-        decoded
-        .withColumn("keeper", F.min("doc_id").over(grp))
-        .withColumn(
-            "dup", (F.col("doc_id") != F.col("keeper")).cast("long"))
-        .orderBy("doc_id")
-    )
+    return _keep_min(_map_docs(
+        spark, sf_dir, _orient_row,
+        "doc_id long, ori long, stored_w long, stored_h long, width long,"
+        " height long, px_sum long, phash string"))
 
 
 def pixel_orient_oracle_sql(docs: str = "documents") -> str:
     """Canonical plane, dims, and dHash restated from the formula,
     orientation-blind; stored dims transpose for codes 5-8; keeper =
     min doc_id over the scene's dHash group."""
-    g = "(9 + (b * 59 + {x} * 89 + {y} * 41) % 227)"
-    samp = g.format(x="(gx * w) // 9", y="(gy * h) // 8")
-    samp1 = g.format(x="((gx + 1) * w) // 9", y="(gy * h) // 8")
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_ORW} as w, {_ORH} as h,
-               1 + doc_id % 8 as ori
-        from {docs}
-      ),
-      sums as (
-        select im.doc_id, sum({g.format(x="x", y="y")}) as px_sum
-        from imgs im, unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        group by im.doc_id
-      ),
-      bits as (
-        select im.doc_id, ti.gy as row,
-               sum(case when ({samp}) > ({samp1})
-                   then 1 << tj.gx else 0 end) as rowbyte
-        from imgs im, unnest(range(0, 8)) as ti(gy),
-             unnest(range(0, 8)) as tj(gx)
-        group by im.doc_id, ti.gy
-      ),
-      hashes as (
-        select doc_id,
-               string_agg(printf('%02x', cast(rowbyte as int)),
-                          '' order by row) as phash
-        from bits group by doc_id
-      )
-      select im.doc_id, cast(im.ori as bigint) as ori,
+    return _phash_oracle_sql(
+        _ORIENT.imgs_sql(docs, ", 1 + doc_id % 8 as ori"),
+        partial(_ORIENT.px, _B, _W), lead="""
+             cast(im.ori as bigint) as ori,
              cast(case when im.ori >= 5 then im.h else im.w end as bigint)
                as stored_w,
              cast(case when im.ori >= 5 then im.w else im.h end as bigint)
-               as stored_h,
-             cast(im.w as bigint) as width,
-             cast(im.h as bigint) as height,
-             cast(s.px_sum as bigint) as px_sum, hh.phash,
-             cast(min(im.doc_id) over (partition by hh.phash) as bigint)
-               as keeper,
-             cast(case when im.doc_id <> min(im.doc_id)
-                    over (partition by hh.phash) then 1 else 0 end as bigint)
-               as dup
-      from imgs im
-      join sums s on s.doc_id = im.doc_id
-      join hashes hh on hh.doc_id = im.doc_id
-      order by im.doc_id
-    """
+               as stored_h,""")
 
 
-# --- animated GIF tier (round 5): multi-frame decode --------------------------
+# --- animation tiers: animated GIF and APNG ----------------------------------
 #
 # A large share of crawled GIF bytes are animations; a pipeline that
 # sees only frame 0 under-counts pixels and mis-keys perceptual dedup.
-# The corpus varies frame count (2..5), per-frame centisecond delays,
-# and the NETSCAPE loop count, with odd frame indexes interlaced —
-# carrier-blind oracle over the per-frame formula
-# (b*61 + x*17 + y*7 + k*29) % 223 (distinct from every other tier).
+# Both corpora vary frame count, per-frame delays and the loop/play
+# count over a per-frame formula distinct from every other tier; GIF's
+# odd frame indexes are interlaced.  One oracle restates frame sums via
+# a correlated triple unnest over (k, x, y), delays and loop/play count
+# arithmetically — carrier-blind, so frame iteration, extension parsing
+# and per-frame decode are value-pinned.
 
-_AGW = f"(9 + ({_BASE} * 6) % 17)"     # 9..25
-_AGH = f"(8 + ({_BASE} * 3) % 9)"      # 8..16
+class _Anim(NamedTuple):
+    dims: tuple         # (offset, mul, mod) of width, then of height
+    pix: tuple          # linear spec with the frame term mul_k
+    n_frames: Callable  # doc_id -> frame count (ints or _Sql)
+    delay: Callable     # (doc_id, k) -> frame k's delay
+    meta: Callable      # doc_id -> GIF loop count / APNG play count
 
 
-def _agpix(base: int, k: int, x: int, y: int) -> int:
-    return (base * 61 + x * 17 + y * 7 + k * 29) % 223
+_GIF_ANIM = _Anim(((9, 6, 17), (8, 3, 9)), (61, 17, 7, 223, 0, 29),
+                  lambda d: 2 + d % 4, lambda d, k: 4 + (d + k) % 11,
+                  lambda d: d % 3)
+_APNG = _Anim(((8, 5, 13), (7, 2, 9)), (73, 29, 13, 199, 8, 37),
+              lambda d: 2 + d % 3, lambda d, k: 2 + (d + k) % 9,
+              lambda d: d % 4)
+
+
+def _anim_frames(a: _Anim, doc_id: int):
+    base = doc_id % PHASH_BASES
+    w, h = _dim(a.dims[0], base), _dim(a.dims[1], base)
+    nf = a.n_frames(doc_id)
+    frames = [bytes(_lin(a.pix, base, x, y, k)
+                    for y in range(h) for x in range(w)) for k in range(nf)]
+    return (w, h, nf, [a.delay(doc_id, k) for k in range(nf)],
+            a.meta(doc_id), frames)
 
 
 def synth_gif_anim(doc_id: int):
     """(width, height, n_frames, delays, loop, frame planes) for the
     animated-GIF tier of doc_id."""
-    base = doc_id % PHASH_BASES
-    w, h = 9 + (base * 6) % 17, 8 + (base * 3) % 9
-    nf = 2 + doc_id % 4
-    delays = [4 + (doc_id + k) % 11 for k in range(nf)]
-    loop = doc_id % 3
-    frames = [
-        bytes(_agpix(base, k, x, y) for y in range(h) for x in range(w))
-        for k in range(nf)
-    ]
-    return w, h, nf, delays, loop, frames
+    return _anim_frames(_GIF_ANIM, doc_id)
 
 
-_ANIM_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("width", LongType()),
-    StructField("height", LongType()),
-    StructField("n_frames", LongType()),
-    StructField("loop_cnt", LongType()),
-    StructField("total_delay_cs", LongType()),
-    StructField("px_sum", LongType()),
-    StructField("f0_sum", LongType()),
-])
+def synth_apng_frames(doc_id: int):
+    """(width, height, n_frames, (num, den) delays, plays, frame planes)
+    for the APNG tier of doc_id."""
+    w, h, nf, delays, plays, frames = _anim_frames(_APNG, doc_id)
+    return w, h, nf, [(dn, 100) for dn in delays], plays, frames
 
 
-def _anim_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.gifops import decode_gif_frames, encode_gif_anim
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "n_frames",
-                               "loop_cnt", "total_delay_cs", "px_sum",
-                               "f0_sum")}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h, nf, delays, loop, frames = synth_gif_anim(d)
-            blob = encode_gif_anim(w, h, frames, delays, loop=loop)
-            ww, hh, got_loop, got = decode_gif_frames(blob)
-            out["doc_id"].append(d)
-            out["width"].append(ww)
-            out["height"].append(hh)
-            out["n_frames"].append(len(got))
-            out["loop_cnt"].append(got_loop)
-            out["total_delay_cs"].append(sum(dl for dl, _ in got))
-            out["px_sum"].append(sum(sum(p) for _, p in got))
-            out["f0_sum"].append(sum(got[0][1]))
-        yield pd.DataFrame(out)
-
-
-def pixel_gif_anim(spark, sf_dir: str) -> DataFrame:
-    """Gated query: encode real animated GIFs (varying frame counts,
-    per-frame delays, NETSCAPE loop counts, interlaced odd frames) ->
-    decode every frame's actual LZW bytes -> per-doc frame count, loop
-    count, total delay, all-frames pixel sum, first-frame sum.  The
-    oracle restates all of it from the per-frame formula, so frame
-    iteration, extension parsing, and per-frame de-interlace are
-    value-pinned.  Map-only."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_anim_batch, _ANIM_SCHEMA).orderBy("doc_id")
-
-
-def pixel_gif_anim_oracle_sql(docs: str = "documents") -> str:
-    """Frame sums via a correlated triple unnest over (k, x, y); delays
-    and loop restated arithmetically."""
-    g = "((b * 61 + x * 17 + y * 7 + k * 29) % 223)"
+def _frames_oracle_sql(a: _Anim, docs: str, cols) -> str:
+    """Frame sums, delay sum and loop/play count of an animation tier;
+    ``cols`` maps output names to ``w``, ``h``, ``nf``, ``meta``,
+    ``delays``, ``all`` or ``f0``."""
+    k = _Sql("k")
+    g = _lin(a.pix, _B, _Sql("x"), _Sql("y"), k)
+    src = {"w": "im.w", "h": "im.h", "nf": "im.nf", "delays": "d.total",
+           "meta": a.meta(_Sql("im.doc_id")), "all": "s.all_sum",
+           "f0": "s.f0"}
+    out = ",\n             ".join(f"cast({src[v]} as bigint) as {n}"
+                                  for n, v in cols.items())
     return f"""
       with imgs as (
-        select doc_id, {_BASE} as b, {_AGW} as w, {_AGH} as h,
-               2 + doc_id % 4 as nf
+        select doc_id, {_BASE} as b, {_dim(a.dims[0], _BASE)} as w,
+               {_dim(a.dims[1], _BASE)} as h,
+               {a.n_frames(_Sql("doc_id"))} as nf
         from {docs}
       ),
       sums as (
@@ -2134,17 +1324,12 @@ def pixel_gif_anim_oracle_sql(docs: str = "documents") -> str:
         group by im.doc_id
       ),
       delays as (
-        select im.doc_id, sum(4 + (im.doc_id + k) % 11) as total
+        select im.doc_id, sum({a.delay(_Sql("im.doc_id"), k)}) as total
         from imgs im, unnest(range(0, nf)) as tk(k)
         group by im.doc_id
       )
-      select im.doc_id, cast(im.w as bigint) as width,
-             cast(im.h as bigint) as height,
-             cast(im.nf as bigint) as n_frames,
-             cast(im.doc_id % 3 as bigint) as loop_cnt,
-             cast(d.total as bigint) as total_delay_cs,
-             cast(s.all_sum as bigint) as px_sum,
-             cast(s.f0 as bigint) as f0_sum
+      select im.doc_id,
+             {out}
       from imgs im
       join sums s on s.doc_id = im.doc_id
       join delays d on d.doc_id = im.doc_id
@@ -2152,113 +1337,33 @@ def pixel_gif_anim_oracle_sql(docs: str = "documents") -> str:
     """
 
 
-# --- ICO (favicon) tier (round 5) ---------------------------------------------
-#
-# Favicons are fetched for effectively every crawled host; the ICO
-# container mixes PNG members with doubled-height DIB members (XOR plane
-# + AND mask) in one file — icoops.py.  Distinct formulas per member
-# kind (67/19/11 mod 229 + 5 for the DIB, 71/23/3 mod 211 + 7 for the
-# PNG) so a member-dispatch slip mismatches.
-
-_ICW1 = f"(9 + ({_BASE} * 5) % 15)"    # DIB member dims 9..23
-_ICH1 = f"(7 + ({_BASE} * 3) % 11)"
-_ICW2 = f"(10 + ({_BASE} * 7) % 13)"   # PNG member dims 10..22
-_ICH2 = f"(8 + ({_BASE} * 5) % 9)"
+def _gif_anim_row(doc_id: int):
+    w, h, _nf, delays, loop, frames = synth_gif_anim(doc_id)
+    ww, hh, got_loop, got = gifops.decode_gif_frames(
+        gifops.encode_gif_anim(w, h, frames, delays, loop=loop))
+    return (doc_id, ww, hh, len(got), got_loop, sum(dl for dl, _ in got),
+            sum(sum(p) for _, p in got), sum(got[0][1]))
 
 
-def synth_ico(doc_id: int) -> bytes:
-    """Real two-member ICO: one 8-bit DIB (doubled-height header, grey
-    palette, bottom-up XOR plane, AND mask) + one PNG member."""
-    from htmlgraft.icoops import encode_ico
-
-    b = doc_id % PHASH_BASES
-    w1, h1 = 9 + (b * 5) % 15, 7 + (b * 3) % 11
-    w2, h2 = 10 + (b * 7) % 13, 8 + (b * 5) % 9
-    p1 = bytes((b * 67 + x * 19 + y * 11 + 5) % 229
-               for y in range(h1) for x in range(w1))
-    p2 = bytes((b * 71 + x * 23 + y * 3 + 7) % 211
-               for y in range(h2) for x in range(w2))
-    return encode_ico([(w1, h1, "dib", p1), (w2, h2, "png", p2)])
+def pixel_gif_anim(spark, sf_dir: str) -> DataFrame:
+    """Gated query: encode real animated GIFs (varying frame counts,
+    per-frame delays, NETSCAPE loop counts, interlaced odd frames) ->
+    decode every frame's actual LZW bytes -> per-doc frame count, loop
+    count, total delay, all-frames pixel sum, first-frame sum.
+    Map-only."""
+    return _map_docs(spark, sf_dir, _gif_anim_row,
+                     "doc_id long, width long, height long, n_frames long,"
+                     " loop_cnt long, total_delay_cs long, px_sum long,"
+                     " f0_sum long").orderBy("doc_id")
 
 
-_ICO_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("n_members", LongType()),
-    StructField("dib_w", LongType()),
-    StructField("dib_h", LongType()),
-    StructField("dib_sum", LongType()),
-    StructField("png_w", LongType()),
-    StructField("png_h", LongType()),
-    StructField("png_sum", LongType()),
-])
+def pixel_gif_anim_oracle_sql(docs: str = "documents") -> str:
+    return _frames_oracle_sql(_GIF_ANIM, docs, {
+        "width": "w", "height": "h", "n_frames": "nf", "loop_cnt": "meta",
+        "total_delay_cs": "delays", "px_sum": "all", "f0_sum": "f0"})
 
 
-def _ico_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from htmlgraft.icoops import decode_ico
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "n_members", "dib_w", "dib_h",
-                               "dib_sum", "png_w", "png_h", "png_sum")}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            members = decode_ico(synth_ico(d))
-            kinds = {k: (w, h, sum(px)) for w, h, k, px in members}
-            out["doc_id"].append(d)
-            out["n_members"].append(len(members))
-            out["dib_w"].append(kinds["dib"][0])
-            out["dib_h"].append(kinds["dib"][1])
-            out["dib_sum"].append(kinds["dib"][2])
-            out["png_w"].append(kinds["png"][0])
-            out["png_h"].append(kinds["png"][1])
-            out["png_sum"].append(kinds["png"][2])
-        yield pd.DataFrame(out)
-
-
-def pixel_ico(spark, sf_dir: str) -> DataFrame:
-    """Gated query: encode real two-member ICOs -> decode every member's
-    actual bytes (doubled-height DIB with AND mask + embedded PNG) ->
-    per-doc member dims and pixel sums.  The oracle restates both
-    members from their formulas, so the directory walk, the 0-means-256
-    rule, DIB height halving, bottom-up XOR rows, and the PNG-vs-DIB
-    dispatch are value-pinned.  Map-only."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_ico_batch, _ICO_SCHEMA).orderBy("doc_id")
-
-
-def pixel_ico_oracle_sql(docs: str = "documents") -> str:
-    d = "((b * 67 + x * 19 + y * 11 + 5) % 229)"
-    p = "((b * 71 + x * 23 + y * 3 + 7) % 211)"
-    return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_ICW1} as w1, {_ICH1} as h1,
-               {_ICW2} as w2, {_ICH2} as h2
-        from {docs}
-      ),
-      dsums as (
-        select im.doc_id, sum({d}) as s
-        from imgs im, unnest(range(0, w1)) as tx(x),
-             unnest(range(0, h1)) as ty(y)
-        group by im.doc_id
-      ),
-      psums as (
-        select im.doc_id, sum({p}) as s
-        from imgs im, unnest(range(0, w2)) as tx(x),
-             unnest(range(0, h2)) as ty(y)
-        group by im.doc_id
-      )
-      select im.doc_id, cast(2 as bigint) as n_members,
-             cast(im.w1 as bigint) as dib_w, cast(im.h1 as bigint) as dib_h,
-             cast(ds.s as bigint) as dib_sum,
-             cast(im.w2 as bigint) as png_w, cast(im.h2 as bigint) as png_h,
-             cast(ps.s as bigint) as png_sum
-      from imgs im
-      join dsums ds on ds.doc_id = im.doc_id
-      join psums ps on ps.doc_id = im.doc_id
-      order by im.doc_id
-    """
-
-
-# --- APNG: animated PNG (acTL / fcTL / fdAT) ----------------------------------
+# --- APNG: animated PNG (acTL / fcTL / fdAT) ---------------------------------
 #
 # Chunk facts (public: the APNG specification, folded into the PNG
 # third-edition spec): ``acTL`` (before the first IDAT) carries u32
@@ -2266,8 +1371,10 @@ def pixel_ico_oracle_sql(docs: str = "documents") -> str:
 # (u32 sequence, u32 w, u32 h, u32 x, u32 y, u16 delay_num, u16
 # delay_den, u8 dispose, u8 blend); frame 0's pixels ride the normal
 # IDAT when its fcTL precedes IDAT, later frames ride ``fdAT`` chunks
-# (u32 sequence + deflate data).  fcTL and fdAT share ONE sequence
-# counter starting at 0 — a gap or reorder is hostile input.
+# (u32 sequence + deflate data).  An IDAT before the first fcTL is the
+# default image, not a frame: every frame then rides fdAT.  fcTL and
+# fdAT share ONE sequence counter starting at 0 — a gap or reorder is
+# hostile input.
 #
 # Scope mirrors the GIF-anim tier: full-canvas frames decode for real;
 # sub-canvas frames (needing dispose/blend compositing) raise a loud
@@ -2324,6 +1431,7 @@ def decode_apng(blob: bytes):
     idat = bytearray()
     fdat = bytearray()
     expect_seq = 0
+    idat_is_frame = None     # fixed at the first IDAT: did an fcTL precede?
 
     def _flush(data, fctl):
         sw, sh = fctl[1], fctl[2]
@@ -2359,6 +1467,8 @@ def decode_apng(blob: bytes):
                 raise ValueError("fcTL without frame data")
             pending_fctl = struct.unpack(">IIIIIHHBB", data)
         elif typ == b"IDAT":
+            if idat_is_frame is None:
+                idat_is_frame = pending_fctl is not None
             idat += data
         elif typ == b"fdAT":
             seq = struct.unpack(">I", data[:4])[0]
@@ -2373,7 +1483,7 @@ def decode_apng(blob: bytes):
         # current frame's accumulated data (IDAT for frame 0, fdAT after)
         nxt = blob[end + 4:end + 8]
         if pending_fctl is not None and nxt in (b"fcTL", b"IEND"):
-            if not frames and idat:
+            if not frames and idat_is_frame and idat:
                 _flush(idat, pending_fctl)
                 idat = bytearray()
                 pending_fctl = None
@@ -2388,53 +1498,13 @@ def decode_apng(blob: bytes):
             f"APNG frame count {len(frames)} != acTL {n_frames}")
     return w, h, plays, frames
 
-
-# APNG tier corpus: distinct formula (73/29/13/37 mod 199, +8).
-
-_APW = f"(8 + ({_BASE} * 5) % 13)"     # 8..20
-_APH = f"(7 + ({_BASE} * 2) % 9)"      # 7..15
-
-
-def synth_apng_frames(doc_id: int):
-    base = doc_id % PHASH_BASES
-    w, h = 8 + (base * 5) % 13, 7 + (base * 2) % 9
-    nf = 2 + doc_id % 3
-    delays = [(2 + (doc_id + k) % 9, 100) for k in range(nf)]
-    frames = [
-        bytes(8 + (base * 73 + x * 29 + y * 13 + k * 37) % 199
-              for y in range(h) for x in range(w))
-        for k in range(nf)
-    ]
-    return w, h, nf, delays, doc_id % 4, frames
-
-
-_APNG_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("n_frames", LongType()),
-    StructField("plays", LongType()),
-    StructField("delay_num_sum", LongType()),
-    StructField("px_sum", LongType()),
-    StructField("f0_sum", LongType()),
-])
-
-
-def _apng_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "n_frames", "plays",
-                               "delay_num_sum", "px_sum", "f0_sum")}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h, nf, delays, plays, frames = synth_apng_frames(d)
-            blob = encode_apng(w, h, frames, delays, plays=plays)
-            ww, hh, got_plays, got = decode_apng(blob)
-            assert (ww, hh) == (w, h)
-            out["doc_id"].append(d)
-            out["n_frames"].append(len(got))
-            out["plays"].append(got_plays)
-            out["delay_num_sum"].append(sum(dn for (dn, _dd), _ in got))
-            out["px_sum"].append(sum(sum(p) for _, p in got))
-            out["f0_sum"].append(sum(got[0][1]))
-        yield pd.DataFrame(out)
+def _apng_row(doc_id: int):
+    w, h, _nf, delays, plays, frames = synth_apng_frames(doc_id)
+    ww, hh, got_plays, got = decode_apng(
+        encode_apng(w, h, frames, delays, plays=plays))
+    assert (ww, hh) == (w, h)
+    return (doc_id, len(got), got_plays, sum(dn for (dn, _dd), _ in got),
+            sum(sum(p) for _, p in got), sum(got[0][1]))
 
 
 def pixel_apng(spark, sf_dir: str) -> DataFrame:
@@ -2444,40 +1514,82 @@ def pixel_apng(spark, sf_dir: str) -> DataFrame:
     and first-frame pixel sums — frame iteration, the shared fcTL/fdAT
     sequence counter, and the IDAT-is-frame-0 rule are value-pinned.
     Map-only."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_apng_batch, _APNG_SCHEMA).orderBy("doc_id")
+    return _map_docs(spark, sf_dir, _apng_row,
+                     "doc_id long, n_frames long, plays long,"
+                     " delay_num_sum long, px_sum long, f0_sum long"
+                     ).orderBy("doc_id")
 
 
 def pixel_apng_oracle_sql(docs: str = "documents") -> str:
-    g = "(8 + (b * 73 + x * 29 + y * 13 + k * 37) % 199)"
+    return _frames_oracle_sql(_APNG, docs, {
+        "n_frames": "nf", "plays": "meta", "delay_num_sum": "delays",
+        "px_sum": "all", "f0_sum": "f0"})
+
+
+# --- ICO (favicon) tier ------------------------------------------------------
+#
+# Favicons are fetched for effectively every crawled host; the ICO
+# container mixes PNG members with doubled-height DIB members (XOR plane
+# + AND mask) in one file — icoops.py.  Distinct formulas per member
+# kind so a member-dispatch slip mismatches.
+
+# (kind, dims, pixel formula over ints or _Sql) per member
+_ICO_MEMBERS = (
+    ("dib", ((9, 5, 15), (7, 3, 11)),
+     lambda b, x, y: (b * 67 + x * 19 + y * 11 + 5) % 229),
+    ("png", ((10, 7, 13), (8, 5, 9)),
+     lambda b, x, y: (b * 71 + x * 23 + y * 3 + 7) % 211),
+)
+
+
+def synth_ico(doc_id: int) -> bytes:
+    """Real two-member ICO: one 8-bit DIB (doubled-height header, grey
+    palette, bottom-up XOR plane, AND mask) + one PNG member."""
+    b = doc_id % PHASH_BASES
+    members = []
+    for kind, (dw, dh), pix in _ICO_MEMBERS:
+        w, h = _dim(dw, b), _dim(dh, b)
+        members.append((w, h, kind, bytes(
+            pix(b, x, y) for y in range(h) for x in range(w))))
+    return icoops.encode_ico(members)
+
+
+def _ico_row(doc_id: int):
+    members = icoops.decode_ico(synth_ico(doc_id))
+    kinds = {k: (w, h, sum(px)) for w, h, k, px in members}
+    return (doc_id, len(members), *kinds["dib"], *kinds["png"])
+
+
+def pixel_ico(spark, sf_dir: str) -> DataFrame:
+    """Gated query: encode real two-member ICOs -> decode every member's
+    actual bytes (doubled-height DIB with AND mask + embedded PNG) ->
+    per-doc member dims and pixel sums.  The oracle restates both
+    members from their formulas, so the directory walk, the 0-means-256
+    rule, DIB height halving, bottom-up XOR rows, and the PNG-vs-DIB
+    dispatch are value-pinned.  Map-only."""
+    return _map_docs(spark, sf_dir, _ico_row,
+                     "doc_id long, n_members long, dib_w long, dib_h long,"
+                     " dib_sum long, png_w long, png_h long, png_sum long"
+                     ).orderBy("doc_id")
+
+
+def pixel_ico_oracle_sql(docs: str = "documents") -> str:
+    dims = "".join(f", {_dim(dw, _BASE)} as {k}_w, {_dim(dh, _BASE)} as {k}_h"
+                   for k, (dw, dh), _p in _ICO_MEMBERS)
+    sums = ",\n      ".join(
+        _sum_cte(f"{k}_sums", "imgs", partial(pix, _B), f"{k}_w", f"{k}_h")
+        for k, _d, pix in _ICO_MEMBERS)
+    cols = "".join(f""",
+             cast(im.{k}_w as bigint) as {k}_w,
+             cast(im.{k}_h as bigint) as {k}_h,
+             cast({k}_sums.s as bigint) as {k}_sum"""
+                   for k, _d, _p in _ICO_MEMBERS)
+    joins = " ".join(f"join {k}_sums on {k}_sums.doc_id = im.doc_id"
+                     for k, _d, _p in _ICO_MEMBERS)
     return f"""
-      with imgs as (
-        select doc_id, {_BASE} as b, {_APW} as w, {_APH} as h,
-               2 + doc_id % 3 as nf
-        from {docs}
-      ),
-      sums as (
-        select im.doc_id,
-               sum({g}) as all_sum,
-               sum(case when k = 0 then {g} else 0 end) as f0
-        from imgs im,
-             unnest(range(0, nf)) as tk(k),
-             unnest(range(0, w)) as tx(x),
-             unnest(range(0, h)) as ty(y)
-        group by im.doc_id
-      ),
-      delays as (
-        select im.doc_id, sum(2 + (im.doc_id + k) % 9) as total
-        from imgs im, unnest(range(0, nf)) as tk(k)
-        group by im.doc_id
-      )
-      select im.doc_id, cast(im.nf as bigint) as n_frames,
-             cast(im.doc_id % 4 as bigint) as plays,
-             cast(d.total as bigint) as delay_num_sum,
-             cast(s.all_sum as bigint) as px_sum,
-             cast(s.f0 as bigint) as f0_sum
-      from imgs im
-      join sums s on s.doc_id = im.doc_id
-      join delays d on d.doc_id = im.doc_id
+      with imgs as (select doc_id, {_BASE} as b{dims} from {docs}),
+      {sums}
+      select im.doc_id, cast({len(_ICO_MEMBERS)} as bigint) as n_members{cols}
+      from imgs im {joins}
       order by im.doc_id
     """

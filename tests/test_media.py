@@ -649,7 +649,7 @@ def test_mime_lane_map_matches_oracle_table():
                 "application/x-gzip", "application/zip", "audio/mpeg",
                 None, "audio/wave"][m]
         if m == 10:
-            want = ("application/octet-stream" if d % 3 == 0
+            want = ("application/octet-stream" if (d // 12) % 2
                     else "text/plain")
         assert mime == want, (d, mime)
 
@@ -720,3 +720,11 @@ def test_parse_webp_error_lanes():
     assert media.parse_webp(bytes(bad)) is None
     # decode_header dispatches webp as an image now
     assert media.decode_header("image", good)[:2] == (69, 117)
+
+
+def test_mime_sniff_heuristic_lane_has_both_outcomes(spark, sf_dir):
+    """The heuristic lane (doc_id % 12 == 10) must emit both the binary
+    and the text outcome on the gated corpus (a flip keyed on doc_id % 3
+    never fires there: doc_id % 12 == 10 forces doc_id % 3 == 1)."""
+    methods = {r.method for r in media.mime_sniff(spark, sf_dir).collect()}
+    assert {"binary", "text"} <= methods

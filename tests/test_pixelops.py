@@ -411,3 +411,129 @@ def test_apng_synth_axes_live():
         assert frames[0] != frames[1]
     assert nfs == {2, 3, 4}
     assert plays == {0, 1, 2, 3}
+
+
+# --- oracle value pins -------------------------------------------------------
+#
+# ``test_entry`` checks each pixel query against its DuckDB oracle, so a
+# formula that drifts on BOTH sides passes it.  These digests pin the
+# oracle outputs themselves (sha256 over the name-sorted columns and the
+# sorted rows, built from plain Python ints/strs so dtypes cannot move
+# them); together with ``test_entry`` they pin the Spark outputs too.
+
+_ORACLE_DIGESTS = {
+    "sf0.001": {
+        "phash":
+            "cf69e3046e2dfb0b177837e9b534cffbfce51fc5bed04bc26bbcb430dc440608",
+        "resize":
+            "10cb3e212a1e380371c9ac7dad9453024e504dd299fa02c309e0c5437eb48bed",
+        "phash_jpeg":
+            "edf3e3f240211061a8cc2f63d30fc03f6568c0323d19d0707f5b32f33a7b574f",
+        "resize_jpeg":
+            "1247f1cd7ff02ec1db0c7cf6b997f2ff1fa1cb80a7943cb869635352ef2bfff1",
+        "decode_audit":
+            "3afcc60657c4c25611e1b2a4b729fc9aff3a4583405409b2e8f6be06b7464d94",
+        "neardup":
+            "d1b21b2196f64b848bd3512ebe56e3629feb9268132e5c3730a323929c7b191a",
+        "phash_bmp":
+            "058e1778949f446a78d372b70bda61b086b8215687630da42c8d67d664ea768a",
+        "phash_tiff":
+            "62460ff69c7571d646e151e8f983598e2f772d55c9f9b5625e4bfc7f86d3157e",
+        "orient":
+            "02306ef94ff6745779a39c05b8e4b18bf3eed076408791eb07544057cf8dc933",
+        "gif_anim":
+            "1af61011265487f732bb3397bcb21247fa462e309c319f40c7fea8d41bc89dfe",
+        "ico":
+            "0f4c52a97bd7e073195269124b9c0807daeebad3a0a665ba20da3dc35b0c2202",
+        "apng":
+            "d6cd8d0e9b54475dbfe4304e82ecd8303f96ab84d6f8768fd95ffa38f2980d29",
+        "phash_gif":
+            "cb2cd0762354484e23537a651a726b3aef46fda35ba6d6cc6ea710a5a35dfe4b",
+        "phash_prog":
+            "a282744270ed5e08117842fed8aaf2aec92122453aa2e5af3139969a2345473e",
+    },
+    "sf0.1": {
+        "phash":
+            "8ff132a0093342b6b21ea7fbe78bf5973cb6b9723fd53ee79426c3818366af69",
+        "resize":
+            "9c77387c8c004100922a3845afb9d38585bc271e4aadc0b3e9042e2538ec2711",
+        "phash_jpeg":
+            "c2da25b1b09a75210bb0469720f19e9c5e6aef6ba2e6ba89b40a1674f4e38db8",
+        "resize_jpeg":
+            "64ac94c3a744b3dac46701b887602db066979bca0a1d9a2d956cb5b0ef0189b8",
+        "decode_audit":
+            "4e50291a3de8988f6db4e1cab60588300e1a2818c95fa65eea77fcc774ddb489",
+        "neardup":
+            "297a598818382594315dcfd789bbba309ecae02940c6770aad2a34e4d2b0ce68",
+        "phash_bmp":
+            "cc4c32acdddcb80af170d759556d264b6ec8a2bdff92abf12c94193a9855089c",
+        "phash_tiff":
+            "4f8b4765fa5ec7937c75e0b877916c4d46d2a675ebeec48e535dff61ebdd4cc1",
+        "orient":
+            "820699be7b62ecddc260e892ba63fd70d537b3257e51e990d571fbdcc3c97a40",
+        "gif_anim":
+            "45a17d6069fbae5ea01e92da8607153827f9ee7e77e9b7a21b97c06869004638",
+        "ico":
+            "536c31c5558b790691efd1343d1629dffa48ab3193b3f7d19ab07a94a54f5f51",
+        "apng":
+            "8055aac6efc00ce1ec28c0c3babe5af7a28c867060b59c9334c47b1b74d9b3d8",
+        "phash_gif":
+            "0f7989958a30bacc5242d0a3e57c7f4897b0ed429701b03dc7309c12678daa8d",
+        "phash_prog":
+            "fc238df720eed0795638796b9328b48be071c66003f5c552d06a259895c373c0",
+    },
+}
+
+
+def _oracle_digest(con, sql: str) -> str:
+    import hashlib
+
+    cur = con.execute(sql)
+    cols = [c[0] for c in cur.description]
+    order = sorted(range(len(cols)), key=cols.__getitem__)
+    rows = sorted(tuple(r[i] if isinstance(r[i], str) else int(r[i])
+                        for i in order) for r in cur.fetchall())
+    h = hashlib.sha256(repr([cols[i] for i in order]).encode())
+    for r in rows:
+        h.update(repr(r).encode())
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize("sf", sorted(_ORACLE_DIGESTS))
+def test_pixel_oracle_digests(sf_dir, sf):
+    """Every ``pixel_*`` oracle's output at sf0.001 and sf0.1 (the sibling
+    of the test scale-factor directory; sf0.01 holds the same doc_ids as
+    sf0.001) hashes to its committed digest."""
+    import os
+
+    import duckdb
+
+    path = os.path.join(os.path.dirname(sf_dir), sf, "documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"create view documents as select * from '{path}'")
+    got = {n: _oracle_digest(con, getattr(P, f"pixel_{n}_oracle_sql")())
+           for n in _ORACLE_DIGESTS[sf]}
+    assert got == _ORACLE_DIGESTS[sf]
+
+
+def test_apng_default_image_is_not_a_frame():
+    """An IDAT before the first fcTL is the default image, not frame 0:
+    every animation frame then rides fdAT, and none may be dropped."""
+    w, h = 5, 4
+    planes = [bytes([v]) * (w * h) for v in (120, 6, 12)]
+    zs = [zlib.compress(b"".join(b"\x00" + p[y * w:(y + 1) * w]
+                                 for y in range(h))) for p in planes]
+    fctl = [struct.pack(">IIIIIHHBB", seq, w, h, 0, 0, 1, 10, 0, 0)
+            for seq in (0, 2)]
+    blob = (b"\x89PNG\r\n\x1a\n"
+            + P._chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
+            + P._chunk(b"acTL", struct.pack(">II", 2, 0))
+            + P._chunk(b"IDAT", zs[0])
+            + P._chunk(b"fcTL", fctl[0])
+            + P._chunk(b"fdAT", struct.pack(">I", 1) + zs[1])
+            + P._chunk(b"fcTL", fctl[1])
+            + P._chunk(b"fdAT", struct.pack(">I", 3) + zs[2])
+            + P._chunk(b"IEND", b""))
+    ww, hh, plays, got = P.decode_apng(blob)
+    assert (ww, hh, plays) == (w, h, 0)
+    assert [p for _, p in got] == planes[1:]
