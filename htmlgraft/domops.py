@@ -18,20 +18,21 @@ right-to-left walk with ancestor backtracking.
 
 Scale shape: selectors are parsed ONCE on the driver (malformed selectors
 fail fast, not per-task); each page is parsed ONCE and all selectors run
-against that single DOM; the operator is one Arrow-batched map riding the
-same salted url-hash partitioning as the parse itself — no shuffle, no
-per-row Python round trips.
+against that single DOM.  Every operator here is a row function on the
+parse job's own stage (htmlgraft.job.map_pages): the same salted url-hash
+partitioning, charset-aware decode, reference parse and worker setup — no
+extra shuffle, no per-row Python round trips.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .job import map_pages
+from .linkops import _subtree_text
 from .nodes import Element
 
 _COMPOUND_RE = re.compile(
@@ -168,35 +169,14 @@ def select_css_df(pages: DataFrame, selectors,
     index within (url, selector), text is the whitespace-collapsed subtree
     text (same collapse as link anchors).  Pages that fail to parse emit
     no rows (the documented links contract)."""
-    spark = pages.sparkSession
-    from .job import with_partitioning
-
     parsed = tuple((s, parse_selector(s)) for s in selectors)
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = with_partitioning(pages.select("url", "html"), num_parts)
 
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .linkops import _parse_doc, _subtree_text
+    def _select_rows(url, doc):
+        return [(url, sel, k, el.name, _subtree_text(el))
+                for sel, parts in parsed
+                for k, el in enumerate(select(doc, parts), start=1)]
 
-        for pdf in batches:
-            out = {k: [] for k in ("url", "selector", "match_pos", "tag",
-                                   "text")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                try:
-                    doc = _parse_doc(raw)
-                except Exception:
-                    continue
-                for sel, parts in parsed:
-                    for k, el in enumerate(select(doc, parts), start=1):
-                        out["url"].append(url)
-                        out["selector"].append(sel)
-                        out["match_pos"].append(k)
-                        out["tag"].append(el.name)
-                        out["text"].append(_subtree_text(el))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batch, SELECT_SCHEMA)
+    return map_pages(pages, SELECT_SCHEMA, _select_rows, num_parts)
 
 
 # --- gated query -------------------------------------------------------------
@@ -268,6 +248,7 @@ def dom_select_oracle_sql() -> str:
 # batch (all blocks of a page are in hand), so no window is needed.
 
 BLOCK_TAGS = ("nav", "header", "div", "table", "aside", "footer")
+_BLOCK_SET = frozenset(BLOCK_TAGS)
 
 DENSITY_SCHEMA = StructType(
     [
@@ -287,8 +268,6 @@ def _block_stats(el):
     """(text_chars, link_chars, p_count) for one block element: collapsed
     subtree text length, summed per-anchor collapsed text lengths, and
     the number of <p> descendants — one iterative walk."""
-    from .linkops import _subtree_text
-
     text_chars = len(_subtree_text(el))
     link_chars = 0
     p_count = 0
@@ -310,64 +289,38 @@ def _block_stats(el):
     return text_chars, link_chars, p_count
 
 
+def _density_rows(url, doc):
+    rows = []
+    stack = [[doc.children, 0]]
+    while stack:
+        top = stack[-1]
+        children, i = top[0], top[1]
+        if i >= len(children):
+            stack.pop()
+            continue
+        top[1] = i + 1
+        node = children[i]
+        if type(node) is Element:
+            if node.name in _BLOCK_SET:
+                rows.append((node.name, *_block_stats(node)))
+            stack.append([node.children, 0])
+    best_i, best_score = -1, None
+    for i, (_t, tc, lc, _pc) in enumerate(rows):
+        score = tc - 3 * lc
+        if best_score is None or score > best_score:
+            best_i, best_score = i, score
+    return [(url, i + 1, tag, tc, lc, (1000 * lc) // tc if tc else 0, pc,
+             1 if i == best_i else 0)
+            for i, (tag, tc, lc, pc) in enumerate(rows)]
+
+
 def content_density_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
     """(url, block_pos, tag, text_chars, link_chars, link_permille,
     p_count, winner) for every block-level element (``BLOCK_TAGS``) of
     every page, in document order; winner marks the block maximizing
     ``text_chars - 3 * link_chars`` (first in document order on ties).
     Pages that fail to parse emit no rows (the links contract)."""
-    spark = pages.sparkSession
-    from .job import with_partitioning
-
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = with_partitioning(pages.select("url", "html"), num_parts)
-    block_set = frozenset(BLOCK_TAGS)
-
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .linkops import _parse_doc
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "url", "block_pos", "tag", "text_chars", "link_chars",
-                "link_permille", "p_count", "winner")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                try:
-                    doc = _parse_doc(raw)
-                except Exception:
-                    continue
-                rows = []
-                stack = [[doc.children, 0]]
-                while stack:
-                    top = stack[-1]
-                    children, i = top[0], top[1]
-                    if i >= len(children):
-                        stack.pop()
-                        continue
-                    top[1] = i + 1
-                    node = children[i]
-                    if type(node) is Element:
-                        if node.name in block_set:
-                            rows.append((node.name, *_block_stats(node)))
-                        stack.append([node.children, 0])
-                best_i, best_score = -1, None
-                for i, (_t, tc, lc, _pc) in enumerate(rows):
-                    score = tc - 3 * lc
-                    if best_score is None or score > best_score:
-                        best_i, best_score = i, score
-                for i, (tag, tc, lc, pc) in enumerate(rows):
-                    out["url"].append(url)
-                    out["block_pos"].append(i + 1)
-                    out["tag"].append(tag)
-                    out["text_chars"].append(tc)
-                    out["link_chars"].append(lc)
-                    out["link_permille"].append(
-                        (1000 * lc) // tc if tc else 0)
-                    out["p_count"].append(pc)
-                    out["winner"].append(1 if i == best_i else 0)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batch, DENSITY_SCHEMA)
+    return map_pages(pages, DENSITY_SCHEMA, _density_rows, num_parts)
 
 
 def run_content_density(spark, sf_dir: str) -> DataFrame:
@@ -488,33 +441,17 @@ def _tag_walk_fp(doc) -> str:
     return hashlib.md5(" ".join(parts).encode()).hexdigest()
 
 
+def _template_rows(url, doc):
+    return [(url.split("/")[2], _tag_walk_fp(doc))]
+
+
 def dom_template_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
     """Per host: page count, distinct structural templates, and the
-    dominant template's share in permille."""
+    dominant template's share in permille.  A page that fails to parse, or
+    whose url has no host, counts toward no host."""
     import pyspark.sql.functions as F
 
-    spark = pages.sparkSession
-    from .job import with_partitioning
-
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = with_partitioning(pages.select("url", "html"), num_parts)
-
-    def _batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .linkops import _parse_doc
-
-        for pdf in batches:
-            hosts, fps = [], []
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                try:
-                    doc = _parse_doc(raw)
-                except Exception:
-                    continue
-                hosts.append(url.split("/")[2])
-                fps.append(_tag_walk_fp(doc))
-            yield pd.DataFrame({"host": hosts, "fp": fps})
-
-    per_tpl = (df.mapInPandas(_batch, TEMPLATE_SCHEMA)
+    per_tpl = (map_pages(pages, TEMPLATE_SCHEMA, _template_rows, num_parts)
                .groupBy("host", "fp").count())
     return (
         per_tpl.groupBy("host")

@@ -23,10 +23,12 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
+import functools
+import gc
 import sys
 import time
 import zipimport
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -37,7 +39,7 @@ from pyspark.sql.types import (
 from .encoding import decode_html
 from .extract import analyze_tree
 from .lexer import Tokeniser
-from .parse import Parser
+from .parse import Parser, parse
 
 RESULT_SCHEMA = StructType(
     [
@@ -58,7 +60,8 @@ RESULT_SCHEMA = StructType(
 # one-pass production schema: the same parse also emits hyperlinks and page
 # metadata (title/h1/doctype) — at 10^12 docs you parse ONCE, not once per
 # downstream consumer; the standalone linkops queries exist for the
-# per-operator oracle gate and reuse the identical walker.
+# per-operator oracle gate, run the identical walker, and reach it through
+# ``map_pages``: the same decode, parse and worker setup as this stage.
 from pyspark.sql.types import ArrayType  # noqa: E402
 
 LINK_STRUCT = StructType(
@@ -124,46 +127,53 @@ def _drop_zip_finders() -> None:
             cache.pop(path, None)
 
 
+def _worker_stage(batch_fn):
+    """Wrap a mapInPandas function with the per-task worker setup every
+    page stage shares; the wrapper keeps ``batch_fn``'s name for plans.
+
+    It first drops the worker's cached zip import finders.  PySpark's
+    worker calls ``importlib.invalidate_caches()`` at the start of every
+    task, and on CPython 3.11 that makes every cached ``zipimporter`` re-read
+    its archive's whole central directory: pyspark.zip, the py4j zip and the
+    Spark jar, about 27k entries per task (~0.2 s on a 4-core Xeon) before
+    the first row is parsed.  Dropping the finders is safe because a later
+    import rebuilds them from zipimport's own directory cache without
+    touching the archive, and Spark adds each file only once per
+    application, so no archive changes under a live worker.  It runs on
+    every call, not once per worker, because imports made after a task
+    starts create new finders.
+
+    It then runs ``batch_fn`` with the cyclic GC off.  The parse builds pure
+    trees (children arrays only, no parent or sibling pointers -> no
+    reference cycles), so refcounting reclaims everything and the cyclic GC
+    only burns memory bandwidth walking millions of live objects; disabling
+    it in the worker is safe and measurably faster under high core counts.
+    The worker's prior GC state is restored afterwards: PySpark reuses
+    Python workers (spark.python.worker.reuse), so a bare disable() would
+    leak into every later UDF stage in the same app."""
+
+    @functools.wraps(batch_fn)
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _drop_zip_finders()
+        was_enabled = gc.isenabled()
+        gc.disable()
+        try:
+            yield from batch_fn(batches)
+        finally:
+            if was_enabled:
+                gc.enable()
+
+    return stage
+
+
 def make_parse_batch(
     include_dom: bool = True,
     max_batch_bytes: int = 1 << 26,
     include_links: bool = False,
 ):
-    """Build the mapInPandas function.  The inner generator re-chunks incoming
-    Arrow batches so a run of oversized documents cannot balloon the pandas
-    frame we materialize results into.
-
-    Each call also drops the worker's cached zip import finders.  PySpark's
-    worker calls ``importlib.invalidate_caches()`` at the start of every
-    task, and on CPython 3.11 that makes every cached ``zipimporter`` re-read
-    its archive's whole central directory: pyspark.zip, the py4j zip and the
-    Spark jar, about 27k entries per task (~0.2 s on a 4-core Xeon) before
-    the first row is parsed.  Dropping the finders is safe because a later import rebuilds
-    them from zipimport's own directory cache without touching the archive,
-    and Spark adds each file only once per application, so no archive
-    changes under a live worker.  It runs on every call, not once per
-    worker, because imports made after a task starts create new finders."""
-
-    def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _drop_zip_finders()
-        # The parse builds pure trees (children arrays only, no parent or
-        # sibling pointers -> no reference cycles), so refcounting reclaims
-        # everything and the cyclic GC only burns memory bandwidth walking
-        # millions of live objects; disabling it in the worker is safe and
-        # measurably faster under high core counts.
-        import gc
-
-        # Restore the worker's prior GC state afterwards: PySpark reuses
-        # Python workers (spark.python.worker.reuse), so a bare disable()
-        # would leak into every later UDF stage in the same app.
-        was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            yield from _parse_batches(batches)
-        finally:
-            if was_enabled:
-                gc.enable()
-
+    """Build the mapInPandas function (wrapped by ``_worker_stage``).  The
+    inner generator re-chunks incoming Arrow batches so a run of oversized
+    documents cannot balloon the pandas frame we materialize results into."""
     cols = [
         "url", "lang", "dom", "text", "n_tokens", "n_nodes",
         "n_errors", "n_bytes", "parse_ms", "status", "part_id",
@@ -171,7 +181,7 @@ def make_parse_batch(
     if include_links:
         cols += ["links", "title", "h1", "has_doctype"]
 
-    def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in cols}
             acc_bytes = 0
@@ -230,16 +240,19 @@ def make_parse_batch(
             if out["url"]:
                 yield pd.DataFrame(out)
 
-    return parse_batch
+    return _worker_stage(parse_batch)
 
 
 # size above which a document is routed to its own salt lane
 OVERSIZE_BYTES = 256 * 1024
 
 
-def with_partitioning(pages: DataFrame, num_parts: int, salts: int = 8) -> DataFrame:
+def with_partitioning(
+    pages: DataFrame, num_parts: int | None, salts: int = 8
+) -> DataFrame:
     """Explicit shuffle control: url-hash partitioning with a salt lane for
-    oversized documents.
+    oversized documents, into ``num_parts`` partitions (None: the session's
+    ``spark.sql.shuffle.partitions``).
 
     The shuffle key is the HIGH-cardinality (url, salt) pair, not part_id:
     hashing only num_parts distinct part_id values into num_parts bins is a
@@ -248,6 +261,9 @@ def with_partitioning(pages: DataFrame, num_parts: int, salts: int = 8) -> DataF
     resume bucket (stable under re-runs).  The salt spreads an oversized
     host's documents across lanes when partitioning by host instead of url.
     """
+    if num_parts is None:
+        conf = pages.sparkSession.conf
+        num_parts = int(conf.get("spark.sql.shuffle.partitions", "32"))
     df = pages.withColumn(
         "part_id", F.pmod(F.xxhash64(F.col("url")), F.lit(num_parts))
     ).withColumn(
@@ -258,6 +274,42 @@ def with_partitioning(pages: DataFrame, num_parts: int, salts: int = 8) -> DataF
         ).otherwise(F.lit(0)),
     )
     return df.repartition(num_parts, F.col("url"), F.col("salt"))
+
+
+def map_pages(
+    pages: DataFrame,
+    schema: StructType,
+    page_rows: Callable[[str, object], list],
+    num_parts: int | None = None,
+) -> DataFrame:
+    """The per-page DOM operators' stage: pages(url, html[, charset]) ->
+    rows of ``schema``, through the same salted url-hash partitioning,
+    charset-aware decode, reference ``parse`` and worker setup as the parse
+    stage.  ``page_rows(url, document)`` returns the page's row tuples in
+    ``schema`` order.  A page whose decode, parse or ``page_rows`` raises
+    emits no rows; the rest of its batch is unaffected."""
+    cols = [c for c in ("url", "html", "charset") if c in pages.columns]
+    names = schema.fieldNames()
+
+    def pages_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            urls = pdf["url"].tolist()
+            hints = (
+                pdf["charset"].tolist() if "charset" in pdf
+                else [None] * len(urls)
+            )
+            rows = []
+            for url, raw, hint in zip(urls, pdf["html"].tolist(), hints):
+                try:
+                    got = page_rows(url, parse(decode_html(bytes(raw), hint)))
+                except Exception:  # reference-equivalent throws, bad urls
+                    continue
+                rows += got
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    pages_batch.__name__ = page_rows.__name__
+    df = with_partitioning(pages.select(*cols), num_parts)
+    return df.mapInPandas(_worker_stage(pages_batch), schema)
 
 
 # resume done-sets up to this many urls are broadcast (~60 B/url -> a few
@@ -291,9 +343,6 @@ def parse_extract(
     is KNOWN (``done_count``) to fit ``BROADCAST_DONE_MAX``, else a merge
     hint forces the shuffle sort-merge anti-join that survives
     terabyte-scale done-sets."""
-    spark = pages.sparkSession
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     cols = [c for c in ("url", "lang", "html", "charset") if c in pages.columns]
     df = pages.select(*cols)
     if done_urls is not None:

@@ -26,8 +26,10 @@ Value-hash discipline: PageRank uses SCALED INTEGER arithmetic only
 float PageRank would differ in the last ulp across engines/orders.
 
 Scale notes (10^12 documents):
-* the link walk rides the same salted url-hash partitioning as the parse
-  (htmlgraft.job.with_partitioning) — one Arrow-batched map, no extra state;
+* the per-page operators share the parse job's stage (htmlgraft.job.
+  map_pages): the same salted url-hash partitioning, charset-aware decode,
+  reference parse and worker setup — one Arrow-batched map, no extra state;
+  a page that fails to decode or parse emits no rows;
 * hostgraph is one hash aggregation keyed on (src_host, dst_host); hosts are
   ~10^7-cardinality at web scale, far below doc count;
 * PageRank state per iteration is one (host, rank) relation (~16 B/host) and
@@ -41,15 +43,12 @@ Scale notes (10^12 documents):
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .corpus import pages_df, pages_oracle_cte
-from .lexer import Tokeniser
-from .parse import Parser
+from .job import map_pages
 
 _WS_RUN = re.compile(r"[\t\n\r\f ]+")
 
@@ -207,96 +206,32 @@ def analyze_tables(document):
     return out
 
 
-def _parse_doc(raw) -> object:
-    parser = Parser()
-    lexer = Tokeniser(parser)
-    lexer.parse(bytes(raw).decode("utf-8", "replace"))
-    lexer.end_input()  # reference double-end quirk (htmlgraft.job.parse_document)
-    return parser.document
+def _links_rows(url, doc):
+    links = analyze_links(doc)[0]
+    return [(url, k, href, anchor)
+            for k, (href, anchor) in enumerate(links, start=1)]
 
 
-def _links_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        urls, poss, hrefs, anchors = [], [], [], []
-        for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-            try:
-                links, _, _, _ = analyze_links(_parse_doc(raw))
-            except Exception:
-                continue  # parse error -> no link rows (documented)
-            for k, (href, anchor) in enumerate(links, start=1):
-                urls.append(url)
-                poss.append(k)
-                hrefs.append(href)
-                anchors.append(anchor)
-        yield pd.DataFrame(
-            {"url": urls, "pos": poss, "href": hrefs, "anchor": anchors}
-        )
+def _meta_rows(url, doc):
+    links, title, h1, has_doctype = analyze_links(doc)
+    return [(url, title, h1, has_doctype, len(links))]
 
 
-def _meta_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("url", "title", "h1", "has_doctype", "n_links")}
-        for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-            try:
-                links, title, h1, has_doctype = analyze_links(_parse_doc(raw))
-            except Exception:
-                continue
-            out["url"].append(url)
-            out["title"].append(title)
-            out["h1"].append(h1)
-            out["has_doctype"].append(has_doctype)
-            out["n_links"].append(len(links))
-        yield pd.DataFrame(out)
-
-
-def _tables_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        cols = ("url", "table_idx", "row_idx", "cell_idx", "is_header", "cell_text")
-        out = {k: [] for k in cols}
-        for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-            try:
-                cells = analyze_tables(_parse_doc(raw))
-            except Exception:
-                continue  # parse error -> no rows (documented, like links)
-            for t, r, c, h, text in cells:
-                out["url"].append(url)
-                out["table_idx"].append(t)
-                out["row_idx"].append(r)
-                out["cell_idx"].append(c)
-                out["is_header"].append(h)
-                out["cell_text"].append(text)
-        yield pd.DataFrame(out)
+def _tables_rows(url, doc):
+    return [(url, *cell) for cell in analyze_tables(doc)]
 
 
 def tables_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
-    from .job import with_partitioning
-
-    spark = pages.sparkSession
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = with_partitioning(pages.select("url", "html"), num_parts)
-    return df.mapInPandas(_tables_batch, TABLES_SCHEMA)
+    return map_pages(pages, TABLES_SCHEMA, _tables_rows, num_parts)
 
 
 def links_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
     """(url, html) -> exploded link rows via the salted url-hash shuffle."""
-    from .job import with_partitioning
-
-    spark = pages.sparkSession
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = with_partitioning(pages.select("url", "html"), num_parts)
-    return df.mapInPandas(_links_batch, LINKS_SCHEMA)
+    return map_pages(pages, LINKS_SCHEMA, _links_rows, num_parts)
 
 
 def metadata_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
-    from .job import with_partitioning
-
-    spark = pages.sparkSession
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = with_partitioning(pages.select("url", "html"), num_parts)
-    return df.mapInPandas(_meta_batch, META_SCHEMA)
+    return map_pages(pages, META_SCHEMA, _meta_rows, num_parts)
 
 
 WAT_ROWS_SCHEMA = StructType(
@@ -310,34 +245,17 @@ WAT_ROWS_SCHEMA = StructType(
 )
 
 
-def _wat_rows_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _wat_rows(url, doc):
     # ONE parse per page for the whole WAT record: analyze_links already
     # collects links AND title in a single walk, so the export costs one
     # traversal, not the links+metadata pair.
-    for pdf in batches:
-        out = {k: [] for k in ("url", "title", "pos", "href", "anchor")}
-        for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-            try:
-                links, title, _, _ = analyze_links(_parse_doc(raw))
-            except Exception:
-                continue  # parse error -> no WAT record (documented, like links)
-            for k, (href, anchor) in enumerate(links, start=1):
-                out["url"].append(url)
-                out["title"].append(title or "")
-                out["pos"].append(k)
-                out["href"].append(href)
-                out["anchor"].append(anchor)
-        yield pd.DataFrame(out)
+    links, title, _, _ = analyze_links(doc)
+    return [(url, title or "", k, href, anchor)
+            for k, (href, anchor) in enumerate(links, start=1)]
 
 
 def wat_rows_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
-    spark = pages.sparkSession
-    from .job import with_partitioning
-
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = with_partitioning(pages.select("url", "html"), num_parts)
-    return df.mapInPandas(_wat_rows_batch, WAT_ROWS_SCHEMA)
+    return map_pages(pages, WAT_ROWS_SCHEMA, _wat_rows, num_parts)
 
 
 # --- host resolution (shared Spark-side fragments) ---------------------------

@@ -6,8 +6,15 @@ document-order contract.  Oracle-level value agreement for the gated
 
 import pytest
 
+from htmlgraft import parse
 from htmlgraft.domops import parse_selector, select, select_css_df
-from htmlgraft.linkops import _parse_doc, _subtree_text
+from htmlgraft.encoding import decode_html
+from htmlgraft.linkops import _subtree_text
+
+
+def _doc(raw):
+    # the per-page operators' own decode + parse (htmlgraft.job.map_pages)
+    return parse(decode_html(raw))
 
 
 def _sel(doc, sel):
@@ -16,7 +23,7 @@ def _sel(doc, sel):
 
 @pytest.fixture(scope="module")
 def doc():
-    return _parse_doc(
+    return _doc(
         b'<!doctype html><html><body>'
         b'<div id=main class="content article">'
         b'<p><b>one</b> two</p><p>three</p></div>'
@@ -51,7 +58,7 @@ def test_descendant_backtracks_past_nearest_ancestor():
     """'section > span b': b's NEAREST span ancestor has a div parent (a
     greedy right-to-left scan fails there); the match needs the outer
     span, whose parent IS the section."""
-    d = _parse_doc(
+    d = _doc(
         b"<section><span><div><span><b>x</b></span></div></span></section>"
     )
     assert _sel(d, "section > span b") == [("b", "x")]
@@ -63,7 +70,7 @@ def test_reparented_wrapper_is_transparent():
     """Foster-parented content sits inside a synthetic '#reparented'
     wrapper in the stored tree; selector paths must flatten it exactly
     like the reference's traversal flattens it from the event stream."""
-    d = _parse_doc(b"<table><span>s</span><tr><td>c</td></tr></table>")
+    d = _doc(b"<table><span>s</span><tr><td>c</td></tr></table>")
     assert _sel(d, "body span") == [("span", "s")]
     assert _sel(d, "body > span") == [("span", "s")]  # wrapper is no parent
     assert _sel(d, "table span") == []
@@ -178,17 +185,29 @@ def test_dom_template_clusters_by_structure(spark):
     assert (b.n_pages, b.n_templates, b.top_share_permille) == (1, 1, 1000)
 
 
+def test_dom_template_skips_hostless_url(spark):
+    """A url with no host cannot name a template cluster: that page emits
+    no rows, and the task still returns every other page's host."""
+    from htmlgraft.domops import dom_template_df
+
+    df = spark.createDataFrame(
+        [("u1", b"<body><p>a</p></body>"),
+         ("https://h.example/1", b"<body><p>b</p></body>")],
+        "url string, html binary")
+    got = [(r.host, r.n_pages) for r in dom_template_df(df, 2).collect()]
+    assert got == [("h.example", 1)]
+
+
 def test_dom_template_fp_sees_reparented_wrappers():
     """Foster-parented content produces a '#reparented' wrapper in our
     tree; the fingerprint includes it, so a page whose table fosters text
     clusters separately from its well-formed twin."""
     from htmlgraft.domops import _tag_walk_fp
-    from htmlgraft.linkops import _parse_doc
 
-    fostered = _parse_doc(b"<body><table><b>x</b><tr><td>c</table></body>")
-    before = _parse_doc(b"<body><b>x</b><table><tr><td>c</table></body>")
+    fostered = _doc(b"<body><table><b>x</b><tr><td>c</table></body>")
+    before = _doc(b"<body><b>x</b><table><tr><td>c</table></body>")
     assert _tag_walk_fp(fostered) != _tag_walk_fp(before)
     # text-only differences do NOT split a template
-    t1 = _parse_doc(b"<body><p>alpha</p></body>")
-    t2 = _parse_doc(b"<body><p>a much longer beta text here</p></body>")
+    t1 = _doc(b"<body><p>alpha</p></body>")
+    t2 = _doc(b"<body><p>a much longer beta text here</p></body>")
     assert _tag_walk_fp(t1) == _tag_walk_fp(t2)

@@ -9,16 +9,9 @@ import pathlib
 import pandas as pd
 import pytest
 
-from htmlgraft import parse
+from htmlgraft import domops, linkops, parse
 from htmlgraft.extract import DATA, END, START, events_from_json
-from htmlgraft.linkops import (
-    BASE,
-    ITERS,
-    SCALE,
-    _links_batch,
-    _meta_batch,
-    analyze_links,
-)
+from htmlgraft.linkops import BASE, ITERS, SCALE, analyze_links
 from htmlgraft.walk import DOCTYPE
 
 FIX = pathlib.Path(__file__).resolve().parent.parent / "fixtures"
@@ -153,24 +146,37 @@ def test_first_title_and_h1_win():
     assert h1 == "first"
 
 
-def _batch_out(fn, rows):
-    pdf = pd.DataFrame(rows)
-    return pd.concat(list(fn(iter([pdf]))), ignore_index=True)
+# every per-page DOM operator, with the column pin its error test keeps
+PAGE_OPERATORS = {
+    "links_df": ("href", ["/x"]),
+    "metadata_df": ("n_links", [1]),
+    "tables_df": ("cell_text", ["ok"]),
+    "wat_rows_df": None,
+    "select_css_df": None,
+    "content_density_df": None,
+    "dom_template_df": None,
+}
 
 
-def test_links_batch_error_doc_emits_no_rows():
+@pytest.mark.parametrize("op", list(PAGE_OPERATORS))
+def test_page_operator_error_doc_emits_no_rows(spark, op):
     # <constructor> triggers the reference's JS prototype-key throw; the
-    # batch must skip the document, not fail the task
-    rows = {
-        "url": ["u1", "u2"],
-        "html": [b"<body><a href=/x>ok</a>", b"<constructor>"],
-    }
-    out = _batch_out(_links_batch, rows)
-    assert out["url"].tolist() == ["u1"]
-    assert out["href"].tolist() == ["/x"]
-    meta = _batch_out(_meta_batch, rows)
-    assert meta["url"].tolist() == ["u1"]
-    assert meta["n_links"].tolist() == [1]
+    # stage must skip the document, not fail the task
+    good, bad = "http://good.example/1", "http://bad.example/2"
+    pages = spark.createDataFrame(
+        [(good, b"<body><div><table><tr><td>ok</table><a href=/x>ok</a>"),
+         (bad, b"<constructor>")],
+        "url string, html binary",
+    )
+    fn = getattr(linkops, op, None) or getattr(domops, op)
+    rows = (fn(pages, ["a"]) if op == "select_css_df" else fn(pages)).collect()
+    if op == "dom_template_df":
+        assert [(r["host"], r["n_pages"]) for r in rows] == [("good.example", 1)]
+    else:
+        assert rows and {r["url"] for r in rows} == {good}
+    if PAGE_OPERATORS[op]:
+        col, want = PAGE_OPERATORS[op]
+        assert [r[col] for r in rows] == want
 
 
 # --- structured table extraction ---------------------------------------------
@@ -218,18 +224,6 @@ def test_tables_fostered_text_not_in_cells():
     # the reference parser, so it must not appear in any cell
     cells = analyze_tables(parse("<body><table>stray<tr><td>x</table>"))
     assert [x[4] for x in cells] == ["x"]
-
-
-def test_tables_batch_error_doc_emits_no_rows():
-    from htmlgraft.linkops import _tables_batch
-
-    rows = {
-        "url": ["u1", "u2"],
-        "html": [b"<table><tr><td>ok</table>", b"<constructor>"],
-    }
-    out = _batch_out(_tables_batch, rows)
-    assert out["url"].tolist() == ["u1"]
-    assert out["cell_text"].tolist() == ["ok"]
 
 
 def test_pagerank_constants_are_integer_consistent():

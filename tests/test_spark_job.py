@@ -264,14 +264,19 @@ def test_make_catalog_parquet_default(spark, tmp_path):
     assert cat.read_state() is None
 
 
-def test_one_pass_links_match_standalone_ops(spark, pages):
+@pytest.mark.parametrize("corpus", ["pages_df", "pages_charset_df"])
+def test_one_pass_links_match_standalone_ops(spark, sf_dir, pages, corpus):
     """include_links=True: the production job emits links + metadata from
     the SAME parse; rows must agree exactly with the standalone linkops
-    queries (which re-parse per query for the oracle gate)."""
+    queries (which re-parse per query for the oracle gate), on UTF-8 pages
+    and on the charset corpus (cp1252, UTF-16 and BOM'd UTF-8 pages)."""
     from pyspark.sql import functions as F
 
+    from htmlgraft.corpus import pages_charset_df
     from htmlgraft.linkops import links_df, metadata_df
 
+    if corpus == "pages_charset_df":
+        pages = pages_charset_df(spark, sf_dir)
     full = parse_extract(pages, num_parts=8, include_links=True)
     one_pass_links = {
         (r["url"], r["l"]["pos"], r["l"]["href"], r["l"]["anchor"])
