@@ -7,9 +7,12 @@ fixture pipeline (applied to reference-parsed trees) and the Spark job
 is anchored by (a) byte-identical trees and (b) this single implementation.
 
 Algorithm (all constants fixed here):
-1. Walk the tree (event stream) skipping ``SKIP_TAGS`` subtrees entirely.
+1. Walk the tree once (``analyze_page``), skipping ``SKIP_TAGS`` subtrees for
+   scoring and rendering (they are still walked for the DOM print and the
+   links).
 2. For every element compute subtree stats: visible text length, element
-   count, link-text length (text under <a>).
+   count, link-text length (text under <a>).  Running totals over the walk
+   give them as close-minus-open differences.
 3. Score candidate containers (``CANDIDATE_TAGS``):
        score = text_len / (1 + tag_count) * (1 - link_density)^2 * ln(1 + text_len)
    link_density = link_text_len / text_len (0 when no text).  The ln(text)
@@ -19,7 +22,12 @@ Algorithm (all constants fixed here):
    Fallback: <body>, else the document root.
 5. Render the winner subtree's text: DATA concatenated, a newline at every
    ``BLOCK_TAGS`` boundary; then per line: collapse [\\t\\n\\r\\f ]+ runs to a
-   single space, strip, drop empty lines, join with '\\n'.
+   single space, strip, drop empty lines, join with '\\n'.  The walk records
+   every unskipped render part in one list and each candidate's [start, end)
+   span in it, so the winner's text is a slice join, not a second walk.
+
+``extract_from_events`` (``_score_pass`` + ``_render_pass`` over an event
+stream) is the reference the walk is tested against.
 """
 
 from __future__ import annotations
@@ -49,13 +57,44 @@ CANDIDATE_TAGS = frozenset(
 
 _WS_RUN = re.compile(r"[\t\n\r\f ]+")
 
-# precomputed two-space indents for the dom printer (depth > 255 falls back
-# to the multiply; real pages nest far shallower)
-_INDENTS = tuple("  " * i for i in range(256))
+class _Prefixes(dict):
+    """DOM-print line prefix per depth: "| " plus two spaces a level,
+    stored up to depth 255 (real pages nest far shallower), built past it."""
+
+    def __missing__(self, depth):
+        return "| " + "  " * depth
 
 
-def _indent(depth: int) -> str:
-    return _INDENTS[depth] if depth < 256 else "  " * depth
+_PREFIX = _Prefixes((i, "| " + "  " * i) for i in range(256))
+
+
+def collapse_ws(s: str) -> str:
+    """``s`` with every [\\t\\n\\r\\f ]+ run collapsed to one space.  Without
+    a double space and any of \\t \\n \\r \\f every run already is one space,
+    so ``s`` comes back as is and the regex is skipped."""
+    if "  " in s or "\t" in s or "\n" in s or "\r" in s or "\f" in s:
+        return _WS_RUN.sub(" ", s)
+    return s
+
+
+def _finish_lines(raw: str) -> str:
+    """Per line: collapse whitespace runs, strip, drop empty lines.  Strip
+    goes first: no run crosses the first or last non-whitespace character,
+    so the result is the same and blank lines skip the collapse."""
+    lines = []
+    for line in raw.split("\n"):
+        line = line.strip()
+        if line:
+            lines.append(collapse_ws(line))
+    return "\n".join(lines)
+
+
+def _score(text_len: int, tag_count: int, link_len: int) -> float:
+    if text_len <= 0:
+        return 0.0
+    density = text_len / (1 + tag_count)
+    link_density = link_len / text_len
+    return density * (1.0 - link_density) ** 2 * log(1 + text_len)
 
 
 class _Frame:
@@ -94,17 +133,10 @@ def _score_pass(events):
                 parent.text_len += f.text_len
                 parent.link_len += f.link_len
                 if f.name in CANDIDATE_TAGS:
-                    if f.text_len > 0:
-                        density = f.text_len / (1 + f.tag_count)
-                        link_density = f.link_len / f.text_len
-                        score = (
-                            density
-                            * (1.0 - link_density) ** 2
-                            * log(1 + f.text_len)
-                        )
-                    else:
-                        score = 0.0
-                    candidates.append((f.order, f.name, score))
+                    candidates.append(
+                        (f.order, f.name,
+                         _score(f.text_len, f.tag_count, f.link_len))
+                    )
         elif kind == DATA:
             top = stack[-1]
             if not top.skip:
@@ -157,13 +189,7 @@ def _render_pass(events, target_order):
             if depth_in_target >= 0 and not skip_depth:
                 if depth_in_target > 0 or target_order is None:
                     parts.append(ev[1])
-    raw = "".join(parts)
-    lines = []
-    for line in raw.split("\n"):
-        line = _WS_RUN.sub(" ", line).strip()
-        if line:
-            lines.append(line)
-    return "\n".join(lines)
+    return _finish_lines("".join(parts))
 
 
 def extract_main_text(root) -> str:
@@ -172,168 +198,173 @@ def extract_main_text(root) -> str:
 
 
 def analyze_tree(root, include_dom: bool = True):
-    """Fused single-walk pipeline core: computes the html5lib-format dom
-    string (identical to walk.print_tree) AND the extraction candidates in
-    ONE direct tree walk with no intermediate event tuples, then renders
-    only the winning subtree.  Semantics are event-path-identical (asserted
-    against extract_from_events/print_tree in tests); the fusion exists
-    because the per-event tuple stream dominated memory traffic, which is
+    """Returns (dom, text, n_nodes): ``analyze_page`` without the links."""
+    return analyze_page(root, include_dom)[:3]
+
+
+def analyze_page(root, include_dom: bool = True, include_links: bool = False):
+    """Everything the parse stage takes from one parsed page, in ONE
+    iterative walk with no intermediate event tuples: the html5lib-format
+    dom string (identical to walk.print_tree; "" without ``include_dom``),
+    candidate scoring and the winner's rendered text, the element count,
+    and with ``include_links`` the ``linkops.analyze_links`` fields.
+    Semantics are event-path-identical (asserted against
+    extract_from_events/print_tree in tests); the walk avoids the event
+    path because its per-event tuples dominated memory traffic, which is
     what limits multi-core scaling of the Arrow-batched parse stage.
 
-    Returns (dom, text, n_nodes)."""
+    Returns (dom, text, n_nodes, links, title, h1, has_doctype).  links is
+    a list of (href, anchor) for every <a> carrying an href attribute, in
+    document order; title/h1 are the collapsed text of the FIRST
+    <title>/<h1> (None when absent); has_doctype is 1 iff the document has
+    a top-level doctype node.  Without ``include_links`` they are
+    (None, None, None, 0).  Anchor, title and h1 text are slices of the
+    walk's own list of text nodes."""
     from .nodes import Comment, Doctype, Document, Element
 
     out = [] if include_dom else None
-    buf = []           # pending adjacent text (print coalescing)
-    buf_depth = 0
-    depth = 0
-    order = 0
+    buf = []                # pending adjacent text (print coalescing)
+    texts = [] if include_links else None   # every text node, in order
+    links = [] if include_links else None
+    title = h1 = None
+    has_doctype = 0
+    parts = []              # render parts of all unskipped content
+    depth = 0               # open real (non-'#') elements
+    order = 0               # pre-order index of the next real element
+    skip_at = -1            # depth of the open SKIP_TAGS subtree root
+    link_at = -1            # depth of the outermost open <a>
+    top_skip = False        # a depth-0 element is in SKIP_TAGS
+    # running totals over unskipped content; subtree stats are differences
+    n_text = n_link = n_tags = 0
     candidates = []
-    cand_nodes = {}
-    root_frame = _Frame("#root", -1, False, False)
-    fstack = [root_frame]
-    # walk stack entries: [children, idx, element_or_None, frame_or_None]
-    if isinstance(root, Document):
-        stack = [[root.children, 0, None, None]]
-    else:
-        stack = [[(root,), 0, None, None]]
+    spans = {}              # candidate order -> [start, end) in parts
+    # open candidates: (depth, order, n_text, n_link, n_tags, start)
+    cands = [(-1,)]
+    # open <a href>/<title>/<h1>: (depth, slot, first text index); slot is
+    # the links index, -1 for the title, -2 for the h1
+    collect = [(-1,)]
+    its = [iter(root.children if type(root) is Document else (root,))]
+    names = [None]          # per level: element name, None for '#'/document
 
-    def flush():
-        if buf:
-            text = "".join(buf)
-            del buf[:]
-            if text:
-                out.append('| %s"%s"\n' % (_indent(buf_depth), text))
+    def flush(depth):
+        text = "".join(buf)
+        del buf[:]
+        if text:
+            out.append(f'{_PREFIX[depth]}"{text}"\n')
 
-    while stack:
-        top = stack[-1]
-        children, i = top[0], top[1]
-        if i >= len(children):
-            stack.pop()
-            el = top[2]
-            if el is not None:
-                if out is not None:
-                    flush()
-                depth -= 1
-                # score bookkeeping (post-order close)
-                f = fstack.pop()
-                parent = fstack[-1]
-                if not f.skip:
-                    parent.tag_count += f.tag_count + 1
-                    parent.text_len += f.text_len
-                    parent.link_len += f.link_len
-                    if f.name in CANDIDATE_TAGS:
-                        if f.text_len > 0:
-                            density = f.text_len / (1 + f.tag_count)
-                            link_density = f.link_len / f.text_len
-                            score = (
-                                density
-                                * (1.0 - link_density) ** 2
-                                * log(1 + f.text_len)
-                            )
-                        else:
-                            score = 0.0
-                        candidates.append((f.order, f.name, score))
-            continue
-        top[1] = i + 1
-        node = children[i]
-        t = type(node)
-        if t is str or t is bytes:
+    while its:
+        for node in its[-1]:
+            t = type(node)
             if t is bytes:
                 node = node.decode("utf-8")
-            if out is not None:
-                if not buf:
-                    buf_depth = depth
-                buf.append(node)
-            f = fstack[-1]
-            if not f.skip:
-                n = len(node)
-                f.text_len += n
-                if f.in_link:
-                    f.link_len += n
-        elif t is Element:
-            name = node.name
-            if name[:1] == "#":
-                stack.append([node.children, 0, None, None])
-            else:
+                t = str
+            if t is str:
                 if out is not None:
-                    flush()
-                    out.append("| %s<%s>\n" % (_indent(depth), name))
-                depth += 1
-                parent = fstack[-1]
-                skip = parent.skip or name in SKIP_TAGS
-                fstack.append(
-                    _Frame(name, order, skip, parent.in_link or name == "a")
-                )
-                if name in CANDIDATE_TAGS and not skip:
-                    cand_nodes[order] = node
-                order += 1
-                stack.append([node.children, 0, node, None])
-        elif t is Comment:
-            if out is not None:
-                flush()
-                out.append("| %s<!--%s-->\n" % (_indent(depth), "".join(node.data)))
-        elif t is Doctype:
-            if out is not None:
-                flush()
-                out.append("| %s<!doctype>\n" % (_indent(depth)))
-        elif t is Document:
-            stack.append([node.children, 0, None, None])
-    if out is not None:
-        flush()
-
-    target = pick_target(candidates)
-    if target is None:
-        text = _render_pass(traverse(root), None)
-    else:
-        text = _render_subtree(cand_nodes[target])
-    return ("".join(out) if out is not None else ""), text, order
-
-
-def _render_subtree(el) -> str:
-    """Visible-text rendering of one element subtree — equivalent to
-    ``_render_pass(traverse(document), order_of(el))`` but walking only the
-    subtree.  SKIP_TAGS below the target are pruned (the target itself is
-    rendered even if its tag is skippable, matching the event path)."""
-    from .nodes import Comment, Doctype, Element
-
-    parts = []
-    if el.name in BLOCK_TAGS:
-        parts.append("\n")
-    stack = [[el.children, 0, el.name]]
-    while stack:
-        top = stack[-1]
-        children, i = top[0], top[1]
-        if i >= len(children):
-            stack.pop()
-            name = top[2]
-            if name is not None and name in BLOCK_TAGS:
-                parts.append("\n")
-            continue
-        top[1] = i + 1
-        node = children[i]
-        t = type(node)
-        if t is str:
-            parts.append(node)
-        elif t is bytes:
-            parts.append(node.decode("utf-8"))
-        elif t is Element:
-            name = node.name
-            if name[:1] == "#":
-                stack.append([node.children, 0, None])
-            elif name in SKIP_TAGS:
+                    buf.append(node)
+                if texts is not None:
+                    texts.append(node)
+                if skip_at < 0:
+                    parts.append(node)
+                    n = len(node)
+                    n_text += n
+                    if link_at >= 0:
+                        n_link += n
+            elif t is Element or t is Document:
+                name = node.name if t is Element else "#"  # '#': transparent
+                if name[:1] == "#":
+                    names.append(None)
+                else:
+                    if out is not None:
+                        if buf:
+                            flush(depth)
+                        out.append(f"{_PREFIX[depth]}<{name}>\n")
+                    if skip_at < 0:
+                        if name in SKIP_TAGS:
+                            skip_at = depth
+                            if not depth:
+                                top_skip = True
+                        else:
+                            n_tags += 1
+                            if name in CANDIDATE_TAGS:
+                                cands.append((depth, order, n_text, n_link,
+                                              n_tags, len(parts)))
+                            if name in BLOCK_TAGS:
+                                parts.append("\n")
+                    if name == "a":
+                        if link_at < 0:
+                            link_at = depth
+                        if links is not None and node.attrs:
+                            href = node.attrs.get("href")
+                            if href is not None:
+                                collect.append((depth, len(links), len(texts)))
+                                links.append(href)
+                    # a title/h1 nested in the first one closes before it,
+                    # so the first one's text is the one that stays
+                    elif name == "title":
+                        if title is None and texts is not None:
+                            collect.append((depth, -1, len(texts)))
+                    elif name == "h1" and h1 is None and texts is not None:
+                        collect.append((depth, -2, len(texts)))
+                    names.append(name)
+                    depth += 1
+                    order += 1
+                its.append(iter(node.children))
+                break
+            elif t is Comment or t is Doctype:
+                if t is Doctype and len(its) == 1:
+                    has_doctype = 1
+                if out is not None:
+                    if buf:
+                        flush(depth)
+                    out.append(f"{_PREFIX[depth]}<!--{''.join(node.data)}-->\n"
+                               if t is Comment else
+                               f"{_PREFIX[depth]}<!doctype>\n")
+        else:
+            its.pop()
+            name = names.pop()
+            if name is None:
                 continue
-            else:
+            if buf:
+                flush(depth)
+            depth -= 1
+            if skip_at < 0:
                 if name in BLOCK_TAGS:
                     parts.append("\n")
-                stack.append([node.children, 0, name])
-    raw = "".join(parts)
-    lines = []
-    for line in raw.split("\n"):
-        line = _WS_RUN.sub(" ", line).strip()
-        if line:
-            lines.append(line)
-    return "\n".join(lines)
+                c = cands[-1]
+                if c[0] == depth:
+                    cands.pop()
+                    candidates.append((c[1], name, _score(
+                        n_text - c[2], n_tags - c[4], n_link - c[3])))
+                    spans[c[1]] = (c[5], len(parts))
+            elif skip_at == depth:
+                skip_at = -1
+            if link_at == depth:
+                link_at = -1
+            c = collect[-1]
+            if c[0] == depth:
+                collect.pop()
+                text = collapse_ws("".join(texts[c[2]:])).strip()
+                slot = c[1]
+                if slot >= 0:
+                    links[slot] = (links[slot], text)
+                elif slot == -1:
+                    title = text
+                else:
+                    h1 = text
+    if buf:
+        flush(depth)
+
+    target = pick_target(candidates)
+    if target is not None:
+        start, end = spans[target]
+        text = _finish_lines("".join(parts[start:end]))
+    elif top_skip:
+        # the whole-document render keeps a top-level SKIP_TAGS element
+        text = _render_pass(traverse(root), None)
+    else:
+        text = _finish_lines("".join(parts))
+    return ("".join(out) if out is not None else ""), text, order, \
+        links, title, h1, has_doctype
 
 
 def pick_target(candidates):

@@ -37,7 +37,7 @@ from pyspark.sql.types import (
 )
 
 from .encoding import decode_html
-from .extract import analyze_tree
+from .extract import analyze_page
 from .lexer import Tokeniser
 from .parse import Parser, parse
 
@@ -90,8 +90,8 @@ def parse_document(html: str, include_dom: bool = True, include_links: bool = Fa
     has_doctype] when include_links).  Token counting lives in the Parser
     itself (Parser.n_tokens, one per tokeniser write_* call) so no
     wrapper-delegate layer sits between tokeniser and parser in the hot path.
-    The link/metadata walk is a second (cheap, tree-only) pass over the
-    already-built DOM — the parse itself still happens exactly once.
+    The DOM print, the extraction and the links/metadata all come from ONE
+    walk over the built DOM (``extract.analyze_page``).
     """
     parser = Parser()
     lexer = Tokeniser(parser)
@@ -99,13 +99,10 @@ def parse_document(html: str, include_dom: bool = True, include_links: bool = Fa
     # second end: the reference's parse() entry ends the tokeniser twice
     # (see htmlgraft.parse.parse docstring) — replicated for byte-identity
     lexer.end_input()
-    # fused single walk: dom print + candidate scoring + subtree render
-    dom, text, n_nodes = analyze_tree(parser.document, include_dom)
+    dom, text, n_nodes, links, title, h1, has_doctype = analyze_page(
+        parser.document, include_dom, include_links)
     if not include_links:
         return dom, text, parser.n_tokens, n_nodes, "ok"
-    from .linkops import analyze_links
-
-    links, title, h1, has_doctype = analyze_links(parser.document)
     rows = [
         {"pos": k, "href": href, "anchor": anchor}
         for k, (href, anchor) in enumerate(links, start=1)
@@ -374,6 +371,14 @@ def partition_metrics(results: DataFrame) -> DataFrame:
     )
 
 
+# ParquetCatalog's read schemas: partition-type inference would read run ids
+# "1" and "01" back as the same integer 1 and merge the two runs
+_RESULTS_READ_SCHEMA = StructType(
+    list(RESULT_SCHEMA.fields) + [StructField("run_id", StringType())]
+)
+_STATE_READ_SCHEMA = "url string, part_id bigint"
+
+
 class ParquetCatalog:
     """Sink/state seam for ``run_job``: three logical tables (results,
     progress, state_urls) as run_id-partitioned parquet under one state
@@ -394,12 +399,11 @@ class ParquetCatalog:
 
     def read_run_results(self, run_id: str) -> DataFrame:
         # run_id is the physical partition column -> partition-pruned scan
-        return self.spark.read.parquet(self.results_path).where(
-            F.col("run_id") == run_id
-        )
+        return self.read_results().where(F.col("run_id") == run_id)
 
     def read_results(self) -> DataFrame:
-        return self.spark.read.parquet(self.results_path)
+        return self.spark.read.schema(_RESULTS_READ_SCHEMA).parquet(
+            self.results_path)
 
     def append_progress(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.progress_path)
@@ -410,7 +414,8 @@ class ParquetCatalog:
     def read_state(self) -> DataFrame | None:
         """The compact (url, part_id) done-set, or None before any run."""
         if _exists_nonempty(self.spark, self.state_path):
-            return self.spark.read.parquet(self.state_path)
+            return self.spark.read.schema(_STATE_READ_SCHEMA).parquet(
+                self.state_path)
         return None
 
 

@@ -3,7 +3,9 @@ the host-level link graph, and PageRank over it.
 
 These operators extend the extraction tier beyond main text: the SAME
 tokenize -> tree-build pipeline (htmlgraft.lexer/parse, byte-identical to
-the reference parser) feeds a document-order DOM walk that emits
+the reference parser) feeds a document-order DOM walk — the parse stage's
+one walk per page, ``extract.analyze_page``, which also prints the DOM and
+extracts the main text — whose links and metadata feed
 
 * ``extract_links``    — (url, pos, href, anchor) for every <a href=...>;
 * ``extract_metadata`` — (url, title, h1, has_doctype, n_links);
@@ -42,15 +44,12 @@ Scale notes (10^12 documents):
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .corpus import pages_df, pages_oracle_cte
+from .extract import analyze_page, collapse_ws
 from .job import map_pages
-
-_WS_RUN = re.compile(r"[\t\n\r\f ]+")
 
 LINKS_SCHEMA = StructType(
     [
@@ -84,63 +83,32 @@ def _subtree_text(el) -> str:
     from .nodes import Element
 
     parts = []
-    stack = [[el.children, 0]]
-    while stack:
-        top = stack[-1]
-        children, i = top[0], top[1]
-        if i >= len(children):
-            stack.pop()
-            continue
-        top[1] = i + 1
-        node = children[i]
-        t = type(node)
-        if t is str:
-            parts.append(node)
-        elif t is bytes:
-            parts.append(node.decode("utf-8"))
-        elif t is Element:
-            stack.append([node.children, 0])
-    return _WS_RUN.sub(" ", "".join(parts)).strip()
+    its = [iter(el.children)]
+    while its:
+        for node in its[-1]:
+            t = type(node)
+            if t is str:
+                parts.append(node)
+            elif t is bytes:
+                parts.append(node.decode("utf-8"))
+            elif t is Element:
+                its.append(iter(node.children))
+                break
+        else:
+            its.pop()
+    return collapse_ws("".join(parts)).strip()
 
 
 def analyze_links(document):
-    """Document-order walk collecting links + metadata in one pass.
+    """Links + metadata of one page, from the same single walk the parse
+    stage runs (``extract.analyze_page``; its scoring and text render come
+    along and are dropped).
 
     Returns (links, title, h1, has_doctype) where links is a list of
     (href, anchor) for every <a> carrying an href attribute, title/h1 are
     the collapsed text of the FIRST <title>/<h1> (None when absent), and
     has_doctype is 1 iff the document has a doctype node."""
-    from .nodes import Doctype, Element
-
-    links = []
-    title = None
-    h1 = None
-    has_doctype = 0
-    for ch in document.children:
-        if type(ch) is Doctype:
-            has_doctype = 1
-    stack = [[document.children, 0]]
-    while stack:
-        top = stack[-1]
-        children, i = top[0], top[1]
-        if i >= len(children):
-            stack.pop()
-            continue
-        top[1] = i + 1
-        node = children[i]
-        if type(node) is Element:
-            name = node.name
-            if name[:1] != "#":
-                if name == "a":
-                    href = node.attrs.get("href") if node.attrs else None
-                    if href is not None:
-                        links.append((href, _subtree_text(node)))
-                elif name == "title" and title is None:
-                    title = _subtree_text(node)
-                elif name == "h1" and h1 is None:
-                    h1 = _subtree_text(node)
-            stack.append([node.children, 0])
-    return links, title, h1, has_doctype
+    return analyze_page(document, False, True)[3:]
 
 
 TABLES_SCHEMA = StructType(

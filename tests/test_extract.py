@@ -123,3 +123,26 @@ def test_adversarial_layout_extraction(fx):
     assert page["expect"]["present"] in our_text
     for w in page["expect"]["absent"]:
         assert w not in our_text, (fx["id"], w)
+
+
+def test_collapse_ws_matches_regex():
+    """collapse_ws skips the regex when there is no run to collapse; it
+    must agree with the plain regex, also next to the Unicode whitespace
+    (\\xa0, \\x0b, \\x85, \\u3000) that the regex leaves alone but strip()
+    removes.  _finish_lines strips before it collapses, so each line must
+    also match collapse-then-strip."""
+    import random
+    import re
+
+    from htmlgraft.extract import _finish_lines, collapse_ws
+
+    ws = re.compile(r"[\t\n\r\f ]+")
+    alphabet = ["\t", "\n", "\r", "\f", " ", " ", "\xa0", "\x0b", "\x85",
+                "\u3000", "a", "b", "x"]
+    rng = random.Random(20261017)
+    for _ in range(10_000):
+        s = "".join(rng.choice(alphabet) for _ in range(rng.randrange(12)))
+        assert collapse_ws(s).strip() == ws.sub(" ", s).strip(), repr(s)
+        assert collapse_ws(s) == ws.sub(" ", s), repr(s)
+        lines = (ws.sub(" ", line).strip() for line in s.split("\n"))
+        assert _finish_lines(s) == "\n".join(x for x in lines if x), repr(s)

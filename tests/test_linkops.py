@@ -30,7 +30,8 @@ ADV_TREES = _load("pages_adversarial_trees.jsonl")
 
 def links_meta_from_events(events):
     """The analyze_links semantics re-derived over an event stream (used to
-    anchor the DOM walk against reference-parsed trees)."""
+    anchor the DOM walk against reference-parsed trees and to check the
+    single extraction walk in test_fused)."""
     import re
 
     ws = re.compile(r"[\t\n\r\f ]+")
@@ -44,12 +45,21 @@ def links_meta_from_events(events):
         if k == START:
             depth += 1
             name = ev[1]
-            attrs = dict(ev[2]) if len(ev) > 2 and ev[2] else {}
+            # attrs: [k, v] pairs (events_from_json) or {"name", "value"}
+            # dicts (walk.traverse)
+            attrs = dict(
+                (a["name"], a["value"]) if isinstance(a, dict) else a
+                for a in (ev[2] if len(ev) > 2 and ev[2] else ())
+            )
             if name == "a" and "href" in attrs:
                 collecting.append(["a", attrs["href"], [], depth])
+            # the FIRST title/h1 is the first one opened: an h1 nested in
+            # an h1 closes first but is not the first
             elif name == "title" and not title_done:
+                title_done = True
                 collecting.append(["title", None, [], depth])
             elif name == "h1" and not h1_done:
+                h1_done = True
                 collecting.append(["h1", None, [], depth])
         elif k == END:
             for c in list(collecting):
@@ -57,10 +67,10 @@ def links_meta_from_events(events):
                     text = ws.sub(" ", "".join(c[2])).strip()
                     if c[0] == "a":
                         links.append((c[1], text))
-                    elif c[0] == "title" and not title_done:
-                        title, title_done = text, True
-                    elif c[0] == "h1" and not h1_done:
-                        h1, h1_done = text, True
+                    elif c[0] == "title":
+                        title = text
+                    else:
+                        h1 = text
                     collecting.remove(c)
             depth -= 1
         elif k == DATA:

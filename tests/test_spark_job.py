@@ -120,6 +120,34 @@ def test_run_job_incremental_state(spark, pages, tmp_path):
     assert n_by_run["r2"] == pages.count() - half.count()
 
 
+def test_numeric_looking_run_ids_stay_apart(spark, pages, tmp_path):
+    """Run ids "1" and "01" are different runs: the results partition
+    column reads back as a string, so neither run's rows leak into the
+    other's metrics or state."""
+    from htmlgraft.job import ParquetCatalog
+
+    out = str(tmp_path / "out")
+    half = pages.filter("doc_id % 2 = 0")
+    run_job(spark, half, out, run_id="1", num_parts=4, include_dom=False)
+    results = run_job(spark, pages, out, run_id="01", num_parts=4,
+                      include_dom=False)
+    assert dict(results.dtypes)["run_id"] == "string"
+    n_half, n_all = half.count(), pages.count()
+    cat = ParquetCatalog(spark, out)
+    urls_01 = {r["url"] for r in cat.read_run_results("01").collect()}
+    assert len(urls_01) == n_all - n_half
+    assert not urls_01 & {r["url"] for r in half.select("url").collect()}
+    prog = spark.read.parquet(out + "/progress")
+    n_by_run = {
+        r["run_id"]: r["n"]
+        for r in prog.groupBy("run_id").sum("n_docs")
+        .withColumnRenamed("sum(n_docs)", "n").collect()
+    }
+    assert n_by_run == {"1": n_half, "01": n_all - n_half}
+    state = cat.read_state()
+    assert state.count() == state.select("url").distinct().count() == n_all
+
+
 def test_scan_is_pruned(spark, sf_dir):
     """Column pruning must reach the parquet scan: parsing selects only
     (url, lang, html); the scan must not read the documents 'text' column
