@@ -273,6 +273,48 @@ def with_partitioning(
     return df.repartition(num_parts, F.col("url"), F.col("salt"))
 
 
+# input blob bytes per output frame of ``row_batches``: a run of large
+# blobs cannot balloon the pandas frame their output rows are gathered into
+MAX_BATCH_BYTES = 1 << 26
+
+
+def row_batches(row: Callable, cols: list, names: list):
+    """The one Arrow-batched loop of the row-mapped operators, as a
+    mapInPandas function named after ``row`` (the name Spark's plans show).
+
+    ``row(*values)`` is called with each input row's ``cols`` values and
+    returns an iterable of output tuples in ``names`` order: 0, 1 or n rows.
+    Its output is gathered into frames, and a frame is cut once its input
+    rows carried ``MAX_BATCH_BYTES`` of binary values.  Error policy is the
+    row function's own: an exception it raises fails the task."""
+
+    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out, acc, sent = [], 0, False
+            for args in zip(*(pdf[c].tolist() for c in cols)):
+                out += row(*args)
+                acc += sum(len(a) for a in args if isinstance(a, bytes))
+                if acc >= MAX_BATCH_BYTES and out:
+                    yield pd.DataFrame.from_records(out, columns=names)
+                    out, acc, sent = [], 0, True
+            if out or not sent:
+                yield pd.DataFrame.from_records(out, columns=names)
+
+    batch.__name__ = row.__name__
+    return batch
+
+
+def map_rows(
+    df: DataFrame, cols: list, schema: StructType | str, row: Callable
+) -> DataFrame:
+    """``df`` -> rows of ``schema`` (a StructType or DDL string) through
+    ``row_batches``: ``row`` maps the values of ``cols`` to 0, 1 or n
+    output tuples.  A pure map: no shuffle, no column selection."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return df.mapInPandas(row_batches(row, cols, schema.fieldNames()), schema)
+
+
 def map_pages(
     pages: DataFrame,
     schema: StructType,
@@ -286,27 +328,18 @@ def map_pages(
     ``schema`` order.  A page whose decode, parse or ``page_rows`` raises
     emits no rows; the rest of its batch is unaffected."""
     cols = [c for c in ("url", "html", "charset") if c in pages.columns]
-    names = schema.fieldNames()
 
-    def pages_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            hints = (
-                pdf["charset"].tolist() if "charset" in pdf
-                else [None] * len(urls)
-            )
-            rows = []
-            for url, raw, hint in zip(urls, pdf["html"].tolist(), hints):
-                try:
-                    got = page_rows(url, parse(decode_html(bytes(raw), hint)))
-                except Exception:  # reference-equivalent throws, bad urls
-                    continue
-                rows += got
-            yield pd.DataFrame.from_records(rows, columns=names)
+    def page_row(url, raw, hint=None):
+        try:
+            return page_rows(url, parse(decode_html(bytes(raw), hint)))
+        except Exception:  # reference-equivalent throws, bad urls
+            return ()
 
-    pages_batch.__name__ = page_rows.__name__
+    page_row.__name__ = page_rows.__name__
     df = with_partitioning(pages.select(*cols), num_parts)
-    return df.mapInPandas(_worker_stage(pages_batch), schema)
+    return df.mapInPandas(
+        _worker_stage(row_batches(page_row, cols, schema.fieldNames())), schema
+    )
 
 
 # resume done-sets up to this many urls are broadcast (~60 B/url -> a few

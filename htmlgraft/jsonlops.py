@@ -24,12 +24,11 @@ file with downstream repartition, same shape as the WARC/WET readers.
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .job import map_rows
 from .warcops import _write_record_files, iter_gzip_members
 
 # Every JSON string-escaping class in one value: two-char escapes
@@ -104,22 +103,17 @@ JSONL_SCHEMA = StructType(
 _GZIP_MAGIC = b"\x1f\x8b"
 
 
-def _jsonl_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "url", "text", "meta")}
-        for blob in pdf["content"].tolist():
-            data = bytes(blob)
-            if data[:2] == _GZIP_MAGIC:
-                data = b"".join(m for m, _off, _len in iter_gzip_members(data))
-            for line in data.splitlines():
-                if not line.strip():
-                    continue
-                obj = json.loads(line)
-                out["doc_id"].append(int(obj["doc_id"]))
-                out["url"].append(obj["url"])
-                out["text"].append(obj["text"])
-                out["meta"].append(obj["meta"])
-        yield pd.DataFrame(out)
+def _jsonl_rows(blob):
+    data = bytes(blob)
+    if data[:2] == _GZIP_MAGIC:
+        data = b"".join(m for m, _off, _len in iter_gzip_members(data))
+    rows = []
+    for line in data.splitlines():
+        if not line.strip():
+            continue
+        obj = json.loads(line)
+        rows.append((int(obj["doc_id"]), obj["url"], obj["text"], obj["meta"]))
+    return rows
 
 
 def read_jsonl_rows(spark, path: str) -> DataFrame:
@@ -128,7 +122,7 @@ def read_jsonl_rows(spark, path: str) -> DataFrame:
     members detected by magic; plain text passes through).  One file per
     task like the WARC/WET readers; downstream repartitions rebalance."""
     files = spark.read.format("binaryFile").load(path).select("content")
-    return files.mapInPandas(_jsonl_batch, JSONL_SCHEMA)
+    return map_rows(files, ["content"], JSONL_SCHEMA, _jsonl_rows)
 
 
 def run_jsonl_roundtrip(spark, sf_dir: str) -> DataFrame:

@@ -38,14 +38,15 @@ blob occupies its own batch.
 
 from __future__ import annotations
 
+import hashlib
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType, LongType, StringType, StructField, StructType,
 )
+
+from .job import map_rows
 
 MEDIA_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -466,7 +467,15 @@ def decode_header(media_type: str, blob: bytes):
     raise NotImplementedError(f"unrecognized {media_type} container")
 
 
-def extract_features(media: DataFrame, max_batch_bytes: int = 1 << 26) -> DataFrame:
+def _features_row(doc_id, mtype, blob, n_bytes, fp=None):
+    raw = bytes(blob)
+    w, h, fr, payload_off = decode_header(mtype, raw)
+    if fp is None:
+        fp = hashlib.md5(raw[payload_off:]).hexdigest()
+    return [(doc_id, mtype, n_bytes, w, h, fr, fp)]
+
+
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
     Fingerprint semantics are ONE thing on both entry paths: md5 of the
@@ -476,43 +485,11 @@ def extract_features(media: DataFrame, max_batch_bytes: int = 1 << 26) -> DataFr
     (doc_id, media_type, media) inputs compute it inside the UDF from the
     parser's payload offset — the only place the header boundary is known.
     n_bytes is always JVM-side (F.length)."""
-    has_fp = "fingerprint" in media.columns
+    cols = ["doc_id", "media_type", "media", "n_bytes"]
+    if "fingerprint" in media.columns:
+        cols.append("fingerprint")
     media = media.withColumn("n_bytes", F.length("media").cast("long"))
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "media_type", "n_bytes", "width", "height",
-                "frames", "fingerprint",
-            )}
-            acc = 0
-            fps = pdf["fingerprint"] if has_fp else [None] * len(pdf)
-            for doc_id, mtype, blob, nb, fp in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["media"],
-                pdf["n_bytes"], fps,
-            ):
-                raw = bytes(blob)
-                w, h, fr, payload_off = decode_header(mtype, raw)
-                if fp is None:
-                    fp = hashlib.md5(raw[payload_off:]).hexdigest()
-                out["doc_id"].append(int(doc_id))
-                out["media_type"].append(mtype)
-                out["n_bytes"].append(int(nb))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["frames"].append(fr)
-                out["fingerprint"].append(fp)
-                acc += len(raw)
-                if acc >= max_batch_bytes:
-                    yield pd.DataFrame(out)
-                    out = {k: [] for k in out}
-                    acc = 0
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    return media.mapInPandas(feats, FEATURE_SCHEMA)
+    return map_rows(media, cols, FEATURE_SCHEMA, _features_row)
 
 
 def media_features(spark, sf_dir: str) -> DataFrame:
@@ -643,52 +620,26 @@ RESIZE_SCHEMA = StructType([
 ])
 
 
-def _resize_batch(
-    batches: Iterator[pd.DataFrame], max_batch_bytes: int = 1 << 26
-) -> Iterator[pd.DataFrame]:
-    import hashlib
-
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "fmt", "width", "height", "new_width",
-            "new_height", "scale_permille", "payload_md5",
-        )}
-        acc = 0
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            raw = bytes(blob)
-            got = (parse_png(raw) or parse_gif(raw) or parse_jpeg(raw)
-                   or parse_tiff(raw))
-            if got is None:
-                continue  # not an image container (documented skip)
-            w, h, _, _ = got
-            scale, new_w, new_h = resize_plan(w, h)
-            fmt, resized = _rewrite_image_header(raw, new_w, new_h)
-            # re-parse the REWRITTEN blob: its payload offset and dims
-            # must reflect the rewrite (a corrupt rewrite fails here)
-            parser = {"png": parse_png, "gif": parse_gif,
-                      "jpeg": parse_jpeg, "tiff": parse_tiff}[fmt]
-            w2, h2, _, payload_off = parser(resized)
-            assert (w2, h2) == (new_w, new_h)
-            out["doc_id"].append(int(doc_id))
-            out["fmt"].append(fmt)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["new_width"].append(new_w)
-            out["new_height"].append(new_h)
-            out["scale_permille"].append(scale)
-            out["payload_md5"].append(
-                hashlib.md5(resized[payload_off:]).hexdigest()
-            )
-            acc += len(raw)
-            if acc >= max_batch_bytes:
-                yield pd.DataFrame(out)
-                out = {k: [] for k in out}
-                acc = 0
-        if out["doc_id"]:
-            yield pd.DataFrame(out)
+def _resize_row(doc_id, blob):
+    raw = bytes(blob)
+    got = (parse_png(raw) or parse_gif(raw) or parse_jpeg(raw)
+           or parse_tiff(raw))
+    if got is None:
+        return ()  # not an image container (documented skip)
+    w, h, _, _ = got
+    scale, new_w, new_h = resize_plan(w, h)
+    fmt, resized = _rewrite_image_header(raw, new_w, new_h)
+    # re-parse the REWRITTEN blob: its payload offset and dims
+    # must reflect the rewrite (a corrupt rewrite fails here)
+    parser = {"png": parse_png, "gif": parse_gif,
+              "jpeg": parse_jpeg, "tiff": parse_tiff}[fmt]
+    w2, h2, _, payload_off = parser(resized)
+    assert (w2, h2) == (new_w, new_h)
+    return [(doc_id, fmt, w, h, new_w, new_h, scale,
+             hashlib.md5(resized[payload_off:]).hexdigest())]
 
 
-def resize_images(media: DataFrame, max_batch_bytes: int = 1 << 26) -> DataFrame:
+def resize_images(media: DataFrame) -> DataFrame:
     """Resize pass over the image rows: parse the real header, compute the
     integer downscale plan, rewrite the container dimensions (real bytes,
     real PNG CRC), and fingerprint the payload AFTER the rewrite -- the
@@ -700,13 +651,9 @@ def resize_images(media: DataFrame, max_batch_bytes: int = 1 << 26) -> DataFrame
     here carry text payloads, so this pass stays header-level).  Video
     frame decode is the remaining stub (``decode_frame``).  Same
     Arrow-batched byte-capped shape as extract_features."""
-    from functools import partial
-
-    return media.where(F.col("media_type") == "image").select(
-        "doc_id", "media"
-    ).mapInPandas(
-        partial(_resize_batch, max_batch_bytes=max_batch_bytes), RESIZE_SCHEMA
-    )
+    images = media.where(F.col("media_type") == "image").select(
+        "doc_id", "media")
+    return map_rows(images, ["doc_id", "media"], RESIZE_SCHEMA, _resize_row)
 
 
 def media_resize(spark, sf_dir: str) -> DataFrame:
@@ -769,34 +716,22 @@ FRAME_SAMPLE_SCHEMA = StructType([
 ])
 
 
-def _frame_sample_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "container", "n_frames", "sample_no", "frame_idx",
-        )}
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            raw = bytes(blob)
-            got = parse_mp4(raw)
-            container = "mp4"
-            if got is None:
-                got = parse_webm(raw)
-                container = "webm"
-            if got is None:
-                continue  # not a video container (documented skip)
-            frames = got[2]
-            n_samples = min(frames, FRAME_SAMPLES)
-            if n_samples <= 0:
-                continue
-            stride = frames // n_samples
-            for j in range(n_samples):
-                out["doc_id"].append(int(doc_id))
-                out["container"].append(container)
-                out["n_frames"].append(frames)
-                out["sample_no"].append(j + 1)
-                out["frame_idx"].append(j * stride)
-        yield pd.DataFrame(out)
+def _frame_sample_row(doc_id, blob):
+    raw = bytes(blob)
+    got = parse_mp4(raw)
+    container = "mp4"
+    if got is None:
+        got = parse_webm(raw)
+        container = "webm"
+    if got is None:
+        return ()  # not a video container (documented skip)
+    frames = got[2]
+    n_samples = min(frames, FRAME_SAMPLES)
+    if n_samples <= 0:
+        return ()
+    stride = frames // n_samples
+    return [(doc_id, container, frames, j + 1, j * stride)
+            for j in range(n_samples)]
 
 
 def frame_sample(media: DataFrame) -> DataFrame:
@@ -806,9 +741,10 @@ def frame_sample(media: DataFrame) -> DataFrame:
     j * stride).  WebM rows honestly emit no samples — Matroska headers
     carry no frame count (see parse_webm).  One Arrow-batched map that
     EXPLODES rows; the per-frame pixel fetch is ``decode_frame`` (stub)."""
-    return media.where(F.col("media_type") == "video").select(
-        "doc_id", "media"
-    ).mapInPandas(_frame_sample_batch, FRAME_SAMPLE_SCHEMA)
+    videos = media.where(F.col("media_type") == "video").select(
+        "doc_id", "media")
+    return map_rows(videos, ["doc_id", "media"], FRAME_SAMPLE_SCHEMA,
+                    _frame_sample_row)
 
 
 def media_frame_sample(spark, sf_dir: str) -> DataFrame:
@@ -1122,28 +1058,18 @@ def media_exif_scrub(spark, sf_dir: str) -> DataFrame:
     through), so a scrub that corrupts the IFD or shifts the payload
     fails the hash against the relational oracle.  Map-only mapInPandas
     over the binary column — no shuffle beyond the output sort."""
-    import hashlib
+    return map_rows(
+        exif_media_df(spark, sf_dir), ["doc_id", "media"], EXIF_SCRUB_SCHEMA,
+        _exif_scrub_row,
+    ).orderBy("doc_id")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                out, had, lat, lon, nb, na = scrub_exif_gps(bytes(blob))
-                parsed = parse_tiff(out)
-                w, h, _, end = parsed if parsed else (-1, -1, 0, 0)
-                rows.append((
-                    int(doc_id), had, lat, lon, nb, na, w, h,
-                    hashlib.md5(out[end:]).hexdigest(),
-                ))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in EXIF_SCRUB_SCHEMA.fields]
-            )
 
-    return (
-        exif_media_df(spark, sf_dir)
-        .mapInPandas(batches, EXIF_SCRUB_SCHEMA)
-        .orderBy("doc_id")
-    )
+def _exif_scrub_row(doc_id, blob):
+    out, had, lat, lon, nb, na = scrub_exif_gps(bytes(blob))
+    parsed = parse_tiff(out)
+    w, h, _, end = parsed if parsed else (-1, -1, 0, 0)
+    return [(doc_id, had, lat, lon, nb, na, w, h,
+             hashlib.md5(out[end:]).hexdigest())]
 
 
 def media_exif_scrub_oracle_sql(docs: str = "documents") -> str:
@@ -1237,23 +1163,11 @@ _AUDIO_SCHEMA = StructType([
 ])
 
 
-def _audio_batch(batches) -> "Iterator[pd.DataFrame]":
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "sample_rate", "n_samples",
-                               "abs_sum", "energy", "peak", "zero_cross")}
-        for doc_id in pdf["doc_id"]:
-            blob = synth_wav_pcm(int(doc_id))
-            rate, _ch, s = decode_wav_pcm(blob)
-            zc = sum(1 for i in range(1, len(s))
-                     if (s[i] >= 0) != (s[i - 1] >= 0))
-            out["doc_id"].append(int(doc_id))
-            out["sample_rate"].append(rate)
-            out["n_samples"].append(len(s))
-            out["abs_sum"].append(sum(abs(v) for v in s))
-            out["energy"].append(sum(v * v for v in s))
-            out["peak"].append(max(abs(v) for v in s))
-            out["zero_cross"].append(zc)
-        yield pd.DataFrame(out)
+def _audio_row(doc_id):
+    rate, _ch, s = decode_wav_pcm(synth_wav_pcm(doc_id))
+    zc = sum(1 for i in range(1, len(s)) if (s[i] >= 0) != (s[i - 1] >= 0))
+    return [(doc_id, rate, len(s), sum(abs(v) for v in s),
+             sum(v * v for v in s), max(abs(v) for v in s), zc)]
 
 
 def audio_pcm_features(spark, sf_dir: str) -> DataFrame:
@@ -1263,7 +1177,8 @@ def audio_pcm_features(spark, sf_dir: str) -> DataFrame:
     partition-parallel shape as the image decode tier, and the binary
     payload never leaves the executor."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_audio_batch, _AUDIO_SCHEMA).orderBy("doc_id")
+    return map_rows(docs, ["doc_id"], _AUDIO_SCHEMA, _audio_row).orderBy(
+        "doc_id")
 
 
 def audio_pcm_features_oracle_sql(docs: str = "documents") -> str:
@@ -1419,17 +1334,8 @@ def _mime_synth(doc_id: int) -> bytes:
     return b"RIFF\x24\x00\x00\x00WAVEfmt "
 
 
-def _mime_batch(batches):
-    import pandas as pd
-
-    for pdf in batches:
-        out = {"doc_id": [], "mime": [], "method": []}
-        for doc_id in pdf["doc_id"]:
-            mime, method = sniff_mime(_mime_synth(int(doc_id)))
-            out["doc_id"].append(int(doc_id))
-            out["mime"].append(mime)
-            out["method"].append(method)
-        yield pd.DataFrame(out)
+def _mime_row(doc_id):
+    return [(doc_id, *sniff_mime(_mime_synth(doc_id)))]
 
 
 def mime_sniff(spark, sf_dir: str):
@@ -1438,16 +1344,13 @@ def mime_sniff(spark, sf_dir: str):
     whitespace/case-varied HTML tag table, XML, and the binary-vs-text
     byte-set heuristic with both outcomes live).  Map-only — exactly the
     shape of a crawl-ingestion type-dispatch pass."""
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
     schema = StructType([
         StructField("doc_id", LongType()),
         StructField("mime", StringType()),
         StructField("method", StringType()),
     ])
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_mime_batch, schema).orderBy("doc_id")
+    return map_rows(docs, ["doc_id"], schema, _mime_row).orderBy("doc_id")
 
 
 def mime_sniff_oracle_sql(docs: str = "documents") -> str:
@@ -1581,24 +1484,11 @@ _WEBP_SCHEMA = StructType([
 ])
 
 
-def _webp_batch(batches) -> "Iterator[pd.DataFrame]":
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "variant", "ok", "width", "height")}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            blob = synth_webp(d)
-            got = parse_webp(blob)
-            out["doc_id"].append(d)
-            out["variant"].append(("vp8", "vp8l", "vp8x", "corrupt")[d % 4])
-            if got is None:
-                out["ok"].append(0)
-                out["width"].append(-1)
-                out["height"].append(-1)
-            else:
-                out["ok"].append(1)
-                out["width"].append(got[0])
-                out["height"].append(got[1])
-        yield pd.DataFrame(out)
+def _webp_row(doc_id):
+    got = parse_webp(synth_webp(doc_id))
+    w, h = got[:2] if got else (-1, -1)
+    return [(doc_id, ("vp8", "vp8l", "vp8x", "corrupt")[doc_id % 4],
+             int(got is not None), w, h)]
 
 
 def media_webp(spark, sf_dir: str) -> DataFrame:
@@ -1607,7 +1497,8 @@ def media_webp(spark, sf_dir: str) -> DataFrame:
     per-doc dims — pins the RIFF walk and each variant's dimension
     bit-packing by value.  Map-only."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(_webp_batch, _WEBP_SCHEMA).orderBy("doc_id")
+    return map_rows(docs, ["doc_id"], _WEBP_SCHEMA, _webp_row).orderBy(
+        "doc_id")
 
 
 def media_webp_oracle_sql(docs: str = "documents") -> str:

@@ -35,11 +35,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .job import map_rows
 
 WORDS_PER_LINE = 8
 
@@ -645,33 +645,14 @@ def extract_pdf_text(blob: bytes) -> tuple[str, int, int, str, int]:
     return "\n".join(lines), n_pages, n_shows, xref_kind, n_objstm
 
 
-def extract_text_df(pdfs: DataFrame, max_batch_bytes: int = 1 << 26) -> DataFrame:
-    """Arrow-batched mapInPandas over (doc_id, pdf) binary columns."""
+def _pdf_text_row(doc_id, blob):
+    return [(doc_id, *extract_pdf_text(bytes(blob)))]
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_frame in batches:
-            out = {k: [] for k in ("doc_id", "text", "n_pages",
-                                   "n_text_shows", "xref_kind",
-                                   "n_objstm_objs")}
-            acc = 0
-            for doc_id, blob in zip(pdf_frame["doc_id"], pdf_frame["pdf"]):
-                raw = bytes(blob)
-                text, n_pages, n_shows, kind, n_objstm = extract_pdf_text(raw)
-                out["doc_id"].append(int(doc_id))
-                out["text"].append(text)
-                out["n_pages"].append(n_pages)
-                out["n_text_shows"].append(n_shows)
-                out["xref_kind"].append(kind)
-                out["n_objstm_objs"].append(n_objstm)
-                acc += len(raw)
-                if acc >= max_batch_bytes:
-                    yield pd.DataFrame(out)
-                    out = {k: [] for k in out}
-                    acc = 0
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
 
-    return pdfs.select("doc_id", "pdf").mapInPandas(feats, PDF_TEXT_SCHEMA)
+def extract_text_df(pdfs: DataFrame) -> DataFrame:
+    """Arrow-batched map over (doc_id, pdf) binary columns."""
+    return map_rows(pdfs.select("doc_id", "pdf"), ["doc_id", "pdf"],
+                    PDF_TEXT_SCHEMA, _pdf_text_row)
 
 
 def pdf_extract_text(spark, sf_dir: str) -> DataFrame:

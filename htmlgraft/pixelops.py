@@ -15,9 +15,10 @@ drift apart (the committed oracle digests in the tests pin both).
 
 One of each builder sits on the table:
 
-- ``_corpus`` — one synth batch (``_rows_batch``): a tier's real bytes
-  per doc; the same per-doc batch serves every map-only query;
-- ``_hash_batch`` — decode the ACTUAL bytes, grey-collapse, pixel sum,
+- ``_corpus`` — one synth row (``_one_row`` on ``job.map_rows``): a
+  tier's real bytes per doc; the same per-doc map serves every map-only
+  query;
+- ``_hash_row`` — decode the ACTUAL bytes, grey-collapse, pixel sum,
   dHash; ``_keep_min`` — the min-doc_id keeper over the dHash group;
 - ``_phash_pair`` / ``_resize_pair`` — a gated query and its DuckDB
   oracle; ``_dhash_ctes`` restates the dHash relationally and is reused
@@ -60,12 +61,12 @@ from __future__ import annotations
 import struct
 import zlib
 from functools import partial
-from typing import Callable, Iterator, NamedTuple
+from typing import Callable, NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from htmlgraft import bmpops, gifops, icoops, jpegops, tiffops
+from htmlgraft.job import map_rows
 
 PHASH_BASES = 7
 
@@ -705,10 +706,6 @@ _RESIZE_DDL = ("doc_id long, width long, height long, new_width long,"
                " new_height long, px_sum long")
 
 
-def _names(ddl: str) -> list[str]:
-    return [c.split()[0] for c in ddl.split(",")]
-
-
 def _stage(name: str, fn, *args):
     """``fn`` bound to ``args``, under the name Spark's plans show."""
     f = partial(fn, *args)
@@ -716,17 +713,16 @@ def _stage(name: str, fn, *args):
     return f
 
 
-def _rows_batch(row, cols, batches: Iterator[pd.DataFrame]):
+def _one_row(row, doc_id: int):
     """Per-doc map: ``row(doc_id)`` -> one output tuple."""
-    for pdf in batches:
-        yield pd.DataFrame([row(int(d)) for d in pdf["doc_id"]], columns=cols)
+    return (row(doc_id),)
 
 
 def _map_docs(spark, sf_dir: str, row, ddl: str) -> DataFrame:
     """Map-only per-doc stage over the documents' doc_ids."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return docs.mapInPandas(
-        _stage(row.__name__, _rows_batch, row, _names(ddl)), ddl)
+    return map_rows(docs, ["doc_id"], ddl,
+                    _stage(row.__name__, _one_row, row))
 
 
 def _encoded(encode, doc_id: int):
@@ -740,21 +736,16 @@ def _corpus(spark, sf_dir: str, encode, col: str) -> DataFrame:
                      f"doc_id long, {col} binary")
 
 
-def _hash_batch(decode, col: str, batches: Iterator[pd.DataFrame]):
+def _hash_row(decode, doc_id: int, blob):
     """Decode the actual bytes -> grey plane -> dims, pixel sum, dHash."""
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf[col]):
-            w, h, bpp, px = decode(bytes(blob))
-            px = grey_plane(bpp, px)
-            rows.append((int(doc_id), w, h, sum(px), dhash_gray(w, h, px)))
-        yield pd.DataFrame(rows, columns=_names(_PHASH_DDL))
+    w, h, bpp, px = decode(bytes(blob))
+    px = grey_plane(bpp, px)
+    return ((doc_id, w, h, sum(px), dhash_gray(w, h, px)),)
 
 
 def _decode_dhash(corpus: DataFrame, decode, col: str) -> DataFrame:
-    return corpus.mapInPandas(
-        _stage(f"dhash_{decode.__name__}", _hash_batch, decode, col),
-        _PHASH_DDL)
+    return map_rows(corpus, ["doc_id", col], _PHASH_DDL,
+                    _stage(f"dhash_{decode.__name__}", _hash_row, decode))
 
 
 def _keep_min(decoded: DataFrame) -> DataFrame:
@@ -769,21 +760,16 @@ def _keep_min(decoded: DataFrame) -> DataFrame:
     )
 
 
-def _resize_batch(decode, col: str, batches: Iterator[pd.DataFrame]):
+def _resize_row(decode, doc_id: int, blob):
     """Decode -> NN resample to (2w div 3, 2h div 3) -> lossless PNG
     re-encode (a JPEG re-encode would re-quantize) -> decode AGAIN ->
     grey pixel sum of the final decode."""
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf[col]):
-            w, h, bpp, px = decode(bytes(blob))
-            nw, nh = max(1, w * 2 // 3), max(1, h * 2 // 3)
-            w2, h2, bpp2, px2 = decode_png_pixels(
-                _resample_plane(w, h, bpp, px, nw, nh))
-            assert (w2, h2) == (nw, nh)
-            rows.append((int(doc_id), w, h, nw, nh,
-                         sum(grey_plane(bpp2, px2))))
-        yield pd.DataFrame(rows, columns=_names(_RESIZE_DDL))
+    w, h, bpp, px = decode(bytes(blob))
+    nw, nh = max(1, w * 2 // 3), max(1, h * 2 // 3)
+    w2, h2, bpp2, px2 = decode_png_pixels(
+        _resample_plane(w, h, bpp, px, nw, nh))
+    assert (w2, h2) == (nw, nh)
+    return ((doc_id, w, h, nw, nh, sum(grey_plane(bpp2, px2))),)
 
 
 # --- oracle builders ---------------------------------------------------------
@@ -866,9 +852,10 @@ def _resize_pair(name: str):
     t = _TIERS[name]
 
     def query(spark, sf_dir: str) -> DataFrame:
-        return _corpus(spark, sf_dir, t.encode, t.col).mapInPandas(
-            _stage(f"resize_{t.decode.__name__}", _resize_batch, t.decode,
-                   t.col), _RESIZE_DDL
+        return map_rows(
+            _corpus(spark, sf_dir, t.encode, t.col), ["doc_id", t.col],
+            _RESIZE_DDL,
+            _stage(f"resize_{t.decode.__name__}", _resize_row, t.decode),
         ).orderBy("doc_id")
 
     def oracle_sql(docs: str = "documents") -> str:

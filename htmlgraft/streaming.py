@@ -23,7 +23,7 @@ from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
 
-from .job import RESULT_SCHEMA, make_parse_batch
+from .job import parse_extract
 
 PAGE_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -44,11 +44,9 @@ def stream_pages(spark, input_dir: str, max_files_per_trigger: int = 8) -> DataF
 
 
 def stream_parse_extract(pages: DataFrame, include_dom: bool = False) -> DataFrame:
-    """The batch parse UDF applied to a streaming DataFrame (stateless map)."""
-    cols = [c for c in ("url", "lang", "html") if c in pages.columns]
-    return pages.select(*cols).mapInPandas(
-        make_parse_batch(include_dom), RESULT_SCHEMA
-    )
+    """The batch parse stage applied to a streaming DataFrame (stateless
+    map, no repartition): the same columns, transport charset included."""
+    return parse_extract(pages, include_dom=include_dom, pre_partitioned=True)
 
 
 def start_results_sink(

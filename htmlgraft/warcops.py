@@ -33,7 +33,11 @@ Scale notes (Common Crawl is ~100 TB/crawl of exactly this format):
 
 from __future__ import annotations
 
+import calendar
+import hashlib
+import json
 import re
+import time
 from typing import Iterator
 
 import pandas as pd
@@ -47,6 +51,7 @@ from pyspark.sql.types import (
 )
 
 from .corpus import pages_df
+from .job import map_rows, parse_extract
 
 RECS_PER_FILE = 8
 
@@ -306,10 +311,7 @@ def run_warc_extract_text_http(spark, sf_dir: str) -> DataFrame:
     Content-Encoding / chunked-over-gzip, rotating per record) -> de-frame
     -> HTML parse -> main text.  Same oracle as extract_text — a single
     chunk-size line or DEFLATE byte leaking through breaks the hash."""
-    files = warc_http_files_df(spark, sf_dir).repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), "file_id"
-    )
-    return files.mapInPandas(_extract_batch, WARC_TEXT_SCHEMA)
+    return _warc_text(warc_http_files_df(spark, sf_dir))
 
 
 def run_warc_extract_text_gz(spark, sf_dir: str) -> DataFrame:
@@ -317,10 +319,7 @@ def run_warc_extract_text_gz(spark, sf_dir: str) -> DataFrame:
     HTML parse -> main text.  Same oracle as extract_text — compression
     framing must be invisible, which value-checks the member walker end to
     end (a single byte of framing drift breaks every downstream hash)."""
-    files = warc_gz_files_df(spark, sf_dir).repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), "file_id"
-    )
-    return files.mapInPandas(_extract_batch, WARC_TEXT_SCHEMA)
+    return _warc_text(warc_gz_files_df(spark, sf_dir))
 
 
 def split_http_response(
@@ -453,41 +452,12 @@ def http_charset(http_headers: dict | None) -> str | None:
     return m.group(1) if m else None
 
 
-def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .encoding import decode_html
-    from .job import parse_document
-
-    for pdf in batches:
-        urls, texts = [], []
-        for blob in pdf["warc"].tolist():
-            for headers, content in iter_warc_records(bytes(blob)):
-                if headers.get("warc-type") != "response":
-                    continue
-                # strip the HTTP message framing (real CC payloads), then
-                # the same WHATWG prescan as the batch parse path — with
-                # the HTTP Content-Type charset as the transport hint
-                http, body = split_http_response(content)
-                _, text, _, _, _ = parse_document(
-                    decode_html(body, transport=http_charset(http)),
-                    include_dom=False,
-                )
-                urls.append(headers["warc-target-uri"])
-                texts.append(text)
-        yield pd.DataFrame({"url": urls, "text": texts})
-
-
-def _stats_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"file_id": [], "n_records": [], "n_content_bytes": []}
-        for file_id, blob in zip(pdf["file_id"].tolist(), pdf["warc"].tolist()):
-            n_recs = n_bytes = 0
-            for _, content in iter_warc_records(bytes(blob)):
-                n_recs += 1
-                n_bytes += len(content)
-            out["file_id"].append(int(file_id))
-            out["n_records"].append(n_recs)
-            out["n_content_bytes"].append(n_bytes)
-        yield pd.DataFrame(out)
+def _stats_row(file_id, blob):
+    n_recs = n_bytes = 0
+    for _, content in iter_warc_records(bytes(blob)):
+        n_recs += 1
+        n_bytes += len(content)
+    return [(file_id, n_recs, n_bytes)]
 
 
 WARC_PAGES_SCHEMA = StructType(
@@ -499,24 +469,40 @@ WARC_PAGES_SCHEMA = StructType(
 )
 
 
-def _pages_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _warc_pages_row(blob):
     # body bytes pass through UNTOUCHED: the parse stage's WHATWG prescan
     # (htmlgraft/encoding.py) owns the decode — a utf-8 decode/re-encode
     # here would bake mojibake into non-UTF-8 pages before the charset
     # sniff could ever see the original bytes.  HTTP message framing is
     # stripped here (it is container plumbing, not page content) and its
     # Content-Type charset rides along as the transport-layer decode hint.
-    for pdf in batches:
-        urls, htmls, charsets = [], [], []
-        for blob in pdf["content"].tolist():
-            for headers, content in iter_warc_records(bytes(blob)):
-                if headers.get("warc-type") != "response":
-                    continue
-                http, body = split_http_response(content)
-                urls.append(headers["warc-target-uri"])
-                htmls.append(body)
-                charsets.append(http_charset(http))
-        yield pd.DataFrame({"url": urls, "html": htmls, "charset": charsets})
+    rows = []
+    for headers, content in iter_warc_records(bytes(blob)):
+        if headers.get("warc-type") != "response":
+            continue
+        http, body = split_http_response(content)
+        rows.append((headers["warc-target-uri"], body, http_charset(http)))
+    return rows
+
+
+def _by_file(files: DataFrame) -> DataFrame:
+    """(file_id, warc) rows spread over the session's shuffle partitions,
+    one whole file per row (the record chain is sequential within it)."""
+    conf = files.sparkSession.conf
+    parts = int(conf.get("spark.sql.shuffle.partitions", "32"))
+    return files.repartition(parts, "file_id")
+
+
+def _warc_text(files: DataFrame) -> DataFrame:
+    """(url, text) of the response records in (file_id, warc) files: the
+    ``read_warc_pages`` record walk feeding the parse stage, which maps
+    over the file partitions as they are (one shuffle, by file).  A page
+    the parser rejects keeps its url with empty text."""
+    pages = map_rows(_by_file(files), ["warc"], WARC_PAGES_SCHEMA,
+                     _warc_pages_row)
+    return parse_extract(
+        pages, include_dom=False, pre_partitioned=True
+    ).select("url", "text")
 
 
 def read_warc_pages(spark, path: str) -> DataFrame:
@@ -529,7 +515,7 @@ def read_warc_pages(spark, path: str) -> DataFrame:
     sequential record chain); downstream the salted url-hash repartition
     rebalances record counts across the cluster."""
     files = spark.read.format("binaryFile").load(path).select("content")
-    return files.mapInPandas(_pages_batch, WARC_PAGES_SCHEMA)
+    return map_rows(files, ["content"], WARC_PAGES_SCHEMA, _warc_pages_row)
 
 
 def wet_record_bytes(url: str, text: str) -> bytes:
@@ -640,33 +626,24 @@ WAT_LINKS_SCHEMA = StructType(
 )
 
 
-def _wat_links_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import json
-
-    for pdf in batches:
-        out = {k: [] for k in ("url", "title", "pos", "href", "anchor")}
-        for blob in pdf["content"].tolist():
-            for headers, content in iter_warc_records(bytes(blob)):
-                if headers.get("warc-type") != "metadata":
-                    continue
-                try:
-                    env = json.loads(
-                        content.decode("utf-8", errors="replace")
-                    )["Envelope"]
-                    url = env["WARC-Header-Metadata"]["WARC-Target-URI"]
-                    meta = env["Payload-Metadata"]["HTTP-Response-Metadata"][
-                        "HTML-Metadata"
-                    ]
-                except Exception:
-                    continue  # malformed envelope: skip record, keep the task
-                title = meta.get("Head", {}).get("Title", "")
-                for ln in meta.get("Links", []):
-                    out["url"].append(url)
-                    out["title"].append(title)
-                    out["pos"].append(int(ln["pos"]))
-                    out["href"].append(ln["url"])
-                    out["anchor"].append(ln["text"])
-        yield pd.DataFrame(out)
+def _wat_links_rows(blob):
+    rows = []
+    for headers, content in iter_warc_records(bytes(blob)):
+        if headers.get("warc-type") != "metadata":
+            continue
+        try:
+            env = json.loads(content.decode("utf-8", errors="replace"))[
+                "Envelope"]
+            url = env["WARC-Header-Metadata"]["WARC-Target-URI"]
+            meta = env["Payload-Metadata"]["HTTP-Response-Metadata"][
+                "HTML-Metadata"]
+            title = meta.get("Head", {}).get("Title", "")
+            links = [(url, title, int(ln["pos"]), ln["url"], ln["text"])
+                     for ln in meta.get("Links", [])]
+        except Exception:
+            continue  # malformed envelope or link: skip record, keep the task
+        rows += links
+    return rows
 
 
 def read_wat_links(spark, path: str) -> DataFrame:
@@ -675,7 +652,7 @@ def read_wat_links(spark, path: str) -> DataFrame:
     parse of each metadata record's envelope, gzip members by magic).
     Same binaryFile one-file-one-task shape as the WARC/WET readers."""
     files = spark.read.format("binaryFile").load(path).select("content")
-    return files.mapInPandas(_wat_links_batch, WAT_LINKS_SCHEMA)
+    return map_rows(files, ["content"], WAT_LINKS_SCHEMA, _wat_links_rows)
 
 
 def run_wat_roundtrip(spark, sf_dir: str) -> DataFrame:
@@ -707,20 +684,16 @@ def run_wat_roundtrip(spark, sf_dir: str) -> DataFrame:
         shutil.rmtree(out, ignore_errors=True)
 
 
-def _wet_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _wet_rows(blob):
     # Content-Length governs the slice (the walker already did it), so the
     # text may legally contain anything including CRLFCRLF; WET bodies are
     # UTF-8 by spec — decode with replace so one corrupt record on a real
     # crawl degrades to U+FFFD instead of killing the task.
-    for pdf in batches:
-        urls, texts = [], []
-        for blob in pdf["content"].tolist():
-            for headers, content in iter_warc_records(bytes(blob)):
-                if headers.get("warc-type") != "conversion":
-                    continue
-                urls.append(headers["warc-target-uri"])
-                texts.append(content.decode("utf-8", errors="replace"))
-        yield pd.DataFrame({"url": urls, "text": texts})
+    return [
+        (headers["warc-target-uri"], content.decode("utf-8", errors="replace"))
+        for headers, content in iter_warc_records(bytes(blob))
+        if headers.get("warc-type") == "conversion"
+    ]
 
 
 def read_wet_text(spark, path: str) -> DataFrame:
@@ -731,7 +704,7 @@ def read_wet_text(spark, path: str) -> DataFrame:
     magic, 'conversion' records only); one file per task, parallelism is
     file-count-bound, downstream repartitions rebalance."""
     files = spark.read.format("binaryFile").load(path).select("content")
-    return files.mapInPandas(_wet_batch, WARC_TEXT_SCHEMA)
+    return map_rows(files, ["content"], WARC_TEXT_SCHEMA, _wet_rows)
 
 
 def run_wet_roundtrip(spark, sf_dir: str) -> DataFrame:
@@ -745,8 +718,6 @@ def run_wet_roundtrip(spark, sf_dir: str) -> DataFrame:
     files)."""
     import shutil
     import tempfile
-
-    from .job import parse_extract
 
     out = tempfile.mkdtemp(prefix="wet_roundtrip_")
     try:
@@ -763,19 +734,14 @@ def run_warc_extract_text(spark, sf_dir: str) -> DataFrame:
     """Driver query: WARC files -> record walk -> HTML parse -> main text.
     Value-checked against the SAME oracle as extract_text — the container
     round-trip must be invisible."""
-    files = warc_files_df(spark, sf_dir).repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), "file_id"
-    )
-    return files.mapInPandas(_extract_batch, WARC_TEXT_SCHEMA)
+    return _warc_text(warc_files_df(spark, sf_dir))
 
 
 def run_warc_stats(spark, sf_dir: str) -> DataFrame:
     """Driver query: per-file record count + content byte total, straight
     from the record walker (Content-Length accounting)."""
-    files = warc_files_df(spark, sf_dir).repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), "file_id"
-    )
-    return files.mapInPandas(_stats_batch, WARC_STATS_SCHEMA)
+    return map_rows(_by_file(warc_files_df(spark, sf_dir)),
+                    ["file_id", "warc"], WARC_STATS_SCHEMA, _stats_row)
 
 
 CDX_SCHEMA = StructType(
@@ -790,32 +756,15 @@ CDX_SCHEMA = StructType(
 )
 
 
-def _cdx_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import calendar
-    import hashlib
-    import time
-
-    for pdf in batches:
-        out = {k: [] for k in
-               ("url", "file_id", "rec_offset", "rec_length", "ts_seconds",
-                "digest")}
-        for file_id, blob in zip(pdf["file_id"].tolist(), pdf["warc"].tolist()):
-            for headers, content, off, rlen in iter_warc_spans(bytes(blob)):
-                if headers.get("warc-type") != "response":
-                    continue
-                out["url"].append(headers["warc-target-uri"])
-                out["file_id"].append(int(file_id))
-                out["rec_offset"].append(off)
-                out["rec_length"].append(rlen)
-                out["ts_seconds"].append(
-                    calendar.timegm(
-                        time.strptime(
-                            headers["warc-date"], "%Y-%m-%dT%H:%M:%SZ"
-                        )
-                    )
-                )
-                out["digest"].append(hashlib.md5(content).hexdigest())
-        yield pd.DataFrame(out)
+def _cdx_rows(file_id, blob):
+    return [
+        (headers["warc-target-uri"], file_id, off, rlen,
+         calendar.timegm(time.strptime(headers["warc-date"],
+                                       "%Y-%m-%dT%H:%M:%SZ")),
+         hashlib.md5(content).hexdigest())
+        for headers, content, off, rlen in iter_warc_spans(bytes(blob))
+        if headers.get("warc-type") == "response"
+    ]
 
 
 def run_warc_cdx(spark, sf_dir: str) -> DataFrame:
@@ -834,10 +783,8 @@ def run_warc_cdx(spark, sf_dir: str) -> DataFrame:
     Scale: one map over file blobs (offsets are file-local, so no cross-
     file state) followed by nothing — a production job writes the CDX
     lines straight out per file."""
-    files = warc_files_df(spark, sf_dir).repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), "file_id"
-    )
-    return files.mapInPandas(_cdx_batch, CDX_SCHEMA)
+    return map_rows(_by_file(warc_files_df(spark, sf_dir)),
+                    ["file_id", "warc"], CDX_SCHEMA, _cdx_rows)
 
 
 def warc_cdx_oracle_sql() -> str:

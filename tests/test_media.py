@@ -7,6 +7,7 @@ import hashlib
 import struct
 
 from htmlgraft import media
+from htmlgraft.job import row_batches
 
 
 def _box(typ: bytes, payload: bytes) -> bytes:
@@ -289,7 +290,9 @@ def test_frame_sample_stride():
             b"not-a-container",           # skipped, no rows
         ],
     })
-    out = pd.concat(list(media._frame_sample_batch(iter([rows]))))
+    sample = row_batches(media._frame_sample_row, ["doc_id", "media"],
+                         media.FRAME_SAMPLE_SCHEMA.fieldNames())
+    out = pd.concat(list(sample(iter([rows]))))
     g1 = out[out["doc_id"] == 1]
     assert list(g1["frame_idx"]) == [0, 1, 2]
     assert (g1["n_frames"] == 3).all() and (g1["container"] == "mp4").all()
@@ -308,7 +311,9 @@ def test_resize_batch_end_to_end():
         "media": [_png(2048, 1024, payload), _gif(100, 50, payload),
                   _jpg(800, 1600, payload)],
     })
-    out = pd.concat(list(media._resize_batch(iter([rows])))).set_index("doc_id")
+    resize = row_batches(media._resize_row, ["doc_id", "media"],
+                         media.RESIZE_SCHEMA.fieldNames())
+    out = pd.concat(list(resize(iter([rows])))).set_index("doc_id")
     assert out.loc[1, "fmt"] == "png"
     assert (out.loc[1, "new_width"], out.loc[1, "new_height"]) == (512, 256)
     assert out.loc[2, "scale_permille"] == 1000  # already small: no-op plan

@@ -416,3 +416,67 @@ def test_parse_batch_restores_gc_state(was_enabled, close_early):
         assert gc.isenabled() is was_enabled
     finally:
         (gc.enable if prior else gc.disable)()
+
+
+# --- the shared row-map loop (job.row_batches / job.map_rows) ----------------
+
+def _explode(n, tag):
+    """Row function for the loop tests: ``n`` output rows per input row."""
+    return [(tag, k) for k in range(n)]
+
+
+def test_row_batches_maps_zero_one_and_many_rows():
+    import pandas as pd
+
+    from htmlgraft.job import row_batches
+
+    frame = pd.DataFrame({"n": [0, 1, 3], "tag": ["a", "b", "c"]})
+    out = list(row_batches(_explode, ["n", "tag"], ["tag", "k"])(iter([frame])))
+    assert len(out) == 1
+    assert list(out[0].itertuples(index=False, name=None)) == [
+        ("b", 0), ("c", 0), ("c", 1), ("c", 2)]
+
+
+def test_row_batches_empty_batch_keeps_column_names():
+    import pandas as pd
+
+    from htmlgraft.job import row_batches
+
+    frame = pd.DataFrame({"n": [0, 0], "tag": ["a", "b"]})
+    out = list(row_batches(_explode, ["n", "tag"], ["tag", "k"])(iter([frame])))
+    assert len(out) == 1 and len(out[0]) == 0
+    assert list(out[0].columns) == ["tag", "k"]
+
+
+def test_row_batches_byte_cap_splits_frames(monkeypatch):
+    """A frame is cut once its input rows carried MAX_BATCH_BYTES of binary
+    values; the rows and their order are unchanged."""
+    import pandas as pd
+
+    from htmlgraft import job
+
+    def size_row(doc_id, blob):
+        return [(doc_id, len(blob))]
+
+    frame = pd.DataFrame({"doc_id": [1, 2, 3, 4, 5],
+                          "blob": [b"x" * 6, b"x" * 6, b"x" * 20, b"", b"x"]})
+    batch = job.row_batches(size_row, ["doc_id", "blob"], ["doc_id", "n"])
+    (whole,) = batch(iter([frame]))
+    monkeypatch.setattr(job, "MAX_BATCH_BYTES", 10)
+    out = list(batch(iter([frame])))
+    assert [f["doc_id"].tolist() for f in out] == [[1, 2], [3], [4, 5]]
+    assert pd.concat(out).values.tolist() == whole.values.tolist()
+
+
+def test_map_rows_names_the_stage_after_the_row_function(spark):
+    from htmlgraft.job import map_rows
+
+    def explode_rows(n, tag):  # local: the workers cannot import tests/
+        return [(tag, k) for k in range(n)]
+
+    df = spark.createDataFrame([(0, "a"), (3, "c")], "n long, tag string")
+    out = map_rows(df, ["n", "tag"], "tag string, k long", explode_rows)
+    assert sorted(out.collect()) == [("c", 0), ("c", 1), ("c", 2)]
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted")
+    assert "MapInPandas" in plan and "explode_rows(" in plan

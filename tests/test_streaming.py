@@ -241,3 +241,17 @@ def test_stream_window_metrics_closes_all_real_windows(spark, sf_dir):
     got = {(r["hour_es"], r["lang"]): r["n_pages"] for r in rows}
     assert got == dict(want)
     assert all(r["n_bytes"] > 0 for r in rows)
+
+
+def test_stream_parse_extract_keeps_transport_charset(spark):
+    """A pages frame's ``charset`` column (the HTTP Content-Type hint
+    ``read_warc_pages`` carries) reaches the stream's decode as it does the
+    batch job's: koi8-r bytes with no meta tag come back as Cyrillic."""
+    html = ("<html><body><div id=main><p>Привет мир, это текст.</p></div>"
+            "</body></html>").encode("koi8-r")
+    pages = spark.createDataFrame(
+        [("http://k.example/", html, "koi8-r")],
+        "url string, html binary, charset string",
+    )
+    (row,) = stream_parse_extract(pages).collect()
+    assert "Привет мир, это текст." in row["text"]

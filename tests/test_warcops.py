@@ -370,19 +370,35 @@ def test_http_wrapped_warc_end_to_end(spark, tmp_path):
 def test_http_wrapped_warc_extract_batch(spark, sf_dir):
     """run_warc_extract_text's record walk applies the same HTTP split:
     hand-built gz file with an HTTP-wrapped record."""
-    import pandas as pd
-
-    from htmlgraft.warcops import (
-        WARC_TEXT_SCHEMA, _extract_batch, gzip_member,
-    )
+    from htmlgraft.warcops import _warc_text, gzip_member
 
     body = (b"<html><body><div id=main><p>alpha beta</p></div>"
             b"<footer><a href=/x>t</a></footer></body></html>")
     blob = gzip_member(_http_rec("http://h.example/2", body))
-    out = pd.concat(_extract_batch(iter([pd.DataFrame({"warc": [blob]})])))
+    files = spark.createDataFrame([(0, blob)], "file_id long, warc binary")
+    out = _warc_text(files).toPandas()
     assert list(out["url"]) == ["http://h.example/2"]
     assert "alpha beta" in out["text"].iloc[0]
     assert "HTTP/1.1" not in out["text"].iloc[0]
+
+
+def test_warc_text_keeps_pages_the_parser_rejects(spark):
+    """The warc_extract_text* path parses through the job's parse stage:
+    a page the parser raises on (``<constructor>`` -> ParseQuirkError)
+    keeps its url with empty text, and the rest of the file comes back."""
+    from htmlgraft.warcops import _warc_text
+
+    good = _rec("http://e.example/good",
+                b"<html><body><div id=main><p>alpha beta</p></div>"
+                b"</body></html>")
+    bad = _rec("http://e.example/bad",
+               b"<html><body><constructor>x</constructor></body></html>")
+    files = spark.createDataFrame([(0, good + bad)],
+                                  "file_id long, warc binary")
+    got = {r["url"]: r["text"] for r in _warc_text(files).collect()}
+    assert set(got) == {"http://e.example/good", "http://e.example/bad"}
+    assert "alpha beta" in got["http://e.example/good"]
+    assert got["http://e.example/bad"] == ""
 
 
 # --- HTTP body de-framing (chunked transfer coding, Content-Encoding) ---------
@@ -591,9 +607,10 @@ def test_write_wat_files_and_read_back(spark, tmp_path):
 
 
 def test_read_wat_links_skips_malformed_and_foreign_records(spark, tmp_path):
-    """One invalid-JSON metadata record and one request record in the same
-    file must be skipped without killing the task; the good record's links
-    still come through."""
+    """One invalid-JSON metadata record, one record whose link has no
+    ``pos`` and one request record in the same file must be skipped
+    without killing the task; the good record's links still come
+    through."""
     from htmlgraft.warcops import read_wat_links, wat_record_bytes
 
     good = wat_record_bytes(
@@ -601,12 +618,17 @@ def test_read_wat_links_skips_malformed_and_foreign_records(spark, tmp_path):
         _wat_envelope("http://w.example/ok", "t", [(1, "/x", "a")]),
     )
     bad = wat_record_bytes("http://w.example/bad", '{"Envelope": nope')
+    nopos = wat_record_bytes(
+        "http://w.example/nopos",
+        _wat_envelope("http://w.example/nopos", "t",
+                      [(1, "/y", "b")]).replace('"pos":1,', ""),
+    )
     req = (b"WARC/1.0\r\nWARC-Type: request\r\n"
            b"WARC-Target-URI: http://skip.example/\r\n"
            b"Content-Length: 2\r\n\r\nhi\r\n\r\n")
     d = tmp_path / "wat"
     d.mkdir()
-    (d / "a.wat").write_bytes(bad + req + good)
+    (d / "a.wat").write_bytes(bad + req + nopos + good)
     got = [(r["url"], r["title"], r["pos"], r["href"], r["anchor"])
            for r in read_wat_links(spark, str(d)).collect()]
     assert got == [("http://w.example/ok", "t", 1, "/x", "a")]
