@@ -70,15 +70,6 @@ class Frame:
         return frame
 
 
-class _Cursor:
-    __slots__ = ("index", "frame", "done")
-
-    def __init__(self, index, frame, done=False):
-        self.index = index
-        self.frame = frame
-        self.done = done
-
-
 class TreeBuilder:
     __slots__ = (
         "root", "tip", "stack", "formatting", "allOpened",
@@ -103,18 +94,18 @@ class TreeBuilder:
         self.openHandler = handler
 
     # --- querying (treebuilder.js:130-177) ---
+    # The finders return a stack index, or None when nothing qualifies.
 
     def find_closable_ancestor(self, name, kind):
         stack = self.stack
         i = len(stack) - 1
         frame = stack[i]
         if frame.name == name:
-            return _Cursor(i, frame)
+            return i
         if frame.closableAncestors & kind:
             for i in range(i - 1, -1, -1):
-                frame = stack[i]
-                if frame.name == name:
-                    return _Cursor(i, frame)
+                if stack[i].name == name:
+                    return i
         return None
 
     def find_closable_ancestor_by_kind(self, kind):
@@ -122,24 +113,24 @@ class TreeBuilder:
         i = len(stack) - 1
         frame = stack[i]
         if frame.kind == kind:
-            return _Cursor(i, frame)
+            return i
         if frame.closableAncestors & kind:
             for i in range(i - 1, -1, -1):
-                frame = stack[i]
-                if frame.kind & kind:
-                    return _Cursor(i, frame)
+                if stack[i].kind & kind:
+                    return i
         return None
 
     def _find_closable_ancestor_for(self, name, kind):
-        # ancestors to close before an open tag (escalate)
+        # ancestors to close before an open tag (escalate); returns
+        # (index, done): done when the frame at index takes the kind itself
         if kind & self.tip.rule.escalate:
             stack = self.stack
             for i in range(len(stack) - 2, -1, -1):
                 frame = stack[i]
                 if kind & frame.rule.content:
-                    return _Cursor(i, frame, True)
+                    return i, True
                 if kind & frame.rule.pathsFor:
-                    return _Cursor(i, frame, False)
+                    return i, False
         return None
 
     def _find_path_towards(self, name, kind):
@@ -199,16 +190,18 @@ class TreeBuilder:
         return False
 
     def try_close(self, name, kind):
-        cursor = self.find_closable_ancestor(name, kind)
-        if cursor is not None and self._close(cursor.index):
-            return True
-        return False
+        index = self.find_closable_ancestor(name, kind)
+        if index is None:
+            return False
+        self._close(index)
+        return True
 
     def try_close_by_kind(self, kind):
-        cursor = self.find_closable_ancestor_by_kind(kind)
-        if cursor is not None and self._close(cursor.index):
-            return True
-        return False
+        index = self.find_closable_ancestor_by_kind(kind)
+        if index is None:
+            return False
+        self._close(index)
+        return True
 
     # --- the escalate/extend loop (treebuilder.js:246-279) ---
 
@@ -217,10 +210,11 @@ class TreeBuilder:
             if kind & self.tip.rule.content:
                 return True
 
-            cursor = self._find_closable_ancestor_for(name, kind)
-            if cursor is not None:
-                self._close(cursor.index + 1)
-                if cursor.done:
+            found = self._find_closable_ancestor_for(name, kind)
+            if found is not None:
+                index, done = found
+                self._close(index + 1)
+                if done:
                     return True
 
             path, done = self._find_path_towards(name, kind)
@@ -244,16 +238,14 @@ class TreeBuilder:
     # --- tree mutation (treebuilder.js:283-307) ---
 
     def _close(self, index):
+        # pops stack[index:]; the popped frames go on the formatting list
+        # top first, as the reference pops them one by one
         stack = self.stack
-        formatting = self.formatting
-        closes = []
-        frame = None
-        while len(stack) > index:
-            frame = stack.pop()
-            closes.append(frame)
-            formatting.append(frame)
-        if frame.kind & _C_FormattingElement and formatting:
-            formatting.pop()
+        frame = stack[index]
+        self.formatting.extend(reversed(stack[index:]))
+        del stack[index:]
+        if frame.kind & _C_FormattingElement:
+            self.formatting.pop()
         tip = stack[-1]
         self.tip = tip
 
@@ -265,7 +257,6 @@ class TreeBuilder:
                 stack.append(tip)
                 self.tip = tip
             # else: reference quirk -- the popped tip is NOT pushed back
-        return closes
 
     # --- formatting reconstruction (treebuilder.js:312-330) ---
 

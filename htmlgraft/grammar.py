@@ -77,6 +77,8 @@ class Rule:
         "paths",
         "siblingRules",
         "allowAutoClose",
+        "appendsText",
+        "mergesText",
     )
 
     def __init__(self, name: str, r: dict):
@@ -91,6 +93,18 @@ class Rule:
         self.paths = r["paths"]
         self.siblingRules = r["siblingRules"]
         self.allowAutoClose = r["allowAutoClose"]
+        # Precomputed for the parser's text fast paths.  appendsText: the
+        # tip takes a TEXT child as it is (no escalate/extend), and
+        # appending it cannot change the tip's rule.  mergesText: the same
+        # holds for a SPACE child, and neither is a foster-parent trap (see
+        # ``Parser.can_merge_text``).
+        text, space = C["TEXT"], C["SPACE"]
+        self.appendsText = bool(self.content & text) and not self.siblingRules
+        self.mergesText = (
+            self.appendsText
+            and bool(self.content & space)
+            and not self.trap & (text | space)
+        )
 
     def __repr__(self) -> str:  # pragma: no cover
         return f"<Rule {self.name}>"
@@ -161,13 +175,22 @@ _C_p = T.VECTORS["p"]
 _C_table = T.VECTORS["table"]
 _C_select = T.VECTORS["select"]
 _CR_CTX_MASK = _C_p | _C_table | _C_select
-_CR_MEMO = {}
+# HTML-namespace results memo: one dict per context value
+# (closableAncestors & _CR_CTX_MASK, 8 values), keyed by tag name.
 # Bound on the memo: only names with an explicit rule get their own key.
 # Every other (non-proto-key) name resolves to the ruleset's #default with no
 # name-dependent special-casing, so all unknown names share one sentinel key
 # per ctx — the memo stays O(|rule tables| * 8 ctx values) no matter how many
 # distinct made-up tag names a document emits (long-lived executor workers
-# must not grow document-controlled caches).
+# must not grow document-controlled caches).  <input> is never stored: its
+# class depends on type=hidden, so a hit on the name alone would be wrong.
+# ``Parser.write_tag`` reads this memo in place before calling child_rule, so
+# a hit must always be exactly what child_rule would return.
+_CR_MEMO = {
+    ctx: {}
+    for ctx in {a | b | c for a in (0, _C_p) for b in (0, _C_table)
+                for c in (0, _C_select)}
+}
 _CR_KNOWN = frozenset(HTML_RULES) | frozenset(PHRASING_RULES)
 _CR_UNKNOWN = "\x00#unknown"
 
@@ -209,23 +232,24 @@ def child_rule(name: str, attrs, frame):
 
     # Hot HTML-namespace path: the result is a pure function of
     # (name, closableAncestors & (p|table|select)) except for <input>,
-    # whose class depends on type=hidden — memoized accordingly.
+    # whose class depends on type=hidden.
     ctx = frame.closableAncestors & _CR_CTX_MASK
-    if not attrs or name != "input":
-        if name in _CR_KNOWN:
-            key = (name, ctx)
-        elif name not in JS_PROTO_KEYS:
-            key = (_CR_UNKNOWN, ctx)
-        else:
-            # proto-key names must raise per call, never be memoized
-            return _child_rule_html(name, attrs, ctx)
-        hit = _CR_MEMO.get(key)
-        if hit is not None:
-            return hit
-        res = _child_rule_html(name, attrs, ctx)
-        _CR_MEMO[key] = res
-        return res
-    return _child_rule_html(name, attrs, ctx)
+    memo = _CR_MEMO[ctx]
+    hit = memo.get(name)
+    if hit is not None:
+        return hit
+    if name in _CR_KNOWN:
+        hit = _child_rule_html(name, attrs, ctx)
+        if name != "input":
+            memo[name] = hit
+        return hit
+    if name in JS_PROTO_KEYS:
+        # proto-key names must raise per call, never be memoized
+        return _child_rule_html(name, attrs, ctx)
+    hit = memo.get(_CR_UNKNOWN)
+    if hit is None:
+        hit = memo[_CR_UNKNOWN] = _child_rule_html(name, attrs, ctx)
+    return hit
 
 
 def _child_rule_html(name: str, attrs, ctx: int):

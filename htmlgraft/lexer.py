@@ -6,18 +6,24 @@ longest-match semantics (tokeniser.js:114-130); the outer loop dispatches on
 the lexical token type and assembles start/end tags, comments, doctypes and
 character references (tokeniser.js:132-382), calling the delegate's
 ``write_tag / write_end_tag / write_data / write_space / write_comment /
-write_doctype / write_eof`` methods.  Each delegate call returns the current
-parser context bitvector (the tree builder's ``tip.kind``), which selects the
-next DFA start state (RawText/RcData vs Main, foreign-content suppression of
-the content map; tokeniser.js:175-179, 265-268).
+write_doctype / write_eof`` methods.  Each tag delegate call returns the
+current parser context bitvector (the tree builder's ``tip.kind``), which
+selects the next DFA start state (RawText/RcData vs Main, foreign-content
+suppression of the content map; tokeniser.js:175-179, 265-268).  The
+delegate never calls back into the tokeniser, so ``write`` keeps the whole
+lexer state in locals and stores it once, when it returns.
 
-Performance: for the hot "run" states (Main text, rawtext, rcdata, quoted
-values, comment/bogus data) a compiled regex extends the token in C instead of
-stepping the DFA per character.  The regexes are equivalent to the DFA's
-longest match from those states; where they may split a run that the DFA
-would lex as one token (comment data around '-') the outer loop accumulates
-chunks so the result is identical.  Equivalence with the generic DFA loop is
-asserted in tests/test_lexer.py.
+Performance: in the Main state one dispatch on the first character picks a
+whole-tag regex (end tag or start tag, see ``_RE_FASTSTART``) or a text-run
+regex, and a match emits its token directly.  For the other hot "run"
+states (rawtext, rcdata, quoted values, comment/bogus data) a compiled regex
+extends the token in C instead of stepping the DFA per character.  The
+regexes are equivalent to the DFA's longest match from those states; where
+they may split a run that the DFA would lex as one token (comment data
+around '-') the outer loop accumulates chunks so the result is identical.
+Anything they do not match takes the generic DFA loop.  Equivalence with
+that loop is asserted in tests/test_lexer_goldens.py
+(``test_fast_paths_match_generic_dfa``).
 
 Deliberate reference quirks preserved:
 * The char U+0080 hits index 128 of the 128-entry eqClass table (undefined in
@@ -127,7 +133,7 @@ _CONTENT_MAP = {
 _TAGISH = re.compile(r"[?/!a-zA-Z]")
 
 # --- fast-path run regexes (see module docstring) ---
-# (token_type, compiled_regex) per entry state; Main has two alternatives.
+# One per entry state; Main's has two alternatives (text run, space run).
 _RE_MAIN = re.compile("(?:[^\x00\r\n\t &<\x80]+)|(?P<sp>[\t ]+)")
 _RE_RAW = re.compile("[^\x00\r\n<\x80]+")
 _RE_RCD = re.compile("[^\x00\r\n<&\x80]+")
@@ -158,7 +164,8 @@ _RE_MERGED = re.compile("[\t ]*[^\x00\r\n\t &<\x80][^\x00\r\n&<\x80]*")
 # exact, no NUL / CR / U+0080 / '&' anywhere): any tag the regex cannot match
 # falls through to the generic DFA loop, so the fast path can only ever agree
 # with it.  Verified semantics it replicates exactly (probed against the
-# generic path; equivalence-tested in tests/test_lexer_goldens.py):
+# generic path; equivalence-tested in tests/test_lexer_goldens.py), with the
+# attributes read back by ``_RE_FASTATTR.findall``:
 # * attr spaces around '=' bind the value ('x = 1' -> x=1);
 # * unquoted values take every non-space/>&-char including '/', '<', quotes;
 # * first-name-wins incl. the JS Object.prototype-key quirk;
@@ -274,9 +281,18 @@ class Tokeniser:
         self._reset()
 
     def write(self, s: str) -> None:  # noqa: C901 - mirrors the reference switch
+        # The lexer state lives in locals until the end of the call (see the
+        # module docstring).  The fast-path regexes are read from the module
+        # here, per call, so a test can swap them out.
         length = len(s)
         delegate = self.delegate
+        write_tag = delegate.write_tag
+        write_end_tag = delegate.write_end_tag
+        write_data = delegate.write_data
         can_merge = self.can_merge
+        re_merged = _RE_MERGED
+        re_faststart = _RE_FASTSTART
+        re_fastend = _RE_FASTEND
         table = _TABLE
         eq = _EQ
         pos = self.pos
@@ -285,25 +301,63 @@ class Tokeniser:
         token_state = self.token_state
         tag = self.tag
         attr = self.attr
+        parser_context = self.parser_context
+        last_start_tag = self.last_start_tag
+        line = self.line
+        lastnl = self.lastnl
 
         while pos < length:
-            # --- fast path: extend run tokens with a C-level regex ---
             token_type = 0
-            if token_state == S_MAIN:
-                # one char peek gates the regex attempts: at '<' the text
-                # regexes always fail, elsewhere the tag regexes always
-                # fail — skip the guaranteed-miss C calls
-                if s[pos] != "<":
-                    if tag is None and can_merge is not None and can_merge():
-                        m = _RE_MERGED.match(s, pos)
+            if token_state == S_MAIN and tag is None:
+                # one dispatch on the first character: fast end tag, fast
+                # start tag, or a text run; anything else (and any tag the
+                # whole-tag regexes reject) takes the generic DFA loop
+                if s[pos] == "<":
+                    if s[pos + 1 : pos + 2] == "/":
+                        m = re_fastend.match(s, pos)
+                        if m is not None:
+                            anchor = end = pos = m.end()
+                            parser_context = write_end_tag(EndTag(m[1]))
+                            continue
+                    else:
+                        m = re_faststart.match(s, pos)
+                        if m is not None:
+                            name, raw_attrs = m.groups()
+                            mend = m.end()
+                            last_start_tag = name
+                            el = Element(name)
+                            if raw_attrs:
+                                attrs = el.attrs = {}
+                                for an, dq, sq, uq in _RE_FASTATTR.findall(raw_attrs):
+                                    if an in attrs or an in JS_PROTO_KEYS:
+                                        continue
+                                    attrs[an] = dq or sq or uq
+                            if s[mend - 2] == "/":
+                                el.selfclose = True
+                            anchor = end = pos = mend
+                            parser_context = pc = write_tag(el)
+                            token_state = (
+                                _CONTENT_MAP.get(name, S_MAIN)
+                                if not (pc & _FOREIGN) else S_MAIN
+                            )
+                            continue
+                else:
+                    if can_merge is not None and can_merge():
+                        m = re_merged.match(s, pos)
                         if m is not None:
                             end = m.end()
-                            token_type = _data
-                    if not token_type:
-                        m = _RE_MAIN.match(s, pos)
-                        if m is not None:
-                            end = m.end()
-                            token_type = _space if m.lastgroup == "sp" else _data
+                            write_data(s[pos:end])
+                            anchor = pos = end
+                            continue
+                    m = _RE_MAIN.match(s, pos)
+                    if m is not None:
+                        end = m.end()
+                        if m.lastindex is None:
+                            write_data(s[pos:end])
+                            anchor = pos = end
+                            continue
+                        token_type = _space
+            # --- fast path: extend run tokens with a C-level regex ---
             elif token_state == S_RAWTEXT:
                 m = _RE_RAW.match(s, pos)
                 if m is not None:
@@ -343,49 +397,6 @@ class Tokeniser:
             if token_type:
                 pos = end
             else:
-                # --- whole-tag fast path (see _RE_FASTSTART above) ---
-                if token_state == S_MAIN and tag is None and s[pos] == "<":
-                    nxt = s[pos + 1] if pos + 1 < length else ""
-                    m = _RE_FASTSTART.match(s, pos) if nxt != "/" else None
-                    if m is not None:
-                        name = m.group(1)
-                        mend = m.end()
-                        self.last_start_tag = name
-                        el = Element(name)
-                        raw_attrs = m.group(2)
-                        if raw_attrs:
-                            attrs = el.attrs = {}
-                            for am in _RE_FASTATTR.finditer(raw_attrs):
-                                an = am.group(1)
-                                if an in attrs or an in JS_PROTO_KEYS:
-                                    continue
-                                v = am.group(2)
-                                if v is None:
-                                    v = am.group(3)
-                                    if v is None:
-                                        v = am.group(4)
-                                        if v is None:
-                                            v = ""
-                                attrs[an] = v
-                        if s[mend - 2] == "/":
-                            el.selfclose = True
-                        anchor = end = pos = mend
-                        self._sync(pos, anchor, end, token_state, None, None)
-                        pc = delegate.write_tag(el)
-                        self.parser_context = pc
-                        token_state = (
-                            _CONTENT_MAP.get(name, S_MAIN)
-                            if not (pc & _FOREIGN) else S_MAIN
-                        )
-                        continue
-                    m = _RE_FASTEND.match(s, pos)
-                    if m is not None:
-                        anchor = end = pos = m.end()
-                        self._sync(pos, anchor, end, token_state, None, None)
-                        self.parser_context = delegate.write_end_tag(
-                            EndTag(m.group(1))
-                        )
-                        continue
                 # --- generic DFA longest-match loop (tokeniser.js:114-130) ---
                 state = token_state
                 match = S_FAIL
@@ -412,7 +423,7 @@ class Tokeniser:
                 if attr is not None:
                     attr[1] += s[anchor:end]
                 else:
-                    delegate.write_data(s[anchor:end])
+                    write_data(s[anchor:end])
 
             elif token_type == _space:
                 if tag is None:
@@ -424,16 +435,14 @@ class Tokeniser:
                         allow_foster = not tagish
                     else:
                         allow_foster = True
-                    self._sync(pos, anchor, end, token_state, tag, attr)
                     delegate.write_space(s[anchor:end], allow_foster)
                 elif attr is not None:
                     attr[1] += s[anchor:end]
 
             elif token_type == _newline:
-                self.lastnl = pos
-                self.line += 1
+                lastnl = pos
+                line += 1
                 if tag is None:
-                    self._sync(pos, anchor, end, token_state, tag, attr)
                     delegate.write_space("\n")  # newline normalisation
                 elif attr is not None:
                     attr[1] += "\n"
@@ -442,10 +451,8 @@ class Tokeniser:
                 name = s[anchor + 1 : end - 1]
                 if token_type == _startTag_:
                     name = name.lower()
-                self.last_start_tag = name
-                self._sync(pos, anchor, end, token_state, tag, attr)
-                pc = delegate.write_tag(Element(name))
-                self.parser_context = pc
+                last_start_tag = name
+                parser_context = pc = write_tag(Element(name))
                 token_state = (
                     _CONTENT_MAP.get(name, S_MAIN) if not (pc & _FOREIGN) else S_MAIN
                 )
@@ -455,7 +462,7 @@ class Tokeniser:
                 name = s[anchor + 1 : end]
                 if token_type == _startTagStart_:
                     name = name.lower()
-                self.last_start_tag = name
+                last_start_tag = name
                 tag = Element(name)
                 self.emit = "tag"
                 token_state = S_BEFORE_ATTRIBUTE
@@ -464,24 +471,23 @@ class Tokeniser:
                 name = s[anchor + 2 : end - 1]
                 if token_type == _endTag_:
                     name = name.lower()
-                if token_state == S_MAIN or self.last_start_tag == name:
-                    self._sync(pos, anchor, end, token_state, tag, attr)
-                    self.parser_context = delegate.write_end_tag(EndTag(name))
+                if token_state == S_MAIN or last_start_tag == name:
+                    parser_context = write_end_tag(EndTag(name))
                     token_state = S_MAIN
                     tag = attr = None
                 else:
-                    delegate.write_data(s[anchor:end])
+                    write_data(s[anchor:end])
 
             elif token_type == _endTagStart or token_type == _endTagStart_:
                 name = s[anchor + 2 : end]
                 if token_type == _endTagStart_:
                     name = name.lower()
-                if token_state == S_MAIN or self.last_start_tag == name:
+                if token_state == S_MAIN or last_start_tag == name:
                     tag = EndTag(name)
                     self.emit = "end_tag"
                     token_state = S_BEFORE_ATTRIBUTE
                 else:
-                    delegate.write_data(s[anchor:end])
+                    write_data(s[anchor:end])
 
             elif token_type == _attributeName or token_type == _attributeName_:
                 if tag.attrs is None:
@@ -513,12 +519,10 @@ class Tokeniser:
                 if end >= 2 and s[end - 2] == "/":
                     if isinstance(tag, Element):
                         tag.selfclose = True
-                self._sync(pos, anchor, end, token_state, tag, attr)
                 is_element = isinstance(tag, Element)
-                pc = self._emit_tag(tag)
-                self.parser_context = pc
+                parser_context = pc = self._emit_tag(tag)
                 token_state = (
-                    _CONTENT_MAP.get(self.last_start_tag, S_MAIN)
+                    _CONTENT_MAP.get(last_start_tag, S_MAIN)
                     if is_element and not (pc & _FOREIGN)
                     else S_MAIN
                 )
@@ -554,18 +558,17 @@ class Tokeniser:
                 token_state = S_IN_COMMENT_DATA
 
             elif token_type == _commentEnd or token_type == _bogusEnd:
-                self._sync(pos, anchor, end, token_state, tag, attr)
-                self.parser_context = self._emit_tag(tag)
+                parser_context = self._emit_tag(tag)
                 tag = attr = None
                 token_state = S_MAIN
 
             elif token_type == _nulls:
-                if (self.parser_context & _FOREIGN) or token_state != S_MAIN:
+                if (parser_context & _FOREIGN) or token_state != S_MAIN:
                     replaced = "�" * (end - anchor)
                     if tag is not None and isinstance(tag, Comment):
                         tag.data.append(replaced)
                     else:
-                        delegate.write_data(replaced)
+                        write_data(replaced)
 
             elif token_type == _charRefHex or token_type == _charRefDecimal:
                 if token_type == _charRefHex:
@@ -574,7 +577,7 @@ class Tokeniser:
                     base, start = 10, anchor + 2
                 decoded = _parse_numeric(s[start:end], base)
                 if tag is None:
-                    delegate.write_data(decoded)
+                    write_data(decoded)
                 elif attr is not None:
                     attr[1] += decoded
                 if token_state == S_BEFORE_VALUE:
@@ -584,7 +587,7 @@ class Tokeniser:
                 ref = s[anchor + 1 : end]
                 decoded = _NAMED_REFS.get(ref) or s[anchor:end]
                 if tag is None:
-                    delegate.write_data(decoded)
+                    write_data(decoded)
                 elif attr is not None:
                     attr[1] += decoded
                 if token_state == S_BEFORE_VALUE:
@@ -592,21 +595,21 @@ class Tokeniser:
 
             elif token_type == _commentDataNL:
                 tag.data.append("\n")
-                self.lastnl = pos
-                self.line += 1
+                lastnl = pos
+                line += 1
                 token_state = S_IN_COMMENT_DATA
 
             elif token_type == _tagSpaceNL:
-                self.lastnl = pos
-                self.line += 1
+                lastnl = pos
+                line += 1
                 # don't change entry state
 
             elif token_type == _attrSpaceNL:
                 if attr is not None:
                     tag.attrs[attr[0]] = attr[1]
                     attr = None
-                self.lastnl = pos
-                self.line += 1
+                lastnl = pos
+                line += 1
                 token_state = S_BEFORE_ATTRIBUTE
 
             elif token_type == _tagSpace:
@@ -626,9 +629,7 @@ class Tokeniser:
                 token_state = S_BEFORE_ATTRIBUTE
 
             elif token_type == _errorToken:
-                raise LexerError(
-                    f"Lexer error at line {self.line}:{pos - self.lastnl}"
-                )
+                raise LexerError(f"Lexer error at line {line}:{pos - lastnl}")
 
             else:
                 raise LexerError(f"unknown token {token_type}")
@@ -641,15 +642,10 @@ class Tokeniser:
         self.token_state = token_state
         self.tag = tag
         self.attr = attr
-
-    def _sync(self, pos, anchor, end, token_state, tag, attr):
-        # keep attribute state visible across delegate re-entrancy
-        self.pos = pos
-        self.anchor = anchor
-        self.end = end
-        self.token_state = token_state
-        self.tag = tag
-        self.attr = attr
+        self.parser_context = parser_context
+        self.last_start_tag = last_start_tag
+        self.line = line
+        self.lastnl = lastnl
 
     def _emit_tag(self, tag):
         d = self.delegate

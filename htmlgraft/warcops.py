@@ -476,12 +476,14 @@ def _warc_pages_row(blob):
     # sniff could ever see the original bytes.  HTTP message framing is
     # stripped here (it is container plumbing, not page content) and its
     # Content-Type charset rides along as the transport-layer decode hint.
+    # A record with no WARC-Target-URI has no page to name: it is skipped.
     rows = []
     for headers, content in iter_warc_records(bytes(blob)):
-        if headers.get("warc-type") != "response":
+        uri = headers.get("warc-target-uri")
+        if headers.get("warc-type") != "response" or uri is None:
             continue
         http, body = split_http_response(content)
-        rows.append((headers["warc-target-uri"], body, http_charset(http)))
+        rows.append((uri, body, http_charset(http)))
     return rows
 
 
@@ -688,11 +690,13 @@ def _wet_rows(blob):
     # Content-Length governs the slice (the walker already did it), so the
     # text may legally contain anything including CRLFCRLF; WET bodies are
     # UTF-8 by spec — decode with replace so one corrupt record on a real
-    # crawl degrades to U+FFFD instead of killing the task.
+    # crawl degrades to U+FFFD instead of killing the task.  A record with
+    # no WARC-Target-URI is skipped.
     return [
         (headers["warc-target-uri"], content.decode("utf-8", errors="replace"))
         for headers, content in iter_warc_records(bytes(blob))
         if headers.get("warc-type") == "conversion"
+        and "warc-target-uri" in headers
     ]
 
 
@@ -756,14 +760,29 @@ CDX_SCHEMA = StructType(
 )
 
 
+_WARC_FRACTION = re.compile(r"\.[0-9]+Z\Z")
+
+
+def _warc_seconds(date: str) -> int:
+    """WARC-Date (``2024-01-01T00:00:00Z``) as whole UTC seconds since the
+    epoch.  WARC 1.1 allows a fraction of a second
+    (``2024-01-01T00:00:00.123Z``); it is truncated.  Anything else
+    ``strptime`` rejects raises ``ValueError``."""
+    m = _WARC_FRACTION.search(date)
+    if m is not None:
+        date = date[:m.start()] + "Z"
+    return calendar.timegm(time.strptime(date, "%Y-%m-%dT%H:%M:%SZ"))
+
+
 def _cdx_rows(file_id, blob):
+    # a response record with no WARC-Target-URI is skipped
     return [
         (headers["warc-target-uri"], file_id, off, rlen,
-         calendar.timegm(time.strptime(headers["warc-date"],
-                                       "%Y-%m-%dT%H:%M:%SZ")),
+         _warc_seconds(headers["warc-date"]),
          hashlib.md5(content).hexdigest())
         for headers, content, off, rlen in iter_warc_spans(bytes(blob))
         if headers.get("warc-type") == "response"
+        and "warc-target-uri" in headers
     ]
 
 

@@ -6,6 +6,7 @@ import pathlib
 
 import pytest
 
+from htmlgraft import Parser, lexer, print_tree
 from htmlgraft.lexer import Tokeniser
 from htmlgraft.nodes import Comment, Doctype
 
@@ -102,3 +103,65 @@ def test_token_stream_golden(fx):
     ours = _coalesce_chunks(_tokenize(fx["input"]))
     ref = _coalesce_chunks(fx["tokens"])
     assert ours == ref
+
+
+# --- fast paths vs the generic DFA loop -------------------------------------
+
+class _NeverMatches:
+    """Stands in for a fast-path regex: counts the lexer's attempts and
+    matches nothing, so every token takes the generic DFA loop."""
+
+    def __init__(self):
+        self.calls = 0
+
+    def match(self, s, pos=0):
+        self.calls += 1
+        return None
+
+
+def _page_inputs():
+    out = []
+    for name in ("pages_sample.jsonl", "pages_adversarial.jsonl"):
+        out += [(p["url"], p["html"]) for p in _load(name)]
+    return out
+
+
+FAST_PATH_INPUTS = [(f["id"], f["input"]) for f in TOKENS] + _page_inputs()
+
+
+def _outcomes(inputs):
+    """Per input: the coalesced token stream (recording delegate, which
+    has no ``can_merge_text``) and the printed tree (live parser, which
+    does), or the error type where the input raises."""
+    out = {}
+    for key, s in inputs:
+        try:
+            tokens = _coalesce_chunks(_tokenize(s))
+        except Exception as e:  # the error type is compared across runs
+            tokens = type(e).__name__
+        try:
+            p = Parser()
+            t = Tokeniser(p)
+            t.parse(s)
+            t.end_input()
+            tree = print_tree(p.document)
+        except Exception as e:  # the error type is compared across runs
+            tree = type(e).__name__
+        out[key] = (tokens, tree)
+    return out
+
+
+def test_fast_paths_match_generic_dfa(monkeypatch):
+    """The whole-tag regexes and the merged-text regex only ever agree with
+    the DFA: with all three swapped for patterns that never match, every
+    input gives the same coalesced token stream and the same tree."""
+    fast = _outcomes(FAST_PATH_INPUTS)
+    stand_ins = {}
+    for name in ("_RE_FASTSTART", "_RE_FASTEND", "_RE_MERGED"):
+        stand_ins[name] = _NeverMatches()
+        monkeypatch.setattr(lexer, name, stand_ins[name])
+    generic = _outcomes(FAST_PATH_INPUTS)
+    for name, stand_in in stand_ins.items():
+        assert stand_in.calls > 0, name
+    differ = [key for key in fast if fast[key] != generic[key]]
+    assert not differ, differ[:10]

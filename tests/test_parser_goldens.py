@@ -56,3 +56,26 @@ def _normalize(t):
                 out[k] = v
         return out
     return t
+
+
+def test_document_controlled_memos_stay_bounded():
+    """The tag-name memos live as long as an executor's Python worker, so
+    made-up names must not grow them: one page with 5,000 distinct start
+    and end tag names leaves them within the size of the rule tables plus
+    one shared key per context."""
+    from htmlgraft import grammar
+    from htmlgraft.parse import _END_KIND
+
+    page = "<body>" + "".join(
+        f"<x-{i}>t</y-{i}><z{i}></z{i}></x-{i}>" for i in range(5000)
+    )
+    print_tree(parse(page))
+    n_ctx = len(grammar._CR_MEMO)
+    assert n_ctx == 8
+    cr_size = sum(len(memo) for memo in grammar._CR_MEMO.values())
+    assert cr_size <= n_ctx * (len(grammar._CR_KNOWN) + 1)
+    end_names = (
+        set(grammar.HTML_RULES) | set(grammar.SVG_RULES)
+        | set(grammar.MATH_RULES) | grammar.JS_PROTO_KEYS
+    )
+    assert len(_END_KIND) <= len(end_names) + 1

@@ -150,6 +150,61 @@ def test_warc_cdx_offsets_chain(spark, sf_dir):
         assert pos == sizes[fid]
 
 
+def _headers_rec(headers: str, content: bytes) -> bytes:
+    hdr = f"WARC/1.1\r\n{headers}Content-Length: {len(content)}\r\n\r\n"
+    return hdr.encode() + content + b"\r\n\r\n"
+
+
+def test_record_without_target_uri_is_skipped():
+    """One record with no WARC-Target-URI does not fail the task of the
+    pages, WET or CDX readers: it emits no row, and the records around it
+    still come through."""
+    from htmlgraft.warcops import _cdx_rows, _warc_pages_row, _wet_rows
+
+    date = "WARC-Date: 2024-01-01T00:00:00Z\r\n"
+
+    def rec(kind, uri):
+        uri_line = f"WARC-Target-URI: {uri}\r\n" if uri else ""
+        return _headers_rec(f"WARC-Type: {kind}\r\n{uri_line}{date}", b"<p>x")
+
+    for kind, rows in (
+        ("response", _warc_pages_row),
+        ("conversion", _wet_rows),
+        ("response", lambda blob: _cdx_rows(7, blob)),
+    ):
+        alone = rows(rec(kind, None))
+        assert alone == []
+        blob = rec(kind, "http://a/") + rec(kind, None) + rec(kind, "http://b/")
+        assert [r[0] for r in rows(blob)] == ["http://a/", "http://b/"]
+
+
+def test_cdx_accepts_fractional_second_dates():
+    """WARC 1.1 allows a fraction of a second in WARC-Date; ts_seconds
+    truncates it, and whole-second dates read as before."""
+    import calendar
+    import time
+
+    from htmlgraft.warcops import _cdx_rows
+
+    whole = calendar.timegm(time.strptime("2024-01-01T00:00:00Z",
+                                          "%Y-%m-%dT%H:%M:%SZ"))
+    for date, want in (
+        ("2024-01-01T00:00:00Z", whole),
+        ("2024-01-01T00:00:00.123Z", whole),
+        ("2024-01-01T00:00:59.999999Z", whole + 59),
+    ):
+        blob = _headers_rec(
+            "WARC-Type: response\r\nWARC-Target-URI: http://a/\r\n"
+            f"WARC-Date: {date}\r\n", b"<p>x")
+        (row,) = _cdx_rows(3, blob)
+        assert row[4] == want, date
+    bad = _headers_rec(
+        "WARC-Type: response\r\nWARC-Target-URI: http://a/\r\n"
+        "WARC-Date: 2024-01-01T00:00:00.Z\r\n", b"<p>x")
+    with pytest.raises(ValueError):
+        _cdx_rows(3, bad)
+
+
 # --- gzipped container framing (.warc.gz / .wet.gz) --------------------------
 
 def _gz(data: bytes) -> bytes:

@@ -3,13 +3,15 @@
 representative driver queries into PLANS.md — the plan-shape audit trail
 (pushed filters, pruned scans, broadcast joins, whole-stage codegen spans).
 
-Run: python tools/dump_plans.py [sf_dir]
+Run: python tools/dump_plans.py [sf_dir]  (from any directory; PLANS.md is
+written at the root of the checkout this script belongs to)
 """
 
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
@@ -63,6 +65,11 @@ def main():
 
     import __spark_entry__ as entry
 
+    # the Python workers import htmlgraft too: they inherit PYTHONPATH from
+    # the JVM, which inherits it from this process when the session starts
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -86,7 +93,7 @@ def main():
             df._jdf.queryExecution(), "formatted"
         )
         out.append(f"\n## {name}\n\n```\n{plan}```\n")
-    with open("PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote PLANS.md ({len(PICKS)} plans)")
     spark.stop()
