@@ -77,7 +77,6 @@ class Rule:
         "paths",
         "siblingRules",
         "allowAutoClose",
-        "appendsText",
         "mergesText",
     )
 
@@ -93,17 +92,15 @@ class Rule:
         self.paths = r["paths"]
         self.siblingRules = r["siblingRules"]
         self.allowAutoClose = r["allowAutoClose"]
-        # Precomputed for the parser's text fast paths.  appendsText: the
-        # tip takes a TEXT child as it is (no escalate/extend), and
-        # appending it cannot change the tip's rule.  mergesText: the same
-        # holds for a SPACE child, and neither is a foster-parent trap (see
-        # ``Parser.can_merge_text``).
+        # Precomputed for ``Parser.can_merge_text``: the rule takes TEXT and
+        # SPACE children as they are (no escalate/extend, no foster-parent
+        # trap), and appending one cannot change the rule (no sibling rules).
         text, space = C["TEXT"], C["SPACE"]
-        self.appendsText = bool(self.content & text) and not self.siblingRules
         self.mergesText = (
-            self.appendsText
+            bool(self.content & text)
             and bool(self.content & space)
             and not self.trap & (text | space)
+            and not self.siblingRules
         )
 
     def __repr__(self) -> str:  # pragma: no cover
@@ -184,8 +181,6 @@ _CR_CTX_MASK = _C_p | _C_table | _C_select
 # distinct made-up tag names a document emits (long-lived executor workers
 # must not grow document-controlled caches).  <input> is never stored: its
 # class depends on type=hidden, so a hit on the name alone would be wrong.
-# ``Parser.write_tag`` reads this memo in place before calling child_rule, so
-# a hit must always be exactly what child_rule would return.
 _CR_MEMO = {
     ctx: {}
     for ctx in {a | b | c for a in (0, _C_p) for b in (0, _C_table)

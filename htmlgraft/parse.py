@@ -9,29 +9,18 @@ frameset takeover of an unused <body> (parser.js:100-107), and EOF synthesis
 of html/head/body (parser.js:347-354).
 
 ``parse(input)`` mirrors /root/reference/lib/index.js:12-18.
-
-Fast paths (same trees, same delegate calls, fewer Python steps): the
-common start tag is opened inside ``write_tag`` itself (``_write_tag`` ->
-``TreeBuilder.try_open`` -> ``Frame.apply_rule`` inlined, with
-``child_rule``'s HTML memo read in place); the common end tag pops the tip
-inside ``write_end_tag``; text the tip takes as it is is appended inside
-``write_data``.  Every other case, and every tag with its own rules, takes
-the general path through the tree builder.
 """
 
 from __future__ import annotations
 
-from .builder import Frame, TreeBuilder
+from .builder import TreeBuilder
 from .grammar import (
-    _CR_CTX_MASK,
-    _CR_MEMO,
     BREAKOUT_RULES,
     C,
     CLASS_IDS as eq,
     HTML_RULES,
     JS_PROTO_KEYS as _JS_PROTO_KEYS,
     MATH_RULES,
-    NONE,
     NS_HTML,
     NS_MATH,
     NS_SVG,
@@ -80,9 +69,6 @@ _C_Heading = C["Heading"]
 _C_body = C["body"]
 _C_head = C["head"]
 _C_html = C["html"]
-_C_FormattingElement = C["FormattingElement"]
-_NS_FOREIGN = NS_SVG | NS_MATH
-_new_frame = Frame.__new__
 
 # class ids hoisted out of the per-tag hot path (eq is a dict)
 _ID_html = eq["html"]
@@ -175,68 +161,15 @@ class Parser:
         self.n_tokens += 1
         builder = self.builder
         tip = builder.tip
-        name = item.name
         namespace = tip.namespace
-        hit = None
-        if not namespace & _NS_FOREIGN:
-            # child_rule's HTML memo, read inline (a miss takes child_rule)
-            hit = _CR_MEMO[tip.closableAncestors & _CR_CTX_MASK].get(name)
-        cid, rule = hit if hit is not None else child_rule(name, item.attrs, tip)
+        nesting = tip.nestingContext
+        cid, rule = child_rule(item.name, item.attrs, tip)
         kind = 1 << cid
 
         self.mode &= _clearMode
 
-        if kind & _SPECIAL_KINDS:
-            return self._write_special(item, cid, kind, rule)
-        if kind & tip.nestingContext & _SELF_NESTING_KINDS:
-            builder.try_close_by_kind(kind)
-            return self._write_tag(item, cid, kind, rule)
-
-        # The common tag, _write_tag -> try_open -> Frame.apply_rule inlined:
-        # no void/self-closing append, no svg name adjustment, and the tip
-        # takes the kind as it is (no escalate/extend).
-        if kind & _C_Reformat and builder.formatting:
-            builder.reconstruct_formatting()
-            tip = builder.tip
-            namespace = tip.namespace
-        tip_rule = tip.rule
-        if (
-            kind & _C_VoidElement
-            or item.selfclose
-            or namespace & NS_SVG
-            or not kind & tip_rule.content
-        ):
-            return self._write_tag(item, cid, kind, rule)
-        node = Element(name, item.attrs)
-        frame = _new_frame(Frame)
-        frame.name = name
-        frame.id = cid
-        frame.kind = kind
-        frame.node = node
-        frame.children = NONE
-        frame.rule = rule
-        frame.namespace = rule.namespace or namespace
-        frame.nestingContext = (tip.nestingContext & ~rule.clearContext) | kind
-        frame.closableAncestors = (tip.closableAncestors & rule.closableAncestors) | kind
-        frame.fosterParent = tip.fosterParent
-        parent = tip.fosterParent if kind & tip_rule.trap else tip.node
-        siblings = parent.children
-        siblings.append(node)
-        tip.children |= kind
-        builder.stack.append(frame)
-        builder.tip = frame
-        builder.allOpened |= kind
-        if builder.openMask & kind:
-            builder.openHandler(name, cid, node, parent, len(siblings) - 1)
-        return kind
-
-    def _write_special(self, item, cid, kind, rule):
-        # start tags with their own rules (parser.js:143-198)
-        builder = self.builder
-        tip = builder.tip
         if cid == _ID_body or cid == _ID_head:
             # <body>/<head> escalate out of svg/math (parser.js:143-153)
-            namespace = tip.namespace
             if namespace & (NS_SVG | NS_MATH):
                 if namespace & NS_SVG:
                     name, fid = "svg", _ID_svg
@@ -252,7 +185,7 @@ class Parser:
             return self._write_tag(item, cid, _C_frameset, rule)
 
         if cid == _ID_select:
-            if tip.nestingContext & _C_select:
+            if nesting & _C_select:
                 builder.try_close("select", _C_select)
                 return builder.tip.kind
             return self._write_tag(item, cid, _C_select, rule)
@@ -260,10 +193,17 @@ class Parser:
         if cid == _ID_image:
             return self._write_tag(Element("img", item.attrs), _ID_img, _C_img, rule)
 
-        # cid == _ID_form
-        if (tip.nestingContext & _C_form) == 0:
-            self._write_tag(item, _ID_form, kind, rule)
-        return builder.tip.kind
+        if cid == _ID_form:
+            if (nesting & _C_form) == 0:
+                self._write_tag(item, _ID_form, kind, rule)
+            return builder.tip.kind
+
+        if cid in _SELF_NESTING_IDS:
+            if nesting & kind:
+                builder.try_close_by_kind(kind)
+            return self._write_tag(item, cid, kind, rule)
+
+        return self._write_tag(item, cid, kind, rule)
 
     def _write_tag(self, item, cid, kind, rule):
         builder = self.builder
@@ -289,22 +229,6 @@ class Parser:
         builder = self.builder
         name = item.name
         tip = builder.tip
-        if tip.name == name and name not in _END_SPECIAL and (
-            name != "p" or tip.closableAncestors & _C_p
-        ):
-            # The common end tag: it closes the tip, and the frame below
-            # has no sibling rules.  This is try_close -> _close for one
-            # frame, which puts a non-formatting frame on the formatting
-            # list (the _close quirk).
-            stack = builder.stack
-            if len(stack) > 1:
-                below = stack[-2]
-                if not below.rule.siblingRules:
-                    stack.pop()
-                    if not tip.kind & _C_FormattingElement:
-                        builder.formatting.append(tip)
-                    builder.tip = below
-                    return below.kind
         namespace = tip.namespace
         nesting = tip.nestingContext
         closable = tip.closableAncestors
@@ -417,15 +341,6 @@ class Parser:
         builder = self.builder
         if builder.formatting:
             builder.reconstruct_formatting()
-        tip = builder.tip
-        rule = tip.rule
-        if rule.appendsText:
-            # try_append inlined: the tip takes TEXT as it is
-            parent = tip.fosterParent if rule.trap & _C_TEXT else tip.node
-            parent.children.append(item)
-            tip.children |= _C_TEXT
-            builder.allOpened |= _C_TEXT
-            return tip.kind
         builder.try_append(item, _C_TEXT)
         return builder.tip.kind
 
@@ -478,22 +393,13 @@ class Parser:
         return builder.tip.kind
 
 
-# kinds that leave write_tag's common path: tags with their own rules, and
-# the self-nesting ones when their kind is already open
-_SPECIAL_KINDS = _C_body | _C_head | _C_frameset | _C_select | C["image"] | _C_form
-_SELF_NESTING_KINDS = (
-    C["DListItem"] | C["Heading"] | C["li"] | C["p"] | C["table"] | C["TBody"]
-    | C["TCell"] | C["a"] | C["button"] | C["nobr"] | C["option"] | C["tr"]
+_SELF_NESTING_IDS = frozenset(
+    eq[k]
+    for k in (
+        "DListItem", "Heading", "li", "p", "table", "TBody", "TCell",
+        "a", "button", "nobr", "option", "tr",
+    )
 )
-
-# end-tag names that leave write_end_tag's common path: the breakout names
-# with their own rules (</br>, </h1>..</h6>, </body>, </head>), </html>,
-# </frameset> and the JS prototype keys; </p> takes the common path only
-# when the tip's closable set holds p (parser.js:218-303)
-_END_SPECIAL = frozenset(
-    name for name, (cid, _) in BREAKOUT_RULES.items()
-    if cid in (_ID_br, _ID_Heading, _ID_body, _ID_head)
-) | {"html", "frameset"} | _JS_PROTO_KEYS
 
 
 def _map_id(rules, name):
