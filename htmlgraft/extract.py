@@ -57,6 +57,14 @@ CANDIDATE_TAGS = frozenset(
 
 _WS_RUN = re.compile(r"[\t\n\r\f ]+")
 
+# DOM-print size per page past which ``analyze_page`` stops printing.  The
+# print is quadratic in nesting depth (two spaces of indent a level, as the
+# reference prints): "<table><tr><td>" * 16000, 240 KB of input, prints
+# 4.1 GB.  Counted in characters, which is the byte size of the ASCII print
+# (text and comments may take up to 4 UTF-8 bytes a character).
+DOM_BUDGET_BYTES = 32 << 20
+
+
 class _Prefixes(dict):
     """DOM-print line prefix per depth: "| " plus two spaces a level,
     stored up to depth 255 (real pages nest far shallower), built past it."""
@@ -213,7 +221,9 @@ def analyze_page(root, include_dom: bool = True, include_links: bool = False):
     path because its per-event tuples dominated memory traffic, which is
     what limits multi-core scaling of the Arrow-batched parse stage.
 
-    Returns (dom, text, n_nodes, links, title, h1, has_doctype).  links is
+    Returns (dom, text, n_nodes, links, title, h1, has_doctype).  dom is
+    None when the print passed ``DOM_BUDGET_BYTES``: printing stops there,
+    and the walk goes on for everything else.  links is
     a list of (href, anchor) for every <a> carrying an href attribute, in
     document order; title/h1 are the collapsed text of the FIRST
     <title>/<h1> (None when absent); has_doctype is 1 iff the document has
@@ -223,6 +233,7 @@ def analyze_page(root, include_dom: bool = True, include_links: bool = False):
     from .nodes import Comment, Doctype, Document, Element
 
     out = [] if include_dom else None
+    n_out = 0               # characters printed, counted against the budget
     buf = []                # pending adjacent text (print coalescing)
     texts = [] if include_links else None   # every text node, in order
     links = [] if include_links else None
@@ -246,11 +257,20 @@ def analyze_page(root, include_dom: bool = True, include_links: bool = False):
     its = [iter(root.children if type(root) is Document else (root,))]
     names = [None]          # per level: element name, None for '#'/document
 
+    def emit(line):
+        nonlocal out, n_out
+        n_out += len(line)
+        if n_out <= DOM_BUDGET_BYTES:
+            out.append(line)
+        else:
+            out = None
+            del buf[:]
+
     def flush(depth):
         text = "".join(buf)
         del buf[:]
         if text:
-            out.append(f'{_PREFIX[depth]}"{text}"\n')
+            emit(f'{_PREFIX[depth]}"{text}"\n')
 
     while its:
         for node in its[-1]:
@@ -277,7 +297,7 @@ def analyze_page(root, include_dom: bool = True, include_links: bool = False):
                     if out is not None:
                         if buf:
                             flush(depth)
-                        out.append(f"{_PREFIX[depth]}<{name}>\n")
+                        emit(f"{_PREFIX[depth]}<{name}>\n")
                     if skip_at < 0:
                         if name in SKIP_TAGS:
                             skip_at = depth
@@ -316,9 +336,8 @@ def analyze_page(root, include_dom: bool = True, include_links: bool = False):
                 if out is not None:
                     if buf:
                         flush(depth)
-                    out.append(f"{_PREFIX[depth]}<!--{''.join(node.data)}-->\n"
-                               if t is Comment else
-                               f"{_PREFIX[depth]}<!doctype>\n")
+                    emit(f"{_PREFIX[depth]}<!--{''.join(node.data)}-->\n"
+                         if t is Comment else f"{_PREFIX[depth]}<!doctype>\n")
         else:
             its.pop()
             name = names.pop()
@@ -363,8 +382,11 @@ def analyze_page(root, include_dom: bool = True, include_links: bool = False):
         text = _render_pass(traverse(root), None)
     else:
         text = _finish_lines("".join(parts))
-    return ("".join(out) if out is not None else ""), text, order, \
-        links, title, h1, has_doctype
+    if out is not None:
+        dom = "".join(out)
+    else:
+        dom = None if n_out > DOM_BUDGET_BYTES else ""
+    return dom, text, order, links, title, h1, has_doctype
 
 
 def pick_target(candidates):

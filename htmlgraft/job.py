@@ -15,8 +15,11 @@ is the Arrow-batched ``mapInPandas`` parse stage):
 Scale notes (100 TB / 10^12 docs):
 * per-doc cost varies ~1000x with page size; AQE cannot see that (it is not
   join skew), hence the explicit size-salted repartition;
-* Arrow batches are capped by rows AND bytes inside the UDF iterator so an
-  oversized document cannot balloon worker memory;
+* Arrow batches are capped by rows (Spark's maxRecordsPerBatch), and output
+  frames by bytes: ``row_batches`` cuts a frame once its rows carried
+  ``MAX_BATCH_BYTES`` in and out.  A page's DOM print, quadratic in nesting
+  depth, stops at ``extract.DOM_BUDGET_BYTES`` (``status="error:dom_budget"``),
+  so no one page can balloon worker memory or take its batch down;
 * everything upstream of the UDF stays in whole-stage codegen; the scan reads
   only (url, html, ...) via column pruning.
 """
@@ -28,6 +31,7 @@ import gc
 import sys
 import time
 import zipimport
+from itertools import chain
 from typing import Callable, Iterator
 
 import pandas as pd
@@ -59,9 +63,8 @@ RESULT_SCHEMA = StructType(
 
 # one-pass production schema: the same parse also emits hyperlinks and page
 # metadata (title/h1/doctype) — at 10^12 docs you parse ONCE, not once per
-# downstream consumer; the standalone linkops queries exist for the
-# per-operator oracle gate, run the identical walker, and reach it through
-# ``map_pages``: the same decode, parse and worker setup as this stage.
+# downstream consumer; the link family (linkops.links_df, metadata_df,
+# wat_rows_df) are projections of this output.
 from pyspark.sql.types import ArrayType  # noqa: E402
 
 LINK_STRUCT = StructType(
@@ -87,7 +90,9 @@ def parse_document(html: str, include_dom: bool = True, include_links: bool = Fa
     """Parse one document and extract its main text.
 
     Returns (dom, text, n_tokens, n_nodes, status[, links, title, h1,
-    has_doctype] when include_links).  Token counting lives in the Parser
+    has_doctype] when include_links).  A DOM print past
+    ``extract.DOM_BUDGET_BYTES`` gives dom "" and status "error:dom_budget";
+    the text and links are still extracted.  Token counting lives in the Parser
     itself (Parser.n_tokens, one per tokeniser write_* call) so no
     wrapper-delegate layer sits between tokeniser and parser in the hot path.
     The DOM print, the extraction and the links/metadata all come from ONE
@@ -101,14 +106,17 @@ def parse_document(html: str, include_dom: bool = True, include_links: bool = Fa
     lexer.end_input()
     dom, text, n_nodes, links, title, h1, has_doctype = analyze_page(
         parser.document, include_dom, include_links)
+    status = "ok"
+    if dom is None:
+        dom, status = "", "error:dom_budget"
     if not include_links:
-        return dom, text, parser.n_tokens, n_nodes, "ok"
+        return dom, text, parser.n_tokens, n_nodes, status
     rows = [
         {"pos": k, "href": href, "anchor": anchor}
         for k, (href, anchor) in enumerate(links, start=1)
     ]
     return (
-        dom, text, parser.n_tokens, n_nodes, "ok",
+        dom, text, parser.n_tokens, n_nodes, status,
         rows, title, h1, has_doctype,
     )
 
@@ -163,81 +171,37 @@ def _worker_stage(batch_fn):
     return stage
 
 
-def make_parse_batch(
-    include_dom: bool = True,
-    max_batch_bytes: int = 1 << 26,
-    include_links: bool = False,
-):
-    """Build the mapInPandas function (wrapped by ``_worker_stage``).  The
-    inner generator re-chunks incoming Arrow batches so a run of oversized
-    documents cannot balloon the pandas frame we materialize results into."""
-    cols = [
-        "url", "lang", "dom", "text", "n_tokens", "n_nodes",
-        "n_errors", "n_bytes", "parse_ms", "status", "part_id",
-    ]
-    if include_links:
-        cols += ["links", "title", "h1", "has_doctype"]
+# the parse stage's input columns, in ``parse_batch``'s argument order
+PARSE_COLS = ["url", "lang", "html", "charset", "part_id"]
 
-    def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            acc_bytes = 0
-            urls = pdf["url"].tolist()
-            langs = pdf["lang"].tolist() if "lang" in pdf else [None] * len(urls)
-            parts = pdf["part_id"].tolist() if "part_id" in pdf else [0] * len(urls)
-            htmls = pdf["html"].tolist()
-            # optional transport-layer charset hints (WARC sources carry
-            # the HTTP Content-Type charset through a 'charset' column)
-            hints = (
-                pdf["charset"].tolist() if "charset" in pdf
-                else [None] * len(urls)
-            )
-            for url, lang, part_id, raw, hint in zip(
-                    urls, langs, parts, htmls, hints):
-                raw_bytes = bytes(raw)
-                extra = ([], None, None, 0)
-                t0 = time.perf_counter()
-                try:
-                    # WHATWG prescan (BOM -> transport -> meta charset ->
-                    # windows-1252 default): real crawls are ~5-10%
-                    # non-UTF-8 and a blind utf-8 decode mojibakes them
-                    # silently (encoding.py)
-                    html = decode_html(raw_bytes, transport=hint)
-                    parsed = parse_document(html, include_dom, include_links)
-                    dom, text, n_tokens, n_nodes, status = parsed[:5]
-                    if include_links:
-                        extra = parsed[5:]
-                    n_errors = 0
-                except Exception as exc:  # reference-equivalent throws
-                    dom, text, n_tokens, n_nodes = "", "", 0, 0
-                    n_errors = 1
-                    status = f"error:{type(exc).__name__}"
-                dt = (time.perf_counter() - t0) * 1000.0
-                out["url"].append(url)
-                out["lang"].append(lang)
-                out["dom"].append(dom)
-                out["text"].append(text)
-                out["n_tokens"].append(n_tokens)
-                out["n_nodes"].append(n_nodes)
-                out["n_errors"].append(n_errors)
-                out["n_bytes"].append(len(raw_bytes))
-                out["parse_ms"].append(dt)
-                out["status"].append(status)
-                out["part_id"].append(part_id)
-                if include_links:
-                    out["links"].append(extra[0])
-                    out["title"].append(extra[1])
-                    out["h1"].append(extra[2])
-                    out["has_doctype"].append(extra[3])
-                acc_bytes += len(raw_bytes) + len(dom) + len(text)
-                if acc_bytes >= max_batch_bytes:
-                    yield pd.DataFrame(out)
-                    out = {k: [] for k in out}
-                    acc_bytes = 0
-            if out["url"]:
-                yield pd.DataFrame(out)
 
-    return _worker_stage(parse_batch)
+def make_parse_batch(include_dom: bool = True, include_links: bool = False):
+    """The parse stage's mapInPandas function: ``parse_batch`` on
+    ``row_batches``, wrapped by ``_worker_stage``.  Each page of
+    ``PARSE_COLS`` maps to one ``RESULT_SCHEMA`` row (``FULL_RESULT_SCHEMA``
+    with ``include_links``); a page whose decode or parse raises gets the
+    typed ``error:<Type>`` lane and the rest of its batch is unaffected."""
+    schema = FULL_RESULT_SCHEMA if include_links else RESULT_SCHEMA
+    failed = ("", "", 0, 0) + (([], None, None, 0) if include_links else ())
+
+    def parse_batch(url, lang, raw, hint, part_id):
+        t0 = time.perf_counter()
+        try:
+            raw = bytes(raw)  # a null html takes the error lane
+            # WHATWG prescan (BOM -> transport -> meta charset ->
+            # windows-1252 default): real crawls are ~5-10% non-UTF-8 and a
+            # blind utf-8 decode mojibakes them silently (encoding.py); WARC
+            # sources carry the HTTP Content-Type charset as ``hint``
+            dom, text, n_tokens, n_nodes, status, *extra = parse_document(
+                decode_html(raw, transport=hint), include_dom, include_links)
+        except Exception as exc:  # reference-equivalent throws
+            dom, text, n_tokens, n_nodes, *extra = failed
+            status = f"error:{type(exc).__name__}"
+        dt = (time.perf_counter() - t0) * 1000.0
+        return [(url, lang, dom, text, n_tokens, n_nodes, int(status != "ok"),
+                 len(raw or b""), dt, status, part_id, *extra)]
+
+    return _worker_stage(row_batches(parse_batch, PARSE_COLS, schema.fieldNames()))
 
 
 # size above which a document is routed to its own salt lane
@@ -273,8 +237,9 @@ def with_partitioning(
     return df.repartition(num_parts, F.col("url"), F.col("salt"))
 
 
-# input blob bytes per output frame of ``row_batches``: a run of large
-# blobs cannot balloon the pandas frame their output rows are gathered into
+# bytes per output frame of ``row_batches``, counted over its rows' binary
+# and string values in and out: a run of large rows cannot balloon the
+# pandas frame their output is gathered into
 MAX_BATCH_BYTES = 1 << 26
 
 
@@ -284,16 +249,20 @@ def row_batches(row: Callable, cols: list, names: list):
 
     ``row(*values)`` is called with each input row's ``cols`` values and
     returns an iterable of output tuples in ``names`` order: 0, 1 or n rows.
-    Its output is gathered into frames, and a frame is cut once its input
-    rows carried ``MAX_BATCH_BYTES`` of binary values.  Error policy is the
-    row function's own: an exception it raises fails the task."""
+    Its output is gathered into frames, and a frame is cut once its rows
+    carried ``MAX_BATCH_BYTES`` in ``bytes`` and ``str`` values, counting
+    both the input values and the output tuples (a ``str`` by its length).
+    Error policy is the row function's own: an exception it raises fails
+    the task."""
 
     def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out, acc, sent = [], 0, False
             for args in zip(*(pdf[c].tolist() for c in cols)):
+                n = len(out)
                 out += row(*args)
-                acc += sum(len(a) for a in args if isinstance(a, bytes))
+                acc += sum(len(v) for v in chain(args, *out[n:])
+                           if isinstance(v, (bytes, str)))
                 if acc >= MAX_BATCH_BYTES and out:
                     yield pd.DataFrame.from_records(out, columns=names)
                     out, acc, sent = [], 0, True
@@ -359,7 +328,7 @@ def parse_extract(
     pre_partitioned: bool = False,
     include_links: bool = False,
 ) -> DataFrame:
-    """The flagship operator: pages(url, html[, lang]) -> results.
+    """The flagship operator: pages(url, html[, lang, charset]) -> results.
 
     ``pre_partitioned=True`` skips the salted url-hash repartition and maps
     the parse UDF directly over the scan partitions.  Use it when the
@@ -373,8 +342,11 @@ def parse_extract(
     is KNOWN (``done_count``) to fit ``BROADCAST_DONE_MAX``, else a merge
     hint forces the shuffle sort-merge anti-join that survives
     terabyte-scale done-sets."""
-    cols = [c for c in ("url", "lang", "html", "charset") if c in pages.columns]
-    df = pages.select(*cols)
+    # a page source without lang or charset gets typed nulls
+    df = pages.select(*(
+        c if c in pages.columns else F.lit(None).cast("string").alias(c)
+        for c in ("url", "lang", "html", "charset")
+    ))
     if done_urls is not None:
         if broadcast_done is None:
             broadcast_done = (
@@ -383,7 +355,9 @@ def parse_extract(
         done = done_urls.select("url")
         done = F.broadcast(done) if broadcast_done else done.hint("merge")
         df = df.join(done, "url", "left_anti")
-    if not pre_partitioned:
+    if pre_partitioned:
+        df = df.withColumn("part_id", F.lit(0).cast("long"))
+    else:
         df = with_partitioning(df, num_parts)
     schema = FULL_RESULT_SCHEMA if include_links else RESULT_SCHEMA
     return df.mapInPandas(

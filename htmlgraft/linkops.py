@@ -5,7 +5,9 @@ These operators extend the extraction tier beyond main text: the SAME
 tokenize -> tree-build pipeline (htmlgraft.lexer/parse, byte-identical to
 the reference parser) feeds a document-order DOM walk — the parse stage's
 one walk per page, ``extract.analyze_page``, which also prints the DOM and
-extracts the main text — whose links and metadata feed
+extracts the main text — whose links and metadata (the ``links``,
+``title``, ``h1`` and ``has_doctype`` columns of
+``job.parse_extract(include_links=True)``) feed
 
 * ``extract_links``    — (url, pos, href, anchor) for every <a href=...>;
 * ``extract_metadata`` — (url, title, h1, has_doctype, n_links);
@@ -28,10 +30,13 @@ Value-hash discipline: PageRank uses SCALED INTEGER arithmetic only
 float PageRank would differ in the last ulp across engines/orders.
 
 Scale notes (10^12 documents):
-* the per-page operators share the parse job's stage (htmlgraft.job.
-  map_pages): the same salted url-hash partitioning, charset-aware decode,
-  reference parse and worker setup — one Arrow-batched map, no extra state;
-  a page that fails to decode or parse emits no rows;
+* the link family (``links_df``, ``metadata_df``, ``wat_rows_df``) reads
+  the parse stage itself: each is a projection of ``job.parse_extract(...,
+  include_dom=False, include_links=True)`` filtered to ``status == "ok"``,
+  so a page is parsed once for all three, and a page that fails to decode
+  or parse emits no rows.  ``tables_df`` and the domops operators need the
+  tree, so they run on ``job.map_pages``: the same salted url-hash
+  partitioning, charset-aware decode, reference parse and worker setup;
 * hostgraph is one hash aggregation keyed on (src_host, dst_host); hosts are
   ~10^7-cardinality at web scale, far below doc count;
 * PageRank state per iteration is one (host, rank) relation (~16 B/host) and
@@ -49,26 +54,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .corpus import pages_df, pages_oracle_cte
 from .extract import analyze_page, collapse_ws
-from .job import map_pages
-
-LINKS_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("pos", LongType()),
-        StructField("href", StringType()),
-        StructField("anchor", StringType()),
-    ]
-)
-
-META_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("title", StringType()),
-        StructField("h1", StringType()),
-        StructField("has_doctype", LongType()),
-        StructField("n_links", LongType()),
-    ]
-)
+from .job import map_pages, parse_extract
 
 # PageRank constants (integer arithmetic; see module docstring)
 SCALE = 10**12
@@ -174,17 +160,6 @@ def analyze_tables(document):
     return out
 
 
-def _links_rows(url, doc):
-    links = analyze_links(doc)[0]
-    return [(url, k, href, anchor)
-            for k, (href, anchor) in enumerate(links, start=1)]
-
-
-def _meta_rows(url, doc):
-    links, title, h1, has_doctype = analyze_links(doc)
-    return [(url, title, h1, has_doctype, len(links))]
-
-
 def _tables_rows(url, doc):
     return [(url, *cell) for cell in analyze_tables(doc)]
 
@@ -193,37 +168,36 @@ def tables_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
     return map_pages(pages, TABLES_SCHEMA, _tables_rows, num_parts)
 
 
+def _parsed(pages: DataFrame, num_parts: int | None) -> DataFrame:
+    """The parse stage's one-pass output for the pages that parsed."""
+    return parse_extract(
+        pages, num_parts, include_dom=False, include_links=True
+    ).where(F.col("status") == "ok")
+
+
+def _exploded_links(pages: DataFrame, num_parts: int | None) -> DataFrame:
+    return _parsed(pages, num_parts).select(
+        "url", "title", F.explode("links").alias("l"))
+
+
 def links_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
-    """(url, html) -> exploded link rows via the salted url-hash shuffle."""
-    return map_pages(pages, LINKS_SCHEMA, _links_rows, num_parts)
+    """(url, html) -> (url, pos, href, anchor), one row per link."""
+    return _exploded_links(pages, num_parts).select(
+        "url", "l.pos", "l.href", "l.anchor")
 
 
 def metadata_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
-    return map_pages(pages, META_SCHEMA, _meta_rows, num_parts)
-
-
-WAT_ROWS_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("title", StringType()),
-        StructField("pos", LongType()),
-        StructField("href", StringType()),
-        StructField("anchor", StringType()),
-    ]
-)
-
-
-def _wat_rows(url, doc):
-    # ONE parse per page for the whole WAT record: analyze_links already
-    # collects links AND title in a single walk, so the export costs one
-    # traversal, not the links+metadata pair.
-    links, title, _, _ = analyze_links(doc)
-    return [(url, title or "", k, href, anchor)
-            for k, (href, anchor) in enumerate(links, start=1)]
+    return _parsed(pages, num_parts).select(
+        "url", "title", "h1", "has_doctype",
+        F.size("links").cast("long").alias("n_links"))
 
 
 def wat_rows_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
-    return map_pages(pages, WAT_ROWS_SCHEMA, _wat_rows, num_parts)
+    """The WAT record's (url, title, pos, href, anchor) rows: links and
+    title from the same one-pass parse."""
+    return _exploded_links(pages, num_parts).select(
+        "url", F.coalesce("title", F.lit("")).alias("title"),
+        "l.pos", "l.href", "l.anchor")
 
 
 # --- host resolution (shared Spark-side fragments) ---------------------------

@@ -5,8 +5,9 @@ exactly-once sinks and watermarked windowed metrics.
 The batch pipeline (job.py) is the primary path per SURVEY.md §1 — each
 document is independent, so resumability comes from state tables, not
 streaming.  This module covers the streaming-ingest deployment shape: a
-crawler drops page files; the stream picks them up, runs the SAME
-``make_parse_batch`` UDF (mapInPandas is fully supported on streaming
+crawler drops page files; the stream picks them up, runs the SAME parse
+stage as the batch job (``job.parse_extract``: the ``parse_batch`` row
+function on ``job.row_batches``; mapInPandas is fully supported on streaming
 DataFrames), and appends to a parquet/Iceberg sink whose checkpoint gives
 exactly-once file-level semantics.  ``availableNow`` triggers turn the same
 query into an incremental backfill job.

@@ -80,6 +80,22 @@ def test_fused_equals_event_path(fid, html):
     assert analyze_links(doc) == page[3:]
 
 
+def test_dom_budget_stops_the_print_not_the_walk(monkeypatch):
+    """A print of exactly DOM_BUDGET_BYTES characters is kept whole; one
+    character less of budget gives dom None and every other field as
+    before."""
+    from htmlgraft import extract
+
+    doc = parse("<!doctype html><title>t</title><!--c--><div><p>x <a href=/l>"
+                "y</a></p><table><tr><td>z</table></div>")
+    whole = analyze_page(doc, True, True)
+    monkeypatch.setattr(extract, "DOM_BUDGET_BYTES", len(whole[0]))
+    assert analyze_page(doc, True, True) == whole
+    monkeypatch.setattr(extract, "DOM_BUDGET_BYTES", len(whole[0]) - 1)
+    assert analyze_page(doc, True, True) == (None,) + whole[1:]
+    assert analyze_page(doc, False, True) == ("",) + whole[1:]
+
+
 def test_fused_no_dom():
     doc = parse("<div><p>hello <b>world</b></p></div>")
     dom, text, _ = analyze_tree(doc, include_dom=False)

@@ -170,12 +170,12 @@ PAGE_OPERATORS = {
 
 @pytest.mark.parametrize("op", list(PAGE_OPERATORS))
 def test_page_operator_error_doc_emits_no_rows(spark, op):
-    # <constructor> triggers the reference's JS prototype-key throw; the
-    # stage must skip the document, not fail the task
+    # <constructor> triggers the reference's JS prototype-key throw, and a
+    # null html has no bytes; the stage must skip both, not fail the task
     good, bad = "http://good.example/1", "http://bad.example/2"
     pages = spark.createDataFrame(
         [(good, b"<body><div><table><tr><td>ok</table><a href=/x>ok</a>"),
-         (bad, b"<constructor>")],
+         (bad, b"<constructor>"), ("http://null.example/3", None)],
         "url string, html binary",
     )
     fn = getattr(linkops, op, None) or getattr(domops, op)

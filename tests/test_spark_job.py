@@ -295,13 +295,15 @@ def test_make_catalog_parquet_default(spark, tmp_path):
 @pytest.mark.parametrize("corpus", ["pages_df", "pages_charset_df"])
 def test_one_pass_links_match_standalone_ops(spark, sf_dir, pages, corpus):
     """include_links=True: the production job emits links + metadata from
-    the SAME parse; rows must agree exactly with the standalone linkops
-    queries (which re-parse per query for the oracle gate), on UTF-8 pages
+    the SAME parse; rows must agree exactly with an in-process
+    ``analyze_links`` over each page's own decode and parse, on UTF-8 pages
     and on the charset corpus (cp1252, UTF-16 and BOM'd UTF-8 pages)."""
     from pyspark.sql import functions as F
 
     from htmlgraft.corpus import pages_charset_df
-    from htmlgraft.linkops import links_df, metadata_df
+    from htmlgraft.encoding import decode_html
+    from htmlgraft.linkops import analyze_links
+    from htmlgraft.parse import parse
 
     if corpus == "pages_charset_df":
         pages = pages_charset_df(spark, sf_dir)
@@ -310,19 +312,19 @@ def test_one_pass_links_match_standalone_ops(spark, sf_dir, pages, corpus):
         (r["url"], r["l"]["pos"], r["l"]["href"], r["l"]["anchor"])
         for r in full.select("url", F.explode("links").alias("l")).collect()
     }
-    standalone = {
-        (r["url"], r["pos"], r["href"], r["anchor"])
-        for r in links_df(pages, num_parts=8).collect()
-    }
+    charset = F.col("charset") if "charset" in pages.columns else F.lit(None)
+    standalone, standalone_meta = set(), set()
+    for r in pages.select("url", "html", charset.alias("cs")).collect():
+        links, title, h1, has_doctype = analyze_links(
+            parse(decode_html(bytes(r["html"]), r["cs"])))
+        standalone |= {(r["url"], k, href, anchor)
+                       for k, (href, anchor) in enumerate(links, start=1)}
+        standalone_meta.add((r["url"], title, h1, has_doctype))
     assert one_pass_links == standalone and len(standalone) == 500 * 8
 
     one_pass_meta = {
         (r["url"], r["title"], r["h1"], r["has_doctype"])
         for r in full.select("url", "title", "h1", "has_doctype").collect()
-    }
-    standalone_meta = {
-        (r["url"], r["title"], r["h1"], r["has_doctype"])
-        for r in metadata_df(pages, num_parts=8).collect()
     }
     assert one_pass_meta == standalone_meta
     # and the text/dom columns are unchanged by the extended schema
@@ -367,7 +369,8 @@ def test_parse_batch_drops_zip_finders(tmp_path, monkeypatch):
         assert importlib.import_module("zpkg.a").X == 1
         assert _zip_finders()
 
-        frame = pd.DataFrame({"url": ["u"], "html": [b"<p>hi"]})
+        frame = pd.DataFrame({"url": ["u"], "lang": [None], "html": [b"<p>hi"],
+                              "charset": [None], "part_id": [0]})
         out = list(make_parse_batch()(iter([frame])))
         assert out[0]["status"].tolist() == ["ok"]
         assert not _zip_finders()
@@ -400,7 +403,8 @@ def test_parse_batch_restores_gc_state(was_enabled, close_early):
 
     from htmlgraft.job import make_parse_batch
 
-    frames = [pd.DataFrame({"url": [f"u{k}"], "html": [b"<p>hi"]})
+    frames = [pd.DataFrame({"url": [f"u{k}"], "lang": [None], "html": [b"<p>hi"],
+                            "charset": [None], "part_id": [0]})
               for k in range(2)]
     prior = gc.isenabled()
     (gc.enable if was_enabled else gc.disable)()
@@ -416,6 +420,101 @@ def test_parse_batch_restores_gc_state(was_enabled, close_early):
         assert gc.isenabled() is was_enabled
     finally:
         (gc.enable if prior else gc.disable)()
+
+
+def test_parse_batch_null_html_takes_error_lane():
+    """A null html is a typed error row with no bytes; its frame goes on."""
+    import pandas as pd
+
+    from htmlgraft.job import make_parse_batch
+
+    frame = pd.DataFrame({"url": ["u0", "u1"], "lang": [None, None],
+                          "html": [None, b"<p>hi"], "charset": [None, None],
+                          "part_id": [0, 0]})
+    (out,) = make_parse_batch()(iter([frame]))
+    assert out[["status", "n_errors", "n_bytes"]].values.tolist() == [
+        ["error:TypeError", 1, 0], ["ok", 0, 5]]
+
+
+# one frame through the parse stage in a child process that caps its own
+# address space: a page that outgrows the cap fails the child (MemoryError),
+# not the test run
+_BUDGET_CHILD = r"""
+import json, resource, sys
+resource.setrlimit(resource.RLIMIT_AS, (1 << 30, 1 << 30))
+import pandas as pd
+from htmlgraft.job import make_parse_batch
+
+pages = json.load(sys.stdin)
+
+
+def run(include_dom, urls):
+    n = len(urls)
+    frame = pd.DataFrame({"url": urls, "lang": [None] * n,
+                          "html": [pages[u].encode() for u in urls],
+                          "charset": [None] * n, "part_id": [0] * n})
+    (out,) = make_parse_batch(include_dom, include_links=True)(iter([frame]))
+    return out.drop(columns="parse_ms").to_dict("records")
+
+
+json.dump({"frame": run(True, list(pages)),
+           "solo": [run(True, [u])[0] for u in pages],
+           "deep_no_dom": run(False, ["deep"])[0]}, sys.stdout, default=int)
+"""
+
+
+def test_dom_budget_keeps_deep_page_in_its_frame():
+    """"<table><tr><td>" * 16000 (240 KB) prints a 4.1 GB DOM: the print
+    stops at DOM_BUDGET_BYTES, the page takes the error:dom_budget lane
+    with its text and links still extracted, and its frame's neighbours
+    (an error-lane page among them) read as they do alone.  The deep page
+    carries a link before the nesting and text and a link inside it.  The
+    child runs under a 1 GiB address-space limit.  Every adversarial
+    family at its largest size rides along and keeps its whole DOM."""
+    import json
+    import pathlib
+    import random
+    import subprocess
+    import sys
+
+    from htmlgraft.parse import parse
+    from htmlgraft.walk import print_tree
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(root))
+    from tools import gen_adversarial_pages
+
+    rng = random.Random(12)
+    adversarial = {fam: gen(rng, 2) for fam, gen
+                   in sorted(gen_adversarial_pages.FAMILIES.items())}
+    with open(root / "fixtures" / "pages_sample.jsonl", encoding="utf-8") as fh:
+        sample = [json.loads(line)["html"] for line in fh][:2]
+    deep_html = "<p>lead <a href=/x>a</a>" + "<table><tr><td>" * 16000 + \
+        "deep <a href=/y>b</a>"
+    pages = {"first": sample[0], "deep": deep_html,
+             "thrower": "<constructor>", "last": sample[1], **adversarial}
+    res = subprocess.run(
+        [sys.executable, "-c", _BUDGET_CHILD], input=json.dumps(pages),
+        capture_output=True, text=True, cwd=root, timeout=300, check=True)
+    got = json.loads(res.stdout)
+    frame = {r["url"]: r for r in got["frame"]}
+    assert list(frame) == list(pages)
+    deep, no_dom = frame["deep"], got["deep_no_dom"]
+    assert (deep["status"], deep["n_errors"], deep["dom"]) == (
+        "error:dom_budget", 1, "")
+    assert no_dom["status"] == "ok" and no_dom["dom"] == ""
+    keep = ("text", "links", "title", "h1", "has_doctype", "n_tokens",
+            "n_nodes", "n_bytes")
+    assert {k: deep[k] for k in keep} == {k: no_dom[k] for k in keep}
+    assert deep["text"] == "deep b" and len(deep["links"]) == 2
+    for solo in got["solo"]:
+        if solo["url"] != "deep":
+            assert frame[solo["url"]] == solo
+    assert frame["thrower"]["status"].startswith("error:")
+    assert frame["first"]["status"] == frame["last"]["status"] == "ok"
+    for fam, html in adversarial.items():
+        assert frame[fam]["status"] == "ok", fam
+        assert frame[fam]["dom"] == print_tree(parse(html)), fam
 
 
 # --- the shared row-map loop (job.row_batches / job.map_rows) ----------------
@@ -449,8 +548,8 @@ def test_row_batches_empty_batch_keeps_column_names():
 
 
 def test_row_batches_byte_cap_splits_frames(monkeypatch):
-    """A frame is cut once its input rows carried MAX_BATCH_BYTES of binary
-    values; the rows and their order are unchanged."""
+    """A frame is cut once its rows carried MAX_BATCH_BYTES of binary and
+    string values, in and out; the rows and their order are unchanged."""
     import pandas as pd
 
     from htmlgraft import job
@@ -466,6 +565,16 @@ def test_row_batches_byte_cap_splits_frames(monkeypatch):
     out = list(batch(iter([frame])))
     assert [f["doc_id"].tolist() for f in out] == [[1, 2], [3], [4, 5]]
     assert pd.concat(out).values.tolist() == whole.values.tolist()
+
+    # small blobs in, long strings out: the output bytes cut the frames
+    def grow_row(doc_id, blob):
+        return [(doc_id, "y" * 6 * len(blob))]
+
+    frame = pd.DataFrame({"doc_id": [1, 2, 3, 4], "blob": [b"x", b"", b"x", b"x"]})
+    out = list(job.row_batches(grow_row, ["doc_id", "blob"], ["doc_id", "s"])(
+        iter([frame])))
+    assert [f["doc_id"].tolist() for f in out] == [[1, 2, 3], [4]]
+    assert [s for f in out for s in f["s"]] == ["y" * 6, "", "y" * 6, "y" * 6]
 
 
 def test_map_rows_names_the_stage_after_the_row_function(spark):
