@@ -151,13 +151,22 @@ def decode_bmp_pixels(blob: bytes):
     return w, h, 1, bytes(out)
 
 
+def nn_sample(w: int, h: int, bpp: int, px: bytes,
+              new_w: int, new_h: int) -> bytes:
+    """Nearest-neighbour resample of a decoded plane of ``bpp``-byte
+    pixels: src = dst * src_dim div dst_dim, pure integer index math, so
+    every codec's resize is restatable relationally by the oracle."""
+    cols = [x * w // new_w * bpp for x in range(new_w)]
+    out = bytearray()
+    for y in range(new_h):
+        row = y * h // new_h * w * bpp
+        for c in cols:
+            out += px[row + c:row + c + bpp]
+    return bytes(out)
+
+
 def resample_bmp(blob: bytes, new_w: int, new_h: int) -> bytes:
     """Nearest-neighbour resample, re-encoded as an 8-bit greyscale
     bottom-up BMP (lossless carrier for the resampled luma plane)."""
-    w, h, _, px = decode_bmp_pixels(blob)
-    out = bytes(
-        px[((y * h) // new_h) * w + (x * w) // new_w]
-        for y in range(new_h)
-        for x in range(new_w)
-    )
+    out = nn_sample(*decode_bmp_pixels(blob), new_w, new_h)
     return encode_bmp(new_w, new_h, out, bits=8)

@@ -34,6 +34,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from .job import map_pages
 from .linkops import _subtree_text
 from .nodes import Element
+from .walk import descendants
 
 _COMPOUND_RE = re.compile(
     r"(?P<tag>[a-zA-Z][a-zA-Z0-9-]*|\*)?"
@@ -125,31 +126,23 @@ def _match_at(path, i_path, parts, i_part) -> bool:
 
 def select(document, parts):
     """Yield matching Elements of one parsed document in document order.
-    Iterative walk (explicit stack): the ancestor path excludes synthetic
-    ``#`` wrappers but still descends through them."""
+    The ancestor path excludes synthetic ``#`` wrappers, but it is popped
+    by depth at every element, wrappers included: content a wrapper holds
+    is not under the wrapper's earlier siblings."""
     path = []
+    depths = []
     last = len(parts) - 1
-    # frame = [children, next_index, pops_path_on_exit]
-    stack = [[document.children, 0, False]]
-    while stack:
-        top = stack[-1]
-        children, i = top[0], top[1]
-        if i >= len(children):
-            if top[2]:
-                path.pop()
-            stack.pop()
+    for depth, node in descendants(document):
+        if type(node) is not Element:
             continue
-        top[1] = i + 1
-        node = children[i]
-        if type(node) is Element:
-            if node.name[:1] == "#":
-                stack.append([node.children, 0, False])
-            else:
-                path.append(node)
-                if _match_at(path, len(path) - 1, parts, last):
-                    yield node
-                stack.append([node.children, 0, True])
-
+        while depths and depths[-1] >= depth:
+            depths.pop()
+            path.pop()
+        if node.name[:1] != "#":
+            path.append(node)
+            depths.append(depth)
+            if _match_at(path, len(path) - 1, parts, last):
+                yield node
 
 SELECT_SCHEMA = StructType(
     [
@@ -267,43 +260,22 @@ DENSITY_SCHEMA = StructType(
 def _block_stats(el):
     """(text_chars, link_chars, p_count) for one block element: collapsed
     subtree text length, summed per-anchor collapsed text lengths, and
-    the number of <p> descendants — one iterative walk."""
-    text_chars = len(_subtree_text(el))
+    the number of <p> descendants."""
     link_chars = 0
     p_count = 0
-    stack = [[el.children, 0]]
-    while stack:
-        top = stack[-1]
-        children, i = top[0], top[1]
-        if i >= len(children):
-            stack.pop()
-            continue
-        top[1] = i + 1
-        node = children[i]
+    for _, node in descendants(el):
         if type(node) is Element:
             if node.name == "a":
                 link_chars += len(_subtree_text(node))
             elif node.name == "p":
                 p_count += 1
-            stack.append([node.children, 0])
-    return text_chars, link_chars, p_count
+    return len(_subtree_text(el)), link_chars, p_count
 
 
 def _density_rows(url, doc):
-    rows = []
-    stack = [[doc.children, 0]]
-    while stack:
-        top = stack[-1]
-        children, i = top[0], top[1]
-        if i >= len(children):
-            stack.pop()
-            continue
-        top[1] = i + 1
-        node = children[i]
-        if type(node) is Element:
-            if node.name in _BLOCK_SET:
-                rows.append((node.name, *_block_stats(node)))
-            stack.append([node.children, 0])
+    rows = [(node.name, *_block_stats(node))
+            for _, node in descendants(doc)
+            if type(node) is Element and node.name in _BLOCK_SET]
     best_i, best_score = -1, None
     for i, (_t, tc, lc, _pc) in enumerate(rows):
         score = tc - 3 * lc
@@ -312,7 +284,6 @@ def _density_rows(url, doc):
     return [(url, i + 1, tag, tc, lc, (1000 * lc) // tc if tc else 0, pc,
              1 if i == best_i else 0)
             for i, (tag, tc, lc, pc) in enumerate(rows)]
-
 
 def content_density_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
     """(url, block_pos, tag, text_chars, link_chars, link_permille,
@@ -425,21 +396,9 @@ TEMPLATE_SCHEMA = StructType(
 def _tag_walk_fp(doc) -> str:
     import hashlib
 
-    parts = []
-    stack = [[doc.children, 0]]
-    while stack:
-        top = stack[-1]
-        children, i = top[0], top[1]
-        if i >= len(children):
-            stack.pop()
-            continue
-        top[1] = i + 1
-        node = children[i]
-        if type(node) is Element:
-            parts.append(node.name)
-            stack.append([node.children, 0])
-    return hashlib.md5(" ".join(parts).encode()).hexdigest()
-
+    walk = " ".join(node.name for _, node in descendants(doc)
+                    if type(node) is Element)
+    return hashlib.md5(walk.encode()).hexdigest()
 
 def _template_rows(url, doc):
     return [(url.split("/")[2], _tag_walk_fp(doc))]

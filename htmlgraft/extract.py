@@ -275,9 +275,6 @@ def analyze_page(root, include_dom: bool = True, include_links: bool = False):
     while its:
         for node in its[-1]:
             t = type(node)
-            if t is bytes:
-                node = node.decode("utf-8")
-                t = str
             if t is str:
                 if out is not None:
                     buf.append(node)

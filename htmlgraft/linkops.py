@@ -55,6 +55,8 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from .corpus import pages_df, pages_oracle_cte
 from .extract import analyze_page, collapse_ws
 from .job import map_pages, parse_extract
+from .nodes import Element
+from .walk import descendants
 
 # PageRank constants (integer arithmetic; see module docstring)
 SCALE = 10**12
@@ -66,23 +68,8 @@ ITERS = 5
 def _subtree_text(el) -> str:
     """Whitespace-collapsed raw text of one element subtree (all str
     descendants, including under '#'-wrapper nodes)."""
-    from .nodes import Element
-
-    parts = []
-    its = [iter(el.children)]
-    while its:
-        for node in its[-1]:
-            t = type(node)
-            if t is str:
-                parts.append(node)
-            elif t is bytes:
-                parts.append(node.decode("utf-8"))
-            elif t is Element:
-                its.append(iter(node.children))
-                break
-        else:
-            its.pop()
-    return collapse_ws("".join(parts)).strip()
+    return collapse_ws(
+        "".join(n for _, n in descendants(el) if type(n) is str)).strip()
 
 
 def analyze_links(document):
@@ -114,49 +101,39 @@ def analyze_tables(document):
     (table_idx, row_idx, cell_idx, is_header, cell_text) for every th/td
     under a tr.  Tables are numbered 1.. in document order; cells are the
     LEAVES of this extraction — a table nested inside a cell is flattened
-    into the cell text, not emitted separately (a stack of table contexts
-    still tracks tables that end up siblings through foster-parenting).
-    Cell text is the whitespace-collapsed subtree text, so the
-    parser's implicit-close handling (<tr><th>x<td>y — th closed by td, tr
-    by tr, tbody synthesized) is exactly what this operator exercises."""
-    from .nodes import Element
-
+    into the cell text, not emitted separately.  The open tables are a
+    stack keyed by depth, popped at every element (``#`` wrappers
+    included), so tables that end up siblings through foster-parenting
+    keep their own rows.  Cell text is the whitespace-collapsed subtree
+    text, so the parser's implicit-close handling (<tr><th>x<td>y — th
+    closed by td, tr by tr, tbody synthesized) is exactly what this
+    operator exercises."""
     out = []
     n_tables = 0
-    # ctx stack entry: [table_idx, row_idx, cell_idx]
+    # open tables: [depth, table_idx, row_idx, cell_idx]
     tctx: list[list[int]] = []
-    stack = [[document.children, 0, None]]  # children, i, kind ('table'|'tr'|None)
-    while stack:
-        top = stack[-1]
-        children, i = top[0], top[1]
-        if i >= len(children):
-            if top[2] == "table":
-                tctx.pop()
-            stack.pop()
-            continue
-        top[1] = i + 1
-        node = children[i]
+    cell_at = -1  # depth of the cell whose subtree is being skipped
+    for depth, node in descendants(document):
         if type(node) is not Element:
             continue
+        if depth > cell_at >= 0:
+            continue  # cells own their subtree; don't double-count nested
+        cell_at = -1
+        while tctx and tctx[-1][0] >= depth:
+            tctx.pop()
         name = node.name
-        kind = None
-        if name[:1] != "#":
-            if name == "table":
-                n_tables += 1
-                tctx.append([n_tables, 0, 0])
-                kind = "table"
-            elif name == "tr" and tctx:
-                tctx[-1][1] += 1
-                tctx[-1][2] = 0
-            elif name in ("th", "td") and tctx and tctx[-1][1]:
-                ctx = tctx[-1]
-                ctx[2] += 1
-                out.append(
-                    (ctx[0], ctx[1], ctx[2], 1 if name == "th" else 0,
-                     _subtree_text(node))
-                )
-                continue  # cells own their subtree; don't double-count nested
-        stack.append([node.children, 0, kind])
+        if name == "table":
+            n_tables += 1
+            tctx.append([depth, n_tables, 0, 0])
+        elif name == "tr" and tctx:
+            tctx[-1][2] += 1
+            tctx[-1][3] = 0
+        elif name in ("th", "td") and tctx and tctx[-1][2]:
+            ctx = tctx[-1]
+            ctx[3] += 1
+            out.append((ctx[1], ctx[2], ctx[3], 1 if name == "th" else 0,
+                        _subtree_text(node)))
+            cell_at = depth
     return out
 
 

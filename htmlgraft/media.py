@@ -46,6 +46,7 @@ from pyspark.sql.types import (
     BinaryType, LongType, StringType, StructField, StructType,
 )
 
+from . import bmpops
 from .job import map_rows
 
 MEDIA_SCHEMA = StructType([
@@ -523,29 +524,16 @@ def resample_pixels(blob: bytes, new_w: int, new_h: int) -> bytes:
         from htmlgraft import jpegops
 
         w, h, channels, px = jpegops.decode_jpeg(blob)
-        out = bytearray(new_w * new_h * channels)
-        for y2 in range(new_h):
-            sy = y2 * h // new_h
-            for x2 in range(new_w):
-                src = (sy * w + (x2 * w // new_w)) * channels
-                dst = (y2 * new_w + x2) * channels
-                out[dst:dst + channels] = px[src:src + channels]
+        out = bmpops.nn_sample(w, h, channels, px, new_w, new_h)
         if channels == 1:
-            return jpegops.encode_jpeg_gray(new_w, new_h, bytes(out))
-        return jpegops.encode_jpeg_color(new_w, new_h, bytes(out))
+            return jpegops.encode_jpeg_gray(new_w, new_h, out)
+        return jpegops.encode_jpeg_color(new_w, new_h, out)
     if blob[:6] in (b"GIF87a", b"GIF89a"):
         from htmlgraft import gifops
 
-        w, h, _, px = gifops.decode_gif_pixels(blob)
-        out = bytearray(new_w * new_h)
-        for y2 in range(new_h):
-            sy = y2 * h // new_h
-            for x2 in range(new_w):
-                out[y2 * new_w + x2] = px[sy * w + (x2 * w // new_w)]
-        return gifops.encode_gif(new_w, new_h, bytes(out))
+        out = bmpops.nn_sample(*gifops.decode_gif_pixels(blob), new_w, new_h)
+        return gifops.encode_gif(new_w, new_h, out)
     if blob[:2] == b"BM":
-        from htmlgraft import bmpops
-
         return bmpops.resample_bmp(blob, new_w, new_h)
     if blob[:4] in (b"II*\x00", b"MM\x00*"):
         from htmlgraft import tiffops

@@ -422,17 +422,9 @@ def resample_png(blob: bytes, new_w: int, new_h: int) -> bytes:
 def _resample_plane(w: int, h: int, bpp: int, px: bytes,
                     new_w: int, new_h: int) -> bytes:
     """Nearest-neighbour resample of a decoded plane, re-encoded as PNG."""
-    stride = w * bpp
-    out = bytearray(new_w * new_h * bpp)
-    for y2 in range(new_h):
-        sy = y2 * h // new_h
-        for x2 in range(new_w):
-            sx = x2 * w // new_w
-            src = sy * stride + sx * bpp
-            dst = (y2 * new_w + x2) * bpp
-            out[dst:dst + bpp] = px[src:src + bpp]
     ctype = {1: 0, 3: 2, 2: 4, 4: 6}[bpp]
-    return encode_png(new_w, new_h, bytes(out), ctype)
+    return encode_png(new_w, new_h,
+                      bmpops.nn_sample(w, h, bpp, px, new_w, new_h), ctype)
 
 
 def dhash_gray(w: int, h: int, px: bytes) -> str:

@@ -50,19 +50,17 @@ def stream_parse_extract(pages: DataFrame, include_dom: bool = False) -> DataFra
     return parse_extract(pages, include_dom=include_dom, pre_partitioned=True)
 
 
-def start_results_sink(
-    results: DataFrame, out_dir: str, checkpoint_dir: str, available_now: bool = True
-):
-    """Exactly-once parquet sink (Iceberg writeTo in prod)."""
-    w = (
+def start_results_sink(results: DataFrame, out_dir: str, checkpoint_dir: str):
+    """Exactly-once parquet sink (Iceberg writeTo in prod), triggered
+    ``availableNow``: it drains what the source holds, then stops."""
+    return (
         results.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def windowed_metrics(pages: DataFrame, results: DataFrame | None = None) -> DataFrame:
@@ -78,17 +76,6 @@ def windowed_metrics(pages: DataFrame, results: DataFrame | None = None) -> Data
         .select(
             F.col("w.start").alias("hour"), "lang", "n_pages", "n_bytes"
         )
-    )
-
-
-def start_metrics_sink(metrics: DataFrame, out_dir: str, checkpoint_dir: str):
-    return (
-        metrics.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -196,9 +183,9 @@ def streaming_dedup(pages: DataFrame, horizon: str = "2 hours") -> DataFrame:
 
 
 def _run_stream_query(spark, sf_dir: str, build, final_select,
-                      stage_df: DataFrame | None = None) -> DataFrame:
-    """Shared gated-stream harness: stage the corpus (or ``stage_df``, for
-    gates that need a doctored drop dir) to a drop dir, run
+                      stage=None) -> DataFrame:
+    """Shared gated-stream harness: stage the corpus to a drop dir (or
+    call ``stage(drop_dir)``, for gates that need a doctored drop dir), run
     ``build(stream_pages(...))`` through the exactly-once sink to
     completion (fail LOUDLY on timeout — a partial sink surfaces as a
     baffling hash mismatch), then ``final_select(sink_df)``, lineage-cut
@@ -210,12 +197,13 @@ def _run_stream_query(spark, sf_dir: str, build, final_select,
 
     base = tempfile.mkdtemp(prefix="graft_stream_q_")
     drop, out, ckpt = f"{base}/pages", f"{base}/out", f"{base}/ckpt"
-    if stage_df is None:
-        stage_df = pages_df(spark, sf_dir).select(
-            "url", "warc_ts", "html", "text", "lang"
-        )
     try:
-        stage_df.repartition(4).write.parquet(drop)
+        if stage is None:
+            pages_df(spark, sf_dir).select(
+                "url", "warc_ts", "html", "text", "lang"
+            ).repartition(4).write.parquet(drop)
+        else:
+            stage(drop)
         q = start_results_sink(
             build(stream_pages(spark, drop, max_files_per_trigger=2)),
             out, ckpt,
@@ -269,7 +257,7 @@ def run_stream_dedup(spark, sf_dir: str) -> DataFrame:
         spark, sf_dir,
         lambda s: streaming_dedup(s).select("url", "lang"),
         lambda df: df.select("url", "lang"),
-        stage_df=p.unionAll(dup),
+        stage=lambda drop: p.unionAll(dup).repartition(4).write.parquet(drop),
     )
 
 
@@ -376,24 +364,19 @@ def run_stream_window_metrics(spark, sf_dir: str) -> DataFrame:
     Scale: state is (windows-in-horizon x langs) rows — bounded by the
     watermark horizon, not the corpus; the shuffle keys on (window, lang)
     with map-side partial aggregation."""
-    import shutil
-    import tempfile
     import time
 
     from .corpus import pages_df
 
-    base = tempfile.mkdtemp(prefix="graft_stream_w_")
-    drop, out, ckpt = f"{base}/pages", f"{base}/out", f"{base}/ckpt"
-    p = pages_df(spark, sf_dir).select(
-        "url",
-        F.expr(
-            f"timestamp_seconds({WINDOW_BASE_ES} + (doc_id % 2) * 3600"
-            " + doc_id % 3600)"
-        ).alias("warc_ts"),
-        "html", "text", "lang",
-    )
-    try:
-        p.repartition(4).write.parquet(drop)
+    def stage(drop):
+        pages_df(spark, sf_dir).select(
+            "url",
+            F.expr(
+                f"timestamp_seconds({WINDOW_BASE_ES} + (doc_id % 2) * 3600"
+                " + doc_id % 3600)"
+            ).alias("warc_ts"),
+            "html", "text", "lang",
+        ).repartition(4).write.parquet(drop)
         time.sleep(2)  # distinct mtime: the file source must see this last
         spark.range(1).select(
             F.lit("sentinel://wm").alias("url"),
@@ -403,39 +386,17 @@ def run_stream_window_metrics(spark, sf_dir: str) -> DataFrame:
             F.lit("").alias("text"),
             F.lit("__wm__").alias("lang"),
         ).coalesce(1).write.mode("append").parquet(drop)
-        q = start_metrics_sink(
-            windowed_metrics(
-                stream_pages(spark, drop, max_files_per_trigger=2)
-            ),
-            out, ckpt,
-        )
-        try:
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError(
-                    "streaming query did not finish within 600s; "
-                    "sink is partial"
-                )
-        except Exception:
-            if q.isActive:
-                q.stop()
-            raise
-        # lineage cut inside the try; cleanup in finally so a timed-out or
-        # failed run does not leak the staged parquet tree.
-        return (
-            spark.read.parquet(out)
-            .where(F.col("lang") != "__wm__")
-            .select(
-                F.unix_timestamp("hour").cast("bigint").alias("hour_es"),
-                "lang",
-                F.col("n_pages").cast("bigint").alias("n_pages"),
-                F.col("n_bytes").cast("bigint").alias("n_bytes"),
-            )
-            .orderBy("hour_es", "lang")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return _run_stream_query(
+        spark, sf_dir, windowed_metrics,
+        lambda df: df.where(F.col("lang") != "__wm__").select(
+            F.unix_timestamp("hour").cast("bigint").alias("hour_es"),
+            "lang",
+            F.col("n_pages").cast("bigint").alias("n_pages"),
+            F.col("n_bytes").cast("bigint").alias("n_bytes"),
+        ).orderBy("hour_es", "lang"),
+        stage=stage,
+    )
 
 
 def stream_window_metrics_oracle_sql() -> str:

@@ -43,7 +43,7 @@ from __future__ import annotations
 
 import struct
 
-from htmlgraft.bmpops import _luma
+from htmlgraft.bmpops import _luma, nn_sample
 
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4}  # BYTE, ASCII, SHORT, LONG
 
@@ -228,12 +228,7 @@ def resample_tiff(blob: bytes, new_w: int, new_h: int) -> bytes:
     """Nearest-neighbour resample, re-encoded as a single-strip
     little-endian greyscale TIFF (lossless carrier for the resampled
     luma plane)."""
-    w, h, _, px = decode_tiff_pixels(blob)
-    out = bytes(
-        px[((y * h) // new_h) * w + (x * w) // new_w]
-        for y in range(new_h)
-        for x in range(new_w)
-    )
+    out = nn_sample(*decode_tiff_pixels(blob), new_w, new_h)
     return encode_tiff(new_w, new_h, out)
 
 

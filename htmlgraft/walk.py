@@ -6,6 +6,15 @@ elements (traversal.js:73-77); ``_coalesce`` merges adjacent DATA events
 (traversal.js:101-112); ``print_tree`` renders the html5lib golden format
 (traversal.js:148-185) -- attributes and doctype data are NOT printed, matching
 the reference's TODOs at traversal.js:165-167,179.
+
+``descendants`` is the walk for tree consumers (the DOM operators in
+``domops`` and ``linkops``): every node below a root, in document order, with
+its depth, ``#`` wrappers included, so a consumer that keeps ancestor state
+pops it by depth.  Two walks stay separate: ``traverse`` is the reference
+port the golden tests compare against, and ``extract.analyze_page`` is the
+parse stage's per-page hot path, which fuses the DOM print, scoring and
+links into one loop without a generator step per node.  Text nodes are
+``str`` only; the lexer produces no other text type.
 """
 
 from __future__ import annotations
@@ -31,8 +40,6 @@ def traverse(node):
                 yield node
             elif isinstance(node, str):
                 yield (DATA, node)
-            elif isinstance(node, bytes):
-                yield (DATA, node.decode("utf-8"))
             elif isinstance(node, Document):
                 stack.append(iter(node.children))
                 advanced = True
@@ -54,6 +61,22 @@ def traverse(node):
                 yield (COMMENT, "".join(node.data))
         if not advanced:
             stack.pop()
+
+
+def descendants(node):
+    """Yield (depth, child) for every node below ``node`` in document
+    order: elements (``#`` wrappers included), text, comments and
+    doctypes.  Depth 0 is ``node``'s own children.  Iterative, like
+    ``traverse``, so adversarially deep documents are safe."""
+    its = [iter(node.children)]
+    while its:
+        for child in its[-1]:
+            yield len(its) - 1, child
+            if type(child) is Element:
+                its.append(iter(child.children))
+                break
+        else:
+            its.pop()
 
 
 def coalesce(stream):
@@ -78,15 +101,10 @@ def _attr_list(attrs):
 
 
 def print_tree(node) -> str:
-    return print_events(traverse(node))
-
-
-def print_events(events) -> str:
-    """html5lib-format rendering from an event stream/list (lets callers
-    materialize ``traverse`` once and reuse it across extract + print)."""
+    """html5lib-format rendering of ``traverse(node)``."""
     out = []
     depth = 0
-    for token in coalesce(events):
+    for token in coalesce(traverse(node)):
         indent = "  " * depth
         kind = token[0]
         if kind == START:
@@ -119,8 +137,6 @@ def tree_to_jsonable(node):
         return {"t": "comment", "d": "".join(node.data)}
     if isinstance(node, Doctype):
         return {"t": "doctype", "d": "".join(node.data)}
-    if isinstance(node, bytes):
-        return node.decode("utf-8")
     return node  # str
 
 

@@ -13,10 +13,11 @@ triggers it.  All with fakes — no Spark session is started.
 """
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import bench
 
 

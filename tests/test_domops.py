@@ -76,6 +76,15 @@ def test_reparented_wrapper_is_transparent():
     assert _sel(d, "table span") == []
 
 
+def test_wrapper_after_sibling_closes_the_sibling():
+    """A '#reparented' wrapper that follows a sibling element is not
+    inside that sibling: the foster-parented <b> sits in the div, after
+    the closed <p>, so 'p b' must not match it."""
+    d = _doc(b"<div><p>x</p><table><b>y</b><tr><td>c</table></div>")
+    assert _sel(d, "p b") == []
+    assert _sel(d, "div > b") == [("b", "y")]
+
+
 def test_bad_selectors_fail_fast(spark, sf_dir):
     for bad in ("", ">", "> a", "a >", "a > > b", "[=x]", "#", "a[]"):
         with pytest.raises(ValueError):

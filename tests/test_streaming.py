@@ -9,8 +9,8 @@ import pytest
 from htmlgraft.corpus import pages_df, pages_oracle_cte
 from htmlgraft.job import parse_extract
 from htmlgraft.streaming import (
-    start_metrics_sink, start_results_sink, stream_pages,
-    stream_parse_extract, windowed_metrics,
+    start_results_sink, stream_pages, stream_parse_extract,
+    windowed_metrics,
 )
 
 
