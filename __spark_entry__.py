@@ -149,7 +149,7 @@ def _q_resume_antijoin_large(spark, sf_dir):
     # anti-join, and the surviving half parses through the full pipeline
     pages = pages_df(spark, sf_dir)
     done = pages.filter("doc_id % 2 = 0").select("url")
-    return parse_extract(pages, done_urls=done, broadcast_done=False).select(
+    return parse_extract(pages, done_urls=done).select(
         "url", "lang"
     )
 

@@ -120,19 +120,32 @@ def decode_bmp_pixels(blob: bytes):
     h = -h_raw if top_down else h_raw
     if w <= 0 or h == 0:
         raise ValueError(f"bad dimensions {w}x{h_raw}")
+    px, _ = dib_plane(blob, offset, _FILEHDR.size + hsize, w, h, bits,
+                      n_colors, top_down)
+    return w, h, 1, px
+
+
+def dib_plane(blob: bytes, offset: int, pal_off: int, w: int, h: int,
+              bits: int, n_colors: int, top_down: bool):
+    """(greyscale plane, end of the pixel array) of an 8-bit paletted or
+    24-bit BGR DIB pixel array at ``offset``: the palette of
+    ``n_colors`` BGRX quads (0 means 256) at ``pal_off``, rows padded to
+    4 bytes, bottom-up unless ``top_down``.  Raises ValueError on a
+    truncated palette or pixel array and on a palette index out of range;
+    the header checks stay with the callers (``decode_bmp_pixels`` and
+    ``icoops.decode_dib_member``, which also bounds its AND mask)."""
     pal = []
     if bits == 8:
-        if n_colors == 0:
-            n_colors = 256
-        pal_off = _FILEHDR.size + hsize
+        n_colors = n_colors or 256
         if pal_off + 4 * n_colors > len(blob):
             raise ValueError("truncated palette")
-        for i in range(n_colors):
-            b, g, r, _x = blob[pal_off + 4 * i:pal_off + 4 * i + 4]
+        for p in range(pal_off, pal_off + 4 * n_colors, 4):
+            b, g, r = blob[p:p + 3]
             pal.append(_luma(r, g, b))
     row_bytes = w if bits == 8 else 3 * w
     stride = row_bytes + _pad(row_bytes)
-    if offset + stride * h > len(blob):
+    end = offset + stride * h
+    if end > len(blob):
         raise ValueError("truncated pixel array")
     out = bytearray(w * h)
     for y in range(h):
@@ -148,7 +161,7 @@ def decode_bmp_pixels(blob: bytes):
             for x in range(w):
                 b, g, r = row[3 * x:3 * x + 3]
                 out[y * w + x] = _luma(r, g, b)
-    return w, h, 1, bytes(out)
+    return bytes(out), end
 
 
 def nn_sample(w: int, h: int, bpp: int, px: bytes,

@@ -31,6 +31,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .extract import collapse_ws
 from .job import map_pages
 from .linkops import _subtree_text
 from .nodes import Element
@@ -257,25 +258,41 @@ DENSITY_SCHEMA = StructType(
 )
 
 
-def _block_stats(el):
-    """(text_chars, link_chars, p_count) for one block element: collapsed
-    subtree text length, summed per-anchor collapsed text lengths, and
-    the number of <p> descendants."""
-    link_chars = 0
-    p_count = 0
-    for _, node in descendants(el):
-        if type(node) is Element:
+def _density_rows(url, doc):
+    """One ``descendants`` walk.  A block's text_chars is the collapsed
+    length of its slice of the walk's text nodes; its link_chars (summed
+    per-<a> collapsed text lengths) and p_count (<p> descendants) are
+    differences of running totals taken when it opens and closes."""
+    texts, rows = [], []
+    link_chars = p_count = 0
+    # open <a> and block elements, innermost last:
+    # (depth, row index or -1 for an <a>, first text, link_chars, p_count)
+    opened = []
+
+    def close(depth):
+        nonlocal link_chars
+        while opened and opened[-1][0] >= depth:
+            _, row, first, lc, pc = opened.pop()
+            n = len(collapse_ws("".join(texts[first:])).strip())
+            if row < 0:
+                link_chars += n
+            else:
+                rows[row][1:] = n, link_chars - lc, p_count - pc
+
+    for depth, node in descendants(doc):
+        close(depth)
+        if type(node) is str:
+            texts.append(node)
+        elif type(node) is Element:
             if node.name == "a":
-                link_chars += len(_subtree_text(node))
+                opened.append((depth, -1, len(texts), 0, 0))
+            elif node.name in _BLOCK_SET:
+                opened.append((depth, len(rows), len(texts), link_chars,
+                               p_count))
+                rows.append([node.name, 0, 0, 0])
             elif node.name == "p":
                 p_count += 1
-    return len(_subtree_text(el)), link_chars, p_count
-
-
-def _density_rows(url, doc):
-    rows = [(node.name, *_block_stats(node))
-            for _, node in descendants(doc)
-            if type(node) is Element and node.name in _BLOCK_SET]
+    close(0)
     best_i, best_score = -1, None
     for i, (_t, tc, lc, _pc) in enumerate(rows):
         score = tc - 3 * lc

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import struct
 
-from htmlgraft.bmpops import _luma, _pad
+from htmlgraft.bmpops import _pad, dib_plane
 
 _ENTRY = struct.Struct("<BBBBHHII")
 
@@ -56,37 +56,12 @@ def decode_dib_member(blob: bytes):
     if h2 <= 0 or h2 % 2 or w <= 0:
         raise ValueError(f"bad ICO DIB geometry {w}x{h2} (height not doubled?)")
     h = h2 // 2
-    pos = 40
-    pal = []
-    if bits == 8:
-        if n_colors == 0:
-            n_colors = 256
-        if pos + 4 * n_colors > len(blob):
-            raise ValueError("truncated ICO palette")
-        for i in range(n_colors):
-            b, g, r, _ = blob[pos + 4 * i:pos + 4 * i + 4]
-            pal.append(_luma(r, g, b))
-        pos += 4 * n_colors
-    row_bytes = w if bits == 8 else 3 * w
-    stride = row_bytes + _pad(row_bytes)
-    mask_stride = ((w + 31) // 32) * 4
-    if pos + stride * h + mask_stride * h > len(blob):
-        raise ValueError("truncated ICO pixel data or AND mask")
-    out = bytearray(w * h)
-    for y in range(h):
-        src_y = h - 1 - y          # XOR plane is bottom-up
-        row = blob[pos + src_y * stride:pos + src_y * stride + row_bytes]
-        if bits == 8:
-            for x in range(w):
-                idx = row[x]
-                if idx >= len(pal):
-                    raise ValueError(f"palette index {idx} out of range")
-                out[y * w + x] = pal[idx]
-        else:
-            for x in range(w):
-                b, g, r = row[3 * x:3 * x + 3]
-                out[y * w + x] = _luma(r, g, b)
-    return w, h, bytes(out)
+    # the XOR plane follows the palette, bottom-up; the AND mask follows it
+    pos = 40 + 4 * (n_colors or 256) if bits == 8 else 40
+    px, end = dib_plane(blob, pos, 40, w, h, bits, n_colors, False)
+    if end + ((w + 31) // 32) * 4 * h > len(blob):
+        raise ValueError("truncated ICO AND mask")
+    return w, h, px
 
 
 def decode_ico(blob: bytes):

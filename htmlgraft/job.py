@@ -204,13 +204,13 @@ def make_parse_batch(include_dom: bool = True, include_links: bool = False):
     return _worker_stage(row_batches(parse_batch, PARSE_COLS, schema.fieldNames()))
 
 
-# size above which a document is routed to its own salt lane
+# size above which a document is routed to its own salt lane, and the
+# number of salt lanes an oversized document's url hashes into
 OVERSIZE_BYTES = 256 * 1024
+SALTS = 8
 
 
-def with_partitioning(
-    pages: DataFrame, num_parts: int | None, salts: int = 8
-) -> DataFrame:
+def with_partitioning(pages: DataFrame, num_parts: int | None) -> DataFrame:
     """Explicit shuffle control: url-hash partitioning with a salt lane for
     oversized documents, into ``num_parts`` partitions (None: the session's
     ``spark.sql.shuffle.partitions``).
@@ -231,7 +231,7 @@ def with_partitioning(
         "salt",
         F.when(
             F.length(F.col("html")) > OVERSIZE_BYTES,
-            F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(salts)),
+            F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(SALTS)),
         ).otherwise(F.lit(0)),
     )
     return df.repartition(num_parts, F.col("url"), F.col("salt"))
@@ -324,7 +324,6 @@ def parse_extract(
     include_dom: bool = True,
     done_urls: DataFrame | None = None,
     done_count: int | None = None,
-    broadcast_done: bool | None = None,
     pre_partitioned: bool = False,
     include_links: bool = False,
 ) -> DataFrame:
@@ -338,22 +337,20 @@ def parse_extract(
     repartition for unbalanced/skewed sources.
 
     Resume anti-join strategy (size-gated, never unconditional broadcast):
-    ``broadcast_done=None`` auto-selects — broadcast only when the done-set
-    is KNOWN (``done_count``) to fit ``BROADCAST_DONE_MAX``, else a merge
-    hint forces the shuffle sort-merge anti-join that survives
-    terabyte-scale done-sets."""
+    broadcast only when the done-set is KNOWN (``done_count``) to fit
+    ``BROADCAST_DONE_MAX``, else a merge hint forces the shuffle sort-merge
+    anti-join that survives terabyte-scale done-sets."""
     # a page source without lang or charset gets typed nulls
     df = pages.select(*(
         c if c in pages.columns else F.lit(None).cast("string").alias(c)
         for c in ("url", "lang", "html", "charset")
     ))
     if done_urls is not None:
-        if broadcast_done is None:
-            broadcast_done = (
-                done_count is not None and done_count <= BROADCAST_DONE_MAX
-            )
         done = done_urls.select("url")
-        done = F.broadcast(done) if broadcast_done else done.hint("merge")
+        if done_count is not None and done_count <= BROADCAST_DONE_MAX:
+            done = F.broadcast(done)
+        else:
+            done = done.hint("merge")
         df = df.join(done, "url", "left_anti")
     if pre_partitioned:
         df = df.withColumn("part_id", F.lit(0).cast("long"))

@@ -287,15 +287,22 @@ def _dht_payload(cls: int, tid: int, bits, vals) -> bytes:
     return bytes([cls << 4 | tid]) + bytes(bits) + bytes(vals)
 
 
-def _encode_block(w: _BitWriter, zz: list, pred: int) -> int:
-    """Entropy-encode one 64-length zigzag-ordered quantized block;
-    returns the new DC predictor."""
-    diff = zz[0] - pred
+def _put_dc(w: _BitWriter, diff: int) -> None:
+    """Put one DC difference: the Huffman code of its size category, then
+    that many low bits (a negative difference one's-complemented, T.81
+    F.1.2.1).  The one DC coder of the baseline blocks and of every
+    progressive DC first scan."""
     t = _category(diff)
     code, ln = _DC_ENC[t]
     w.put(code, ln)
     if t:
         w.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
+
+
+def _encode_block(w: _BitWriter, zz: list, pred: int) -> int:
+    """Entropy-encode one 64-length zigzag-ordered quantized block;
+    returns the new DC predictor."""
+    _put_dc(w, zz[0] - pred)
     run = 0
     for k in range(1, 64):
         v = zz[k]
@@ -320,9 +327,21 @@ def _encode_block(w: _BitWriter, zz: list, pred: int) -> int:
 _JFIF_APP0 = _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
 
 
-def _headers(w: int, h: int, comps) -> bytes:
-    """SOI..SOS for Annex-K luminance tables shared by every component.
-    ``comps`` = [(id, H, V), ...]."""
+def _sos(comp_ids, ss, se, ah, al) -> bytes:
+    body = bytes([len(comp_ids)])
+    ta = 1 if ss != 0 else 0
+    for cid in comp_ids:
+        body += bytes([cid, ta])
+    body += bytes([ss, se, ah << 4 | al])
+    return _seg(0xDA, body)
+
+
+def _headers(w: int, h: int, comps, progressive: bool = False) -> bytes:
+    """SOI..DHT for Annex-K luminance tables shared by every component.
+    ``comps`` = [(id, H, V), ...].  Baseline (SOF0) headers carry the
+    Annex-K AC table and end with the SOS of their one interleaved scan;
+    progressive (SOF2) ones carry the ``PROG_AC_BITS``/``PROG_AC_VALS``
+    table as AC table 1 and leave each scan's SOS to the caller."""
     out = bytearray(b"\xff\xd8")
     out += _JFIF_APP0
     out += _seg(0xDB, b"\x00" + bytes(QTABLE_LUM[ZIGZAG[k]]
@@ -330,14 +349,13 @@ def _headers(w: int, h: int, comps) -> bytes:
     sof = struct.pack(">BHHB", 8, h, w, len(comps))
     for cid, ch, cv in comps:
         sof += bytes([cid, ch << 4 | cv, 0])
-    out += _seg(0xC0, sof)
+    out += _seg(0xC2 if progressive else 0xC0, sof)
     out += _seg(0xC4, _dht_payload(0, 0, DC_LUM_BITS, DC_LUM_VALS))
-    out += _seg(0xC4, _dht_payload(1, 0, AC_LUM_BITS, AC_LUM_VALS))
-    sos = bytes([len(comps)])
-    for cid, _, _ in comps:
-        sos += bytes([cid, 0x00])
-    sos += b"\x00\x3f\x00"
-    out += _seg(0xDA, sos)
+    if progressive:
+        out += _seg(0xC4, _dht_payload(1, 1, PROG_AC_BITS, PROG_AC_VALS))
+    else:
+        out += _seg(0xC4, _dht_payload(1, 0, AC_LUM_BITS, AC_LUM_VALS))
+        out += _sos([cid for cid, _, _ in comps], 0, 63, 0, 0)
     return bytes(out)
 
 
@@ -1063,29 +1081,6 @@ def _enc_ac_refine_scan(w: _BitWriter, blocks, ss, se, ah, al) -> None:
     pw.flush_eob()
 
 
-def _prog_headers(w: int, h: int, comps) -> bytes:
-    out = bytearray(b"\xff\xd8")
-    out += _JFIF_APP0
-    out += _seg(0xDB, b"\x00" + bytes(QTABLE_LUM[ZIGZAG[k]]
-                                      for k in range(64)))
-    sof = struct.pack(">BHHB", 8, h, w, len(comps))
-    for cid, ch, cv in comps:
-        sof += bytes([cid, ch << 4 | cv, 0])
-    out += _seg(0xC2, sof)
-    out += _seg(0xC4, _dht_payload(0, 0, DC_LUM_BITS, DC_LUM_VALS))
-    out += _seg(0xC4, _dht_payload(1, 1, PROG_AC_BITS, PROG_AC_VALS))
-    return bytes(out)
-
-
-def _sos(comp_ids, ss, se, ah, al) -> bytes:
-    body = bytes([len(comp_ids)])
-    ta = 1 if ss != 0 else 0
-    for cid in comp_ids:
-        body += bytes([cid, ta])
-    body += bytes([ss, se, ah << 4 | al])
-    return _seg(0xDA, body)
-
-
 def _enc_prog_scan_units(units, ss, se, ah, al) -> bytes:
     """Entropy bytes for ONE restart interval of a greyscale progressive
     scan (state — DC predictor, EOB run — resets at interval edges, which
@@ -1096,13 +1091,8 @@ def _enc_prog_scan_units(units, ss, se, ah, al) -> bytes:
         for zz in units:
             v = int(zz[0]) >> al         # DC point transform: arith shift
             if ah == 0:
-                diff = v - pred
+                _put_dc(bits, v - pred)
                 pred = v
-                t = _category(diff)
-                code, ln = _DC_ENC[t]
-                bits.put(code, ln)
-                if t:
-                    bits.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
             else:
                 bits.put(v & 1, 1)
     elif ah == 0:
@@ -1122,7 +1112,7 @@ def encode_jpeg_gray_coeffs_progressive(w: int, h: int, blocks,
     bw, bh = (w + 7) // 8, (h + 7) // 8
     if len(blocks) != bw * bh:
         raise ValueError(f"need {bw * bh} blocks, got {len(blocks)}")
-    out = bytearray(_prog_headers(w, h, [(1, 1, 1)]))
+    out = bytearray(_headers(w, h, [(1, 1, 1)], progressive=True))
     if restart:
         out += _seg(0xDD, struct.pack(">H", restart))
     for (ss, se, ah, al) in script:
@@ -1150,8 +1140,8 @@ def encode_jpeg_color_coeffs_progressive(w: int, h: int, y_blocks,
         raise ValueError("y block count mismatch")
     if len(cb_blocks) != mx * my or len(cr_blocks) != mx * my:
         raise ValueError("chroma block count mismatch")
-    out = bytearray(_prog_headers(w, h, [(1, sh, sv), (2, 1, 1),
-                                         (3, 1, 1)]))
+    out = bytearray(_headers(w, h, [(1, sh, sv), (2, 1, 1), (3, 1, 1)],
+                             progressive=True))
     comp_blocks = [y_blocks, cb_blocks, cr_blocks]
     for (ss, se, ah, al) in script:
         if ss == 0:
@@ -1167,15 +1157,8 @@ def encode_jpeg_color_coeffs_progressive(w: int, h: int, y_blocks,
                             nb = (mcy * nv + vy) * bwp + mcx * nh + vx
                             v = int(comp_blocks[ci][nb][0]) >> al
                             if ah == 0:
-                                diff = v - preds[ci]
+                                _put_dc(bits, v - preds[ci])
                                 preds[ci] = v
-                                t = _category(diff)
-                                code, ln = _DC_ENC[t]
-                                bits.put(code, ln)
-                                if t:
-                                    bits.put(
-                                        diff if diff >= 0
-                                        else diff + (1 << t) - 1, t)
                             else:
                                 bits.put(v & 1, 1)
             out += bits.flush()

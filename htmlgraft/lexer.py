@@ -45,7 +45,7 @@ from __future__ import annotations
 import re
 
 from . import _tables as T
-from .grammar import C, JS_PROTO_KEYS
+from .grammar import C, JS_PROTO_KEYS, _lowercase_equiv
 from .nodes import Comment, Doctype, Element, EndTag
 
 _TOK = T.TOKENS
@@ -236,22 +236,12 @@ _NAMED_REFS = {
 }
 
 
-def _lowercase_equiv(s1: str, s2: str) -> bool:
-    if len(s1) != len(s2):
-        return False
-    for a, b in zip(s1, s2):
-        if (ord(a) | 32) != (ord(b) | 32):
-            return False
-    return True
-
-
 class Tokeniser:
     """Push tokeniser; ``parse(input)`` == ``write(input); end()``."""
 
     __slots__ = (
         "delegate", "can_merge", "token_state", "anchor", "end", "pos",
         "line", "lastnl", "parser_context", "last_start_tag", "tag", "attr",
-        "emit",
     )
 
     def __init__(self, delegate):
@@ -268,7 +258,6 @@ class Tokeniser:
         self.last_start_tag = ""
         self.tag = None
         self.attr = None
-        self.emit = None
 
     def parse(self, input_: str):
         self.write(input_)
@@ -464,7 +453,6 @@ class Tokeniser:
                     name = name.lower()
                 last_start_tag = name
                 tag = Element(name)
-                self.emit = "tag"
                 token_state = S_BEFORE_ATTRIBUTE
 
             elif token_type == _endTag or token_type == _endTag_:
@@ -484,7 +472,6 @@ class Tokeniser:
                     name = name.lower()
                 if token_state == S_MAIN or last_start_tag == name:
                     tag = EndTag(name)
-                    self.emit = "end_tag"
                     token_state = S_BEFORE_ATTRIBUTE
                 else:
                     write_data(s[anchor:end])
@@ -531,22 +518,18 @@ class Tokeniser:
             elif token_type == _mDeclStart:
                 if _lowercase_equiv(s[anchor + 2 : anchor + 9], "doctype"):
                     tag = Doctype()
-                    self.emit = "doctype"
                     token_state = S_IN_BOGUS_COMMENT
                 else:
                     tag = Comment()
                     tag.data.append(s[anchor + 2 : end])
-                    self.emit = "comment"
                     token_state = S_BEFORE_COMMENT_DATA
 
             elif token_type == _commentStart:
                 tag = Comment()
-                self.emit = "comment"
                 token_state = S_BEFORE_COMMENT_DATA
 
             elif token_type == _bogusStart:
                 tag = Comment()
-                self.emit = "comment"
                 token_state = S_IN_BOGUS_COMMENT
 
             elif token_type == _bogusData:
@@ -649,11 +632,11 @@ class Tokeniser:
 
     def _emit_tag(self, tag):
         d = self.delegate
-        kind = self.emit
-        if kind == "tag":
+        kind = type(tag)
+        if kind is Element:
             return d.write_tag(tag)
-        if kind == "end_tag":
+        if kind is EndTag:
             return d.write_end_tag(tag)
-        if kind == "comment":
+        if kind is Comment:
             return d.write_comment(tag)
         return d.write_doctype(tag)

@@ -5,18 +5,18 @@ The DECODE step is REAL header parsing from public format specs — no
 libraries needed: PNG IHDR (width/height as u32 big-endian at offset 16 of
 the signature+IHDR layout), GIF87a/89a logical-screen descriptor (u16
 little-endian at offset 6), TIFF IFD walk (both byte orders, SHORT/LONG
-scalar entries — the same machinery an Exif APP1 payload needs), JPEG
-SOFn segment walk (marker scan from SOI,
+scalar entries, on ``tiffops``' IFD reader — the same machinery an Exif
+APP1 payload needs), JPEG SOFn segment walk (marker scan from SOI,
 skipping variable-length segments until a start-of-frame carries the
-dimensions), WAV RIFF chunk walk (fmt chunk for channels/sample-rate, data
-chunk for frame count), MP4/ISO-BMFF box walk (moov -> mvhd duration,
-trak -> tkhd 16.16 fixed-point dimensions), and WebM/Matroska EBML
-element walk (Segment -> Tracks -> TrackEntry -> Video -> PixelWidth/
-PixelHeight, with real variable-length-integer decoding).  These parsers
-work on real files; full-pixel decode is REAL for PNG (``pixelops`` —
-stdlib zlib is the whole codec), while JPEG/GIF/TIFF pixel decode (DCT /
-LZW, codec libraries absent in this container) remains out of scope, and
-genuinely unknown formats raise ``NotImplementedError``.
+dimensions), WAV and WebP RIFF chunk walk (WAV: fmt chunk for
+channels/sample-rate, data chunk for frame count), MP4/ISO-BMFF box walk
+(moov -> mvhd duration, trak -> tkhd 16.16 fixed-point dimensions), and
+WebM/Matroska EBML element walk (Segment -> Tracks -> TrackEntry -> Video
+-> PixelWidth/PixelHeight, with real variable-length-integer decoding).
+These parsers work on real files.  Full-pixel decode is real too, in pure
+Python, for PNG (``pixelops``), baseline and progressive JPEG
+(``jpegops``), GIF (``gifops``), BMP (``bmpops``), ICO (``icoops``) and
+uncompressed TIFF (``tiffops``); other formats raise ``NotImplementedError``.
 
 The source table synthesizes blobs with REAL format headers entirely in
 Spark SQL expressions (binary concat + unhex arithmetic, zero Python; the
@@ -46,7 +46,7 @@ from pyspark.sql.types import (
     BinaryType, LongType, StringType, StructField, StructType,
 )
 
-from . import bmpops
+from . import bmpops, tiffops
 from .job import map_rows
 
 MEDIA_SCHEMA = StructType([
@@ -219,61 +219,56 @@ def parse_gif(blob: bytes):
     return w, h, 1, 13
 
 
-def parse_jpeg(blob: bytes):
-    """JPEG: walk marker segments from SOI until a SOFn (C0-CF minus
-    C4/C8/CC) carries height/width as u16 BE after the precision byte.
-    Payload starts after the SOFn segment."""
-    if len(blob) < 4 or blob[:2] != b"\xff\xd8":
+def _jpeg_sof(blob: bytes):
+    """Offset of the first SOFn marker (C0-CF minus C4/C8/CC) on the
+    marker-segment walk from SOI, or None when the walk leaves the marker
+    grammar or the blob first.  The SOF body may be cut short: ``parse_jpeg``
+    then returns None, ``_rewrite_image_header`` patches what is there."""
+    if blob[:2] != b"\xff\xd8":
         return None
-    i = 2
-    n = len(blob)
-    while i + 4 <= n:
-        if blob[i] != 0xFF:
-            return None
+    i, n = 2, len(blob)
+    while i + 4 <= n and blob[i] == 0xFF:
         marker = blob[i + 1]
-        seglen = struct.unpack(">H", blob[i + 2:i + 4])[0]
         if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            if i + 9 > n:
-                return None
-            h, w = struct.unpack(">HH", blob[i + 5:i + 9])
-            return w, h, 1, i + 2 + seglen
-        i += 2 + seglen
+            return i
+        i += 2 + struct.unpack_from(">H", blob, i + 2)[0]
     return None
+
+
+def parse_jpeg(blob: bytes):
+    """JPEG: walk marker segments from SOI until a SOFn carries
+    height/width as u16 BE after the precision byte.  Payload starts after
+    the SOFn segment."""
+    i = _jpeg_sof(blob)
+    if i is None or i + 9 > len(blob):
+        return None
+    seglen, _precision, h, w = struct.unpack_from(">HBHH", blob, i + 2)
+    return w, h, 1, i + 2 + seglen
+
+
+def _ifd_scalars(blob: bytes, fmt: str, entries):
+    """{tag: (type, value, entry_off)} for the SHORT/LONG entries of a
+    ``tiffops.ifd_entries`` list (a later duplicate tag wins); the value
+    sits left-justified in the entry's 4-byte value field."""
+    return {tag: (typ, struct.unpack_from(
+                fmt + ("H" if typ == 3 else "I"), blob, e + 8)[0], e)
+            for tag, typ, _count, e in entries if typ in (3, 4)}
 
 
 def _tiff_ifd(blob: bytes):
     """(struct_fmt, {tag: (type, value, entry_off)}, ifd_end) for IFD0 of a
     TIFF stream, honoring BOTH byte orders ('II' little / 'MM' big — TIFF 6
-    spec); SHORT/LONG scalar values are read left-justified in the 4-byte
-    value field per spec.  This walker doubles as the EXIF IFD machinery
-    (an Exif APP1 payload is a TIFF stream)."""
-    if blob[:4] == b"II*\x00":
-        fmt = "<"
-    elif blob[:4] == b"MM\x00*":
-        fmt = ">"
-    else:
+    spec), SHORT/LONG entries only; None when the header or IFD0 is bad or
+    cut short.  A view over ``tiffops.byte_order``/``ifd_entries``, which
+    double as the EXIF IFD machinery (an Exif APP1 payload is a TIFF
+    stream)."""
+    try:
+        fmt = tiffops.byte_order(blob)
+        entries, end = tiffops.ifd_entries(
+            blob, fmt, struct.unpack_from(fmt + "I", blob, 4)[0])
+    except ValueError:
         return None
-    if len(blob) < 8:
-        return None
-    off = struct.unpack(fmt + "I", blob[4:8])[0]
-    if off + 2 > len(blob):
-        return None
-    n = struct.unpack(fmt + "H", blob[off:off + 2])[0]
-    end = off + 2 + 12 * n + 4
-    if end > len(blob):
-        return None
-    entries = {}
-    for i in range(n):
-        e = off + 2 + 12 * i
-        tag, typ = struct.unpack(fmt + "HH", blob[e:e + 4])
-        if typ == 3:    # SHORT
-            val = struct.unpack(fmt + "H", blob[e + 8:e + 10])[0]
-        elif typ == 4:  # LONG
-            val = struct.unpack(fmt + "I", blob[e + 8:e + 12])[0]
-        else:
-            continue
-        entries[tag] = (typ, val, e)
-    return fmt, entries, end
+    return fmt, _ifd_scalars(blob, fmt, entries), end
 
 
 def parse_tiff(blob: bytes):
@@ -288,29 +283,47 @@ def parse_tiff(blob: bytes):
     return entries[256][1], entries[257][1], 1, end
 
 
+def _riff_chunks(blob: bytes, form: bytes):
+    """Yield (fourcc, body_off, size) for each chunk of a RIFF stream whose
+    form type is ``form`` (b"WAVE", b"WEBP"), advancing by
+    ``8 + size + pad``, while a whole 8-byte chunk header fits.  Yields
+    nothing for another container or form.  A chunk body may run past the
+    end of the blob: each caller bounds it (``parse_webp`` returns None,
+    the WAV walk counts the data bytes present)."""
+    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != form:
+        return
+    i = 12
+    while i + 8 <= len(blob):
+        (size,) = struct.unpack_from("<I", blob, i + 4)
+        yield blob[i:i + 4], i + 8, size
+        i += 8 + size + (size & 1)
+
+
+def _wav_walk(blob: bytes):
+    """(fmt_off, n_frames, data_offset) of a RIFF/WAVE stream: the body
+    offset of the last whole 16-byte 'fmt ' chunk (None when there is
+    none), and the 'data' chunk's frame count by the block align of the
+    'fmt ' chunk before it (0 when none came first)."""
+    fmt_off, frames, data_off = None, 0, len(blob)
+    for cid, body, size in _riff_chunks(blob, b"WAVE"):
+        if cid == b"fmt " and body + 16 <= len(blob):
+            fmt_off = body
+        elif cid == b"data":
+            align = 0 if fmt_off is None else struct.unpack_from(
+                "<H", blob, fmt_off + 12)[0]
+            frames = min(size, len(blob) - body) // align if align else 0
+            data_off = body
+    return fmt_off, frames, data_off
+
+
 def parse_wav(blob: bytes):
     """WAV: RIFF/WAVE container; chunk-walk to 'fmt ' (channels u16 LE,
     sample rate u32 LE) and 'data' (size -> frame count via block align).
     Returns (sample_rate, channels, n_frames, data_offset)."""
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
+    fmt_off, frames, data_off = _wav_walk(blob)
+    if fmt_off is None:
         return None
-    i, n = 12, len(blob)
-    channels = rate = block_align = None
-    frames = 0
-    data_off = n
-    while i + 8 <= n:
-        cid = blob[i:i + 4]
-        size = struct.unpack("<I", blob[i + 4:i + 8])[0]
-        if cid == b"fmt " and i + 24 <= n:
-            channels, rate = struct.unpack("<HI", blob[i + 10:i + 16])
-            block_align = struct.unpack("<H", blob[i + 20:i + 22])[0]
-        elif cid == b"data":
-            avail = min(size, n - (i + 8))
-            frames = avail // block_align if block_align else 0
-            data_off = i + 8
-        i += 8 + size + (size & 1)
-    if rate is None:
-        return None
+    channels, rate = struct.unpack_from("<HI", blob, fmt_off + 2)
     return rate, channels, frames, data_off
 
 
@@ -536,8 +549,6 @@ def resample_pixels(blob: bytes, new_w: int, new_h: int) -> bytes:
     if blob[:2] == b"BM":
         return bmpops.resample_bmp(blob, new_w, new_h)
     if blob[:4] in (b"II*\x00", b"MM\x00*"):
-        from htmlgraft import tiffops
-
         return tiffops.resample_tiff(blob, new_w, new_h)
     raise NotImplementedError(
         "pixel resampling beyond PNG/JPEG/GIF/BMP/TIFF needs an image codec")
@@ -561,16 +572,10 @@ def _rewrite_image_header(blob: bytes, new_w: int, new_h: int):
         return "png", out
     if blob[:6] in (b"GIF87a", b"GIF89a"):
         return "gif", blob[:6] + struct.pack("<HH", new_w, new_h) + blob[10:]
-    if blob[:2] == b"\xff\xd8":
-        i, n = 2, len(blob)
-        while i + 4 <= n and blob[i] == 0xFF:
-            marker = blob[i + 1]
-            seglen = struct.unpack(">H", blob[i + 2:i + 4])[0]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                return "jpeg", (blob[:i + 5]
-                                + struct.pack(">HH", new_h, new_w)
-                                + blob[i + 9:])
-            i += 2 + seglen
+    i = _jpeg_sof(blob)
+    if i is not None:
+        return "jpeg", (blob[:i + 5] + struct.pack(">HH", new_h, new_w)
+                        + blob[i + 9:])
     tiff = _tiff_ifd(blob)
     if tiff is not None and 256 in tiff[1] and 257 in tiff[1]:
         # patch the IFD entry values at their walked offsets, honoring each
@@ -987,26 +992,15 @@ def scrub_exif_gps(blob: bytes):
     gps_off = entries[GPS_IFD_TAG][1]
     # Parse the GPS sub-IFD; any bounds failure means we cannot locate the
     # coordinate bytes, so no lane may claim a scrub (lane 3).
-    if gps_off < end or gps_off + 2 > len(blob):
+    if gps_off < end:
         return blob, 2, -1, -1, n_before, n_before
-    n_gps = struct.unpack(fmt + "H", blob[gps_off:gps_off + 2])[0]
-    gps_end = gps_off + 2 + 12 * n_gps + 4
-    if gps_end > len(blob):
+    try:
+        gps, gps_end = tiffops.ifd_entries(blob, fmt, gps_off)
+    except ValueError:
         return blob, 2, -1, -1, n_before, n_before
-    lat = lon = -1
-    for i in range(n_gps):
-        e = gps_off + 2 + 12 * i
-        tag, typ = struct.unpack(fmt + "HH", blob[e:e + 4])
-        if typ == 4:
-            v = struct.unpack(fmt + "I", blob[e + 8:e + 12])[0]
-        elif typ == 3:
-            v = struct.unpack(fmt + "H", blob[e + 8:e + 10])[0]
-        else:
-            continue
-        if tag == GPS_LAT_TAG:
-            lat = v
-        elif tag == GPS_LON_TAG:
-            lon = v
+    gps = _ifd_scalars(blob, fmt, gps)
+    lat, lon = (gps[t][1] if t in gps else -1
+                for t in (GPS_LAT_TAG, GPS_LON_TAG))
     # Restructure preconditions: contiguous sub-IFD, IFD0 fully
     # representable (declared count all parsed, every entry count == 1 so
     # inline SHORT/LONG values survive the rebuild verbatim).
@@ -1114,23 +1108,15 @@ def synth_wav_pcm(doc_id: int) -> bytes:
 
 
 def decode_wav_pcm(blob: bytes):
-    """(sample_rate, channels, samples) — RIFF walk via ``parse_wav``
-    for the header, then a 16-bit little-endian two's-complement unpack
-    of the data chunk.  Non-PCM or non-16-bit streams raise (documented
-    scope: compressed WAV encodings need codecs this environment lacks)."""
-    got = parse_wav(blob)
-    if got is None:
+    """(sample_rate, channels, samples) — the one RIFF walk ``parse_wav``
+    also makes for the header, then a 16-bit little-endian two's-complement
+    unpack of the data chunk.  Non-PCM or non-16-bit streams raise
+    NotImplementedError (compressed WAV encodings are out of scope)."""
+    fmt_off, frames, data_off = _wav_walk(blob)
+    if fmt_off is None:
         raise ValueError("not a RIFF/WAVE stream")
-    rate, channels, frames, data_off = got
-    fmt_code, bits = None, None
-    i, n = 12, len(blob)
-    while i + 8 <= n:
-        cid = blob[i:i + 4]
-        size = struct.unpack("<I", blob[i + 4:i + 8])[0]
-        if cid == b"fmt " and i + 24 <= n:
-            fmt_code = struct.unpack("<H", blob[i + 8:i + 10])[0]
-            bits = struct.unpack("<H", blob[i + 22:i + 24])[0]
-        i += 8 + size + (size & 1)
+    fmt_code, channels, rate = struct.unpack_from("<HHI", blob, fmt_off)
+    (bits,) = struct.unpack_from("<H", blob, fmt_off + 14)
     if fmt_code != 1 or bits != 16:
         raise NotImplementedError(
             f"only 16-bit PCM WAV is decoded here (fmt={fmt_code}, "
@@ -1400,13 +1386,8 @@ def parse_webp(blob: bytes):
     variant is exercised by the ``media_webp`` gate; malformed start
     codes / signatures / truncation return None (the shared header-parser
     contract — decode_header turns that into a loud error)."""
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WEBP":
-        return None
-    i, n = 12, len(blob)
-    while i + 8 <= n:
-        fourcc = blob[i:i + 4]
-        size = struct.unpack("<I", blob[i + 4:i + 8])[0]
-        body = blob[i + 8:i + 8 + size]
+    for fourcc, i, size in _riff_chunks(blob, b"WEBP"):
+        body = blob[i:i + size]
         if len(body) < size:
             return None
         if fourcc == b"VP8 ":
@@ -1414,21 +1395,20 @@ def parse_webp(blob: bytes):
                 return None
             w = struct.unpack("<H", body[6:8])[0] & 0x3FFF
             h = struct.unpack("<H", body[8:10])[0] & 0x3FFF
-            return w, h, 1, i + 8 + 10
+            return w, h, 1, i + 10
         if fourcc == b"VP8L":
             if size < 5 or body[0] != 0x2F:
                 return None
             bits = struct.unpack("<I", body[1:5])[0]
             if bits >> 29:
                 return None  # nonzero version
-            return (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1, 1, i + 8 + 5
+            return (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1, 1, i + 5
         if fourcc == b"VP8X":
             if size < 10:
                 return None
             w = int.from_bytes(body[4:7], "little") + 1
             h = int.from_bytes(body[7:10], "little") + 1
-            return w, h, 1, i + 8 + 10
-        i += 8 + size + (size & 1)
+            return w, h, 1, i + 10
     return None
 
 

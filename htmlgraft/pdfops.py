@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .job import map_rows
+from .pixelops import _unfilter_row
 
 WORDS_PER_LINE = 8
 
@@ -429,22 +430,15 @@ def _object_at(blob: bytes, off: int) -> tuple[bytes, bytes | None]:
 
 
 def _png_unpredict(data: bytes, columns: int) -> bytes:
-    """Undo PNG row predictors (filter types 0/1/2 = None/Sub/Up — what
-    xref streams in the wild use) over rows of ``columns`` bytes."""
+    """Undo PNG row predictors over rows of ``columns`` one-byte samples:
+    Predictor >= 10 lets every row pick any PNG filter (None, Sub, Up,
+    Average, Paeth), undone by the PNG decoder's own row unfilter."""
     rowlen = columns + 1
     out = bytearray()
-    prev = bytearray(columns)
+    prev = bytes(columns)
     for r in range(0, len(data) - rowlen + 1, rowlen):
-        ft = data[r]
         row = bytearray(data[r + 1:r + rowlen])
-        if ft == 1:
-            for i in range(1, columns):
-                row[i] = (row[i] + row[i - 1]) & 0xFF
-        elif ft == 2:
-            for i in range(columns):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ft != 0:
-            raise NotImplementedError(f"PNG predictor filter {ft}")
+        _unfilter_row(data[r], row, prev, 1)
         out += row
         prev = row
     return bytes(out)

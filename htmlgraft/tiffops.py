@@ -48,22 +48,47 @@ from htmlgraft.bmpops import _luma, nn_sample
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4}  # BYTE, ASCII, SHORT, LONG
 
 
-def _read_ifd_values(blob: bytes, fmt: str) -> dict[int, list[int]]:
-    """IFD0 walk: {tag: [values]} for BYTE/SHORT/LONG entries; entries of
-    other types are recorded with an empty list (present, unreadable as
-    ints).  Raises ValueError on any truncation."""
+def byte_order(blob: bytes) -> str:
+    """Struct byte order of a TIFF stream: ``"<"`` for ``II``, ``">"`` for
+    ``MM``.  Raises ValueError on a short header, an unknown mark or a
+    magic other than 42; ``media._tiff_ifd`` turns that into None."""
     if len(blob) < 8:
         raise ValueError("truncated TIFF header")
-    off = struct.unpack(fmt + "I", blob[4:8])[0]
+    fmt = {b"II": "<", b"MM": ">"}.get(blob[:2])
+    if fmt is None:
+        raise ValueError("bad TIFF byte-order mark")
+    if struct.unpack_from(fmt + "H", blob, 2)[0] != 42:
+        raise ValueError("bad TIFF magic")
+    return fmt
+
+
+def ifd_entries(blob: bytes, fmt: str, off: int):
+    """([(tag, type, count, entry_off)], ifd_end) for the IFD at ``off``,
+    in stored order; ``ifd_end`` is the offset just past the next-IFD
+    pointer.  Raises ValueError when the IFD is cut short; the callers
+    keep their own policy: ``_read_ifd_values`` passes it on (the pixel
+    decode and ``read_orientation`` raise), ``media._tiff_ifd`` returns
+    None and ``media.scrub_exif_gps`` reports "GPS present, unscrubbed"."""
     if off + 2 > len(blob):
         raise ValueError("truncated IFD offset")
     (n,) = struct.unpack_from(fmt + "H", blob, off)
-    if off + 2 + 12 * n + 4 > len(blob):
+    end = off + 2 + 12 * n + 4
+    if end > len(blob):
         raise ValueError("truncated IFD")
+    return [(*struct.unpack_from(fmt + "HHI", blob, e), e)
+            for e in range(off + 2, end - 4, 12)], end
+
+
+def _read_ifd_values(blob: bytes) -> dict[int, list[int]]:
+    """IFD0 walk: {tag: [values]} for BYTE/SHORT/LONG entries; entries of
+    other types are recorded with an empty list (present, unreadable as
+    ints).  Raises ValueError on a bad header or any truncation."""
+    fmt = byte_order(blob)
+    (off,) = struct.unpack_from(fmt + "I", blob, 4)
+    entries, _ = ifd_entries(blob, fmt, off)
     out: dict[int, list[int]] = {}
-    for i in range(n):
-        tag, typ, count = struct.unpack_from(fmt + "HHI", blob, off + 2 + 12 * i)
-        vpos = off + 2 + 12 * i + 8
+    for tag, typ, count, e in entries:
+        vpos = e + 8
         if typ not in _TYPE_SIZE:
             out[tag] = []
             continue
@@ -81,17 +106,7 @@ def decode_tiff_pixels(blob: bytes):
     """(width, height, 1, greyscale bytes) from a baseline TIFF blob —
     luma-mapped, WhiteIsZero polarity normalized, strips reassembled in
     row order regardless of their byte positions in the file."""
-    if len(blob) < 8:
-        raise ValueError("truncated TIFF header")
-    if blob[:2] == b"II":
-        fmt = "<"
-    elif blob[:2] == b"MM":
-        fmt = ">"
-    else:
-        raise ValueError("bad TIFF byte-order mark")
-    if struct.unpack(fmt + "H", blob[2:4])[0] != 42:
-        raise ValueError("bad TIFF magic")
-    tags = _read_ifd_values(blob, fmt)
+    tags = _read_ifd_values(blob)
     if 322 in tags or 324 in tags:
         raise NotImplementedError("tiled TIFF")
     comp = tags.get(259, [1])
@@ -235,13 +250,7 @@ def resample_tiff(blob: bytes, new_w: int, new_h: int) -> bytes:
 def read_orientation(blob: bytes) -> int:
     """TIFF Orientation (tag 274); 1 (top-left, the identity) when
     absent, per the spec default."""
-    if blob[:2] == b"II":
-        fmt = "<"
-    elif blob[:2] == b"MM":
-        fmt = ">"
-    else:
-        raise ValueError("bad TIFF byte-order mark")
-    tags = _read_ifd_values(blob, fmt)
+    tags = _read_ifd_values(blob)
     o = tags.get(274, [1])
     if not o or not 1 <= o[0] <= 8:
         raise ValueError(f"bad orientation {o}")

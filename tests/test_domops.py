@@ -174,6 +174,30 @@ def test_density_nested_blocks_both_counted(spark):
 
 # --- dom_template (per-host structural template clustering) -------------------
 
+def test_density_rows_take_one_walk(monkeypatch):
+    """Nested blocks are read off one ``descendants`` walk: a page 2,000
+    blocks deep walks its tree once, not once per block (quadratic)."""
+    from htmlgraft import domops, linkops, walk
+
+    n = 2000
+    doc = parse("<div><p>x</p> <a>yy</a>" * n)
+    calls = []
+
+    def counted(node):
+        calls.append(node is doc)
+        assert len(calls) == 1, "a second tree walk"
+        return walk.descendants(node)
+
+    monkeypatch.setattr(domops, "descendants", counted)
+    monkeypatch.setattr(linkops, "descendants", counted)
+    rows = domops._density_rows("u", doc)
+    assert calls == [True]
+    # the block at position k holds m = n - k + 1 levels of "x yy": text
+    # 4m, link 2m, m <p>; score 4m - 3*2m is highest for the innermost
+    assert rows == [("u", k, "div", 4 * m, 2 * m, 500, m, int(k == n))
+                    for k, m in ((k, n - k + 1) for k in range(1, n + 1))]
+
+
 def test_dom_template_clusters_by_structure(spark):
     from htmlgraft.domops import dom_template_df
 

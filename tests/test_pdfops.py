@@ -117,11 +117,25 @@ def test_synth_pdf_is_well_formed(spark, sf_dir):
 
 # --- xref streams + object streams (PDF 1.5 machinery) -----------------------
 
-def _pdf15(flate_objstm: bool = True, predictor: bool = False) -> bytes:
+def _png_predict(ft: int, row: bytes, prev: bytes, i: int) -> int:
+    """PNG filter ``ft``'s prediction for byte ``i`` of ``row`` (1-byte
+    samples): None, Sub, Up, Average, Paeth."""
+    a = row[i - 1] if i else 0
+    b = prev[i]
+    c = prev[i - 1] if i else 0
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    paeth = a if pa <= pb and pa <= pc else b if pb <= pc else c
+    return (0, a, b, (a + b) // 2, paeth)[ft]
+
+
+def _pdf15(flate_objstm: bool = True, predictor: bool = False,
+           filters=(2,)) -> bytes:
     """Build a PDF 1.5 with catalog/pages(/Count 2)/font packed in an
     ObjStm (optionally FlateDecode'd) and a cross-reference STREAM
-    (optionally PNG-predictor-2-encoded) — full binary freedom Python
-    gives that the SQL synthesis cannot (compression)."""
+    (optionally PNG-predictor-encoded, row k with PNG filter
+    ``filters[k % len(filters)]``) — full binary freedom Python gives
+    that the SQL synthesis cannot (compression)."""
     hd = b"%PDF-1.5\n"
     content = b"BT (deep structure) Tj ET"
     o4 = (b"4 0 obj\n<< /Length " + str(len(content)).encode()
@@ -159,13 +173,15 @@ def _pdf15(flate_objstm: bool = True, predictor: bool = False) -> bytes:
     )
     parms = b""
     if predictor:
-        # PNG Up filter rows (type 2), 6-byte columns
+        # PNG-filtered rows, 6-byte columns
         cols = 6
         out, prev = bytearray(), bytes(cols)
-        for r in range(0, len(raw), cols):
+        for k, r in enumerate(range(0, len(raw), cols)):
             row = raw[r:r + cols]
-            out += bytes([2]) + bytes(
-                (row[i] - prev[i]) & 0xFF for i in range(cols)
+            ft = filters[k % len(filters)]
+            out += bytes([ft]) + bytes(
+                (row[i] - _png_predict(ft, row, prev, i)) & 0xFF
+                for i in range(cols)
             )
             prev = row
         raw = zlib.compress(bytes(out))
@@ -196,6 +212,16 @@ def test_xref_stream_png_predictor():
     text, n_pages, _, kind, n_objstm = pdfops.extract_pdf_text(
         _pdf15(flate_objstm=True, predictor=True)
     )
+    assert (text, n_pages, kind, n_objstm) == ("deep structure", 2,
+                                               "stream", 4)
+
+
+@pytest.mark.parametrize("filters", [(3,), (4,), (0, 1, 2, 3, 4)])
+def test_xref_stream_average_and_paeth_rows(filters):
+    """Predictor >= 10 lets each row pick any PNG filter, Average (3) and
+    Paeth (4) included; the xref stream still resolves, no scan fallback."""
+    blob = _pdf15(flate_objstm=True, predictor=True, filters=filters)
+    text, n_pages, _, kind, n_objstm = pdfops.extract_pdf_text(blob)
     assert (text, n_pages, kind, n_objstm) == ("deep structure", 2,
                                                "stream", 4)
 

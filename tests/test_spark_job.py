@@ -87,7 +87,6 @@ def test_resume_antijoin_size_gate(spark, pages):
     plan = small._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     for df in (
-        parse_extract(pages, done_urls=done, broadcast_done=False),
         parse_extract(pages, done_urls=done),  # unknown size -> shuffle
         parse_extract(pages, done_urls=done, done_count=10**9),  # too big
     ):

@@ -12,6 +12,7 @@ from htmlgraft.bmpops import _luma
 from htmlgraft.tiffops import (
     decode_tiff_pixels,
     encode_tiff,
+    read_orientation,
     resample_tiff,
 )
 
@@ -135,6 +136,8 @@ def test_error_lanes():
         decode_tiff_pixels(b"XX" + good[2:])
     with pytest.raises(ValueError, match="magic"):
         decode_tiff_pixels(good[:2] + b"\x2b\x00" + good[4:])
+    with pytest.raises(ValueError, match="magic"):  # the same header check
+        read_orientation(good[:2] + b"\x2b\x00" + good[4:])
     with pytest.raises(ValueError, match="truncated TIFF header"):
         decode_tiff_pixels(good[:6])
     with pytest.raises(ValueError, match="truncated IFD"):
