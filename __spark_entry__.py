@@ -89,7 +89,7 @@ def _wet_record_expr(duck: bool) -> str:
     both the Spark projection (over the parse's `text`) and the DuckDB
     oracle (over the expected text) — chr(13)||chr(10) spells CRLF
     identically in both engines; only the string type name differs."""
-    s = "varchar" if duck else "string"
+    s = textops._d(duck)["str"]
     return (
         "concat('WARC/1.0', chr(13), chr(10), "
         "'WARC-Type: conversion', chr(13), chr(10), "

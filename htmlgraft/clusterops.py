@@ -37,9 +37,8 @@ DIMS = 64
 
 
 def _dims_rel(duck: bool) -> str:
-    if duck:
-        return f"(select unnest(generate_series(1, {DIMS})) as dim)"
-    return f"(select explode(sequence(1, {DIMS})) as dim)"
+    d = _d(duck)
+    return f"(select {d['explode']}({d['range_incl'].format(1, DIMS)}) as dim)"
 
 
 def _pack(duck: bool, value_expr: str) -> str:

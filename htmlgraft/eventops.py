@@ -37,16 +37,16 @@ def events_hourly_sql(duck: bool, events: str = "events") -> str:
 SESSION_GAP_S = 1800
 
 
-def sessionize_sql(duck: bool, events: str = "events") -> str:
-    """Sessionization via window functions: a new session starts when the
-    gap to the user's previous event exceeds SESSION_GAP_S.  Epoch seconds
-    (bigint) keep the arithmetic engine-neutral."""
-    # floor(): DuckDB epoch() keeps fractional seconds and its double->bigint
-    # cast ROUNDS; Spark unix_timestamp() floors to whole seconds
-    epoch = "floor(epoch(ts))" if duck else "unix_timestamp(ts)"
-    return f"""
-      with seq as (
-        select user_id, cast({epoch} as bigint) as es,
+def _marks_ctes(duck: bool, events: str, seq_cols: str, mark: str) -> str:
+    """``seq``({seq_cols}, es, prev_es): each event's epoch second and the
+    user's previous one; then ``marks``(user_id, es, {mark}), where
+    ``{start}`` in ``mark`` is 1 for an event that opens a session (the
+    gap to the previous event exceeds SESSION_GAP_S) and 0 otherwise."""
+    epoch = _d(duck)["epoch"].format("ts")
+    start = (f"case when prev_es is null or es - prev_es > {SESSION_GAP_S}"
+             " then 1 else 0 end")
+    return f"""seq as (
+        select {seq_cols}, cast({epoch} as bigint) as es,
                lag(cast({epoch} as bigint)) over (
                  partition by user_id order by {epoch}, event_id
                ) as prev_es
@@ -54,10 +54,17 @@ def sessionize_sql(duck: bool, events: str = "events") -> str:
       ),
       marks as (
         select user_id, es,
-               case when prev_es is null or es - prev_es > {SESSION_GAP_S}
-                    then 1 else 0 end as is_start
+               {mark.format(start=start)}
         from seq
-      )
+      )"""
+
+
+def sessionize_sql(duck: bool, events: str = "events") -> str:
+    """Sessionization via window functions: a new session starts when the
+    gap to the user's previous event exceeds SESSION_GAP_S.  Epoch seconds
+    (bigint) keep the arithmetic engine-neutral."""
+    return f"""
+      with {_marks_ctes(duck, events, "user_id", "{start} as is_start")}
       select user_id,
              cast(sum(is_start) as bigint) as n_sessions,
              count(*) as n_events,
@@ -111,8 +118,8 @@ def asof_join_sql(duck: bool, events: str = "events") -> str:
     Money values cross engines as cents via ``floor(v*100 + 0.5)`` (cast
     rounding differs between engines; floor(+0.5) does not).  Probes with
     no prior state surface as -1 sentinels."""
-    epoch = "floor(epoch(ts))" if duck else "unix_timestamp(ts)"
-    argmax = "arg_max" if duck else "max_by"
+    d = _d(duck)
+    epoch, argmax = d["epoch"].format("ts"), d["argmax"]
     cents = "cast(floor({0} * 100 + 0.5) as bigint)"
     pre = f"""
       st as (
@@ -189,26 +196,12 @@ def range_join_sql(duck: bool, events: str = "events") -> str:
     session is a point); windows are [h*3600, h*3600+3599].  overlap_s =
     min(ends) - max(starts) + 1 on those closed bounds — identical integer
     math in both engines."""
-    epoch = "floor(epoch(ts))" if duck else "unix_timestamp(ts)"
-    idiv = "//" if duck else "div"
+    d = _d(duck)
+    epoch, idiv = d["epoch"].format("ts"), d["div"]
+    sid = ("sum({start}) over (partition by user_id order by es, event_id"
+           " rows between unbounded preceding and current row) as sid")
     sess = f"""
-      seq as (
-        select user_id, event_id, cast({epoch} as bigint) as es,
-               lag(cast({epoch} as bigint)) over (
-                 partition by user_id order by {epoch}, event_id
-               ) as prev_es
-        from {events}
-      ),
-      marks as (
-        select user_id, es,
-               sum(case when prev_es is null
-                         or es - prev_es > {SESSION_GAP_S}
-                   then 1 else 0 end)
-                 over (partition by user_id order by es, event_id
-                       rows between unbounded preceding and current row)
-                 as sid
-        from seq
-      ),
+      {_marks_ctes(duck, events, "user_id, event_id", sid)},
       sessions as (
         select user_id, sid, min(es) as s0, max(es) as s1
         from marks group by user_id, sid
@@ -273,7 +266,7 @@ def funnel_sql(duck: bool, events: str = "events") -> str:
     windows; the same shape at 10^12 events (funnel depth multiplies
     scans, not shuffles, and each stage prunes to its event type at the
     scan)."""
-    epoch = "floor(epoch(ts))" if duck else "unix_timestamp(ts)"
+    epoch = _d(duck)["epoch"].format("ts")
     return f"""
       with ev as (
         select user_id, event_type, cast({epoch} as bigint) as es

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .job import map_rows
+from .textops import _d
 from .warcops import _write_record_files, iter_gzip_members
 
 # Every JSON string-escaping class in one value: two-char escapes
@@ -50,15 +51,12 @@ def jsonl_rows_sql(duck: bool, docs: str = "documents") -> str:
     with meta = source || every escaping hazard.  Dual-dialect so the
     Spark side builds the write input and the DuckDB side restates the
     expected read-back without touching JSON."""
-    s = "varchar" if duck else "string"
+    d = _d(duck)
+    s = d["str"]
     hazard = _HAZARD_SQL_DUCK if duck else _HAZARD_SQL_SPARK
-    host = (
-        "case when doc_id % 5 = 0 then 'popular.example.com' "
-        f"else concat('site-', cast(doc_id % 211 as {s}), '.example.org') end"
-    )
     return f"""
       select doc_id,
-             concat('https://', {host}, '/', source, '/',
+             concat('https://', {d['host']}, '/', source, '/',
                     cast(doc_id as {s})) as url,
              text,
              concat(source, '#', {hazard}) as meta

@@ -56,6 +56,7 @@ from .corpus import pages_df, pages_oracle_cte
 from .extract import analyze_page, collapse_ws
 from .job import map_pages, parse_extract
 from .nodes import Element
+from .textops import _d, h32
 from .walk import descendants
 
 # PageRank constants (integer arithmetic; see module docstring)
@@ -418,11 +419,7 @@ def hits_oracle_sql() -> str:
         ) s on s.host = n.host
       )""")
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
-        + ","
-        + _RESOLVED_CTE
+        _resolved_ctes()
         + f""",
       edges as (select distinct src, dst from resolved where src <> dst),
       nodes as (
@@ -537,7 +534,7 @@ def triangles_sql(duck: bool, edges: str = "hedges") -> str:
     on a skewed web graph orders by DEGREE instead of name — same
     one-line orientation rule, documented here rather than applied since
     the oracle needs name order to be engine-identical."""
-    div = "//" if duck else "div"
+    div = _d(duck)["div"]
     return f"""
       uedges as (
         select distinct least(src_host, dst_host) as a,
@@ -600,7 +597,7 @@ def cocitation_sql(duck: bool, edges: str = "hedges") -> str:
     Scale: one per-destination window (bounded output, {FANIN_CAP} rows
     per key), one capped self-join, hash aggs — never an uncapped
     destination fan-out."""
-    div = "//" if duck else "div"
+    div = _d(duck)["div"]
     return f"""
       uedges as (
         select src_host as src, dst_host as dst, n_links
@@ -675,8 +672,10 @@ _LINK_VALUES = (
 )
 
 
-def _links_cte() -> str:
-    return f"""
+def _lnk_ctes() -> str:
+    """The expected pages plus ``lnk(url, pos, href, anchor)``: every
+    link the corpus skeleton above puts on each page."""
+    return pages_oracle_cte() + "," + f"""
       lnk as (
         select url,
                cast(l.pos as bigint) as pos,
@@ -689,12 +688,7 @@ def _links_cte() -> str:
 
 
 def links_oracle_sql() -> str:
-    return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
-        + " select url, pos, href, anchor from lnk"
-    )
+    return _lnk_ctes() + " select url, pos, href, anchor from lnk"
 
 
 def metadata_oracle_sql() -> str:
@@ -731,7 +725,7 @@ def _json_esc(col: str) -> str:
 
 
 def _wat_link_elem(duck: bool, pos: str, href: str, anchor: str) -> str:
-    s = "varchar" if duck else "string"
+    s = _d(duck)["str"]
     return (
         f"concat('{{\"pos\":', cast({pos} as {s}), ',\"url\":\"', "
         f"{_json_esc(href)}, '\",\"text\":\"', {_json_esc(anchor)}, '\"}}')"
@@ -750,7 +744,7 @@ def _wat_payload(url: str, title: str, links_json: str) -> str:
 
 
 def _wat_record(duck: bool, url: str, payload: str) -> str:
-    s = "varchar" if duck else "string"
+    s = _d(duck)["str"]
     return (
         f"concat('WARC/1.0', chr(13), chr(10), "
         f"'WARC-Type: metadata', chr(13), chr(10), "
@@ -802,9 +796,7 @@ def wat_spark_sql(rows: str = "__wat_rows") -> str:
 def wat_oracle_sql() -> str:
     elem = _wat_link_elem(True, "pos", "href", "anchor")
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
+        _lnk_ctes()
         + f""",
       agg as (
         select url, cast(count(*) as bigint) as n_links,
@@ -835,9 +827,7 @@ def wat_roundtrip_oracle_sql() -> str:
     oracle is links ⋈ title — no JSON on the DuckDB side at all (the JSON
     layer must be invisible end to end)."""
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
+        _lnk_ctes()
         + """
       select l.url,
              concat('Doc ', cast(e.doc_id as varchar), ' — ', e.source)
@@ -888,13 +878,15 @@ _RESOLVED_CTE = """
       )"""
 
 
+def _resolved_ctes() -> str:
+    """``_lnk_ctes`` plus ``resolved(src, dst)``: each link's source and
+    destination host."""
+    return _lnk_ctes() + "," + _RESOLVED_CTE
+
+
 def hostgraph_oracle_sql() -> str:
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
-        + ","
-        + _RESOLVED_CTE
+        _resolved_ctes()
         + """
       select src as src_host, dst as dst_host,
              cast(count(*) as bigint) as n_links
@@ -905,11 +897,7 @@ def hostgraph_oracle_sql() -> str:
 
 def host_cocitation_oracle_sql() -> str:
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
-        + ","
-        + _RESOLVED_CTE
+        _resolved_ctes()
         + """,
       hedges as (
         select src as src_host, dst as dst_host,
@@ -923,11 +911,7 @@ def host_cocitation_oracle_sql() -> str:
 
 def host_triangles_oracle_sql() -> str:
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
-        + ","
-        + _RESOLVED_CTE
+        _resolved_ctes()
         + """,
       hedges as (select src as src_host, dst as dst_host from resolved),
 """
@@ -937,9 +921,7 @@ def host_triangles_oracle_sql() -> str:
 
 def anchor_text_oracle_sql() -> str:
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
+        _lnk_ctes()
         + f""",
       res as (
         select case when href like 'https://%' or href like 'http://%'
@@ -989,11 +971,7 @@ def pagerank_oracle_sql() -> str:
       )"""
         )
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
-        + ","
-        + _RESOLVED_CTE
+        _resolved_ctes()
         + f""",
       edges as (select distinct src, dst from resolved where src <> dst),
       outdeg as (select src, count(*) as deg from edges group by src),
@@ -1030,11 +1008,7 @@ def host_components_oracle_sql() -> str:
       )"""
         )
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
-        + ","
-        + _RESOLVED_CTE
+        _resolved_ctes()
         + f""",
       hg as (select src, dst, count(*) as n from resolved group by src, dst),
       nodes as (
@@ -1116,9 +1090,7 @@ def _frontier_ctes() -> str:
     used by both the frontier oracle and the crawl-schedule oracle so the
     two cannot drift."""
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
+        _lnk_ctes()
         + """,
       resolved as (
         select split_part(url, '/', 3) as src_host,
@@ -1173,8 +1145,6 @@ def crawl_schedule_df(frontier: DataFrame) -> DataFrame:
     worker assignment and delays are pure projections."""
     from pyspark.sql import Window
 
-    from .textops import h32
-
     host = F.split("frontier_url", "/").getItem(2)
     w = Window.partitionBy("host").orderBy(
         F.col("n_refs").desc(), F.col("frontier_url").asc()
@@ -1202,8 +1172,6 @@ def run_crawl_schedule(spark, sf_dir: str) -> DataFrame:
 
 
 def crawl_schedule_oracle_sql() -> str:
-    from .textops import h32
-
     return _frontier_ctes() + f""",
       sched as (
         select frontier_url, n_refs,
@@ -1266,21 +1234,10 @@ def hyperball_sql(duck: bool, edges: str = "hedges") -> str:
     estimates at each radius (monotone non-decreasing by construction),
     the radius-2 zero-register count + register sum, and the densified
     radius-2 register vector md5."""
-    from .textops import _d, h32
-
     d = _d(duck)
-    div = "//" if duck else "div"
+    div = d["div"]
     M = HB_M
-    blen = ("length(printf('%b', suffix))" if duck
-            else "length(bin(suffix))")
     rng = d["range_incl"].format("0", str(M - 1))
-    allb = (f"select unnest({rng}) as bucket" if duck
-            else f"select explode({rng}) as bucket")
-    regs_join = (
-        "md5(string_agg(cast(r as varchar), ',' order by bucket))" if duck
-        else "md5(array_join(transform(array_sort(collect_list("
-             "struct(bucket, r))), x -> cast(x.r as string)), ','))"
-    )
 
     def _agg(t: int) -> str:
         return f"""
@@ -1316,20 +1273,20 @@ def hyperball_sql(duck: bool, edges: str = "hedges") -> str:
       hh as (select host, ({h32('host', duck)}) as hv from hosts),
       sk0 as (
         select host, hv % {M} as bucket,
-               case when suffix = 0 then 29 else 29 - {blen} end as r
+               case when suffix = 0 then 29 else 29 - {d['blen'].format('suffix')} end as r
         from (select host, hv, hv {div} {M} as suffix from hh) s0
       ),{_round(1)},{_round(2)},{_agg(0)},{_agg(1)},{_agg(2)},
       fin2 as (
         select h.host, a.bucket, coalesce(sk2.r, 0) as r
         from hosts h
-        cross join ({allb}) a
+        cross join (select {d['explode']}({rng}) as bucket) a
         left join sk2 on sk2.host = h.host and sk2.bucket = a.bucket
       ),
       fagg2 as (
         select host,
                sum(case when r = 0 then 1 else 0 end) as v0,
                sum(r) as register_sum,
-               {regs_join} as regs_md5
+               {d['regs_join']} as regs_md5
         from fin2 group by host
       ),
       b1 as (
@@ -1377,11 +1334,7 @@ def run_host_hyperball(spark, sf_dir: str) -> DataFrame:
 
 def host_hyperball_oracle_sql() -> str:
     return (
-        pages_oracle_cte()
-        + ","
-        + _links_cte()
-        + ","
-        + _RESOLVED_CTE
+        _resolved_ctes()
         + """,
       hedges as (select src as src_host, dst as dst_host from resolved),
 """

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
 
 from . import bmpops, tiffops
 from .job import map_rows
+from .textops import _d
 
 MEDIA_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -830,7 +831,7 @@ def charset_sniff_sql(duck: bool, docs: str = "documents") -> str:
 
     Scale: a map-only projection over the page scan — no shuffle at all;
     the 1024-byte cap bounds per-row work regardless of document size."""
-    d = "varchar" if duck else "string"
+    d = _d(duck)["str"]
     pad = "repeat('<!-- boilerplate pad -->', 50)"
     head = (
         f"concat('<html><head><title>Doc ', cast(doc_id as {d}), '</title>',"

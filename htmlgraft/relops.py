@@ -36,7 +36,7 @@ def pricing_summary_sql(duck: bool, t: str = "lineitem") -> str:
 
 def segment_stats_sql(duck: bool) -> str:
     """Orders x customer broadcast join, rolled up by market segment."""
-    hint = "" if duck else "/*+ BROADCAST(c) */"
+    hint = _d(duck)["hint"].format("BROADCAST(c)")
     return f"""
       select {hint} c.c_mktsegment as mktsegment,
              count(*) as n_orders,
@@ -53,7 +53,7 @@ def region_rollup_sql(duck: bool) -> str:
     """3-way broadcast dim chain (region -> nation -> customer) with a
     ROLLUP over (region, nation); subtotal rows keyed 'ALL' instead of NULL
     so cross-engine hashing never sees nulls."""
-    hint = "" if duck else "/*+ BROADCAST(r), BROADCAST(n) */"
+    hint = _d(duck)["hint"].format("BROADCAST(r), BROADCAST(n)")
     return f"""
       with joined as (
         select {hint} r.r_name as region, n.n_name as nation,

@@ -25,7 +25,7 @@ Scale notes (10^9+ vectors):
 
 from __future__ import annotations
 
-from .textops import DUCK, SPARK, _d
+from .textops import _d
 
 N_QUERIES = 5   # queries = vec_id < N_QUERIES
 TOP_K = 5
@@ -59,7 +59,7 @@ def ann_topk_sql(duck: bool, emb: str = "embeddings") -> str:
     scorer partition-local, then one shuffle on q_id for the window top-k."""
     q = _quant(duck)
     dot = _dot(duck, "qv.qe", "cv.ce")
-    hint = "" if duck else "/*+ BROADCAST(qv) */"
+    hint = _d(duck)["hint"].format("BROADCAST(qv)")
     return f"""
       with qv as (
         select vec_id as q_id, {q} as qe from {emb} where vec_id < {N_QUERIES}
@@ -331,9 +331,7 @@ def _pq_slice(duck: bool, col: str, m: str) -> str:
     """The m-th 8-dim subvector of a 64-dim quantized array (m 0-based,
     as an SQL expression)."""
     sd = 64 // PQ_M
-    if duck:
-        return f"list_slice({col}, 1 + {m} * {sd}, {sd} + {m} * {sd})"
-    return f"slice({col}, 1 + {m} * {sd}, {sd})"
+    return _d(duck)["slice"].format(col, f"1 + {m} * {sd}", f"{sd} + {m} * {sd}", sd)
 
 
 def _pq_common(duck: bool, emb: str) -> str:

@@ -11,6 +11,19 @@ indexing (``element_at`` / ``l[i]``), and integer arithmetic, so every
 operator below emits only strings/integers — no floats — and is
 hash-comparable across engines.
 
+The dialect table (``SPARK`` / ``DUCK`` below, picked by ``_d(duck)``) is
+the one place a dialect spelling lives, for every query builder in the
+package: a builder writes ``d["div"]``, ``d["explode"]``,
+``d["len"]`` and so on, never ``"//" if duck else "div"``.  To add a
+spelling, give both tables the same key: a plain string, or a
+``str.format`` template whose positional fields mean the same in both
+(a dialect may ignore a field, as ``slice`` does).  A builder keeps an
+``if duck:`` fork only where the two plans differ in structure, not in
+spelling (``aggregate`` vs ``list_sum``, an ASOF join vs a window
+carry), or where a spelling occurs once and its two forms do not share
+a template.  ``tools/sql_digest.py --diff`` checks that such a move
+leaves every rendered query unchanged.
+
 Scale notes (100 TB / 10^12 docs):
 * shingle explode multiplies rows ~100x but stays narrow (doc_id, shingle)
   and aggregates map-side before the shuffle on shingle/doc_id;
@@ -24,35 +37,113 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
+from .corpus import HOST_EXPR, HOST_EXPR_DUCK
+
 SPARK = {
     "str": "string",
     # 32-bit int from the first 8 hex chars of md5
     "h32_open": "cast(conv(substr(md5(",
     "h32_close": "),1,8),16,10) as bigint)",
-    "split": "split({0}, ' ')",
-    "elem": "element_at({0}, {1})",
+    "host": HOST_EXPR,
+    "div": "div",
+    "explode": "explode",
+    "len": "size",
+    "epoch": "unix_timestamp({0})",  # whole seconds
+    "one": "cast(1 as bigint)",
+    "shl": "shiftleft({0}, {1})",
+    "shr": "shiftright({0}, {1})",
     "shl1": "shiftleft(cast(1 as bigint), {0})",
     "bit": "(shiftright({0}, {1}) & 1)",
+    "xor": "({0} ^ {1})",
+    "blen": "length(bin({0}))",  # bit length of a positive integer
+    "octets": "octet_length({0})",
+    "split": "split({0}, ' ')",
+    # split on a quoted literal; Spark's split takes a regex, so the
+    # separator must be free of metacharacters (split_dot covers '.')
+    "split_on": "split({0}, {1})",
+    "split_dot": "split({0}, '[.]')",
+    "part": "element_at(split({0}, {1}), {2})",
+    "elem": "element_at({0}, {1})",
+    "array": "array({0})",
+    "join": "array_join({0}, {1})",
+    "sort": "array_sort({0})",
+    "reverse": "reverse({0})",
+    "filter": "filter({0}, {1})",
+    "distinct": "array_distinct({0})",
+    # list {0} from 1-based {1} to {2} inclusive ({3} items); slice_join
+    # then joins it with separator {4}
+    "slice": "slice({0}, {1}, {3})",
+    "slice_join": "array_join(slice({0}, {1}, {3}), {4})",
     "range_incl": "sequence({0}, {1})",  # guarded: only used when hi >= lo
     "lambda": "{0} -> {1}",
     "transform": "transform({0}, {1})",
+    "values": "select * from values {0} as {1}",
+    "not_in": "not ({0} in ({1}))",
+    "argmax": "max_by",
+    "hint": "/*+ {0} */",
     "strpos": "instr({0}, {1})",
     "re_count": "regexp_count({0}, {1})",
+    "re_full": "{0} rlike '^{1}$'",
+    "re_g": "",  # regexp_replace is global by default
+    "re_ref1": "$1",
+    "uclass": "\\\\p{{Is{0}}}",
+    # a regex backslash inside a string literal: Spark SQL literals
+    # process backslash escapes, DuckDB's pass them through
+    "bs": "\\\\",
+    # md5 of the comma-joined registers r in bucket order
+    "regs_join": (
+        "md5(array_join(transform(array_sort(collect_list("
+        "struct(bucket, r))), x -> cast(x.r as string)), ','))"
+    ),
 }
 
 DUCK = {
     "str": "varchar",
     "h32_open": "(('0x' || substr(md5(",
     "h32_close": "),1,8))::bigint)",
-    "split": "string_split({0}, ' ')",
-    "elem": "{0}[{1}]",
+    "host": HOST_EXPR_DUCK,
+    "div": "//",
+    "explode": "unnest",
+    "len": "len",
+    # floor(): epoch() keeps fractional seconds and the double->bigint
+    # cast rounds
+    "epoch": "floor(epoch({0}))",
+    "one": "(1::bigint)",
+    "shl": "({0} << {1})",
+    "shr": "({0} >> {1})",
     "shl1": "((1::bigint) << {0})",
     "bit": "(({0} >> {1}) & 1)",
+    "xor": "xor({0}, {1})",
+    "blen": "length(printf('%b', {0}))",
+    "octets": "octet_length(encode({0}))",  # octet_length takes BLOB only
+    "split": "string_split({0}, ' ')",
+    "split_on": "string_split({0}, {1})",
+    "split_dot": "string_split({0}, '.')",
+    "part": "split_part({0}, {1}, {2})",
+    "elem": "{0}[{1}]",
+    "array": "[{0}]",
+    "join": "array_to_string({0}, {1})",
+    "sort": "list_sort({0})",
+    "reverse": "list_reverse({0})",
+    "filter": "list_filter({0}, {1})",
+    "distinct": "list_distinct({0})",
+    "slice": "list_slice({0}, {1}, {2})",
+    "slice_join": "array_to_string({0}[{1}:{2}], {4})",
     "range_incl": "generate_series({0}, {1})",
     "lambda": "{0} -> {1}",
     "transform": "list_transform({0}, {1})",
+    "values": "select * from (values {0}) {1}",
+    "not_in": "{0} not in ({1})",
+    "argmax": "arg_max",
+    "hint": "",
     "strpos": "strpos({0}, {1})",
     "re_count": "len(regexp_extract_all({0}, {1}))",
+    "re_full": "regexp_full_match({0}, '{1}')",
+    "re_g": ", 'g'",
+    "re_ref1": "\\1",
+    "uclass": "\\p{{{0}}}",
+    "bs": "\\",
+    "regs_join": "md5(string_agg(cast(r as varchar), ',' order by bucket))",
 }
 
 
@@ -83,46 +174,55 @@ def duped_docs_cte(duck: bool, docs: str = "documents") -> str:
       )"""
 
 
+def kgrams_sql(duck: bool, k: int, head: str, alias: str, src: str,
+               ws: str = "ws") -> str:
+    """``select {head}<k-gram> as {alias} from {src}`` over the word array
+    ``ws`` of ``src``: one row per k-gram i = ws[i]..ws[i+k-1] for i in
+    1..len(ws)-k+1 (1-based in both engines), through one explode of a
+    transform over positions.  Docs with fewer than k words give none."""
+    d = _d(duck)
+    parts = " || ' ' || ".join(
+        d["elem"].format(ws, f"i + {j}") if j else d["elem"].format(ws, "i")
+        for j in range(k)
+    )
+    n = f"{d['len']}({ws})"
+    mk = d["transform"].format(
+        d["range_incl"].format("1", f"{n} - {k - 1}"),
+        d["lambda"].format("i", parts),
+    )
+    return (f"select {head}{d['explode']}({mk}) as {alias}"
+            f" from {src} where {n} >= {k}")
+
+
 def shingles_cte(
     duck: bool, src: str = "ddocs", k: int = 3, prefix: str = ""
 ) -> str:
-    """Distinct word k-gram shingles per doc: ws, then shingle i =
-    ws[i]..ws[i+k-1] for i in 1..len(ws)-k+1 (1-based in both engines).
+    """Distinct word k-gram shingles per doc (``kgrams_sql``).
     ``prefix`` renames the emitted CTEs ({prefix}words / {prefix}shingles)
     so two shingle relations can coexist in one query."""
-    d = _d(duck)
-    ws = d["split"].format("text")
-    parts = " || ' ' || ".join(
-        d["elem"].format("ws", f"i + {j}") if j else d["elem"].format("ws", "i")
-        for j in range(k)
-    )
-    lam = d["lambda"].format("i", parts)
-    mk = d["transform"].format(d["range_incl"].format("1", f"len(ws) - {k - 1}"), lam)
     w, sh = prefix + "words", prefix + "shingles"
-    if duck:
-        return f"""
-      {w} as (select doc_id, {ws} as ws from {src}),
-      {sh} as (
-        select distinct doc_id, unnest({mk}) as shingle
-        from {w} where len(ws) >= {k}
-      )"""
-    # Spark: len() -> size(), unnest -> explode
-    mk_s = mk.replace("len(ws)", "size(ws)")
     return f"""
-      {w} as (select doc_id, {ws} as ws from {src}),
+      {w} as (select doc_id, {_d(duck)["split"].format("text")} as ws from {src}),
       {sh} as (
-        select distinct doc_id, explode({mk_s}) as shingle
-        from {w} where size(ws) >= {k}
+        {kgrams_sql(duck, k, "distinct doc_id, ", "shingle", w)}
       )"""
+
+
+def _shingles_with(duck: bool, docs: str, k: int,
+                   shingles_ref: str | None) -> str:
+    """``with`` head ending in a (doc_id, shingle) ``shingles`` relation:
+    the duped corpus's k-gram shingles, or a pre-materialized relation."""
+    if shingles_ref is not None:
+        return f"with shingles as (select doc_id, shingle from {shingles_ref}),"
+    return (f"with {duped_docs_cte(duck, docs)},\n"
+            f"      {shingles_cte(duck, 'ddocs', k)},")
 
 
 def tokens_cte(duck: bool, src: str = "documents") -> str:
     """All word tokens per doc (with multiplicity)."""
     d = _d(duck)
-    ws = d["split"].format("text")
-    if duck:
-        return f"tokens as (select doc_id, unnest({ws}) as tok from {src})"
-    return f"tokens as (select doc_id, explode({ws}) as tok from {src})"
+    return (f"tokens as (select doc_id, {d['explode']}({d['split'].format('text')})"
+            f" as tok from {src})")
 
 
 # --- operators ---------------------------------------------------------------
@@ -171,19 +271,13 @@ N_HASHES = 16
 N_BANDS = 8  # 2 rows per band
 
 
-def _minhash_cand_cte(duck: bool) -> str:
-    """CTE fragment seeds -> mh -> bands -> cand over an in-scope
-    ``shingles`` relation: 16 min-hashes, 8 x 2-row bands, candidate pairs
-    sharing a band key.  Shared by ``minhash_lsh_sql`` (verifies candidates)
-    and ``dedup_recall_sql`` (measures candidate recall)."""
+def _minhash_bands_cte(duck: bool) -> str:
+    """CTE fragment seeds -> mh -> bands over an in-scope ``shingles``
+    relation: 16 min-hashes, 8 x 2-row band keys per doc."""
     d = _d(duck)
     seeds = d["range_incl"].format("0", str(N_HASHES - 1))
-    seed_src = (
-        f"select unnest({seeds}) as seed" if duck
-        else f"select explode({seeds}) as seed"
-    )
     cast_seed = f"cast(seed as {d['str']})"
-    return f"""seeds as ({seed_src}),
+    return f"""seeds as (select {d['explode']}({seeds}) as seed),
       mh as (
         select doc_id, seed,
                min(md5(concat({cast_seed}, '#', shingle))) as h
@@ -197,7 +291,14 @@ def _minhash_cand_cte(duck: bool) -> str:
                concat(max(case when seed % 2 = 0 then h end),
                       max(case when seed % 2 = 1 then h end)) as band_key
         from mh group by doc_id, cast(floor(seed / 2) as int)
-      ),
+      )"""
+
+
+def _minhash_cand_cte(duck: bool) -> str:
+    """``_minhash_bands_cte`` plus ``cand``: the pairs sharing a band key.
+    Shared by ``minhash_lsh_sql`` (verifies candidates) and
+    ``dedup_recall_sql`` (measures candidate recall)."""
+    return f"""{_minhash_bands_cte(duck)},
       cand as (
         select distinct a.doc_id as a_id, b.doc_id as b_id
         from bands a join bands b
@@ -221,12 +322,8 @@ def minhash_lsh_sql(
     verify join); SQL engines inline CTEs, so without materialization the
     explode is computed three times — ``run_minhash_lsh`` persists it once
     on the Spark side (at 100 TB this would be a checkpointed table)."""
-    if shingles_ref is None:
-        pre = f"with {duped_docs_cte(duck, docs)},\n      {shingles_cte(duck, 'ddocs', k)},"
-    else:
-        pre = f"with shingles as (select doc_id, shingle from {shingles_ref}),"
     return f"""
-      {pre}
+      {_shingles_with(duck, docs, k, shingles_ref)}
       {_minhash_cand_cte(duck)},
       sizes as (select doc_id, count(*) as n from shingles group by doc_id),
       inter as (
@@ -265,15 +362,10 @@ def dedup_containment_sql(
     Scale contract identical to minhash_lsh: banding bounds the pair set,
     the verify join touches candidates only, and ``shingles_ref`` lets the
     runner persist the one shingle explode (three consumers)."""
-    div = "//" if duck else "div"
-    if shingles_ref is None:
-        pre = (f"with {duped_docs_cte(duck, docs)},\n"
-               f"      {shingles_cte(duck, 'ddocs', k)},")
-    else:
-        pre = f"with shingles as (select doc_id, shingle from {shingles_ref}),"
+    div = _d(duck)["div"]
     C = CONTAIN_MILLI
     return f"""
-      {pre}
+      {_shingles_with(duck, docs, k, shingles_ref)}
       {_minhash_cand_cte(duck)},
       sizes as (select doc_id, count(*) as n from shingles group by doc_id),
       inter as (
@@ -305,19 +397,8 @@ def dedup_containment_sql(
 def run_dedup_containment(spark, sf_dir: str, k: int = 3):
     """Persist-once runner (run_minhash_lsh pattern: same shingle
     relation, three consumers)."""
-    _register_documents(spark, sf_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    spark.sql(
-        f"with {duped_docs_cte(False)} select doc_id, text from ddocs"
-    ).repartition(n_parts).createOrReplaceTempView("__ct_ddocs")
-    sh = spark.sql(
-        f"with {shingles_cte(False, '__ct_ddocs', k)} "
-        "select doc_id, shingle from shingles"
-    ).persist()
-    sh.createOrReplaceTempView("__ct_shingles")
-    return spark.sql(
-        dedup_containment_sql(duck=False, k=k, shingles_ref="__ct_shingles")
-    )
+    ref = _persisted_shingles(spark, sf_dir, k, "ct")
+    return spark.sql(dedup_containment_sql(duck=False, k=k, shingles_ref=ref))
 
 
 def _simhash_expr(duck: bool) -> str:
@@ -398,8 +479,6 @@ def _simhash_idf_ctes(duck: bool, src: str = "documents") -> str:
     sums (map-side combined; no 32x row blowup, no array regroup)."""
     d = _d(duck)
     ws = d["split"].format("text")
-    iv = "//" if duck else "div"
-    expl = "unnest" if duck else "explode"
     th = h32("t.tok", duck)
     v_cols = ",\n               ".join(
         f"sum(case when {d['bit'].format('h', i)} = 1 then w else -w end)"
@@ -412,7 +491,7 @@ def _simhash_idf_ctes(duck: bool, src: str = "documents") -> str:
         for i in range(32)
     )
     return f"""itoks as (
-        select doc_id, {expl}({ws}) as tok from {src}
+        select doc_id, {d['explode']}({ws}) as tok from {src}
       ),
       idfreq as (
         select tok, count(distinct doc_id) as df from itoks group by tok
@@ -420,7 +499,7 @@ def _simhash_idf_ctes(duck: bool, src: str = "documents") -> str:
       intot as (select count(*) as n from {src}),
       itw as (
         select tok,
-               cast(length(bin(n {iv} df)) as bigint) as w
+               cast(length(bin(n {d['div']} df)) as bigint) as w
         from idfreq cross join intot
       ),
       ijoined as (
@@ -464,14 +543,12 @@ def _simhash_bytebands_cte(duck: bool, prefix: str = "",
     operator runs.  ``prefix`` renames the CTEs so the audit can hold this
     alongside the minhash fragment's ``bands``."""
     d = _d(duck)
-    shr = "({0} >> {1})" if duck else "shiftright({0}, {1})"
-    expl = "unnest" if duck else "explode"
-    byte_key = f"cast(({shr.format('simhash', '8 * b.band')} & 255) as int)"
+    byte_key = f"cast(({d['shr'].format('simhash', '8 * b.band')} & 255) as int)"
     bands, sizes = prefix + "bands", prefix + "sizes"
     return f"""{bands} as (
         select doc_id, simhash, b.band, {byte_key} as byte_key
         from {src} cross join (
-          select {expl}({d['range_incl'].format('0', '3')}) as band
+          select {d['explode']}({d['range_incl'].format('0', '3')}) as band
         ) b
       ),
       {sizes} as (
@@ -522,15 +599,12 @@ def simhash_neardup_sql(
     ``run_simhash_neardup`` persists it once on the Spark side (measured
     ~4x on the sf0.1 duped corpus)."""
     d = _d(duck)
-    xor = "xor(a.simhash, b.simhash)" if duck else "(a.simhash ^ b.simhash)"
-    shr = "({0} >> {1})" if duck else "shiftright({0}, {1})"
-    shl = "({0} << {1})" if duck else "shiftleft({0}, {1})"
-    one = "(1::bigint)" if duck else "cast(1 as bigint)"
-    expl = "unnest" if duck else "explode"
+    shl, shr = d["shl"], d["shr"]
+    xor = d["xor"].format("a_sh", "b_sh")
     # the 24 bits outside band b, packed into one bigint
     rem = (
         f"{shl.format(shr.format('b.simhash', '8 * b.band + 8'), '8 * b.band')}"
-        f" | (b.simhash & ({shl.format(one, '8 * b.band')} - 1))"
+        f" | (b.simhash & ({shl.format(d['one'], '8 * b.band')} - 1))"
     )
     sub_key = f"cast(({shr.format('rem', '6 * sb.sub')} & 63) as int)"
     if sh_ref is None:
@@ -557,7 +631,7 @@ def simhash_neardup_sql(
       sub as (
         select doc_id, simhash, band, byte_key, sb.sub, {sub_key} as sub_key
         from big cross join (
-          select {expl}({d['range_incl'].format('0', '3')}) as sub
+          select {d['explode']}({d['range_incl'].format('0', '3')}) as sub
         ) sb
       ),
       raw_pairs as (
@@ -578,9 +652,9 @@ def simhash_neardup_sql(
         -- appears k times, and in template-heavy corpora band buckets are
         -- large — deduplicate only the pairs that already verified
         select distinct a_id, b_id,
-               cast(bit_count({xor.replace('a.simhash', 'a_sh').replace('b.simhash', 'b_sh')}) as bigint) as hamming
+               cast(bit_count({xor}) as bigint) as hamming
         from raw_pairs
-        where bit_count({xor.replace('a.simhash', 'a_sh').replace('b.simhash', 'b_sh')}) <= {SIMHASH_NEARDUP_MAX_HAMMING}
+        where bit_count({xor}) <= {SIMHASH_NEARDUP_MAX_HAMMING}
       )
       select a_id, b_id, hamming
       from cand
@@ -761,9 +835,7 @@ def lang_id_sql(duck: bool, docs: str = "documents") -> str:
     rows = ", ".join(
         f"('{lang}', '{w}')" for lang, ws in sorted(LANG_MARKERS.items()) for w in ws
     )
-    markers = f"(values {rows})" + (
-        " as m(mlang, mtok)" if duck else " as m(mlang, mtok)"
-    )
+    markers = f"(values {rows}) as m(mlang, mtok)"
     return f"""
       with {tokens_cte(duck, docs)},
       hits as (
@@ -820,7 +892,7 @@ def token_count_sql(duck: bool, docs: str = "documents") -> str:
     (letter runs / digit runs / single punctuation)."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n_ws = f"len({ws})" if duck else f"size({ws})"
+    n_ws = f"{d['len']}({ws})"
     n_sub = d["re_count"].format("text", "'[a-z]+|[0-9]+|[^a-z0-9 ]'")
     return f"""
       select doc_id,
@@ -885,7 +957,7 @@ def cms_freq_sql(duck: bool, docs: str = "documents") -> str:
     # generator in the projection, not a cross join against a row relation:
     # keeps the d-fold expansion a Generate node (a map), so the plan never
     # grows a BroadcastNestedLoopJoin (tools/plan_audit.py enforces this)
-    j_exp = (f"unnest({rng}) as j" if duck else f"explode({rng}) as j")
+    j_exp = f"{d['explode']}({rng}) as j"
     col = f"({h32(f'concat(tok, chr(35), cast(j as {s}))', duck)}) % {CMS_W}"
     return f"""
       with {tokens_cte(duck, docs)},
@@ -933,13 +1005,11 @@ def hist_quantiles_sql(duck: bool, docs: str = "documents") -> str:
     shift.  Tests pin the error contract against exact quantiles and the
     cell-wise-sum mergeability on split corpora."""
     d = _d(duck)
-    iv = "//" if duck else "div"
-    ln = "len" if duck else "size"
+    iv, ln = d["div"], d["len"]
     ws = d["split"].format("text")
-    blen = "length(printf('%b', v))" if duck else "length(bin(v))"
+    blen = d["blen"].format("v")
     qs = ", ".join(str(q) for q in HQ_QS)
-    q_exp = (f"unnest([{qs}]) as q" if duck
-             else f"explode(array({qs})) as q")
+    q_exp = f"{d['explode']}({d['array'].format(qs)}) as q"
     shift = f"greatest(b - {HQ_M + 1}, 0)"
     pow2_shift = d["shl1"].format(shift)
     shift2 = f"greatest((key {iv} {HQ_SUB}) - {HQ_M + 1}, 0)"
@@ -1091,37 +1161,34 @@ def run_minhash_lsh(spark, sf_dir: str, k: int = 3):
     before the shingle explode — the scan yields 3 partitions at sf0.1,
     which would otherwise bound the explode + min-hash map side (same
     scan-parallelism trap as run_simhash_neardup)."""
+    ref = _persisted_shingles(spark, sf_dir, k, "mh")
+    return spark.sql(minhash_lsh_sql(duck=False, k=k, shingles_ref=ref))
+
+
+def _persisted_shingles(spark, sf_dir: str, k: int, tag: str) -> str:
+    """Persist the duped corpus's shingle relation once and return its
+    view name (``__{tag}_shingles``).  The corpus is repartitioned to the
+    session's shuffle parallelism before the explode (see
+    ``run_minhash_lsh``)."""
     _register_documents(spark, sf_dir)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     spark.sql(
         f"with {duped_docs_cte(False)} select doc_id, text from ddocs"
-    ).repartition(n_parts).createOrReplaceTempView("__mh_ddocs")
+    ).repartition(n_parts).createOrReplaceTempView(f"__{tag}_ddocs")
     sh = spark.sql(
-        f"with {shingles_cte(False, '__mh_ddocs', k)} "
+        f"with {shingles_cte(False, f'__{tag}_ddocs', k)} "
         "select doc_id, shingle from shingles"
     ).persist()
-    sh.createOrReplaceTempView("__mh_shingles")
-    return spark.sql(minhash_lsh_sql(duck=False, k=k, shingles_ref="__mh_shingles"))
+    sh.createOrReplaceTempView(f"__{tag}_shingles")
+    return f"__{tag}_shingles"
 
 
 def run_dedup_recall(spark, sf_dir: str, k: int = 3):
     """Spark-side banding-recall eval with the shingle relation persisted
     once (five consumers: min-hashing, both sides of the all-pairs join,
-    both size lookups); same scan-parallelism repartition as
-    ``run_minhash_lsh``."""
-    _register_documents(spark, sf_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    spark.sql(
-        f"with {duped_docs_cte(False)} select doc_id, text from ddocs"
-    ).repartition(n_parts).createOrReplaceTempView("__dr_ddocs")
-    sh = spark.sql(
-        f"with {shingles_cte(False, '__dr_ddocs', k)} "
-        "select doc_id, shingle from shingles"
-    ).persist()
-    sh.createOrReplaceTempView("__dr_shingles")
-    return spark.sql(
-        dedup_recall_sql(duck=False, k=k, shingles_ref="__dr_shingles")
-    )
+    both size lookups)."""
+    ref = _persisted_shingles(spark, sf_dir, k, "dr")
+    return spark.sql(dedup_recall_sql(duck=False, k=k, shingles_ref=ref))
 
 
 def run_ppl_bucket(spark, sf_dir: str):
@@ -1305,9 +1372,9 @@ def sample_priority_sql(duck: bool, docs: str = "documents") -> str:
     is exhaustive and w_hat = w).  Exactly what a 10^12-doc weighted
     subsample must do: one streaming pass, k rows of state."""
     d = _d(duck)
-    div = "//" if duck else " div "
+    div = d["div"]
     h = h32(f"cast(doc_id as {d['str']})", duck)
-    nw = "len(ws)" if duck else "size(ws)"
+    nw = f"{d['len']}(ws)"
     return f"""
       with base as (
         select doc_id, {d['split'].format('text')} as ws from {docs}
@@ -1357,7 +1424,7 @@ def _script_cls(name: str, duck: bool) -> str:
     """Unicode script character class for each engine's regex dialect:
     RE2 spells it \\p{Cyrillic}, Java \\p{IsCyrillic}; Spark SQL string
     literals additionally process backslash escapes (_pii_pat note)."""
-    return f"\\p{{{name}}}" if duck else f"\\\\p{{Is{name}}}"
+    return _d(duck)["uclass"].format(name)
 
 
 def script_mix_sql(duck: bool, docs: str = "documents") -> str:
@@ -1378,14 +1445,13 @@ def script_mix_sql(duck: bool, docs: str = "documents") -> str:
     Scale shape: pure regexp projection, map-only, no shuffle — a
     10^12-doc script audit is one codegen'd pass."""
     d = _d(duck)
-    s = d["str"]
-    g = ", 'g'" if duck else ""
+    s, g = d["str"], d["re_g"]
     lanes = " ".join(
         f"when {i} then '{body}'" for i, (_, body) in enumerate(_SCRIPT_BODIES)
     )
 
     def cnt(name: str) -> str:
-        cls = _script_cls(name if duck else name, duck)
+        cls = _script_cls(name, duck)
         return (f"(length(stext) - length(regexp_replace(stext, "
                 f"'[{cls}]', ''{g})))")
 
@@ -1471,23 +1537,18 @@ def decontaminate_sql(duck: bool, docs: str = "documents") -> str:
 def bigrams_cte(duck: bool, src: str = "documents", prefix: str = "") -> str:
     """Consecutive word bigrams per doc WITH multiplicity (unlike the
     distinct shingle relation): one explode over a transform of positions."""
-    d = _d(duck)
-    ws = d["split"].format("text")
-    pair = (
-        d["elem"].format("ws", "i") + " || ' ' || "
-        + d["elem"].format("ws", "i + 1")
-    )
-    lam = d["lambda"].format("i", pair)
-    n = "len(ws)" if duck else "size(ws)"
-    mk = d["transform"].format(d["range_incl"].format("1", f"{n} - 1"), lam)
     w, b = prefix + "bg_words", prefix + "bigrams"
-    un = "unnest" if duck else "explode"
     return f"""
-      {w} as (select doc_id, {ws} as ws from {src}),
+      {w} as (select doc_id, {_d(duck)["split"].format("text")} as ws from {src}),
       {b} as (
-        select doc_id, {un}({mk}) as bg
-        from {w} where {n} >= 2
+        {kgrams_sql(duck, 2, "doc_id, ", "bg", w)}
       )"""
+
+
+def _bigram_word(duck: bool, i: int) -> str:
+    """Word i (1 or 2) of the bigram string column ``bg``."""
+    d = _d(duck)
+    return d["elem"].format(d["split"].format("bg"), str(i))
 
 
 LM_SCALE = 1_000_000
@@ -1502,8 +1563,7 @@ def lm_scored_cte(duck: bool, docs: str = "documents") -> str:
         select bg, count(*) as c2 from bigrams group by bg
       ),
       prefixes as (
-        select {_d(duck)['elem'].format(_d(duck)['split'].format('bg'), '1')}
-                 as w1, bg, c2
+        select {_bigram_word(duck, 1)} as w1, bg, c2
         from model
       ),
       prefix_totals as (
@@ -1581,8 +1641,7 @@ def ppl_bucket_sql(
             "with doc_scores as (select doc_id, n_bigrams, lm_score, "
             f"min_logit from {scores_ref}),"
         )
-    iv = "//" if duck else "div"
-    norm = f"lm_score {iv} n_bigrams"
+    norm = f"lm_score {_d(duck)['div']} n_bigrams"
     return f"""
       {pre}
       normed as (
@@ -1648,7 +1707,7 @@ def dataset_split_sql(duck: bool, docs: str = "documents") -> str:
 
 def _octets(expr: str, duck: bool) -> str:
     """UTF-8 byte length: DuckDB's octet_length only accepts BLOB."""
-    return f"octet_length(encode({expr}))" if duck else f"octet_length({expr})"
+    return _d(duck)["octets"].format(expr)
 
 
 def _norm_expr(expr: str, duck: bool) -> str:
@@ -1666,9 +1725,9 @@ def _norm_expr(expr: str, duck: bool) -> str:
     for zw in ("​", "‌", "‍", "﻿"):  # ZWSP ZWNJ ZWJ BOM
         x = f"replace({x}, '{zw}', '')"
     x = f"replace({x}, ' ', ' ')"
-    ws = "'[\\t\\n\\r ]+'" if duck else "'[\\\\t\\\\n\\\\r ]+'"
-    g = ", 'g'" if duck else ""
-    return f"trim(regexp_replace({x}, {ws}, ' '{g}))"
+    d = _d(duck)
+    bs = d["bs"]
+    return f"trim(regexp_replace({x}, '[{bs}t{bs}n{bs}r ]+', ' '{d['re_g']}))"
 
 
 def messy_docs_cte(duck: bool, docs: str = "documents") -> str:
@@ -1734,7 +1793,7 @@ def shard_pack_sql(duck: bool, docs: str = "documents") -> str:
     thousands of independent window partitions and shards stay globally
     unique via (lane, shard_seq).  Same shape as seq_pack but over OUTPUT
     BYTES -- this is the writer side, seq_pack is the tokenizer side."""
-    div = "//" if duck else "div"
+    div = _d(duck)["div"]
     return f"""
       with sized as (
         select doc_id,
@@ -1774,15 +1833,8 @@ def dedup_recall_sql(
     sampled slice to validate banding parameters, never on the corpus.
     ``shingles_ref`` names a pre-materialized shingle relation (five
     consumers here — ``run_dedup_recall`` persists it once)."""
-    if shingles_ref is None:
-        pre = (
-            f"with {duped_docs_cte(duck, docs)},\n"
-            f"      {shingles_cte(duck, 'ddocs', k)},"
-        )
-    else:
-        pre = f"with shingles as (select doc_id, shingle from {shingles_ref}),"
     return f"""
-      {pre}
+      {_shingles_with(duck, docs, k, shingles_ref)}
       {_minhash_cand_cte(duck)},
       sizes as (select doc_id, count(*) as n from shingles group by doc_id),
       inter_all as (
@@ -1832,12 +1884,9 @@ def host_cap_sql(duck: bool, docs: str = "documents") -> str:
     keep-everything branch; at sf0.1 every host (hottest 1000 docs)
     exceeds the cap, exercising the all-hosts-saturated branch.  Both
     regimes sweep green (ROUND5.md)."""
-    from .corpus import HOST_EXPR, HOST_EXPR_DUCK
-
-    host = HOST_EXPR_DUCK if duck else HOST_EXPR
     return f"""
       with hosted as (
-        select doc_id, {host} as host,
+        select doc_id, {_d(duck)["host"]} as host,
                doc_id % {HOST_CAP_LANES} as lane
         from {docs}
       ),
@@ -1930,7 +1979,7 @@ PII_PHONE = r"\+1-555-[0-9]{4}"
 def _pii_pat(pat: str, duck: bool) -> str:
     """Quoted pattern literal: Spark SQL string literals process backslash
     escapes (corpus.py CLEAN_SPARK note), DuckDB passes them through."""
-    return "'" + (pat if duck else pat.replace("\\", "\\\\")) + "'"
+    return "'" + pat.replace("\\", _d(duck)["bs"]) + "'"
 
 
 def pii_scrub_sql(duck: bool, docs: str = "documents") -> str:
@@ -1942,7 +1991,7 @@ def pii_scrub_sql(duck: bool, docs: str = "documents") -> str:
     d = _d(duck)
     s = d["str"]
     email, phone = _pii_pat(PII_EMAIL, duck), _pii_pat(PII_PHONE, duck)
-    g = ", 'g'" if duck else ""
+    g = d["re_g"]
     redacted = (
         f"regexp_replace(regexp_replace(text, {email}, '<EMAIL>'{g}), "
         f"{phone}, '<PHONE>'{g})"
@@ -2027,32 +2076,9 @@ def dedup_incremental_sql(
     bands are a precomputed table maintained across runs; an increment
     shingles/hashes ONLY its own documents and joins its bands against the
     state band table -- O(batch), not O(corpus), per increment."""
-    d = _d(duck)
-    seeds = d["range_incl"].format("0", str(N_HASHES - 1))
-    seed_src = (
-        f"select unnest({seeds}) as seed" if duck
-        else f"select explode({seeds}) as seed"
-    )
-    cast_seed = f"cast(seed as {d['str']})"
-    if shingles_ref is None:
-        pre = f"with {duped_docs_cte(duck, docs)},\n      {shingles_cte(duck, 'ddocs', k)},"
-    else:
-        pre = f"with shingles as (select doc_id, shingle from {shingles_ref}),"
     return f"""
-      {pre}
-      seeds as ({seed_src}),
-      mh as (
-        select doc_id, seed,
-               min(md5(concat({cast_seed}, '#', shingle))) as h
-        from shingles cross join seeds
-        group by doc_id, seed
-      ),
-      bands as (
-        select doc_id, cast(floor(seed / 2) as int) as band,
-               concat(max(case when seed % 2 = 0 then h end),
-                      max(case when seed % 2 = 1 then h end)) as band_key
-        from mh group by doc_id, cast(floor(seed / 2) as int)
-      ),
+      {_shingles_with(duck, docs, k, shingles_ref)}
+      {_minhash_bands_cte(duck)},
       cand as (
         select distinct a.doc_id as state_id, b.doc_id as new_id
         from bands a join bands b
@@ -2080,19 +2106,8 @@ def run_dedup_incremental(spark, sf_dir: str, k: int = 3):
     """Spark runner: same persisted-shingle + repartition discipline as
     ``run_minhash_lsh`` (the shingle relation feeds min-hashing, sizes and
     the verify join)."""
-    _register_documents(spark, sf_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    spark.sql(
-        f"with {duped_docs_cte(False)} select doc_id, text from ddocs"
-    ).repartition(n_parts).createOrReplaceTempView("__inc_ddocs")
-    sh = spark.sql(
-        f"with {shingles_cte(False, '__inc_ddocs', k)} "
-        "select doc_id, shingle from shingles"
-    ).persist()
-    sh.createOrReplaceTempView("__inc_shingles")
-    return spark.sql(
-        dedup_incremental_sql(duck=False, k=k, shingles_ref="__inc_shingles")
-    )
+    ref = _persisted_shingles(spark, sf_dir, k, "inc")
+    return spark.sql(dedup_incremental_sql(duck=False, k=k, shingles_ref=ref))
 
 
 def positioned_spans_cte(
@@ -2104,12 +2119,8 @@ def positioned_spans_cte(
     which substring-level dedup needs to say WHICH bytes to cut."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n = "len(ws)" if duck else "size(ws)"
-    un = "unnest" if duck else "explode"
-    if duck:
-        span = f"array_to_string(ws[i:i + {k - 1}], ' ')"
-    else:
-        span = f"array_join(slice(ws, i, {k}), ' ')"
+    n, un = f"{d['len']}(ws)", d["explode"]
+    span = d["slice_join"].format("ws", "i", f"i + {k - 1}", k, "' '")
     w, sp = prefix + "pwords", prefix + "pspans"
     return f"""
       {w} as (select doc_id, {ws} as ws from {src}),
@@ -2187,9 +2198,8 @@ def seq_pack_sql(duck: bool, docs: str = "documents") -> str:
     are globally unique via (shard, pack_id).  On a 1000-executor run shards
     are thousands of independent window partitions."""
     d = _d(duck)
-    ws = d["split"].format("text")
-    n_tok = ("len" if duck else "size") + f"({ws})"
-    div = "//" if duck else "div"
+    n_tok = f"{d['len']}({d['split'].format('text')})"
+    div = d["div"]
     return f"""
       with per_doc as (
         select doc_id, doc_id % {PACK_SHARDS} as shard,
@@ -2245,11 +2255,9 @@ def epoch_shuffle_sql(duck: bool, docs: str = "documents") -> str:
     Ties are impossible by construction (the hash input embeds the unique
     doc_id)."""
     d = _d(duck)
-    s = d["str"]
-    div = "//" if duck else "div"
+    s, div = d["str"], d["div"]
     epochs = d["range_incl"].format("0", str(EPOCH_N - 1))
-    e_exp = (f"unnest({epochs}) as epoch" if duck
-             else f"explode({epochs}) as epoch")
+    e_exp = f"{d['explode']}({epochs}) as epoch"
     hkey = f"md5(concat('ep', cast(epoch as {s}), '#', cast(doc_id as {s})))"
     return f"""
       with items as (select doc_id, {e_exp} from {docs}),
@@ -2309,9 +2317,7 @@ def passage_chunk_sql(duck: bool, docs: str = "documents") -> str:
     stays narrow and engine-hashable."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n = "len(ws)" if duck else "size(ws)"
-    un = "unnest" if duck else "explode"
-    div = "//" if duck else "div"
+    n, un, div = f"{d['len']}(ws)", d["explode"], d["div"]
     if duck:
         chunk = f"array_to_string(ws[(1 + j * {CHUNK_S}):(j * {CHUNK_S} + {CHUNK_W})], ' ')"
     else:
@@ -2357,7 +2363,7 @@ def quality_classify_sql(duck: bool, docs: str = "documents",
     scoring is one map-side join plus one hash aggregation.  Linear at
     10^12 docs."""
     d = _d(duck)
-    un = "unnest" if duck else "explode"
+    un = d["explode"]
     seeds = d["range_incl"].format("0", str(QC_BUCKETS - 1))
     h = h32("tok", duck)
     if weights_ref:
@@ -2445,8 +2451,7 @@ def vocab_induct_sql(duck: bool, docs: str = "documents") -> str:
     tests/test_corpusops.py).  The cumulative-coverage window then runs
     over the final {VOCAB_SIZE} rows only.  The only corpus-sized work is
     one (token) hash aggregation with map-side partials."""
-    d = _d(duck)
-    div = "//" if duck else "div"
+    div = _d(duck)["div"]
     cand = global_topk_cand(
         duck, "cand", "counts", "tok, n", "n desc, tok asc",
         VOCAB_SIZE, "tok",
@@ -2487,9 +2492,8 @@ def dataset_card_sql(duck: bool, docs: str = "documents") -> str:
     Rank conventions: lower median = smallest value with cum >= (n+1) div 2;
     p90 = smallest value with cum >= (9n+9) div 10 (= ceil(0.9 n))."""
     d = _d(duck)
-    ws = d["split"].format("text")
-    n_tok = ("len" if duck else "size") + f"({ws})"
-    div = "//" if duck else "div"
+    n_tok = f"{d['len']}({d['split'].format('text')})"
+    div = d["div"]
     return f"""
       with per_doc as (
         select lang, cast({n_tok} as bigint) as n_tok from {docs}
@@ -2530,9 +2534,8 @@ def source_mix_sql(duck: bool, docs: str = "documents") -> str:
     take" table a mixing pipeline consumes.  Two tiny aggregations (sources
     number in the tens) over one token-count pass -- linear at any scale."""
     d = _d(duck)
-    ws = d["split"].format("text")
-    n_tok = ("len" if duck else "size") + f"({ws})"
-    div = "//" if duck else "div"
+    n_tok = f"{d['len']}({d['split'].format('text')})"
+    div = d["div"]
     return f"""
       with per_doc as (
         select source, doc_id, cast({n_tok} as bigint) as n_tokens
@@ -2561,8 +2564,7 @@ def per_source_tokens_sql(duck: bool, docs: str = "documents") -> str:
     n_tokens).  Split out so the Spark runner can persist it — Catalyst
     inlines CTEs, and the tau expansion references it three times."""
     d = _d(duck)
-    ws = d["split"].format("text")
-    n_tok = ("len" if duck else "size") + f"({ws})"
+    n_tok = f"{d['len']}({d['split'].format('text')})"
     return f"""
         select source, count(*) as n_docs,
                sum(cast({n_tok} as bigint)) as n_tokens
@@ -2586,7 +2588,7 @@ def source_temperature_sql(duck: bool, docs: str = "documents",
     on exact bigint squares).  Scale: one token-count pass (persisted by
     the runner — ``per_source_src``), then everything is per-source (tens
     of rows) — linear at any corpus size."""
-    div = "//" if duck else "div"
+    div = _d(duck)["div"]
     s0 = "cast(floor(sqrt(cast(n_tokens as double))) as bigint)"
     isqrt = (
         f"({s0} + (case when ({s0} + 1) * ({s0} + 1) <= n_tokens"
@@ -2631,24 +2633,11 @@ def kn_bigram_counts_sql(duck: bool, docs: str = "documents") -> str:
     """(w1, w2, c) bigram counts — the ONE corpus pass behind kn_ngram,
     split out so the Spark runner can persist it (Catalyst inlines CTEs;
     the ctx/cont/types/scoring consumers reference it four times)."""
-    d = _d(duck)
-    ws = d["split"].format("text")
-    pair = (d["elem"].format("ws", "i") + " || ' ' || "
-            + d["elem"].format("ws", "i + 1"))
-    lam = d["lambda"].format("i", pair)
-    mk = d["transform"].format(
-        d["range_incl"].format("1", "len(ws) - 1"), lam)
-    if duck:
-        bigrams = (f"select unnest({mk}) as bg from (select {ws} as ws"
-                   f" from {docs}) words where len(ws) >= 2")
-    else:
-        mk_s = mk.replace("len(ws)", "size(ws)")
-        bigrams = (f"select explode({mk_s}) as bg from (select {ws} as ws"
-                   f" from {docs}) words where size(ws) >= 2")
-    w1 = d["elem"].format(d["split"].format("bg"), "1")
-    w2 = d["elem"].format(d["split"].format("bg"), "2")
+    words = f"(select {_d(duck)['split'].format('text')} as ws from {docs}) words"
+    bigrams = kgrams_sql(duck, 2, "", "bg", words)
     return f"""
-        select {w1} as w1, {w2} as w2, cast(count(*) as bigint) as c
+        select {_bigram_word(duck, 1)} as w1, {_bigram_word(duck, 2)} as w2,
+               cast(count(*) as bigint) as c
         from ({bigrams}) bigrams group by 1, 2
     """
 
@@ -2674,7 +2663,7 @@ def kn_ngram_sql(duck: bool, docs: str = "documents",
     (V^2 bigram types at worst, vocabulary-sized context tables), never
     corpus-sized — the same bounded-relation contract as the BPE
     trainer."""
-    div = "//" if duck else "div"
+    div = _d(duck)["div"]
     D = KN_D_MILLI
     bc = bcounts_src or f"({kn_bigram_counts_sql(duck, docs)}) __bc"
     return f"""
@@ -2723,7 +2712,7 @@ def ngram_novelty_sql(duck: bool, docs: str = "documents",
     absorb hot shingles), and one shingle-keyed join back; every relation
     is shingle-type-bounded or linear in the corpus.  No windows, no
     collect."""
-    div = "//" if duck else "div"
+    div = _d(duck)["div"]
     if shingles_src:
         head = f"shingles as (select * from {shingles_src})"
     else:
@@ -2761,8 +2750,7 @@ def dsir_tb_sql(duck: bool, docs: str = "documents",
     ws = d["split"].format("text")
     h = h32("tok", duck)
     B = DSIR_BUCKETS
-    ex = f"unnest({ws})" if duck else f"explode({ws})"
-    base = (f"select doc_id, {ex} as tok,"
+    base = (f"select doc_id, {d['explode']}({ws}) as tok,"
             f" case when {target} then 1 else 0 end as tgt from {docs}")
     return f"""
         select doc_id, {h} % {B} as b, tgt
@@ -2797,7 +2785,7 @@ def dsir_weights_sql(duck: bool, docs: str = "documents",
     (map-side partials), broadcast-joined back onto the token stream; one
     (doc_id) hash agg — linear, one shuffle."""
     B = DSIR_BUCKETS
-    div = "//" if duck else "div"
+    div = _d(duck)["div"]
     tb = tb_src or f"({dsir_tb_sql(duck, docs, target)}) __tb"
     return f"""
       with tb as (
@@ -2841,22 +2829,9 @@ KN_HELDOUT_MOD = 10  # doc_id % MOD == 0 is held out; the rest train
 def kn_train_bcounts_sql(duck: bool, docs: str = "documents") -> str:
     """(bg, c) bigram counts over the TRAIN split — the corpus pass behind
     kn_heldout, split out for the persist-once runner (four consumers)."""
-    d = _d(duck)
-    ws = d["split"].format("text")
-    pair = (d["elem"].format("ws", "i") + " || ' ' || "
-            + d["elem"].format("ws", "i + 1"))
-    lam = d["lambda"].format("i", pair)
-    mk = d["transform"].format(
-        d["range_incl"].format("1", "len(ws) - 1"), lam)
-    M = KN_HELDOUT_MOD
-    words = (f"select {ws} as ws from {docs}"
-             f" where doc_id % {M} <> 0")
-    if duck:
-        bg = f"select unnest({mk}) as bg from ({words}) tr_words where len(ws) >= 2"
-    else:
-        mk_s = mk.replace("len(ws)", "size(ws)")
-        bg = (f"select explode({mk_s}) as bg from ({words}) tr_words"
-              " where size(ws) >= 2")
+    words = (f"(select {_d(duck)['split'].format('text')} as ws from {docs}"
+             f" where doc_id % {KN_HELDOUT_MOD} <> 0) tr_words")
+    bg = kgrams_sql(duck, 2, "", "bg", words)
     return f"""
         select bg, cast(count(*) as bigint) as c
         from ({bg}) tr_bigrams group by bg
@@ -2884,21 +2859,9 @@ def kn_heldout_sql(duck: bool, docs: str = "documents",
     test pins them (CLAUDE.md's no-idf-signal caveat)."""
     d = _d(duck)
     ws = d["split"].format("text")
-    pair = (d["elem"].format("ws", "i") + " || ' ' || "
-            + d["elem"].format("ws", "i + 1"))
-    lam = d["lambda"].format("i", pair)
-    mk = d["transform"].format(
-        d["range_incl"].format("1", "len(ws) - 1"), lam)
-    if duck:
-        ho_bg = (f"select doc_id, unnest({mk}) as bg from ho_words"
-                 " where len(ws) >= 2")
-    else:
-        mk_s = mk.replace("len(ws)", "size(ws)")
-        ho_bg = (f"select doc_id, explode({mk_s}) as bg from ho_words"
-                 " where size(ws) >= 2")
-    w1 = d["elem"].format(d["split"].format("bg"), "1")
-    w2 = d["elem"].format(d["split"].format("bg"), "2")
-    div = "//" if duck else "div"
+    ho_bg = kgrams_sql(duck, 2, "doc_id, ", "bg", "ho_words")
+    w1, w2 = _bigram_word(duck, 1), _bigram_word(duck, 2)
+    div = d["div"]
     D = KN_D_MILLI
     M = KN_HELDOUT_MOD
     pcont = f"((coalesce(o.n1bwd, 0) * 1000000) {div} t.n_types)"
@@ -3020,23 +2983,8 @@ def novelty_shingles_sql(duck: bool, docs: str = "documents") -> str:
     SQL defeats Spark's cache-plan canonicalization, so the persisted
     relation would silently never be substituted (measured: two full
     explodes in the plan)."""
-    d = _d(duck)
-    ws = d["split"].format("text")
-    k = NOVELTY_K
-    parts = " || ' ' || ".join(
-        d["elem"].format("ws", f"i + {j}") if j else d["elem"].format("ws", "i")
-        for j in range(k)
-    )
-    lam = d["lambda"].format("i", parts)
-    mk = d["transform"].format(
-        d["range_incl"].format("1", f"len(ws) - {k - 1}"), lam)
-    words = f"select doc_id, {ws} as ws from {docs}"
-    if duck:
-        return (f"select distinct doc_id, unnest({mk}) as shingle"
-                f" from ({words}) words where len(ws) >= {k}")
-    mk_s = mk.replace("len(ws)", "size(ws)")
-    return (f"select distinct doc_id, explode({mk_s}) as shingle"
-            f" from ({words}) words where size(ws) >= {k}")
+    words = f"(select doc_id, {_d(duck)['split'].format('text')} as ws from {docs}) words"
+    return kgrams_sql(duck, NOVELTY_K, "distinct doc_id, ", "shingle", words)
 
 
 def run_ngram_novelty(spark, sf_dir: str):
@@ -3059,9 +3007,8 @@ def _char_split(duck: bool, col: str) -> str:
     sequence).  '.' excludes newline identically in both regex engines
     (Java regex / RE2), so tokens carrying a stray newline keep it glued to
     the following char the same way on both sides."""
-    if duck:
-        return f"trim(regexp_replace({col}, '(.)', '\\1 ', 'g'))"
-    return f"trim(regexp_replace({col}, '(.)', '$1 '))"
+    d = _d(duck)
+    return f"trim(regexp_replace({col}, '(.)', '{d['re_ref1']} '{d['re_g']}))"
 
 
 def _bpe_dict0_cte(duck: bool, docs: str = "documents") -> str:
@@ -3095,16 +3042,6 @@ def _bpe_round_ctes(duck: bool, t: int) -> str:
     greedy BPE (documented surrogate); both engines share the exact
     semantics, so the oracle is still a byte-level check."""
     d = _d(duck)
-    ln = "len" if duck else "size"
-    pair = (
-        d["elem"].format("ss", "i") + " || ' ' || "
-        + d["elem"].format("ss", "i + 1")
-    )
-    lam = d["lambda"].format("i", pair)
-    mk = d["transform"].format(
-        d["range_incl"].format("1", f"{ln}(ss) - 1"), lam
-    )
-    un = "unnest" if duck else "explode"
     sp = d["split"].format("pr")
     l_expr = d["elem"].format(f"({sp})", "1")
     r_expr = d["elem"].format(f"({sp})", "2")
@@ -3119,8 +3056,7 @@ def _bpe_round_ctes(duck: bool, t: int) -> str:
         from dict{t - 1}
       ),
       prs{t} as (
-        select wcount, {un}({mk}) as pr
-        from syms{t} where {ln}(ss) >= 2
+        {kgrams_sql(duck, 2, "wcount, ", "pr", f"syms{t}", "ss")}
       ),
       pairs{t} as (
         select {l_expr} as l, {r_expr} as r, sum(wcount) as c
@@ -3169,12 +3105,11 @@ def bpe_vocab_sql(
     count, with within-word multiplicity) and word coverage per symbol —
     the table a vocab-size decision reads."""
     d = _d(duck)
-    un = "unnest" if duck else "explode"
     sp = d["split"].format("repr")
     return f"""
       with {_bpe_rounds(duck, docs, merges)},
       fsyms as (
-        select word, wcount, {un}({sp}) as sym from dict{merges}
+        select word, wcount, {d['explode']}({sp}) as sym from dict{merges}
       )
       select sym,
              cast(sum(wcount) as bigint) as freq,
@@ -3189,14 +3124,6 @@ def _bpe_pairs_over(view: str) -> str:
     """Spark SQL: best (l, r, c) pair over the ``view`` dict relation —
     the same round body as ``_bpe_round_ctes`` but reading a bound view."""
     d = _d(False)
-    pair = (
-        d["elem"].format("ss", "i") + " || ' ' || "
-        + d["elem"].format("ss", "i + 1")
-    )
-    mk = d["transform"].format(
-        d["range_incl"].format("1", "size(ss) - 1"),
-        d["lambda"].format("i", pair),
-    )
     sp = d["split"].format("pr")
     l_expr = d["elem"].format(f"({sp})", "1")
     r_expr = d["elem"].format(f"({sp})", "2")
@@ -3205,7 +3132,7 @@ def _bpe_pairs_over(view: str) -> str:
         select wcount, {d["split"].format("repr")} as ss from {view}
       ),
       prs as (
-        select wcount, explode({mk}) as pr from syms where size(ss) >= 2
+        {kgrams_sql(False, 2, "wcount, ", "pr", "syms", "ss")}
       )
       select {l_expr} as l, {r_expr} as r, sum(wcount) as c
       from prs group by {l_expr}, {r_expr}
@@ -3280,11 +3207,9 @@ def _bpe_encode_select(duck: bool, dict_ref: str, docs: str) -> str:
     aggregated per doc with an ORDER-FAITHFUL stream digest."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n = "len(ws)" if duck else "size(ws)"
-    un = "unnest" if duck else "explode"
+    n, un = f"{d['len']}(ws)", d["explode"]
     tok = d["elem"].format("ws", "i")
-    nsub = ("len(string_split(repr, ' '))" if duck
-            else "size(split(repr, ' '))")
+    nsub = f"{d['len']}({d['split'].format('repr')})"
     if duck:
         stream = "md5(string_agg(repr, ' ' order by pos))"
     else:
@@ -3307,7 +3232,7 @@ def _bpe_encode_select(duck: bool, dict_ref: str, docs: str) -> str:
       select doc_id,
              cast(count(*) as bigint) as n_tokens,
              cast(sum(n_sub) as bigint) as n_subwords,
-             cast((100 * sum(n_sub)) {"//" if duck else "div"} count(*)
+             cast((100 * sum(n_sub)) {d["div"]} count(*)
                   as bigint) as fertility_x100,
              {stream} as stream_md5
       from enc
@@ -3438,7 +3363,7 @@ def hash_embed_sql(duck: bool, docs: str = "documents", dims: int = 16,
     combine — linear, one shuffle, no skew (doc_id dominates the key); the
     weighted variant adds one broadcast-sized join on the bucket key."""
     h = h32("tok", duck)
-    div = "//" if duck else "div"
+    div = _d(duck)["div"]
     if weights_ref:
         contrib = f"""
       contrib as (
@@ -3492,13 +3417,9 @@ def winnow_fingerprint_sql(duck: bool, docs: str = "documents") -> str:
     linear at 10^12 docs, never a global sort."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n = "len(ws)" if duck else "size(ws)"
-    un = "unnest" if duck else "explode"
+    n, un = f"{d['len']}(ws)", d["explode"]
     k = WINNOW_K
-    if duck:
-        gram = f"array_to_string(ws[i:i + {k - 1}], ' ')"
-    else:
-        gram = f"array_join(slice(ws, i, {k}), ' ')"
+    gram = d["slice_join"].format("ws", "i", f"i + {k - 1}", k, "' '")
     h = h32("gram", duck)
     return f"""
       with wnw as (select doc_id, {ws} as ws from {docs}),
@@ -3529,7 +3450,7 @@ def winnow_fingerprint_sql(duck: bool, docs: str = "documents") -> str:
         from wins where pos <= max_pos - {WINNOW_W - 1}
       )
       select doc_id,
-             cast(sel_code {"//" if duck else "div"} 1048576 as bigint)
+             cast(sel_code {d["div"]} 1048576 as bigint)
                as fp_hash,
              cast(1048576 - (sel_code % 1048576) as bigint) as fp_pos
       from selected
@@ -3555,23 +3476,14 @@ def gopher_filter_sql(duck: bool, docs: str = "documents") -> str:
 
     Scale: one token explode + one per-doc hash agg with map-side combine —
     linear at 10^12 docs, no joins, no windows."""
+    d = _d(duck)
     stop_in = ", ".join(f"'{w}'" for w in STOPWORDS)
-    if duck:
-        first3 = "array_to_string(string_split(text, ' ')[1:3], ' ')"
-        nostop = (
-            "array_to_string(list_filter(string_split(text, ' '), "
-            f"t -> t not in ({stop_in})), ' ')"
-        )
-        is_sym = "regexp_full_match(tok, '[^a-z0-9]+')"
-        is_alpha = "regexp_full_match(tok, '[a-z]+')"
-    else:
-        first3 = "array_join(slice(split(text, ' '), 1, 3), ' ')"
-        nostop = (
-            "array_join(filter(split(text, ' '), "
-            f"t -> not (t in ({stop_in}))), ' ')"
-        )
-        is_sym = "tok rlike '^[^a-z0-9]+$'"
-        is_alpha = "tok rlike '^[a-z]+$'"
+    ws, div = d["split"].format("text"), d["div"]
+    first3 = d["slice_join"].format(ws, 1, 3, 3, "' '")
+    keep = d["lambda"].format("t", d["not_in"].format("t", stop_in))
+    nostop = d["join"].format(d["filter"].format(ws, keep), "' '")
+    is_sym = d["re_full"].format("tok", "[^a-z0-9]+")
+    is_alpha = d["re_full"].format("tok", "[a-z]+")
     return f"""
       with gdocs as (
         select doc_id,
@@ -3588,12 +3500,12 @@ def gopher_filter_sql(duck: bool, docs: str = "documents") -> str:
       stats as (
         select doc_id,
                count(*) as n_words,
-               (10 * sum(length(tok))) {"//" if duck else "div"} count(*)
+               (10 * sum(length(tok))) {div} count(*)
                  as mean_wlen_x10,
                (1000 * sum(case when {is_sym} then 1 else 0 end))
-                 {"//" if duck else "div"} count(*) as symbol_permille,
+                 {div} count(*) as symbol_permille,
                (1000 * sum(case when {is_alpha} then 1 else 0 end))
-                 {"//" if duck else "div"} count(*) as alpha_permille,
+                 {div} count(*) as alpha_permille,
                sum(case when tok in ({stop_in}) then 1 else 0 end) as n_stop
         from tokens where tok <> '' group by doc_id
       ),
@@ -3707,7 +3619,7 @@ def _bm25_rest(duck: bool, tf: str) -> str:
     """The BM25 chain downstream of the (doc_id, tok, tf) relation — shared
     between the inline oracle template and the persisted-tf Spark runner so
     the two cannot drift."""
-    iv = "//" if duck else "div"
+    iv = _d(duck)["div"]
     return f"""
       dl as (select doc_id, sum(tf) as dl from {tf} group by doc_id),
       stats as (
@@ -3815,13 +3727,11 @@ def cdc_chunk_sql(duck: bool, docs: str = "documents") -> str:
     one shuffle on doc_id, never a global sort."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n = "len(ws)" if duck else "size(ws)"
-    un = "unnest" if duck else "explode"
+    n, un = f"{d['len']}(ws)", d["explode"]
+    gram = d["slice_join"].format("ws", "pos", f"pos + {CDC_K - 1}", CDC_K, "' '")
     if duck:
-        gram = f"array_to_string(ws[pos:pos + {CDC_K - 1}], ' ')"
         reasm = "md5(string_agg(tok, ' ' order by pos))"
     else:
-        gram = f"array_join(slice(ws, pos, {CDC_K}), ' ')"
         reasm = (
             "md5(concat_ws(' ', transform("
             "array_sort(collect_list(struct(pos, tok))), x -> x.tok)))"
@@ -3895,19 +3805,13 @@ def filter_funnel_sql(duck: bool, docs: str = "documents") -> str:
     nothing in the plan is proportional to anything but the scan."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n = "len(ws)" if duck else "size(ws)"
-    ndist = (
-        "len(list_distinct(ws))" if duck else "size(array_distinct(ws))"
-    )
-    iv = "//" if duck else "div"
+    n = f"{d['len']}(ws)"
+    ndist = f"{d['len']}({d['distinct'].format('ws')})"
+    iv = d["div"]
     stage_rows = ", ".join(
         f"({i + 1}, '{s}')" for i, s in enumerate(FUNNEL_STAGES)
     )
-    stages = (
-        f"select * from (values {stage_rows}) v(stage_idx, stage_name)"
-        if duck
-        else f"select * from values {stage_rows} as v(stage_idx, stage_name)"
-    )
+    stages = d["values"].format(stage_rows, "v(stage_idx, stage_name)")
     # per-stage column pickers: stage i reads p{i-1} (p0 == n0) and p{i}
     p = lambda i: "n0" if i == 0 else f"p{i}"  # noqa: E731
     n_in = " ".join(f"when {i} then {p(i - 1)}" for i in range(1, 6))
@@ -3982,8 +3886,7 @@ def phrase_search_sql(
     persists it once and renders this same template against it."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n = "len(ws)" if duck else "size(ws)"
-    un = "unnest" if duck else "explode"
+    n, un = f"{d['len']}(ws)", d["explode"]
     if postings_ref is None:
         p = "postings"
         pre = f"""pwords as (select doc_id, {ws} as ws from {docs}),
@@ -4063,9 +3966,7 @@ def ngram_collocations_sql(duck: bool, docs: str = "documents") -> str:
     relation only.  Output is the top {COLLOC_TOPK} by lift."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n = "len(ws)" if duck else "size(ws)"
-    un = "unnest" if duck else "explode"
-    iv = "//" if duck else "div"
+    n, un, iv = f"{d['len']}(ws)", d["explode"], d["div"]
     return f"""
       with cwords as (select doc_id, {ws} as ws from {docs}),
       toks as (
@@ -4176,7 +4077,7 @@ def dedup_band_audit_sql(duck: bool, docs: str = "documents") -> str:
     which never overflows) — so the audited distribution always includes
     the regime the guard exists for, and sf0.1 adds the
     order-of-magnitude-hotter saturation point."""
-    iv = "//" if duck else "div"
+    iv = _d(duck)["div"]
     return f"""
       with {duped_docs_cte(duck, docs)},
       {shingles_cte(duck, "ddocs")},

@@ -21,7 +21,6 @@ oracle independently verifies every canonicalization rule.
 
 from __future__ import annotations
 
-from .corpus import HOST_EXPR, HOST_EXPR_DUCK
 from .textops import _d, h32
 
 
@@ -51,14 +50,10 @@ def _canon_ctes(duck: bool) -> str:
     host, n_params).  Step names follow the canonicalization rules."""
     d = _d(duck)
     strpos = d["strpos"]
-    # split-on-# built explicitly (the dialect split template is for spaces)
-    split_hash = ("string_split(url, '#')" if duck else "split(url, '#')")
-    split_amp = ("string_split(query, '&')" if duck else "split(query, '&')")
-    sort_join = (
-        f"array_to_string(list_sort({split_amp}), '&')" if duck
-        else f"array_join(array_sort({split_amp}), '&')"
-    )
-    nq = f"len({split_amp})" if duck else f"size({split_amp})"
+    split_hash = d["split_on"].format("url", "'#'")
+    split_amp = d["split_on"].format("query", "'&'")
+    sort_join = d["join"].format(d["sort"].format(split_amp), "'&'")
+    nq = f"{d['len']}({split_amp})"
     return f"""
       c_frag as (  -- rule: drop the fragment
         select doc_id, url, {d['elem'].format(split_hash, '1')} as nofrag
@@ -151,15 +146,11 @@ def _surt_cte(duck: bool) -> str:
     port stripping and fragment dropping feed the key for free.  Pure
     string surgery in both dialects — at index scale the key is computed
     inside whole-stage codegen, never in Python."""
+    d = _d(duck)
     h = "case when host like 'www.%' then substr(host, 5) else host end"
-    split_dot = (f"string_split({h}, '.')" if duck else f"split({h}, '[.]')")
-    rev = (f"array_to_string(list_reverse({split_dot}), ',')" if duck
-           else f"array_join(reverse({split_dot}), ',')")
-    split_amp = ("string_split(query, '&')" if duck else "split(query, '&')")
-    sort_join = (
-        f"array_to_string(list_sort({split_amp}), '&')" if duck
-        else f"array_join(array_sort({split_amp}), '&')"
-    )
+    rev = d["join"].format(d["reverse"].format(d["split_dot"].format(h)), "','")
+    split_amp = d["split_on"].format("query", "'&'")
+    sort_join = d["join"].format(d["sort"].format(split_amp), "'&'")
     return f"""
       surt as (
         select doc_id, url as url_raw, host,
@@ -215,14 +206,10 @@ def robots_filter_sql(duck: bool, docs: str = "documents") -> str:
     rules — never a shuffle wider than the urls themselves."""
     d = _d(duck)
     rows = ", ".join(f"('{h}', '{p}', {a})" for h, p, a in ROBOTS_RULES)
-    s = d["str"]
     return f"""
       with raw as (
-        select doc_id,
-               case when doc_id % 5 = 0 then 'popular.example.com'
-                    else concat('site-', cast(doc_id % 211 as {s}),
-                                '.example.org') end as host,
-               concat('/', source, '/', cast(doc_id as {s})) as path
+        select doc_id, {d['host']} as host,
+               concat('/', source, '/', cast(doc_id as {d['str']})) as path
         from {docs}
       ),
       rules as (select * from (values {rows}) as r(rhost, prefix, allow)),
@@ -253,18 +240,12 @@ def _captures_cte(duck: bool, docs: str = "documents") -> str:
     (which perturbs it per capture), so the two operators provably
     describe the same recrawl universe."""
     d = _d(duck)
-    host = (
-        "case when doc_id % 5 = 0 then 'popular.example.com' "
-        f"else concat('site-', cast(doc_id % 211 as {d['str']}), "
-        "'.example.org') end"
-    )
     ks = d["range_incl"].format("0", "doc_id % 3")
-    k_col = f"unnest({ks})" if duck else f"explode({ks})"
     return f"""caps as (
         select doc_id, text,
-               concat('https://', {host}, '/', source, '/',
+               concat('https://', {d['host']}, '/', source, '/',
                       cast(doc_id as {d['str']})) as url,
-               {k_col} as capture_idx
+               {d['explode']}({ks}) as capture_idx
         from {docs}
       )"""
 
@@ -405,10 +386,8 @@ def recrawl_delta_sql(duck: bool, docs: str = "documents") -> str:
     url; the Venn count is one hash agg keyed (url, tok) and the rollup
     one keyed url — the exact-dedup shuffle shape, never a global sort."""
     d = _d(duck)
-    tok_col = (
-        "unnest(string_split(ctext, ' '))" if duck
-        else "explode(split(ctext, ' '))"
-    )
+    tok_col = f"{d['explode']}({d['split'].format('ctext')})"
+    div = d["div"]
     return f"""
       with {_captures_cte(duck, docs)},
       {_captext_cte(duck)},
@@ -433,13 +412,13 @@ def recrawl_delta_sql(duck: bool, docs: str = "documents") -> str:
                as n_shared,
              cast(count(*) as bigint) as n_union,
              cast((1000 * sum(case when c = 2 then 1 else 0 end))
-                  {'//'if duck else 'div'} count(*) as bigint)
+                  {div} count(*) as bigint)
                as jaccard_permille,
              case
                when sum(case when c = 2 then 1 else 0 end) = count(*)
                  then 'unchanged'
                when (1000 * sum(case when c = 2 then 1 else 0 end))
-                    {'//'if duck else 'div'} count(*) >= 800 then 'minor'
+                    {div} count(*) >= 800 then 'minor'
                else 'major'
              end as tier
       from venn
@@ -478,24 +457,11 @@ def domain_stats_sql(duck: bool, docs: str = "documents") -> str:
     m = f"cast(doc_id % 37 as {d['str']})"
     j = f"cast(doc_id % 23 as {d['str']})"
     vals = ", ".join(f"('{s}')" for s in PSL_SUFFIXES)
-    suffixes = (
-        f"select * from (values {vals}) v(suffix)" if duck
-        else f"select * from values {vals} as v(suffix)"
-    )
-    # Spark's split() takes a REGEX — '[.]' keeps the dot literal.
-    split_host = (
-        "string_split(host, '.')" if duck else "split(host, '[.]')"
-    )
-    n = "len(labels)" if duck else "size(labels)"
-    i_col = (
-        f"unnest({d['range_incl'].format('1', f'least({n} - 1, 3)')})"
-        if duck
-        else f"explode({d['range_incl'].format('1', f'least({n} - 1, 3)')})"
-    )
-    cand = (
-        f"array_to_string(labels[{n} - i + 1:{n}], '.')" if duck
-        else f"array_join(slice(labels, {n} - i + 1, i), '.')"
-    )
+    suffixes = d["values"].format(vals, "v(suffix)")
+    split_host = d["split_dot"].format("host")
+    n = f"{d['len']}(labels)"
+    i_col = f"{d['explode']}({d['range_incl'].format('1', f'least({n} - 1, 3)')})"
+    cand = d["slice_join"].format("labels", f"{n} - i + 1", n, "i", "'.'")
     label_above = d["elem"].format("labels", f"{n} - i")
     return f"""
       with psl as ({suffixes}),
@@ -559,10 +525,11 @@ def sitemap_parse_sql(duck: bool, docs: str = "documents") -> str:
     files are per-host and |host|-bounded like the robots relation."""
     ts = "1709251200 + doc_id % 31536000"
     pr = "doc_id % 9 + 1"
+    host = _d(duck)["host"]
     if duck:
         return f"""
       with d as (
-        select doc_id, source, {HOST_EXPR_DUCK} as host from {docs}
+        select doc_id, source, {host} as host from {docs}
       )
       select host,
              concat('https://', host, '/', source, '/',
@@ -574,7 +541,7 @@ def sitemap_parse_sql(duck: bool, docs: str = "documents") -> str:
     """
     return f"""
       with d as (
-        select doc_id, source, {HOST_EXPR} as host from {docs}
+        select doc_id, source, {host} as host from {docs}
       ),
       d2 as (
         select doc_id, host,
@@ -636,10 +603,8 @@ def bloom_frontier_sql(duck: bool, docs: str = "documents") -> str:
     bit_or aggregation) is engine-identical, so the exact bit pattern —
     and therefore the exact false-positive set — is value-checked."""
     d = _d(duck)
-    s = d["str"]
-    j3 = ("unnest([1, 2, 3]) as j" if duck else
-          "explode(array(1, 2, 3)) as j")
-    div = "//" if duck else "div"
+    s, div = d["str"], d["div"]
+    j3 = f"{d['explode']}({d['array'].format('1, 2, 3')}) as j"
 
     def bitpos(url: str) -> str:
         h = h32(f"concat({url}, '#', cast(j as {s}))", duck)
@@ -647,7 +612,7 @@ def bloom_frontier_sql(duck: bool, docs: str = "documents") -> str:
 
     return f"""
       with d0 as (
-        select doc_id, source, {HOST_EXPR_DUCK if duck else HOST_EXPR} as host
+        select doc_id, source, {d['host']} as host
         from {docs}
       ),
       seen as (
@@ -722,36 +687,27 @@ def hll_card_sql(duck: bool, docs: str = "documents") -> str:
     0 zero registers — the raw-HLL branch.  The driver gate therefore pins
     the register relation under both correction regimes across its sfs."""
     d = _d(duck)
-    s = d["str"]
-    div = "//" if duck else "div"
-    blen = ("length(printf('%b', suffix))" if duck
-            else "length(bin(suffix))")
+    div = d["div"]
     rng = d["range_incl"].format("0", str(HLL_M - 1))
-    allb = (f"select unnest({rng}) as bucket" if duck
-            else f"select explode({rng}) as bucket")
-    regs_join = (
-        "md5(string_agg(cast(r as varchar), ',' order by bucket))" if duck
-        else "md5(array_join(transform(array_sort(collect_list("
-             "struct(bucket, r))), x -> cast(x.r as string)), ','))"
-    )
     return f"""
       with {_captures_cte(duck, docs)},
       h as (select ({h32('url', duck)}) as hv from caps),
       br as (
         select hv % {HLL_M} as bucket, suffix,
-               case when suffix = 0 then 25 else 25 - {blen} end as rho
+               case when suffix = 0 then 25 else 25 - {d['blen'].format('suffix')} end as rho
         from (select hv, hv {div} {HLL_M} as suffix from h)
       ),
       regs as (select bucket, max(rho) as r from br group by bucket),
       full_regs as (
         select a.bucket, coalesce(regs.r, 0) as r
-        from ({allb}) a left join regs on regs.bucket = a.bucket
+        from (select {d['explode']}({rng}) as bucket) a
+        left join regs on regs.bucket = a.bucket
       ),
       agg as (
         select sum({d['shl1'].format('(32 - r)')}) as den,
                sum(case when r = 0 then 1 else 0 end) as v0,
                sum(r) as register_sum,
-               {regs_join} as regs_md5
+               {d['regs_join']} as regs_md5
         from full_regs
       )
       select cast((select count(distinct url) from caps) as bigint)
@@ -783,20 +739,10 @@ def hll_by_host_sql(duck: bool, docs: str = "documents") -> str:
     bigint fixed point (alpha_16 = 0.673); small-range correction lives
     in the consumer (pinned in tests)."""
     d = _d(duck)
-    div = "//" if duck else "div"
+    div = d["div"]
     M = HLL_HOST_M
-    host = ("split_part(url, '/', 3)" if duck
-            else "element_at(split(url, '/'), 3)")
-    blen = ("length(printf('%b', suffix))" if duck
-            else "length(bin(suffix))")
+    host = d["part"].format("url", "'/'", "3")
     rng = d["range_incl"].format("0", str(M - 1))
-    allb = (f"select unnest({rng}) as bucket" if duck
-            else f"select explode({rng}) as bucket")
-    regs_join = (
-        "md5(string_agg(cast(r as varchar), ',' order by bucket))" if duck
-        else "md5(array_join(transform(array_sort(collect_list("
-             "struct(bucket, r))), x -> cast(x.r as string)), ','))"
-    )
     return f"""
       with {_captures_cte(duck, docs)},
       hu as (
@@ -804,7 +750,7 @@ def hll_by_host_sql(duck: bool, docs: str = "documents") -> str:
       ),
       br as (
         select host, hv % {M} as bucket,
-               case when suffix = 0 then 29 else 29 - {blen} end as rho
+               case when suffix = 0 then 29 else 29 - {d['blen'].format('suffix')} end as rho
         from (select host, hv, hv {div} {M} as suffix from hu)
       ),
       regs as (
@@ -814,7 +760,7 @@ def hll_by_host_sql(duck: bool, docs: str = "documents") -> str:
       full_regs as (
         select h.host, a.bucket, coalesce(regs.r, 0) as r
         from hosts h
-        cross join ({allb}) a
+        cross join (select {d['explode']}({rng}) as bucket) a
         left join regs on regs.host = h.host and regs.bucket = a.bucket
       ),
       agg as (
@@ -822,7 +768,7 @@ def hll_by_host_sql(duck: bool, docs: str = "documents") -> str:
                sum({d['shl1'].format('(32 - r)')}) as den,
                sum(case when r = 0 then 1 else 0 end) as v0,
                sum(r) as register_sum,
-               {regs_join} as regs_md5
+               {d['regs_join']} as regs_md5
         from full_regs group by host
       ),
       exact as (
@@ -895,13 +841,11 @@ def robots_parse_sql(duck: bool, docs: str = "documents") -> str:
         'Disallow: /', {nl})"""
     # line explode with document-local positions (the positional-token
     # pattern used throughout textops)
-    ls = f"string_split(txt, {nl})" if duck else f"split(txt, {nl})"
-    n = "len(ls)" if duck else "size(ls)"
+    ls = d["split_on"].format("txt", nl)
+    n = f"{d['len']}(ls)"
     line_i = d["elem"].format("ls", "i")
     strpos = d["strpos"]
-    nocomment = d["elem"].format(
-        ("string_split(line, '#')" if duck else "split(line, '#')"), "1"
-    )
+    nocomment = d["elem"].format(d["split_on"].format("line", "'#'"), "1")
     return f"""
       with hostids as (
         select distinct
@@ -916,7 +860,7 @@ def robots_parse_sql(duck: bool, docs: str = "documents") -> str:
       ),
       robots as (select hid, host, {txt} as txt from hosts),
       rl as (
-        select host, ls, {("unnest" if duck else "explode")}(
+        select host, ls, {d['explode']}(
                  {d['range_incl'].format('1', n)}) as i
         from (select host, {ls} as ls from robots)
       ),
@@ -1045,9 +989,8 @@ def feed_parse_sql(duck: bool, docs: str = "documents") -> str:
 
     Scale: one hash agg per host to build, one map + explode to parse —
     feeds are per-host and |host|-bounded like robots and sitemaps."""
-    s = _d(duck)["str"]
     ts = "1709251200 + doc_id % 31536000"
-    host = HOST_EXPR_DUCK if duck else HOST_EXPR
+    host = _d(duck)["host"]
     fsel = f"({h32('host', duck)}) % 2"
     if duck:
         return f"""

@@ -52,6 +52,7 @@ from pyspark.sql.types import (
 
 from .corpus import pages_df
 from .job import map_rows, parse_extract
+from .textops import _d
 
 RECS_PER_FILE = 8
 
@@ -71,6 +72,26 @@ WARC_STATS_SCHEMA = StructType(
 )
 
 
+# (file_id, doc_id, rec): one WARC response record per page of the
+# ``__warc_pages`` view, as bytes
+_WARC_RECS_SQL = f"""
+      select cast(doc_id div {RECS_PER_FILE} as bigint) as file_id,
+             doc_id,
+             concat(
+               encode(concat(
+                 'WARC/1.0\\r\\n',
+                 'WARC-Type: response\\r\\n',
+                 'WARC-Target-URI: ', url, '\\r\\n',
+                 'WARC-Date: ',
+                 date_format(warc_ts, "yyyy-MM-dd'T'HH:mm:ss'Z'"), '\\r\\n',
+                 'Content-Length: ', cast(octet_length(html) as string),
+                 '\\r\\n\\r\\n'), 'UTF-8'),
+               html,
+               encode('\\r\\n\\r\\n', 'UTF-8')) as rec
+      from __warc_pages
+    """
+
+
 def warc_files_df(spark, sf_dir: str) -> DataFrame:
     """(file_id, warc): multi-record WARC file blobs built by pure SQL.
 
@@ -81,22 +102,7 @@ def warc_files_df(spark, sf_dir: str) -> DataFrame:
     pages_df(spark, sf_dir).createOrReplaceTempView("__warc_pages")
     return spark.sql(
         f"""
-      with recs as (
-        select cast(doc_id div {RECS_PER_FILE} as bigint) as file_id,
-               doc_id,
-               concat(
-                 encode(concat(
-                   'WARC/1.0\\r\\n',
-                   'WARC-Type: response\\r\\n',
-                   'WARC-Target-URI: ', url, '\\r\\n',
-                   'WARC-Date: ',
-                   date_format(warc_ts, "yyyy-MM-dd'T'HH:mm:ss'Z'"), '\\r\\n',
-                   'Content-Length: ', cast(octet_length(html) as string),
-                   '\\r\\n\\r\\n'), 'UTF-8'),
-                 html,
-                 encode('\\r\\n\\r\\n', 'UTF-8')) as rec
-        from __warc_pages
-      )
+      with recs as ({_WARC_RECS_SQL})
       select file_id,
              aggregate(
                transform(array_sort(collect_list(struct(doc_id, rec))),
@@ -214,24 +220,7 @@ def warc_gz_files_df(spark, sf_dir: str) -> DataFrame:
     member-wise in doc_id order (gzip has no SQL builtin; mtime=0 keeps
     the blobs deterministic).  One group = one output file = one row."""
     pages_df(spark, sf_dir).createOrReplaceTempView("__warc_pages")
-    recs = spark.sql(
-        f"""
-      select cast(doc_id div {RECS_PER_FILE} as bigint) as file_id,
-             doc_id,
-             concat(
-               encode(concat(
-                 'WARC/1.0\\r\\n',
-                 'WARC-Type: response\\r\\n',
-                 'WARC-Target-URI: ', url, '\\r\\n',
-                 'WARC-Date: ',
-                 date_format(warc_ts, "yyyy-MM-dd'T'HH:mm:ss'Z'"), '\\r\\n',
-                 'Content-Length: ', cast(octet_length(html) as string),
-                 '\\r\\n\\r\\n'), 'UTF-8'),
-               html,
-               encode('\\r\\n\\r\\n', 'UTF-8')) as rec
-      from __warc_pages
-    """
-    )
+    recs = spark.sql(_WARC_RECS_SQL)
 
     def _gz(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id")
@@ -864,7 +853,7 @@ def _cdxj_select(duck: bool) -> str:
     a valid url, so no JSON escaping can ever be needed).  Deviation from
     CC's production files, documented: digest is the corpus-pinned md5
     hex (CC ships base32 sha1) and status is the synthesized constant."""
-    s = "varchar" if duck else "string"
+    s = _d(duck)["str"]
     ts14 = (
         "strftime(make_timestamp(cast(c.ts_seconds as bigint) * 1000000),"
         " '%Y%m%d%H%M%S')"
