@@ -261,17 +261,14 @@ def _grey(palette: bytes, idx: int) -> int:
     return (299 * r + 587 * g + 114 * b) // 1000
 
 
-def decode_gif_pixels(blob: bytes):
-    """Decode the FIRST image frame of a GIF to a greyscale plane.
-
-    Returns ``(width, height, 1, pixel_bytes)`` (same shape as
-    ``pixelops.decode_png_pixels``).  Interlaced images (the 4-pass row
-    order) are de-interlaced; every malformed-framing case raises
-    ``ValueError``."""
+def _gif_screen(blob: bytes):
+    """Header and logical screen descriptor: ``(width, height, global
+    colour table, offset of the first block)``."""
     if blob[:6] not in (_SIG87, _SIG89):
         raise ValueError("not a GIF")
     if len(blob) < 13:
         raise ValueError("GIF truncated in logical screen descriptor")
+    w, h = struct.unpack("<HH", blob[6:10])
     flags = blob[10]
     pos = 13
     gct = b""
@@ -281,26 +278,42 @@ def decode_gif_pixels(blob: bytes):
         if len(gct) < n:
             raise ValueError("GIF truncated inside global colour table")
         pos += n
+    return w, h, gct, pos
+
+
+def _gif_blocks(blob: bytes, gct: bytes, pos: int, canvas=None):
+    """Walk the block stream from ``pos`` (``_gif_screen``) up to the
+    trailer, yielding ``("ext", label, data)`` per extension and
+    ``("img", width, height, grey_plane)`` per image, in stream order.
+    Each image's colour table, LZW data and interlace are decoded here,
+    lazily (a consumer that stops early decodes nothing more).  Malformed
+    framing raises ``ValueError``; with ``canvas=(w, h)``, an image whose
+    geometry is not the full canvas raises ``NotImplementedError`` before
+    any of its data is read."""
     while True:
         if pos >= len(blob):
             raise ValueError("GIF truncated before trailer")
         marker = blob[pos]
         pos += 1
         if marker == 0x3B:
-            raise ValueError("GIF has no image data")
+            return
         if marker == 0x21:                   # extension: label + sub-blocks
             if pos >= len(blob):
                 raise ValueError("GIF truncated inside extension")
-            pos += 1
-            _, pos = _read_sub_blocks(blob, pos)
+            label = blob[pos]
+            data, pos = _read_sub_blocks(blob, pos + 1)
+            yield "ext", label, data
             continue
         if marker != 0x2C:
             raise ValueError(f"unexpected GIF block 0x{marker:02x}")
         if pos + 9 > len(blob):
             raise ValueError("GIF truncated in image descriptor")
-        iw, ih = struct.unpack("<HH", blob[pos + 4:pos + 8])
+        ix, iy, iw, ih = struct.unpack("<HHHH", blob[pos:pos + 8])
         iflags = blob[pos + 8]
         pos += 9
+        if canvas is not None and (ix, iy, iw, ih) != (0, 0, *canvas):
+            raise NotImplementedError(
+                "sub-canvas GIF frame needs disposal compositing")
         palette = gct
         if iflags & 0x80:
             n = 3 * (2 << (iflags & 0x07))
@@ -327,7 +340,22 @@ def decode_gif_pixels(blob: bytes):
                 plane[row * iw:(row + 1) * iw] = indices[
                     seq * iw:(seq + 1) * iw]
             indices = bytes(plane)
-        return iw, ih, 1, bytes(_grey(palette, i) for i in indices)
+        yield "img", iw, ih, bytes(_grey(palette, i) for i in indices)
+
+
+def decode_gif_pixels(blob: bytes):
+    """Decode the FIRST image frame of a GIF to a greyscale plane.
+
+    Returns ``(width, height, 1, pixel_bytes)`` (same shape as
+    ``pixelops.decode_png_pixels``).  Interlaced images (the 4-pass row
+    order) are de-interlaced; every malformed-framing case raises
+    ``ValueError``."""
+    _, _, gct, pos = _gif_screen(blob)
+    for block in _gif_blocks(blob, gct, pos):
+        if block[0] == "img":
+            _, iw, ih, plane = block
+            return iw, ih, 1, plane
+    raise ValueError("GIF has no image data")
 
 
 # --- animation: multi-frame streams (GIF89a) ----------------------------------
@@ -382,80 +410,21 @@ def decode_gif_frames(blob: bytes):
     real and interlaced frames de-interlace.  Malformed framing raises
     ValueError; sub-canvas frames raise NotImplementedError (compositing
     is out of scope, silence is not)."""
-    if blob[:6] not in (_SIG87, _SIG89):
-        raise ValueError("not a GIF")
-    if len(blob) < 13:
-        raise ValueError("GIF truncated in logical screen descriptor")
-    w, h = struct.unpack("<HH", blob[6:10])
-    flags = blob[10]
-    pos = 13
-    gct = b""
-    if flags & 0x80:
-        n = 3 * (2 << (flags & 0x07))
-        gct = blob[pos:pos + n]
-        if len(gct) < n:
-            raise ValueError("GIF truncated inside global colour table")
-        pos += n
+    w, h, gct, pos = _gif_screen(blob)
     loop = None
     delay = 0
     frames = []
-    while True:
-        if pos >= len(blob):
-            raise ValueError("GIF truncated before trailer")
-        marker = blob[pos]
-        pos += 1
-        if marker == 0x3B:
-            break
-        if marker == 0x21:
-            if pos >= len(blob):
-                raise ValueError("GIF truncated inside extension")
-            label = blob[pos]
-            pos += 1
-            data, pos = _read_sub_blocks(blob, pos)
-            if label == 0xF9 and len(data) >= 4:
-                delay = struct.unpack("<H", data[1:3])[0]
-            elif label == 0xFF and data[:11] == b"NETSCAPE2.0" \
-                    and len(data) >= 14 and data[11] == 1:
-                loop = struct.unpack("<H", data[12:14])[0]
+    for block in _gif_blocks(blob, gct, pos, canvas=(w, h)):
+        if block[0] == "img":
+            frames.append((delay, block[3]))
+            delay = 0
             continue
-        if marker != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{marker:02x}")
-        if pos + 9 > len(blob):
-            raise ValueError("GIF truncated in image descriptor")
-        ix, iy, iw, ih = struct.unpack("<HHHH", blob[pos:pos + 8])
-        iflags = blob[pos + 8]
-        pos += 9
-        if (ix, iy, iw, ih) != (0, 0, w, h):
-            raise NotImplementedError(
-                "sub-canvas GIF frame needs disposal compositing")
-        palette = gct
-        if iflags & 0x80:
-            n = 3 * (2 << (iflags & 0x07))
-            palette = blob[pos:pos + n]
-            if len(palette) < n:
-                raise ValueError("GIF truncated inside local colour table")
-            pos += n
-        if not palette:
-            raise ValueError("GIF image has no colour table")
-        if pos >= len(blob):
-            raise ValueError("GIF truncated before LZW minimum code size")
-        min_code = blob[pos]
-        pos += 1
-        if not 2 <= min_code <= 8:
-            raise ValueError("GIF LZW minimum code size out of range")
-        data, pos = _read_sub_blocks(blob, pos)
-        indices, _ = _lzw_decode(data, min_code)
-        if len(indices) != iw * ih:
-            raise ValueError(
-                f"GIF LZW pixel count {len(indices)} != {iw}x{ih}")
-        if iflags & 0x40:
-            plane = bytearray(iw * ih)
-            for seq, row in enumerate(interlace_rows(ih)):
-                plane[row * iw:(row + 1) * iw] = indices[
-                    seq * iw:(seq + 1) * iw]
-            indices = bytes(plane)
-        frames.append((delay, bytes(_grey(palette, i) for i in indices)))
-        delay = 0
+        _, label, data = block
+        if label == 0xF9 and len(data) >= 4:
+            delay = struct.unpack("<H", data[1:3])[0]
+        elif label == 0xFF and data[:11] == b"NETSCAPE2.0" \
+                and len(data) >= 14 and data[11] == 1:
+            loop = struct.unpack("<H", data[12:14])[0]
     if not frames:
         raise ValueError("GIF has no image data")
     return w, h, loop if loop is not None else -1, frames

@@ -1123,6 +1123,11 @@ def decode_wav_pcm(blob: bytes):
             f"only 16-bit PCM WAV is decoded here (fmt={fmt_code}, "
             f"bits={bits})")
     count = frames * (channels or 1)
+    if data_off + 2 * count > len(blob):
+        # the frame count comes from the block align, which can claim
+        # fewer bytes per frame than channels x 16 bits
+        raise ValueError(
+            f"WAV data holds fewer than {count} 16-bit samples")
     samples = struct.unpack_from(f"<{count}h", blob, data_off)
     return rate, channels, samples
 

@@ -102,6 +102,15 @@ def _read_ifd_values(blob: bytes) -> dict[int, list[int]]:
     return out
 
 
+def _first(tags: dict[int, list[int]], tag: int, default: int) -> int:
+    """First value of an optional tag: ``default`` when absent,
+    ValueError when present but not an integer type."""
+    vals = tags.get(tag, [default])
+    if not vals:
+        raise ValueError(f"tag {tag} has no integer value")
+    return vals[0]
+
+
 def decode_tiff_pixels(blob: bytes):
     """(width, height, 1, greyscale bytes) from a baseline TIFF blob —
     luma-mapped, WhiteIsZero polarity normalized, strips reassembled in
@@ -122,7 +131,7 @@ def decode_tiff_pixels(blob: bytes):
     if w <= 0 or h <= 0:
         raise ValueError(f"bad dimensions {w}x{h}")
     photo = tags[262][0]
-    spp = tags.get(277, [1])[0]
+    spp = _first(tags, 277, 1)
     bits = tags.get(258, [1])
     if photo == 2:
         if spp != 3:
@@ -134,24 +143,28 @@ def decode_tiff_pixels(blob: bytes):
         raise NotImplementedError(f"photometric interpretation {photo}")
     if any(b != 8 for b in bits) or len(bits) not in (1, spp):
         raise NotImplementedError(f"bits per sample {bits}")
-    rps = tags.get(278, [h])[0] or h
+    rps = _first(tags, 278, h) or h
     rps = min(rps, h)
     n_strips = (h + rps - 1) // rps
     offs, cnts = tags[273], tags[279]
     if len(offs) != n_strips or len(cnts) != n_strips:
         raise ValueError(
             f"{len(offs)}/{len(cnts)} strips for {n_strips}-strip geometry")
-    out = bytearray(w * h)
-    row = 0
+    # every strip is checked against the blob before the plane is
+    # allocated, so the header's dimensions cannot ask for more memory
+    # than the strips the blob really holds
     for s in range(n_strips):
-        rows_here = min(rps, h - row)
-        want = rows_here * w * spp
+        want = min(rps, h - s * rps) * w * spp
         if cnts[s] != want:
             raise ValueError(
                 f"strip {s} byte count {cnts[s]} != uncompressed {want}")
         if offs[s] + want > len(blob):
             raise ValueError(f"truncated strip {s}")
-        data = blob[offs[s]:offs[s] + want]
+    out = bytearray(w * h)
+    row = 0
+    for s in range(n_strips):
+        rows_here = min(rps, h - row)
+        data = blob[offs[s]:offs[s] + rows_here * w * spp]
         if photo == 2:
             for i in range(rows_here * w):
                 r, g, b = data[3 * i:3 * i + 3]

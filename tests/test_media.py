@@ -581,6 +581,19 @@ def test_wav_pcm_decode_error_lanes():
         media.decode_wav_pcm(bytes(blob))
 
 
+def test_wav_block_align_below_sample_width_is_value_error():
+    """A block align smaller than 2 * channels makes the data chunk's
+    frame count claim more 16-bit samples than it holds."""
+    import pytest
+    import struct as _s
+
+    blob = bytearray(media.synth_wav_pcm(1))
+    fmt_off = blob.find(b"fmt ") + 8
+    blob[fmt_off + 12:fmt_off + 14] = _s.pack("<H", 1)
+    with pytest.raises(ValueError, match="16-bit samples"):
+        media.decode_wav_pcm(bytes(blob))
+
+
 # --- WHATWG MIME sniffing ------------------------------------------------------
 
 def test_sniff_mime_signatures():

@@ -277,3 +277,57 @@ def test_orient_corpus_collapses_all_eight_codes():
             # ignoring the tag keeps the transposed plane: different hash
             assert dhash_gray(sw, sh, stored) != dhash_gray(w, h, px), d
     assert seen == set(range(1, 9))
+
+
+def _set_entry(blob, tag, typ=None, value=None):
+    """Copy of a little-endian single-IFD TIFF with entry ``tag``'s type
+    and/or inline u32 value field replaced."""
+    ifd = struct.unpack_from("<I", blob, 4)[0]
+    out = bytearray(blob)
+    for i in range(struct.unpack_from("<H", blob, ifd)[0]):
+        e = ifd + 2 + 12 * i
+        if struct.unpack_from("<H", blob, e)[0] == tag:
+            if typ is not None:
+                struct.pack_into("<H", out, e + 2, typ)
+            if value is not None:
+                struct.pack_into("<I", out, e + 8, value)
+    return bytes(out)
+
+
+@pytest.mark.parametrize("tag", [277, 278])
+def test_non_integer_samples_or_rows_per_strip_is_value_error(tag):
+    # type 5 (RATIONAL) is present but unreadable as an integer
+    bad = _set_entry(encode_tiff(5, 4, _plane(5, 4)), tag, typ=5)
+    with pytest.raises(ValueError, match=f"tag {tag}"):
+        decode_tiff_pixels(bad)
+
+
+# decode one blob in a child process that caps its own address space; the
+# child prints the outcome's type name
+_CAPPED_CHILD = r"""
+import resource, sys
+resource.setrlimit(resource.RLIMIT_AS, (1 << 30, 1 << 30))
+from htmlgraft.tiffops import decode_tiff_pixels
+try:
+    decode_tiff_pixels(sys.stdin.buffer.read())
+    print("ok")
+except Exception as exc:
+    print(type(exc).__name__)
+"""
+
+
+def test_huge_width_is_rejected_before_the_plane_is_allocated():
+    """A small TIFF whose ImageWidth reads 3,959,422,979 would ask for a
+    ~16 GB plane; its one strip's byte count disagrees with that geometry,
+    which must be found before any allocation (the child runs under a
+    1 GiB address-space limit)."""
+    import pathlib
+    import subprocess
+    import sys
+
+    blob = _set_entry(encode_tiff(5, 4, _plane(5, 4)), 256, value=3_959_422_979)
+    assert len(blob) < 200
+    root = pathlib.Path(__file__).resolve().parents[1]
+    out = subprocess.run([sys.executable, "-c", _CAPPED_CHILD], input=blob,
+                         capture_output=True, cwd=root, timeout=120, check=True)
+    assert out.stdout.decode().strip() == "ValueError"
