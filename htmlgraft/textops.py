@@ -13,16 +13,16 @@ hash-comparable across engines.
 
 The dialect table (``SPARK`` / ``DUCK`` below, picked by ``_d(duck)``) is
 the one place a dialect spelling lives, for every query builder in the
-package: a builder writes ``d["div"]``, ``d["explode"]``,
-``d["len"]`` and so on, never ``"//" if duck else "div"``.  To add a
-spelling, give both tables the same key: a plain string, or a
+package: a builder writes ``d["div"]``, ``d["explode"]``, ``d["len"]``
+and so on, and never chooses between ``//`` and ``div`` itself.  To add
+a spelling, give both tables the same key: a plain string, or a
 ``str.format`` template whose positional fields mean the same in both
-(a dialect may ignore a field, as ``slice`` does).  A builder keeps an
-``if duck:`` fork only where the two plans differ in structure, not in
-spelling (``aggregate`` vs ``list_sum``, an ASOF join vs a window
+(a dialect may ignore a field, as ``slice`` does).  A builder keeps its
+own branch on ``duck`` only where the two plans differ in structure, not
+in spelling (``aggregate`` vs ``list_sum``, an ASOF join vs a window
 carry), or where a spelling occurs once and its two forms do not share
-a template.  ``tools/sql_digest.py --diff`` checks that such a move
-leaves every rendered query unchanged.
+a template.  ``tools/sql_digest.py --diff`` checks that moving a
+spelling into the table leaves every rendered query unchanged.
 
 Scale notes (100 TB / 10^12 docs):
 * shingle explode multiplies rows ~100x but stays narrow (doc_id, shingle)
