@@ -152,7 +152,8 @@ def decode_tiff_pixels(blob: bytes):
             f"{len(offs)}/{len(cnts)} strips for {n_strips}-strip geometry")
     # every strip is checked against the blob before the plane is
     # allocated, so the header's dimensions cannot ask for more memory
-    # than the strips the blob really holds
+    # than the blob holds (strips that overlap could still repeat its
+    # bytes: their total is capped at the blob's size too)
     for s in range(n_strips):
         want = min(rps, h - s * rps) * w * spp
         if cnts[s] != want:
@@ -160,6 +161,8 @@ def decode_tiff_pixels(blob: bytes):
                 f"strip {s} byte count {cnts[s]} != uncompressed {want}")
         if offs[s] + want > len(blob):
             raise ValueError(f"truncated strip {s}")
+    if sum(cnts) > len(blob):
+        raise ValueError(f"strips hold {sum(cnts)} bytes, the file {len(blob)}")
     out = bytearray(w * h)
     row = 0
     for s in range(n_strips):

@@ -331,3 +331,24 @@ def test_huge_width_is_rejected_before_the_plane_is_allocated():
     out = subprocess.run([sys.executable, "-c", _CAPPED_CHILD], input=blob,
                          capture_output=True, cwd=root, timeout=120, check=True)
     assert out.stdout.decode().strip() == "ValueError"
+
+
+def test_overlapping_strips_cannot_outgrow_the_file():
+    """Strips that all point at the same bytes pass every per-strip check;
+    their total must still fit in the file, or a 2 KB blob decodes to a
+    plane of 40 KB (and a 4 MB one to terabytes)."""
+    n = w = 200
+    data_off, offs_off = 8, 8 + w
+    cnts_off = offs_off + 4 * n
+    ifd_off = cnts_off + 4 * n
+    entries = [(256, 4, 1, w), (257, 4, 1, n), (258, 3, 1, 8), (259, 3, 1, 1),
+               (262, 3, 1, 1), (273, 4, n, offs_off), (277, 3, 1, 1),
+               (278, 4, 1, 1), (279, 4, n, cnts_off)]
+    blob = (b"II" + struct.pack("<HI", 42, ifd_off) + bytes(w)
+            + struct.pack(f"<{n}I", *[data_off] * n)
+            + struct.pack(f"<{n}I", *[w] * n)
+            + struct.pack("<H", len(entries))
+            + b"".join(struct.pack("<HHII", *e) for e in entries) + bytes(4))
+    assert len(blob) < n * w
+    with pytest.raises(ValueError, match="strips hold"):
+        decode_tiff_pixels(blob)
