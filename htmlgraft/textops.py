@@ -194,6 +194,30 @@ def kgrams_sql(duck: bool, k: int, head: str, alias: str, src: str,
             f" from {src} where {n} >= {k}")
 
 
+def positions_sql(duck: bool, k: int, alias: str, src: str) -> str:
+    """``select doc_id, ws, <i> as {alias} from {src}``: one row per start
+    position i = 1..len(ws)-k+1 of a word k-gram in the word array ``ws``
+    of ``src`` (k = 1: every word position)."""
+    d = _d(duck)
+    n = f"{d['len']}(ws)"
+    hi = f"{n} - {k - 1}" if k > 1 else n
+    return (f"select doc_id, ws, {d['explode']}({d['range_incl'].format('1', hi)})"
+            f" as {alias} from {src} where {n} >= {k}")
+
+
+def _postings_ctes(duck: bool, docs: str, words: str, name: str) -> str:
+    """``{words}``(doc_id, ws) and ``{name}``(doc_id, pos, tok): every word
+    of every doc with its 1-based position."""
+    d = _d(duck)
+    return f"""{words} as (select doc_id, {d["split"].format("text")} as ws from {docs}),
+      {name} as (
+        select doc_id, pos, {d['elem'].format('ws', 'pos')} as tok
+        from (
+          {positions_sql(duck, 1, "pos", words)}
+        )
+      )"""
+
+
 def shingles_cte(
     duck: bool, src: str = "ddocs", k: int = 3, prefix: str = ""
 ) -> str:
@@ -2118,18 +2142,15 @@ def positioned_spans_cte(
     for set-similarity), this keeps every occurrence and where it starts,
     which substring-level dedup needs to say WHICH bytes to cut."""
     d = _d(duck)
-    ws = d["split"].format("text")
-    n, un = f"{d['len']}(ws)", d["explode"]
     span = d["slice_join"].format("ws", "i", f"i + {k - 1}", k, "' '")
     w, sp = prefix + "pwords", prefix + "pspans"
     return f"""
-      {w} as (select doc_id, {ws} as ws from {src}),
+      {w} as (select doc_id, {d["split"].format("text")} as ws from {src}),
       {sp} as (
         select doc_id, pos, span from (
           select doc_id, i as pos, {span} as span
           from (
-            select doc_id, ws, {un}({d['range_incl'].format('1', f'{n} - {k - 1}')}) as i
-            from {w} where {n} >= {k}
+            {positions_sql(duck, k, "i", w)}
           )
         )
       )"""
@@ -3031,29 +3052,19 @@ def _bpe_dict0_cte(duck: bool, docs: str = "documents") -> str:
       )"""
 
 
-def _bpe_round_ctes(duck: bool, t: int) -> str:
-    """One merge round: pair counts over dict{t-1}, the best pair (count
-    desc, then lexicographic — a deterministic total order shared by both
-    engines' binary string collation), and dict{t} with the pair merged.
-
-    The merge is ``BPE_REPLACE_PASSES`` applications of non-overlapping
-    left-to-right replace on the space-padded symbol string.  For runs of
-    the same symbol longer than ~2^passes this deviates from single-scan
-    greedy BPE (documented surrogate); both engines share the exact
-    semantics, so the oracle is still a byte-level check."""
+def _bpe_best_ctes(duck: bool, t, src: str) -> str:
+    """Pair counts over the (word, wcount, repr) relation ``src`` and
+    ``best{t}``(l, r, c), the best pair (count desc, then lexicographic —
+    a deterministic total order shared by both engines' binary string
+    collation)."""
     d = _d(duck)
     sp = d["split"].format("pr")
     l_expr = d["elem"].format(f"({sp})", "1")
     r_expr = d["elem"].format(f"({sp})", "2")
-    pat = "' ' || b.l || ' ' || b.r || ' '"
-    rep = "' ' || b.l || b.r || ' '"
-    expr = "' ' || d.repr || ' '"
-    for _ in range(BPE_REPLACE_PASSES):
-        expr = f"replace({expr}, {pat}, {rep})"
     return f"""
       syms{t} as (
         select word, wcount, {d["split"].format("repr")} as ss
-        from dict{t - 1}
+        from {src}
       ),
       prs{t} as (
         {kgrams_sql(duck, 2, "wcount, ", "pr", f"syms{t}", "ss")}
@@ -3064,7 +3075,24 @@ def _bpe_round_ctes(duck: bool, t: int) -> str:
       ),
       best{t} as (
         select l, r, c from pairs{t} order by c desc, l asc, r asc limit 1
-      ),
+      )"""
+
+
+def _bpe_round_ctes(duck: bool, t: int) -> str:
+    """One merge round: ``_bpe_best_ctes`` over dict{t-1}, and dict{t}
+    with the best pair merged.
+
+    The merge is ``BPE_REPLACE_PASSES`` applications of non-overlapping
+    left-to-right replace on the space-padded symbol string.  For runs of
+    the same symbol longer than ~2^passes this deviates from single-scan
+    greedy BPE (documented surrogate); both engines share the exact
+    semantics, so the oracle is still a byte-level check."""
+    pat = "' ' || b.l || ' ' || b.r || ' '"
+    rep = "' ' || b.l || b.r || ' '"
+    expr = "' ' || d.repr || ' '"
+    for _ in range(BPE_REPLACE_PASSES):
+        expr = f"replace({expr}, {pat}, {rep})"
+    return f"""{_bpe_best_ctes(duck, t, f"dict{t - 1}")},
       dict{t} as (
         select d.word, d.wcount, trim({expr}) as repr
         from dict{t - 1} d cross join best{t} b
@@ -3123,21 +3151,7 @@ def bpe_vocab_sql(
 def _bpe_pairs_over(view: str) -> str:
     """Spark SQL: best (l, r, c) pair over the ``view`` dict relation —
     the same round body as ``_bpe_round_ctes`` but reading a bound view."""
-    d = _d(False)
-    sp = d["split"].format("pr")
-    l_expr = d["elem"].format(f"({sp})", "1")
-    r_expr = d["elem"].format(f"({sp})", "2")
-    return f"""
-      with syms as (
-        select wcount, {d["split"].format("repr")} as ss from {view}
-      ),
-      prs as (
-        {kgrams_sql(False, 2, "wcount, ", "pr", "syms", "ss")}
-      )
-      select {l_expr} as l, {r_expr} as r, sum(wcount) as c
-      from prs group by {l_expr}, {r_expr}
-      order by c desc, l asc, r asc limit 1
-    """
+    return f"with {_bpe_best_ctes(False, '', view)} select l, r, c from best"
 
 
 def _run_bpe_rounds(spark, sf_dir: str, merges: int):
@@ -3416,19 +3430,15 @@ def winnow_fingerprint_sql(duck: bool, docs: str = "documents") -> str:
     fingerprint relation is ~2/(W+1) of the token count and narrow —
     linear at 10^12 docs, never a global sort."""
     d = _d(duck)
-    ws = d["split"].format("text")
-    n, un = f"{d['len']}(ws)", d["explode"]
     k = WINNOW_K
     gram = d["slice_join"].format("ws", "i", f"i + {k - 1}", k, "' '")
     h = h32("gram", duck)
     return f"""
-      with wnw as (select doc_id, {ws} as ws from {docs}),
+      with wnw as (select doc_id, {d["split"].format("text")} as ws from {docs}),
       grams as (
         select doc_id, i as pos, {gram} as gram
         from (
-          select doc_id, ws,
-                 {un}({d['range_incl'].format('1', f'{n} - {k - 1}')}) as i
-          from wnw where {n} >= {k}
+          {positions_sql(duck, k, "i", "wnw")}
         )
       ),
       hashed as (
@@ -3727,7 +3737,7 @@ def cdc_chunk_sql(duck: bool, docs: str = "documents") -> str:
     one shuffle on doc_id, never a global sort."""
     d = _d(duck)
     ws = d["split"].format("text")
-    n, un = f"{d['len']}(ws)", d["explode"]
+    n = f"{d['len']}(ws)"
     gram = d["slice_join"].format("ws", "pos", f"pos + {CDC_K - 1}", CDC_K, "' '")
     if duck:
         reasm = "md5(string_agg(tok, ' ' order by pos))"
@@ -3744,9 +3754,7 @@ def cdc_chunk_sql(duck: bool, docs: str = "documents") -> str:
                case when pos > 1 and pos <= {n} - {CDC_K - 1}
                     then {gram} end as gram
         from (
-          select doc_id, ws,
-                 {un}({d['range_incl'].format('1', n)}) as pos
-          from cwords where {n} >= 1
+          {positions_sql(duck, 1, "pos", "cwords")}
         )
       ),
       flagged as (
@@ -3884,19 +3892,9 @@ def phrase_search_sql(
     relation (the shingles_ref/sh_ref/tf pattern) — the postings CTE feeds
     FOUR consumers and engines inline CTEs, so ``run_phrase_search``
     persists it once and renders this same template against it."""
-    d = _d(duck)
-    ws = d["split"].format("text")
-    n, un = f"{d['len']}(ws)", d["explode"]
     if postings_ref is None:
         p = "postings"
-        pre = f"""pwords as (select doc_id, {ws} as ws from {docs}),
-      postings as (
-        select doc_id, pos, {d['elem'].format('ws', 'pos')} as tok
-        from (
-          select doc_id, ws, {un}({d['range_incl'].format('1', n)}) as pos
-          from pwords where {n} >= 1
-        )
-      ),"""
+        pre = _postings_ctes(duck, docs, "pwords", "postings") + ","
     else:
         p = postings_ref
         pre = ""
@@ -3964,18 +3962,9 @@ def ngram_collocations_sql(duck: bool, docs: str = "documents") -> str:
     combined, one shuffle each); scoring joins the VOCABULARY-sized
     relations, not the corpus; top-k is a window over the scored-pair
     relation only.  Output is the top {COLLOC_TOPK} by lift."""
-    d = _d(duck)
-    ws = d["split"].format("text")
-    n, un, iv = f"{d['len']}(ws)", d["explode"], d["div"]
+    iv = _d(duck)["div"]
     return f"""
-      with cwords as (select doc_id, {ws} as ws from {docs}),
-      toks as (
-        select doc_id, pos, {d['elem'].format('ws', 'pos')} as tok
-        from (
-          select doc_id, ws, {un}({d['range_incl'].format('1', n)}) as pos
-          from cwords where {n} >= 1
-        )
-      ),
+      with {_postings_ctes(duck, docs, "cwords", "toks")},
       uni as (select tok, count(*) as c from toks group by tok),
       tot as (select count(*) - count(distinct doc_id) as total_pairs
               from toks),
