@@ -174,7 +174,7 @@ def duped_docs_cte(duck: bool, docs: str = "documents") -> str:
       )"""
 
 
-def kgrams_sql(duck: bool, k: int, head: str, alias: str, src: str,
+def _kgrams_sql(duck: bool, k: int, head: str, alias: str, src: str,
                ws: str = "ws") -> str:
     """``select {head}<k-gram> as {alias} from {src}`` over the word array
     ``ws`` of ``src``: one row per k-gram i = ws[i]..ws[i+k-1] for i in
@@ -194,7 +194,7 @@ def kgrams_sql(duck: bool, k: int, head: str, alias: str, src: str,
             f" from {src} where {n} >= {k}")
 
 
-def positions_sql(duck: bool, k: int, alias: str, src: str) -> str:
+def _positions_sql(duck: bool, k: int, alias: str, src: str) -> str:
     """``select doc_id, ws, <i> as {alias} from {src}``: one row per start
     position i = 1..len(ws)-k+1 of a word k-gram in the word array ``ws``
     of ``src`` (k = 1: every word position)."""
@@ -213,7 +213,7 @@ def _postings_ctes(duck: bool, docs: str, words: str, name: str) -> str:
       {name} as (
         select doc_id, pos, {d['elem'].format('ws', 'pos')} as tok
         from (
-          {positions_sql(duck, 1, "pos", words)}
+          {_positions_sql(duck, 1, "pos", words)}
         )
       )"""
 
@@ -221,14 +221,14 @@ def _postings_ctes(duck: bool, docs: str, words: str, name: str) -> str:
 def shingles_cte(
     duck: bool, src: str = "ddocs", k: int = 3, prefix: str = ""
 ) -> str:
-    """Distinct word k-gram shingles per doc (``kgrams_sql``).
+    """Distinct word k-gram shingles per doc (``_kgrams_sql``).
     ``prefix`` renames the emitted CTEs ({prefix}words / {prefix}shingles)
     so two shingle relations can coexist in one query."""
     w, sh = prefix + "words", prefix + "shingles"
     return f"""
       {w} as (select doc_id, {_d(duck)["split"].format("text")} as ws from {src}),
       {sh} as (
-        {kgrams_sql(duck, k, "distinct doc_id, ", "shingle", w)}
+        {_kgrams_sql(duck, k, "distinct doc_id, ", "shingle", w)}
       )"""
 
 
@@ -1565,7 +1565,7 @@ def bigrams_cte(duck: bool, src: str = "documents", prefix: str = "") -> str:
     return f"""
       {w} as (select doc_id, {_d(duck)["split"].format("text")} as ws from {src}),
       {b} as (
-        {kgrams_sql(duck, 2, "doc_id, ", "bg", w)}
+        {_kgrams_sql(duck, 2, "doc_id, ", "bg", w)}
       )"""
 
 
@@ -2150,7 +2150,7 @@ def positioned_spans_cte(
         select doc_id, pos, span from (
           select doc_id, i as pos, {span} as span
           from (
-            {positions_sql(duck, k, "i", w)}
+            {_positions_sql(duck, k, "i", w)}
           )
         )
       )"""
@@ -2655,7 +2655,7 @@ def kn_bigram_counts_sql(duck: bool, docs: str = "documents") -> str:
     split out so the Spark runner can persist it (Catalyst inlines CTEs;
     the ctx/cont/types/scoring consumers reference it four times)."""
     words = f"(select {_d(duck)['split'].format('text')} as ws from {docs}) words"
-    bigrams = kgrams_sql(duck, 2, "", "bg", words)
+    bigrams = _kgrams_sql(duck, 2, "", "bg", words)
     return f"""
         select {_bigram_word(duck, 1)} as w1, {_bigram_word(duck, 2)} as w2,
                cast(count(*) as bigint) as c
@@ -2852,7 +2852,7 @@ def kn_train_bcounts_sql(duck: bool, docs: str = "documents") -> str:
     kn_heldout, split out for the persist-once runner (four consumers)."""
     words = (f"(select {_d(duck)['split'].format('text')} as ws from {docs}"
              f" where doc_id % {KN_HELDOUT_MOD} <> 0) tr_words")
-    bg = kgrams_sql(duck, 2, "", "bg", words)
+    bg = _kgrams_sql(duck, 2, "", "bg", words)
     return f"""
         select bg, cast(count(*) as bigint) as c
         from ({bg}) tr_bigrams group by bg
@@ -2880,7 +2880,7 @@ def kn_heldout_sql(duck: bool, docs: str = "documents",
     test pins them (CLAUDE.md's no-idf-signal caveat)."""
     d = _d(duck)
     ws = d["split"].format("text")
-    ho_bg = kgrams_sql(duck, 2, "doc_id, ", "bg", "ho_words")
+    ho_bg = _kgrams_sql(duck, 2, "doc_id, ", "bg", "ho_words")
     w1, w2 = _bigram_word(duck, 1), _bigram_word(duck, 2)
     div = d["div"]
     D = KN_D_MILLI
@@ -3005,7 +3005,7 @@ def novelty_shingles_sql(duck: bool, docs: str = "documents") -> str:
     relation would silently never be substituted (measured: two full
     explodes in the plan)."""
     words = f"(select doc_id, {_d(duck)['split'].format('text')} as ws from {docs}) words"
-    return kgrams_sql(duck, NOVELTY_K, "distinct doc_id, ", "shingle", words)
+    return _kgrams_sql(duck, NOVELTY_K, "distinct doc_id, ", "shingle", words)
 
 
 def run_ngram_novelty(spark, sf_dir: str):
@@ -3067,7 +3067,7 @@ def _bpe_best_ctes(duck: bool, t, src: str) -> str:
         from {src}
       ),
       prs{t} as (
-        {kgrams_sql(duck, 2, "wcount, ", "pr", f"syms{t}", "ss")}
+        {_kgrams_sql(duck, 2, "wcount, ", "pr", f"syms{t}", "ss")}
       ),
       pairs{t} as (
         select {l_expr} as l, {r_expr} as r, sum(wcount) as c
@@ -3438,7 +3438,7 @@ def winnow_fingerprint_sql(duck: bool, docs: str = "documents") -> str:
       grams as (
         select doc_id, i as pos, {gram} as gram
         from (
-          {positions_sql(duck, k, "i", "wnw")}
+          {_positions_sql(duck, k, "i", "wnw")}
         )
       ),
       hashed as (
@@ -3754,7 +3754,7 @@ def cdc_chunk_sql(duck: bool, docs: str = "documents") -> str:
                case when pos > 1 and pos <= {n} - {CDC_K - 1}
                     then {gram} end as gram
         from (
-          {positions_sql(duck, 1, "pos", "cwords")}
+          {_positions_sql(duck, 1, "pos", "cwords")}
         )
       ),
       flagged as (

@@ -167,7 +167,7 @@ def decode_tiff_pixels(blob: bytes):
     row = 0
     for s in range(n_strips):
         rows_here = min(rps, h - row)
-        data = blob[offs[s]:offs[s] + rows_here * w * spp]
+        data = blob[offs[s]:offs[s] + cnts[s]]
         if photo == 2:
             for i in range(rows_here * w):
                 r, g, b = data[3 * i:3 * i + 3]
