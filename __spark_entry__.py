@@ -3,11 +3,13 @@
 ``entry(spark)`` runs the flagship parse+extract pipeline at sf0.001.
 ``queries()`` exposes every implemented operator (SURVEY.md §2B/§2C plus the
 training-data operators) as (spark, sf_dir) -> DataFrame; ``oracle_sql()``
-gives the DuckDB-checkable equivalent.  The HTML corpus itself is
-synthesized BY SQL from the ``documents`` table (htmlgraft/corpus.py), which
-is what makes even the mapInPandas parse+extract stage value-checkable: the
-oracle computes the expected extracted text relationally, the pipeline must
-reproduce it byte-for-byte through tokenize -> tree-build -> extract.
+gives the DuckDB-checkable equivalent; both read one ``_registry()`` row
+per query, so a query and its oracle are declared together.  The HTML
+corpus itself is synthesized BY SQL from the ``documents`` table
+(htmlgraft/corpus.py), which is what makes even the mapInPandas
+parse+extract stage value-checkable: the oracle computes the expected
+extracted text relationally, the pipeline must reproduce it byte-for-byte
+through tokenize -> tree-build -> extract.
 
 All non-string outputs are integers (or exact min/max doubles) so value
 hashes are stable across engines; every computed column is aliased
@@ -25,7 +27,10 @@ from htmlgraft import (
     pixelops, relops, simops, streaming, textops, urlops, warcops,
 )
 from htmlgraft.corpus import pages_df, pages_oracle_cte
-from htmlgraft.job import parse_extract, partition_metrics
+from htmlgraft.job import parse_extract
+
+_Runner = Callable[[SparkSession, str], DataFrame]
+_Oracle = Callable[[], str]  # renders one query's DuckDB oracle SQL
 
 
 def _results(spark: SparkSession, sf_dir: str, include_dom: bool = False) -> DataFrame:
@@ -449,8 +454,9 @@ def _corpus_build_oracle() -> str:
     """
 
 
-def _expected(select: str) -> str:
-    return pages_oracle_cte() + " " + select
+def _expected(select: str) -> _Oracle:
+    """Oracle builder: ``select`` over the expected-text CTEs."""
+    return lambda: pages_oracle_cte() + " " + select
 
 
 def _extract_ratio_oracle() -> str:
@@ -480,10 +486,8 @@ def _charset_oracle() -> str:
     )
 
 
-_PIPELINE_ORACLES = {
-    "extract_text": _expected("select url, text from expected"),
-    "extract_text_charsets": _charset_oracle(),
-    "wet_export": _expected(f""",
+def _wet_export_oracle() -> str:
+    return pages_oracle_cte() + f""" ,
       recs as (
         select url, cast(length(text) as bigint) as content_length,
                {_wet_record_expr(duck=True)} as wet_record
@@ -492,80 +496,21 @@ _PIPELINE_ORACLES = {
       select url, content_length,
              cast(length(wet_record) as bigint) as rec_chars,
              md5(wet_record) as wet_md5
-      from recs"""),
-    "extract_stats_by_lang": _expected(
-        """select lang, count(*) as n_docs,
-                  cast(sum(length(text)) as bigint) as text_chars,
-                  cast(max(length(text)) as bigint) as max_chars
-           from expected group by lang"""
-    ),
-    "extract_stats_by_host": _expected(
-        """select host, count(*) as n_docs,
-                  cast(sum(length(text)) as bigint) as text_chars
-           from expected group by host"""
-    ),
-    "extract_skew_topk": _expected(
-        """select url, cast(length(text) as bigint) as text_chars
-           from expected
-           order by text_chars desc, url limit 20"""
-    ),
-    "resume_antijoin": _expected(
-        "select url, lang from expected where doc_id % 2 = 1"
-    ),
-    "resume_antijoin_large": _expected(
-        "select url, lang from expected where doc_id % 2 = 1"
-    ),
-    "extract_reconcile": _expected("select url from expected where 1 = 0"),
-    "extract_spans": _expected(
-        """, spans as (
-             select e.url, d.clean, unnest(generate_series(1, d.r)) as i
-             from expected e join derived d on d.doc_id = e.doc_id
-           )
-           select url,
-                  cast(i - 1 as bigint) as span_idx,
-                  cast((i - 1) * (length(clean) + 1) as bigint) as char_start,
-                  cast((i - 1) * (length(clean) + 1) + length(clean)
-                       as bigint) as char_end,
-                  md5(clean) as span_md5
-           from spans"""
-    ),
-    "line_dedup": _expected(
-        """, lines as (
-             select url, unnest(string_split(text, chr(10))) as line
-             from expected
-           ),
-           agg as (
-             select line, count(distinct url) as n_docs, count(*) as n_total
-             from lines where line <> '' group by line
-           )
-           select md5(line) as line_md5,
-                  cast(n_docs as bigint) as n_docs,
-                  cast(n_total as bigint) as n_total
-           from agg where n_total > 1"""
-    ),
-}
+      from recs"""
 
 
 # --- operator registry --------------------------------------------------------
 
-def _textop(builder):
-    return lambda spark, sf_dir: textops.run(spark, sf_dir, builder)
+def _duck(builder) -> _Oracle:
+    """Oracle builder: the DuckDB rendering of a dialect builder."""
+    return lambda: builder(duck=True)
 
 
-def _simop(builder):
-    return lambda spark, sf_dir: simops.run(spark, sf_dir, builder)
-
-
-def _eventop(builder):
-    return lambda spark, sf_dir: eventops.run(spark, sf_dir, builder)
-
-
-def _relop(builder):
-    return lambda spark, sf_dir: relops.run(spark, sf_dir, builder)
-
-
-def _urlop(builder):
-    return lambda spark, sf_dir: urlops.run(spark, sf_dir, builder)
+def _sql(mod, builder) -> tuple[_Runner, _Oracle]:
+    """Row of a dialect builder: Spark runs it through ``mod.run`` over
+    that module's tables; the oracle is its DuckDB rendering."""
+    return (lambda spark, sf_dir: mod.run(spark, sf_dir, builder),
+            _duck(builder))
 
 
 # The driver's correctness gate checks a bounded per-round subset of this
@@ -637,359 +582,288 @@ _GATE_FIRST = [
 ]
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base = _queries_unordered()
-    ordered = {k: base[k] for k in _GATE_FIRST if k in base}
-    ordered.update((k, v) for k, v in base.items() if k not in ordered)
-    return ordered
-
-
-def _queries_unordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def _registry() -> dict[str, tuple[_Runner, _Oracle]]:
+    """Every query once, in registration order: name -> (Spark runner,
+    builder of its DuckDB oracle).  Nothing here renders SQL; the oracle
+    builders run only when ``oracle_sql()`` is called."""
+    text = _expected("select url, text from expected")
+    odd_docs = _expected("select url, lang from expected where doc_id % 2 = 1")
     return {
         # parse+extract pipeline (SURVEY.md §2A/§2C via mapInPandas, §2B relational)
-        "extract_text": _q_extract_text,
-        "extract_text_charsets": _q_extract_text_charsets,
-        "wet_export": _q_wet_export,
-        "extract_stats_by_lang": _q_extract_stats_by_lang,
-        "extract_stats_by_host": _q_extract_stats_by_host,
-        "extract_skew_topk": _q_extract_skew_topk,
-        "resume_antijoin": _q_resume_antijoin,
-        "resume_antijoin_large": _q_resume_antijoin_large,
-        "extract_reconcile": _q_extract_reconcile,
-        "extract_ratio": _q_extract_ratio,
-        "extract_spans": _q_extract_spans,
-        "corpus_build": _q_corpus_build,
+        "extract_text": (_q_extract_text, text),
+        "extract_text_charsets": (_q_extract_text_charsets, _charset_oracle),
+        "wet_export": (_q_wet_export, _wet_export_oracle),
+        "extract_stats_by_lang": (_q_extract_stats_by_lang, _expected(
+            """select lang, count(*) as n_docs,
+                  cast(sum(length(text)) as bigint) as text_chars,
+                  cast(max(length(text)) as bigint) as max_chars
+           from expected group by lang""")),
+        "extract_stats_by_host": (_q_extract_stats_by_host, _expected(
+            """select host, count(*) as n_docs,
+                  cast(sum(length(text)) as bigint) as text_chars
+           from expected group by host""")),
+        "extract_skew_topk": (_q_extract_skew_topk, _expected(
+            """select url, cast(length(text) as bigint) as text_chars
+           from expected
+           order by text_chars desc, url limit 20""")),
+        "resume_antijoin": (_q_resume_antijoin, odd_docs),
+        "resume_antijoin_large": (_q_resume_antijoin_large, odd_docs),
+        "extract_reconcile": (_q_extract_reconcile,
+                              _expected("select url from expected where 1 = 0")),
+        "extract_ratio": (_q_extract_ratio, _extract_ratio_oracle),
+        "extract_spans": (_q_extract_spans, _expected(
+            """, spans as (
+             select e.url, d.clean, unnest(generate_series(1, d.r)) as i
+             from expected e join derived d on d.doc_id = e.doc_id
+           )
+           select url,
+                  cast(i - 1 as bigint) as span_idx,
+                  cast((i - 1) * (length(clean) + 1) as bigint) as char_start,
+                  cast((i - 1) * (length(clean) + 1) + length(clean)
+                       as bigint) as char_end,
+                  md5(clean) as span_md5
+           from spans""")),
+        "corpus_build": (_q_corpus_build, _corpus_build_oracle),
         # streaming ingest (Structured Streaming file source, exactly-once
         # sink) — same parse UDF, value-checked against the batch oracle
-        "stream_extract_text": streaming.run_stream_extract_text,
+        "stream_extract_text": (streaming.run_stream_extract_text, text),
         # custom stateful streaming (applyInPandasWithState) under the
         # same value gate: final per-host state vs relational rollup
-        "stream_host_sessions": streaming.run_stream_host_sessions,
-        "stream_window_metrics": streaming.run_stream_window_metrics,
-        "stream_dedup": streaming.run_stream_dedup,
+        "stream_host_sessions": (streaming.run_stream_host_sessions,
+                                 streaming.stream_host_sessions_oracle_sql),
+        "stream_window_metrics": (streaming.run_stream_window_metrics,
+                                  streaming.stream_window_metrics_oracle_sql),
+        "stream_dedup": (streaming.run_stream_dedup,
+                         streaming.stream_dedup_oracle_sql),
         # WARC container ingestion (Common Crawl source format)
-        "warc_extract_text": warcops.run_warc_extract_text,
-        "warc_extract_text_gz": warcops.run_warc_extract_text_gz,
-        "warc_extract_text_http": warcops.run_warc_extract_text_http,
-        "warc_stats": warcops.run_warc_stats,
-        "warc_cdx": warcops.run_warc_cdx,
-        "wet_roundtrip": warcops.run_wet_roundtrip,
-        "wat_roundtrip": warcops.run_wat_roundtrip,
-        "jsonl_roundtrip": jsonlops.run_jsonl_roundtrip,
+        "warc_extract_text": (warcops.run_warc_extract_text, text),
+        "warc_extract_text_gz": (warcops.run_warc_extract_text_gz, text),
+        "warc_extract_text_http": (warcops.run_warc_extract_text_http, text),
+        "warc_stats": (warcops.run_warc_stats, warcops.warc_stats_oracle_sql),
+        "warc_cdx": (warcops.run_warc_cdx, warcops.warc_cdx_oracle_sql),
+        "wet_roundtrip": (warcops.run_wet_roundtrip, text),
+        "wat_roundtrip": (warcops.run_wat_roundtrip,
+                          linkops.wat_roundtrip_oracle_sql),
+        "jsonl_roundtrip": (jsonlops.run_jsonl_roundtrip,
+                            _duck(jsonlops.jsonl_rows_sql)),
         # structured extraction from the parsed DOM (links, metadata, graph)
-        "extract_links": linkops.run_extract_links,
-        "extract_metadata": linkops.run_extract_metadata,
-        "wat_export": linkops.run_wat_export,
-        "extract_tables": linkops.run_extract_tables,
-        "link_hostgraph": linkops.run_link_hostgraph,
-        "pagerank_hosts": linkops.run_pagerank_hosts,
-        "hits_hosts": linkops.run_hits_hosts,
-        "host_components": linkops.run_host_components,
-        "host_triangles": linkops.run_host_triangles,
-        "host_hyperball": linkops.run_host_hyperball,
-        "host_cocitation": linkops.run_host_cocitation,
-        "crawl_schedule": linkops.run_crawl_schedule,
-        "anchor_text": linkops.run_anchor_text,
-        "crawl_frontier": linkops.run_crawl_frontier,
-        "line_dedup": _q_line_dedup,
-        "line_scrub": _q_line_scrub,
-        "layout_cluster": _q_layout_cluster,
+        "extract_links": (linkops.run_extract_links, linkops.links_oracle_sql),
+        "extract_metadata": (linkops.run_extract_metadata,
+                             linkops.metadata_oracle_sql),
+        "wat_export": (linkops.run_wat_export, linkops.wat_oracle_sql),
+        "extract_tables": (linkops.run_extract_tables,
+                           linkops.tables_oracle_sql),
+        "link_hostgraph": (linkops.run_link_hostgraph,
+                           linkops.hostgraph_oracle_sql),
+        "pagerank_hosts": (linkops.run_pagerank_hosts,
+                           linkops.pagerank_oracle_sql),
+        "hits_hosts": (linkops.run_hits_hosts, linkops.hits_oracle_sql),
+        "host_components": (linkops.run_host_components,
+                            linkops.host_components_oracle_sql),
+        "host_triangles": (linkops.run_host_triangles,
+                           linkops.host_triangles_oracle_sql),
+        "host_hyperball": (linkops.run_host_hyperball,
+                           linkops.host_hyperball_oracle_sql),
+        "host_cocitation": (linkops.run_host_cocitation,
+                            linkops.host_cocitation_oracle_sql),
+        "crawl_schedule": (linkops.run_crawl_schedule,
+                           linkops.crawl_schedule_oracle_sql),
+        "anchor_text": (linkops.run_anchor_text, linkops.anchor_text_oracle_sql),
+        "crawl_frontier": (linkops.run_crawl_frontier,
+                           linkops.frontier_oracle_sql),
+        "line_dedup": (_q_line_dedup, _expected(
+            """, lines as (
+             select url, unnest(string_split(text, chr(10))) as line
+             from expected
+           ),
+           agg as (
+             select line, count(distinct url) as n_docs, count(*) as n_total
+             from lines where line <> '' group by line
+           )
+           select md5(line) as line_md5,
+                  cast(n_docs as bigint) as n_docs,
+                  cast(n_total as bigint) as n_total
+           from agg where n_total > 1""")),
+        "line_scrub": (_q_line_scrub, _line_scrub_oracle),
+        "layout_cluster": (_q_layout_cluster, _layout_cluster_oracle),
         # deduplication suite (documents table)
-        "dedup_exact": _textop(textops.dedup_exact_sql),
-        "dedup_ngram_jaccard": _textop(textops.ngram_jaccard_sql),
-        "dedup_minhash_lsh": textops.run_minhash_lsh,
-        "dedup_containment": textops.run_dedup_containment,
-        "dedup_simhash": _textop(textops.simhash_sql),
-        "dedup_simhash_idf": _textop(textops.simhash_idf_sql),
-        "dedup_simhash_neardup": textops.run_simhash_neardup,
-        "dedup_clusters": textops.run_dedup_clusters,
-        "dedup_incremental": textops.run_dedup_incremental,
-        "dedup_pipeline": textops.run_dedup_pipeline,
-        "dedup_recall": textops.run_dedup_recall,
-        "host_cap": _textop(textops.host_cap_sql),
+        "dedup_exact": _sql(textops, textops.dedup_exact_sql),
+        "dedup_ngram_jaccard": _sql(textops, textops.ngram_jaccard_sql),
+        "dedup_minhash_lsh": (textops.run_minhash_lsh,
+                              _duck(textops.minhash_lsh_sql)),
+        "dedup_containment": (textops.run_dedup_containment,
+                              _duck(textops.dedup_containment_sql)),
+        "dedup_simhash": _sql(textops, textops.simhash_sql),
+        "dedup_simhash_idf": _sql(textops, textops.simhash_idf_sql),
+        "dedup_simhash_neardup": (textops.run_simhash_neardup,
+                                  _duck(textops.simhash_neardup_sql)),
+        "dedup_clusters": (textops.run_dedup_clusters,
+                           _duck(textops.dedup_clusters_sql)),
+        "dedup_incremental": (textops.run_dedup_incremental,
+                              _duck(textops.dedup_incremental_sql)),
+        "dedup_pipeline": (textops.run_dedup_pipeline,
+                           _duck(textops.dedup_pipeline_sql)),
+        "dedup_recall": (textops.run_dedup_recall,
+                         _duck(textops.dedup_recall_sql)),
+        "host_cap": _sql(textops, textops.host_cap_sql),
         # text analysis
-        "url_canonicalize": _urlop(urlops.url_canonicalize_sql),
-        "url_surt": _urlop(urlops.url_surt_sql),
-        "warc_cdxj": warcops.run_warc_cdxj,
-        "dom_select": domops.run_dom_select,
-        "content_density": domops.run_content_density,
-        "dom_template": domops.run_dom_template,
-        "url_canon_dedup": _urlop(urlops.url_canon_dedup_sql),
-        "robots_filter": _urlop(urlops.robots_filter_sql),
-        "robots_parse": _urlop(urlops.robots_parse_sql),
-        "sitemap_parse": _urlop(urlops.sitemap_parse_sql),
-        "feed_parse": _urlop(urlops.feed_parse_sql),
-        "bloom_frontier": _urlop(urlops.bloom_frontier_sql),
-        "hll_card": _urlop(urlops.hll_card_sql),
-        "cms_freq": _textop(textops.cms_freq_sql),
-        "hist_quantiles": _textop(textops.hist_quantiles_sql),
-        "heavy_hitters": _textop(textops.heavy_hitters_sql),
-        "latest_snapshot": _urlop(urlops.latest_snapshot_sql),
-        "recrawl_delta": _urlop(urlops.recrawl_delta_sql),
-        "warc_revisit": _urlop(urlops.warc_revisit_sql),
-        "robots_optout": _urlop(urlops.robots_optout_sql),
-        "hll_by_host": _urlop(urlops.hll_by_host_sql),
-        "domain_stats": _urlop(urlops.domain_stats_sql),
-        "filter_funnel": _textop(textops.filter_funnel_sql),
-        "dataset_split": _textop(textops.dataset_split_sql),
-        "lang_id": _textop(textops.lang_id_sql),
-        "quality_score": _textop(textops.quality_sql),
-        "token_count": _textop(textops.token_count_sql),
-        "fingerprint": _textop(textops.fingerprint_sql),
-        "winnow_fingerprint": _textop(textops.winnow_fingerprint_sql),
-        "keyword_extract": _textop(textops.keyword_extract_sql),
-        "stratified_sample": _textop(textops.stratified_sample_sql),
-        "script_mix": _textop(textops.script_mix_sql),
-        "sample_priority": _textop(textops.sample_priority_sql),
-        "decontaminate": _textop(textops.decontaminate_sql),
-        "lm_score": _textop(textops.lm_score_sql),
-        "ppl_bucket": textops.run_ppl_bucket,
-        "repetition_stats": _textop(textops.repetition_stats_sql),
-        "text_normalize": _textop(textops.text_normalize_sql),
-        "shard_pack": _textop(textops.shard_pack_sql),
-        "badwords_filter": _textop(textops.badwords_filter_sql),
-        "pii_scrub": _textop(textops.pii_scrub_sql),
-        "corpus_filter": _textop(textops.corpus_filter_sql),
-        "gopher_filter": _textop(textops.gopher_filter_sql),
-        "source_mix": _textop(textops.source_mix_sql),
-        "source_temperature": textops.run_source_temperature,
-        "kn_ngram": textops.run_kn_ngram,
-        "kn_heldout_score": textops.run_kn_heldout,
-        "dsir_weights": textops.run_dsir_weights,
-        "ngram_novelty": textops.run_ngram_novelty,
-        "substring_dedup": _textop(textops.substring_dedup_sql),
-        "seq_pack": _textop(textops.seq_pack_sql),
-        "epoch_shuffle": _textop(textops.epoch_shuffle_sql),
-        "passage_chunk": _textop(textops.passage_chunk_sql),
-        "quality_classify": textops.run_quality_classify,
-        "dataset_card": _textop(textops.dataset_card_sql),
-        "vocab_induct": _textop(textops.vocab_induct_sql),
-        "bpe_train": textops.run_bpe_train,
-        "bpe_vocab": textops.run_bpe_vocab,
-        "bpe_encode": textops.run_bpe_encode,
-        "bpe_roundtrip": textops.run_bpe_roundtrip,
-        "hash_embed": textops.run_hash_embed,
-        "inverted_index": _textop(textops.inverted_index_sql),
-        "bm25_search": textops.run_bm25_search,
-        "cdc_chunk": _textop(textops.cdc_chunk_sql),
-        "phrase_search": textops.run_phrase_search,
-        "ngram_collocations": _textop(textops.ngram_collocations_sql),
-        "dedup_band_audit": _textop(textops.dedup_band_audit_sql),
+        "url_canonicalize": _sql(urlops, urlops.url_canonicalize_sql),
+        "url_surt": _sql(urlops, urlops.url_surt_sql),
+        "warc_cdxj": (warcops.run_warc_cdxj, warcops.warc_cdxj_oracle_sql),
+        "dom_select": (domops.run_dom_select, domops.dom_select_oracle_sql),
+        "content_density": (domops.run_content_density,
+                            domops.content_density_oracle_sql),
+        "dom_template": (domops.run_dom_template,
+                         domops.dom_template_oracle_sql),
+        "url_canon_dedup": _sql(urlops, urlops.url_canon_dedup_sql),
+        "robots_filter": _sql(urlops, urlops.robots_filter_sql),
+        "robots_parse": _sql(urlops, urlops.robots_parse_sql),
+        "sitemap_parse": _sql(urlops, urlops.sitemap_parse_sql),
+        "feed_parse": _sql(urlops, urlops.feed_parse_sql),
+        "bloom_frontier": _sql(urlops, urlops.bloom_frontier_sql),
+        "hll_card": _sql(urlops, urlops.hll_card_sql),
+        "cms_freq": _sql(textops, textops.cms_freq_sql),
+        "hist_quantiles": _sql(textops, textops.hist_quantiles_sql),
+        "heavy_hitters": _sql(textops, textops.heavy_hitters_sql),
+        "latest_snapshot": _sql(urlops, urlops.latest_snapshot_sql),
+        "recrawl_delta": _sql(urlops, urlops.recrawl_delta_sql),
+        "warc_revisit": _sql(urlops, urlops.warc_revisit_sql),
+        "robots_optout": _sql(urlops, urlops.robots_optout_sql),
+        "hll_by_host": _sql(urlops, urlops.hll_by_host_sql),
+        "domain_stats": _sql(urlops, urlops.domain_stats_sql),
+        "filter_funnel": _sql(textops, textops.filter_funnel_sql),
+        "dataset_split": _sql(textops, textops.dataset_split_sql),
+        "lang_id": _sql(textops, textops.lang_id_sql),
+        "quality_score": _sql(textops, textops.quality_sql),
+        "token_count": _sql(textops, textops.token_count_sql),
+        "fingerprint": _sql(textops, textops.fingerprint_sql),
+        "winnow_fingerprint": _sql(textops, textops.winnow_fingerprint_sql),
+        "keyword_extract": _sql(textops, textops.keyword_extract_sql),
+        "stratified_sample": _sql(textops, textops.stratified_sample_sql),
+        "script_mix": _sql(textops, textops.script_mix_sql),
+        "sample_priority": _sql(textops, textops.sample_priority_sql),
+        "decontaminate": _sql(textops, textops.decontaminate_sql),
+        "lm_score": _sql(textops, textops.lm_score_sql),
+        "ppl_bucket": (textops.run_ppl_bucket, _duck(textops.ppl_bucket_sql)),
+        "repetition_stats": _sql(textops, textops.repetition_stats_sql),
+        "text_normalize": _sql(textops, textops.text_normalize_sql),
+        "shard_pack": _sql(textops, textops.shard_pack_sql),
+        "badwords_filter": _sql(textops, textops.badwords_filter_sql),
+        "pii_scrub": _sql(textops, textops.pii_scrub_sql),
+        "corpus_filter": _sql(textops, textops.corpus_filter_sql),
+        "gopher_filter": _sql(textops, textops.gopher_filter_sql),
+        "source_mix": _sql(textops, textops.source_mix_sql),
+        "source_temperature": (textops.run_source_temperature,
+                               _duck(textops.source_temperature_sql)),
+        "kn_ngram": (textops.run_kn_ngram, _duck(textops.kn_ngram_sql)),
+        "kn_heldout_score": (textops.run_kn_heldout,
+                             _duck(textops.kn_heldout_sql)),
+        "dsir_weights": (textops.run_dsir_weights,
+                         _duck(textops.dsir_weights_sql)),
+        "ngram_novelty": (textops.run_ngram_novelty,
+                          _duck(textops.ngram_novelty_sql)),
+        "substring_dedup": _sql(textops, textops.substring_dedup_sql),
+        "seq_pack": _sql(textops, textops.seq_pack_sql),
+        "epoch_shuffle": _sql(textops, textops.epoch_shuffle_sql),
+        "passage_chunk": _sql(textops, textops.passage_chunk_sql),
+        "quality_classify": (textops.run_quality_classify,
+                             _duck(textops.quality_classify_sql)),
+        "dataset_card": _sql(textops, textops.dataset_card_sql),
+        "vocab_induct": _sql(textops, textops.vocab_induct_sql),
+        "bpe_train": (textops.run_bpe_train, _duck(textops.bpe_train_sql)),
+        "bpe_vocab": (textops.run_bpe_vocab, _duck(textops.bpe_vocab_sql)),
+        "bpe_encode": (textops.run_bpe_encode, _duck(textops.bpe_encode_sql)),
+        "bpe_roundtrip": (textops.run_bpe_roundtrip,
+                          _duck(textops.bpe_roundtrip_sql)),
+        "hash_embed": (textops.run_hash_embed, _duck(textops.hash_embed_sql)),
+        "inverted_index": _sql(textops, textops.inverted_index_sql),
+        "bm25_search": (textops.run_bm25_search,
+                        _duck(textops.bm25_search_sql)),
+        "cdc_chunk": _sql(textops, textops.cdc_chunk_sql),
+        "phrase_search": (textops.run_phrase_search,
+                          _duck(textops.phrase_search_sql)),
+        "ngram_collocations": _sql(textops, textops.ngram_collocations_sql),
+        "dedup_band_audit": _sql(textops, textops.dedup_band_audit_sql),
         # similarity search (embeddings table)
-        "ann_brute_topk": _simop(simops.ann_topk_sql),
-        "ann_lsh_buckets": _simop(simops.lsh_buckets_sql),
-        "ann_lsh_topk": _simop(simops.ann_lsh_topk_sql),
-        "embedding_neardup": _simop(simops.embedding_neardup_sql),
-        "semdedup": _simop(simops.semdedup_sql),
-        "ann_ivf_assign": _simop(simops.ivf_assign_sql),
-        "kmeans_assign": clusterops.run_kmeans_assign,
-        "kmeans_centroids": clusterops.run_kmeans_centroids,
-        "ann_ivf_topk": _simop(simops.ivf_topk_sql),
-        "ann_pq_codes": _simop(simops.pq_codes_sql),
-        "ann_pq_topk": _simop(simops.pq_topk_sql),
-        "ann_multilsh_topk": _simop(simops.ann_multilsh_topk_sql),
-        "ann_recall": _simop(simops.ann_recall_sql),
+        "ann_brute_topk": _sql(simops, simops.ann_topk_sql),
+        "ann_lsh_buckets": _sql(simops, simops.lsh_buckets_sql),
+        "ann_lsh_topk": _sql(simops, simops.ann_lsh_topk_sql),
+        "embedding_neardup": _sql(simops, simops.embedding_neardup_sql),
+        "semdedup": _sql(simops, simops.semdedup_sql),
+        "ann_ivf_assign": _sql(simops, simops.ivf_assign_sql),
+        "kmeans_assign": (clusterops.run_kmeans_assign,
+                          _duck(clusterops.kmeans_assign_sql)),
+        "kmeans_centroids": (clusterops.run_kmeans_centroids,
+                             _duck(clusterops.kmeans_centroids_sql)),
+        "ann_ivf_topk": _sql(simops, simops.ivf_topk_sql),
+        "ann_pq_codes": _sql(simops, simops.pq_codes_sql),
+        "ann_pq_topk": _sql(simops, simops.pq_topk_sql),
+        "ann_multilsh_topk": _sql(simops, simops.ann_multilsh_topk_sql),
+        "ann_recall": _sql(simops, simops.ann_recall_sql),
         # events: windowed rollups / sessionization / top-k
-        "events_hourly": _eventop(eventops.events_hourly_sql),
-        "events_sessionize": _eventop(eventops.sessionize_sql),
-        "events_top_users": _eventop(eventops.top_users_sql),
-        "events_asof": _eventop(eventops.asof_join_sql),
-        "events_range_join": _eventop(eventops.range_join_sql),
-        "events_funnel": _eventop(eventops.funnel_sql),
+        "events_hourly": _sql(eventops, eventops.events_hourly_sql),
+        "events_sessionize": _sql(eventops, eventops.sessionize_sql),
+        "events_top_users": _sql(eventops, eventops.top_users_sql),
+        "events_asof": _sql(eventops, eventops.asof_join_sql),
+        "events_range_join": _sql(eventops, eventops.range_join_sql),
+        "events_funnel": _sql(eventops, eventops.funnel_sql),
         # multimodal plumbing (binary column -> mapInPandas feature extract)
-        "media_features": media.media_features,
-        "media_webp": media.media_webp,
-        "mime_sniff": media.mime_sniff,
-        "media_resize": media.media_resize,
-        "media_exif_scrub": media.media_exif_scrub,
-        "media_frame_sample": media.media_frame_sample,
-        "pixel_phash": pixelops.pixel_phash,
-        "pixel_resize": pixelops.pixel_resize,
-        "pixel_phash_jpeg": pixelops.pixel_phash_jpeg,
-        "pixel_resize_jpeg": pixelops.pixel_resize_jpeg,
-        "pixel_decode_audit": pixelops.pixel_decode_audit,
-        "pixel_neardup": pixelops.pixel_neardup,
-        "pixel_phash_bmp": pixelops.pixel_phash_bmp,
-        "pixel_phash_tiff": pixelops.pixel_phash_tiff,
-        "pixel_orient": pixelops.pixel_orient,
-        "pixel_gif_anim": pixelops.pixel_gif_anim,
-        "pixel_ico": pixelops.pixel_ico,
-        "pixel_apng": pixelops.pixel_apng,
-        "pixel_phash_gif": pixelops.pixel_phash_gif,
-        "pixel_phash_prog": pixelops.pixel_phash_prog,
-        "audio_pcm_features": media.audio_pcm_features,
-        "charset_sniff": _textop(media.charset_sniff_sql),
+        "media_features": (media.media_features,
+                           media.media_features_oracle_sql),
+        "media_webp": (media.media_webp, media.media_webp_oracle_sql),
+        "mime_sniff": (media.mime_sniff, media.mime_sniff_oracle_sql),
+        "media_resize": (media.media_resize, media.media_resize_oracle_sql),
+        "media_exif_scrub": (media.media_exif_scrub,
+                             media.media_exif_scrub_oracle_sql),
+        "media_frame_sample": (media.media_frame_sample,
+                               media.media_frame_sample_oracle_sql),
+        "pixel_phash": (pixelops.pixel_phash, pixelops.pixel_phash_oracle_sql),
+        "pixel_resize": (pixelops.pixel_resize,
+                         pixelops.pixel_resize_oracle_sql),
+        "pixel_phash_jpeg": (pixelops.pixel_phash_jpeg,
+                             pixelops.pixel_phash_jpeg_oracle_sql),
+        "pixel_resize_jpeg": (pixelops.pixel_resize_jpeg,
+                              pixelops.pixel_resize_jpeg_oracle_sql),
+        "pixel_decode_audit": (pixelops.pixel_decode_audit,
+                               pixelops.pixel_decode_audit_oracle_sql),
+        "pixel_neardup": (pixelops.pixel_neardup,
+                          pixelops.pixel_neardup_oracle_sql),
+        "pixel_phash_bmp": (pixelops.pixel_phash_bmp,
+                            pixelops.pixel_phash_bmp_oracle_sql),
+        "pixel_phash_tiff": (pixelops.pixel_phash_tiff,
+                             pixelops.pixel_phash_tiff_oracle_sql),
+        "pixel_orient": (pixelops.pixel_orient,
+                         pixelops.pixel_orient_oracle_sql),
+        "pixel_gif_anim": (pixelops.pixel_gif_anim,
+                           pixelops.pixel_gif_anim_oracle_sql),
+        "pixel_ico": (pixelops.pixel_ico, pixelops.pixel_ico_oracle_sql),
+        "pixel_apng": (pixelops.pixel_apng, pixelops.pixel_apng_oracle_sql),
+        "pixel_phash_gif": (pixelops.pixel_phash_gif,
+                            pixelops.pixel_phash_gif_oracle_sql),
+        "pixel_phash_prog": (pixelops.pixel_phash_prog,
+                             pixelops.pixel_phash_prog_oracle_sql),
+        "audio_pcm_features": (media.audio_pcm_features,
+                               media.audio_pcm_features_oracle_sql),
+        "charset_sniff": _sql(textops, media.charset_sniff_sql),
         # PDF layout parse (binary column -> content-stream text extraction)
-        "pdf_extract_text": pdfops.pdf_extract_text,
+        "pdf_extract_text": (pdfops.pdf_extract_text,
+                             pdfops.pdf_extract_oracle_sql),
         # relational warehouse queries (broadcast joins, rollup, top-k)
-        "tpch_pricing_summary": _relop(relops.pricing_summary_sql),
-        "tpch_segment_stats": _relop(relops.segment_stats_sql),
-        "tpch_region_rollup": _relop(relops.region_rollup_sql),
-        "tpch_top_parts": _relop(relops.top_parts_sql),
-        "events_rollup": _relop(relops.events_rollup_sql),
+        "tpch_pricing_summary": _sql(relops, relops.pricing_summary_sql),
+        "tpch_segment_stats": _sql(relops, relops.segment_stats_sql),
+        "tpch_region_rollup": _sql(relops, relops.region_rollup_sql),
+        "tpch_top_parts": _sql(relops, relops.top_parts_sql),
+        "events_rollup": _sql(relops, relops.events_rollup_sql),
     }
 
 
+def queries() -> dict[str, _Runner]:
+    """Runners: the ``_GATE_FIRST`` names first, then registration order."""
+    reg = _registry()
+    names = [k for k in _GATE_FIRST if k in reg]
+    names += [k for k in reg if k not in names]
+    return {k: reg[k][0] for k in names}
+
+
 def oracle_sql() -> dict[str, str]:
-    out = dict(_PIPELINE_ORACLES)
-    out.update(
-        {
-            "warc_extract_text": _expected("select url, text from expected"),
-            "warc_extract_text_gz": _expected("select url, text from expected"),
-            "warc_extract_text_http": _expected("select url, text from expected"),
-            "wet_roundtrip": _expected("select url, text from expected"),
-            "stream_extract_text": _expected("select url, text from expected"),
-            "stream_host_sessions": streaming.stream_host_sessions_oracle_sql(),
-            "stream_window_metrics": streaming.stream_window_metrics_oracle_sql(),
-            "stream_dedup": streaming.stream_dedup_oracle_sql(),
-            "corpus_build": _corpus_build_oracle(),
-            "line_scrub": _line_scrub_oracle(),
-            "layout_cluster": _layout_cluster_oracle(),
-            "inverted_index": textops.inverted_index_sql(duck=True),
-            "bm25_search": textops.bm25_search_sql(duck=True),
-            "cdc_chunk": textops.cdc_chunk_sql(duck=True),
-            "phrase_search": textops.phrase_search_sql(duck=True),
-            "ngram_collocations": textops.ngram_collocations_sql(duck=True),
-            "dedup_band_audit": textops.dedup_band_audit_sql(duck=True),
-            "extract_ratio": _extract_ratio_oracle(),
-            "warc_stats": warcops.warc_stats_oracle_sql(),
-            "warc_cdx": warcops.warc_cdx_oracle_sql(),
-            "dedup_exact": textops.dedup_exact_sql(duck=True),
-            "dedup_ngram_jaccard": textops.ngram_jaccard_sql(duck=True),
-            "dedup_minhash_lsh": textops.minhash_lsh_sql(duck=True),
-            "dedup_containment": textops.dedup_containment_sql(duck=True),
-            "dedup_simhash": textops.simhash_sql(duck=True),
-            "dedup_simhash_idf": textops.simhash_idf_sql(duck=True),
-            "dedup_simhash_neardup": textops.simhash_neardup_sql(duck=True),
-            "dedup_clusters": textops.dedup_clusters_sql(duck=True),
-            "dedup_pipeline": textops.dedup_pipeline_sql(duck=True),
-            "dedup_recall": textops.dedup_recall_sql(duck=True),
-            "host_cap": textops.host_cap_sql(duck=True),
-            "url_canonicalize": urlops.url_canonicalize_sql(duck=True),
-            "url_surt": urlops.url_surt_sql(duck=True),
-            "warc_cdxj": warcops.warc_cdxj_oracle_sql(),
-            "dom_select": domops.dom_select_oracle_sql(),
-            "content_density": domops.content_density_oracle_sql(),
-            "dom_template": domops.dom_template_oracle_sql(),
-            "url_canon_dedup": urlops.url_canon_dedup_sql(duck=True),
-            "robots_filter": urlops.robots_filter_sql(duck=True),
-            "robots_parse": urlops.robots_parse_sql(duck=True),
-            "sitemap_parse": urlops.sitemap_parse_sql(duck=True),
-            "feed_parse": urlops.feed_parse_sql(duck=True),
-            "jsonl_roundtrip": jsonlops.jsonl_rows_sql(duck=True),
-            "bloom_frontier": urlops.bloom_frontier_sql(duck=True),
-            "hll_card": urlops.hll_card_sql(duck=True),
-            "cms_freq": textops.cms_freq_sql(duck=True),
-            "hist_quantiles": textops.hist_quantiles_sql(duck=True),
-            "heavy_hitters": textops.heavy_hitters_sql(duck=True),
-            "lang_id": textops.lang_id_sql(duck=True),
-            "dataset_split": textops.dataset_split_sql(duck=True),
-            "quality_score": textops.quality_sql(duck=True),
-            "token_count": textops.token_count_sql(duck=True),
-            "fingerprint": textops.fingerprint_sql(duck=True),
-            "winnow_fingerprint": textops.winnow_fingerprint_sql(duck=True),
-            "keyword_extract": textops.keyword_extract_sql(duck=True),
-            "stratified_sample": textops.stratified_sample_sql(duck=True),
-            "script_mix": textops.script_mix_sql(duck=True),
-            "sample_priority": textops.sample_priority_sql(duck=True),
-            "decontaminate": textops.decontaminate_sql(duck=True),
-            "lm_score": textops.lm_score_sql(duck=True),
-            "ppl_bucket": textops.ppl_bucket_sql(duck=True),
-            "text_normalize": textops.text_normalize_sql(duck=True),
-            "shard_pack": textops.shard_pack_sql(duck=True),
-            "repetition_stats": textops.repetition_stats_sql(duck=True),
-            "badwords_filter": textops.badwords_filter_sql(duck=True),
-            "pii_scrub": textops.pii_scrub_sql(duck=True),
-            "corpus_filter": textops.corpus_filter_sql(duck=True),
-            "gopher_filter": textops.gopher_filter_sql(duck=True),
-            "latest_snapshot": urlops.latest_snapshot_sql(duck=True),
-            "recrawl_delta": urlops.recrawl_delta_sql(duck=True),
-            "warc_revisit": urlops.warc_revisit_sql(duck=True),
-            "robots_optout": urlops.robots_optout_sql(duck=True),
-            "hll_by_host": urlops.hll_by_host_sql(duck=True),
-            "domain_stats": urlops.domain_stats_sql(duck=True),
-            "filter_funnel": textops.filter_funnel_sql(duck=True),
-            "charset_sniff": media.charset_sniff_sql(duck=True),
-            "crawl_frontier": linkops.frontier_oracle_sql(),
-            "dedup_incremental": textops.dedup_incremental_sql(duck=True),
-            "source_mix": textops.source_mix_sql(duck=True),
-            "source_temperature": textops.source_temperature_sql(duck=True),
-            "kn_ngram": textops.kn_ngram_sql(duck=True),
-            "kn_heldout_score": textops.kn_heldout_sql(duck=True),
-            "dsir_weights": textops.dsir_weights_sql(duck=True),
-            "ngram_novelty": textops.ngram_novelty_sql(duck=True),
-            "substring_dedup": textops.substring_dedup_sql(duck=True),
-            "seq_pack": textops.seq_pack_sql(duck=True),
-            "epoch_shuffle": textops.epoch_shuffle_sql(duck=True),
-            "passage_chunk": textops.passage_chunk_sql(duck=True),
-            "quality_classify": textops.quality_classify_sql(duck=True),
-            "dataset_card": textops.dataset_card_sql(duck=True),
-            "vocab_induct": textops.vocab_induct_sql(duck=True),
-            "bpe_train": textops.bpe_train_sql(duck=True),
-            "bpe_vocab": textops.bpe_vocab_sql(duck=True),
-            "bpe_encode": textops.bpe_encode_sql(duck=True),
-            "bpe_roundtrip": textops.bpe_roundtrip_sql(duck=True),
-            "hash_embed": textops.hash_embed_sql(duck=True),
-            "extract_links": linkops.links_oracle_sql(),
-            "extract_tables": linkops.tables_oracle_sql(),
-            "extract_metadata": linkops.metadata_oracle_sql(),
-            "wat_export": linkops.wat_oracle_sql(),
-            "wat_roundtrip": linkops.wat_roundtrip_oracle_sql(),
-            "link_hostgraph": linkops.hostgraph_oracle_sql(),
-            "pagerank_hosts": linkops.pagerank_oracle_sql(),
-            "hits_hosts": linkops.hits_oracle_sql(),
-            "host_components": linkops.host_components_oracle_sql(),
-            "host_triangles": linkops.host_triangles_oracle_sql(),
-            "host_hyperball": linkops.host_hyperball_oracle_sql(),
-            "host_cocitation": linkops.host_cocitation_oracle_sql(),
-            "crawl_schedule": linkops.crawl_schedule_oracle_sql(),
-            "anchor_text": linkops.anchor_text_oracle_sql(),
-            "ann_brute_topk": simops.ann_topk_sql(duck=True),
-            "ann_lsh_buckets": simops.lsh_buckets_sql(duck=True),
-            "ann_lsh_topk": simops.ann_lsh_topk_sql(duck=True),
-            "embedding_neardup": simops.embedding_neardup_sql(duck=True),
-            "semdedup": simops.semdedup_sql(duck=True),
-            "ann_ivf_assign": simops.ivf_assign_sql(duck=True),
-            "kmeans_assign": clusterops.kmeans_assign_sql(duck=True),
-            "kmeans_centroids": clusterops.kmeans_centroids_sql(duck=True),
-            "ann_ivf_topk": simops.ivf_topk_sql(duck=True),
-            "ann_pq_codes": simops.pq_codes_sql(duck=True),
-            "ann_pq_topk": simops.pq_topk_sql(duck=True),
-            "ann_multilsh_topk": simops.ann_multilsh_topk_sql(duck=True),
-            "ann_recall": simops.ann_recall_sql(duck=True),
-            "events_hourly": eventops.events_hourly_sql(duck=True),
-            "events_sessionize": eventops.sessionize_sql(duck=True),
-            "events_top_users": eventops.top_users_sql(duck=True),
-            "events_asof": eventops.asof_join_sql(duck=True),
-            "events_range_join": eventops.range_join_sql(duck=True),
-            "events_funnel": eventops.funnel_sql(duck=True),
-            "media_features": media.media_features_oracle_sql(),
-            "media_webp": media.media_webp_oracle_sql(),
-            "mime_sniff": media.mime_sniff_oracle_sql(),
-            "media_resize": media.media_resize_oracle_sql(),
-            "media_exif_scrub": media.media_exif_scrub_oracle_sql(),
-            "media_frame_sample": media.media_frame_sample_oracle_sql(),
-            "pixel_phash": pixelops.pixel_phash_oracle_sql(),
-            "pixel_resize": pixelops.pixel_resize_oracle_sql(),
-            "pixel_phash_jpeg": pixelops.pixel_phash_jpeg_oracle_sql(),
-            "pixel_resize_jpeg": pixelops.pixel_resize_jpeg_oracle_sql(),
-            "pixel_decode_audit": pixelops.pixel_decode_audit_oracle_sql(),
-            "pixel_neardup": pixelops.pixel_neardup_oracle_sql(),
-            "pixel_phash_bmp": pixelops.pixel_phash_bmp_oracle_sql(),
-            "pixel_phash_tiff": pixelops.pixel_phash_tiff_oracle_sql(),
-            "pixel_orient": pixelops.pixel_orient_oracle_sql(),
-            "pixel_gif_anim": pixelops.pixel_gif_anim_oracle_sql(),
-            "pixel_ico": pixelops.pixel_ico_oracle_sql(),
-            "pixel_apng": pixelops.pixel_apng_oracle_sql(),
-            "pixel_phash_gif": pixelops.pixel_phash_gif_oracle_sql(),
-            "pixel_phash_prog": pixelops.pixel_phash_prog_oracle_sql(),
-            "audio_pcm_features": media.audio_pcm_features_oracle_sql(),
-            "pdf_extract_text": pdfops.pdf_extract_oracle_sql(),
-            "tpch_pricing_summary": relops.pricing_summary_sql(duck=True),
-            "tpch_segment_stats": relops.segment_stats_sql(duck=True),
-            "tpch_region_rollup": relops.region_rollup_sql(duck=True),
-            "tpch_top_parts": relops.top_parts_sql(duck=True),
-            "events_rollup": relops.events_rollup_sql(duck=True),
-        }
-    )
-    return out
+    return {name: oracle() for name, (_, oracle) in _registry().items()}

@@ -87,12 +87,12 @@ def _iteration_ctes(duck: bool, t: int, cents_ref: str) -> str:
       )"""
 
 
-def _kmeans_ctes(duck: bool, emb: str = "embeddings") -> str:
+def _kmeans_ctes(duck: bool) -> str:
     """v (quantized vectors), cents0 (seed), ITERS unrolled iterations; the
     final relations are assign{ITERS} (rk=1 rows) and cents{ITERS}."""
     q = _quant(duck)
     parts = [
-        f"v as (select vec_id, {q} as qe from {emb})",
+        f"v as (select vec_id, {q} as qe from embeddings)",
         f"cents0 as (select vec_id as cid, qe from v where vec_id < {K})",
     ]
     for t in range(1, ITERS + 1):
@@ -100,7 +100,7 @@ def _kmeans_ctes(duck: bool, emb: str = "embeddings") -> str:
     return ",\n      ".join(parts)
 
 
-def kmeans_assign_sql(duck: bool, emb: str = "embeddings") -> str:
+def kmeans_assign_sql(duck: bool) -> str:
     """Cluster census of the FINAL assignment (one extra argmin pass against
     the post-update centroids cents{ITERS}, matching the iterative runner):
     size, representative, and exact integer distance stats per cluster.
@@ -108,7 +108,7 @@ def kmeans_assign_sql(duck: bool, emb: str = "embeddings") -> str:
     both engines prune unused CTEs."""
     final = ITERS + 1
     return f"""
-      with {_kmeans_ctes(duck, emb)},
+      with {_kmeans_ctes(duck)},
       {_iteration_ctes(duck, final, f"cents{ITERS}").strip()}
       select cast(cid as bigint) as cluster_id,
              count(*) as n_vectors,
@@ -123,13 +123,13 @@ def kmeans_assign_sql(duck: bool, emb: str = "embeddings") -> str:
     """
 
 
-def kmeans_centroids_sql(duck: bool, emb: str = "embeddings") -> str:
+def kmeans_centroids_sql(duck: bool) -> str:
     """Final centroids, exploded to (cluster_id, dim, value) rows so the
     output is scalar-typed (engine-neutral hashing, no array stringify)."""
     d = _d(duck)
     val = d["elem"].format("qe", "dim")
     return f"""
-      with {_kmeans_ctes(duck, emb)}
+      with {_kmeans_ctes(duck)}
       select cast(c.cid as bigint) as cluster_id,
              cast(dims.dim as bigint) as dim,
              cast({val} as bigint) as value

@@ -57,12 +57,17 @@ _SCAN_BYTES = 1024
 
 def _codec_for_label(label: str) -> str | None:
     """WHATWG label -> Python codec (shared by the transport and meta
-    branches); None when the label is unrecognized by either table."""
+    branches); None when the label is unrecognized by either table.  A
+    Python codec outside ``_LABELS`` counts only if it is a text encoding
+    that decodes with "replace": ``base64``, ``rot13``, ``hex`` or ``zlib``
+    (bytes transforms) and ``idna`` (strict only) would fail the page, and
+    WHATWG treats a label it does not know as absent."""
     codec = _LABELS.get(label)
     if codec is None:
         try:
             codec = codecs.lookup(label).name
-        except LookupError:
+            b"\x80".decode(codec, "replace")
+        except (LookupError, ValueError):
             codec = None
     return codec
 

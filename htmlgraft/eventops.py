@@ -16,7 +16,7 @@ from __future__ import annotations
 from .textops import _d
 
 
-def events_hourly_sql(duck: bool, events: str = "events") -> str:
+def events_hourly_sql(duck: bool) -> str:
     """Hourly rollup by event type.  min/max are order-independent (exact
     doubles); sums of doubles are NOT hash-stable cross-engine and are
     deliberately excluded."""
@@ -28,7 +28,7 @@ def events_hourly_sql(duck: bool, events: str = "events") -> str:
              count(distinct user_id) as n_users,
              min(value) as min_value,
              max(value) as max_value
-      from {events}
+      from events
       group by {hour}, event_type
       order by hour, event_type
     """
@@ -37,7 +37,7 @@ def events_hourly_sql(duck: bool, events: str = "events") -> str:
 SESSION_GAP_S = 1800
 
 
-def _marks_ctes(duck: bool, events: str, seq_cols: str, mark: str) -> str:
+def _marks_ctes(duck: bool, seq_cols: str, mark: str) -> str:
     """``seq``({seq_cols}, es, prev_es): each event's epoch second and the
     user's previous one; then ``marks``(user_id, es, {mark}), where
     ``{start}`` in ``mark`` is 1 for an event that opens a session (the
@@ -50,7 +50,7 @@ def _marks_ctes(duck: bool, events: str, seq_cols: str, mark: str) -> str:
                lag(cast({epoch} as bigint)) over (
                  partition by user_id order by {epoch}, event_id
                ) as prev_es
-        from {events}
+        from events
       ),
       marks as (
         select user_id, es,
@@ -59,12 +59,12 @@ def _marks_ctes(duck: bool, events: str, seq_cols: str, mark: str) -> str:
       )"""
 
 
-def sessionize_sql(duck: bool, events: str = "events") -> str:
+def sessionize_sql(duck: bool) -> str:
     """Sessionization via window functions: a new session starts when the
     gap to the user's previous event exceeds SESSION_GAP_S.  Epoch seconds
     (bigint) keep the arithmetic engine-neutral."""
     return f"""
-      with {_marks_ctes(duck, events, "user_id", "{start} as is_start")}
+      with {_marks_ctes(duck, "user_id", "{start} as is_start")}
       select user_id,
              cast(sum(is_start) as bigint) as n_sessions,
              count(*) as n_events,
@@ -75,13 +75,13 @@ def sessionize_sql(duck: bool, events: str = "events") -> str:
     """
 
 
-def top_users_sql(duck: bool, events: str = "events") -> str:
+def top_users_sql(duck: bool) -> str:
     """Top-20 users by event count (deterministic tiebreak on user_id)."""
     return f"""
       with counts as (
         select user_id, count(*) as n_events,
                count(distinct event_type) as n_types
-        from {events} group by user_id
+        from events group by user_id
       ),
       top as (
         -- order+limit first (distributed top-k), THEN rank the 20 survivors:
@@ -97,7 +97,7 @@ def top_users_sql(duck: bool, events: str = "events") -> str:
     """
 
 
-def asof_join_sql(duck: bool, events: str = "events") -> str:
+def asof_join_sql(duck: bool) -> str:
     """As-of join (the trades x quotes / state-at-time operator Spark has
     no built-in for): every non-purchase event is joined to the user's
     LATEST purchase at-or-before its timestamp.  The state relation is one
@@ -125,12 +125,12 @@ def asof_join_sql(duck: bool, events: str = "events") -> str:
       st as (
         select user_id, cast({epoch} as bigint) as es,
                {argmax}(value, event_id) as sval
-        from {events} where event_type = 'purchase'
+        from events where event_type = 'purchase'
         group by user_id, cast({epoch} as bigint)
       ),
       pr as (
         select event_id, user_id, cast({epoch} as bigint) as es, event_type
-        from {events} where event_type <> 'purchase'
+        from events where event_type <> 'purchase'
       )"""
     if duck:
         return f"""
@@ -177,7 +177,7 @@ def asof_join_sql(duck: bool, events: str = "events") -> str:
 INCIDENT_MIN_ERRORS = 2
 
 
-def range_join_sql(duck: bool, events: str = "events") -> str:
+def range_join_sql(duck: bool) -> str:
     """Interval range join (overlap join), the second relational operator
     Spark lacks a native form of: user sessions (from the sessionize
     windows) are joined to derived "incident windows" — hours whose error
@@ -201,7 +201,7 @@ def range_join_sql(duck: bool, events: str = "events") -> str:
     sid = ("sum({start}) over (partition by user_id order by es, event_id"
            " rows between unbounded preceding and current row) as sid")
     sess = f"""
-      {_marks_ctes(duck, events, "user_id, event_id", sid)},
+      {_marks_ctes(duck, "user_id, event_id", sid)},
       sessions as (
         select user_id, sid, min(es) as s0, max(es) as s1
         from marks group by user_id, sid
@@ -209,7 +209,7 @@ def range_join_sql(duck: bool, events: str = "events") -> str:
       windows as (
         select cast({epoch} as bigint) {idiv} 3600 as hour_id,
                count(*) as n_errors
-        from {events} where event_type = 'error'
+        from events where event_type = 'error'
         group by cast({epoch} as bigint) {idiv} 3600
         having count(*) >= {INCIDENT_MIN_ERRORS}
       )"""
@@ -252,7 +252,7 @@ def range_join_sql(duck: bool, events: str = "events") -> str:
 FUNNEL_STEPS = ("view", "click", "purchase")
 
 
-def funnel_sql(duck: bool, events: str = "events") -> str:
+def funnel_sql(duck: bool) -> str:
     """Ordered funnel analysis (view -> click -> purchase): per user, the
     FIRST view, the first click strictly after it, and the first purchase
     strictly after that — the sequential-pattern query neither
@@ -270,7 +270,7 @@ def funnel_sql(duck: bool, events: str = "events") -> str:
     return f"""
       with ev as (
         select user_id, event_type, cast({epoch} as bigint) as es
-        from {events}
+        from events
         where event_type in ('view', 'click', 'purchase')
       ),
       v as (
@@ -305,6 +305,6 @@ def funnel_sql(duck: bool, events: str = "events") -> str:
     """
 
 
-def run(spark, sf_dir: str, sql_builder, **kw):
+def run(spark, sf_dir: str, sql_builder):
     spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView("events")
-    return spark.sql(sql_builder(duck=False, **kw))
+    return spark.sql(sql_builder(duck=False))

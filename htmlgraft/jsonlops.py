@@ -46,7 +46,7 @@ _HAZARD_SQL_DUCK = (
 )
 
 
-def jsonl_rows_sql(duck: bool, docs: str = "documents") -> str:
+def jsonl_rows_sql(duck: bool) -> str:
     """The relation the round trip carries: (doc_id, url, text, meta)
     with meta = source || every escaping hazard.  Dual-dialect so the
     Spark side builds the write input and the DuckDB side restates the
@@ -60,7 +60,7 @@ def jsonl_rows_sql(duck: bool, docs: str = "documents") -> str:
                     cast(doc_id as {s})) as url,
              text,
              concat(source, '#', {hazard}) as meta
-      from {docs}
+      from documents
       order by doc_id
     """
 

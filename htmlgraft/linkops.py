@@ -142,38 +142,38 @@ def _tables_rows(url, doc):
     return [(url, *cell) for cell in analyze_tables(doc)]
 
 
-def tables_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
-    return map_pages(pages, TABLES_SCHEMA, _tables_rows, num_parts)
+def tables_df(pages: DataFrame) -> DataFrame:
+    return map_pages(pages, TABLES_SCHEMA, _tables_rows)
 
 
-def _parsed(pages: DataFrame, num_parts: int | None) -> DataFrame:
+def _parsed(pages: DataFrame) -> DataFrame:
     """The parse stage's one-pass output for the pages that parsed."""
     return parse_extract(
-        pages, num_parts, include_dom=False, include_links=True
+        pages, include_dom=False, include_links=True
     ).where(F.col("status") == "ok")
 
 
-def _exploded_links(pages: DataFrame, num_parts: int | None) -> DataFrame:
-    return _parsed(pages, num_parts).select(
+def _exploded_links(pages: DataFrame) -> DataFrame:
+    return _parsed(pages).select(
         "url", "title", F.explode("links").alias("l"))
 
 
-def links_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
+def links_df(pages: DataFrame) -> DataFrame:
     """(url, html) -> (url, pos, href, anchor), one row per link."""
-    return _exploded_links(pages, num_parts).select(
+    return _exploded_links(pages).select(
         "url", "l.pos", "l.href", "l.anchor")
 
 
-def metadata_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
-    return _parsed(pages, num_parts).select(
+def metadata_df(pages: DataFrame) -> DataFrame:
+    return _parsed(pages).select(
         "url", "title", "h1", "has_doctype",
         F.size("links").cast("long").alias("n_links"))
 
 
-def wat_rows_df(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
+def wat_rows_df(pages: DataFrame) -> DataFrame:
     """The WAT record's (url, title, pos, href, anchor) rows: links and
     title from the same one-pass parse."""
-    return _exploded_links(pages, num_parts).select(
+    return _exploded_links(pages).select(
         "url", F.coalesce("title", F.lit("")).alias("title"),
         "l.pos", "l.href", "l.anchor")
 
@@ -519,8 +519,8 @@ def run_host_components(spark, sf_dir: str) -> DataFrame:
     return host_components_df(links_df(pages_df(spark, sf_dir))).orderBy("host")
 
 
-def triangles_sql(duck: bool, edges: str = "hedges") -> str:
-    """Triangle counting + local clustering over an ``{edges}(src_host,
+def triangles_sql(duck: bool) -> str:
+    """Triangle counting + local clustering over an ``hedges(src_host,
     dst_host)`` relation — the classic graph-structure audit (spam farms
     and boilerplate link rings show up as dense triangle clusters; Suri &
     Vassilvitskii 2011's MapReduce formulation is the public scale
@@ -539,7 +539,7 @@ def triangles_sql(duck: bool, edges: str = "hedges") -> str:
       uedges as (
         select distinct least(src_host, dst_host) as a,
                greatest(src_host, dst_host) as b
-        from {edges} where src_host <> dst_host
+        from hedges where src_host <> dst_host
       ),
       tris as (
         select e1.a, e1.b, e2.b as c
@@ -577,7 +577,7 @@ def triangles_sql(duck: bool, edges: str = "hedges") -> str:
 FANIN_CAP = 16  # co-citation sources kept per destination (skew guard)
 
 
-def cocitation_sql(duck: bool, edges: str = "hedges") -> str:
+def cocitation_sql(duck: bool) -> str:
     """Co-citation host similarity (Small 1973, the other classic link
     measure beside HITS/PageRank): two hosts are related when they link
     to the same destinations — how a crawl finds mirror networks and
@@ -601,7 +601,7 @@ def cocitation_sql(duck: bool, edges: str = "hedges") -> str:
     return f"""
       uedges as (
         select src_host as src, dst_host as dst, n_links
-        from {edges} where src_host <> dst_host
+        from hedges where src_host <> dst_host
       ),
       capped as (
         select dst, src from (
@@ -778,12 +778,12 @@ def wat_payloads_cte(rows: str = "__wat_rows") -> str:
     """
 
 
-def wat_spark_sql(rows: str = "__wat_rows") -> str:
+def wat_spark_sql() -> str:
     """Spark side: one hash shuffle on url; link order inside the record is
     pinned by array_sort over (pos, ...) structs (document order, the same
     order string_agg(... order by pos) gives the oracle)."""
     return (
-        wat_payloads_cte(rows)
+        wat_payloads_cte("__wat_rows")
         + f"""
       select url, n_links,
              cast(length(payload) as bigint) as payload_chars,
@@ -1220,8 +1220,8 @@ HB_ALPHA_NUM = int(0.673 * HB_M * HB_M * (1 << 32))
 HB_ROUNDS = 2  # radii 0, 1, 2
 
 
-def hyperball_sql(duck: bool, edges: str = "hedges") -> str:
-    """HyperBall over ``{edges}(src_host, dst_host)``: per-host HLL
+def hyperball_sql(duck: bool) -> str:
+    """HyperBall over ``hedges(src_host, dst_host)``: per-host HLL
     registers of the radius-r out-ball, for r = 0..{HB_ROUNDS}.  Round 0
     sketches {{h}} itself; round t+1 takes the register-wise max of a
     host's own registers and its out-neighbors' round-t registers (one
@@ -1262,7 +1262,7 @@ def hyperball_sql(duck: bool, edges: str = "hedges") -> str:
     return f"""
       uedges as (
         select distinct src_host as src, dst_host as dst
-        from {edges} where src_host <> dst_host
+        from hedges where src_host <> dst_host
       ),
       hosts as (
         select distinct host from (

@@ -593,12 +593,11 @@ def _rewrite_image_header(blob: bytes, new_w: int, new_h: int):
     raise NotImplementedError("unrecognized image container")
 
 
-def resize_plan(w: int, h: int, max_w: int = RESIZE_MAX_W,
-                max_h: int = RESIZE_MAX_H):
+def resize_plan(w: int, h: int):
     """Integer aspect-preserving downscale plan: scale_permille = min(1000,
-    max_w*1000 div w, max_h*1000 div h); dims floor-scale with a 1-pixel
+    RESIZE_MAX_W*1000 div w, RESIZE_MAX_H*1000 div h); dims floor-scale with a 1-pixel
     minimum.  Pure integer math so the DuckDB oracle restates it exactly."""
-    scale = min(1000, (max_w * 1000) // w, (max_h * 1000) // h)
+    scale = min(1000, (RESIZE_MAX_W * 1000) // w, (RESIZE_MAX_H * 1000) // h)
     return scale, max(1, (w * scale) // 1000), max(1, (h * scale) // 1000)
 
 
@@ -654,7 +653,7 @@ def media_resize(spark, sf_dir: str) -> DataFrame:
     return resize_images(media_df(spark, sf_dir))
 
 
-def media_resize_oracle_sql(docs: str = "documents") -> str:
+def media_resize_oracle_sql() -> str:
     """The resize plan restated relationally: dims are pure functions of
     doc_id (media_df synthesis), the payload is the document text, and the
     JPEG synthetic header (unlike PNG/GIF) ends exactly at the SOFn segment
@@ -665,7 +664,7 @@ def media_resize_oracle_sql(docs: str = "documents") -> str:
                (16 + (doc_id * 7) % 2033) as w,
                (16 + (doc_id * 13) % 1021) as h,
                md5(text) as payload_md5
-        from {docs} where doc_id % 3 = 0
+        from documents where doc_id % 3 = 0
       ),
       planned as (
         select doc_id, w, h, payload_md5,
@@ -745,13 +744,13 @@ def media_frame_sample(spark, sf_dir: str) -> DataFrame:
     return frame_sample(media_df(spark, sf_dir))
 
 
-def media_frame_sample_oracle_sql(docs: str = "documents") -> str:
+def media_frame_sample_oracle_sql() -> str:
     """Sampling plan restated relationally: mp4 rows (doc_id%6==2) carry
     frames = 1 + doc_id % 240; webm rows contribute nothing."""
     return f"""
       with v as (
         select doc_id, (1 + doc_id % 240) as frames
-        from {docs} where doc_id % 6 = 2
+        from documents where doc_id % 6 = 2
       ),
       planned as (
         select doc_id, frames,
@@ -768,7 +767,7 @@ def media_frame_sample_oracle_sql(docs: str = "documents") -> str:
     """
 
 
-def media_features_oracle_sql(docs: str = "documents") -> str:
+def media_features_oracle_sql() -> str:
     """DuckDB mirror of media_df + extract_features: the synthetic headers
     carry dimensions that are pure functions of doc_id, so the oracle
     recomputes them relationally — an independent pin on the Python header
@@ -784,7 +783,7 @@ def media_features_oracle_sql(docs: str = "documents") -> str:
                (16 + (doc_id * 13) % 1021) as h,
                (1 + doc_id % 2) as ch,
                (8000 + (doc_id % 5) * 4000) as rate
-        from {docs}
+        from documents
       )
       select doc_id, media_type,
              cast(n + case doc_id % 9
@@ -811,7 +810,7 @@ def media_features_oracle_sql(docs: str = "documents") -> str:
 
 # --- charset sniffing (WHATWG encoding prescan subset) ------------------------
 
-def charset_sniff_sql(duck: bool, docs: str = "documents") -> str:
+def charset_sniff_sql(duck: bool) -> str:
     """Charset detection over the raw ``html:binary`` column — the WHATWG
     encoding-sniffing prescan subset an extraction tier runs BEFORE tokenizing
     (html.spec.whatwg.org "determining the character encoding", public spec):
@@ -852,7 +851,7 @@ def charset_sniff_sql(duck: bool, docs: str = "documents") -> str:
         return f"""
           with m as (
             select doc_id, {head} as head, {bom} as bomhex
-            from {docs}
+            from documents
           )
           select doc_id,
                  case when doc_id % 6 in (0, 1, 2) then 'bom'
@@ -870,7 +869,7 @@ def charset_sniff_sql(duck: bool, docs: str = "documents") -> str:
       with m as (
         select doc_id,
                concat(unhex({bom}), encode({head}, 'UTF-8')) as html
-        from {docs}
+        from documents
       ),
       pfx as (
         select doc_id, html, hex(substr(html, 1, 3)) as hexpfx from m
@@ -1055,7 +1054,7 @@ def _exif_scrub_row(doc_id, blob):
              hashlib.md5(out[end:]).hexdigest())]
 
 
-def media_exif_scrub_oracle_sql(docs: str = "documents") -> str:
+def media_exif_scrub_oracle_sql() -> str:
     """Relational restatement: every output column is a pure function of
     doc_id and text under the synthesis rule — the scrubbed file must
     re-parse to the same dims and carry the identical payload bytes."""
@@ -1073,7 +1072,7 @@ def media_exif_scrub_oracle_sql(docs: str = "documents") -> str:
              cast({_W} as bigint) as width,
              cast({_H} as bigint) as height,
              md5(text) as payload_md5
-      from {docs} where doc_id % 3 = 0
+      from documents where doc_id % 3 = 0
       order by doc_id
     """
 
@@ -1161,14 +1160,14 @@ def audio_pcm_features(spark, sf_dir: str) -> DataFrame:
         "doc_id")
 
 
-def audio_pcm_features_oracle_sql(docs: str = "documents") -> str:
+def audio_pcm_features_oracle_sql() -> str:
     """Every feature restated from the waveform formula; zero crossings
     compare s(i) with the closed-form s(i-1) — no window needed."""
     s = _A_S.format(b="b", i="i")
     s_prev = _A_S.format(b="b", i="(i - 1)")
     return f"""
       with d as (
-        select doc_id, {_A_BASE} as b, {_A_N} as n from {docs}
+        select doc_id, {_A_BASE} as b, {_A_N} as n from documents
       ),
       smp as (
         select d.doc_id, t.i, {s} as s, {s_prev} as sp
@@ -1333,7 +1332,7 @@ def mime_sniff(spark, sf_dir: str):
     return map_rows(docs, ["doc_id"], schema, _mime_row).orderBy("doc_id")
 
 
-def mime_sniff_oracle_sql(docs: str = "documents") -> str:
+def mime_sniff_oracle_sql() -> str:
     """Every lane's computed type restated, including the data-dependent
     sub-cases (HTML regardless of case/whitespace, binary flip on
     (doc_id // 12) % 2)."""
@@ -1363,7 +1362,7 @@ def mime_sniff_oracle_sql(docs: str = "documents") -> str:
                when 11 then 'riff'
                else 'signature'
              end as method
-      from {docs}
+      from documents
       order by doc_id
     """
 
@@ -1475,7 +1474,7 @@ def media_webp(spark, sf_dir: str) -> DataFrame:
         "doc_id")
 
 
-def media_webp_oracle_sql(docs: str = "documents") -> str:
+def media_webp_oracle_sql() -> str:
     """Every lane's dims restated straight from the synthesis formulas;
     the corrupt lane pinned to (0, -1, -1)."""
     return f"""
@@ -1493,6 +1492,6 @@ def media_webp_oracle_sql(docs: str = "documents") -> str:
                   when 1 then 1 + (doc_id * 29) % 16383
                   when 2 then 1 + (doc_id * 29) % 100000
                   else -1 end as bigint) as height
-      from {docs}
+      from documents
       order by doc_id
     """

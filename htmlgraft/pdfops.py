@@ -654,7 +654,7 @@ def pdf_extract_text(spark, sf_dir: str) -> DataFrame:
     return extract_text_df(pdf_df(spark, sf_dir))
 
 
-def pdf_extract_oracle_sql(docs: str = "documents") -> str:
+def pdf_extract_oracle_sql() -> str:
     """DuckDB mirror: the expected extracted text is the same 8-word wrap of
     the source text, computed relationally — an independent pin on the
     whole binary round-trip (synthesis offsets, stream scan, tokenizer,
@@ -662,7 +662,7 @@ def pdf_extract_oracle_sql(docs: str = "documents") -> str:
     return f"""
       with lines as (
         select doc_id, {_lines_expr(True)} as ls
-        from (select doc_id, string_split(text, ' ') as ws from {docs})
+        from (select doc_id, string_split(text, ' ') as ws from documents)
       )
       select doc_id,
              array_to_string(ls, chr(10)) as text,

@@ -627,10 +627,10 @@ class _Tier(NamedTuple):
         return w, h, bytes(self.px(b, w, x, y)
                            for y in range(h) for x in range(w))
 
-    def imgs_sql(self, docs: str, extra: str = "") -> str:
+    def imgs_sql(self, extra: str = "") -> str:
         w, h = self.size(_BASE)
         return (f"select doc_id, {_BASE} as b, {w} as w, {h} as h{extra}"
-                f" from {docs}")
+                " from documents")
 
 
 _JPEG_MAGIC = (b"\xff\xd8",)
@@ -831,8 +831,8 @@ def _phash_pair(name: str):
         return _keep_min(_decode_dhash(
             _corpus(spark, sf_dir, t.encode, t.col), t.decode, t.col))
 
-    def oracle_sql(docs: str = "documents") -> str:
-        return _phash_oracle_sql(t.imgs_sql(docs), partial(t.px, _B, _W))
+    def oracle_sql() -> str:
+        return _phash_oracle_sql(t.imgs_sql(), partial(t.px, _B, _W))
 
     return query, oracle_sql
 
@@ -850,10 +850,10 @@ def _resize_pair(name: str):
             _stage(f"resize_{t.decode.__name__}", _resize_row, t.decode),
         ).orderBy("doc_id")
 
-    def oracle_sql(docs: str = "documents") -> str:
+    def oracle_sql() -> str:
         w, h = t.size(_BASE)
-        imgs = t.imgs_sql(docs, f", greatest(1, ({w} * 2) // 3) as nw,"
-                                f" greatest(1, ({h} * 2) // 3) as nh")
+        imgs = t.imgs_sql(f", greatest(1, ({w} * 2) // 3) as nw,"
+                          f" greatest(1, ({h} * 2) // 3) as nh")
         nw, nh = _Sql("nw"), _Sql("nh")
 
         def pix(x, y):
@@ -955,14 +955,14 @@ def pixel_decode_audit(spark, sf_dir: str) -> DataFrame:
                      ).orderBy("doc_id")
 
 
-def pixel_decode_audit_oracle_sql(docs: str = "documents") -> str:
+def pixel_decode_audit_oracle_sql() -> str:
     """Every lane restated from ``_AUDIT_LANES``: healthy lanes sum their
     tier's formula, damaged and junk lanes are pinned to (0, -1)."""
     ok = [m for m, (_n, synth) in enumerate(_AUDIT_LANES) if synth is None]
     sums = []
     for m in ok:
         t = _TIERS[_AUDIT_LANES[m][0]]
-        lane = f"({t.imgs_sql(docs)} where doc_id % {_AUDIT_MOD} = {m})"
+        lane = f"({t.imgs_sql()} where doc_id % {_AUDIT_MOD} = {m})"
         sums.append(_sum_cte(f"s{m}", lane, partial(t.px, _B, _W)))
     sums = ",\n      ".join(sums)
     fmt = " ".join(f"when {m} then '{_TIERS[n].col}'"
@@ -975,7 +975,7 @@ def pixel_decode_audit_oracle_sql(docs: str = "documents") -> str:
                   as bigint) as ok,
              cast(coalesce({", ".join(f"s{m}.s" for m in ok)}, -1) as bigint)
                as px_sum
-      from {docs} d
+      from documents d
       {" ".join(f"left join s{m} on s{m}.doc_id = d.doc_id" for m in ok)}
       order by d.doc_id
     """
@@ -1014,10 +1014,10 @@ def _neardup_jpeg(doc_id: int) -> bytes:
     return jpegops.encode_jpeg_gray_coeffs(*synth_jpeg_neardup_coeffs(doc_id))
 
 
-def _band_val(i: int, col: str = "phash"):
+def _band_val(i: int):
     """16-bit band i of the hex dHash as a bigint column (hex chars
     4i+1..4i+4; conv() handles the a-f digits)."""
-    return F.conv(F.substring(col, i * 4 + 1, 4), 16, 10).cast("long")
+    return F.conv(F.substring("phash", i * 4 + 1, 4), 16, 10).cast("long")
 
 
 def pixel_neardup(spark, sf_dir: str) -> DataFrame:
@@ -1093,13 +1093,13 @@ def pixel_neardup(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def pixel_neardup_oracle_sql(docs: str = "documents") -> str:
+def pixel_neardup_oracle_sql() -> str:
     """Everything restated relationally from the perturbed coefficient
     formulas: dHash row bytes from closed-form pixels, the same 4x16-bit
     banding, the same exact-hamming filter (xor + bit_count on row
     bytes), the same min-neighbor keeper — no JPEG bytes anywhere."""
     jpeg = _TIERS["jpeg"]
-    imgs = jpeg.imgs_sql(docs, f", doc_id % {NEARDUP_VARIANTS} as v")
+    imgs = jpeg.imgs_sql(f", doc_id % {NEARDUP_VARIANTS} as v")
     return f"""
       with imgs as ({imgs}),
       {_dhash_ctes(partial(jpeg.px, _B, _W, bump=_Sql("v")))},
@@ -1210,12 +1210,12 @@ def pixel_orient(spark, sf_dir: str) -> DataFrame:
         " height long, px_sum long, phash string"))
 
 
-def pixel_orient_oracle_sql(docs: str = "documents") -> str:
+def pixel_orient_oracle_sql() -> str:
     """Canonical plane, dims, and dHash restated from the formula,
     orientation-blind; stored dims transpose for codes 5-8; keeper =
     min doc_id over the scene's dHash group."""
     return _phash_oracle_sql(
-        _ORIENT.imgs_sql(docs, ", 1 + doc_id % 8 as ori"),
+        _ORIENT.imgs_sql(", 1 + doc_id % 8 as ori"),
         partial(_ORIENT.px, _B, _W), lead="""
              cast(im.ori as bigint) as ori,
              cast(case when im.ori >= 5 then im.h else im.w end as bigint)
@@ -1274,7 +1274,7 @@ def synth_apng_frames(doc_id: int):
     return w, h, nf, [(dn, 100) for dn in delays], plays, frames
 
 
-def _frames_oracle_sql(a: _Anim, docs: str, cols) -> str:
+def _frames_oracle_sql(a: _Anim, cols) -> str:
     """Frame sums, delay sum and loop/play count of an animation tier;
     ``cols`` maps output names to ``w``, ``h``, ``nf``, ``meta``,
     ``delays``, ``all`` or ``f0``."""
@@ -1290,7 +1290,7 @@ def _frames_oracle_sql(a: _Anim, docs: str, cols) -> str:
         select doc_id, {_BASE} as b, {_dim(a.dims[0], _BASE)} as w,
                {_dim(a.dims[1], _BASE)} as h,
                {a.n_frames(_Sql("doc_id"))} as nf
-        from {docs}
+        from documents
       ),
       sums as (
         select im.doc_id,
@@ -1336,8 +1336,8 @@ def pixel_gif_anim(spark, sf_dir: str) -> DataFrame:
                      " f0_sum long").orderBy("doc_id")
 
 
-def pixel_gif_anim_oracle_sql(docs: str = "documents") -> str:
-    return _frames_oracle_sql(_GIF_ANIM, docs, {
+def pixel_gif_anim_oracle_sql() -> str:
+    return _frames_oracle_sql(_GIF_ANIM, {
         "width": "w", "height": "h", "n_frames": "nf", "loop_cnt": "meta",
         "total_delay_cs": "delays", "px_sum": "all", "f0_sum": "f0"})
 
@@ -1499,8 +1499,8 @@ def pixel_apng(spark, sf_dir: str) -> DataFrame:
                      ).orderBy("doc_id")
 
 
-def pixel_apng_oracle_sql(docs: str = "documents") -> str:
-    return _frames_oracle_sql(_APNG, docs, {
+def pixel_apng_oracle_sql() -> str:
+    return _frames_oracle_sql(_APNG, {
         "n_frames": "nf", "plays": "meta", "delay_num_sum": "delays",
         "px_sum": "all", "f0_sum": "f0"})
 
@@ -1552,7 +1552,7 @@ def pixel_ico(spark, sf_dir: str) -> DataFrame:
                      ).orderBy("doc_id")
 
 
-def pixel_ico_oracle_sql(docs: str = "documents") -> str:
+def pixel_ico_oracle_sql() -> str:
     dims = "".join(f", {_dim(dw, _BASE)} as {k}_w, {_dim(dh, _BASE)} as {k}_h"
                    for k, (dw, dh), _p in _ICO_MEMBERS)
     sums = ",\n      ".join(
@@ -1566,7 +1566,7 @@ def pixel_ico_oracle_sql(docs: str = "documents") -> str:
     joins = " ".join(f"join {k}_sums on {k}_sums.doc_id = im.doc_id"
                      for k, _d, _p in _ICO_MEMBERS)
     return f"""
-      with imgs as (select doc_id, {_BASE} as b{dims} from {docs}),
+      with imgs as (select doc_id, {_BASE} as b{dims} from documents),
       {sums}
       select im.doc_id, cast({len(_ICO_MEMBERS)} as bigint) as n_members{cols}
       from imgs im {joins}

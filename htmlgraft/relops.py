@@ -19,7 +19,7 @@ from __future__ import annotations
 from .textops import _d
 
 
-def pricing_summary_sql(duck: bool, t: str = "lineitem") -> str:
+def pricing_summary_sql(duck: bool) -> str:
     """TPC-H Q1-flavored pricing summary: group the fact table by the two
     flag columns.  sum(l_quantity) is integer-valued -> cast to bigint."""
     return f"""
@@ -28,7 +28,7 @@ def pricing_summary_sql(duck: bool, t: str = "lineitem") -> str:
              cast(sum(l_quantity) as bigint) as sum_qty,
              cast(min(l_extendedprice) as double) as min_price,
              cast(max(l_extendedprice) as double) as max_price
-      from {t}
+      from lineitem
       group by l_returnflag, l_linestatus
       order by l_returnflag, l_linestatus
     """
@@ -113,7 +113,7 @@ TABLES = ("lineitem", "orders", "customer", "part", "supplier", "nation",
           "region", "events")
 
 
-def run(spark, sf_dir: str, sql_builder, **kw):
+def run(spark, sf_dir: str, sql_builder):
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    return spark.sql(sql_builder(duck=False, **kw))
+    return spark.sql(sql_builder(duck=False))

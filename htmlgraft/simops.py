@@ -32,13 +32,13 @@ TOP_K = 5
 SIGN_BITS = 8   # LSH bucket = sign pattern of components 1..SIGN_BITS
 
 
-def _quant(duck: bool, col: str = "embedding") -> str:
+def _quant(duck: bool) -> str:
     """array<bigint> quantized embedding, identical in both engines."""
     d = _d(duck)
     lam = d["lambda"].format(
         "x", "cast(round(cast(x as double) * 1000.0) as bigint)"
     )
-    return d["transform"].format(col, lam)
+    return d["transform"].format("embedding", lam)
 
 
 def _dot(duck: bool, a: str, b: str) -> str:
@@ -52,7 +52,7 @@ def _dot(duck: bool, a: str, b: str) -> str:
     )
 
 
-def ann_topk_sql(duck: bool, emb: str = "embeddings") -> str:
+def ann_topk_sql(duck: bool) -> str:
     """Brute-force top-k: for each query vector (vec_id < N_QUERIES), the
     TOP_K nearest neighbors by quantized inner product.  The query set is
     tiny -> Spark broadcasts it (hinted); candidates stream through the
@@ -62,10 +62,10 @@ def ann_topk_sql(duck: bool, emb: str = "embeddings") -> str:
     hint = _d(duck)["hint"].format("BROADCAST(qv)")
     return f"""
       with qv as (
-        select vec_id as q_id, {q} as qe from {emb} where vec_id < {N_QUERIES}
+        select vec_id as q_id, {q} as qe from embeddings where vec_id < {N_QUERIES}
       ),
       cv as (
-        select vec_id as n_id, label, {q} as ce from {emb}
+        select vec_id as n_id, label, {q} as ce from embeddings
       ),
       scored as (
         select {hint} qv.q_id, cv.n_id, cv.label,
@@ -87,9 +87,7 @@ def ann_topk_sql(duck: bool, emb: str = "embeddings") -> str:
     """
 
 
-def _bucket(
-    duck: bool, col: str = "embedding", offset: int = 0, bits: int | None = None
-) -> str:
+def _bucket(duck: bool, offset: int = 0, bits: int | None = None) -> str:
     """LSH bucket id: sign bits of ``bits`` consecutive components starting
     at ``offset`` (1-based element access in both engines; float sign
     compare is exact).  Different offsets give the independent hash tables
@@ -98,14 +96,14 @@ def _bucket(
     if bits is None:
         bits = SIGN_BITS
     terms = " + ".join(
-        f"(case when {d['elem'].format(col, str(offset + i))} > 0 "
+        f"(case when {d['elem'].format('embedding', str(offset + i))} > 0 "
         f"then {1 << (i - 1)} else 0 end)"
         for i in range(1, bits + 1)
     )
     return f"cast({terms} as bigint)"
 
 
-def lsh_buckets_sql(duck: bool, emb: str = "embeddings") -> str:
+def lsh_buckets_sql(duck: bool) -> str:
     """LSH bucket histogram: how the sign-bit partitioner spreads the
     corpus (skew diagnostics for the bucketed join)."""
     b = _bucket(duck)
@@ -113,13 +111,13 @@ def lsh_buckets_sql(duck: bool, emb: str = "embeddings") -> str:
       select {b} as bucket,
              count(*) as n_vectors,
              min(vec_id) as min_vec_id
-      from {emb}
+      from embeddings
       group by {b}
       order by bucket
     """
 
 
-def ann_lsh_topk_sql(duck: bool, emb: str = "embeddings") -> str:
+def ann_lsh_topk_sql(duck: bool) -> str:
     """Bucketed ANN: neighbors are only searched inside the query's LSH
     bucket — the join is keyed on bucket (O(n) shuffle), trading recall for
     scale.  Same quantized-dot scoring and deterministic ranking."""
@@ -129,10 +127,10 @@ def ann_lsh_topk_sql(duck: bool, emb: str = "embeddings") -> str:
     return f"""
       with qv as (
         select vec_id as q_id, {q} as qe, {b} as bucket
-        from {emb} where vec_id < {N_QUERIES}
+        from embeddings where vec_id < {N_QUERIES}
       ),
       cv as (
-        select vec_id as n_id, {q} as ce, {b} as bucket from {emb}
+        select vec_id as n_id, {q} as ce, {b} as bucket from embeddings
       ),
       scored as (
         select qv.q_id, cv.n_id, cast({dot} as bigint) as dot_q
@@ -151,7 +149,7 @@ def ann_lsh_topk_sql(duck: bool, emb: str = "embeddings") -> str:
     """
 
 
-def embedding_neardup_sql(duck: bool, emb: str = "embeddings") -> str:
+def embedding_neardup_sql(duck: bool) -> str:
     """Embedding near-duplicate pairs inside LSH buckets: pairs (a < b)
     sharing a bucket whose quantized dot exceeds a fixed threshold.  The
     bucket join keeps this O(n * bucket_width), never all-pairs."""
@@ -160,7 +158,7 @@ def embedding_neardup_sql(duck: bool, emb: str = "embeddings") -> str:
     dot = _dot(duck, "a.qe", "b.qe")
     return f"""
       with v as (
-        select vec_id, {q} as qe, {b} as bucket from {emb}
+        select vec_id, {q} as qe, {b} as bucket from embeddings
       )
       select a.vec_id as a_id, b.vec_id as b_id,
              cast({dot} as bigint) as dot_q
@@ -235,7 +233,7 @@ def _l2(duck: bool, a: str, b: str) -> str:
     )
 
 
-def ivf_assign_sql(duck: bool, emb: str = "embeddings") -> str:
+def ivf_assign_sql(duck: bool) -> str:
     """IVF coarse assignment: centroids are the quantized vectors of the
     first N_LIST vec_ids (deterministic sampled coarse quantizer — no
     float k-means, so the oracle parity is exact); every vector joins the
@@ -244,7 +242,7 @@ def ivf_assign_sql(duck: bool, emb: str = "embeddings") -> str:
     q = _quant(duck)
     l2 = _l2(duck, "v.qe", "c.qe")
     return f"""
-      with v as (select vec_id, {q} as qe from {emb}),
+      with v as (select vec_id, {q} as qe from embeddings),
       cents as (select vec_id as list_id, qe from v where vec_id < {N_LIST}),
       dists as (
         select v.vec_id, c.list_id, cast({l2} as bigint) as d2
@@ -268,7 +266,7 @@ def ivf_assign_sql(duck: bool, emb: str = "embeddings") -> str:
     """
 
 
-def ivf_topk_sql(duck: bool, emb: str = "embeddings") -> str:
+def ivf_topk_sql(duck: bool) -> str:
     """IVF-flat search: each query probes its N_PROBE nearest inverted
     lists and ranks only those lists' members by quantized dot product.
     The candidate join is keyed on list_id — O(n * nprobe / nlist) scored
@@ -278,7 +276,7 @@ def ivf_topk_sql(duck: bool, emb: str = "embeddings") -> str:
     l2_probe = _l2(duck, "qv.qe", "c.qe")
     dot = _dot(duck, "qv.qe", "cand.qe")
     return f"""
-      with v as (select vec_id, {q} as qe from {emb}),
+      with v as (select vec_id, {q} as qe from embeddings),
       cents as (select vec_id as list_id, qe from v where vec_id < {N_LIST}),
       assign as (
         select vec_id, list_id from (
@@ -334,7 +332,7 @@ def _pq_slice(duck: bool, col: str, m: str) -> str:
     return _d(duck)["slice"].format(col, f"1 + {m} * {sd}", f"{sd} + {m} * {sd}", sd)
 
 
-def _pq_common(duck: bool, emb: str) -> str:
+def _pq_common(duck: bool) -> str:
     """Shared PQ CTE chain: quantized vectors -> per-subspace subvectors
     -> deterministic sampled codebooks (the quantized subvectors of the
     first PQ_K vec_ids — the IVF coarse-quantizer pattern, so oracle
@@ -344,7 +342,7 @@ def _pq_common(duck: bool, emb: str) -> str:
     ms = f"unnest(range(0, {PQ_M}))" if duck else f"explode(sequence(0, {PQ_M - 1}))"
     sl = _pq_slice(duck, "qe", "m")
     l2 = _l2(duck, "s.sub", "c.sub")
-    return f"""v as (select vec_id, {q} as qe from {emb}),
+    return f"""v as (select vec_id, {q} as qe from embeddings),
       subs as (
         select vec_id, m, {sl} as sub
         from (select vec_id, qe, {ms} as m from v) sv
@@ -364,7 +362,7 @@ def _pq_common(duck: bool, emb: str) -> str:
       )"""
 
 
-def pq_codes_sql(duck: bool, emb: str = "embeddings") -> str:
+def pq_codes_sql(duck: bool) -> str:
     """Product-quantization encode audit (Jegou et al. 2011, public): the
     per-(subspace, code) occupancy histogram of the PQ encoding — the
     compression-quality diagnostic (empty or overloaded codes mean the
@@ -375,7 +373,7 @@ def pq_codes_sql(duck: bool, emb: str = "embeddings") -> str:
     distances via a join keyed on the subspace, then one (vec, m) window
     over K rows; the histogram is an M*K-bounded agg."""
     return f"""
-      with {_pq_common(duck, emb)}
+      with {_pq_common(duck)}
       select m, code,
              cast(count(*) as bigint) as n_vectors,
              cast(min(vec_id) as bigint) as min_vec_id
@@ -385,7 +383,7 @@ def pq_codes_sql(duck: bool, emb: str = "embeddings") -> str:
     """
 
 
-def pq_topk_sql(duck: bool, emb: str = "embeddings") -> str:
+def pq_topk_sql(duck: bool) -> str:
     """PQ asymmetric-distance search (ADC): each query keeps its EXACT
     quantized subvectors and scores candidates through their codes alone
     — distance table d2(query_sub_m, codebook[m][k]) built per query
@@ -398,7 +396,7 @@ def pq_topk_sql(duck: bool, emb: str = "embeddings") -> str:
     ties to the lower vec_id), self excluded."""
     l2q = _l2(duck, "qs.sub", "c.sub")
     return f"""
-      with {_pq_common(duck, emb)},
+      with {_pq_common(duck)},
       qsubs as (select vec_id as q_id, m, sub from subs
                 where vec_id < {N_QUERIES}),
       qtab as (
@@ -425,23 +423,23 @@ def pq_topk_sql(duck: bool, emb: str = "embeddings") -> str:
     """
 
 
-def run(spark, sf_dir: str, sql_builder, **kw):
+def run(spark, sf_dir: str, sql_builder):
     spark.read.parquet(f"{sf_dir}/embeddings.parquet").createOrReplaceTempView(
         "embeddings"
     )
-    return spark.sql(sql_builder(duck=False, **kw))
+    return spark.sql(sql_builder(duck=False))
 
 
-def ann_recall_sql(duck: bool, emb: str = "embeddings") -> str:
+def ann_recall_sql(duck: bool) -> str:
     """ANN quality evaluation: per-query recall of the IVF and LSH top-k
     against the brute-force ground truth — the measurement every
     approximate index must ship with.  Composes the existing queries as
     subselects (each keeps its own CTE scope); the overlap join is
     (q_id, n_id)-keyed, integer counts only."""
-    brute = ann_topk_sql(duck, emb)
-    ivf = ivf_topk_sql(duck, emb)
-    lsh = ann_lsh_topk_sql(duck, emb)
-    mlsh = ann_multilsh_topk_sql(duck, emb)
+    brute = ann_topk_sql(duck)
+    ivf = ivf_topk_sql(duck)
+    lsh = ann_lsh_topk_sql(duck)
+    mlsh = ann_multilsh_topk_sql(duck)
     return f"""
       select b.q_id,
              count(*) as k,
@@ -467,7 +465,7 @@ MULTI_BITS = 4  # bits per table: collision prob per table ~0.65^bits for
                 # ann_recall query measures)
 
 
-def ann_multilsh_topk_sql(duck: bool, emb: str = "embeddings") -> str:
+def ann_multilsh_topk_sql(duck: bool) -> str:
     """Multi-table LSH ANN: {t} independent hash tables (sign patterns of
     disjoint component ranges); a candidate is any vector sharing the
     query's bucket in ANY table — the standard recall repair for bucketed
@@ -477,21 +475,21 @@ def ann_multilsh_topk_sql(duck: bool, emb: str = "embeddings") -> str:
     q = _quant(duck)
     dot = _dot(duck, "qv.qe", "cv.qe")
     qb_rows = " union all ".join(
-        f"select q_id, {_bucket(duck, 'embedding', t * MULTI_BITS, MULTI_BITS)}"
+        f"select q_id, {_bucket(duck, t * MULTI_BITS, MULTI_BITS)}"
         f" as bucket, {t} as tbl from qsrc"
         for t in range(N_TABLES)
     )
     cb_rows = " union all ".join(
-        f"select n_id, {_bucket(duck, 'embedding', t * MULTI_BITS, MULTI_BITS)}"
+        f"select n_id, {_bucket(duck, t * MULTI_BITS, MULTI_BITS)}"
         f" as bucket, {t} as tbl from csrc"
         for t in range(N_TABLES)
     )
     return f"""
       with qsrc as (
-        select vec_id as q_id, embedding from {emb} where vec_id < {N_QUERIES}
+        select vec_id as q_id, embedding from embeddings where vec_id < {N_QUERIES}
       ),
       csrc as (
-        select vec_id as n_id, embedding from {emb}
+        select vec_id as n_id, embedding from embeddings
       ),
       qb as ({qb_rows}),
       cb as ({cb_rows}),
@@ -500,8 +498,8 @@ def ann_multilsh_topk_sql(duck: bool, emb: str = "embeddings") -> str:
         from qb join cb on cb.tbl = qb.tbl and cb.bucket = qb.bucket
         where qb.q_id <> cb.n_id
       ),
-      qv as (select vec_id as q_id, {q} as qe from {emb} where vec_id < {N_QUERIES}),
-      cv as (select vec_id as n_id, {q} as qe from {emb}),
+      qv as (select vec_id as q_id, {q} as qe from embeddings where vec_id < {N_QUERIES}),
+      cv as (select vec_id as n_id, {q} as qe from embeddings),
       scored as (
         select c.q_id, c.n_id, cast({dot} as bigint) as dot_q
         from cand c

@@ -44,10 +44,10 @@ def stream_pages(spark, input_dir: str, max_files_per_trigger: int = 8) -> DataF
     )
 
 
-def stream_parse_extract(pages: DataFrame, include_dom: bool = False) -> DataFrame:
+def stream_parse_extract(pages: DataFrame) -> DataFrame:
     """The batch parse stage applied to a streaming DataFrame (stateless
     map, no repartition): the same columns, transport charset included."""
-    return parse_extract(pages, include_dom=include_dom, pre_partitioned=True)
+    return parse_extract(pages, include_dom=False, pre_partitioned=True)
 
 
 def start_results_sink(results: DataFrame, out_dir: str, checkpoint_dir: str):
@@ -63,7 +63,7 @@ def start_results_sink(results: DataFrame, out_dir: str, checkpoint_dir: str):
     )
 
 
-def windowed_metrics(pages: DataFrame, results: DataFrame | None = None) -> DataFrame:
+def windowed_metrics(pages: DataFrame) -> DataFrame:
     """Watermarked per-hour ingest metrics by lang: late pages beyond 2h are
     dropped from state; (window, lang) keys keep state bounded."""
     return (
@@ -170,14 +170,14 @@ def host_sessions(pages: DataFrame, timeout: bool = True) -> DataFrame:
     )
 
 
-def streaming_dedup(pages: DataFrame, horizon: str = "2 hours") -> DataFrame:
+def streaming_dedup(pages: DataFrame) -> DataFrame:
     """Streaming url dedup: dropDuplicatesWithinWatermark on the url key —
     a re-crawled url arriving within the watermark horizon is suppressed
     before it pays the parse.  State holds one row per url seen within the
     horizon and is expired by the watermark (bounded by crawl rate x
     horizon, not by corpus size — the indefinitely-growing exact-dedup
     state belongs to the batch resume table, job.run_job)."""
-    return pages.withWatermark("warc_ts", horizon).dropDuplicatesWithinWatermark(
+    return pages.withWatermark("warc_ts", "2 hours").dropDuplicatesWithinWatermark(
         ["url"]
     )
 

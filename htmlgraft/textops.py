@@ -159,18 +159,18 @@ def h32(expr: str, duck: bool) -> str:
 
 # --- shared relational fragments -------------------------------------------
 
-def duped_docs_cte(duck: bool, docs: str = "documents") -> str:
+def duped_docs_cte(duck: bool) -> str:
     """Deterministic dedup corpus: the documents table plus exact copies
     (doc_id%10=0 -> +1_000_000) and near-duplicates with 3 words appended
     (doc_id%17=0 -> +2_000_000).  No RNG, both dialects identical."""
-    return f"""
+    return """
       ddocs as (
-        select doc_id, text from {docs}
+        select doc_id, text from documents
         union all
-        select doc_id + 1000000, text from {docs} where doc_id % 10 = 0
+        select doc_id + 1000000, text from documents where doc_id % 10 = 0
         union all
         select doc_id + 2000000, concat(text, ' zq1 zq2 zq3')
-        from {docs} where doc_id % 17 = 0
+        from documents where doc_id % 17 = 0
       )"""
 
 
@@ -205,11 +205,11 @@ def _positions_sql(duck: bool, k: int, alias: str, src: str) -> str:
             f" as {alias} from {src} where {n} >= {k}")
 
 
-def _postings_ctes(duck: bool, docs: str, words: str, name: str) -> str:
+def _postings_ctes(duck: bool, words: str, name: str) -> str:
     """``{words}``(doc_id, ws) and ``{name}``(doc_id, pos, tok): every word
     of every doc with its 1-based position."""
     d = _d(duck)
-    return f"""{words} as (select doc_id, {d["split"].format("text")} as ws from {docs}),
+    return f"""{words} as (select doc_id, {d["split"].format("text")} as ws from documents),
       {name} as (
         select doc_id, pos, {d['elem'].format('ws', 'pos')} as tok
         from (
@@ -232,14 +232,12 @@ def shingles_cte(
       )"""
 
 
-def _shingles_with(duck: bool, docs: str, k: int,
-                   shingles_ref: str | None) -> str:
+def _shingles_with(duck: bool, shingles_ref: str | None) -> str:
     """``with`` head ending in a (doc_id, shingle) ``shingles`` relation:
     the duped corpus's k-gram shingles, or a pre-materialized relation."""
     if shingles_ref is not None:
         return f"with shingles as (select doc_id, shingle from {shingles_ref}),"
-    return (f"with {duped_docs_cte(duck, docs)},\n"
-            f"      {shingles_cte(duck, 'ddocs', k)},")
+    return f"with {duped_docs_cte(duck)},\n      {shingles_cte(duck)},"
 
 
 def tokens_cte(duck: bool, src: str = "documents") -> str:
@@ -251,11 +249,11 @@ def tokens_cte(duck: bool, src: str = "documents") -> str:
 
 # --- operators ---------------------------------------------------------------
 
-def dedup_exact_sql(duck: bool, docs: str = "documents") -> str:
+def dedup_exact_sql(duck: bool) -> str:
     """Exact dedup: hash-groupBy on md5(text); one shuffle on the hash.
     Output: duplicate groups with the kept (minimum) doc_id."""
     return f"""
-      with {duped_docs_cte(duck, docs)}
+      with {duped_docs_cte(duck)}
       select md5(text) as text_md5,
              count(*) as n_copies,
              min(doc_id) as keeper_id
@@ -266,14 +264,14 @@ def dedup_exact_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def ngram_jaccard_sql(duck: bool, docs: str = "documents", k: int = 3) -> str:
+def ngram_jaccard_sql(duck: bool) -> str:
     """Near-dup pairs by word-3-gram Jaccard >= 0.5 (2*inter >= union; pure
     integer output so both engines hash identically).  All-pairs shingle
     self-join — correct at any scale but O(pairs); the scale path is
     minhash_lsh_sql below."""
     return f"""
-      with {duped_docs_cte(duck, docs)},
-      {shingles_cte(duck, "ddocs", k)},
+      with {duped_docs_cte(duck)},
+      {shingles_cte(duck)},
       sizes as (select doc_id, count(*) as n from shingles group by doc_id),
       inter as (
         select a.doc_id as a_id, b.doc_id as b_id, count(*) as n_inter
@@ -331,9 +329,7 @@ def _minhash_cand_cte(duck: bool) -> str:
       )"""
 
 
-def minhash_lsh_sql(
-    duck: bool, docs: str = "documents", k: int = 3, shingles_ref: str | None = None
-) -> str:
+def minhash_lsh_sql(duck: bool, shingles_ref: str | None = None) -> str:
     """MinHash+LSH near-dup detection, the 100 TB-scale path:
     shingle -> 16 min-hashes (min of md5(seed||'#'||shingle), lexicographic)
     -> 8 bands x 2 rows -> candidates share a band key -> verified by exact
@@ -347,7 +343,7 @@ def minhash_lsh_sql(
     explode is computed three times — ``run_minhash_lsh`` persists it once
     on the Spark side (at 100 TB this would be a checkpointed table)."""
     return f"""
-      {_shingles_with(duck, docs, k, shingles_ref)}
+      {_shingles_with(duck, shingles_ref)}
       {_minhash_cand_cte(duck)},
       sizes as (select doc_id, count(*) as n from shingles group by doc_id),
       inter as (
@@ -369,10 +365,7 @@ def minhash_lsh_sql(
 CONTAIN_MILLI = 800  # containment threshold (per-side, permille)
 
 
-def dedup_containment_sql(
-    duck: bool, docs: str = "documents", k: int = 3,
-    shingles_ref: str | None = None,
-) -> str:
+def dedup_containment_sql(duck: bool, shingles_ref: str | None = None) -> str:
     """ASYMMETRIC near-dup: shingle CONTAINMENT (Broder 1997's other
     measure) over the same LSH candidate pairs as ``minhash_lsh_sql`` —
     resemblance misses subset relations (a quote inside a long page reads
@@ -389,7 +382,7 @@ def dedup_containment_sql(
     div = _d(duck)["div"]
     C = CONTAIN_MILLI
     return f"""
-      {_shingles_with(duck, docs, k, shingles_ref)}
+      {_shingles_with(duck, shingles_ref)}
       {_minhash_cand_cte(duck)},
       sizes as (select doc_id, count(*) as n from shingles group by doc_id),
       inter as (
@@ -418,11 +411,11 @@ def dedup_containment_sql(
     """
 
 
-def run_dedup_containment(spark, sf_dir: str, k: int = 3):
+def run_dedup_containment(spark, sf_dir: str):
     """Persist-once runner (run_minhash_lsh pattern: same shingle
     relation, three consumers)."""
-    ref = _persisted_shingles(spark, sf_dir, k, "ct")
-    return spark.sql(dedup_containment_sql(duck=False, k=k, shingles_ref=ref))
+    ref = _persisted_shingles(spark, sf_dir, "ct")
+    return spark.sql(dedup_containment_sql(duck=False, shingles_ref=ref))
 
 
 def _simhash_expr(duck: bool) -> str:
@@ -586,9 +579,7 @@ def _simhash_bytebands_cte(duck: bool, prefix: str = "",
 SIMHASH_BUCKET_CAP = 64
 
 
-def simhash_neardup_sql(
-    duck: bool, docs: str = "documents", sh_ref: str | None = None
-) -> str:
+def simhash_neardup_sql(duck: bool, sh_ref: str | None = None) -> str:
     """SimHash near-dup detection: Hamming-distance banding over the duped
     corpus.  The 32-bit simhash splits into 4 byte-bands; docs sharing any
     (band, byte) pair become candidates (guaranteed to catch every pair
@@ -632,7 +623,7 @@ def simhash_neardup_sql(
     )
     sub_key = f"cast(({shr.format('rem', '6 * sb.sub')} & 63) as int)"
     if sh_ref is None:
-        pre = f"""with {duped_docs_cte(duck, docs)},
+        pre = f"""with {duped_docs_cte(duck)},
       {_hashed_tokens_cte(duck, "ddocs")},
       sh as (select doc_id, {_simhash_expr(duck)} as simhash from hv_docs),"""
     else:
@@ -720,9 +711,7 @@ def _cc_ctes(duck: bool, pairs_src: str) -> str:
     return ",\n      ".join(parts)
 
 
-def dedup_clusters_sql(
-    duck: bool, docs: str = "documents", pairs_ref: str | None = None
-) -> str:
+def dedup_clusters_sql(duck: bool) -> str:
     """Cluster-level dedup keeper selection: near-dup PAIRS (from the
     MinHash+LSH scale path) -> connected components via iterative min-id
     label propagation -> (doc_id, keeper_id, cluster_size), which is the
@@ -737,12 +726,8 @@ def dedup_clusters_sql(
     O(log n) rounds) and stop on a changed-labels==0 check.  The DuckDB
     oracle unrolls the identical rounds as nested CTEs (the same
     iterative-algorithm oracle pattern as clusterops kmeans)."""
-    if pairs_ref is None:
-        pairs_src = f"({minhash_lsh_sql(duck, docs)})"
-    else:
-        pairs_src = pairs_ref
     return f"""
-      with {_cc_ctes(duck, pairs_src)}
+      with {_cc_ctes(duck, f"({minhash_lsh_sql(duck)})")}
       select l.id as doc_id,
              cast(l.lbl as bigint) as keeper_id,
              cast(c.n as bigint) as cluster_size
@@ -753,7 +738,7 @@ def dedup_clusters_sql(
     """
 
 
-def dedup_pipeline_sql(duck: bool, docs: str = "documents") -> str:
+def dedup_pipeline_sql(duck: bool) -> str:
     """The COMPOSED corpus-dedup product: every document of the duped
     corpus gets a final (keep, reason, keeper_id) verdict combining exact
     dedup (md5 group minimum) with near-dup cluster keepers (MinHash+LSH
@@ -766,9 +751,9 @@ def dedup_pipeline_sql(duck: bool, docs: str = "documents") -> str:
     This SQL is the value oracle (CC rounds unrolled); the Spark runner
     composes the ITERATIVE run_dedup_clusters with one md5 aggregation —
     two hash shuffles beyond the cluster step, linear at any scale."""
-    pairs_src = f"({minhash_lsh_sql(duck, docs)})"
+    pairs_src = f"({minhash_lsh_sql(duck)})"
     return f"""
-      with {duped_docs_cte(duck, docs)},
+      with {duped_docs_cte(duck)},
       {_cc_ctes(duck, pairs_src)},
       clusters as (select id as doc_id, lbl as cluster_keeper from l{CC_ITERS}),
       hd as (select doc_id, md5(text) as h from ddocs),
@@ -852,7 +837,7 @@ LANG_MARKERS = {
 }
 
 
-def lang_id_sql(duck: bool, docs: str = "documents") -> str:
+def lang_id_sql(duck: bool) -> str:
     """Language-ID by marker-token counting: explode tokens, join a tiny
     inline marker table (broadcast in Spark), count hits per candidate
     language, argmax with lexicographic tiebreak; zero-hit docs -> 'und'."""
@@ -861,7 +846,7 @@ def lang_id_sql(duck: bool, docs: str = "documents") -> str:
     )
     markers = f"(values {rows}) as m(mlang, mtok)"
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       hits as (
         select t.doc_id, m.mlang, count(*) as n_hits
         from tokens t join {markers} on t.tok = m.mtok
@@ -877,7 +862,7 @@ def lang_id_sql(duck: bool, docs: str = "documents") -> str:
       select d.doc_id,
              coalesce(b.mlang, 'und') as pred_lang,
              cast(coalesce(b.n_hits, 0) as bigint) as n_hits
-      from {docs} d
+      from documents d
       left join best b on b.doc_id = d.doc_id and b.rk = 1
       order by d.doc_id
     """
@@ -886,12 +871,12 @@ def lang_id_sql(duck: bool, docs: str = "documents") -> str:
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 
-def quality_sql(duck: bool, docs: str = "documents") -> str:
+def quality_sql(duck: bool) -> str:
     """Quality scoring: token/char counts, distinct-token and stopword
     ratios as integer percents (floor(100*x) — identical in both engines)."""
     stop_in = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       stats as (
         select doc_id,
                count(*) as n_tokens,
@@ -906,12 +891,12 @@ def quality_sql(duck: bool, docs: str = "documents") -> str:
              cast(s.n_stop as bigint) as n_stop,
              cast(floor(100.0 * s.n_distinct / s.n_tokens) as bigint) as distinct_pct,
              cast(floor(100.0 * s.n_stop / s.n_tokens) as bigint) as stop_pct
-      from {docs} d join stats s on s.doc_id = d.doc_id
+      from documents d join stats s on s.doc_id = d.doc_id
       order by d.doc_id
     """
 
 
-def token_count_sql(duck: bool, docs: str = "documents") -> str:
+def token_count_sql(duck: bool) -> str:
     """Token counting: whitespace tokens plus a BPE-ish regex token count
     (letter runs / digit runs / single punctuation)."""
     d = _d(duck)
@@ -923,23 +908,23 @@ def token_count_sql(duck: bool, docs: str = "documents") -> str:
              cast({n_ws} as bigint) as ws_tokens,
              cast({n_sub} as bigint) as subword_tokens,
              cast(length(text) as bigint) as n_chars
-      from {docs}
+      from documents
       order by doc_id
     """
 
 
-def fingerprint_sql(duck: bool, docs: str = "documents", k: int = 4) -> str:
+def fingerprint_sql(duck: bool) -> str:
     """Document fingerprinting: whole-text md5 plus a winnowing-style
     min-hash over word 4-grams (rolling window); short docs fall back to
     the whole-text hash."""
     return f"""
-      with src as (select doc_id, text from {docs}),
-      {shingles_cte(duck, "src", k)},
+      with src as (select doc_id, text from documents),
+      {shingles_cte(duck, "src", 4)},
       mins as (select doc_id, min(md5(shingle)) as min_sh from shingles group by doc_id)
       select d.doc_id,
              md5(d.text) as fp,
              coalesce(m.min_sh, md5(d.text)) as winnow_fp
-      from {docs} d left join mins m on m.doc_id = d.doc_id
+      from documents d left join mins m on m.doc_id = d.doc_id
       order by d.doc_id
     """
 
@@ -958,7 +943,7 @@ CMS_W = 32   # counters per row — DELIBERATELY smaller than the corpus
              # min-over-rows reduction actually earns its keep
 
 
-def cms_freq_sql(duck: bool, docs: str = "documents") -> str:
+def cms_freq_sql(duck: bool) -> str:
     """Count-Min sketch token-frequency estimation — the frequency member
     of the sketch tier (bloom_frontier = membership, hll_card =
     cardinality): a {CMS_D}x{CMS_W} integer counter matrix replaces the
@@ -984,7 +969,7 @@ def cms_freq_sql(duck: bool, docs: str = "documents") -> str:
     j_exp = f"{d['explode']}({rng}) as j"
     col = f"({h32(f'concat(tok, chr(35), cast(j as {s}))', duck)}) % {CMS_W}"
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       tf as (select tok, count(*) as n from tokens group by tok),
       tfj as (select tok, n, {j_exp} from tf),
       cells as (select j, {col} as col, n from tfj),
@@ -1003,7 +988,7 @@ HQ_SUB = 1 << (HQ_M + 1)   # sub-buckets per bit-length octave
 HQ_QS = (50, 90, 99)  # reported percentiles
 
 
-def hist_quantiles_sql(duck: bool, docs: str = "documents") -> str:
+def hist_quantiles_sql(duck: bool) -> str:
     """Log-bucketed histogram quantiles (the HdrHistogram scheme) — the
     QUANTILE member of the sketch tier (bloom_frontier = membership,
     hll_card = cardinality, cms_freq = frequency).  An exact percentile of
@@ -1041,9 +1026,9 @@ def hist_quantiles_sql(duck: bool, docs: str = "documents") -> str:
     return f"""
       with vals as (
         select 'tokens' as metric,
-               cast({ln}({ws}) as bigint) as v from {docs}
+               cast({ln}({ws}) as bigint) as v from documents
         union all
-        select 'chars' as metric, cast(n_chars as bigint) as v from {docs}
+        select 'chars' as metric, cast(n_chars as bigint) as v from documents
       ),
       keyed as (
         select metric,
@@ -1137,10 +1122,10 @@ def heavy_hitters_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def run(spark, sf_dir: str, sql_builder, **kw):
+def run(spark, sf_dir: str, sql_builder):
     """Execute one textops plan on Spark over the sf_dir documents table."""
     _register_documents(spark, sf_dir)
-    return spark.sql(sql_builder(duck=False, **kw))
+    return spark.sql(sql_builder(duck=False))
 
 
 def _load_weights_view(spark, weights_path: str, view: str) -> str:
@@ -1176,7 +1161,7 @@ def run_hash_embed(spark, sf_dir: str, weights_path: str | None = None):
     return spark.sql(hash_embed_sql(duck=False, weights_ref=ref))
 
 
-def run_minhash_lsh(spark, sf_dir: str, k: int = 3):
+def run_minhash_lsh(spark, sf_dir: str):
     """Spark-side MinHash+LSH with the shingle relation persisted once
     (it feeds three consumers; Catalyst inlines CTEs, so an unpersisted
     plan would recompute the explode three times).
@@ -1185,11 +1170,11 @@ def run_minhash_lsh(spark, sf_dir: str, k: int = 3):
     before the shingle explode — the scan yields 3 partitions at sf0.1,
     which would otherwise bound the explode + min-hash map side (same
     scan-parallelism trap as run_simhash_neardup)."""
-    ref = _persisted_shingles(spark, sf_dir, k, "mh")
-    return spark.sql(minhash_lsh_sql(duck=False, k=k, shingles_ref=ref))
+    ref = _persisted_shingles(spark, sf_dir, "mh")
+    return spark.sql(minhash_lsh_sql(duck=False, shingles_ref=ref))
 
 
-def _persisted_shingles(spark, sf_dir: str, k: int, tag: str) -> str:
+def _persisted_shingles(spark, sf_dir: str, tag: str) -> str:
     """Persist the duped corpus's shingle relation once and return its
     view name (``__{tag}_shingles``).  The corpus is repartitioned to the
     session's shuffle parallelism before the explode (see
@@ -1200,19 +1185,19 @@ def _persisted_shingles(spark, sf_dir: str, k: int, tag: str) -> str:
         f"with {duped_docs_cte(False)} select doc_id, text from ddocs"
     ).repartition(n_parts).createOrReplaceTempView(f"__{tag}_ddocs")
     sh = spark.sql(
-        f"with {shingles_cte(False, f'__{tag}_ddocs', k)} "
+        f"with {shingles_cte(False, f'__{tag}_ddocs')} "
         "select doc_id, shingle from shingles"
     ).persist()
     sh.createOrReplaceTempView(f"__{tag}_shingles")
     return f"__{tag}_shingles"
 
 
-def run_dedup_recall(spark, sf_dir: str, k: int = 3):
+def run_dedup_recall(spark, sf_dir: str):
     """Spark-side banding-recall eval with the shingle relation persisted
     once (five consumers: min-hashing, both sides of the all-pairs join,
     both size lookups)."""
-    ref = _persisted_shingles(spark, sf_dir, k, "dr")
-    return spark.sql(dedup_recall_sql(duck=False, k=k, shingles_ref=ref))
+    ref = _persisted_shingles(spark, sf_dir, "dr")
+    return spark.sql(dedup_recall_sql(duck=False, shingles_ref=ref))
 
 
 def run_ppl_bucket(spark, sf_dir: str):
@@ -1309,8 +1294,8 @@ def run_dedup_clusters(spark, sf_dir: str):
     )
 
 
-def keyword_extract_sql(duck: bool, docs: str = "documents", k: int = 3) -> str:
-    """Keyword extraction: top-k tokens per document ranked by
+def keyword_extract_sql(duck: bool) -> str:
+    """Keyword extraction: top-3 tokens per document ranked by
     (term frequency DESC, document frequency ASC, token ASC) — the exact
     integer ordering surrogate for tf-idf (rare-in-corpus but
     frequent-in-doc), chosen over the float formula so both engines hash
@@ -1320,7 +1305,7 @@ def keyword_extract_sql(duck: bool, docs: str = "documents", k: int = 3) -> str:
     relation is vocabulary-sized (broadcast-joinable); top-k via a window
     partitioned by doc_id — never a global sort."""
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       tf as (
         select doc_id, tok, count(*) as tf
         from tokens group by doc_id, tok
@@ -1342,7 +1327,7 @@ def keyword_extract_sql(duck: bool, docs: str = "documents", k: int = 3) -> str:
              cast(tf as bigint) as tf,
              cast(df as bigint) as df
       from ranked
-      where rk <= {k}
+      where rk <= 3
       order by doc_id, rk
     """
 
@@ -1350,7 +1335,7 @@ def keyword_extract_sql(duck: bool, docs: str = "documents", k: int = 3) -> str:
 SAMPLE_MOD = 8  # keep 1/8 of documents per stratum
 
 
-def stratified_sample_sql(duck: bool, docs: str = "documents") -> str:
+def stratified_sample_sql(duck: bool) -> str:
     """Deterministic stratified sampling: keep the documents whose 32-bit
     content-independent hash of doc_id falls in one residue class — a pure
     filter (no shuffle, no RNG, reproducible across runs and engines), with
@@ -1359,7 +1344,7 @@ def stratified_sample_sql(duck: bool, docs: str = "documents") -> str:
     h = h32(f"cast(doc_id as {_d(duck)['str']})", duck)
     return f"""
       with sampled as (
-        select doc_id, lang from {docs}
+        select doc_id, lang from documents
         where {h} % {SAMPLE_MOD} = 0
       )
       select lang,
@@ -1376,7 +1361,7 @@ PRIORITY_K = 32           # sample size
 PRIORITY_U = 4294967296   # 2^32 fixed-point denominator for u
 
 
-def sample_priority_sql(duck: bool, docs: str = "documents") -> str:
+def sample_priority_sql(duck: bool) -> str:
     """Weighted sampling without replacement via PRIORITY SAMPLING
     (Duffield-Lund-Thorup, JACM 2007): weight w = token count (length-
     proportional corpus subsampling), u = (h32(doc_id)+1)/2^32 as exact
@@ -1401,7 +1386,7 @@ def sample_priority_sql(duck: bool, docs: str = "documents") -> str:
     nw = f"{d['len']}(ws)"
     return f"""
       with base as (
-        select doc_id, {d['split'].format('text')} as ws from {docs}
+        select doc_id, {d['split'].format('text')} as ws from documents
       ),
       prios as (
         select doc_id, {nw} as w,
@@ -1451,7 +1436,7 @@ def _script_cls(name: str, duck: bool) -> str:
     return _d(duck)["uclass"].format(name)
 
 
-def script_mix_sql(duck: bool, docs: str = "documents") -> str:
+def script_mix_sql(duck: bool) -> str:
     """Unicode SCRIPT histogram + mixed-script spam signal — the
     script-level language filter multilingual corpus pipelines run
     (CCNet/mC4 lineage) and the homoglyph detector abuse pipelines run:
@@ -1489,7 +1474,7 @@ def script_mix_sql(duck: bool, docs: str = "documents") -> str:
                concat(repeat(concat(case doc_id % {SCRIPT_LANES} {lanes}
                                     end, ' '), 1 + doc_id % 3),
                       cast(doc_id as {s})) as stext
-        from {docs}
+        from documents
       ),
       counted as (
         select doc_id,
@@ -1532,7 +1517,7 @@ DECONTAM_K = 13  # the classic 13-gram contamination window
 EVAL_MOD = 50    # fake benchmark set: every 50th document
 
 
-def decontaminate_sql(duck: bool, docs: str = "documents") -> str:
+def decontaminate_sql(duck: bool) -> str:
     """Benchmark decontamination: flag training documents sharing any word
     {k}-gram with the held-out eval set (here: every {mod}th document
     stands in for the benchmark).  The eval-side shingle relation is tiny
@@ -1542,10 +1527,10 @@ def decontaminate_sql(duck: bool, docs: str = "documents") -> str:
     doc_id with the count of distinct shared {k}-grams."""
     return f"""
       with train as (
-        select doc_id, text from {docs} where doc_id % {EVAL_MOD} <> 0
+        select doc_id, text from documents where doc_id % {EVAL_MOD} <> 0
       ),
       evalset as (
-        select doc_id, text from {docs} where doc_id % {EVAL_MOD} = 0
+        select doc_id, text from documents where doc_id % {EVAL_MOD} = 0
       ),
       {shingles_cte(duck, "train", DECONTAM_K, prefix="train_")},
       {shingles_cte(duck, "evalset", DECONTAM_K, prefix="eval_")},
@@ -1558,14 +1543,13 @@ def decontaminate_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def bigrams_cte(duck: bool, src: str = "documents", prefix: str = "") -> str:
+def bigrams_cte(duck: bool) -> str:
     """Consecutive word bigrams per doc WITH multiplicity (unlike the
     distinct shingle relation): one explode over a transform of positions."""
-    w, b = prefix + "bg_words", prefix + "bigrams"
     return f"""
-      {w} as (select doc_id, {_d(duck)["split"].format("text")} as ws from {src}),
-      {b} as (
-        {_kgrams_sql(duck, 2, "doc_id, ", "bg", w)}
+      bg_words as (select doc_id, {_d(duck)["split"].format("text")} as ws from documents),
+      bigrams as (
+        {_kgrams_sql(duck, 2, "doc_id, ", "bg", "bg_words")}
       )"""
 
 
@@ -1578,11 +1562,11 @@ def _bigram_word(duck: bool, i: int) -> str:
 LM_SCALE = 1_000_000
 
 
-def lm_scored_cte(duck: bool, docs: str = "documents") -> str:
+def lm_scored_cte(duck: bool) -> str:
     """CTE chain ending in ``doc_scores`` (doc_id, n_bigrams, lm_score,
     min_logit): the self-trained bigram LM scoring relation shared by
     ``lm_score_sql`` (reports it) and ``ppl_bucket_sql`` (buckets on it)."""
-    return f"""{bigrams_cte(duck, docs)},
+    return f"""{bigrams_cte(duck)},
       model as (
         select bg, count(*) as c2 from bigrams group by bg
       ),
@@ -1608,7 +1592,7 @@ def lm_scored_cte(duck: bool, docs: str = "documents") -> str:
       )"""
 
 
-def lm_score_sql(duck: bool, docs: str = "documents") -> str:
+def lm_score_sql(duck: bool) -> str:
     """N-gram language-model quality scoring (self-trained): a bigram model
     is counted over the corpus itself, then every document is scored by the
     sum of its bigram conditional frequencies — the KenLM-filter shape
@@ -1620,16 +1604,14 @@ def lm_score_sql(duck: bool, docs: str = "documents") -> str:
     bigram key with map-side partials); scoring is one hash join of doc
     bigrams against the model — linear in the corpus."""
     return f"""
-      with {lm_scored_cte(duck, docs)}
+      with {lm_scored_cte(duck)}
       select doc_id, n_bigrams, lm_score, min_logit
       from doc_scores
       order by doc_id
     """
 
 
-def ppl_bucket_sql(
-    duck: bool, docs: str = "documents", scores_ref: str | None = None
-) -> str:
+def ppl_bucket_sql(duck: bool, scores_ref: str | None = None) -> str:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020, public): split
     the corpus into head/middle/tail thirds by LM typicality — CCNet keeps
     the low-perplexity head for training and uses the buckets as curriculum
@@ -1659,7 +1641,7 @@ def ppl_bucket_sql(
     inlining would otherwise run the whole bigram-model pipeline twice —
     ``run_ppl_bucket`` persists it once."""
     if scores_ref is None:
-        pre = f"with {lm_scored_cte(duck, docs)},"
+        pre = f"with {lm_scored_cte(duck)},"
     else:
         pre = (
             "with doc_scores as (select doc_id, n_bigrams, lm_score, "
@@ -1754,7 +1736,7 @@ def _norm_expr(expr: str, duck: bool) -> str:
     return f"trim(regexp_replace({x}, '[{bs}t{bs}n{bs}r ]+', ' '{d['re_g']}))"
 
 
-def messy_docs_cte(duck: bool, docs: str = "documents") -> str:
+def messy_docs_cte(duck: bool) -> str:
     """Deterministic dirty-text corpus for the normalizer: the documents
     table plus variants wrapped in curly quotes + zero-width + em-dash
     (doc_id%7 -> +3_000_000) and NBSP/tab/CRLF-polluted copies
@@ -1763,19 +1745,19 @@ def messy_docs_cte(duck: bool, docs: str = "documents") -> str:
      256 in both dialects."""
     return f"""
       mdocs as (
-        select doc_id, text from {docs}
+        select doc_id, text from documents
         union all
         select doc_id + 3000000,
                '“' || text || '”​—x'
-        from {docs} where doc_id % 7 = 0
+        from documents where doc_id % 7 = 0
         union all
         select doc_id + 4000000,
                'a b' || chr(9) || text || chr(13) || chr(10)
-        from {docs} where doc_id % 11 = 0
+        from documents where doc_id % 11 = 0
       )"""
 
 
-def text_normalize_sql(duck: bool, docs: str = "documents") -> str:
+def text_normalize_sql(duck: bool) -> str:
     """Corpus text normalization (the OSCAR/C4 cleanup pass): Unicode
     punctuation folding, zero-width stripping, NBSP and whitespace
     normalization, as ONE map-only projection — no UDF, no shuffle, linear
@@ -1784,7 +1766,7 @@ def text_normalize_sql(duck: bool, docs: str = "documents") -> str:
     md5 of the normalized text plus byte deltas so the oracle checks the
     exact output bytes."""
     return f"""
-      with {messy_docs_cte(duck, docs)}
+      with {messy_docs_cte(duck)}
       select doc_id,
              md5({_norm_expr('text', duck)}) as norm_md5,
              cast({_octets('text', duck)} as bigint) as bytes_in,
@@ -1801,7 +1783,7 @@ SHARD_LANES = 8       # parallel writer lanes; windows are lane-local
 SHARD_TARGET = 2048   # target shard size (bytes) per output file
 
 
-def shard_pack_sql(duck: bool, docs: str = "documents") -> str:
+def shard_pack_sql(duck: bool) -> str:
     """Size-targeted output sharding (the dataset-writer manifest): assign
     every document to an output shard of ~{SHARD_TARGET} bytes so training
     dataloaders see uniform files.  Documents pack greedily in doc_id order
@@ -1823,7 +1805,7 @@ def shard_pack_sql(duck: bool, docs: str = "documents") -> str:
         select doc_id,
                cast(doc_id % {SHARD_LANES} as bigint) as lane,
                cast({_octets('text', duck)} as bigint) as n_bytes
-        from {docs}
+        from documents
       ),
       runs as (
         select doc_id, lane, n_bytes,
@@ -1841,10 +1823,7 @@ def shard_pack_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def dedup_recall_sql(
-    duck: bool, docs: str = "documents", k: int = 3,
-    shingles_ref: str | None = None,
-) -> str:
+def dedup_recall_sql(duck: bool, shingles_ref: str | None = None) -> str:
     """MinHash-LSH candidate-recall evaluation — the dedup analogue of
     ann_recall ("measure, don't guess"): compare the LSH CANDIDATE pair set
     (pre-verification banding output) against ground truth = ALL pairs with
@@ -1858,7 +1837,7 @@ def dedup_recall_sql(
     ``shingles_ref`` names a pre-materialized shingle relation (five
     consumers here — ``run_dedup_recall`` persists it once)."""
     return f"""
-      {_shingles_with(duck, docs, k, shingles_ref)}
+      {_shingles_with(duck, shingles_ref)}
       {_minhash_cand_cte(duck)},
       sizes as (select doc_id, count(*) as n from shingles group by doc_id),
       inter_all as (
@@ -1887,7 +1866,7 @@ HOST_CAP_K = 8        # max documents kept per host
 HOST_CAP_LANES = 4    # phase-1 lanes bounding the skewed-host window
 
 
-def host_cap_sql(duck: bool, docs: str = "documents") -> str:
+def host_cap_sql(duck: bool) -> str:
     """Per-host document cap (the C4/crawl-curation anti-domination pass):
     keep at most {HOST_CAP_K} documents per host, smallest doc_id first.
     The synthesized host map is skewed by construction (one heavy host
@@ -1912,7 +1891,7 @@ def host_cap_sql(duck: bool, docs: str = "documents") -> str:
       with hosted as (
         select doc_id, {_d(duck)["host"]} as host,
                doc_id % {HOST_CAP_LANES} as lane
-        from {docs}
+        from documents
       ),
       r1 as (
         select doc_id, host, lane,
@@ -1933,14 +1912,14 @@ def host_cap_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def repetition_stats_sql(duck: bool, docs: str = "documents") -> str:
+def repetition_stats_sql(duck: bool) -> str:
     """Gopher-style repetition filters (Rae et al. 2021, public): fraction
     of tokens taken by the most frequent token and by the most frequent
     bigram, as integer floor-percents.  Two bounded aggregations — linear,
     and the per-doc tops come from a window max, never a global sort."""
     return f"""
-      with {tokens_cte(duck, docs)},
-      {bigrams_cte(duck, docs)},
+      with {tokens_cte(duck)},
+      {bigrams_cte(duck)},
       tok_counts as (
         select doc_id, tok, count(*) as c from tokens group by doc_id, tok
       ),
@@ -1973,14 +1952,14 @@ def repetition_stats_sql(duck: bool, docs: str = "documents") -> str:
 BADWORDS = ("slow", "dup", "leak")
 
 
-def badwords_filter_sql(duck: bool, docs: str = "documents") -> str:
+def badwords_filter_sql(duck: bool) -> str:
     """Blocklist filter (C4-style "bad words" pass): count blocklisted
     tokens per document and emit a keep flag.  The blocklist is a tiny
     inline relation -- Spark broadcasts it, so at 10^12 docs this is one
     map-side join plus one hash aggregation, linear in corpus size."""
     rows = ", ".join(f"('{w}')" for w in BADWORDS)
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       hits as (
         select t.doc_id, count(*) as n
         from tokens t join (values {rows}) as b(word) on t.tok = b.word
@@ -1990,7 +1969,7 @@ def badwords_filter_sql(duck: bool, docs: str = "documents") -> str:
              cast(coalesce(h.n, 0) as bigint) as n_bad,
              cast(case when coalesce(h.n, 0) = 0 then 1 else 0 end as bigint)
                as keep
-      from {docs} d left join hits h on h.doc_id = d.doc_id
+      from documents d left join hits h on h.doc_id = d.doc_id
       order by d.doc_id
     """
 
@@ -2006,7 +1985,7 @@ def _pii_pat(pat: str, duck: bool) -> str:
     return "'" + pat.replace("\\", _d(duck)["bs"]) + "'"
 
 
-def pii_scrub_sql(duck: bool, docs: str = "documents") -> str:
+def pii_scrub_sql(duck: bool) -> str:
     """PII detection + redaction: count email/phone matches and emit the
     redacted text.  PII-bearing text is synthesized deterministically
     (doc_id % 3 == 0 gets an email + phone appended) so the oracle can
@@ -2031,7 +2010,7 @@ def pii_scrub_sql(duck: bool, docs: str = "documents") -> str:
                         '.example.com or call +1-555-',
                         lpad(cast(doc_id % 10000 as {s}), 4, '0'), ' now')
                else text end as text
-        from {docs}
+        from documents
       )
       select doc_id,
              cast({n_emails} as bigint) as n_emails,
@@ -2042,7 +2021,7 @@ def pii_scrub_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def corpus_filter_sql(duck: bool, docs: str = "documents") -> str:
+def corpus_filter_sql(duck: bool) -> str:
     """Composed keep/drop verdict (the C4/RefinedWeb filter-pipeline shape):
     one pass computes token count, stopword presence, and blocklist hits,
     then emits keep + the FIRST matching reject reason in a fixed priority
@@ -2053,7 +2032,7 @@ def corpus_filter_sql(duck: bool, docs: str = "documents") -> str:
     rows = ", ".join(f"('{w}')" for w in BADWORDS)
     stop_in = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       stats as (
         select doc_id,
                count(*) as n_tokens,
@@ -2087,9 +2066,7 @@ def corpus_filter_sql(duck: bool, docs: str = "documents") -> str:
 STATE_ID_MAX = 1000000  # duped corpus: originals < 1M, synthetic copies >= 1M
 
 
-def dedup_incremental_sql(
-    duck: bool, docs: str = "documents", k: int = 3, shingles_ref: str | None = None
-) -> str:
+def dedup_incremental_sql(duck: bool, shingles_ref: str | None = None) -> str:
     """Incremental MinHash dedup -- the daily-crawl-increment shape: the
     duped corpus splits into STATE (originals, doc_id < 1M) and a NEW BATCH
     (the synthetic exact copies and near-dups, doc_id >= 1M); emit every
@@ -2101,7 +2078,7 @@ def dedup_incremental_sql(
     shingles/hashes ONLY its own documents and joins its bands against the
     state band table -- O(batch), not O(corpus), per increment."""
     return f"""
-      {_shingles_with(duck, docs, k, shingles_ref)}
+      {_shingles_with(duck, shingles_ref)}
       {_minhash_bands_cte(duck)},
       cand as (
         select distinct a.doc_id as state_id, b.doc_id as new_id
@@ -2126,31 +2103,30 @@ def dedup_incremental_sql(
     """
 
 
-def run_dedup_incremental(spark, sf_dir: str, k: int = 3):
+def run_dedup_incremental(spark, sf_dir: str):
     """Spark runner: same persisted-shingle + repartition discipline as
     ``run_minhash_lsh`` (the shingle relation feeds min-hashing, sizes and
     the verify join)."""
-    ref = _persisted_shingles(spark, sf_dir, k, "inc")
-    return spark.sql(dedup_incremental_sql(duck=False, k=k, shingles_ref=ref))
+    ref = _persisted_shingles(spark, sf_dir, "inc")
+    return spark.sql(dedup_incremental_sql(duck=False, shingles_ref=ref))
 
 
-def positioned_spans_cte(
-    duck: bool, src: str = "ddocs", k: int = 8, prefix: str = ""
-) -> str:
-    """Word k-gram spans WITH their 1-based start position: span i =
-    ws[i]..ws[i+k-1].  Unlike ``shingles_cte`` (distinct, position-free,
-    for set-similarity), this keeps every occurrence and where it starts,
-    which substring-level dedup needs to say WHICH bytes to cut."""
+def positioned_spans_cte(duck: bool) -> str:
+    """Word ``SPAN_K``-gram spans of ``ddocs`` WITH their 1-based start
+    position: span i = ws[i]..ws[i+SPAN_K-1].  Unlike ``shingles_cte``
+    (distinct, position-free, for set-similarity), this keeps every
+    occurrence and where it starts, which substring-level dedup needs to
+    say WHICH bytes to cut."""
     d = _d(duck)
+    k = SPAN_K
     span = d["slice_join"].format("ws", "i", f"i + {k - 1}", k, "' '")
-    w, sp = prefix + "pwords", prefix + "pspans"
     return f"""
-      {w} as (select doc_id, {d["split"].format("text")} as ws from {src}),
-      {sp} as (
+      pwords as (select doc_id, {d["split"].format("text")} as ws from ddocs),
+      pspans as (
         select doc_id, pos, span from (
           select doc_id, i as pos, {span} as span
           from (
-            {_positions_sql(duck, k, "i", w)}
+            {_positions_sql(duck, k, "i", "pwords")}
           )
         )
       )"""
@@ -2159,7 +2135,7 @@ def positioned_spans_cte(
 SPAN_K = 8  # fixed span width (tokens) for substring-level dedup
 
 
-def substring_dedup_sql(duck: bool, docs: str = "documents") -> str:
+def substring_dedup_sql(duck: bool) -> str:
     """Substring-level duplication map (the ExactSubstr shape of Lee et al.
     2022, "Deduplicating Training Data Makes Language Models Better" —
     public): find every {SPAN_K}-token span occurring in MORE THAN ONE
@@ -2175,8 +2151,8 @@ def substring_dedup_sql(duck: bool, docs: str = "documents") -> str:
     ONE shuffle keyed on the span hash; the report joins spans back on the
     same key — linear, no self-join, no suffix array to build."""
     return f"""
-      with {duped_docs_cte(duck, docs)},
-      {positioned_spans_cte(duck, "ddocs", SPAN_K)},
+      with {duped_docs_cte(duck)},
+      {positioned_spans_cte(duck)},
       hashed as (
         select doc_id, pos, md5(span) as h from pspans
       ),
@@ -2207,7 +2183,7 @@ PACK_CTX = 512   # training context length (tokens)
 PACK_SHARDS = 32  # writer shards; windows are shard-local
 
 
-def seq_pack_sql(duck: bool, docs: str = "documents") -> str:
+def seq_pack_sql(duck: bool) -> str:
     """Sequence packing for training batches (the GPT-style concatenate-and-
     split shape): documents are concatenated in deterministic order within a
     writer shard and split at {PACK_CTX}-token boundaries; each document
@@ -2225,7 +2201,7 @@ def seq_pack_sql(duck: bool, docs: str = "documents") -> str:
       with per_doc as (
         select doc_id, doc_id % {PACK_SHARDS} as shard,
                cast({n_tok} as bigint) as n_tokens
-        from {docs}
+        from documents
       ),
       runs as (
         select doc_id, shard, n_tokens,
@@ -2250,7 +2226,7 @@ EPOCH_BLOCKS = 64    # hash blocks -> rank windows are block-local
 EPOCH_READERS = 4    # data-loader workers the permutation is sliced for
 
 
-def epoch_shuffle_sql(duck: bool, docs: str = "documents") -> str:
+def epoch_shuffle_sql(duck: bool) -> str:
     """Deterministic training-epoch shuffle — the data-loading-side
     operator every trainer needs over a packed corpus: for each epoch, a
     seeded pseudorandom PERMUTATION of the documents plus the contiguous
@@ -2281,7 +2257,7 @@ def epoch_shuffle_sql(duck: bool, docs: str = "documents") -> str:
     e_exp = f"{d['explode']}({epochs}) as epoch"
     hkey = f"md5(concat('ep', cast(epoch as {s}), '#', cast(doc_id as {s})))"
     return f"""
-      with items as (select doc_id, {e_exp} from {docs}),
+      with items as (select doc_id, {e_exp} from documents),
       hashed as (
         select epoch, doc_id, {hkey} as hkey,
                ({h32(hkey, duck)}) % {EPOCH_BLOCKS} as block
@@ -2324,7 +2300,7 @@ CHUNK_W = 64   # passage window (tokens)
 CHUNK_S = 48   # stride (tokens) -> 16-token overlap
 
 
-def passage_chunk_sql(duck: bool, docs: str = "documents") -> str:
+def passage_chunk_sql(duck: bool) -> str:
     """Overlapping passage chunking (the RAG/embedding-index shape): split
     each document into {CHUNK_W}-token windows every {CHUNK_S} tokens
     (16-token overlap), emitting per chunk its start, length and content
@@ -2345,7 +2321,7 @@ def passage_chunk_sql(duck: bool, docs: str = "documents") -> str:
         chunk = f"array_join(slice(ws, 1 + j * {CHUNK_S}, {CHUNK_W}), ' ')"
     return f"""
       with words as (
-        select doc_id, {ws} as ws from {docs}
+        select doc_id, {ws} as ws from documents
       ),
       chunks as (
         select doc_id, j, {chunk} as chunk_text,
@@ -2370,8 +2346,7 @@ QC_BUCKETS = 4096          # feature hash space
 QC_MULT = 2654435761       # Knuth multiplicative constant (public)
 
 
-def quality_classify_sql(duck: bool, docs: str = "documents",
-                         weights_ref: str | None = None) -> str:
+def quality_classify_sql(duck: bool, weights_ref: str | None = None) -> str:
     """Hash-bucket linear quality classifier (the fastText-filter shape used
     by CCNet/LLaMA data pipelines — public): every token hashes into one of
     {QC_BUCKETS} feature buckets, each bucket carries a weight, and the
@@ -2395,7 +2370,7 @@ def quality_classify_sql(duck: bool, docs: str = "documents",
             f"from (select {un}({seeds}) as b)"
         )
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       weights as (
         {weights}
       ),
@@ -2458,7 +2433,7 @@ def global_topk_cand(duck: bool, name: str, rel: str, cols: str,
       {name} as (select {cols} from {name}_l where _lrk <= {k})"""
 
 
-def vocab_induct_sql(duck: bool, docs: str = "documents") -> str:
+def vocab_induct_sql(duck: bool) -> str:
     """Vocabulary induction (the tokenizer-building primitive): the top
     {VOCAB_SIZE} corpus tokens by frequency, with each rank's CUMULATIVE
     corpus coverage in permille — the curve a tokenizer team reads to pick
@@ -2478,7 +2453,7 @@ def vocab_induct_sql(duck: bool, docs: str = "documents") -> str:
         VOCAB_SIZE, "tok",
     )
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       counts as (select tok, count(*) as n from tokens group by tok),
       total as (select sum(n) as t from counts),
       {cand},
@@ -2502,7 +2477,7 @@ def vocab_induct_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def dataset_card_sql(duck: bool, docs: str = "documents") -> str:
+def dataset_card_sql(duck: bool) -> str:
     """Dataset-card statistics per language: document/token totals plus
     EXACT min / lower-median / p90 / max token counts.  Percentiles are
     computed the scale-safe way — a (lang, n_tokens) HISTOGRAM first, then
@@ -2517,7 +2492,7 @@ def dataset_card_sql(duck: bool, docs: str = "documents") -> str:
     div = d["div"]
     return f"""
       with per_doc as (
-        select lang, cast({n_tok} as bigint) as n_tok from {docs}
+        select lang, cast({n_tok} as bigint) as n_tok from documents
       ),
       hist as (
         select lang, n_tok, count(*) as c
@@ -2547,7 +2522,7 @@ def dataset_card_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def source_mix_sql(duck: bool, docs: str = "documents") -> str:
+def source_mix_sql(duck: bool) -> str:
     """Training-data source mixing: per-source document/token totals plus
     the integer up-sampling factor (permille) that equalizes token mass
     across sources -- epochs_permille = (max_source_tokens * 1000) div
@@ -2560,7 +2535,7 @@ def source_mix_sql(duck: bool, docs: str = "documents") -> str:
     return f"""
       with per_doc as (
         select source, doc_id, cast({n_tok} as bigint) as n_tokens
-        from {docs}
+        from documents
       ),
       per_source as (
         select source, count(*) as n_docs, sum(n_tokens) as n_tokens
@@ -2593,7 +2568,7 @@ def per_source_tokens_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def source_temperature_sql(duck: bool, docs: str = "documents",
+def source_temperature_sql(duck: bool,
                            per_source_src: str | None = None) -> str:
     """Temperature-scaled source mixing (the multilingual/multi-source
     sampling rule of mBERT/XLM-R and the Pile: p_i proportional to
@@ -2618,7 +2593,7 @@ def source_temperature_sql(duck: bool, docs: str = "documents",
     )
     taus = " union all ".join(f"select '{t}' as tau" for t in TEMP_TAUS)
     per_source = (per_source_src
-                  or f"({per_source_tokens_sql(duck, docs)})")
+                  or f"({per_source_tokens_sql(duck)})")
     return f"""
       with per_source as (
         select * from {per_source}
@@ -2663,8 +2638,7 @@ def kn_bigram_counts_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def kn_ngram_sql(duck: bool, docs: str = "documents",
-                 bcounts_src: str | None = None) -> str:
+def kn_ngram_sql(duck: bool, bcounts_src: str | None = None) -> str:
     """Interpolated Kneser-Ney bigram statistics (Kneser & Ney 1995; Chen
     & Goodman 1999) — the n-gram-LM side of corpus quality work (KenLM-
     style perplexity filters train exactly these tables).  Per bigram
@@ -2686,7 +2660,7 @@ def kn_ngram_sql(duck: bool, docs: str = "documents",
     trainer."""
     div = _d(duck)["div"]
     D = KN_D_MILLI
-    bc = bcounts_src or f"({kn_bigram_counts_sql(duck, docs)}) __bc"
+    bc = bcounts_src or f"({kn_bigram_counts_sql(duck)}) __bc"
     return f"""
       with bcounts as (
         select * from {bc}
@@ -2718,8 +2692,7 @@ def kn_ngram_sql(duck: bool, docs: str = "documents",
 NOVELTY_K = 4  # word k-gram width for the novelty audit
 
 
-def ngram_novelty_sql(duck: bool, docs: str = "documents",
-                      shingles_src: str | None = None) -> str:
+def ngram_novelty_sql(duck: bool, shingles_src: str | None = None) -> str:
     """Per-document n-gram novelty (the duplication/memorization audit of
     Lee et al. 2022's dedup analysis): in doc_id (crawl) order, what
     fraction of a document's distinct {NOVELTY_K}-gram shingles appear
@@ -2737,7 +2710,7 @@ def ngram_novelty_sql(duck: bool, docs: str = "documents",
     if shingles_src:
         head = f"shingles as (select * from {shingles_src})"
     else:
-        head = shingles_cte(duck, src=docs, k=NOVELTY_K)
+        head = shingles_cte(duck, src="documents", k=NOVELTY_K)
     return f"""
       with {head},
       firsts as (
@@ -2763,8 +2736,7 @@ DSIR_BUCKETS = 64  # hashed-unigram feature space (Xie et al. use 10^4; 64
 #                    keeps every bucket populated at test scale)
 
 
-def dsir_tb_sql(duck: bool, docs: str = "documents",
-                target: str = "lang = 'en'") -> str:
+def dsir_tb_sql(duck: bool, docs: str = "documents") -> str:
     """(doc_id, bucket, is-target) hashed-token stream — the corpus pass
     behind dsir_weights, split out for the persist-once runner."""
     d = _d(duck)
@@ -2772,19 +2744,17 @@ def dsir_tb_sql(duck: bool, docs: str = "documents",
     h = h32("tok", duck)
     B = DSIR_BUCKETS
     base = (f"select doc_id, {d['explode']}({ws}) as tok,"
-            f" case when {target} then 1 else 0 end as tgt from {docs}")
+            f" case when lang = 'en' then 1 else 0 end as tgt from {docs}")
     return f"""
         select doc_id, {h} % {B} as b, tgt
         from ({base}) toks where tok <> ''
     """
 
 
-def dsir_weights_sql(duck: bool, docs: str = "documents",
-                     target: str = "lang = 'en'",
-                     tb_src: str | None = None) -> str:
+def dsir_weights_sql(duck: bool, tb_src: str | None = None) -> str:
     """Data Selection via Importance Resampling (Xie et al. 2023, public):
     score every document by how much more likely its hashed-unigram
-    features are under a TARGET distribution (here the ``{target}``
+    features are under a TARGET distribution (here the ``lang = 'en'``
     subset) than under the raw corpus — the standard cheap domain-match
     filter for pretraining mixes.
 
@@ -2807,7 +2777,7 @@ def dsir_weights_sql(duck: bool, docs: str = "documents",
     (doc_id) hash agg — linear, one shuffle."""
     B = DSIR_BUCKETS
     div = _d(duck)["div"]
-    tb = tb_src or f"({dsir_tb_sql(duck, docs, target)}) __tb"
+    tb = tb_src or f"({dsir_tb_sql(duck)}) __tb"
     return f"""
       with tb as (
         select * from {tb}
@@ -2859,8 +2829,7 @@ def kn_train_bcounts_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def kn_heldout_sql(duck: bool, docs: str = "documents",
-                   bcounts_src: str | None = None) -> str:
+def kn_heldout_sql(duck: bool, bcounts_src: str | None = None) -> str:
     """Held-out scoring under the Kneser-Ney bigram model (the KenLM
     perplexity-filter loop: train on 90% of the corpus, score the rest) —
     unlike the self-scored ``lm_score``, this exercises the model's
@@ -2887,7 +2856,7 @@ def kn_heldout_sql(duck: bool, docs: str = "documents",
     M = KN_HELDOUT_MOD
     pcont = f"((coalesce(o.n1bwd, 0) * 1000000) {div} t.n_types)"
     lam_w1 = f"(({D} * x.n1fwd * 1000000) {div} (x.c1 * 1000))"
-    bc = bcounts_src or f"({kn_train_bcounts_sql(duck, docs)}) __tbc"
+    bc = bcounts_src or f"({kn_train_bcounts_sql(duck)}) __tbc"
     return f"""
       with bcounts as (
         select * from {bc}
@@ -2903,7 +2872,7 @@ def kn_heldout_sql(duck: bool, docs: str = "documents",
       ),
       types as (select cast(count(*) as bigint) as n_types from bcounts),
       ho_words as (
-        select doc_id, {ws} as ws from {docs} where doc_id % {M} = 0
+        select doc_id, {ws} as ws from documents where doc_id % {M} = 0
       ),
       ho_bigrams as ({ho_bg}),
       db as (
@@ -3032,7 +3001,7 @@ def _char_split(duck: bool, col: str) -> str:
     return f"trim(regexp_replace({col}, '(.)', '{d['re_ref1']} '{d['re_g']}))"
 
 
-def _bpe_dict0_cte(duck: bool, docs: str = "documents") -> str:
+def _bpe_dict0_cte(duck: bool) -> str:
     """Word-frequency dictionary with the initial char-level symbol repr.
 
     This is the bounded relation all BPE iterations run on: ONE corpus-sized
@@ -3042,7 +3011,7 @@ def _bpe_dict0_cte(duck: bool, docs: str = "documents") -> str:
     That is exactly how reference BPE trainers operate (Sennrich et al.
     2016 train on the word-count dict, not the corpus)."""
     return f"""
-      {tokens_cte(duck, docs)},
+      {tokens_cte(duck)},
       wdict as (
         select tok as word, count(*) as wcount
         from tokens where tok <> '' group by tok
@@ -3099,45 +3068,41 @@ def _bpe_round_ctes(duck: bool, t: int) -> str:
       )"""
 
 
-def _bpe_rounds(duck: bool, docs: str, merges: int) -> str:
-    parts = [_bpe_dict0_cte(duck, docs).strip()]
-    for t in range(1, merges + 1):
+def _bpe_rounds(duck: bool) -> str:
+    parts = [_bpe_dict0_cte(duck).strip()]
+    for t in range(1, BPE_MERGES + 1):
         parts.append(_bpe_round_ctes(duck, t).strip())
     return ",\n      ".join(parts)
 
 
-def bpe_train_sql(
-    duck: bool, docs: str = "documents", merges: int = BPE_MERGES
-) -> str:
+def bpe_train_sql(duck: bool) -> str:
     """BPE tokenizer training: the ranked merge table (the artifact a
     tokenizer ships).  Iterative pair-count argmax over the word dict —
-    the oracle unrolls ``merges`` rounds as nested CTEs (the kmeans /
+    the oracle unrolls ``BPE_MERGES`` rounds as nested CTEs (the kmeans /
     dedup_clusters pattern); ``run_bpe_train`` is the iterative Spark
     runner that collects ONE best-pair row per round."""
     sel = "\n      union all\n      ".join(
         f"select cast({t} as bigint) as merge_rank, l as left_sym, "
         f"r as right_sym, cast(c as bigint) as pair_count from best{t}"
-        for t in range(1, merges + 1)
+        for t in range(1, BPE_MERGES + 1)
     )
     return f"""
-      with {_bpe_rounds(duck, docs, merges)}
+      with {_bpe_rounds(duck)}
       {sel}
       order by merge_rank
     """
 
 
-def bpe_vocab_sql(
-    duck: bool, docs: str = "documents", merges: int = BPE_MERGES
-) -> str:
+def bpe_vocab_sql(duck: bool) -> str:
     """Post-merge symbol inventory: corpus frequency (weighted by word
     count, with within-word multiplicity) and word coverage per symbol —
     the table a vocab-size decision reads."""
     d = _d(duck)
     sp = d["split"].format("repr")
     return f"""
-      with {_bpe_rounds(duck, docs, merges)},
+      with {_bpe_rounds(duck)},
       fsyms as (
-        select word, wcount, {d['explode']}({sp}) as sym from dict{merges}
+        select word, wcount, {d['explode']}({sp}) as sym from dict{BPE_MERGES}
       )
       select sym,
              cast(sum(wcount) as bigint) as freq,
@@ -3154,7 +3119,7 @@ def _bpe_pairs_over(view: str) -> str:
     return f"with {_bpe_best_ctes(False, '', view)} select l, r, c from best"
 
 
-def _run_bpe_rounds(spark, sf_dir: str, merges: int):
+def _run_bpe_rounds(spark, sf_dir: str):
     """Shared iterative driver: returns (merge rows, name of the final dict
     view).  The word dict is persisted once; each round is a pair-count agg
     over the vocabulary-bounded relation plus a 1-row argmax collect (the
@@ -3168,7 +3133,7 @@ def _run_bpe_rounds(spark, sf_dir: str, merges: int):
     ).persist()
     base.createOrReplaceTempView("__bpe_dict_0")
     out, cur = [], "__bpe_dict_0"
-    for t in range(1, merges + 1):
+    for t in range(1, BPE_MERGES + 1):
         best = spark.sql(_bpe_pairs_over(cur)).collect()
         if not best:
             break
@@ -3186,11 +3151,11 @@ def _run_bpe_rounds(spark, sf_dir: str, merges: int):
     return out, cur
 
 
-def run_bpe_train(spark, sf_dir: str, merges: int = BPE_MERGES):
+def run_bpe_train(spark, sf_dir: str):
     """Iterative BPE trainer, the production shape (see
     ``_run_bpe_rounds``).  Oracle = ``bpe_train_sql(duck=True)``, the same
     rounds unrolled as nested CTEs."""
-    out, _ = _run_bpe_rounds(spark, sf_dir, merges)
+    out, _ = _run_bpe_rounds(spark, sf_dir)
     return spark.createDataFrame(
         out,
         "merge_rank bigint, left_sym string, right_sym string, "
@@ -3198,10 +3163,10 @@ def run_bpe_train(spark, sf_dir: str, merges: int = BPE_MERGES):
     )
 
 
-def run_bpe_vocab(spark, sf_dir: str, merges: int = BPE_MERGES):
+def run_bpe_vocab(spark, sf_dir: str):
     """Iterative-runner twin of ``bpe_vocab_sql``: run the merge rounds,
     then aggregate the final symbol inventory from the last dict view."""
-    _, last = _run_bpe_rounds(spark, sf_dir, merges)
+    _, last = _run_bpe_rounds(spark, sf_dir)
     sp = _d(False)["split"].format("repr")
     return spark.sql(f"""
       with fsyms as (
@@ -3216,7 +3181,7 @@ def run_bpe_vocab(spark, sf_dir: str, merges: int = BPE_MERGES):
     """)
 
 
-def _bpe_encode_select(duck: bool, dict_ref: str, docs: str) -> str:
+def _bpe_encode_select(duck: bool, dict_ref: str) -> str:
     """Shared encode body: positional tokens joined to the word->repr dict,
     aggregated per doc with an ORDER-FAITHFUL stream digest."""
     d = _d(duck)
@@ -3232,7 +3197,7 @@ def _bpe_encode_select(duck: bool, dict_ref: str, docs: str) -> str:
             "array_sort(collect_list(struct(pos, repr))), s -> s.repr), ' '))"
         )
     return f"""
-      encw as (select doc_id, {ws} as ws from {docs}),
+      encw as (select doc_id, {ws} as ws from documents),
       ptok as (
         select doc_id, i as pos, {tok} as tok
         from (select doc_id, ws, {un}({d['range_incl'].format('1', n)}) as i
@@ -3254,9 +3219,7 @@ def _bpe_encode_select(duck: bool, dict_ref: str, docs: str) -> str:
       order by doc_id"""
 
 
-def bpe_encode_sql(
-    duck: bool, docs: str = "documents", merges: int = BPE_MERGES
-) -> str:
+def bpe_encode_sql(duck: bool) -> str:
     """Tokenizer APPLICATION — encode every document with the trained BPE
     merges (the runtime half of ``bpe_train``; together they are the full
     tokenizer lifecycle a data pipeline runs).  Each token looks up its
@@ -3272,22 +3235,22 @@ def bpe_encode_sql(
     (pos, repr) structs / string_agg order by) — per-document local state,
     never a global sort."""
     return f"""
-      with {_bpe_rounds(duck, docs, merges)},
-      {_bpe_encode_select(duck, f"dict{merges}", docs)}
+      with {_bpe_rounds(duck)},
+      {_bpe_encode_select(duck, f"dict{BPE_MERGES}")}
     """
 
 
-def run_bpe_encode(spark, sf_dir: str, merges: int = BPE_MERGES):
+def run_bpe_encode(spark, sf_dir: str):
     """Iterative-runner twin of ``bpe_encode_sql``: train via
     ``_run_bpe_rounds`` (persisted dict, 1-row argmax collects), then
     encode the corpus against the final dict view."""
-    _, last = _run_bpe_rounds(spark, sf_dir, merges)
+    _, last = _run_bpe_rounds(spark, sf_dir)
     return spark.sql(
-        f"with {_bpe_encode_select(False, last, 'documents')}"
+        f"with {_bpe_encode_select(False, last)}"
     )
 
 
-def _bpe_decode_select(dict_ref: str, docs: str) -> str:
+def _bpe_decode_select(dict_ref: str) -> str:
     """Spark decode body: positional tokens -> trained subword repr ->
     DETOKENIZE (drop the intra-word subword separators) -> order-faithful
     reconstruction digest per doc."""
@@ -3295,7 +3258,7 @@ def _bpe_decode_select(dict_ref: str, docs: str) -> str:
     ws = d["split"].format("text")
     tok = d["elem"].format("ws", "i")
     return f"""
-      decw as (select doc_id, {ws} as ws from {docs}),
+      decw as (select doc_id, {ws} as ws from documents),
       dtok as (
         select doc_id, i as pos, {tok} as tok
         from (select doc_id, ws,
@@ -3317,9 +3280,7 @@ def _bpe_decode_select(dict_ref: str, docs: str) -> str:
       order by doc_id"""
 
 
-def bpe_roundtrip_sql(
-    duck: bool, docs: str = "documents", merges: int = BPE_MERGES
-) -> str:
+def bpe_roundtrip_sql(duck: bool) -> str:
     """Tokenizer LOSSLESSNESS gate — decode(encode(text)) == text.
 
     The Spark side runs the full lifecycle: train the merges, encode every
@@ -3340,26 +3301,25 @@ def bpe_roundtrip_sql(
           select doc_id,
                  cast(len({toks}) as bigint) as n_tokens,
                  md5(array_to_string({toks}, ' ')) as decoded_md5
-          from {docs}
+          from documents
           order by doc_id
         """
     return f"""
-      with {_bpe_rounds(duck, docs, merges)},
-      {_bpe_decode_select(f"dict{merges}", docs)}
+      with {_bpe_rounds(duck)},
+      {_bpe_decode_select(f"dict{BPE_MERGES}")}
     """
 
 
-def run_bpe_roundtrip(spark, sf_dir: str, merges: int = BPE_MERGES):
+def run_bpe_roundtrip(spark, sf_dir: str):
     """Iterative-runner twin of ``bpe_roundtrip_sql`` (persisted dict,
     1-row argmax collects per round)."""
-    _, last = _run_bpe_rounds(spark, sf_dir, merges)
-    return spark.sql(f"with {_bpe_decode_select(last, 'documents')}")
+    _, last = _run_bpe_rounds(spark, sf_dir)
+    return spark.sql(f"with {_bpe_decode_select(last)}")
 
 
-def hash_embed_sql(duck: bool, docs: str = "documents", dims: int = 16,
-                   weights_ref: str | None = None) -> str:
+def hash_embed_sql(duck: bool, weights_ref: str | None = None) -> str:
     """Feature-hashing document embedding (the hashing trick, Weinberger et
-    al. 2009, public): each token hashes to one of ``dims`` buckets with a
+    al. 2009, public): each token hashes to one of 16 buckets with a
     +/-1 sign drawn from the next hash bit, and the document vector is the
     signed count per bucket — the cheapest text->vector bridge into the ANN
     tier (simops), entirely JVM-side.
@@ -3381,20 +3341,20 @@ def hash_embed_sql(duck: bool, docs: str = "documents", dims: int = 16,
     if weights_ref:
         contrib = f"""
       contrib as (
-        select t.doc_id, t.h % {dims} as dim,
-               (case when (t.h {div} {dims}) % 2 = 0 then 1 else -1 end)
+        select t.doc_id, t.h % 16 as dim,
+               (case when (t.h {div} 16) % 2 = 0 then 1 else -1 end)
                  * wr.w as s
         from tb t join {weights_ref} wr on wr.bucket = t.h % {QC_BUCKETS}
       )"""
     else:
         contrib = f"""
       contrib as (
-        select doc_id, h % {dims} as dim,
-               case when (h {div} {dims}) % 2 = 0 then 1 else -1 end as s
+        select doc_id, h % 16 as dim,
+               case when (h {div} 16) % 2 = 0 then 1 else -1 end as s
         from tb
       )"""
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       tb as (
         select doc_id, {h} as h from tokens where tok <> ''
       ),
@@ -3411,7 +3371,7 @@ WINNOW_K = 4  # k-gram width (tokens) for winnowing fingerprints
 WINNOW_W = 4  # winnowing window: one fingerprint guaranteed per W k-grams
 
 
-def winnow_fingerprint_sql(duck: bool, docs: str = "documents") -> str:
+def winnow_fingerprint_sql(duck: bool) -> str:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken 2003,
     "Winnowing: Local Algorithms for Document Fingerprinting" — public):
     hash every {K}-token k-gram, slide a window of {W} consecutive k-gram
@@ -3434,7 +3394,7 @@ def winnow_fingerprint_sql(duck: bool, docs: str = "documents") -> str:
     gram = d["slice_join"].format("ws", "i", f"i + {k - 1}", k, "' '")
     h = h32("gram", duck)
     return f"""
-      with wnw as (select doc_id, {d["split"].format("text")} as ws from {docs}),
+      with wnw as (select doc_id, {d["split"].format("text")} as ws from documents),
       grams as (
         select doc_id, i as pos, {gram} as gram
         from (
@@ -3468,7 +3428,7 @@ def winnow_fingerprint_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def gopher_filter_sql(duck: bool, docs: str = "documents") -> str:
+def gopher_filter_sql(duck: bool) -> str:
     """Gopher-rules quality filter (Rae et al. 2021 / Dolma, public): the
     document-shape heuristics a pretraining pipeline applies BEFORE any
     model-based scoring — word count bounds, mean word length bounds,
@@ -3504,7 +3464,7 @@ def gopher_filter_sql(duck: bool, docs: str = "documents") -> str:
                  when 3 then concat(text, repeat(' 12345', 120))
                  when 4 then {nostop}
                  else text end as text
-        from {docs}
+        from documents
       ),
       {tokens_cte(duck, "gdocs")},
       stats as (
@@ -3545,7 +3505,7 @@ def gopher_filter_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def inverted_index_sql(duck: bool, docs: str = "documents") -> str:
+def inverted_index_sql(duck: bool) -> str:
     """IR-shape inverted index over the corpus vocabulary: per token, the
     document frequency, total term frequency, and an exact digest of the
     sorted posting list (md5 over the comma-joined sorted distinct doc_ids —
@@ -3569,7 +3529,7 @@ def inverted_index_sql(duck: bool, docs: str = "documents") -> str:
             "array_sort(collect_set(doc_id)), x -> cast(x as string))))"
         )
     return f"""
-      with {tokens_cte(duck, docs)}
+      with {tokens_cte(duck)}
       select tok,
              cast(count(distinct doc_id) as bigint) as n_docs,
              cast(count(*) as bigint) as n_total,
@@ -3586,7 +3546,7 @@ BM25_LANES = 8   # phase-1 lanes bounding the per-query ranking window
 BM25_NQ = 4      # queries synthesized from the corpus vocabulary
 
 
-def bm25_search_sql(duck: bool, docs: str = "documents") -> str:
+def bm25_search_sql(duck: bool) -> str:
     """BM25 ranked retrieval (Robertson/Spärck Jones probabilistic
     relevance, public) over the corpus: the consumer of the inverted-index
     shape — given a query term set, rank documents by summed per-term
@@ -3616,7 +3576,7 @@ def bm25_search_sql(duck: bool, docs: str = "documents") -> str:
     <= {BM25_TOPK}*{BM25_LANES} survivors — so a stopword-grade query term
     never materializes a corpus-sized window."""
     return f"""
-      with {tokens_cte(duck, docs)},
+      with {tokens_cte(duck)},
       tf as (
         select doc_id, tok, count(*) as tf
         from tokens where tok <> '' group by doc_id, tok
@@ -3792,7 +3752,7 @@ FUNNEL_STAGES = (
 )
 
 
-def filter_funnel_sql(duck: bool, docs: str = "documents") -> str:
+def filter_funnel_sql(duck: bool) -> str:
     """Filter-funnel report — the stage-by-stage retention table every
     production data pipeline publishes next to its dataset card: for each
     filter IN PIPELINE ORDER, how many documents reached it, how many it
@@ -3829,7 +3789,7 @@ def filter_funnel_sql(duck: bool, docs: str = "documents") -> str:
     return f"""
       with stages as ({stages}),
       wsrel as (
-        select doc_id, text, {ws} as ws from {docs}
+        select doc_id, text, {ws} as ws from documents
       ),
       flags as (
         select
@@ -3867,9 +3827,7 @@ def filter_funnel_sql(duck: bool, docs: str = "documents") -> str:
 PHRASE_NQ = 3  # phrase queries derived from the corpus's top bigrams
 
 
-def phrase_search_sql(
-    duck: bool, docs: str = "documents", postings_ref: str | None = None
-) -> str:
+def phrase_search_sql(duck: bool, postings_ref: str | None = None) -> str:
     """Exact-phrase search over a POSITIONAL inverted index — the query
     shape BM25's bag-of-words scoring cannot answer ("spark sql" as an
     adjacent pair, not two independent terms).  The classic positional-
@@ -3894,7 +3852,7 @@ def phrase_search_sql(
     persists it once and renders this same template against it."""
     if postings_ref is None:
         p = "postings"
-        pre = _postings_ctes(duck, docs, "pwords", "postings") + ","
+        pre = _postings_ctes(duck, "pwords", "postings") + ","
     else:
         p = postings_ref
         pre = ""
@@ -3943,7 +3901,7 @@ COLLOC_MIN_PAIR = 20  # minimum corpus-wide pair count to score
 COLLOC_TOPK = 25      # collocations reported
 
 
-def ngram_collocations_sql(duck: bool, docs: str = "documents") -> str:
+def ngram_collocations_sql(duck: bool) -> str:
     """Collocation mining — rank adjacent token pairs by LIFT (how much
     more often the pair occurs than its unigram frequencies predict),
     the association measure behind phrase-vocabulary induction and
@@ -3964,7 +3922,7 @@ def ngram_collocations_sql(duck: bool, docs: str = "documents") -> str:
     relation only.  Output is the top {COLLOC_TOPK} by lift."""
     iv = _d(duck)["div"]
     return f"""
-      with {_postings_ctes(duck, docs, "cwords", "toks")},
+      with {_postings_ctes(duck, "cwords", "toks")},
       uni as (select tok, count(*) as c from toks group by tok),
       tot as (select count(*) - count(distinct doc_id) as total_pairs
               from toks),
@@ -4025,7 +3983,7 @@ def run_phrase_search(spark, sf_dir: str):
     )
 
 
-def dedup_band_audit_sql(duck: bool, docs: str = "documents") -> str:
+def dedup_band_audit_sql(duck: bool) -> str:
     """Banding skew audit — turns the near-dup operators' scale claims
     ("band buckets stay small; candidate pairs stay ~O(n)") into a
     continuously-gated METRIC instead of a prose assertion.  For both
@@ -4068,7 +4026,7 @@ def dedup_band_audit_sql(duck: bool, docs: str = "documents") -> str:
     order-of-magnitude-hotter saturation point."""
     iv = _d(duck)["div"]
     return f"""
-      with {duped_docs_cte(duck, docs)},
+      with {duped_docs_cte(duck)},
       {shingles_cte(duck, "ddocs")},
       {_minhash_cand_cte(duck)},
       mh_sizes as (

@@ -24,11 +24,11 @@ from __future__ import annotations
 from .textops import _d, h32
 
 
-def _messy_urls_cte(duck: bool, docs: str = "documents") -> str:
+def _messy_urls_cte(duck: bool) -> str:
     d = _d(duck)
     p = f"concat(source, '/', cast(doc_id as {d['str']}))"
     return f"""
-      raw as (select doc_id, source, {p} as p from {docs}),
+      raw as (select doc_id, source, {p} as p from documents),
       urls as (
         select doc_id,
                concat('HTTP://WWW.', upper(source), '.EXAMPLE.ORG:80/', p,
@@ -113,9 +113,9 @@ def _canon_ctes(duck: bool) -> str:
         from c_port)"""
 
 
-def url_canonicalize_sql(duck: bool, docs: str = "documents") -> str:
+def url_canonicalize_sql(duck: bool) -> str:
     return f"""
-      with {_messy_urls_cte(duck, docs)},
+      with {_messy_urls_cte(duck)},
       {_canon_ctes(duck)}
       select doc_id, url_raw, url_canon, host, n_params
       from canon
@@ -123,11 +123,11 @@ def url_canonicalize_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def url_canon_dedup_sql(duck: bool, docs: str = "documents") -> str:
+def url_canon_dedup_sql(duck: bool) -> str:
     """Variants of the same resource collapse onto one canonical key: one
     hash-shuffle group-by, the scale shape of crawl-frontier dedup."""
     return f"""
-      with {_messy_urls_cte(duck, docs)},
+      with {_messy_urls_cte(duck)},
       {_canon_ctes(duck)}
       select url_canon, count(*) as n_variants, min(doc_id) as first_doc
       from canon
@@ -172,12 +172,12 @@ def surt_ctes(duck: bool) -> str:
     return _canon_ctes(duck) + "," + _surt_cte(duck)
 
 
-def url_surt_sql(duck: bool, docs: str = "documents") -> str:
+def url_surt_sql(duck: bool) -> str:
     """Gated query: SURT keys over the messy url corpus — equivalent
     spellings (case, default port, fragment, unsorted query) must collapse
     to ONE key while the genuinely different :8080 variant must not."""
     return f"""
-      with {_messy_urls_cte(duck, docs)},
+      with {_messy_urls_cte(duck)},
       {surt_ctes(duck)}
       select doc_id, url_raw, surt_key
       from surt
@@ -196,7 +196,7 @@ ROBOTS_RULES = (
 )
 
 
-def robots_filter_sql(duck: bool, docs: str = "documents") -> str:
+def robots_filter_sql(duck: bool) -> str:
     """Robots-style URL filtering (RFC 9309 longest-match semantics): each
     corpus url matches the rule with the LONGEST matching path prefix whose
     host scope applies ('*' or exact); ties prefer allow (the RFC's
@@ -210,7 +210,7 @@ def robots_filter_sql(duck: bool, docs: str = "documents") -> str:
       with raw as (
         select doc_id, {d['host']} as host,
                concat('/', source, '/', cast(doc_id as {d['str']})) as path
-        from {docs}
+        from documents
       ),
       rules as (select * from (values {rows}) as r(rhost, prefix, allow)),
       matched as (
@@ -233,7 +233,7 @@ def robots_filter_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def _captures_cte(duck: bool, docs: str = "documents") -> str:
+def _captures_cte(duck: bool) -> str:
     """Shared deterministic capture synthesis — caps(doc_id, text, url,
     capture_idx): 1 + doc_id % 3 captures per URL.  Used by BOTH
     ``latest_snapshot_sql`` (which ignores text) and ``recrawl_delta_sql``
@@ -246,11 +246,11 @@ def _captures_cte(duck: bool, docs: str = "documents") -> str:
                concat('https://', {d['host']}, '/', source, '/',
                       cast(doc_id as {d['str']})) as url,
                {d['explode']}({ks}) as capture_idx
-        from {docs}
+        from documents
       )"""
 
 
-def latest_snapshot_sql(duck: bool, docs: str = "documents") -> str:
+def latest_snapshot_sql(duck: bool) -> str:
     """Newest-capture-per-URL selection — the recrawl collapse a
     Common-Crawl-style pipeline runs before any content processing (each
     crawl re-fetches URLs; training data wants exactly one, the freshest,
@@ -266,7 +266,7 @@ def latest_snapshot_sql(duck: bool, docs: str = "documents") -> str:
     dedup, per-url local state, never a global sort.  At 10^12 captures the
     url key is near-unique (fan-in <= crawl count), so no skew."""
     return f"""
-      with {_captures_cte(duck, docs)},
+      with {_captures_cte(duck)},
       stamped as (
         select url, capture_idx,
                1709251200 + (doc_id % 31536000) + capture_idx * 86400
@@ -312,7 +312,7 @@ def _captext_cte(duck: bool) -> str:
       )"""
 
 
-def warc_revisit_sql(duck: bool, docs: str = "documents") -> str:
+def warc_revisit_sql(duck: bool) -> str:
     """WARC revisit-record planning (ISO 28500 / WARC 1.1
     identical-payload-digest profile) — the dedup layer real web archives
     apply at WRITE time: a capture whose payload digest was already
@@ -328,7 +328,7 @@ def warc_revisit_sql(duck: bool, docs: str = "documents") -> str:
     capture, one equi-join back — the exact-dedup shuffle shape keyed on
     (url, digest); no windows, no skew (fan-in <= crawl count per url)."""
     return f"""
-      with {_captures_cte(duck, docs)},
+      with {_captures_cte(duck)},
       {_captext_cte(duck)},
       stamped as (
         select url, capture_idx, md5(ctext) as digest,
@@ -357,7 +357,7 @@ def warc_revisit_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def recrawl_delta_sql(duck: bool, docs: str = "documents") -> str:
+def recrawl_delta_sql(duck: bool) -> str:
     """Content-change detection between the two most recent captures of
     each URL — the signal a crawler uses to set per-URL recrawl frequency
     (unchanged pages get crawled less; churning pages more) and a dedup
@@ -389,7 +389,7 @@ def recrawl_delta_sql(duck: bool, docs: str = "documents") -> str:
     tok_col = f"{d['explode']}({d['split'].format('ctext')})"
     div = d["div"]
     return f"""
-      with {_captures_cte(duck, docs)},
+      with {_captures_cte(duck)},
       {_captext_cte(duck)},
       ranked as (
         select url, capture_idx, ctext,
@@ -434,7 +434,7 @@ def recrawl_delta_sql(duck: bool, docs: str = "documents") -> str:
 PSL_SUFFIXES = ("com", "org", "uk", "co.uk", "github.io")
 
 
-def domain_stats_sql(duck: bool, docs: str = "documents") -> str:
+def domain_stats_sql(duck: bool) -> str:
     """Registrable-domain (eTLD+1) aggregation — crawl policies, host caps,
     and per-site quality stats all key on the REGISTRABLE domain, not the
     host: www.a.foo.co.uk and b.foo.co.uk are one site (foo.co.uk), while
@@ -476,7 +476,7 @@ def domain_stats_sql(duck: bool, docs: str = "documents") -> str:
                    then concat('user-', {j}, '.github.io')
                  else concat('a.b.site-', {m}, '.deep.org')
                end as host
-        from {docs}
+        from documents
       ),
       hostagg as (
         select host, count(*) as n_docs from pages group by host
@@ -506,7 +506,7 @@ def domain_stats_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def sitemap_parse_sql(duck: bool, docs: str = "documents") -> str:
+def sitemap_parse_sql(duck: bool) -> str:
     """Sitemap PARSER — the third leg of crawl discovery next to
     robots_parse and crawl_frontier: per-host ``sitemap.xml`` documents
     (sitemaps.org protocol) are synthesized deterministically, then the
@@ -529,7 +529,7 @@ def sitemap_parse_sql(duck: bool, docs: str = "documents") -> str:
     if duck:
         return f"""
       with d as (
-        select doc_id, source, {host} as host from {docs}
+        select doc_id, source, {host} as host from documents
       )
       select host,
              concat('https://', host, '/', source, '/',
@@ -541,7 +541,7 @@ def sitemap_parse_sql(duck: bool, docs: str = "documents") -> str:
     """
     return f"""
       with d as (
-        select doc_id, source, {host} as host from {docs}
+        select doc_id, source, {host} as host from documents
       ),
       d2 as (
         select doc_id, host,
@@ -588,7 +588,7 @@ BLOOM_BITS = 65536   # m = 2048 x 32-bit words (32-bit: DuckDB range-checks
 BLOOM_K = 3          # signed shifts, so 1 << 63 would overflow there)
 
 
-def bloom_frontier_sql(duck: bool, docs: str = "documents") -> str:
+def bloom_frontier_sql(duck: bool) -> str:
     """Bloom-filter membership for frontier dedup — the sketch that makes
     "have I crawled this url?" affordable at 10^12 urls: the seen-set
     compresses to a {BLOOM_BITS}-bit relation (<= 2048 (word, bits) rows,
@@ -613,7 +613,7 @@ def bloom_frontier_sql(duck: bool, docs: str = "documents") -> str:
     return f"""
       with d0 as (
         select doc_id, source, {d['host']} as host
-        from {docs}
+        from documents
       ),
       seen as (
         select concat('https://', host, '/', source, '/',
@@ -662,7 +662,7 @@ HLL_M = 1 << HLL_B
 HLL_ALPHA_NUM = int(0.7213 / (1 + 1.079 / HLL_M) * HLL_M * HLL_M * (1 << 32))
 
 
-def hll_card_sql(duck: bool, docs: str = "documents") -> str:
+def hll_card_sql(duck: bool) -> str:
     """HyperLogLog cardinality registers over the recrawl capture multiset
     (each url appears 1–3 times; the sketch must estimate DISTINCT urls).
     The register relation is the whole point at 10^12 rows: 256 integers,
@@ -690,7 +690,7 @@ def hll_card_sql(duck: bool, docs: str = "documents") -> str:
     div = d["div"]
     rng = d["range_incl"].format("0", str(HLL_M - 1))
     return f"""
-      with {_captures_cte(duck, docs)},
+      with {_captures_cte(duck)},
       h as (select ({h32('url', duck)}) as hv from caps),
       br as (
         select hv % {HLL_M} as bucket, suffix,
@@ -724,7 +724,7 @@ HLL_HOST_M = 16  # registers per host (per-group sketches stay tiny)
 HLL_HOST_ALPHA_NUM = int(0.673 * HLL_HOST_M * HLL_HOST_M * (1 << 32))
 
 
-def hll_by_host_sql(duck: bool, docs: str = "documents") -> str:
+def hll_by_host_sql(duck: bool) -> str:
     """GROUPED HyperLogLog: per-host distinct-url registers over the
     recrawl capture multiset — the group-state form of ``hll_card`` and
     the reason sketches exist at 10^12 rows: per-host distinct counts as
@@ -744,7 +744,7 @@ def hll_by_host_sql(duck: bool, docs: str = "documents") -> str:
     host = d["part"].format("url", "'/'", "3")
     rng = d["range_incl"].format("0", str(M - 1))
     return f"""
-      with {_captures_cte(duck, docs)},
+      with {_captures_cte(duck)},
       hu as (
         select {host} as host, url, ({h32('url', duck)}) as hv from caps
       ),
@@ -785,14 +785,14 @@ def hll_by_host_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def run(spark, sf_dir: str, sql_builder, **kw):
+def run(spark, sf_dir: str, sql_builder):
     spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
-    return spark.sql(sql_builder(duck=False, **kw))
+    return spark.sql(sql_builder(duck=False))
 
 
-def robots_parse_sql(duck: bool, docs: str = "documents") -> str:
+def robots_parse_sql(duck: bool) -> str:
     """robots.txt PARSER (RFC 9309 grammar, public spec) — the missing
     half of ``robots_filter``, which consumes a rules RELATION: this
     operator produces that relation from raw robots.txt TEXT.
@@ -850,7 +850,7 @@ def robots_parse_sql(duck: bool, docs: str = "documents") -> str:
       with hostids as (
         select distinct
                case when doc_id % 5 = 0 then -1 else doc_id % 211 end as hid
-        from {docs}
+        from documents
       ),
       hosts as (
         select hid,
@@ -913,7 +913,7 @@ def robots_parse_sql(duck: bool, docs: str = "documents") -> str:
 OPTOUT_AGENTS = ("*", "graftbot", "otherbot", "trainbot")
 
 
-def robots_optout_sql(duck: bool, docs: str = "documents") -> str:
+def robots_optout_sql(duck: bool) -> str:
     """Crawler opt-out audit — the compliance report a training-data
     pipeline runs before ingesting a host: for each agent of interest
     (including one the robots.txt never names), which rule group applies
@@ -929,7 +929,7 @@ def robots_optout_sql(duck: bool, docs: str = "documents") -> str:
     labor.  Scale: the rules relation is |hosts|-bounded and tiny; the
     agent list is a literal — everything after the parse is broadcast-
     sized."""
-    inner = robots_parse_sql(duck, docs)
+    inner = robots_parse_sql(duck)
     agents = " union all ".join(
         f"select '{a}' as agent" for a in OPTOUT_AGENTS
     )
@@ -966,7 +966,7 @@ def robots_optout_sql(duck: bool, docs: str = "documents") -> str:
     """
 
 
-def feed_parse_sql(duck: bool, docs: str = "documents") -> str:
+def feed_parse_sql(duck: bool) -> str:
     """RSS/Atom feed PARSER — the fourth leg of crawl discovery next to
     robots_parse, sitemap_parse, and crawl_frontier: real crawlers poll
     syndication feeds to find fresh urls between full recrawls.  Per-host
@@ -995,7 +995,7 @@ def feed_parse_sql(duck: bool, docs: str = "documents") -> str:
     if duck:
         return f"""
       with d as (
-        select doc_id, source, {host} as host from {docs}
+        select doc_id, source, {host} as host from documents
       ),
       d2 as (
         select doc_id, host, {fsel} as f,
@@ -1019,7 +1019,7 @@ def feed_parse_sql(duck: bool, docs: str = "documents") -> str:
     """
     return f"""
       with d as (
-        select doc_id, source, {host} as host from {docs}
+        select doc_id, source, {host} as host from documents
       ),
       d2 as (
         select doc_id, host,

@@ -118,6 +118,9 @@ def warc_files_df(spark, sf_dir: str) -> DataFrame:
 GZIP_MAGIC = b"\x1f\x8b"
 
 
+_GZ_READ = 1 << 16  # compressed bytes fed to a member's decompressor at once
+
+
 def iter_gzip_members(blob: bytes):
     """Yield (raw: bytes, comp_offset: int, comp_length: int) per gzip
     member of a multi-member gzip stream — the framing Common Crawl uses
@@ -126,17 +129,23 @@ def iter_gzip_members(blob: bytes):
     record without touching the rest of the file.  ``zlib.decompressobj``
     with ``wbits=31`` stops at each member's end; ``unused_data`` gives
     the exact compressed member length, which is what a CDX index stores
-    for random access into the compressed file."""
+    for random access into the compressed file.  Each member is fed in
+    ``_GZ_READ``-byte slices of one memoryview, so a member costs its own
+    bytes, not a copy of the rest of the file."""
     import zlib
 
+    view = memoryview(blob)
     pos, n = 0, len(blob)
     while pos < n:
         d = zlib.decompressobj(wbits=31)
-        raw = d.decompress(blob[pos:])
+        parts, end = [], pos
+        while not d.eof and end < n:
+            parts.append(d.decompress(view[end:end + _GZ_READ]))
+            end = min(end + _GZ_READ, n)
         if not d.eof:
             raise ValueError("truncated gzip member")
-        consumed = (n - pos) - len(d.unused_data)
-        yield raw, pos, consumed
+        consumed = end - pos - len(d.unused_data)
+        yield b"".join(parts), pos, consumed
         pos += consumed
 
 
@@ -180,6 +189,8 @@ def iter_warc_spans(blob: bytes):
                 raise ValueError(f"bad WARC header line: {ln!r}")
             headers[name.strip().lower()] = value.strip()
         clen = int(headers["content-length"])
+        if clen < 0:
+            raise ValueError(f"negative Content-Length {clen}")
         content_start = hdr_end + 4
         if content_start + clen > n:
             raise ValueError("Content-Length overruns file")
@@ -352,6 +363,11 @@ def split_http_response(
     return headers, body
 
 
+# chunk-size is 1*HEXDIG; int(..., 16) alone also takes a sign, "0x" and
+# "_", and a negative size would step back onto its own size line
+_HEX_SIZE = re.compile(rb"[0-9A-Fa-f]+")
+
+
 def dechunk_http(body: bytes) -> bytes:
     """Decode RFC 9112 §7.1 chunked transfer coding: ``<hex-size>[;ext]CRLF
     <size bytes>CRLF`` repeated, terminated by a zero-size chunk (optional
@@ -363,10 +379,9 @@ def dechunk_http(body: bytes) -> bytes:
         if eol < 0:
             raise ValueError("chunked body: missing size line")
         size_tok = body[pos:eol].split(b";", 1)[0].strip()
-        try:
-            size = int(size_tok, 16)
-        except ValueError:
-            raise ValueError(f"chunked body: bad size {size_tok!r}") from None
+        if not _HEX_SIZE.fullmatch(size_tok):
+            raise ValueError(f"chunked body: bad size {size_tok!r}")
+        size = int(size_tok, 16)
         pos = eol + 2
         if size == 0:
             return b"".join(out)

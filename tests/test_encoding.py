@@ -2,6 +2,8 @@
 1024-byte meta window, label mapping quirks, and the windows-1252 default —
 plus the end-to-end decode gate over the charset corpus families."""
 
+import pytest
+
 from htmlgraft.encoding import decode_html, sniff_charset
 
 
@@ -117,3 +119,24 @@ def test_unknown_transport_falls_through_to_meta():
     raw = b'<meta charset="iso-8859-7"><p>x'
     codec, _, src = sniff_charset(raw, transport="martian-9")
     assert (codec, src) == ("iso8859-7", "meta")
+
+
+# codecs that are bytes transforms (base64, rot13, hex, zlib) or refuse the
+# "replace" handler (idna): as labels they count as unrecognized, so the
+# page decodes as if it carried no label instead of failing its decode
+NON_TEXT_LABELS = ("base64", "rot13", "hex", "zlib", "idna")
+
+
+@pytest.mark.parametrize("label", NON_TEXT_LABELS)
+def test_non_text_meta_label_is_unrecognized(label):
+    body = b"<p>caf\xe9 \x97 text"
+    raw = f"<meta charset={label}>".encode() + body
+    assert sniff_charset(raw) == ("cp1252", 0, "default")
+    assert decode_html(raw) == raw.decode("cp1252", "replace")
+
+
+@pytest.mark.parametrize("label", NON_TEXT_LABELS)
+def test_non_text_transport_label_is_unrecognized(label):
+    raw = b"<p>caf\xe9 \x97 text"
+    assert sniff_charset(raw, transport=label) == ("cp1252", 0, "default")
+    assert decode_html(raw, transport=label) == decode_html(raw)

@@ -2,6 +2,10 @@
 content (embedded version lines, blank lines), malformed-file errors, and the
 deterministic multi-record file synthesis."""
 
+import contextlib
+import signal
+import time
+
 import pytest
 
 from htmlgraft.warcops import RECS_PER_FILE, iter_warc_records
@@ -706,3 +710,114 @@ def test_wat_roundtrip_matches_links_and_survives_cleanup(spark, sf_dir):
     assert got == want
     assert {(r["url"], r["title"], r["pos"], r["href"], r["anchor"])
             for r in df.collect()} == want
+
+
+# --- hostile framing: bounded time, linear cost --------------------------------
+
+@contextlib.contextmanager
+def _time_bound(seconds: int):
+    """Fail a call that is still running after ``seconds`` (a hang
+    shows up as TimeoutError instead of stalling the suite)."""
+    def _expire(signum, frame):
+        raise TimeoutError(f"still running after {seconds} s")
+
+    old = signal.signal(signal.SIGALRM, _expire)
+    signal.alarm(seconds)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+
+
+@pytest.mark.parametrize("size", [b"-6", b"+5", b"0x5", b"1_0"])
+def test_dechunk_size_must_be_plain_hex(size):
+    # int(tok, 16) takes a sign, "0x" and "_"; a size of -6 stepped back
+    # onto its own size line and looped forever
+    from htmlgraft.warcops import dechunk_http
+
+    body = b"1\r\na\r\n" + size + b"\r\nhello\r\n0\r\n\r\n"
+    with _time_bound(5), pytest.raises(ValueError, match="bad size"):
+        dechunk_http(body)
+
+
+def test_negative_content_length_raises():
+    # Content-Length of minus the header's own length put the walker back
+    # at the record's start: the same record again, forever
+    from itertools import islice
+
+    from htmlgraft.warcops import iter_warc_spans
+
+    def record(clen: int) -> bytes:
+        return (f"WARC/1.0\r\nWARC-Type: response\r\n"
+                f"WARC-Target-URI: http://a/\r\n"
+                f"Content-Length: {clen}\r\n\r\n").encode()
+
+    n = len(record(-10))  # two-digit lengths: record(-n) is n bytes too
+    assert len(record(-n)) == n
+    for blob in (record(-n), record(-1)):
+        with _time_bound(5), pytest.raises(ValueError, match="negative"):
+            list(islice(iter_warc_spans(blob), 5))
+
+
+def _gzip_members_reference(blob: bytes):
+    # the whole-rest-of-file walk: one decompress over blob[pos:]
+    import zlib
+
+    pos, n = 0, len(blob)
+    while pos < n:
+        d = zlib.decompressobj(wbits=31)
+        raw = d.decompress(blob[pos:])
+        assert d.eof
+        consumed = (n - pos) - len(d.unused_data)
+        yield raw, pos, consumed
+        pos += consumed
+
+
+def test_gzip_members_match_whole_file_walk():
+    # members below, at and far above the walker's read slice, an empty
+    # member, and incompressible bytes (compressed size ~ raw size)
+    import random
+
+    from htmlgraft.warcops import _GZ_READ, iter_gzip_members
+
+    rng = random.Random(7)
+    sizes = [0, 1, 3000, _GZ_READ - 20, _GZ_READ, _GZ_READ + 1,
+             3 * _GZ_READ + 5, 17, 200_000, 5]
+    blob = b"".join(_gz(rng.randbytes(k)) for k in sizes)
+    got = list(iter_gzip_members(blob))
+    assert got == list(_gzip_members_reference(blob))
+    assert [len(raw) for raw, _, _ in got] == sizes
+    with pytest.raises(ValueError, match="truncated gzip"):
+        list(iter_gzip_members(blob[:-3]))
+
+
+def test_gzip_member_walk_cost_is_linear():
+    # per-member time at 16x the members must stay under 4x: a walk that
+    # copies the rest of the file for each member reads about 16x
+    import gc
+    import random
+
+    from htmlgraft.warcops import iter_gzip_members
+
+    rng = random.Random(11)
+    member = [_gz(rng.randbytes(3000)) for _ in range(50)]
+
+    def per_member(count: int, runs: int) -> float:
+        blob = b"".join(member[i % 50] for i in range(count))
+        best = float("inf")
+        for _ in range(runs):
+            t = time.perf_counter()
+            for _ in iter_gzip_members(blob):
+                pass
+            best = min(best, time.perf_counter() - t)
+        return best / count
+
+    gc_was_on = gc.isenabled()
+    gc.disable()
+    try:
+        ratio = per_member(8000, 3) / per_member(500, 5)
+    finally:
+        if gc_was_on:
+            gc.enable()
+    assert ratio < 4.0, f"8000 members cost {ratio:.1f}x per member of 500"
