@@ -31,11 +31,63 @@ indexes, and inconsistent sizes raise ValueError; compressed BMPs
 (BI_RLE8/BI_RLE4/BI_BITFIELDS) and other bit depths raise
 NotImplementedError — loud per-row error lanes, never a silently wrong
 plane.
+
+This module also holds the size decisions every binary decoder shares:
+``_plane`` checks a header-sized allocation before it is made, and
+``_inflate`` is the one bounded DEFLATE/zlib/gzip inflate.
 """
 
 from __future__ import annotations
 
 import struct
+import zlib
+
+# Bytes a decoded plane or an inflated stream may hold: a few hundred
+# header bytes can claim gigabytes, and 64 MiB still fits an 8192 x 8192
+# grey plane while staying far inside an executor's memory.
+_DECODE_LIMIT = 64 << 20
+_INFLATE_STEP = 1 << 16  # compressed bytes fed to the decompressor at once
+_FRAMING = {15: "zlib", -15: "deflate", 31: "gzip"}  # wbits -> stream name
+
+
+def _plane(w: int, h: int, unit: int = 1, avail: int | None = None,
+           what: str = "pixel data") -> int:
+    """Bytes of a ``w`` x ``h`` plane of ``unit``-byte cells, checked
+    before it is allocated: positive dimensions, within ``_DECODE_LIMIT``
+    and within the ``avail`` bytes an uncompressed blob holds for it."""
+    if w <= 0 or h <= 0:
+        raise ValueError(f"bad {what} dimensions {w}x{h}")
+    size = w * h * unit
+    if size > _DECODE_LIMIT:
+        raise ValueError(f"{w}x{h} {what} of {size} bytes exceeds the limit")
+    if avail is not None and size > avail:
+        raise ValueError(f"truncated {what}: {size} bytes, {avail} left")
+    return size
+
+
+def _inflate(data, wbits: int = 15, limit: int = _DECODE_LIMIT):
+    """(output, bytes of ``data`` used) of the one ``wbits`` stream (15
+    zlib, -15 raw, 31 gzip) at the start of ``data``, fed in slices of one
+    memoryview.  Output past ``limit``, a truncated stream and any
+    ``zlib.error`` raise ValueError."""
+    view = memoryview(data)
+    d = zlib.decompressobj(wbits)
+    parts, size, pos = [], 0, 0
+    try:
+        while not d.eof and pos < len(view):
+            part = d.decompress(view[pos:pos + _INFLATE_STEP],
+                                limit + 1 - size)
+            size += len(part)
+            if size > limit:
+                raise ValueError(f"inflated stream exceeds {limit} bytes")
+            parts.append(part)
+            pos = min(pos + _INFLATE_STEP, len(view))
+    except zlib.error as exc:
+        raise ValueError(f"bad {_FRAMING[wbits]} stream: {exc}") from None
+    if not d.eof:
+        raise ValueError(f"truncated {_FRAMING[wbits]} stream")
+    return b"".join(parts), pos - len(d.unused_data)
+
 
 _FILEHDR = struct.Struct("<2sIHHI")     # magic, size, res1, res2, offset
 _INFOHDR = struct.Struct("<IiiHHIIiiII")
@@ -118,8 +170,6 @@ def decode_bmp_pixels(blob: bytes):
         raise NotImplementedError(f"bit depth {bits}")
     top_down = h_raw < 0
     h = -h_raw if top_down else h_raw
-    if w <= 0 or h == 0:
-        raise ValueError(f"bad dimensions {w}x{h_raw}")
     px, _ = dib_plane(blob, offset, _FILEHDR.size + hsize, w, h, bits,
                       n_colors, top_down)
     return w, h, 1, px
@@ -144,9 +194,7 @@ def dib_plane(blob: bytes, offset: int, pal_off: int, w: int, h: int,
             pal.append(_luma(r, g, b))
     row_bytes = w if bits == 8 else 3 * w
     stride = row_bytes + _pad(row_bytes)
-    end = offset + stride * h
-    if end > len(blob):
-        raise ValueError("truncated pixel array")
+    end = offset + _plane(stride, h, 1, len(blob) - offset, "pixel array")
     out = bytearray(w * h)
     for y in range(h):
         src_y = y if top_down else h - 1 - y

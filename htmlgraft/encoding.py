@@ -55,21 +55,30 @@ _DEFAULT = "cp1252"  # windows-1252, the WHATWG fallback
 _SCAN_BYTES = 1024
 
 
+# Python's names for the WHATWG Encoding Standard's encodings, plus the
+# codecs its labels resolve to where Python names them apart (gb2312,
+# tis-620, iso8859-11).  Others are no web encoding: utf-7 smuggles
+# markup, unicode_escape rewrites backslashes, cp037 is EBCDIC.
+_WHATWG_CODECS = frozenset(
+    "utf-8 utf-16 utf-16-be utf-16-le ascii cp866 cp874 tis-620 koi8-r "
+    "koi8-u mac-roman mac-cyrillic gbk gb2312 gb18030 big5 big5hkscs euc_jp "
+    "iso2022_jp shift_jis cp932 euc_kr cp949".split()
+    + [f"iso8859-{n}" for n in range(1, 17) if n != 12]
+    + [f"cp{n}" for n in range(1250, 1259)])
+
+
 def _codec_for_label(label: str) -> str | None:
     """WHATWG label -> Python codec (shared by the transport and meta
     branches); None when the label is unrecognized by either table.  A
-    Python codec outside ``_LABELS`` counts only if it is a text encoding
-    that decodes with "replace": ``base64``, ``rot13``, ``hex`` or ``zlib``
-    (bytes transforms) and ``idna`` (strict only) would fail the page, and
-    WHATWG treats a label it does not know as absent."""
+    label outside ``_LABELS`` counts only if Python resolves it to one of
+    ``_WHATWG_CODECS``: WHATWG treats a label it does not know as absent."""
     codec = _LABELS.get(label)
     if codec is None:
         try:
             codec = codecs.lookup(label).name
-            b"\x80".decode(codec, "replace")
-        except (LookupError, ValueError):
-            codec = None
-    return codec
+        except LookupError:
+            return None
+    return codec if codec in _WHATWG_CODECS else None
 
 
 def sniff_charset(raw: bytes,

@@ -42,6 +42,8 @@ from __future__ import annotations
 
 import struct
 
+from htmlgraft.bmpops import _DECODE_LIMIT, _plane
+
 _SIG87 = b"GIF87a"
 _SIG89 = b"GIF89a"
 _MIN_CODE = 8          # 256-entry palette -> 8-bit symbols, codes start at 9
@@ -134,10 +136,12 @@ def _lzw_encode(indices: bytes, min_code: int = _MIN_CODE,
     return bw.flush()
 
 
-def _lzw_decode(data: bytes, min_code: int = _MIN_CODE):
+def _lzw_decode(data: bytes, min_code: int = _MIN_CODE,
+                limit: int = _DECODE_LIMIT):
     """Returns (indices, max_width_reached).  Raises ValueError on any
     malformed stream: truncation, a code beyond the table, a first code
-    that is not a literal, or a missing End-of-Information."""
+    that is not a literal, a missing End-of-Information, or more than
+    ``limit`` indices (one 12-bit code can emit 4,093 of them)."""
     clear = 1 << min_code
     eoi = clear + 1
     br = _BitReader(data)
@@ -174,6 +178,8 @@ def _lzw_decode(data: bytes, min_code: int = _MIN_CODE):
         else:
             raise ValueError("GIF LZW code beyond table")
         out += entry
+        if len(out) > limit:
+            raise ValueError(f"GIF LZW pixel count exceeds {limit}")
         if prev is not None and next_code < (1 << _MAX_WIDTH):
             table.append(prev + entry[:1])
             next_code += 1
@@ -330,12 +336,13 @@ def _gif_blocks(blob: bytes, gct: bytes, pos: int, canvas=None):
         if not 2 <= min_code <= 8:
             raise ValueError("GIF LZW minimum code size out of range")
         data, pos = _read_sub_blocks(blob, pos)
-        indices, _ = _lzw_decode(data, min_code)
-        if len(indices) != iw * ih:
+        size = _plane(iw, ih)
+        indices, _ = _lzw_decode(data, min_code, size)
+        if len(indices) != size:
             raise ValueError(
                 f"GIF LZW pixel count {len(indices)} != {iw}x{ih}")
         if iflags & 0x40:                    # de-interlace the 4-pass rows
-            plane = bytearray(iw * ih)
+            plane = bytearray(size)
             for seq, row in enumerate(interlace_rows(ih)):
                 plane[row * iw:(row + 1) * iw] = indices[
                     seq * iw:(seq + 1) * iw]

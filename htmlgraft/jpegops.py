@@ -1,8 +1,10 @@
 """Real baseline JPEG codec (ITU-T T.81, public spec) — pure Python + numpy.
 
-Round-4 review flagged the pixel tier as PNG-only ("real users hit JPEG
-first"): perceptual dedup over a crawl corpus is dominated by baseline
-JPEGs.  This module closes that gap with an honest codec, not a stub:
+Decoder contract: any blob decodes to a value or raises ValueError
+(malformed) or NotImplementedError (out of scope).  Both decode paths
+read markers through one ``_segment`` walk and tables and scan headers
+through one ``_table_segment``, and size every plane and coefficient
+buffer with ``bmpops._plane`` against ``bmpops._DECODE_LIMIT`` first.
 
 - ``decode_jpeg`` — full baseline-sequential decode: marker walk, DQT
   (8-bit), DHT (canonical Huffman per T.81 Annex C), SOF0/SOF1, DRI +
@@ -59,6 +61,8 @@ import math
 import struct
 
 import numpy as np
+
+from htmlgraft.bmpops import _plane
 
 # --- public T.81 Annex K tables ------------------------------------------------
 
@@ -161,7 +165,9 @@ def _enc_table(bits, vals):
     return out
 
 def _dec_table(bits, vals):
-    """(mincode, maxcode, valptr) per length for spec Figure F.16 decode."""
+    """(mincode, maxcode, valptr) per length for spec Figure F.16 decode;
+    the codes past the end of a short ``vals`` (a DHT cut off inside its
+    values) are left out, so reading one is an invalid code."""
     mincode, maxcode, valptr = [0] * 17, [-1] * 17, [0] * 17
     code, k = 0, 0
     for length in range(1, 17):
@@ -170,7 +176,7 @@ def _dec_table(bits, vals):
             mincode[length] = code
             code += bits[length - 1]
             k += bits[length - 1]
-            maxcode[length] = code - 1
+            maxcode[length] = code - 1 - max(0, k - len(vals))
         code <<= 1
     return mincode, maxcode, valptr, list(vals)
 
@@ -460,36 +466,84 @@ class _Header:
                  "scan_comps", "entropy_pos", "progressive", "scan_spec")
 
 
+def _segment(blob: bytes, pos: int):
+    """``(marker, payload, offset after it)`` of the marker at ``pos``
+    after any fill bytes; payload None for SOI, EOI, TEM and RSTn."""
+    while blob[pos:pos + 2] == b"\xff\xff":
+        pos += 1
+    if pos + 2 > len(blob):
+        raise ValueError("JPEG truncated before a marker")
+    if blob[pos] != 0xFF:
+        raise ValueError(f"JPEG marker expected at {pos}")
+    m = blob[pos + 1]
+    pos += 2
+    if m in (0xD8, 0xD9, 0x01) or 0xD0 <= m <= 0xD7:
+        return m, None, pos
+    if pos + 2 > len(blob):
+        raise ValueError("JPEG segment length truncated")
+    ln = struct.unpack(">H", blob[pos:pos + 2])[0]
+    if ln < 2 or pos + ln > len(blob):
+        raise ValueError("JPEG segment overruns file")
+    return m, blob[pos + 2:pos + ln], pos + ln
+
+
+def _table_segment(hd: _Header, m: int, data: bytes) -> bool:
+    """Read a DQT, DHT, DRI or SOS payload into ``hd`` (others are
+    skipped); True on SOS.  A payload short of what it declares raises."""
+    if m == 0xDB:
+        for j in range(0, len(data), 65):
+            if data[j] >> 4:
+                raise NotImplementedError(
+                    "16-bit JPEG quant tables not implemented here")
+            if j + 65 > len(data):
+                raise ValueError("JPEG DQT table truncated")
+            hd.qtables[data[j] & 15] = list(data[j + 1:j + 65])
+    elif m == 0xC4:
+        j = 0
+        while j < len(data):
+            if j + 17 > len(data):
+                raise ValueError("JPEG DHT shorter than its 16 counts")
+            bits = data[j + 1:j + 17]
+            end = j + 17 + sum(bits)
+            hd.htables[(data[j] >> 4, data[j] & 15)] = _dec_table(
+                bits, data[j + 17:end])
+            j = end
+    elif m == 0xDD:
+        if len(data) < 2:
+            raise ValueError("JPEG DRI segment too short")
+        hd.restart = struct.unpack(">H", data[:2])[0]
+    elif m == 0xDA:
+        ns = data[0] if data else 0
+        if len(data) < 4 + 2 * ns:
+            raise ValueError("JPEG SOS segment too short")
+        hd.scan_comps = [(data[1 + 2 * k], data[2 + 2 * k] >> 4,
+                          data[2 + 2 * k] & 15) for k in range(ns)]
+        hd.scan_spec = (data[1 + 2 * ns], data[2 + 2 * ns],
+                        data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 15)
+        return True
+    return False
+
+
 def _parse_header(blob: bytes) -> _Header:
     if blob[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")
     hd = _Header()
     hd.qtables, hd.htables, hd.restart = {}, {}, 0
     hd.w = None
-    i, n = 2, len(blob)
+    i = 2
     while True:
-        if i + 2 > n:
-            raise ValueError("JPEG truncated before SOS")
-        if blob[i] != 0xFF:
-            raise ValueError(f"JPEG marker expected at {i}")
-        m = blob[i + 1]
-        i += 2
-        if m in (0xD8, 0x01) or 0xD0 <= m <= 0xD7:
+        m, data, i = _segment(blob, i)
+        if data is None:
+            if m == 0xD9:
+                raise ValueError("JPEG EOI before SOS")
             continue
-        if m == 0xD9:
-            raise ValueError("JPEG EOI before SOS")
-        if i + 2 > n:
-            raise ValueError("JPEG segment length truncated")
-        ln = struct.unpack(">H", blob[i:i + 2])[0]
-        if ln < 2 or i + ln > n:
-            raise ValueError("JPEG segment overruns file")
-        data = blob[i + 2:i + ln]
-        i += ln
         if m in _SOF_UNSUPPORTED:
             raise NotImplementedError(
                 f"{_SOF_UNSUPPORTED[m]} not implemented here")
         if m in _SOF_BASELINE or m in _SOF_PROGRESSIVE:
             hd.progressive = m in _SOF_PROGRESSIVE
+            if len(data) < 6:
+                raise ValueError("JPEG SOF segment too short")
             prec, h, w, nc = struct.unpack(">BHHB", data[:6])
             if prec != 8:
                 raise NotImplementedError(
@@ -497,171 +551,149 @@ def _parse_header(blob: bytes) -> _Header:
             if nc not in (1, 3):
                 raise NotImplementedError(
                     f"{nc}-component JPEG not implemented here")
+            if len(data) < 6 + 3 * nc:
+                raise ValueError("JPEG SOF segment too short")
             hd.w, hd.h = w, h
-            hd.comps = []
-            for k in range(nc):
-                cid, hv, tq = data[6 + 3 * k:9 + 3 * k]
-                hd.comps.append((cid, hv >> 4, hv & 15, tq))
-        elif m == 0xDB:
-            j = 0
-            while j < len(data):
-                pq, tq = data[j] >> 4, data[j] & 15
-                if pq != 0:
-                    raise NotImplementedError(
-                        "16-bit JPEG quant tables not implemented here")
-                hd.qtables[tq] = list(data[j + 1:j + 65])
-                j += 65
-        elif m == 0xC4:
-            j = 0
-            while j < len(data):
-                cls, tid = data[j] >> 4, data[j] & 15
-                bits = list(data[j + 1:j + 17])
-                cnt = sum(bits)
-                vals = list(data[j + 17:j + 17 + cnt])
-                hd.htables[(cls, tid)] = _dec_table(bits, vals)
-                j += 17 + cnt
-        elif m == 0xDD:
-            hd.restart = struct.unpack(">H", data[:2])[0]
-        elif m == 0xDA:
-            ns = data[0]
-            hd.scan_comps = []
-            for k in range(ns):
-                cs, tt = data[1 + 2 * k], data[2 + 2 * k]
-                hd.scan_comps.append((cs, tt >> 4, tt & 15))
-            hd.scan_spec = (data[1 + 2 * ns], data[2 + 2 * ns],
-                            data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 15)
+            hd.comps = [(data[6 + 3 * k], data[7 + 3 * k] >> 4,
+                         data[7 + 3 * k] & 15, data[8 + 3 * k])
+                        for k in range(nc)]
+        elif _table_segment(hd, m, data):
             hd.entropy_pos = i
             break
-        # APPn / COM / others: skipped
     if hd.w is None:
         raise ValueError("JPEG SOS before SOF")
     return hd
 
 
-def _decode_planes(blob: bytes, luma_only: bool = False):
-    """Shared scan decode -> per-component pixel planes (padded to the
-    block grid).  Returns (header, [np.ndarray plane or None])."""
-    hd = _parse_header(blob)
-    if hd.progressive:
-        return _decode_planes_progressive(blob, hd, luma_only)
-    if len(hd.scan_comps) != len(hd.comps):
-        raise NotImplementedError(
-            "multi-scan (non-interleaved) sequential JPEG "
-            "not implemented here")
-    # T.81 A.2: a single-component scan is non-interleaved — the MCU is
-    # one block and sampling factors do not shape the grid.
+def _frame_comps(hd: _Header):
+    """``(comps, hmax, vmax, mx, my)``: per component its sampling, natural
+    order dequant matrix, block grid ``bw`` x ``bh`` (``bwp`` x ``bhp``
+    padded to the mx x my MCUs) and zeroed plane (T.81 A.2).  A lone
+    component is non-interleaved: one block per MCU whatever its factors."""
     single = len(hd.comps) == 1
+    if not single and not all(c[1] and c[2] for c in hd.comps):
+        raise ValueError("JPEG sampling factor 0")
     hmax = 1 if single else max(c[1] for c in hd.comps)
     vmax = 1 if single else max(c[2] for c in hd.comps)
+    mx = (hd.w + 8 * hmax - 1) // (8 * hmax)
+    my = (hd.h + 8 * vmax - 1) // (8 * vmax)
     comps = []
     for (cid, ch, cv, tq) in hd.comps:
         if single:
             ch = cv = 1
-        scan = next(s for s in hd.scan_comps if s[0] == cid)
+        if tq not in hd.qtables:
+            raise ValueError(f"JPEG frame references missing quant table {tq}")
         bw = (hd.w * ch + 8 * hmax - 1) // (8 * hmax)
         bh = (hd.h * cv + 8 * vmax - 1) // (8 * vmax)
-        comps.append({
-            "h": ch, "v": cv, "q": hd.qtables[tq],
-            "dc": hd.htables.get((0, scan[1])),
-            "ac": hd.htables.get((1, scan[2])),
-            "bw": bw, "bh": bh,
-            "plane": np.zeros((bh * 8, bw * 8), dtype=np.uint8),
-        })
-    for c in comps:
-        if c["dc"] is None or c["ac"] is None:
-            raise ValueError("JPEG scan references a missing Huffman table")
-    mx = (hd.w + 8 * hmax - 1) // (8 * hmax)
-    my = (hd.h + 8 * vmax - 1) // (8 * vmax)
-    rd = _BitReader(blob, hd.entropy_pos)
-    preds = [0] * len(comps)
-    rst_count, rst_idx = 0, 0
-    qmats = []
-    for c in comps:
+        _plane(bw * 8, bh * 8)
         qn = np.zeros(64, dtype=np.int64)
-        qn[_ZZ] = np.array(c["q"], dtype=np.int64)
-        qmats.append(qn.reshape(8, 8))
-    for m in range(mx * my):
-        if hd.restart and rst_count == hd.restart:
-            rd.align_restart(rst_idx)
-            rst_idx = (rst_idx + 1) & 7
-            rst_count = 0
-            preds = [0] * len(comps)
-        mcx, mcy = m % mx, m // mx
-        for ci, c in enumerate(comps):
-            for vy in range(c["v"]):
-                for vx in range(c["h"]):
-                    zz = np.zeros(64, dtype=np.int64)
-                    t = rd.decode_huff(c["dc"])
-                    preds[ci] += _extend(rd.receive(t), t)
-                    zz[0] = preds[ci]
-                    k = 1
-                    while k < 64:
-                        rs = rd.decode_huff(c["ac"])
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r == 15:
-                                k += 16
-                                continue
-                            break
-                        k += r
-                        if k > 63:
-                            raise ValueError("JPEG AC run overflows block")
-                        zz[k] = _extend(rd.receive(s), s)
-                        k += 1
-                    if luma_only and ci != 0:
+        qn[_ZZ] = hd.qtables[tq]
+        comps.append({
+            "cid": cid, "h": ch, "v": cv, "q": qn.reshape(8, 8),
+            "bw": bw, "bh": bh, "bwp": mx * ch, "bhp": my * cv,
+            "plane": np.zeros((bh * 8, bw * 8), dtype=np.uint8),
+            "dc": None, "ac": None,
+        })
+    return comps, hmax, vmax, mx, my
+
+
+def _bind_tables(c, hd: _Header, scan, dc: bool, ac: bool) -> None:
+    """Point component ``c`` at the DC and/or AC Huffman table its scan
+    entry ``(cs, td, ta)`` names; an undefined table raises ValueError."""
+    for key, cls, tid, need in (("dc", 0, scan[1], dc), ("ac", 1, scan[2], ac)):
+        c[key] = hd.htables.get((cls, tid)) if need else None
+        if need and c[key] is None:
+            raise ValueError(f"JPEG scan references a missing {key.upper()} "
+                             f"table: Huffman table {cls}/{tid} undefined")
+
+
+def _put_block(c, bx: int, by: int, zz) -> None:
+    """Dequantize block (bx, by)'s zigzag coefficients ``zz`` in natural
+    order and IDCT them into the component's plane."""
+    nat = np.zeros(64, dtype=np.int64)
+    nat[_ZZ] = zz
+    nat = nat.reshape(8, 8) * c["q"]
+    c["plane"][by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = (
+        idct_block(nat).astype(np.uint8))
+
+
+def _decode_planes(blob: bytes, luma_only: bool = False):
+    """(header, [plane per component, or the luma plane alone with
+    ``luma_only``]): each upsampled by replication to the frame's sampling
+    grid and cropped to the image."""
+    hd = _parse_header(blob)
+    decode = _decode_progressive if hd.progressive else _decode_baseline
+    comps, hmax, vmax = decode(blob, hd, luma_only)
+    return hd, [np.repeat(np.repeat(c["plane"], vmax // c["v"], axis=0),
+                          hmax // c["h"], axis=1)[:hd.h, :hd.w]
+                for c in (comps[:1] if luma_only else comps)]
+
+
+def _decode_baseline(blob: bytes, hd: _Header, luma_only: bool):
+    """Single-scan sequential decode -> (comps, hmax, vmax)."""
+    if len(hd.scan_comps) != len(hd.comps):
+        raise NotImplementedError(
+            "multi-scan (non-interleaved) sequential JPEG "
+            "not implemented here")
+    comps, hmax, vmax, mx, my = _frame_comps(hd)
+    for c in comps:
+        scan = next((s for s in hd.scan_comps if s[0] == c["cid"]), None)
+        if scan is None:
+            raise ValueError(f"JPEG frame component {c['cid']} not in scan")
+        _bind_tables(c, hd, scan, True, True)
+    rd = _BitReader(blob, hd.entropy_pos)
+    members = list(enumerate(comps))
+    for m, st in _mcus(rd, mx * my, hd.restart, len(comps)):
+        for ci, c, bx, by in _mcu_blocks(m, mx, members):
+            zz = np.zeros(64, dtype=np.int64)
+            _dc_block(rd, c, st, ci, zz, 0, 0)
+            k = 1
+            while k < 64:
+                rs = rd.decode_huff(c["ac"])
+                r, s = rs >> 4, rs & 15
+                if s == 0:
+                    if r == 15:
+                        k += 16
                         continue
-                    bx = mcx * c["h"] + vx
-                    by = mcy * c["v"] + vy
-                    if bx >= c["bw"] or by >= c["bh"]:
-                        continue   # dummy block outside the component grid
-                    # dezigzag THEN dequantize in natural order
-                    nat = np.zeros(64, dtype=np.int64)
-                    nat[_ZZ] = zz
-                    nat = nat.reshape(8, 8) * qmats[ci]
-                    c["plane"][by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = (
-                        idct_block(nat).astype(np.uint8))
-        rst_count += 1
-    return hd, comps, hmax, vmax
+                    break
+                k += r
+                if k > 63:
+                    raise ValueError("JPEG AC run overflows block")
+                zz[k] = _extend(rd.receive(s), s)
+                k += 1
+            # skipped chroma, or a dummy block outside the component grid
+            if luma_only and ci != 0 or bx >= c["bw"] or by >= c["bh"]:
+                continue
+            _put_block(c, bx, by, zz)
+    return comps, hmax, vmax
 
 
 def decode_jpeg_gray(blob: bytes):
     """(w, h, 1, pixels) for a greyscale baseline JPEG (the exact-oracle
     path: single component, decode per the module IDCT contract)."""
-    hd, comps, _, _ = _decode_planes(blob)
-    if len(comps) != 1:
+    hd, planes = _decode_planes(blob)
+    if len(planes) != 1:
         raise ValueError("decode_jpeg_gray on a colour JPEG")
-    plane = comps[0]["plane"][:hd.h, :hd.w]
-    return hd.w, hd.h, 1, plane.tobytes()
+    return hd.w, hd.h, 1, planes[0].tobytes()
 
 
 def decode_jpeg_luma(blob: bytes):
     """(w, h, 1, luma plane) for any baseline JPEG — the phash fast path:
     chroma blocks are entropy-decoded (the stream must advance) but skip
     dequant + IDCT."""
-    hd, comps, hmax, vmax = _decode_planes(blob, luma_only=True)
-    c = comps[0]
-    plane = c["plane"]
-    if c["h"] != hmax or c["v"] != vmax:
-        plane = np.repeat(np.repeat(plane, vmax // c["v"], axis=0),
-                          hmax // c["h"], axis=1)
-    return hd.w, hd.h, 1, plane[:hd.h, :hd.w].tobytes()
+    hd, planes = _decode_planes(blob, luma_only=True)
+    return hd.w, hd.h, 1, planes[0].tobytes()
 
 
 def decode_jpeg(blob: bytes):
     """(w, h, channels, pixels): greyscale plane for 1-component files,
     interleaved RGB for 3-component YCbCr (replication chroma upsampling;
     JFIF fixed-point colour transform, round-half-up at 2^16)."""
-    hd, comps, hmax, vmax = _decode_planes(blob)
-    if len(comps) == 1:
-        return hd.w, hd.h, 1, comps[0]["plane"][:hd.h, :hd.w].tobytes()
-    planes = []
-    for c in comps:
-        p = c["plane"]
-        if c["h"] != hmax or c["v"] != vmax:
-            p = np.repeat(np.repeat(p, vmax // c["v"], axis=0),
-                          hmax // c["h"], axis=1)
-        planes.append(p[:hd.h, :hd.w].astype(np.int64))
-    y, cb, cr = planes[0], planes[1] - 128, planes[2] - 128
+    hd, planes = _decode_planes(blob)
+    if len(planes) == 1:
+        return hd.w, hd.h, 1, planes[0].tobytes()
+    y, cb, cr = (p.astype(np.int64) for p in planes)
+    cb, cr = cb - 128, cr - 128
     r = np.clip(y + ((91881 * cr + 32768) >> 16), 0, 255)
     g = np.clip(y - ((22554 * cb + 46802 * cr + 32768) >> 16), 0, 255)
     b = np.clip(y + ((116130 * cb + 32768) >> 16), 0, 255)
@@ -694,9 +726,36 @@ class _ScanState:
         self.preds = [0] * ncomps
 
 
-def _prog_dc_block(rd, c, st, ci, coef, ah, al):
+def _mcus(rd, units: int, restart: int, ncomps: int):
+    """Yield (unit index, scan state) over a scan's ``units`` MCUs (or
+    blocks), reading the RSTn marker and resetting the DC predictions and
+    EOB run after every ``restart`` units (T.81 E.2.4)."""
+    st = _ScanState(ncomps)
+    for m in range(units):
+        if restart and m and m % restart == 0:
+            rd.align_restart(m // restart - 1)
+            st = _ScanState(ncomps)
+        yield m, st
+
+
+def _mcu_blocks(m: int, mx: int, members):
+    """(comps index, comp, bx, by) per block of interleaved MCU ``m`` on
+    an ``mx``-wide MCU grid, in scan order (T.81 A.2.3)."""
+    mcx, mcy = m % mx, m // mx
+    for ci, c in members:
+        for vy in range(c["v"]):
+            for vx in range(c["h"]):
+                yield ci, c, mcx * c["h"] + vx, mcy * c["v"] + vy
+
+
+def _dc_block(rd, c, st, ci, coef, ah, al):
+    """One block's DC step: a first scan (``ah == 0``, and the baseline
+    path with ``al == 0``) decodes a DPCM difference, a refinement scan
+    reads one correction bit."""
     if ah == 0:
         t = rd.decode_huff(c["dc"])
+        if t > 11:
+            raise ValueError(f"JPEG DC category {t} above 11")
         st.preds[ci] += _extend(rd.receive(t), t)
         coef[0] = st.preds[ci] << al
     else:
@@ -776,168 +835,74 @@ def _prog_decode_scan(blob, pos, comps, members, spec, restart, mx, my):
     returns the offset just past its entropy data.  ``members`` =
     [(comps index, comp dict)] in scan order."""
     ss, se, ah, al = spec
+    if ss == 0 and se != 0:
+        raise ValueError("JPEG DC scan with Se != 0")
+    if ss != 0 and len(members) != 1 or not members:
+        raise ValueError("JPEG scan needs one component (AC) or more (DC)")
+    if se > 63 or ss > se:
+        raise ValueError("JPEG AC scan band out of range")
     rd = _BitReader(blob, pos)
-    st = _ScanState(len(comps))
-    if ss == 0:
-        if se != 0:
-            raise ValueError("JPEG DC scan with Se != 0")
-        interleaved = len(members) > 1
-        if interleaved:
-            units = mx * my
+    if len(members) > 1:                       # interleaved DC scan
+        for m, st in _mcus(rd, mx * my, restart, len(comps)):
+            for ci, c, bx, by in _mcu_blocks(m, mx, members):
+                _dc_block(rd, c, st, ci, c["coef"][by * c["bwp"] + bx],
+                          ah, al)
+        return rd.pos
+    ci, c = members[0]
+    for m, st in _mcus(rd, c["bw"] * c["bh"], restart, len(comps)):
+        coef = c["coef"][(m // c["bw"]) * c["bwp"] + (m % c["bw"])]
+        if ss == 0:
+            _dc_block(rd, c, st, ci, coef, ah, al)
+        elif ah == 0:
+            _prog_ac_first_block(rd, c, st, coef, ss, se, al)
         else:
-            ci, c = members[0]
-            units = c["bw"] * c["bh"]
-        rst_count, rst_idx = 0, 0
-        for m in range(units):
-            if restart and rst_count == restart:
-                rd.align_restart(rst_idx)
-                rst_idx = (rst_idx + 1) & 7
-                rst_count = 0
-                st = _ScanState(len(comps))
-            if interleaved:
-                mcx, mcy = m % mx, m // mx
-                for ci, c in members:
-                    for vy in range(c["v"]):
-                        for vx in range(c["h"]):
-                            nb = ((mcy * c["v"] + vy) * c["bwp"]
-                                  + mcx * c["h"] + vx)
-                            _prog_dc_block(
-                                rd, c, st, ci, c["coef"][nb], ah, al)
-            else:
-                ci, c = members[0]
-                nb = (m // c["bw"]) * c["bwp"] + (m % c["bw"])
-                _prog_dc_block(rd, c, st, ci, c["coef"][nb], ah, al)
-            rst_count += 1
-    else:
-        if len(members) != 1:
-            raise ValueError("JPEG AC scan must be single-component")
-        if se > 63 or ss > se:
-            raise ValueError("JPEG AC scan band out of range")
-        ci, c = members[0]
-        rst_count, rst_idx = 0, 0
-        for m in range(c["bw"] * c["bh"]):
-            if restart and rst_count == restart:
-                rd.align_restart(rst_idx)
-                rst_idx = (rst_idx + 1) & 7
-                rst_count = 0
-                st = _ScanState(len(comps))
-            nb = (m // c["bw"]) * c["bwp"] + (m % c["bw"])
-            if ah == 0:
-                _prog_ac_first_block(rd, c, st, c["coef"][nb], ss, se, al)
-            else:
-                _prog_ac_refine_block(rd, c, st, c["coef"][nb], ss, se, al)
-            rst_count += 1
-        if st.eobrun:
-            raise ValueError("JPEG EOB run overruns the scan")
+            _prog_ac_refine_block(rd, c, st, coef, ss, se, al)
+    if st.eobrun:
+        raise ValueError("JPEG EOB run overruns the scan")
     return rd.pos
 
 
-def _decode_planes_progressive(blob: bytes, hd: _Header, luma_only: bool):
-    """Multi-scan progressive decode -> the same (hd, comps, hmax, vmax)
-    contract as the baseline ``_decode_planes``."""
-    single_frame = len(hd.comps) == 1
-    hmax = 1 if single_frame else max(c[1] for c in hd.comps)
-    vmax = 1 if single_frame else max(c[2] for c in hd.comps)
-    mx = (hd.w + 8 * hmax - 1) // (8 * hmax)
-    my = (hd.h + 8 * vmax - 1) // (8 * vmax)
-    comps = []
-    for (cid, ch, cv, tq) in hd.comps:
-        if single_frame:
-            ch = cv = 1
-        bw = (hd.w * ch + 8 * hmax - 1) // (8 * hmax)
-        bh = (hd.h * cv + 8 * vmax - 1) // (8 * vmax)
-        bwp, bhp = mx * ch, my * cv      # interleaved-DC padded grid
-        comps.append({
-            "cid": cid, "h": ch, "v": cv, "q": hd.qtables[tq],
-            "bw": bw, "bh": bh, "bwp": bwp, "bhp": bhp,
-            "coef": np.zeros((bhp * bwp, 64), dtype=np.int64),
-            "dc": None, "ac": None,
-        })
-    htables = dict(hd.htables)
-    restart = hd.restart
-    scan_comps, spec, pos = hd.scan_comps, hd.scan_spec, hd.entropy_pos
-    n = len(blob)
+def _next_scan(hd: _Header, blob: bytes, pos: int):
+    """Read the segments after a scan's entropy data into ``hd``; returns
+    the next scan's entropy offset, or None at EOI."""
     while True:
+        m, data, pos = _segment(blob, pos)
+        if m == 0xD9:
+            return None
+        if data is None:
+            raise ValueError("stray JPEG marker between scans")
+        if _table_segment(hd, m, data):
+            return pos
+
+
+def _decode_progressive(blob: bytes, hd: _Header, luma_only: bool):
+    """Multi-scan progressive decode -> the same (comps, hmax, vmax) as
+    ``_decode_baseline``."""
+    comps, hmax, vmax, mx, my = _frame_comps(hd)
+    for c in comps:
+        _plane(c["bwp"], c["bhp"], 512, what="coefficients")  # 64 int64s
+        c["coef"] = np.zeros((c["bhp"] * c["bwp"], 64), dtype=np.int64)
+    pos = hd.entropy_pos
+    while pos is not None:
+        ss, _se, ah, _al = hd.scan_spec
         members = []
-        for (cs, td, ta) in scan_comps:
-            idx = next((i for i, c in enumerate(comps) if c["cid"] == cs),
+        for scan in hd.scan_comps:
+            idx = next((i for i, c in enumerate(comps) if c["cid"] == scan[0]),
                        None)
             if idx is None:
                 raise ValueError("JPEG scan references unknown component")
-            c = comps[idx]
-            ss, _se, ah, _al = spec
-            c["dc"] = htables.get((0, td)) if ss == 0 and ah == 0 else None
-            c["ac"] = htables.get((1, ta)) if ss != 0 else None
-            if ss == 0 and ah == 0 and c["dc"] is None:
-                raise ValueError("JPEG scan references a missing DC table")
-            if ss != 0 and c["ac"] is None:
-                raise ValueError("JPEG scan references a missing AC table")
-            members.append((idx, c))
-        pos = _prog_decode_scan(blob, pos, comps, members, spec, restart,
-                                mx, my)
-        # marker walk to the next SOS or EOI
-        scan_comps = None
-        while True:
-            if pos + 2 > n:
-                raise ValueError("JPEG truncated between scans")
-            if blob[pos] != 0xFF:
-                raise ValueError("JPEG marker expected between scans")
-            m = blob[pos + 1]
-            if m == 0xFF:                 # fill byte
-                pos += 1
-                continue
-            pos += 2
-            if m == 0xD9:
-                break
-            if 0xD0 <= m <= 0xD7 or m in (0xD8, 0x01):
-                raise ValueError("stray JPEG marker between scans")
-            if pos + 2 > n:
-                raise ValueError("JPEG segment length truncated")
-            ln = struct.unpack(">H", blob[pos:pos + 2])[0]
-            if ln < 2 or pos + ln > n:
-                raise ValueError("JPEG segment overruns file")
-            data = blob[pos + 2:pos + ln]
-            pos += ln
-            if m == 0xC4:
-                j = 0
-                while j < len(data):
-                    cls, tid = data[j] >> 4, data[j] & 15
-                    bits = list(data[j + 1:j + 17])
-                    cnt = sum(bits)
-                    htables[(cls, tid)] = _dec_table(
-                        bits, list(data[j + 17:j + 17 + cnt]))
-                    j += 17 + cnt
-            elif m == 0xDD:
-                restart = struct.unpack(">H", data[:2])[0]
-            elif m == 0xDA:
-                ns = data[0]
-                scan_comps = [
-                    (data[1 + 2 * k], data[2 + 2 * k] >> 4,
-                     data[2 + 2 * k] & 15) for k in range(ns)]
-                spec = (data[1 + 2 * ns], data[2 + 2 * ns],
-                        data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 15)
-                break
-            # APPn / COM / DQT after SOS: skipped (DQT may not change
-            # tables already referenced; we keep first-seen semantics)
-        if scan_comps is None:
-            break
+            _bind_tables(comps[idx], hd, scan, ss == 0 and ah == 0, ss != 0)
+            members.append((idx, comps[idx]))
+        pos = _next_scan(hd, blob, _prog_decode_scan(
+            blob, pos, comps, members, hd.scan_spec, hd.restart, mx, my))
     # all scans read: dequantize + IDCT the true block grid per component
     for ci, c in enumerate(comps):
-        plane = np.zeros((c["bh"] * 8, c["bw"] * 8), dtype=np.uint8)
-        if not (luma_only and ci != 0):
-            qn = np.zeros(64, dtype=np.int64)
-            qn[_ZZ] = np.array(c["q"], dtype=np.int64)
-            qmat = qn.reshape(8, 8)
-            for by in range(c["bh"]):
-                for bx in range(c["bw"]):
-                    zz = c["coef"][by * c["bwp"] + bx]
-                    nat = np.zeros(64, dtype=np.int64)
-                    nat[_ZZ] = zz
-                    nat = nat.reshape(8, 8) * qmat
-                    plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = (
-                        idct_block(nat).astype(np.uint8))
-        c["plane"] = plane
-    return hd, comps, hmax, vmax
+        if luma_only and ci != 0:
+            continue
+        for by in range(c["bh"]):
+            for bx in range(c["bw"]):
+                _put_block(c, bx, by, c["coef"][by * c["bwp"] + bx])
+    return comps, hmax, vmax
 
 
 # --- progressive encoder --------------------------------------------------------

@@ -17,6 +17,9 @@ These parsers work on real files.  Full-pixel decode is real too, in pure
 Python, for PNG (``pixelops``), baseline and progressive JPEG
 (``jpegops``), GIF (``gifops``), BMP (``bmpops``), ICO (``icoops``) and
 uncompressed TIFF (``tiffops``); other formats raise ``NotImplementedError``.
+Each of those decoders returns a value or raises ValueError or
+NotImplementedError, whatever the bytes: header-sized planes and every
+inflate are bounded by ``bmpops._DECODE_LIMIT`` (``_plane``, ``_inflate``).
 
 The source table synthesizes blobs with REAL format headers entirely in
 Spark SQL expressions (binary concat + unhex arithmetic, zero Python; the

@@ -18,6 +18,7 @@ from .grammar import (
     BREAKOUT_RULES,
     C,
     CLASS_IDS as eq,
+    DOCUMENT_RULE,
     HTML_RULES,
     JS_PROTO_KEYS as _JS_PROTO_KEYS,
     MATH_RULES,
@@ -103,11 +104,10 @@ _SVG_TAG_ADJUST = {n.lower(): n for n in _CORRECTED_SVG_TAG_NAMES}
 
 class Parser:
     __slots__ = (
-        "mode", "html", "head", "body", "bodyIndex", "builder", "initial_rule",
-        "n_tokens",
+        "mode", "html", "head", "body", "bodyIndex", "builder", "n_tokens",
     )
 
-    def __init__(self, initial_rule=None):
+    def __init__(self):
         # delegate-call counter (one per tokeniser write_* call); folded into
         # the parser so the pipeline needs no counting-wrapper delegate layer
         self.n_tokens = 0
@@ -116,8 +116,7 @@ class Parser:
         self.head = None
         self.body = None
         self.bodyIndex = None
-        self.initial_rule = initial_rule or RULES["documentRule"]
-        self.builder = TreeBuilder(Document(), self.initial_rule)
+        self.builder = TreeBuilder(Document(), DOCUMENT_RULE)
         self.builder.on_open(_openHooks, self._onopen)
 
     @property
@@ -381,15 +380,14 @@ class Parser:
     def write_eof(self):
         self.n_tokens += 1
         builder = self.builder
-        if self.initial_rule is RULES["documentRule"]:
-            if self.html is None:
-                builder.try_open("html", {}, _ID_html, _C_html, RULES["beforeHead"])
-            if self.head is None:
-                if not builder.try_open("head", {}, _ID_head, _C_head, RULES["inHead"]):
-                    self.html.children.append(Element("head"))
-            if self.body is None:
-                if not builder.try_open("body", {}, _ID_body, _C_body, RULES["inBody"]):
-                    self.html.children.append(Element("body"))
+        if self.html is None:
+            builder.try_open("html", {}, _ID_html, _C_html, RULES["beforeHead"])
+        if self.head is None:
+            if not builder.try_open("head", {}, _ID_head, _C_head, RULES["inHead"]):
+                self.html.children.append(Element("head"))
+        if self.body is None:
+            if not builder.try_open("body", {}, _ID_body, _C_body, RULES["inBody"]):
+                self.html.children.append(Element("body"))
         return builder.tip.kind
 
 

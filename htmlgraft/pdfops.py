@@ -34,11 +34,11 @@ are byte-capped like job.py so one giant PDF cannot balloon a worker.
 from __future__ import annotations
 
 import re
-import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .bmpops import _inflate
 from .job import map_rows
 from .pixelops import _unfilter_row
 
@@ -435,7 +435,8 @@ def _png_unpredict(data: bytes, columns: int) -> bytes:
     Average, Paeth), undone by the PNG decoder's own row unfilter."""
     rowlen = columns + 1
     out = bytearray()
-    prev = bytes(columns)
+    # a /Columns wider than the data makes no row: size prev by the data
+    prev = bytes(min(columns, len(data)))
     for r in range(0, len(data) - rowlen + 1, rowlen):
         row = bytearray(data[r + 1:r + rowlen])
         _unfilter_row(data[r], row, prev, 1)
@@ -445,14 +446,14 @@ def _png_unpredict(data: bytes, columns: int) -> bytes:
 
 
 def _decode_stream(head: bytes, data: bytes) -> bytes:
-    """Apply /Filter (+ /DecodeParms predictor) to raw stream bytes."""
+    """Apply /Filter (+ its /DecodeParms predictor) to raw stream bytes."""
     if b"/Filter" in head:
         if b"/FlateDecode" not in head:
             raise NotImplementedError("unsupported stream filter")
-        data = zlib.decompress(data)
-    pred = _dict_int(head, b"Predictor")
-    if pred is not None and pred >= 10:
-        data = _png_unpredict(data, _dict_int(head, b"Columns") or 1)
+        data, _ = _inflate(data)
+        pred = _dict_int(head, b"Predictor")
+        if pred is not None and pred >= 10:
+            data = _png_unpredict(data, _dict_int(head, b"Columns") or 1)
     return data
 
 
@@ -628,11 +629,7 @@ def extract_pdf_text(blob: bytes) -> tuple[str, int, int, str, int]:
         head = blob[dict_start:m.start()] if dict_start >= 0 else b""
         if b"/ObjStm" in head or b"/XRef" in head:
             continue  # structural, never page content
-        if b"/Filter" in head:
-            if b"/FlateDecode" not in head:
-                raise NotImplementedError("unsupported stream filter")
-            data = zlib.decompress(data)
-        got, shows = content_text_lines(data)
+        got, shows = content_text_lines(_decode_stream(head, data))
         lines.extend(got)
         n_shows += shows
     xref_kind, n_pages, n_objstm = analyze_structure(blob)

@@ -66,6 +66,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame, Window, functions as F
 
 from htmlgraft import bmpops, gifops, icoops, jpegops, tiffops
+from htmlgraft.bmpops import _inflate, _plane
 from htmlgraft.job import map_rows
 
 PHASH_BASES = 7
@@ -313,23 +314,34 @@ def encode_png(
             + _chunk(b"IEND", b""))
 
 
-def _unfilter_image(raw: bytes, pos: int, pw: int, ph: int, bpp: int):
-    """Unfilter one (sub-)image of ph rows of pw pixels starting at byte
-    ``pos`` of the inflated stream; returns (rows bytes, next pos)."""
-    stride = pw * bpp
-    end = pos + ph * (stride + 1)
-    if end > len(raw):
+def _png_image(data, w: int, h: int, bpp: int, interlace: int) -> bytes:
+    """Inflate and unfilter the zlib stream of a ``w`` x ``h`` image of
+    ``bpp``-byte pixels, each row scattered to its place on the grid (its
+    Adam7 pass's when ``interlace``).  The header states the inflated
+    size, so it is the inflate limit, and the stream must fill it."""
+    passes = []
+    for x0, y0, dx, dy in _ADAM7 if interlace else ((0, 0, 1, 1),):
+        pw, ph = (w - x0 + dx - 1) // dx, (h - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:
+            passes.append((x0, y0, dx, dy, pw, ph))
+    want = sum(ph * (pw * bpp + 1) for *_, pw, ph in passes)
+    raw, _ = _inflate(data, limit=want)
+    if len(raw) != want:
         raise ValueError("PNG pixel data length mismatch")
-    out = bytearray(stride * ph)
-    prev = bytes(stride)
-    for y in range(ph):
-        ftype = raw[pos + y * (stride + 1)]
-        row = bytearray(
-            raw[pos + y * (stride + 1) + 1:pos + (y + 1) * (stride + 1)])
-        _unfilter_row(ftype, row, prev, bpp)
-        out[y * stride:(y + 1) * stride] = row
-        prev = bytes(row)
-    return bytes(out), end
+    out = bytearray(w * h * bpp)
+    pos = 0
+    for x0, y0, dx, dy, pw, ph in passes:
+        stride = pw * bpp
+        prev = bytes(stride)
+        for py in range(ph):
+            row = bytearray(raw[pos + 1:pos + 1 + stride])
+            _unfilter_row(raw[pos], row, prev, bpp)
+            pos += 1 + stride
+            prev = row
+            at = ((y0 + py * dy) * w + x0) * bpp
+            for ch in range(bpp):
+                out[at + ch:at + ch + stride * dx:dx * bpp] = row[ch::bpp]
+    return bytes(out)
 
 
 def decode_png_pixels(blob: bytes):
@@ -373,29 +385,9 @@ def decode_png_pixels(blob: bytes):
     if ctype == 3 and plte is None:
         raise ValueError("color type 3 without PLTE")
     bpp = 1 if ctype == 3 else _CHANNELS[ctype] * (depth // 8)
-    stride = w * bpp
-    raw = zlib.decompress(bytes(idat))
-    if interlace:
-        out = bytearray(stride * h)
-        pos = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx if w > x0 else 0
-            ph = (h - y0 + dy - 1) // dy if h > y0 else 0
-            if pw == 0 or ph == 0:
-                continue
-            sub, pos = _unfilter_image(raw, pos, pw, ph, bpp)
-            for py in range(ph):
-                for px_i in range(pw):
-                    dst = ((y0 + py * dy) * w + (x0 + px_i * dx)) * bpp
-                    src = (py * pw + px_i) * bpp
-                    out[dst:dst + bpp] = sub[src:src + bpp]
-        if pos != len(raw):
-            raise ValueError("PNG pixel data length mismatch")
-        out = bytes(out)
-    else:
-        out, pos = _unfilter_image(raw, 0, w, h, bpp)
-        if pos != len(raw):
-            raise ValueError("PNG pixel data length mismatch")
+    # indexed pixels expand to RGB triples: the largest plane made here
+    _plane(w, h, 3 if ctype == 3 else bpp)
+    out = _png_image(idat, w, h, bpp, interlace)
     if ctype == 3:
         n_pal = len(plte) // 3
         rgb = bytearray(3 * w * h)
@@ -1417,11 +1409,8 @@ def decode_apng(blob: bytes):
         if (fctl[3], fctl[4]) != (0, 0) or (sw, sh) != (w, h):
             raise NotImplementedError(
                 "sub-canvas APNG frame needs dispose/blend compositing")
-        raw = zlib.decompress(bytes(data))
-        plane, pos = _unfilter_image(raw, 0, sw, sh, 1)
-        if pos != len(raw):
-            raise ValueError("APNG frame data length mismatch")
-        frames.append(((fctl[5], fctl[6]), plane))
+        _plane(sw, sh)
+        frames.append(((fctl[5], fctl[6]), _png_image(data, sw, sh, 1, 0)))
 
     for typ, data, end in _png_chunks(blob):
         size = len(data)

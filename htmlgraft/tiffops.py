@@ -43,7 +43,7 @@ from __future__ import annotations
 
 import struct
 
-from htmlgraft.bmpops import _luma, nn_sample
+from htmlgraft.bmpops import _luma, _plane, nn_sample
 
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4}  # BYTE, ASCII, SHORT, LONG
 
@@ -128,8 +128,6 @@ def decode_tiff_pixels(blob: bytes):
         if req not in tags or not tags[req]:
             raise ValueError(f"missing required tag {req}")
     w, h = tags[256][0], tags[257][0]
-    if w <= 0 or h <= 0:
-        raise ValueError(f"bad dimensions {w}x{h}")
     photo = tags[262][0]
     spp = _first(tags, 277, 1)
     bits = tags.get(258, [1])
@@ -143,6 +141,10 @@ def decode_tiff_pixels(blob: bytes):
         raise NotImplementedError(f"photometric interpretation {photo}")
     if any(b != 8 for b in bits) or len(bits) not in (1, spp):
         raise NotImplementedError(f"bits per sample {bits}")
+    # the plane and every strip are checked against the blob before the
+    # plane is allocated, so the header cannot ask for more memory than
+    # the blob holds (overlapping strips could repeat its bytes)
+    _plane(w, h, spp, len(blob), "strips")
     rps = _first(tags, 278, h) or h
     rps = min(rps, h)
     n_strips = (h + rps - 1) // rps
@@ -150,10 +152,6 @@ def decode_tiff_pixels(blob: bytes):
     if len(offs) != n_strips or len(cnts) != n_strips:
         raise ValueError(
             f"{len(offs)}/{len(cnts)} strips for {n_strips}-strip geometry")
-    # every strip is checked against the blob before the plane is
-    # allocated, so the header's dimensions cannot ask for more memory
-    # than the blob holds (strips that overlap could still repeat its
-    # bytes: their total is capped at the blob's size too)
     for s in range(n_strips):
         want = min(rps, h - s * rps) * w * spp
         if cnts[s] != want:
@@ -161,8 +159,6 @@ def decode_tiff_pixels(blob: bytes):
                 f"strip {s} byte count {cnts[s]} != uncompressed {want}")
         if offs[s] + want > len(blob):
             raise ValueError(f"truncated strip {s}")
-    if sum(cnts) > len(blob):
-        raise ValueError(f"strips hold {sum(cnts)} bytes, the file {len(blob)}")
     out = bytearray(w * h)
     row = 0
     for s in range(n_strips):

@@ -50,6 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .bmpops import _inflate
 from .corpus import pages_df
 from .job import map_rows, parse_extract
 from .textops import _d
@@ -118,34 +119,23 @@ def warc_files_df(spark, sf_dir: str) -> DataFrame:
 GZIP_MAGIC = b"\x1f\x8b"
 
 
-_GZ_READ = 1 << 16  # compressed bytes fed to a member's decompressor at once
-
-
 def iter_gzip_members(blob: bytes):
     """Yield (raw: bytes, comp_offset: int, comp_length: int) per gzip
     member of a multi-member gzip stream — the framing Common Crawl uses
     for ``.warc.gz``: each WARC record is compressed as its OWN gzip
     member, so a reader can seek to a member boundary and decompress one
-    record without touching the rest of the file.  ``zlib.decompressobj``
-    with ``wbits=31`` stops at each member's end; ``unused_data`` gives
-    the exact compressed member length, which is what a CDX index stores
-    for random access into the compressed file.  Each member is fed in
-    ``_GZ_READ``-byte slices of one memoryview, so a member costs its own
-    bytes, not a copy of the rest of the file."""
-    import zlib
-
+    record without touching the rest of the file.  ``_inflate`` stops at
+    each member's end and reports the exact compressed member length,
+    which is what a CDX index stores for random access into the
+    compressed file; it reads one memoryview of the file, so a member
+    costs its own bytes, not a copy of the rest of the file.  A member
+    that is truncated, corrupt or inflates past the decode limit raises
+    ValueError."""
     view = memoryview(blob)
-    pos, n = 0, len(blob)
-    while pos < n:
-        d = zlib.decompressobj(wbits=31)
-        parts, end = [], pos
-        while not d.eof and end < n:
-            parts.append(d.decompress(view[end:end + _GZ_READ]))
-            end = min(end + _GZ_READ, n)
-        if not d.eof:
-            raise ValueError("truncated gzip member")
-        consumed = end - pos - len(d.unused_data)
-        yield b"".join(parts), pos, consumed
+    pos = 0
+    while pos < len(blob):
+        raw, consumed = _inflate(view[pos:], 31)
+        yield raw, pos, consumed
         pos += consumed
 
 
@@ -395,18 +385,16 @@ def dechunk_http(body: bytes) -> bytes:
 
 
 def _decode_coding(token: str, body: bytes) -> bytes:
-    import zlib
-
     if token in ("gzip", "x-gzip"):
-        return zlib.decompress(body, wbits=31)
+        return _inflate(body, 31)[0]
     if token == "deflate":
         # per RFC this is zlib-wrapped, but a long tail of real servers
         # send raw DEFLATE under the same label — try both (what every
         # browser and warcio do)
         try:
-            return zlib.decompress(body, wbits=15)
-        except zlib.error:
-            return zlib.decompress(body, wbits=-15)
+            return _inflate(body, 15)[0]
+        except ValueError:
+            return _inflate(body, -15)[0]
     if token in ("identity", "chunked", ""):
         # chunked is handled positionally (always the outermost layer)
         return body

@@ -121,10 +121,13 @@ def test_unknown_transport_falls_through_to_meta():
     assert (codec, src) == ("iso8859-7", "meta")
 
 
-# codecs that are bytes transforms (base64, rot13, hex, zlib) or refuse the
-# "replace" handler (idna): as labels they count as unrecognized, so the
-# page decodes as if it carried no label instead of failing its decode
-NON_TEXT_LABELS = ("base64", "rot13", "hex", "zlib", "idna")
+# Python codecs that are not WHATWG encodings count as unrecognized labels,
+# so the page decodes as if it carried no label: bytes transforms (base64,
+# rot13, hex, zlib), idna (strict only), utf-7 (which turns
+# "+ADw-script+AD4-" into "<script>"), the escape codecs (which rewrite
+# backslashes) and EBCDIC cp037
+NON_TEXT_LABELS = ("base64", "rot13", "hex", "zlib", "idna", "utf-7",
+                   "unicode_escape", "raw_unicode_escape", "cp037")
 
 
 @pytest.mark.parametrize("label", NON_TEXT_LABELS)
@@ -140,3 +143,11 @@ def test_non_text_transport_label_is_unrecognized(label):
     raw = b"<p>caf\xe9 \x97 text"
     assert sniff_charset(raw, transport=label) == ("cp1252", 0, "default")
     assert decode_html(raw, transport=label) == decode_html(raw)
+
+
+@pytest.mark.parametrize("label", (
+    "shift_jis", "gb2312", "koi8-r", "iso-8859-7", "windows-1251", "euc-kr",
+    "big5", "tis-620"))
+def test_whatwg_meta_label_is_recognized(label):
+    raw = f"<meta charset={label}><p>x".encode()
+    assert sniff_charset(raw)[2] == "meta"

@@ -350,5 +350,5 @@ def test_overlapping_strips_cannot_outgrow_the_file():
             + struct.pack("<H", len(entries))
             + b"".join(struct.pack("<HHII", *e) for e in entries) + bytes(4))
     assert len(blob) < n * w
-    with pytest.raises(ValueError, match="strips hold"):
+    with pytest.raises(ValueError, match="truncated strips"):
         decode_tiff_pixels(blob)

@@ -779,7 +779,8 @@ def test_gzip_members_match_whole_file_walk():
     # member, and incompressible bytes (compressed size ~ raw size)
     import random
 
-    from htmlgraft.warcops import _GZ_READ, iter_gzip_members
+    from htmlgraft.bmpops import _INFLATE_STEP as _GZ_READ
+    from htmlgraft.warcops import iter_gzip_members
 
     rng = random.Random(7)
     sizes = [0, 1, 3000, _GZ_READ - 20, _GZ_READ, _GZ_READ + 1,
