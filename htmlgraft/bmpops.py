@@ -34,7 +34,9 @@ plane.
 
 This module also holds the size decisions every binary decoder shares:
 ``_plane`` checks a header-sized allocation before it is made, and
-``_inflate`` is the one bounded DEFLATE/zlib/gzip inflate.
+``_inflate`` is the one bounded DEFLATE/zlib/gzip inflate.  They live
+here because this module imports nothing of the package, so every
+decoder can import them without a cycle (``media`` imports pyspark).
 """
 
 from __future__ import annotations
@@ -42,10 +44,11 @@ from __future__ import annotations
 import struct
 import zlib
 
-# Bytes a decoded plane or an inflated stream may hold: a few hundred
-# header bytes can claim gigabytes, and 64 MiB still fits an 8192 x 8192
-# grey plane while staying far inside an executor's memory.
-_DECODE_LIMIT = 64 << 20
+# Bytes one decode may allocate on a header's word, or inflate from a
+# stream that states no size: Pillow's decompression-bomb threshold,
+# Image.MAX_IMAGE_PIXELS = 1024**3 // 4 // 3 = 89,478,485 px (it warns
+# above that, refuses twice that), as an 8-bit RGB plane.
+_DECODE_LIMIT = 256 << 20
 _INFLATE_STEP = 1 << 16  # compressed bytes fed to the decompressor at once
 _FRAMING = {15: "zlib", -15: "deflate", 31: "gzip"}  # wbits -> stream name
 
@@ -53,15 +56,16 @@ _FRAMING = {15: "zlib", -15: "deflate", 31: "gzip"}  # wbits -> stream name
 def _plane(w: int, h: int, unit: int = 1, avail: int | None = None,
            what: str = "pixel data") -> int:
     """Bytes of a ``w`` x ``h`` plane of ``unit``-byte cells, checked
-    before it is allocated: positive dimensions, within ``_DECODE_LIMIT``
-    and within the ``avail`` bytes an uncompressed blob holds for it."""
+    before it is allocated: positive dimensions, and within the ``avail``
+    bytes an uncompressed blob holds for it, or else ``_DECODE_LIMIT``."""
     if w <= 0 or h <= 0:
         raise ValueError(f"bad {what} dimensions {w}x{h}")
     size = w * h * unit
-    if size > _DECODE_LIMIT:
+    if avail is not None:
+        if size > avail:
+            raise ValueError(f"truncated {what}: {size} bytes, {avail} left")
+    elif size > _DECODE_LIMIT:
         raise ValueError(f"{w}x{h} {what} of {size} bytes exceeds the limit")
-    if avail is not None and size > avail:
-        raise ValueError(f"truncated {what}: {size} bytes, {avail} left")
     return size
 
 

@@ -3,8 +3,8 @@
 Decoder contract: any blob decodes to a value or raises ValueError
 (malformed) or NotImplementedError (out of scope).  Both decode paths
 read markers through one ``_segment`` walk and tables and scan headers
-through one ``_table_segment``, and size every plane and coefficient
-buffer with ``bmpops._plane`` against ``bmpops._DECODE_LIMIT`` first.
+through one ``_table_segment``, and check all planes and coefficient
+buffers at once with ``bmpops._plane`` before allocating any.
 
 - ``decode_jpeg`` — full baseline-sequential decode: marker walk, DQT
   (8-bit), DHT (canonical Huffman per T.81 Annex C), SOF0/SOF1, DRI +
@@ -577,15 +577,16 @@ def _frame_comps(hd: _Header):
     vmax = 1 if single else max(c[2] for c in hd.comps)
     mx = (hd.w + 8 * hmax - 1) // (8 * hmax)
     my = (hd.h + 8 * vmax - 1) // (8 * vmax)
+    grids = [(1, 1) if single else (ch, cv) for _, ch, cv, _ in hd.comps]
+    # each block's 64 plane bytes and, progressive, 64 int32 coefficients
+    _plane(sum(mx * ch * my * cv for ch, cv in grids), 64,
+           5 if hd.progressive else 1, what="JPEG blocks")
     comps = []
-    for (cid, ch, cv, tq) in hd.comps:
-        if single:
-            ch = cv = 1
+    for (cid, _, _, tq), (ch, cv) in zip(hd.comps, grids):
         if tq not in hd.qtables:
             raise ValueError(f"JPEG frame references missing quant table {tq}")
         bw = (hd.w * ch + 8 * hmax - 1) // (8 * hmax)
         bh = (hd.h * cv + 8 * vmax - 1) // (8 * vmax)
-        _plane(bw * 8, bh * 8)
         qn = np.zeros(64, dtype=np.int64)
         qn[_ZZ] = hd.qtables[tq]
         comps.append({
@@ -757,7 +758,10 @@ def _dc_block(rd, c, st, ci, coef, ah, al):
         if t > 11:
             raise ValueError(f"JPEG DC category {t} above 11")
         st.preds[ci] += _extend(rd.receive(t), t)
-        coef[0] = st.preds[ci] << al
+        v = st.preds[ci] << al
+        if not -1 << 31 <= v < 1 << 31:     # what an int32 buffer holds
+            raise ValueError("JPEG DC coefficient out of range")
+        coef[0] = v
     else:
         if rd.receive(1):
             coef[0] |= 1 << al
@@ -855,8 +859,10 @@ def _prog_decode_scan(blob, pos, comps, members, spec, restart, mx, my):
             _dc_block(rd, c, st, ci, coef, ah, al)
         elif ah == 0:
             _prog_ac_first_block(rd, c, st, coef, ss, se, al)
-        else:
-            _prog_ac_refine_block(rd, c, st, coef, ss, se, al)
+        else:       # reads every coefficient: on Python ints, not int32s
+            blk = coef.tolist()
+            _prog_ac_refine_block(rd, c, st, blk, ss, se, al)
+            coef[:] = blk
     if st.eobrun:
         raise ValueError("JPEG EOB run overruns the scan")
     return rd.pos
@@ -880,8 +886,7 @@ def _decode_progressive(blob: bytes, hd: _Header, luma_only: bool):
     ``_decode_baseline``."""
     comps, hmax, vmax, mx, my = _frame_comps(hd)
     for c in comps:
-        _plane(c["bwp"], c["bhp"], 512, what="coefficients")  # 64 int64s
-        c["coef"] = np.zeros((c["bhp"] * c["bwp"], 64), dtype=np.int64)
+        c["coef"] = np.zeros((c["bhp"] * c["bwp"], 64), dtype=np.int32)
     pos = hd.entropy_pos
     while pos is not None:
         ss, _se, ah, _al = hd.scan_spec

@@ -6,7 +6,7 @@ shard files; cf. the public C4/Pile/Dolma releases, all ``.json.gz`` /
 Sink: reuses warcops' record-file machinery (one file per partition,
 each record its own gzip member — still a single valid ``.jsonl.gz`` to
 any standard gzip reader, and random-accessible by compressed offset like
-the WARC members).  Source: ``binaryFile`` → member-wise gunzip → line
+the WARC members).  Source: ``binaryFile`` → streaming gunzip → line
 split → a REAL ``json.loads`` per line.
 
 The gated query ``jsonl_roundtrip`` pipes a doctored corpus relation
@@ -23,6 +23,8 @@ file with downstream repartition, same shape as the WARC/WET readers.
 
 from __future__ import annotations
 
+import gzip
+import io
 import json
 
 from pyspark.sql import DataFrame
@@ -30,7 +32,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .job import map_rows
 from .textops import _d
-from .warcops import _write_record_files, iter_gzip_members
+from .warcops import GZIP_MAGIC, _write_record_files
 
 # Every JSON string-escaping class in one value: two-char escapes
 # (" \\ \n \t), a \u00XX C0 control, a 2-byte non-ASCII char, and an
@@ -98,15 +100,15 @@ JSONL_SCHEMA = StructType(
     ]
 )
 
-_GZIP_MAGIC = b"\x1f\x8b"
-
-
 def _jsonl_rows(blob):
+    """Rows of one shard, split at ``\\n``: a gzip shard streams whole (a
+    C4 or Dolma shard is one member of hundreds of MB) with no limit."""
     data = bytes(blob)
-    if data[:2] == _GZIP_MAGIC:
-        data = b"".join(m for m, _off, _len in iter_gzip_members(data))
+    lines = io.BytesIO(data)
+    if data[:2] == GZIP_MAGIC:
+        lines = gzip.GzipFile(fileobj=lines)
     rows = []
-    for line in data.splitlines():
+    for line in lines:
         if not line.strip():
             continue
         obj = json.loads(line)

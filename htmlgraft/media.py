@@ -18,8 +18,9 @@ Python, for PNG (``pixelops``), baseline and progressive JPEG
 (``jpegops``), GIF (``gifops``), BMP (``bmpops``), ICO (``icoops``) and
 uncompressed TIFF (``tiffops``); other formats raise ``NotImplementedError``.
 Each of those decoders returns a value or raises ValueError or
-NotImplementedError, whatever the bytes: header-sized planes and every
-inflate are bounded by ``bmpops._DECODE_LIMIT`` (``_plane``, ``_inflate``).
+NotImplementedError, whatever the bytes: ``bmpops._plane`` and
+``bmpops._inflate`` bound every header-sized plane and every inflate by
+the stated size, the blob, or else ``bmpops._DECODE_LIMIT``.
 
 The source table synthesizes blobs with REAL format headers entirely in
 Spark SQL expressions (binary concat + unhex arithmetic, zero Python; the

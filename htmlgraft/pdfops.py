@@ -445,15 +445,21 @@ def _png_unpredict(data: bytes, columns: int) -> bytes:
     return bytes(out)
 
 
+def _unfilter_stream(head: bytes, data: bytes) -> bytes:
+    """Inflate /FlateDecode stream bytes; any other /Filter raises."""
+    if b"/Filter" not in head:
+        return data
+    if b"/FlateDecode" not in head:
+        raise NotImplementedError("unsupported stream filter")
+    return _inflate(data)[0]
+
+
 def _decode_stream(head: bytes, data: bytes) -> bytes:
-    """Apply /Filter (+ its /DecodeParms predictor) to raw stream bytes."""
-    if b"/Filter" in head:
-        if b"/FlateDecode" not in head:
-            raise NotImplementedError("unsupported stream filter")
-        data, _ = _inflate(data)
-        pred = _dict_int(head, b"Predictor")
-        if pred is not None and pred >= 10:
-            data = _png_unpredict(data, _dict_int(head, b"Columns") or 1)
+    """Apply /Filter and the /DecodeParms predictor to raw stream bytes."""
+    data = _unfilter_stream(head, data)
+    pred = _dict_int(head, b"Predictor")
+    if pred is not None and pred >= 10:
+        data = _png_unpredict(data, _dict_int(head, b"Columns") or 1)
     return data
 
 
@@ -629,7 +635,8 @@ def extract_pdf_text(blob: bytes) -> tuple[str, int, int, str, int]:
         head = blob[dict_start:m.start()] if dict_start >= 0 else b""
         if b"/ObjStm" in head or b"/XRef" in head:
             continue  # structural, never page content
-        got, shows = content_text_lines(_decode_stream(head, data))
+        # no predictor: content has none, and image rows are not 1 B/px
+        got, shows = content_text_lines(_unfilter_stream(head, data))
         lines.extend(got)
         n_shows += shows
     xref_kind, n_pages, n_objstm = analyze_structure(blob)

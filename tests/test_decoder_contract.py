@@ -5,10 +5,11 @@ Every case runs in a child process under an address-space limit, so a
 decoder that allocates what a header claims fails its child, not the
 machine:
 
-- one test per size bound, under 512 MiB: headers that claim planes of
-  gigabytes, an LZW stream that decodes past its image, and deflate
-  streams (an HTTP body, a ``.warc.gz`` member, a PDF stream) that
-  inflate past the decode limit — each must raise ValueError;
+- one test per size bound, under 1 GiB (room for an inflate to reach
+  the 256 MiB decode limit): headers that claim planes of gigabytes, an
+  LZW stream that decodes past its image, and deflate streams (an HTTP
+  body, a ``.warc.gz`` member, a PDF stream) that inflate past the
+  decode limit — each must raise ValueError;
 - the mutation harness, under 1 GiB: 8,000 seeded truncated, bit-flipped
   and byte-inserted mutants of real blobs per decoder family.  A failure
   names the family, its seed, the blob index and the mutation, which is
@@ -24,6 +25,8 @@ import struct
 import subprocess
 import sys
 import zlib
+
+import pytest
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 N_MUTANTS = 8000
@@ -75,7 +78,7 @@ def _lane(payload: bytes) -> str:
 
 
 def _run_lane(lane: str, blob: bytes) -> str:
-    return _child("_lane", (lane, blob), 512 << 20)
+    return _child("_lane", (lane, blob), 1 << 30)
 
 
 def _png(w: int, h: int, ctype: int, interlace: int, idat: bytes) -> bytes:
@@ -150,6 +153,18 @@ def test_progressive_jpeg_claiming_a_huge_frame_is_rejected():
     assert _run_lane("jpeg", blob) == "ValueError"
 
 
+def test_progressive_jpeg_of_a_12_mpx_photo_is_within_the_limit():
+    """4000 x 3000 takes 48 MB of int32 coefficients and 12 MB of plane,
+    inside the limit, so the decode gets past the size check to the
+    entropy data this 12 x 9 stream lacks."""
+    from htmlgraft import jpegops
+    from htmlgraft.pixelops import synth_prog_jpeg
+
+    blob = _jpeg_of_size(synth_prog_jpeg(0), b"\xff\xc2", 4000, 3000)
+    with pytest.raises(ValueError, match="inside entropy data"):
+        jpegops.decode_jpeg(blob)
+
+
 def test_gif_lzw_stream_past_its_image_is_rejected():
     """A 16 x 16 image whose LZW stream grows one string to 3,839 bytes
     and then repeats it: ~400 KB that would decode to over 1 GB."""
@@ -183,7 +198,7 @@ def test_gzip_http_body_past_the_limit():
 
 
 def test_warc_gz_member_past_the_limit():
-    size = 80 << 20
+    size = 272 << 20
     c = zlib.compressobj(6, zlib.DEFLATED, 31)
     parts = [c.compress(
         b"WARC/1.0\r\nWARC-Type: resource\r\nWARC-Target-URI: http://a/\r\n"
@@ -192,6 +207,9 @@ def test_warc_gz_member_past_the_limit():
     parts += [c.compress(mib) for _ in range(size >> 20)]
     parts += [c.compress(b"\r\n\r\n"), c.flush()]
     assert _run_lane("warc_gz", b"".join(parts)) == "ValueError"
+    from htmlgraft.bmpops import _DECODE_LIMIT
+
+    assert size > _DECODE_LIMIT
 
 
 def test_pdf_flate_bomb_is_rejected():

@@ -9,6 +9,7 @@ and reader tolerance (blank lines, plain-text files).
 
 import gzip
 import json
+import zlib
 
 import pandas as pd
 import pytest
@@ -89,6 +90,24 @@ def test_reader_tolerates_blank_lines_and_plain_files(spark, tmp_path):
     )
     back = read_jsonl_rows(spark, str(p)).toPandas()
     assert len(back) == 1 and back.doc_id[0] == 7
+
+
+def test_single_member_shard_past_the_decode_limit_reads():
+    """A public shard is one gzip member that can inflate past the binary
+    decoders' limit; the reader streams it whole.  Each line pads its
+    object with 4 MiB of JSON whitespace, so the shard is large and the
+    rows are not."""
+    from htmlgraft.bmpops import _DECODE_LIMIT
+    from htmlgraft.jsonlops import _jsonl_rows
+
+    pad = b" " * (4 << 20)
+    n = _DECODE_LIMIT // len(pad) + 1
+    c = zlib.compressobj(1, zlib.DEFLATED, 31)
+    shard = b"".join(
+        c.compress(b'{"doc_id": %d,' % i + pad + b'"meta": "m", "text": "t",'
+                   b' "url": "u"}\n') for i in range(n)) + c.flush()
+    assert shard[:2] == b"\x1f\x8b" and n * len(pad) > _DECODE_LIMIT
+    assert _jsonl_rows(shard) == [(i, "u", "t", "m") for i in range(n)]
 
 
 def test_roundtrip_query_survives_scratch_cleanup(spark, sf_dir):

@@ -73,6 +73,24 @@ def test_multiple_streams_concatenate():
     assert shows == 2
 
 
+def test_predicted_rgb_image_before_text_stream():
+    """An RGB image whose rows are 3 x /Columns + 1 bytes under PNG
+    predictor 15, its /Filter after the nested /DecodeParms dict: the text
+    walk inflates it without the predictor, which would read a pixel byte
+    (200) as a row filter type, and the text after it still comes out."""
+    w, h = 4, 3
+    raw = b"".join(b"\x00" + bytes([200]) * (3 * w) for _ in range(h))
+    img = zlib.compress(raw)
+    image = (b"%PDF-1.4\n5 0 obj\n<< /Type /XObject /Subtype /Image /Width 4"
+             b" /Height 3 /ColorSpace /DeviceRGB /BitsPerComponent 8"
+             b" /DecodeParms << /Predictor 15 /Colors 3 /Columns 4 >>"
+             b" /Filter /FlateDecode /Length " + str(len(img)).encode()
+             + b" >>\nstream\n" + img + b"\nendstream\nendobj\n")
+    text, *_ = pdfops.extract_pdf_text(
+        image + _wrap(b"BT (after the image) Tj ET"))
+    assert text.endswith("after the image")
+
+
 def test_non_pdf_and_unknown_filter_raise():
     with pytest.raises(NotImplementedError):
         pdfops.extract_pdf_text(b"GIF89a not a pdf")
