@@ -651,3 +651,69 @@ def test_host_hyperball_full_recompute(spark, sf_dir):
     assert (
         got.n_est_raw_r2 > got.n_est_raw_r1
     ).any(), "radius-2 propagation dead — 2-hop reach adds nothing"
+
+
+# sha256 over name-sorted columns and sorted rows (``_rows_digest``) of each
+# link-graph and dedup-cluster query at sf0.001.  The Spark runner and the
+# DuckDB oracle must both hash to the pinned value, so a rewrite of either
+# spelling that changes one output row, column name or value fails here.
+_GRAPH_DIGESTS = {
+    "link_hostgraph":
+        "57e473683e794eac2ddf963a52542f66ca8fb233b55396b05c72dfdda544563f",
+    "anchor_text":
+        "b91d8fc239badf5b866049c585a702014c38191e1a9368062a1ba13ec59bbf08",
+    "pagerank_hosts":
+        "eb29b74c0242fe5083602f18eaf1cb8c02e475d316aab8187eb35f6946ff52f6",
+    "hits_hosts":
+        "6504b8035307f96515171f35d42dd468d62efca631cf0e8cf629490ff494554f",
+    "host_components":
+        "e904c50a73aa218cc522fa88b7c99ade1a7e543f4ec28d31bd7dada5e03d8689",
+    "host_cocitation":
+        "6b4e96712c68640a54be95771084c928659879d4be28ac1b17425e5ca378e8ec",
+    "host_triangles":
+        "d27c4ff59f61eef351db0c5c6f65f6b9481d53a372509f120e0d0bd82fb86178",
+    "host_hyperball":
+        "b2be5fb6c47602896da1675db776ca5bdb8d1dbf385198193b6d9acf0c6d648c",
+    "crawl_frontier":
+        "991117fb5b316ed62c48bf511d287bcfff88baffc582c5642d1414e626d01bf2",
+    "crawl_schedule":
+        "f0f216427cd53e6ec57cae52f3f204445ba68087b8f75cf1845a043a15664eeb",
+    "dedup_clusters":
+        "e2a6767e630a08f69e7f4fe2b874d9a620b2909f9d9217ec28f3084a37af68ee",
+    "dedup_pipeline":
+        "7f4967953a8e592bb1243309d607316b6516b3fbee66f2604a350686553e1cb0",
+}
+
+
+def _rows_digest(cols, rows) -> str:
+    import hashlib
+
+    order = sorted(range(len(cols)), key=cols.__getitem__)
+    norm = [tuple(None if r[i] is None else r[i] if isinstance(r[i], str)
+                  else int(r[i]) for i in order) for r in rows]
+    norm.sort(key=lambda r: tuple((v is None, 0 if v is None else v)
+                                  for v in r))
+    h = hashlib.sha256(repr([cols[i] for i in order]).encode())
+    for r in norm:
+        h.update(repr(r).encode())
+    return h.hexdigest()
+
+
+def test_graph_query_digests(spark, sf_dir):
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    con = duckdb.connect()
+    con.execute("create view documents as select * from "
+                f"'{sf_dir}/documents.parquet'")
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    got = {}
+    for name in sorted(_GRAPH_DIGESTS):
+        df = qs[name](spark, sf_dir)
+        spark_d = _rows_digest(df.columns, df.collect())
+        cur = con.execute(oracles[name])
+        duck_d = _rows_digest([c[0] for c in cur.description],
+                              cur.fetchall())
+        got[name] = (spark_d, duck_d)
+    assert got == {n: (d, d) for n, d in _GRAPH_DIGESTS.items()}
