@@ -118,7 +118,7 @@ def _q_extract_stats_by_lang(spark, sf_dir):
 
 
 def _q_extract_stats_by_host(spark, sf_dir):
-    # host = authority component of the url; skew report for the salted
+    # host = authority component of the url; skew report for the url-hash
     # repartition (one heavy host carries ~20% of pages by construction)
     return (
         _results(spark, sf_dir)

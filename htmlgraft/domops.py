@@ -19,7 +19,7 @@ right-to-left walk with ancestor backtracking.
 Scale shape: selectors are parsed ONCE on the driver (malformed selectors
 fail fast, not per-task); each page is parsed ONCE and all selectors run
 against that single DOM.  Every operator here is a row function on the
-parse job's own stage (htmlgraft.job.map_pages): the same salted url-hash
+parse job's own stage (htmlgraft.job.map_pages): the same url-hash
 partitioning, charset-aware decode, reference parse and worker setup — no
 extra shuffle, no per-row Python round trips.
 """

@@ -7,14 +7,15 @@ is the Arrow-batched ``mapInPandas`` parse stage):
       -> filter (lang / size caps, pushed down)
       -> resume anti-join against the compact state table (size-gated:
          broadcast when known-small, else shuffle sort-merge)
-      -> salted repartition: part_id = pmod(xxhash64(url), P), oversized docs
-         get their own salt lane so one giant page cannot straggle a partition
+      -> url-hash repartition: part_id = pmod(xxhash64(url), P), shuffled on
+         (url, part_id) so rows spread evenly across P partitions
       -> mapInPandas(parse_batch): tokenize -> tree-build -> extract per doc
       -> results sink (parquet) + per-partition progress/metrics rows
 
 Scale notes (100 TB / 10^12 docs):
 * per-doc cost varies ~1000x with page size; AQE cannot see that (it is not
-  join skew), hence the explicit size-salted repartition;
+  join skew), hence the explicit repartition: every page is its own hash
+  key, so no key holds more than one page's cost;
 * Arrow batches are capped by rows (Spark's maxRecordsPerBatch), and output
   frames by bytes: ``row_batches`` cuts a frame once its rows carried
   ``MAX_BATCH_BYTES`` in and out.  A page's DOM print, quadratic in nesting
@@ -204,37 +205,25 @@ def make_parse_batch(include_dom: bool = True, include_links: bool = False):
     return _worker_stage(row_batches(parse_batch, PARSE_COLS, schema.fieldNames()))
 
 
-# size above which a document is routed to its own salt lane, and the
-# number of salt lanes an oversized document's url hashes into
-OVERSIZE_BYTES = 256 * 1024
-SALTS = 8
-
-
 def with_partitioning(pages: DataFrame, num_parts: int | None) -> DataFrame:
-    """Explicit shuffle control: url-hash partitioning with a salt lane for
-    oversized documents, into ``num_parts`` partitions (None: the session's
-    ``spark.sql.shuffle.partitions``).
+    """Explicit shuffle control: url-hash partitioning into ``num_parts``
+    partitions (None: the session's ``spark.sql.shuffle.partitions``).
 
-    The shuffle key is the HIGH-cardinality (url, salt) pair, not part_id:
-    hashing only num_parts distinct part_id values into num_parts bins is a
-    balls-into-bins collision generator (~4x row skew at 64 bins, measured);
-    hashing urls directly balances to ~±2%.  part_id stays as the lineage /
-    resume bucket (stable under re-runs).  The salt spreads an oversized
-    host's documents across lanes when partitioning by host instead of url.
-    """
+    The shuffle key holds the HIGH-cardinality url: hashing only num_parts
+    distinct part_id values into num_parts bins is a balls-into-bins
+    collision generator (~4x row skew at 64 bins, measured); hashing urls
+    directly balances to ~±2%.  part_id stays as the lineage / resume
+    bucket (stable under re-runs), and rides in the key so that the key is
+    not the url alone: Spark drops a repartition whose hash partitioning
+    its child already has, as the sort-merge resume anti-join's does, and
+    under AQE that join's shuffle is coalesced, so the parse stage would
+    run on as few as one partition."""
     if num_parts is None:
         conf = pages.sparkSession.conf
         num_parts = int(conf.get("spark.sql.shuffle.partitions", "32"))
-    df = pages.withColumn(
+    return pages.withColumn(
         "part_id", F.pmod(F.xxhash64(F.col("url")), F.lit(num_parts))
-    ).withColumn(
-        "salt",
-        F.when(
-            F.length(F.col("html")) > OVERSIZE_BYTES,
-            F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(SALTS)),
-        ).otherwise(F.lit(0)),
-    )
-    return df.repartition(num_parts, F.col("url"), F.col("salt"))
+    ).repartition(num_parts, F.col("url"), F.col("part_id"))
 
 
 # bytes per output frame of ``row_batches``, counted over its rows' binary
@@ -291,7 +280,7 @@ def map_pages(
     num_parts: int | None = None,
 ) -> DataFrame:
     """The per-page DOM operators' stage: pages(url, html[, charset]) ->
-    rows of ``schema``, through the same salted url-hash partitioning,
+    rows of ``schema``, through the same url-hash partitioning,
     charset-aware decode, reference ``parse`` and worker setup as the parse
     stage.  ``page_rows(url, document)`` returns the page's row tuples in
     ``schema`` order.  A page whose decode, parse or ``page_rows`` raises
@@ -329,7 +318,7 @@ def parse_extract(
 ) -> DataFrame:
     """The flagship operator: pages(url, html[, lang, charset]) -> results.
 
-    ``pre_partitioned=True`` skips the salted url-hash repartition and maps
+    ``pre_partitioned=True`` skips the url-hash repartition and maps
     the parse UDF directly over the scan partitions.  Use it when the
     source is already balanced (e.g. many same-sized parquet files of a
     crawl dump): shuffling the full html payload costs a write+read of the
@@ -571,7 +560,7 @@ def main(argv=None):
             --input <pages parquet/iceberg path> --out <state dir> \\
             [--run-id r1] [--parts 4096] [--no-dom] [--no-resume]
 
-    Reads a pages table (url, html[, lang]), runs the salted url-hash
+    Reads a pages table (url, html[, lang]), runs the url-hash
     partitioned parse+extract, appends results + per-partition progress to
     the state dir, resuming idempotently from prior results."""
     import argparse

@@ -689,17 +689,29 @@ def decode_jpeg_luma(blob: bytes):
 def decode_jpeg(blob: bytes):
     """(w, h, channels, pixels): greyscale plane for 1-component files,
     interleaved RGB for 3-component YCbCr (replication chroma upsampling;
-    JFIF fixed-point colour transform, round-half-up at 2^16)."""
+    JFIF fixed-point colour transform, round-half-up at 2^16).
+
+    The transform runs in int32, one channel at a time, into one
+    preallocated (h, w, 3) plane: |chroma| <= 128, so every intermediate
+    is below 2^24."""
     hd, planes = _decode_planes(blob)
     if len(planes) == 1:
         return hd.w, hd.h, 1, planes[0].tobytes()
-    y, cb, cr = (p.astype(np.int64) for p in planes)
-    cb, cr = cb - 128, cr - 128
-    r = np.clip(y + ((91881 * cr + 32768) >> 16), 0, 255)
-    g = np.clip(y - ((22554 * cb + 46802 * cr + 32768) >> 16), 0, 255)
-    b = np.clip(y + ((116130 * cb + 32768) >> 16), 0, 255)
-    return hd.w, hd.h, 3, np.stack(
-        [r, g, b], axis=-1).astype(np.uint8).tobytes()
+    y = planes[0]
+    cb, cr = (np.subtract(p, 128, dtype=np.int32) for p in planes[1:])
+
+    def shift(t):  # (t + 2^15) >> 16 in place: round half up
+        t += 32768
+        t >>= 16
+        return t
+
+    rgb = np.empty((hd.h, hd.w, 3), np.uint8)
+    rgb[..., 0] = np.clip(shift(91881 * cr) + y, 0, 255)
+    g = 22554 * cb
+    g += 46802 * cr
+    rgb[..., 1] = np.clip(y - shift(g), 0, 255)
+    rgb[..., 2] = np.clip(shift(116130 * cb) + y, 0, 255)
+    return hd.w, hd.h, 3, rgb.tobytes()
 
 
 # --- progressive (SOF2, Huffman) ------------------------------------------------

@@ -18,6 +18,25 @@ extracts the main text — whose links and metadata (the ``links``,
   cross-host edges (the iterative production shape, like
   textops.run_dedup_clusters).
 
+Each link-graph decision has one owner per engine; the Spark DataFrame
+code and the DuckDB oracle SQL stay two independent spellings:
+
+* the href rule (absolute ``http(s)://`` and ``//host`` hrefs keep their
+  authority, anything else resolves to the page host): ``_absolute_href``
+  with ``_src_host_col``/``_dst_host_col`` in Spark, the ``resolved`` CTE
+  (``_RESOLVED_CTE``) in the oracles — host graph, anchor text and the
+  crawl frontier all read it;
+* the host graph: ``hostgraph_df``; ``_host_graph`` materializes it for
+  the iterative operators and ``_over_hedges`` as the ``hedges`` view the
+  cocitation, triangle and HyperBall SQL reads.  Oracle twin:
+  ``_hedges_ctes``;
+* the cross-host edges and their node set: ``_cross_edges`` and
+  ``textops.graph_nodes`` (PageRank, HITS, host components); oracle twin
+  ``_cross_edge_ctes`` (PageRank, HITS);
+* min-label connected components: ``textops.min_label_components`` in
+  Spark and ``textops.min_label_ctes`` unrolled in the oracles, shared
+  by host_components and dedup_clusters.
+
 Everything is value-checked by the DuckDB oracle: the corpus synthesizes a
 deterministic link skeleton per page (htmlgraft/corpus.py — nav/table/aside/
 footer links plus a cross-host "partner" link), so the oracle can state the
@@ -35,7 +54,7 @@ Scale notes (10^12 documents):
   include_dom=False, include_links=True)`` filtered to ``status == "ok"``,
   so a page is parsed once for all three, and a page that fails to decode
   or parse emits no rows.  ``tables_df`` and the domops operators need the
-  tree, so they run on ``job.map_pages``: the same salted url-hash
+  tree, so they run on ``job.map_pages``: the same url-hash
   partitioning, charset-aware decode, reference parse and worker setup;
 * hostgraph is one hash aggregation keyed on (src_host, dst_host); hosts are
   ~10^7-cardinality at web scale, far below doc count;
@@ -56,7 +75,8 @@ from .corpus import pages_df, pages_oracle_cte
 from .extract import analyze_page, collapse_ws
 from .job import map_pages, parse_extract
 from .nodes import Element
-from .textops import _d, h32
+from .textops import (_d, graph_nodes, h32, min_label_components,
+                      min_label_ctes)
 from .walk import descendants
 
 # PageRank constants (integer arithmetic; see module docstring)
@@ -184,16 +204,18 @@ def _src_host_col():
     return F.split(F.col("url"), "/").getItem(2)
 
 
-def _dst_host_col():
+def _absolute_href():
     # absolute http(s):// and protocol-relative //host hrefs carry their own
     # authority (all three put the host at split index 2); anything else
-    # resolves to the page host.  Kept in lockstep with _RESOLVED_CTE and
-    # frontier_df — real crawls emit all three absolute spellings.
+    # resolves against the page host.  Real crawls emit all three absolute
+    # spellings; the host graph, anchor text and frontier all test this one
+    # predicate (the oracles' twin is _RESOLVED_CTE).
+    return F.col("href").rlike("^(https?:)?//")
+
+
+def _dst_host_col():
     return (
-        F.when(
-            F.col("href").rlike("^(https?:)?//"),
-            F.split(F.col("href"), "/").getItem(2),
-        )
+        F.when(_absolute_href(), F.split(F.col("href"), "/").getItem(2))
         .otherwise(_src_host_col())
         .alias("dst_host")
     )
@@ -245,6 +267,19 @@ def anchor_text_df(links: DataFrame) -> DataFrame:
     )
 
 
+def _host_graph(links: DataFrame) -> DataFrame:
+    """``hostgraph_df`` as (src, dst, n_links), materialized once: the
+    iterative operators read it every round, and the parse must run once."""
+    return hostgraph_df(links).toDF("src", "dst", "n_links").localCheckpoint(
+        eager=True)
+
+
+def _cross_edges(hg: DataFrame) -> DataFrame:
+    """The cross-host edges (src, dst, n_links) of a ``_host_graph``: one
+    row per distinct pair, self-links dropped."""
+    return hg.where(F.col("src") != F.col("dst"))
+
+
 def pagerank_df(links: DataFrame) -> DataFrame:
     """Integer PageRank over distinct cross-host edges (ITERS rounds).
 
@@ -252,31 +287,22 @@ def pagerank_df(links: DataFrame) -> DataFrame:
     round one join keyed on src + one hash aggregation on dst; the (host,
     rank) relation is lineage-truncated per round (localCheckpoint here,
     a reliable-storage checkpoint on a real cluster)."""
-    edges = (
-        links.select(_src_host_col().alias("src"), _dst_host_col().alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    edges = _cross_edges(_host_graph(links)).select("src", "dst")
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     edges_deg = edges.join(outdeg, "src").localCheckpoint(eager=True)
-    nodes = (
-        edges_deg.select(F.col("src").alias("host"))
-        .unionAll(edges_deg.select(F.col("dst").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = graph_nodes(edges)
     ranks = nodes.withColumn("rank", F.lit(SCALE).cast("bigint"))
     for _ in range(ITERS):
         contrib = (
-            edges_deg.join(ranks, edges_deg.src == ranks.host)
+            edges_deg.join(ranks, edges_deg.src == ranks.id)
             .select(F.col("dst"), F.expr("rank div deg").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("m"))
         )
         ranks = (
-            nodes.join(contrib, nodes.host == contrib.dst, "left")
+            nodes.join(contrib, nodes.id == contrib.dst, "left")
             .select(
-                F.col("host"),
+                "id",
                 (
                     F.lit(BASE)
                     + F.expr(f"({DAMP_NUM} * coalesce(m, 0)) div {DAMP_DEN}")
@@ -284,7 +310,8 @@ def pagerank_df(links: DataFrame) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    return ranks.select("host", F.col("rank").cast("bigint").alias("rank"))
+    return ranks.select(F.col("id").alias("host"),
+                        F.col("rank").cast("bigint").alias("rank"))
 
 
 # --- query runners (driver contract: (spark, sf_dir) -> DataFrame) ----------
@@ -352,44 +379,35 @@ def hits_df(links: DataFrame) -> DataFrame:
 
     Same iterative production shape as pagerank_df: edges materialized
     once, two join+agg per round, lineage-truncated state."""
-    edges = (
-        links.select(_src_host_col().alias("src"), _dst_host_col().alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("host"))
-        .unionAll(edges.select(F.col("dst").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _cross_edges(_host_graph(links)).select("src", "dst")
+    nodes = graph_nodes(edges)
     hub = nodes.withColumn("hub", F.lit(1).cast("bigint"))
     auth = None
     for _ in range(HITS_ITERS):
         a_in = (
-            edges.join(hub, edges.src == hub.host)
+            edges.join(hub, edges.src == hub.id)
             .groupBy("dst").agg(F.sum("hub").alias("m"))
         )
         auth = (
-            nodes.join(a_in, nodes.host == a_in.dst, "left")
-            .select("host", F.coalesce("m", F.lit(0)).cast("bigint")
+            nodes.join(a_in, nodes.id == a_in.dst, "left")
+            .select("id", F.coalesce("m", F.lit(0)).cast("bigint")
                     .alias("auth"))
             .localCheckpoint(eager=True)
         )
         h_out = (
-            edges.join(auth, edges.dst == auth.host)
+            edges.join(auth, edges.dst == auth.id)
             .groupBy("src").agg(F.sum("auth").alias("m"))
         )
         hub = (
-            nodes.join(h_out, nodes.host == h_out.src, "left")
-            .select("host", F.coalesce("m", F.lit(0)).cast("bigint")
+            nodes.join(h_out, nodes.id == h_out.src, "left")
+            .select("id", F.coalesce("m", F.lit(0)).cast("bigint")
                     .alias("hub"))
             .localCheckpoint(eager=True)
         )
     return (
-        nodes.join(hub, "host").join(auth, "host")
-        .select("host", F.col("hub").cast("bigint").alias("hub"),
+        nodes.join(hub, "id").join(auth, "id")
+        .select(F.col("id").alias("host"),
+                F.col("hub").cast("bigint").alias("hub"),
                 F.col("auth").cast("bigint").alias("auth"))
     )
 
@@ -419,14 +437,8 @@ def hits_oracle_sql() -> str:
         ) s on s.host = n.host
       )""")
     return (
-        _resolved_ctes()
+        _cross_edge_ctes()
         + f""",
-      edges as (select distinct src, dst from resolved where src <> dst),
-      nodes as (
-        select distinct host from (
-          select src as host from edges union all select dst from edges
-        )
-      ),
       h0 as (select host, cast(1 as bigint) as hub from nodes),
       {",".join(rounds)}
       select h.host, h.hub, a.auth
@@ -468,50 +480,16 @@ def host_components_df(links: DataFrame) -> DataFrame:
     links), labels = lexicographic-min host per component via
     {HC_ITERS} min-label propagation rounds.
 
-    Iterative production shape (the run_dedup_clusters pattern): edges
-    materialized once; each round is one join keyed on the edge endpoint +
-    one group-min, label relation lineage-truncated per round
-    (localCheckpoint here, reliable-storage checkpoint on a real
-    cluster)."""
-    hg = hostgraph_df(links)
-    nodes = (
-        hg.select(F.col("src_host").alias("host"))
-        .unionAll(hg.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    strong = hg.where(
-        (F.col("src_host") != F.col("dst_host"))
-        & (F.col("n_links") >= HC_MIN_WEIGHT)
-    )
-    edges = (
-        strong.select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
-        .unionAll(
-            strong.select(F.col("dst_host").alias("src"), F.col("src_host").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = nodes.withColumn("lbl", F.col("host"))
-    for _ in range(HC_ITERS):
-        prop = edges.join(labels, edges.dst == labels.host).select(
-            F.col("src").alias("host"), F.col("lbl")
-        )
-        labels = (
-            labels.select("host", "lbl")
-            .unionAll(prop)
-            .groupBy("host")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-    sizes = labels.groupBy("lbl").agg(F.count("*").cast("bigint").alias("n"))
-    return (
-        labels.join(sizes, "lbl")
-        .select(
-            "host",
-            F.col("lbl").alias("cluster_rep"),
-            F.col("n").alias("cluster_size"),
-        )
+    Iterative production shape (the run_dedup_clusters pattern, through
+    the same ``textops.min_label_components``): the host graph
+    materialized once; each round is one join keyed on the edge end + one
+    group-min, the label relation lineage-truncated per round."""
+    hg = _host_graph(links)
+    strong = _cross_edges(hg).where(F.col("n_links") >= HC_MIN_WEIGHT)
+    return min_label_components(strong, hg, HC_ITERS).select(
+        F.col("id").alias("host"),
+        F.col("lbl").alias("cluster_rep"),
+        F.col("n").cast("bigint").alias("cluster_size"),
     )
 
 
@@ -634,23 +612,24 @@ def cocitation_sql(duck: bool) -> str:
     """
 
 
-def run_host_cocitation(spark, sf_dir: str) -> DataFrame:
-    # localCheckpoint: three consumers of the edge relation (capped twice
-    # via the self-join, outdeg) — the parse must run once
+def _over_hedges(spark, sf_dir: str, sql: str) -> DataFrame:
+    """Run ``sql``, a ``*_sql(duck=False)`` body of CTEs and a final
+    select, over ``hedges``: the host graph, localCheckpointed, because
+    cocitation reads it three times, triangles and hyperball five, and
+    Catalyst inlines CTEs — without the checkpoint the mapInPandas PARSE
+    would re-run per reference."""
     hostgraph_df(links_df(pages_df(spark, sf_dir))).localCheckpoint(
         eager=True
     ).createOrReplaceTempView("hedges")
-    return spark.sql("with " + cocitation_sql(duck=False))
+    return spark.sql("with " + sql)
+
+
+def run_host_cocitation(spark, sf_dir: str) -> DataFrame:
+    return _over_hedges(spark, sf_dir, cocitation_sql(duck=False))
 
 
 def run_host_triangles(spark, sf_dir: str) -> DataFrame:
-    # localCheckpoint the (small) edge relation: the triangle SQL
-    # references it five times and Catalyst inlines CTEs — without this
-    # the mapInPandas PARSE would re-run per reference (hits_df pattern)
-    hostgraph_df(links_df(pages_df(spark, sf_dir))).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("hedges")
-    return spark.sql("with " + triangles_sql(duck=False))
+    return _over_hedges(spark, sf_dir, triangles_sql(duck=False))
 
 
 # --- DuckDB oracles ----------------------------------------------------------
@@ -867,72 +846,64 @@ def tables_oracle_sql() -> str:
     )
 
 
+# The oracles' href rule (the Spark side's is _absolute_href): absolute
+# http(s):// and protocol-relative //host hrefs carry their own authority,
+# anything else resolves against the page host ``src``.  ``dst`` is the
+# destination host, ``dst_url`` the absolute url the crawl frontier queues.
 _RESOLVED_CTE = """
       resolved as (
-        select split_part(url, '/', 3) as src,
-               case when href like 'https://%' or href like 'http://%'
-                         or href like '//%'
-                    then split_part(href, '/', 3)
-                    else split_part(url, '/', 3) end as dst
-        from lnk
+        select anchor, src,
+               case when absolute then split_part(href, '/', 3)
+                    else src end as dst,
+               case when not absolute then concat('https://', src, href)
+                    when href like '//%' then concat('https:', href)
+                    else href end as dst_url
+        from (
+          select href, anchor, split_part(url, '/', 3) as src,
+                 href like 'https://%' or href like 'http://%'
+                   or href like '//%' as absolute
+          from lnk
+        ) l
       )"""
 
 
 def _resolved_ctes() -> str:
-    """``_lnk_ctes`` plus ``resolved(src, dst)``: each link's source and
-    destination host."""
+    """``_lnk_ctes`` plus ``resolved(anchor, src, dst, dst_url)``: each
+    link's anchor, source host, destination host and absolute target."""
     return _lnk_ctes() + "," + _RESOLVED_CTE
 
 
-def hostgraph_oracle_sql() -> str:
-    return (
-        _resolved_ctes()
-        + """
-      select src as src_host, dst as dst_host,
-             cast(count(*) as bigint) as n_links
-      from resolved group by src, dst
-    """
-    )
-
-
-def host_cocitation_oracle_sql() -> str:
-    return (
-        _resolved_ctes()
-        + """,
+def _hedges_ctes() -> str:
+    """``_resolved_ctes`` plus ``hedges(src_host, dst_host, n_links)``,
+    the host graph (the relation ``_over_hedges`` runs the Spark side's
+    graph SQL over)."""
+    return _resolved_ctes() + """,
       hedges as (
         select src as src_host, dst as dst_host,
                cast(count(*) as bigint) as n_links
-        from resolved group by 1, 2
-      ),
-"""
-        + cocitation_sql(duck=True)
-    )
+        from resolved group by src, dst
+      )"""
+
+
+def hostgraph_oracle_sql() -> str:
+    return _hedges_ctes() + " select src_host, dst_host, n_links from hedges"
+
+
+def host_cocitation_oracle_sql() -> str:
+    return _hedges_ctes() + ",\n" + cocitation_sql(duck=True)
 
 
 def host_triangles_oracle_sql() -> str:
-    return (
-        _resolved_ctes()
-        + """,
-      hedges as (select src as src_host, dst as dst_host from resolved),
-"""
-        + triangles_sql(duck=True)
-    )
+    return _hedges_ctes() + ",\n" + triangles_sql(duck=True)
 
 
 def anchor_text_oracle_sql() -> str:
     return (
-        _lnk_ctes()
+        _resolved_ctes()
         + f""",
-      res as (
-        select case when href like 'https://%' or href like 'http://%'
-                         or href like '//%'
-                    then split_part(href, '/', 3)
-                    else split_part(url, '/', 3) end as dst_host,
-               anchor
-        from lnk
-      ),
       toks as (
-        select dst_host, unnest(string_split(anchor, ' ')) as tok from res
+        select dst as dst_host, unnest(string_split(anchor, ' ')) as tok
+        from resolved
       ),
       counts as (
         select dst_host, tok, cast(count(*) as bigint) as n
@@ -949,6 +920,18 @@ def anchor_text_oracle_sql() -> str:
       from ranked where rk <= {ANCHOR_TOP_K}
     """
     )
+
+
+def _cross_edge_ctes() -> str:
+    """``_resolved_ctes`` plus the PageRank/HITS graph: the distinct
+    cross-host ``edges(src, dst)`` and the ``nodes(host)`` at their ends."""
+    return _resolved_ctes() + """,
+      edges as (select distinct src, dst from resolved where src <> dst),
+      nodes as (
+        select distinct host from (
+          select src as host from edges union all select dst from edges
+        )
+      )"""
 
 
 def pagerank_oracle_sql() -> str:
@@ -971,15 +954,9 @@ def pagerank_oracle_sql() -> str:
       )"""
         )
     return (
-        _resolved_ctes()
+        _cross_edge_ctes()
         + f""",
-      edges as (select distinct src, dst from resolved where src <> dst),
       outdeg as (select src, count(*) as deg from edges group by src),
-      nodes as (
-        select distinct host from (
-          select src as host from edges union all select dst from edges
-        )
-      ),
       r0 as (select host, cast({SCALE} as bigint) as rank from nodes),
       {",".join(rounds)}
       select host, rank from r{ITERS}
@@ -989,52 +966,22 @@ def pagerank_oracle_sql() -> str:
 
 
 def host_components_oracle_sql() -> str:
-    """The HC_ITERS min-label rounds unrolled as nested CTEs (pagerank
-    pattern): l_k(host) = min over the CLOSED neighborhood (self-loop
-    edges included) of l_{k-1} — one edge join + group-min per round."""
-    rounds = []
-    for k in range(1, HC_ITERS + 1):
-        # reference l{k-1} exactly ONCE: engines inline CTEs, so a round
-        # referencing its predecessor twice doubles the plan per round
-        # (2^HC_ITERS scans by the last round).  The self-loop edges in
-        # sedges make the single propagated stream already contain each
-        # host's own label (min over the CLOSED neighborhood).
-        rounds.append(
-            f"""
-      l{k} as (
-        select e.src as host, min(q.lbl) as lbl
-        from sedges e join l{k - 1} q on q.host = e.dst
-        group by e.src
-      )"""
-        )
+    """The HC_ITERS min-label rounds unrolled (``textops.min_label_ctes``,
+    the dedup_clusters oracle's builder) over the repeated-linkage edges,
+    every host of the host graph a node."""
     return (
-        _resolved_ctes()
+        _hedges_ctes()
         + f""",
-      hg as (select src, dst, count(*) as n from resolved group by src, dst),
-      nodes as (
-        select distinct host from (
-          select src as host from hg union all select dst from hg
-        ) h
-      ),
+      hg as (select src_host as src, dst_host as dst, n_links from hedges),
       strong as (
         select src, dst from hg
-        where src <> dst and n >= {HC_MIN_WEIGHT}
+        where src <> dst and n_links >= {HC_MIN_WEIGHT}
       ),
-      sedges as (
-        select src, dst from strong
-        union
-        select dst, src from strong
-        union
-        select host, host from nodes
-      ),
-      l0 as (select host, host as lbl from nodes),
-      {",".join(rounds)}
-      select l.host, l.lbl as cluster_rep,
-             cast(s.n as bigint) as cluster_size
-      from l{HC_ITERS} l
-      join (select lbl, count(*) as n from l{HC_ITERS} group by lbl) s
-        on s.lbl = l.lbl
-      order by l.host
+      {min_label_ctes("strong", "hg", HC_ITERS)}
+      select id as host, lbl as cluster_rep,
+             cast(n as bigint) as cluster_size
+      from comp
+      order by host
     """
     )
 
@@ -1052,21 +999,15 @@ def frontier_df(links: DataFrame, crawled_urls: DataFrame) -> DataFrame:
     sides shuffle on the url hash) plus one hash aggregation keyed on the
     target; never a global sort (the order-by exists only for the
     sf-scale oracle compare)."""
+    href = F.col("href")
     resolved = links.select(
-        F.split("url", "/").getItem(2).alias("src_host"),
-        F.when(F.col("href").rlike("^https?://"), F.col("href"))
-        .when(
-            # protocol-relative: inherit the scheme (https on a real crawl)
-            F.col("href").startswith("//"),
-            F.concat(F.lit("https:"), F.col("href")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("https://"),
-                F.split("url", "/").getItem(2),
-                F.col("href"),
-            )
-        ).alias("frontier_url"),
+        _src_host_col().alias("src_host"),
+        F.when(~_absolute_href(),
+               F.concat(F.lit("https://"), _src_host_col(), href))
+        # protocol-relative: inherit the scheme (https on a real crawl)
+        .when(href.startswith("//"), F.concat(F.lit("https:"), href))
+        .otherwise(href)
+        .alias("frontier_url"),
     )
     crawled = crawled_urls.select(F.col("url").alias("frontier_url"))
     return (
@@ -1090,21 +1031,12 @@ def _frontier_ctes() -> str:
     used by both the frontier oracle and the crawl-schedule oracle so the
     two cannot drift."""
     return (
-        _lnk_ctes()
+        _resolved_ctes()
         + """,
-      resolved as (
-        select split_part(url, '/', 3) as src_host,
-               case when href like 'https://%' or href like 'http://%'
-                    then href
-                    when href like '//%' then concat('https:', href)
-                    else concat('https://', split_part(url, '/', 3), href)
-                    end as frontier_url
-        from lnk
-      ),
       frontier as (
-        select r.src_host, r.frontier_url
+        select r.src as src_host, r.dst_url as frontier_url
         from resolved r
-        left join expected e on e.url = r.frontier_url
+        left join expected e on e.url = r.dst_url
         where e.url is null
       ),
       fagg as (
@@ -1322,21 +1254,8 @@ def hyperball_sql(duck: bool) -> str:
 
 
 def run_host_hyperball(spark, sf_dir: str) -> DataFrame:
-    # localCheckpoint: the SQL references the edge relation five times
-    # (two propagation rounds, the hosts base, both exact-pin rounds) and
-    # Catalyst inlines CTEs — without this the mapInPandas PARSE would
-    # re-run per reference (host_triangles pattern)
-    hostgraph_df(links_df(pages_df(spark, sf_dir))).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("hedges")
-    return spark.sql("with " + hyperball_sql(duck=False))
+    return _over_hedges(spark, sf_dir, hyperball_sql(duck=False))
 
 
 def host_hyperball_oracle_sql() -> str:
-    return (
-        _resolved_ctes()
-        + """,
-      hedges as (select src as src_host, dst as dst_host from resolved),
-"""
-        + hyperball_sql(duck=True)
-    )
+    return _hedges_ctes() + ",\n" + hyperball_sql(duck=True)

@@ -466,11 +466,16 @@ def _decode_stream(head: bytes, data: bytes) -> bytes:
 def _xref_stream_entries(head: bytes, data: bytes, entries: dict) -> None:
     """Decode a cross-reference STREAM's binary rows per /W field widths:
     type 1 -> top-level byte offset; type 2 -> (object stream, index);
-    a zero-width type field defaults to 1 per spec."""
+    a zero-width type field defaults to 1 per spec.  The /Index counts
+    are walked only as far as the rows the decoded stream holds, so the
+    walk is linear in the stream whatever the counts say."""
     w = _dict_ints_array(head, b"W")
     size = _dict_int(head, b"Size")
     index = _dict_ints_array(head, b"Index") or [0, size]
     rowlen = sum(w)
+    if rowlen <= 0:
+        raise ValueError(f"xref stream /W widths {w} sum to {rowlen}")
+    left = len(data) // rowlen
 
     def field(row: bytes, k: int) -> int:
         if w[k] == 0:
@@ -480,6 +485,8 @@ def _xref_stream_entries(head: bytes, data: bytes, entries: dict) -> None:
 
     pos = 0
     for start, count in zip(index[::2], index[1::2]):
+        count = max(0, min(count, left))
+        left -= count
         for i in range(count):
             row = data[pos:pos + rowlen]
             pos += rowlen

@@ -686,29 +686,92 @@ def simhash_neardup_sql(duck: bool, sh_ref: str | None = None) -> str:
 CC_ITERS = 3
 
 
-def _cc_ctes(duck: bool, pairs_src: str) -> str:
-    """Unrolled min-label propagation over an undirected pair graph:
-    edges (both directions), labels0 = own id, then CC_ITERS rounds of
-    label(v) = min(label(v), min over in-neighbors).  Identical SQL in both
-    dialects — integer-only, order-insensitive aggregation."""
+def min_label_ctes(edges: str, graph: str, rounds: int) -> str:
+    """Connected components by ``rounds`` min-label rounds, unrolled as
+    CTEs ending in ``comp(id, lbl, n)``: each node's label (the least
+    node id its component reaches within ``rounds`` hops) and the size of
+    its label's component.  The graph is undirected: its edges are
+    ``edges(src, dst)`` in either direction, its nodes every ``src`` and
+    ``dst`` of ``graph``.  ``sedges`` holds both directions of each edge
+    plus a self-loop per node, so round k is one join + group-min over
+    the closed neighbourhood that reads round k-1 once (engines inline
+    CTEs: a round that read its predecessor twice would double the plan
+    per round).  Integer-only, identical SQL in both dialects; the Spark
+    runners iterate the same rounds in ``min_label_components``."""
     parts = [
-        f"pairs as (select a_id, b_id from {pairs_src} p)",
-        """edges as (
-        select a_id as src, b_id as dst from pairs
-        union all
-        select b_id as src, a_id as dst from pairs
+        f"""sedges as (
+        select src, dst from {edges}
+        union select dst, src from {edges}
+        union select src, src from {graph}
+        union select dst, dst from {graph}
       )""",
-        "l0 as (select distinct src as id, src as lbl from edges)",
+        "l0 as (select distinct src as id, src as lbl from sedges)",
     ]
-    for t in range(1, CC_ITERS + 1):
-        parts.append(f"""l{t} as (
-        select id, min(lbl) as lbl from (
-          select id, lbl from l{t - 1}
-          union all
-          select e.dst as id, l.lbl from edges e join l{t - 1} l on l.id = e.src
-        ) u group by id
+    for k in range(1, rounds + 1):
+        parts.append(f"""l{k} as (
+        select e.src as id, min(q.lbl) as lbl
+        from sedges e join l{k - 1} q on q.id = e.dst
+        group by e.src
+      )""")
+    parts.append(f"""comp as (
+        select l.id, l.lbl, s.n
+        from l{rounds} l
+        join (select lbl, count(*) as n from l{rounds} group by lbl) s
+          on s.lbl = l.lbl
       )""")
     return ",\n      ".join(parts)
+
+
+def graph_nodes(edges):
+    """The distinct ``id``s at either end of ``edges(src, dst)``,
+    materialized once: every iteration round joins against them."""
+    from pyspark.sql import functions as F
+
+    return (
+        edges.select(F.col("src").alias("id"))
+        .unionAll(edges.select(F.col("dst").alias("id")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def min_label_components(edges, graph, rounds: int):
+    """The Spark runners' ``min_label_ctes``: (id, lbl, n) over the
+    undirected graph of ``edges(src, dst)`` whose nodes are the ends of
+    ``graph(src, dst)``.  The symmetric edges are materialized once; each
+    round is one join keyed on the edge end + one group-min, its labels
+    lineage-truncated by ``localCheckpoint`` (a reliable-storage
+    ``checkpoint()`` on a real cluster: without it every round's plan
+    embeds all earlier rounds)."""
+    from pyspark.sql import functions as F
+
+    und = (
+        edges.select("src", "dst")
+        .unionAll(edges.select(F.col("dst").alias("src"),
+                               F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    labels = graph_nodes(graph).withColumn("lbl", F.col("id"))
+    for _ in range(rounds):
+        prop = und.join(labels, und.src == labels.id).select(
+            F.col("dst").alias("id"), "lbl")
+        labels = (
+            labels.unionAll(prop)
+            .groupBy("id")
+            .agg(F.min("lbl").alias("lbl"))
+            .localCheckpoint(eager=True)
+        )
+    return labels.join(labels.groupBy("lbl").agg(F.count("*").alias("n")),
+                       "lbl")
+
+
+def _lsh_components(duck: bool) -> str:
+    """``pairs(src, dst)``, the MinHash+LSH near-dup pairs, and their
+    components ``comp(id, lbl, n)`` after CC_ITERS rounds."""
+    return (f"pairs as (select a_id as src, b_id as dst "
+            f"from ({minhash_lsh_sql(duck)}) p),\n      "
+            + min_label_ctes("pairs", "pairs", CC_ITERS))
 
 
 def dedup_clusters_sql(duck: bool) -> str:
@@ -727,13 +790,11 @@ def dedup_clusters_sql(duck: bool) -> str:
     oracle unrolls the identical rounds as nested CTEs (the same
     iterative-algorithm oracle pattern as clusterops kmeans)."""
     return f"""
-      with {_cc_ctes(duck, f"({minhash_lsh_sql(duck)})")}
-      select l.id as doc_id,
-             cast(l.lbl as bigint) as keeper_id,
-             cast(c.n as bigint) as cluster_size
-      from l{CC_ITERS} l
-      join (select lbl, count(*) as n from l{CC_ITERS} group by lbl) c
-        on c.lbl = l.lbl
+      with {_lsh_components(duck)}
+      select id as doc_id,
+             cast(lbl as bigint) as keeper_id,
+             cast(n as bigint) as cluster_size
+      from comp
       order by doc_id
     """
 
@@ -751,11 +812,10 @@ def dedup_pipeline_sql(duck: bool) -> str:
     This SQL is the value oracle (CC rounds unrolled); the Spark runner
     composes the ITERATIVE run_dedup_clusters with one md5 aggregation —
     two hash shuffles beyond the cluster step, linear at any scale."""
-    pairs_src = f"({minhash_lsh_sql(duck)})"
     return f"""
       with {duped_docs_cte(duck)},
-      {_cc_ctes(duck, pairs_src)},
-      clusters as (select id as doc_id, lbl as cluster_keeper from l{CC_ITERS}),
+      {_lsh_components(duck)},
+      clusters as (select id as doc_id, lbl as cluster_keeper from comp),
       hd as (select doc_id, md5(text) as h from ddocs),
       ex as (select h, min(doc_id) as exact_keeper from hd group by h),
       base as (
@@ -1241,50 +1301,26 @@ def run_simhash_neardup(spark, sf_dir: str):
 def run_dedup_clusters(spark, sf_dir: str):
     """Spark-side connected-components keeper selection, the iterative
     production shape: the LSH candidate pairs are materialized ONCE (they
-    feed every propagation round), then each round is one DataFrame join +
-    group-min with the label relation persisted and the previous round
-    unpersisted — exactly the state a 1000-executor run would keep (labels
-    are (id, lbl) longs, ~16 bytes/doc; at 10^12 docs this relation would
-    be a checkpointed table instead of an in-memory persist).
+    feed every propagation round), then ``min_label_components`` runs the
+    CC_ITERS rounds the oracle unrolls — the state a 1000-executor run
+    would keep is the (id, lbl) label relation, ~16 bytes/doc.
 
-    Runs the same CC_ITERS rounds the oracle unrolls; convergence within
-    that bound is pinned by tests (near-dup components are near-cliques).
-    Production variant: loop until a changed-labels==0 count, alternating
-    large-star/small-star on adversarial diameters.
+    Convergence within that bound is pinned by tests (near-dup components
+    are near-cliques).  Production variant: loop until a changed-labels==0
+    count, alternating large-star/small-star on adversarial diameters.
 
-    Materialization is ``localCheckpoint`` (not plain persist): iterative
-    label relations must have their lineage truncated or every round's plan
-    embeds all previous rounds (and here, Spark 4.1's InlineCTE chokes
-    persisting the nested-CTE LSH plan outright — an analyzer
-    UnresolvedException).  On a real cluster this would be
-    ``checkpoint()`` to reliable storage."""
+    The pairs are materialized by ``localCheckpoint``, not plain persist:
+    Spark 4.1's InlineCTE chokes persisting the nested-CTE LSH plan
+    outright (an analyzer UnresolvedException)."""
     from pyspark.sql import functions as F
 
     pairs = (
         run_minhash_lsh(spark, sf_dir)
-        .select("a_id", "b_id")
+        .select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .localCheckpoint(eager=True)
     )
-    edges = pairs.selectExpr("a_id as src", "b_id as dst").unionAll(
-        pairs.selectExpr("b_id as src", "a_id as dst")
-    ).localCheckpoint(eager=True)
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "lbl", F.col("id")
-    )
-    for _ in range(CC_ITERS):
-        prop = edges.join(labels, edges.src == labels.id).select(
-            F.col("dst").alias("id"), F.col("lbl")
-        )
-        labels = (
-            labels.select("id", "lbl")
-            .unionAll(prop)
-            .groupBy("id")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-    sizes = labels.groupBy("lbl").agg(F.count("*").alias("n"))
     return (
-        labels.join(sizes, "lbl")
+        min_label_components(pairs, pairs, CC_ITERS)
         .select(
             F.col("id").alias("doc_id"),
             F.col("lbl").cast("bigint").alias("keeper_id"),

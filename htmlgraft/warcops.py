@@ -27,7 +27,7 @@ Scale notes (Common Crawl is ~100 TB/crawl of exactly this format):
 * record walking is sequential WITHIN a file (Content-Length chains), which
   is why crawls ship many medium files rather than few huge ones; the
   per-file loop is O(bytes) with zero copies beyond the payload slices;
-* the parse stage downstream is the same salted, Arrow-batched map as
+* the parse stage downstream is the same url-hashed, Arrow-batched map as
   ``job.parse_extract`` — ingestion adds no extra shuffle.
 """
 
@@ -506,7 +506,7 @@ def read_warc_pages(spark, path: str) -> DataFrame:
     Gzipped files are detected per-blob by magic (every real Common Crawl
     segment is per-record gzip members) and walked member-wise.  One file
     is one task input (binaryFile never splits a file, matching the
-    sequential record chain); downstream the salted url-hash repartition
+    sequential record chain); downstream the url-hash repartition
     rebalances record counts across the cluster."""
     files = spark.read.format("binaryFile").load(path).select("content")
     return map_rows(files, ["content"], WARC_PAGES_SCHEMA, _warc_pages_row)

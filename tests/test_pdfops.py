@@ -248,6 +248,25 @@ def test_uncompressed_objstm():
     assert pdfops.extract_pdf_text(_pdf15(flate_objstm=False))[1] == 2
 
 
+def test_xref_stream_index_walks_only_the_rows_it_holds():
+    """An /Index count of 10^12 over an 8-row xref stream walks 8 rows:
+    the text and the xref resolution are those of the plain file."""
+    import time
+
+    blob = _pdf15(flate_objstm=False).replace(
+        b"/Size 8 /W", b"/Size 8 /Index [0 1000000000000] /W")
+    t0 = time.perf_counter()
+    got = pdfops.extract_pdf_text(blob)
+    assert time.perf_counter() - t0 < 1.0
+    assert got == pdfops.extract_pdf_text(_pdf15(flate_objstm=False))
+    assert got[0] == "deep structure" and got[3] == "stream"
+
+
+def test_xref_stream_zero_widths_raise():
+    with pytest.raises(ValueError):
+        pdfops._xref_stream_entries(b"<< /W [0 0 0] /Size 3 >>", b"", {})
+
+
 def test_broken_xref_falls_back_to_scan():
     blob = _pdf15().replace(b"startxref", b"startxrfe")  # no startxref
     text, n_pages, _, kind, n_objstm = pdfops.extract_pdf_text(blob)

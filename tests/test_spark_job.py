@@ -95,6 +95,20 @@ def test_resume_antijoin_size_gate(spark, pages):
         assert "BroadcastHashJoin" not in plan
 
 
+def test_resume_parse_stage_keeps_num_parts(spark, pages):
+    """After the sort-merge resume anti-join, whose shuffle AQE may
+    coalesce, the parse stage still runs on ``num_parts`` partitions
+    (num_parts=None: the session's shuffle partitions)."""
+    done = pages.filter("doc_id % 2 = 0").select("url")
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for num_parts in (None, 3):
+        res = parse_extract(pages, num_parts=num_parts, done_urls=done,
+                            include_dom=False)
+        sizes = res.rdd.glom().map(len).collect()
+        assert len(sizes) == (num_parts or n)
+        assert sum(sizes) == pages.count() - done.count()
+
+
 def test_run_job_incremental_state(spark, pages, tmp_path):
     """Resume reads the compact state table, not the full results; metrics
     rows cover only each run's own partitions; results are partitioned by
