@@ -9,6 +9,7 @@ import pathlib
 import pandas as pd
 import pytest
 
+from conftest import _rows_digest
 from htmlgraft import domops, linkops, parse
 from htmlgraft.extract import DATA, END, START, events_from_json
 from htmlgraft.linkops import BASE, ITERS, SCALE, analyze_links
@@ -683,20 +684,6 @@ _GRAPH_DIGESTS = {
     "dedup_pipeline":
         "7f4967953a8e592bb1243309d607316b6516b3fbee66f2604a350686553e1cb0",
 }
-
-
-def _rows_digest(cols, rows) -> str:
-    import hashlib
-
-    order = sorted(range(len(cols)), key=cols.__getitem__)
-    norm = [tuple(None if r[i] is None else r[i] if isinstance(r[i], str)
-                  else int(r[i]) for i in order) for r in rows]
-    norm.sort(key=lambda r: tuple((v is None, 0 if v is None else v)
-                                  for v in r))
-    h = hashlib.sha256(repr([cols[i] for i in order]).encode())
-    for r in norm:
-        h.update(repr(r).encode())
-    return h.hexdigest()
 
 
 def test_graph_query_digests(spark, sf_dir):
