@@ -164,7 +164,7 @@ def _q_extract_reconcile(spark, sf_dir):
     # in BOTH directions (spurious results AND silently dropped rows), so a
     # pipeline losing urls cannot pass the audit one-directionally
     pages = pages_df(spark, sf_dir).select("url")
-    res = _results(spark, sf_dir).select("url")
+    res = _results(spark, sf_dir).select("url").localCheckpoint(eager=True)
     return res.exceptAll(pages).unionAll(pages.exceptAll(res))
 
 
@@ -255,11 +255,10 @@ def _q_line_scrub(spark, sf_dir):
     Scale: one hash agg keyed on the line for the counts, one join back,
     one per-url agg to reassemble (array_sort over the doc's own lines —
     per-document local state, never a global sort).  The parsed relation
-    feeds BOTH the counts side and the join-back side, so it is persisted
-    once — otherwise Catalyst inlines the view and the corpus parses
-    twice (plan-audited in PLANS.md)."""
+    feeds both the counts side and the join-back side, so it is computed
+    once."""
     parse_extract(pages_df(spark, sf_dir)).select("url", "text") \
-        .persist().createOrReplaceTempView("__scrub_res")
+        .localCheckpoint(eager=True).createOrReplaceTempView("__scrub_res")
     return spark.sql("""
       with lines as (
         select url, posexplode(split(text, chr(10))) as (idx, line)
@@ -391,10 +390,9 @@ def _q_corpus_build(spark, sf_dir):
     Scale: one parse pass, one hash shuffle on md5(text) for the keeper
     choice, map-only filters — the same shapes as extract_text +
     dedup_exact composed; nothing new materializes at 10^12 docs."""
-    res = parse_extract(pages_df(spark, sf_dir, multiplier=2)).select(
+    parse_extract(pages_df(spark, sf_dir, multiplier=2)).select(
         "url", "text"
-    )
-    res.createOrReplaceTempView("__build_res")
+    ).localCheckpoint(eager=True).createOrReplaceTempView("__build_res")
     return spark.sql("""
       with t as (
         select url, text, md5(text) as h,
@@ -707,30 +705,30 @@ def _registry() -> dict[str, tuple[_Runner, _Oracle]]:
                          _duck(textops.dedup_recall_sql)),
         "host_cap": _sql(textops, textops.host_cap_sql),
         # text analysis
-        "url_canonicalize": _sql(urlops, urlops.url_canonicalize_sql),
-        "url_surt": _sql(urlops, urlops.url_surt_sql),
+        "url_canonicalize": _sql(textops, urlops.url_canonicalize_sql),
+        "url_surt": _sql(textops, urlops.url_surt_sql),
         "warc_cdxj": (warcops.run_warc_cdxj, warcops.warc_cdxj_oracle_sql),
         "dom_select": (domops.run_dom_select, domops.dom_select_oracle_sql),
         "content_density": (domops.run_content_density,
                             domops.content_density_oracle_sql),
         "dom_template": (domops.run_dom_template,
                          domops.dom_template_oracle_sql),
-        "url_canon_dedup": _sql(urlops, urlops.url_canon_dedup_sql),
-        "robots_filter": _sql(urlops, urlops.robots_filter_sql),
-        "robots_parse": _sql(urlops, urlops.robots_parse_sql),
-        "sitemap_parse": _sql(urlops, urlops.sitemap_parse_sql),
-        "feed_parse": _sql(urlops, urlops.feed_parse_sql),
-        "bloom_frontier": _sql(urlops, urlops.bloom_frontier_sql),
-        "hll_card": _sql(urlops, urlops.hll_card_sql),
+        "url_canon_dedup": _sql(textops, urlops.url_canon_dedup_sql),
+        "robots_filter": _sql(textops, urlops.robots_filter_sql),
+        "robots_parse": _sql(textops, urlops.robots_parse_sql),
+        "sitemap_parse": _sql(textops, urlops.sitemap_parse_sql),
+        "feed_parse": _sql(textops, urlops.feed_parse_sql),
+        "bloom_frontier": _sql(textops, urlops.bloom_frontier_sql),
+        "hll_card": _sql(textops, urlops.hll_card_sql),
         "cms_freq": _sql(textops, textops.cms_freq_sql),
         "hist_quantiles": _sql(textops, textops.hist_quantiles_sql),
         "heavy_hitters": _sql(textops, textops.heavy_hitters_sql),
-        "latest_snapshot": _sql(urlops, urlops.latest_snapshot_sql),
-        "recrawl_delta": _sql(urlops, urlops.recrawl_delta_sql),
-        "warc_revisit": _sql(urlops, urlops.warc_revisit_sql),
-        "robots_optout": _sql(urlops, urlops.robots_optout_sql),
-        "hll_by_host": _sql(urlops, urlops.hll_by_host_sql),
-        "domain_stats": _sql(urlops, urlops.domain_stats_sql),
+        "latest_snapshot": _sql(textops, urlops.latest_snapshot_sql),
+        "recrawl_delta": _sql(textops, urlops.recrawl_delta_sql),
+        "warc_revisit": _sql(textops, urlops.warc_revisit_sql),
+        "robots_optout": _sql(textops, urlops.robots_optout_sql),
+        "hll_by_host": _sql(textops, urlops.hll_by_host_sql),
+        "domain_stats": _sql(textops, urlops.domain_stats_sql),
         "filter_funnel": _sql(textops, textops.filter_funnel_sql),
         "dataset_split": _sql(textops, textops.dataset_split_sql),
         "lang_id": _sql(textops, textops.lang_id_sql),

@@ -163,7 +163,7 @@ def _iterate_spark(spark, sf_dir: str):
     q = _quant(False)
     spark.sql(
         f"select vec_id, {q} as qe from embeddings"
-    ).persist().createOrReplaceTempView("__km_v")
+    ).localCheckpoint(eager=True).createOrReplaceTempView("__km_v")
     cents = [
         (r["vec_id"], list(r["qe"]))
         for r in spark.sql(

@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .job import map_rows
-from .textops import _d
-from .warcops import GZIP_MAGIC, _write_record_files
+from .textops import _d, _register_documents
+from .warcops import GZIP_MAGIC, _scratch_roundtrip, _write_record_files
 
 # Every JSON string-escaping class in one value: two-char escapes
 # (" \\ \n \t), a \u00XX C0 control, a 2-byte non-ASCII char, and an
@@ -131,20 +131,8 @@ def run_jsonl_roundtrip(spark, sf_dir: str) -> DataFrame:
     relation straight from the documents table with zero JSON machinery,
     so writer escaping and reader unescaping must be exact mutual
     inverses (a mangled surrogate pair, a swallowed control char, or a
-    line-split slip inside an escaped newline all break the value hash).
-    Sink runs eagerly into a scratch dir; the read-back is
-    localCheckpoint-materialized so the scratch tree can be removed
-    before returning."""
-    import shutil
-    import tempfile
-
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    rows = spark.sql(jsonl_rows_sql(duck=False))
-    out = tempfile.mkdtemp(prefix="jsonl_roundtrip_")
-    try:
-        write_jsonl_files(rows, out, compress=True).collect()
-        return read_jsonl_rows(spark, out).localCheckpoint()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    line-split slip inside an escaped newline all break the value hash;
+    sink and source through ``warcops._scratch_roundtrip``)."""
+    _register_documents(spark, sf_dir)
+    return _scratch_roundtrip(spark, spark.sql(jsonl_rows_sql(duck=False)),
+                              write_jsonl_files, read_jsonl_rows)

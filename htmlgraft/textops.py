@@ -340,8 +340,8 @@ def minhash_lsh_sql(duck: bool, shingles_ref: str | None = None) -> str:
     ``shingles_ref``: name of a pre-materialized (doc_id, shingle) relation.
     The shingle set is referenced three times (min-hashing, set sizes, the
     verify join); SQL engines inline CTEs, so without materialization the
-    explode is computed three times — ``run_minhash_lsh`` persists it once
-    on the Spark side (at 100 TB this would be a checkpointed table)."""
+    explode is computed three times — ``run_minhash_lsh`` computes it once
+    on the Spark side."""
     return f"""
       {_shingles_with(duck, shingles_ref)}
       {_minhash_cand_cte(duck)},
@@ -378,7 +378,7 @@ def dedup_containment_sql(duck: bool, shingles_ref: str | None = None) -> str:
 
     Scale contract identical to minhash_lsh: banding bounds the pair set,
     the verify join touches candidates only, and ``shingles_ref`` lets the
-    runner persist the one shingle explode (three consumers)."""
+    runner compute the one shingle explode once (three consumers)."""
     div = _d(duck)["div"]
     C = CONTAIN_MILLI
     return f"""
@@ -412,9 +412,9 @@ def dedup_containment_sql(duck: bool, shingles_ref: str | None = None) -> str:
 
 
 def run_dedup_containment(spark, sf_dir: str):
-    """Persist-once runner (run_minhash_lsh pattern: same shingle
-    relation, three consumers)."""
-    ref = _persisted_shingles(spark, sf_dir, "ct")
+    """Spark runner over the shingle relation computed once
+    (run_minhash_lsh pattern, three consumers)."""
+    ref = _persisted_shingles(spark, sf_dir)
     return spark.sql(dedup_containment_sql(duck=False, shingles_ref=ref))
 
 
@@ -611,8 +611,7 @@ def simhash_neardup_sql(duck: bool, sh_ref: str | None = None) -> str:
     ``sh_ref``: name of a pre-materialized (doc_id, simhash) relation.  The
     bands relation self-joins, and SQL engines inline CTEs — without
     materialization the per-token vote aggregation runs TWICE;
-    ``run_simhash_neardup`` persists it once on the Spark side (measured
-    ~4x on the sf0.1 duped corpus)."""
+    ``run_simhash_neardup`` computes it once on the Spark side."""
     d = _d(duck)
     shl, shr = d["shl"], d["shr"]
     xor = d["xor"].format("a_sh", "b_sh")
@@ -810,12 +809,21 @@ def dedup_pipeline_sql(duck: bool) -> str:
     i.e. exactly the rows a training pipeline feeds downstream.
 
     This SQL is the value oracle (CC rounds unrolled); the Spark runner
-    composes the ITERATIVE run_dedup_clusters with one md5 aggregation —
-    two hash shuffles beyond the cluster step, linear at any scale."""
+    renders the same verdict over the ITERATIVE run_dedup_clusters — two
+    hash shuffles beyond the cluster step, linear at any scale."""
+    return _dedup_verdict_sql(
+        duck,
+        f"""{_lsh_components(duck)},
+      clusters as (select id as doc_id, lbl as cluster_keeper from comp)""",
+    )
+
+
+def _dedup_verdict_sql(duck: bool, clusters: str) -> str:
+    """dedup_pipeline's verdict over the duped corpus, given CTEs
+    ``clusters`` that end in ``clusters``(doc_id, cluster_keeper)."""
     return f"""
       with {duped_docs_cte(duck)},
-      {_lsh_components(duck)},
-      clusters as (select id as doc_id, lbl as cluster_keeper from comp),
+      {clusters},
       hd as (select doc_id, md5(text) as h from ddocs),
       ex as (select h, min(doc_id) as exact_keeper from hd group by h),
       base as (
@@ -844,45 +852,15 @@ def dedup_pipeline_sql(duck: bool) -> str:
 
 
 def run_dedup_pipeline(spark, sf_dir: str):
-    """Spark runner for the composed verdict: the iterative CC keeper
-    relation (run_dedup_clusters — localCheckpoint-truncated rounds) joined
-    against one md5 group-min.  Same verdict SQL shape as the oracle; the
-    cluster labels come from the production iterative path, not the
-    unrolled CTEs."""
-    from pyspark.sql import functions as F
-
-    clusters = run_dedup_clusters(spark, sf_dir).select(
-        "doc_id", F.col("keeper_id").alias("cluster_keeper")
-    )
-    hd = spark.sql(
-        f"with {duped_docs_cte(False)} "
-        "select doc_id, md5(text) as h from ddocs"
-    )
-    ex = hd.groupBy("h").agg(F.min("doc_id").alias("exact_keeper"))
-    base = hd.join(ex, "h").join(clusters, "doc_id", "left")
-    reason = (
-        F.when(F.col("doc_id") != F.col("exact_keeper"), "exact_dup")
-        .when(
-            F.col("cluster_keeper").isNotNull()
-            & (F.col("doc_id") != F.col("cluster_keeper")),
-            "near_dup",
-        )
-        .otherwise("")
-    )
-    return (
-        base.withColumn("reason", reason)
-        .select(
-            "doc_id",
-            F.when(F.col("reason") == "", 1).otherwise(0)
-            .cast("bigint").alias("keep"),
-            "reason",
-            F.when(F.col("reason") == "exact_dup", F.col("exact_keeper"))
-            .when(F.col("reason") == "near_dup", F.col("cluster_keeper"))
-            .otherwise(F.col("doc_id"))
-            .cast("bigint").alias("keeper_id"),
-        )
-        .orderBy("doc_id")
-    )
+    """Spark runner for the composed verdict: ``dedup_pipeline_sql``'s
+    verdict over the keeper relation of the iterative run_dedup_clusters
+    (localCheckpoint-truncated rounds), not the unrolled CTEs."""
+    run_dedup_clusters(spark, sf_dir).createOrReplaceTempView("__dp_clusters")
+    return spark.sql(_dedup_verdict_sql(
+        False,
+        "clusters as (select doc_id, keeper_id as cluster_keeper "
+        "from __dp_clusters)",
+    ))
 
 
 # deterministic marker profiles for the n-gram language-ID heuristic; the
@@ -1222,80 +1200,52 @@ def run_hash_embed(spark, sf_dir: str, weights_path: str | None = None):
 
 
 def run_minhash_lsh(spark, sf_dir: str):
-    """Spark-side MinHash+LSH with the shingle relation persisted once
-    (it feeds three consumers; Catalyst inlines CTEs, so an unpersisted
-    plan would recompute the explode three times).
-
-    The corpus is repartitioned to the session's shuffle parallelism
-    before the shingle explode — the scan yields 3 partitions at sf0.1,
-    which would otherwise bound the explode + min-hash map side (same
-    scan-parallelism trap as run_simhash_neardup)."""
-    ref = _persisted_shingles(spark, sf_dir, "mh")
+    """Spark-side MinHash+LSH over the shingle relation, computed once
+    (``_persisted_shingles``): min-hashing, sizes and the verify join all
+    read it."""
+    ref = _persisted_shingles(spark, sf_dir)
     return spark.sql(minhash_lsh_sql(duck=False, shingles_ref=ref))
 
 
-def _persisted_shingles(spark, sf_dir: str, tag: str) -> str:
-    """Persist the duped corpus's shingle relation once and return its
-    view name (``__{tag}_shingles``).  The corpus is repartitioned to the
-    session's shuffle parallelism before the explode (see
-    ``run_minhash_lsh``)."""
-    _register_documents(spark, sf_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    spark.sql(
-        f"with {duped_docs_cte(False)} select doc_id, text from ddocs"
-    ).repartition(n_parts).createOrReplaceTempView(f"__{tag}_ddocs")
-    sh = spark.sql(
-        f"with {shingles_cte(False, f'__{tag}_ddocs')} "
-        "select doc_id, shingle from shingles"
-    ).persist()
-    sh.createOrReplaceTempView(f"__{tag}_shingles")
-    return f"__{tag}_shingles"
+def _persisted_shingles(spark, sf_dir: str) -> str:
+    """The duped corpus's (doc_id, shingle) relation, computed once by
+    ``_persisted_pass``; returns its view name."""
+    return _persisted_pass(
+        spark, sf_dir, "__dd_shingles",
+        f"with {duped_docs_cte(False)}, {shingles_cte(False)} "
+        "select doc_id, shingle from shingles",
+    )
 
 
 def run_dedup_recall(spark, sf_dir: str):
-    """Spark-side banding-recall eval with the shingle relation persisted
+    """Spark-side banding-recall eval over the shingle relation computed
     once (five consumers: min-hashing, both sides of the all-pairs join,
     both size lookups)."""
-    ref = _persisted_shingles(spark, sf_dir, "dr")
+    ref = _persisted_shingles(spark, sf_dir)
     return spark.sql(dedup_recall_sql(duck=False, shingles_ref=ref))
 
 
 def run_ppl_bucket(spark, sf_dir: str):
-    """Spark-side perplexity bucketing with the doc_scores relation
-    persisted once (it feeds the value-domain histogram AND the per-doc
-    labeling join; inlined CTEs would run the bigram-model pipeline
-    twice)."""
-    _register_documents(spark, sf_dir)
-    ds = spark.sql(
-        f"with {lm_scored_cte(False)} select * from doc_scores"
-    ).persist()
-    ds.createOrReplaceTempView("__ppl_scores")
-    return spark.sql(ppl_bucket_sql(duck=False, scores_ref="__ppl_scores"))
+    """Spark-side perplexity bucketing over the doc_scores relation
+    computed once (it feeds the value-domain histogram AND the per-doc
+    labeling join)."""
+    ref = _persisted_pass(
+        spark, sf_dir, "__ppl_scores",
+        f"with {lm_scored_cte(False)} select * from doc_scores",
+    )
+    return spark.sql(ppl_bucket_sql(duck=False, scores_ref=ref))
 
 
 def run_simhash_neardup(spark, sf_dir: str):
-    """Spark-side SimHash near-dup with the (doc_id, simhash) relation
-    persisted once: the banding self-join consumes it twice, and Catalyst's
-    CTE inlining would otherwise run the O(32 * tokens) vote aggregation
-    for both sides (at 100 TB this would be a checkpointed table).
-
-    The corpus is REPARTITIONED to the session's shuffle parallelism
-    BEFORE the vote aggregation: the scan yields 3 partitions at sf0.1,
-    and since the pair-generation joins broadcast the build side, both the
-    O(32 * tokens) simhash computation and every downstream stage would
-    otherwise run at scan parallelism — measured 35-45 s at 3-6 tasks vs
-    ~15 s with the exchange on the same input."""
-    _register_documents(spark, sf_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    spark.sql(
-        f"with {duped_docs_cte(False)} select doc_id, text from ddocs"
-    ).repartition(n_parts).createOrReplaceTempView("__sh_ddocs")
-    sh = spark.sql(
-        f"with {_hashed_tokens_cte(False, '__sh_ddocs')} "
-        f"select doc_id, {_simhash_expr(False)} as simhash from hv_docs"
-    ).persist()
-    sh.createOrReplaceTempView("__sh_simhash")
-    return spark.sql(simhash_neardup_sql(duck=False, sh_ref="__sh_simhash"))
+    """Spark-side SimHash near-dup over the (doc_id, simhash) relation
+    computed once: both sides of the banding self-join read it, so the
+    O(32 * tokens) vote runs once."""
+    ref = _persisted_pass(
+        spark, sf_dir, "__sh_simhash",
+        f"with {duped_docs_cte(False)}, {_hashed_tokens_cte(False, 'ddocs')} "
+        f"select doc_id, {_simhash_expr(False)} as simhash from hv_docs",
+    )
+    return spark.sql(simhash_neardup_sql(duck=False, sh_ref=ref))
 
 
 def run_dedup_clusters(spark, sf_dir: str):
@@ -1307,11 +1257,7 @@ def run_dedup_clusters(spark, sf_dir: str):
 
     Convergence within that bound is pinned by tests (near-dup components
     are near-cliques).  Production variant: loop until a changed-labels==0
-    count, alternating large-star/small-star on adversarial diameters.
-
-    The pairs are materialized by ``localCheckpoint``, not plain persist:
-    Spark 4.1's InlineCTE chokes persisting the nested-CTE LSH plan
-    outright (an analyzer UnresolvedException)."""
+    count, alternating large-star/small-star on adversarial diameters."""
     from pyspark.sql import functions as F
 
     pairs = (
@@ -1675,7 +1621,7 @@ def ppl_bucket_sql(duck: bool, scores_ref: str | None = None) -> str:
     ``scores_ref`` names a pre-materialized doc_scores relation: it feeds
     both the histogram and the per-doc labeling join, and Catalyst's CTE
     inlining would otherwise run the whole bigram-model pipeline twice —
-    ``run_ppl_bucket`` persists it once."""
+    ``run_ppl_bucket`` computes it once."""
     if scores_ref is None:
         pre = f"with {lm_scored_cte(duck)},"
     else:
@@ -1871,7 +1817,7 @@ def dedup_recall_sql(duck: bool, shingles_ref: str | None = None) -> str:
     small-scale oracle path (quadratic); at 100 TB one runs this on a
     sampled slice to validate banding parameters, never on the corpus.
     ``shingles_ref`` names a pre-materialized shingle relation (five
-    consumers here — ``run_dedup_recall`` persists it once)."""
+    consumers here — ``run_dedup_recall`` computes it once)."""
     return f"""
       {_shingles_with(duck, shingles_ref)}
       {_minhash_cand_cte(duck)},
@@ -2140,10 +2086,10 @@ def dedup_incremental_sql(duck: bool, shingles_ref: str | None = None) -> str:
 
 
 def run_dedup_incremental(spark, sf_dir: str):
-    """Spark runner: same persisted-shingle + repartition discipline as
-    ``run_minhash_lsh`` (the shingle relation feeds min-hashing, sizes and
-    the verify join)."""
-    ref = _persisted_shingles(spark, sf_dir, "inc")
+    """Spark runner over the shingle relation computed once, as in
+    ``run_minhash_lsh`` (it feeds min-hashing, sizes and the verify
+    join)."""
+    ref = _persisted_shingles(spark, sf_dir)
     return spark.sql(dedup_incremental_sql(duck=False, shingles_ref=ref))
 
 
@@ -2591,16 +2537,16 @@ def source_mix_sql(duck: bool) -> str:
 TEMP_TAUS = ("1", "2", "inf")
 
 
-def per_source_tokens_sql(duck: bool, docs: str = "documents") -> str:
+def per_source_tokens_sql(duck: bool) -> str:
     """The one corpus pass behind source_temperature: (source, n_docs,
-    n_tokens).  Split out so the Spark runner can persist it — Catalyst
+    n_tokens).  Split out so the Spark runner can compute it once — Catalyst
     inlines CTEs, and the tau expansion references it three times."""
     d = _d(duck)
     n_tok = f"{d['len']}({d['split'].format('text')})"
     return f"""
         select source, count(*) as n_docs,
                sum(cast({n_tok} as bigint)) as n_tokens
-        from {docs} group by source
+        from documents group by source
     """
 
 
@@ -2617,8 +2563,8 @@ def source_temperature_sql(duck: bool,
     Exact integer math throughout so both engines agree bit-for-bit:
     tau=2 uses an integer sqrt computed as float sqrt plus a +/-1
     correction (the double can round either way; the correction re-anchors
-    on exact bigint squares).  Scale: one token-count pass (persisted by
-    the runner — ``per_source_src``), then everything is per-source (tens
+    on exact bigint squares).  Scale: one token-count pass (computed once
+    by the runner — ``per_source_src``), then everything is per-source (tens
     of rows) — linear at any corpus size."""
     div = _d(duck)["div"]
     s0 = "cast(floor(sqrt(cast(n_tokens as double))) as bigint)"
@@ -2661,11 +2607,12 @@ def source_temperature_sql(duck: bool,
 KN_D_MILLI = 750  # absolute discount 0.75 (Chen & Goodman's fixed-D variant)
 
 
-def kn_bigram_counts_sql(duck: bool, docs: str = "documents") -> str:
+def kn_bigram_counts_sql(duck: bool) -> str:
     """(w1, w2, c) bigram counts — the ONE corpus pass behind kn_ngram,
-    split out so the Spark runner can persist it (Catalyst inlines CTEs;
+    split out so the Spark runner can compute it once (Catalyst inlines CTEs;
     the ctx/cont/types/scoring consumers reference it four times)."""
-    words = f"(select {_d(duck)['split'].format('text')} as ws from {docs}) words"
+    words = (f"(select {_d(duck)['split'].format('text')} as ws"
+             " from documents) words")
     bigrams = _kgrams_sql(duck, 2, "", "bg", words)
     return f"""
         select {_bigram_word(duck, 1)} as w1, {_bigram_word(duck, 2)} as w2,
@@ -2687,8 +2634,8 @@ def kn_ngram_sql(duck: bool, bcounts_src: str | None = None) -> str:
     with D = {KN_D_MILLI} permille, every division an integer division on
     ppm-scaled bigints — identical on both engines, no float anywhere.
 
-    Scale shape: ONE corpus pass builds the bigram counts (persisted by
-    the Spark runner via ``bcounts_src`` — four consumers would otherwise
+    Scale shape: ONE corpus pass builds the bigram counts (computed once
+    by the Spark runner via ``bcounts_src`` — four consumers would otherwise
     re-explode the corpus four times; the shuffle is keyed by the bigram
     hash — balanced); every relation after that is vocabulary-bounded
     (V^2 bigram types at worst, vocabulary-sized context tables), never
@@ -2736,7 +2683,7 @@ def ngram_novelty_sql(duck: bool, shingles_src: str | None = None) -> str:
     Output per doc: distinct shingle count, first-seen count, and the
     integer novelty percentage.
 
-    Scale shape: one shingle explode (persisted by the Spark runner via
+    Scale shape: one shingle explode (computed once by the Spark runner via
     ``shingles_src`` — two consumers would otherwise re-explode), one
     min(doc_id) agg keyed on the shingle (balanced — map-side partials
     absorb hot shingles), and one shingle-keyed join back; every relation
@@ -2772,15 +2719,15 @@ DSIR_BUCKETS = 64  # hashed-unigram feature space (Xie et al. use 10^4; 64
 #                    keeps every bucket populated at test scale)
 
 
-def dsir_tb_sql(duck: bool, docs: str = "documents") -> str:
+def dsir_tb_sql(duck: bool) -> str:
     """(doc_id, bucket, is-target) hashed-token stream — the corpus pass
-    behind dsir_weights, split out for the persist-once runner."""
+    behind dsir_weights, split out so the runner computes it once."""
     d = _d(duck)
     ws = d["split"].format("text")
     h = h32("tok", duck)
     B = DSIR_BUCKETS
     base = (f"select doc_id, {d['explode']}({ws}) as tok,"
-            f" case when lang = 'en' then 1 else 0 end as tgt from {docs}")
+            " case when lang = 'en' then 1 else 0 end as tgt from documents")
     return f"""
         select doc_id, {h} % {B} as b, tgt
         from ({base}) toks where tok <> ''
@@ -2806,7 +2753,7 @@ def dsir_weights_sql(duck: bool, tb_src: str | None = None) -> str:
     max() guard keeps the math defined (products stay < 2^63 for any
     corpus below ~9e12 tokens).
 
-    Scale shape: ONE hashed-token pass (persisted by the Spark runner via
+    Scale shape: ONE hashed-token pass (computed once by the Spark runner via
     ``tb_src``; the histogram and the per-doc scoring both consume it), a
     single B-bounded histogram carrying raw and target counts together
     (map-side partials), broadcast-joined back onto the token stream; one
@@ -2853,10 +2800,10 @@ def dsir_weights_sql(duck: bool, tb_src: str | None = None) -> str:
 KN_HELDOUT_MOD = 10  # doc_id % MOD == 0 is held out; the rest train
 
 
-def kn_train_bcounts_sql(duck: bool, docs: str = "documents") -> str:
+def kn_train_bcounts_sql(duck: bool) -> str:
     """(bg, c) bigram counts over the TRAIN split — the corpus pass behind
-    kn_heldout, split out for the persist-once runner (four consumers)."""
-    words = (f"(select {_d(duck)['split'].format('text')} as ws from {docs}"
+    kn_heldout, split out so the runner computes it once (four consumers)."""
+    words = (f"(select {_d(duck)['split'].format('text')} as ws from documents"
              f" where doc_id % {KN_HELDOUT_MOD} <> 0) tr_words")
     bg = _kgrams_sql(duck, 2, "", "bg", words)
     return f"""
@@ -2951,75 +2898,67 @@ def kn_heldout_sql(duck: bool, bcounts_src: str | None = None) -> str:
     """
 
 
-def _persisted_pass(spark, sf_dir: str, build_sql, view: str):
-    """Materialize a corpus-pass relation once (persist + temp view) so
-    the downstream SQL's multiple references hit the cache instead of
-    re-running the pass — Catalyst inlines CTEs (run_bm25_search pattern).
-    The pass reads a shuffle-parallelism-repartitioned documents view:
-    the parquet scan's few partitions would otherwise bound the explode's
-    map side (run_minhash_lsh's scan-parallelism trap)."""
+def _persisted_pass(spark, sf_dir: str, view: str, sql: str) -> str:
+    """Run the corpus pre-pass ``sql`` once and register its rows as the
+    temp view ``view`` (returned), for a query that reads them more than
+    once.  This is how every runner here materializes such a relation.
+
+    Catalyst inlines CTEs and temp views, so a query that names a pre-pass
+    twice runs it twice.  ``persist()`` does not fix that reliably: the
+    cached plan is substituted only where a later plan matches it after
+    canonicalization, which a pre-pass written with a WITH does not; and
+    a relation nobody unpersists stays cached, substituted into any later
+    query of the session that happens to match it.
+    ``localCheckpoint(eager=True)`` computes the rows now and cuts the
+    lineage, so every read is a scan of them (a reliable-storage
+    ``checkpoint()`` on a real cluster).
+
+    ``sql`` is the pre-pass the oracle builder inlines, over ``documents``
+    (the duped corpus's pre-passes include ``duped_docs_cte``).  Here
+    ``documents`` is a CTE over the table repartitioned to the shuffle
+    parallelism: the parquet scan yields a few partitions (3 at sf0.1),
+    which would otherwise bound the explode's map side."""
     _register_documents(spark, sf_dir)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     spark.table("documents").repartition(n_parts).createOrReplaceTempView(
         "__docs_rep"
     )
-    df = spark.sql(build_sql(docs="__docs_rep")).persist()
-    df.createOrReplaceTempView(view)
-    return df
+    spark.sql(
+        f"with documents as (select * from __docs_rep) select * from ({sql})"
+    ).localCheckpoint(eager=True).createOrReplaceTempView(view)
+    return view
 
 
 def run_source_temperature(spark, sf_dir: str):
-    _persisted_pass(
-        spark, sf_dir,
-        lambda docs: per_source_tokens_sql(False, docs=docs),
-        "__temp_per_source",
-    )
-    return spark.sql(
-        source_temperature_sql(False, per_source_src="__temp_per_source")
-    )
+    src = _persisted_pass(spark, sf_dir, "__temp_per_source",
+                          per_source_tokens_sql(False))
+    return spark.sql(source_temperature_sql(False, per_source_src=src))
 
 
 def run_kn_ngram(spark, sf_dir: str):
-    _persisted_pass(
-        spark, sf_dir,
-        lambda docs: kn_bigram_counts_sql(False, docs=docs), "__kn_bc",
-    )
-    return spark.sql(kn_ngram_sql(False, bcounts_src="__kn_bc"))
+    src = _persisted_pass(spark, sf_dir, "__kn_bc",
+                          kn_bigram_counts_sql(False))
+    return spark.sql(kn_ngram_sql(False, bcounts_src=src))
 
 
 def run_kn_heldout(spark, sf_dir: str):
-    _persisted_pass(
-        spark, sf_dir,
-        lambda docs: kn_train_bcounts_sql(False, docs=docs), "__kn_tbc",
-    )
-    return spark.sql(kn_heldout_sql(False, bcounts_src="__kn_tbc"))
+    src = _persisted_pass(spark, sf_dir, "__kn_tbc",
+                          kn_train_bcounts_sql(False))
+    return spark.sql(kn_heldout_sql(False, bcounts_src=src))
 
 
 def run_dsir_weights(spark, sf_dir: str):
-    _persisted_pass(
-        spark, sf_dir,
-        lambda docs: dsir_tb_sql(False, docs=docs), "__dsir_tb",
-    )
-    return spark.sql(dsir_weights_sql(False, tb_src="__dsir_tb"))
-
-
-def novelty_shingles_sql(duck: bool, docs: str = "documents") -> str:
-    """Distinct (doc_id, {NOVELTY_K}-gram shingle) — the corpus pass
-    behind ngram_novelty as a PLAIN nested select: a WITH in the cached
-    SQL defeats Spark's cache-plan canonicalization, so the persisted
-    relation would silently never be substituted (measured: two full
-    explodes in the plan)."""
-    words = f"(select doc_id, {_d(duck)['split'].format('text')} as ws from {docs}) words"
-    return _kgrams_sql(duck, NOVELTY_K, "distinct doc_id, ", "shingle", words)
+    src = _persisted_pass(spark, sf_dir, "__dsir_tb", dsir_tb_sql(False))
+    return spark.sql(dsir_weights_sql(False, tb_src=src))
 
 
 def run_ngram_novelty(spark, sf_dir: str):
-    _persisted_pass(
-        spark, sf_dir,
-        lambda docs: novelty_shingles_sql(False, docs=docs),
-        "__novelty_sh",
+    src = _persisted_pass(
+        spark, sf_dir, "__novelty_sh",
+        f"with {shingles_cte(False, src='documents', k=NOVELTY_K)} "
+        "select doc_id, shingle from shingles",
     )
-    return spark.sql(ngram_novelty_sql(False, shingles_src="__novelty_sh"))
+    return spark.sql(ngram_novelty_sql(False, shingles_src=src))
 
 
 # --- BPE tokenizer training (iterative merges over the word-frequency dict) --
@@ -3157,18 +3096,17 @@ def _bpe_pairs_over(view: str) -> str:
 
 def _run_bpe_rounds(spark, sf_dir: str):
     """Shared iterative driver: returns (merge rows, name of the final dict
-    view).  The word dict is persisted once; each round is a pair-count agg
+    view).  The word dict is computed once; each round is a pair-count agg
     over the vocabulary-bounded relation plus a 1-row argmax collect (the
     kmeans pattern — the merge table lives on the driver, as it must: it IS
     the output artifact).  The next dict is a pure projection with the pair
     injected as escaped literals, so lineage grows by one replace per
     round."""
-    _register_documents(spark, sf_dir)
-    base = spark.sql(
-        f"with {_bpe_dict0_cte(False)} select word, wcount, repr from dict0"
-    ).persist()
-    base.createOrReplaceTempView("__bpe_dict_0")
-    out, cur = [], "__bpe_dict_0"
+    cur = _persisted_pass(
+        spark, sf_dir, "__bpe_dict_0",
+        f"with {_bpe_dict0_cte(False)} select word, wcount, repr from dict0",
+    )
+    out = []
     for t in range(1, BPE_MERGES + 1):
         best = spark.sql(_bpe_pairs_over(cur)).collect()
         if not best:
@@ -3278,7 +3216,7 @@ def bpe_encode_sql(duck: bool) -> str:
 
 def run_bpe_encode(spark, sf_dir: str):
     """Iterative-runner twin of ``bpe_encode_sql``: train via
-    ``_run_bpe_rounds`` (persisted dict, 1-row argmax collects), then
+    ``_run_bpe_rounds`` (dict computed once, 1-row argmax collects), then
     encode the corpus against the final dict view."""
     _, last = _run_bpe_rounds(spark, sf_dir)
     return spark.sql(
@@ -3347,8 +3285,8 @@ def bpe_roundtrip_sql(duck: bool) -> str:
 
 
 def run_bpe_roundtrip(spark, sf_dir: str):
-    """Iterative-runner twin of ``bpe_roundtrip_sql`` (persisted dict,
-    1-row argmax collects per round)."""
+    """Iterative-runner twin of ``bpe_roundtrip_sql`` (dict computed
+    once, 1-row argmax collects per round)."""
     _, last = _run_bpe_rounds(spark, sf_dir)
     return spark.sql(f"with {_bpe_decode_select(last)}")
 
@@ -3612,19 +3550,24 @@ def bm25_search_sql(duck: bool) -> str:
     <= {BM25_TOPK}*{BM25_LANES} survivors — so a stopword-grade query term
     never materializes a corpus-sized window."""
     return f"""
-      with {tokens_cte(duck)},
-      tf as (
-        select doc_id, tok, count(*) as tf
-        from tokens where tok <> '' group by doc_id, tok
-      ),
+      with {_bm25_tf_ctes(duck)},
       {_bm25_rest(duck, "tf")}
     """
 
 
+def _bm25_tf_ctes(duck: bool) -> str:
+    """``tokens`` and ``tf``(doc_id, tok, tf): the index-build pass."""
+    return f"""{tokens_cte(duck)},
+      tf as (
+        select doc_id, tok, count(*) as tf
+        from tokens where tok <> '' group by doc_id, tok
+      )"""
+
+
 def _bm25_rest(duck: bool, tf: str) -> str:
     """The BM25 chain downstream of the (doc_id, tok, tf) relation — shared
-    between the inline oracle template and the persisted-tf Spark runner so
-    the two cannot drift."""
+    between the inline oracle template and the Spark runner, which
+    computes tf once, so the two cannot drift."""
     iv = _d(duck)["div"]
     return f"""
       dl as (select doc_id, sum(tf) as dl from {tf} group by doc_id),
@@ -3685,27 +3628,13 @@ def _bm25_rest(duck: bool, tf: str) -> str:
 
 
 def run_bm25_search(spark, sf_dir: str):
-    """Spark-side BM25 with the (doc_id, tok, tf) index relation persisted
+    """Spark-side BM25 over the (doc_id, tok, tf) index relation computed
     once: it feeds four consumers (dl, df via the query derivation, and the
-    scoring join), and Catalyst inlines CTEs, so the unpersisted template
-    re-scans and re-explodes the corpus four times — at 10^12 docs the
-    token explode IS the dominant cost.  Same scan-parallelism repartition
-    as ``run_minhash_lsh`` (the parquet scan's 3 partitions would otherwise
-    bound the explode's map side)."""
-    _register_documents(spark, sf_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    tf = (
-        spark.table("documents")
-        .repartition(n_parts)
-        .selectExpr("doc_id", "explode(split(text, ' ')) as tok")
-        .where("tok <> ''")
-        .groupBy("doc_id", "tok")
-        .count()
-        .withColumnRenamed("count", "tf")
-        .persist()
-    )
-    tf.createOrReplaceTempView("__bm25_tf")
-    return spark.sql(f"with {_bm25_rest(False, '__bm25_tf')}")
+    scoring join) — at 10^12 docs the token explode IS the dominant
+    cost."""
+    tf = _persisted_pass(spark, sf_dir, "__bm25_tf",
+                         f"with {_bm25_tf_ctes(False)} select * from tf")
+    return spark.sql(f"with {_bm25_rest(False, tf)}")
 
 
 CDC_K = 3     # k-gram width feeding the rolling boundary hash
@@ -3885,7 +3814,7 @@ def phrase_search_sql(duck: bool, postings_ref: str | None = None) -> str:
     ``postings_ref``: name of a pre-materialized (doc_id, pos, tok)
     relation (the shingles_ref/sh_ref/tf pattern) — the postings CTE feeds
     FOUR consumers and engines inline CTEs, so ``run_phrase_search``
-    persists it once and renders this same template against it."""
+    computes it once and renders this same template against it."""
     if postings_ref is None:
         p = "postings"
         pre = _postings_ctes(duck, "pwords", "postings") + ","
@@ -3995,28 +3924,15 @@ def ngram_collocations_sql(duck: bool) -> str:
 
 
 def run_phrase_search(spark, sf_dir: str):
-    """Spark-side phrase search with the positional postings relation
-    persisted once: the template's postings CTE feeds THREE consumers
-    (query derivation's self-join uses it twice, then m1/m2) and Catalyst
-    inlines CTEs, so the unpersisted plan re-scans and re-explodes the
-    corpus four times.  Same scan-parallelism repartition as
-    ``run_bm25_search``."""
-    _register_documents(spark, sf_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    postings = (
-        spark.table("documents")
-        .repartition(n_parts)
-        .selectExpr(
-            "doc_id",
-            "posexplode(split(text, ' ')) as (pos0, tok)",
-        )
-        .selectExpr("doc_id", "pos0 + 1 as pos", "tok")
-        .persist()
+    """Spark-side phrase search over the positional postings relation
+    computed once: the template's postings CTE feeds four consumers (the
+    query derivation's self-join reads it twice, then m1/m2)."""
+    ref = _persisted_pass(
+        spark, sf_dir, "__phrase_postings",
+        f"with {_postings_ctes(False, 'pwords', 'postings')} "
+        "select doc_id, pos, tok from postings",
     )
-    postings.createOrReplaceTempView("__phrase_postings")
-    return spark.sql(
-        phrase_search_sql(duck=False, postings_ref="__phrase_postings")
-    )
+    return spark.sql(phrase_search_sql(duck=False, postings_ref=ref))
 
 
 def dedup_band_audit_sql(duck: bool) -> str:

@@ -785,13 +785,6 @@ def hll_by_host_sql(duck: bool) -> str:
     """
 
 
-def run(spark, sf_dir: str, sql_builder):
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(sql_builder(duck=False))
-
-
 def robots_parse_sql(duck: bool) -> str:
     """robots.txt PARSER (RFC 9309 grammar, public spec) — the missing
     half of ``robots_filter``, which consumes a rules RELATION: this

@@ -609,6 +609,24 @@ def write_wat_files(payloads_df: DataFrame, out_dir: str,
     )
 
 
+def _scratch_roundtrip(spark, rows: DataFrame, write, read) -> DataFrame:
+    """Write ``rows`` with ``write(rows, dir, compress=True)`` into a
+    scratch dir, read them back with ``read(spark, dir)`` and return the
+    read-back materialized by ``localCheckpoint``, so the scratch tree is
+    removed before returning (re-collects replay the checkpoint, not the
+    files).  The round-trip queries, which pin a sink and its source as
+    mutual inverses, run through here."""
+    import shutil
+    import tempfile
+
+    out = tempfile.mkdtemp(prefix="roundtrip_")
+    try:
+        write(rows, out, compress=True).collect()
+        return read(spark, out).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 WAT_LINKS_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -656,26 +674,15 @@ def run_wat_roundtrip(spark, sf_dir: str) -> DataFrame:
     facts links/metadata are gated on), so the gate pins the WHOLE trip:
     JSON escaping, document-order link arrays, byte-length Content-Length
     framing, gzip member boundaries, and the reader's envelope parse must
-    all be exact mutual inverses.  Sink runs eagerly into a scratch dir;
-    the read-back is localCheckpoint-materialized so the scratch tree can
-    be removed before returning."""
-    import shutil
-    import tempfile
-
+    all be exact mutual inverses (sink and source through
+    ``_scratch_roundtrip``)."""
     from .linkops import pages_df, wat_payloads_cte, wat_rows_df
 
-    out = tempfile.mkdtemp(prefix="wat_roundtrip_")
-    try:
-        wat_rows_df(pages_df(spark, sf_dir)).createOrReplaceTempView(
-            "__wat_rows"
-        )
-        payloads = spark.sql(
-            wat_payloads_cte() + " select url, payload from payloads"
-        )
-        write_wat_files(payloads, out, compress=True).collect()
-        return read_wat_links(spark, out).localCheckpoint()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    wat_rows_df(pages_df(spark, sf_dir)).createOrReplaceTempView("__wat_rows")
+    payloads = spark.sql(
+        wat_payloads_cte() + " select url, payload from payloads"
+    )
+    return _scratch_roundtrip(spark, payloads, write_wat_files, read_wat_links)
 
 
 def _wet_rows(blob):
@@ -708,22 +715,12 @@ def run_wet_roundtrip(spark, sf_dir: str) -> DataFrame:
     members) → WET source → (url, text).  Same oracle as ``extract_text``,
     so the gate pins sink and source as exact mutual inverses: a one-byte
     Content-Length error, a CRLF slip, or a gzip member boundary leak all
-    break the value hash.  The sink runs eagerly into a scratch dir; the
-    read-back is localCheckpoint-materialized so the scratch tree can be
-    removed before returning (re-collects replay the checkpoint, not the
-    files)."""
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="wet_roundtrip_")
-    try:
-        results = parse_extract(
-            pages_df(spark, sf_dir), include_dom=False
-        ).select("url", "text")
-        write_wet_files(results, out, compress=True).collect()
-        return read_wet_text(spark, out).localCheckpoint()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    break the value hash (sink and source through
+    ``_scratch_roundtrip``)."""
+    results = parse_extract(
+        pages_df(spark, sf_dir), include_dom=False
+    ).select("url", "text")
+    return _scratch_roundtrip(spark, results, write_wet_files, read_wet_text)
 
 
 def run_warc_extract_text(spark, sf_dir: str) -> DataFrame:
@@ -892,10 +889,8 @@ def run_warc_cdxj(spark, sf_dir: str) -> DataFrame:
     this query gates."""
     from .urlops import surt_ctes
 
-    # the cdx relation feeds both the line build and the distinct-url surt
-    # derivation; Catalyst inlines temp views, so persist it once or the
-    # record walk runs twice (the minhash/bm25 pattern)
-    run_warc_cdx(spark, sf_dir).persist().createOrReplaceTempView("__cdx")
+    run_warc_cdx(spark, sf_dir).localCheckpoint(
+        eager=True).createOrReplaceTempView("__cdx")
     return spark.sql(f"""
       with cdx as (select * from __cdx),
       urls as (select distinct cast(0 as bigint) as doc_id, url from cdx),

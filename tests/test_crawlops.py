@@ -234,9 +234,9 @@ def test_robots_parse_semantics(spark, sf_dir):
     appears under BOTH graftbot and otherbot), inline comments are
     stripped, the empty Disallow survives with value '', and directive
     names are case-folded."""
-    from htmlgraft import urlops
+    from htmlgraft import textops, urlops
 
-    rows = urlops.run(spark, sf_dir, urlops.robots_parse_sql).collect()
+    rows = textops.run(spark, sf_dir, urlops.robots_parse_sql).collect()
     by_host = {}
     for r in rows:
         by_host.setdefault(r["host"], []).append(r)
@@ -647,9 +647,9 @@ def test_warc_revisit_pure_python_recompute(spark, sf_dir):
     tiers fresh responses."""
     import hashlib
 
-    from htmlgraft import urlops
+    from htmlgraft import textops, urlops
 
-    rows = urlops.run(spark, sf_dir, urlops.warc_revisit_sql).collect()
+    rows = textops.run(spark, sf_dir, urlops.warc_revisit_sql).collect()
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text", "source").collect()
@@ -699,9 +699,9 @@ def test_robots_optout_semantics(spark, sf_dir):
     back to the wildcard group (never root-blocked; family-dependent
     rule counts; crawl-delay only in family 3), and '*' equals
     trainbot's verdicts everywhere."""
-    from htmlgraft import urlops
+    from htmlgraft import textops, urlops
 
-    rows = urlops.run(spark, sf_dir, urlops.robots_optout_sql).collect()
+    rows = textops.run(spark, sf_dir, urlops.robots_optout_sql).collect()
     by = {(r["host"], r["agent"]): r for r in rows}
     hosts = {r["host"] for r in rows}
     assert hosts and len(by) == 4 * len(hosts)
@@ -731,9 +731,9 @@ def test_hll_by_host_registers_and_mergeability(spark, sf_dir):
     import math
     from collections import defaultdict
 
-    from htmlgraft import urlops
+    from htmlgraft import textops, urlops
 
-    rows = urlops.run(spark, sf_dir, urlops.hll_by_host_sql).collect()
+    rows = textops.run(spark, sf_dir, urlops.hll_by_host_sql).collect()
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "source").collect()

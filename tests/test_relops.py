@@ -276,9 +276,9 @@ def test_robots_longest_match_semantics(spark, sf_dir):
     """RFC 9309 prefix semantics pinned: '/src1' blocks src1 AND src10..19
     (prefix, not path-segment), EXCEPT src13 where the longer allow rule
     wins; '/src2' is blocked only on the host-scoped popular host."""
-    from htmlgraft import urlops
+    from htmlgraft import textops, urlops
 
-    rows = urlops.run(spark, sf_dir, urlops.robots_filter_sql).collect()
+    rows = textops.run(spark, sf_dir, urlops.robots_filter_sql).collect()
     docs = {
         r["doc_id"]: r["source"]
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet")

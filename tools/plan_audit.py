@@ -10,6 +10,10 @@ that are scale hazards at 10^12 docs —
   is provably constant-size (audited one by one; see ALLOWLIST).  Any NEW
   query that introduces one fails the audit until it is consciously
   adjudicated here.
+* one ``MapInPandas`` function named twice — the same Python stage runs
+  twice over the same input because a relation the query reads twice was
+  inlined, not materialized.  Never allowed (two DIFFERENT functions, such
+  as a record walk feeding the parse, are a normal two-stage plan).
 
 Exit non-zero if anything outside the allowlist flags.
 
@@ -83,6 +87,9 @@ def main():
             flagged[name] = {f"ERROR {type(e).__name__}: {str(e)[:120]}"}
             continue
         hits = {p for p in PATTERNS if re.search(rf"\b{p}\b", plan)}
+        stages = re.findall(r"\bMapInPandas (\w+)\(", plan)
+        hits |= {f"MapInPandas {f} x{stages.count(f)}"
+                 for f in stages if stages.count(f) > 1}
         if hits:
             flagged[name] = hits
     bad = {
